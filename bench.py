@@ -7,7 +7,7 @@ Phase 1  builds a deterministic pages corpus (documents.text wrapped in
 Phase 2  times the headline queries at $SPARK_GRAFT_SF_DIR (default
          /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32),
          including the full extraction pipeline (scan → host-salted
-         repartition → mapInPandas).  Each query first runs once at
+         repartition → mapInArrow).  Each query first runs once at
          sf0.001 (untimed) to exclude JVM codegen/JIT warm-up — the
          steady-state number is what projects to a long-running cluster —
          then the minimum of SPARK_GRAFT_QUERY_TRIALS (default 2) timed

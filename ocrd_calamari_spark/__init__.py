@@ -10,7 +10,7 @@ main-content extraction over Common-Crawl-style web-page tables:
 The reference's hand-rolled concurrency layer (mp.Queue/Event/Lock,
 ocrd_calamari/recognize.py:400-703) is deleted, not ported: Spark executors +
 Arrow batch transport replace all of it.  The extraction kernel itself
-(kernel/) is pure pandas/numpy and runs inside ``DataFrame.mapInPandas``.
+(kernel/) is pure pandas/numpy/pyarrow and runs inside ``DataFrame.mapInArrow``.
 """
 
 __version__ = "0.1.0"

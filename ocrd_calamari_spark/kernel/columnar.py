@@ -1,0 +1,342 @@
+"""Columnar span emission: one Arrow batch of pages in → Arrow batches of
+output rows out, for ``DataFrame.mapInArrow``.
+
+Per page it runs the same decode → segment → vote → ``normalize_block``
+composition as ``extract.extract_page``; only the emission differs.  The
+scalar path builds one dict per span (and a list of alternative dicts per
+glyph) that pandas then converts to Arrow.  Here each level is a set of
+flat numpy/Arrow columns over the whole batch — starts, ends, ids, texts,
+confidences — and the nesting is Arrow list offsets per row, the flat
+record-plus-repetition layout of Dremel:
+
+  blocks   Python lists per block (a few dozen per page)
+  words    non-space runs of the concatenated block texts (codepoint masks)
+  glyphs   non-space codepoints; ``p2 = quantize6((1-p1)*0.5)`` over the
+           whole array; the alternative char looked up once per unique
+           codepoint through ``extract._alt_char``
+  ids      ``pc.binary_join_element_wise`` + ``utf8_lpad`` for ``%04d``
+
+``extract.extract_page`` / ``extract_batch`` remain the scalar
+specification and the single-process oracle; tests/test_columnar_equiv.py
+proves the two paths equal row for row, the way test_fastpath_equiv.py
+pairs ``textproc`` with ``fastpath``.  Like the rest of the kernel this
+module imports no pyspark: the caller passes the Arrow output schema.
+"""
+
+from __future__ import annotations
+
+from typing import Iterable, Iterator, Optional
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from ocrd_calamari_spark.config import ExtractConfig
+from ocrd_calamari_spark.kernel.decode import decode_html
+from ocrd_calamari_spark.kernel.extract import _alt_char, _looks_binary
+from ocrd_calamari_spark.kernel.fastpath import codepoints, normalize_block, quantize6
+from ocrd_calamari_spark.kernel.segment import segment
+from ocrd_calamari_spark.kernel.vote import vote_block
+
+# An output batch is cut once the spans (blocks + words + glyphs) emitted
+# since the last cut reach this many, so one input batch of big glyph pages
+# stays far below Arrow's int32 list and string offsets (a glyph costs ~30
+# bytes of ids and alternatives).  A single page is never split.
+MAX_BATCH_SPANS = 1 << 21
+
+LINEAGE_COLS = ("_src_file", "_src_row", "_part_id")
+
+
+class _Pending:
+    """Rows and spans of the pages extracted since the last cut."""
+
+    def __init__(self):
+        self.text: list = []
+        self.conf: list = []
+        self.n_blocks: list = []
+        self.overwrote: list = []
+        self.raw_charset: list = []
+        self.error: list = []
+        # one entry per block of the ok rows, in output order
+        self.blk_text: list = []
+        self.blk_conf: list = []
+        self.blk_start: list = []
+        self.blk_no: list = []
+        self.blk_p1: list = []
+        self.spans = 0
+
+    def add_page(self, html, prior_text, lang, cfg: ExtractConfig) -> None:
+        """Extract one page.  Its blocks are committed only once the whole
+        page succeeded, so an exception part way through leaves an error
+        row and no partial spans."""
+        raw = False
+        try:
+            if html is None:
+                raise ValueError("null html payload")
+            decoded, raw = decode_html(bytes(html))
+            if _looks_binary(decoded):
+                raise ValueError("binary payload (control-char fraction exceeded)")
+            texts, confs, p1s = [], [], []
+            for blk in segment(decoded):
+                if blk.visible_len() < cfg.min_visible_chars:
+                    continue
+                accept, fused = vote_block(
+                    blk, lang, cfg.extractors, cfg.voter, cfg.accept_threshold
+                )
+                if not accept:
+                    continue
+                text, p1, conf = normalize_block(blk.raw_text, fused)
+                if text:
+                    texts.append(text)
+                    confs.append(conf)
+                    p1s.append(p1)
+        except Exception as exc:  # error row, never a task failure
+            self._row(None, None, None, prior_text, raw,
+                      f"{type(exc).__name__}: {exc}")
+            return
+        conf_sum, pos, starts = 0.0, 0, []
+        for text, conf in zip(texts, confs):
+            conf_sum += conf  # same summation order as extract_page
+            starts.append(pos)
+            pos += len(text) + 1  # "\n" separator
+        n = len(texts)
+        self._row("\n".join(texts),
+                  float(quantize6(conf_sum / n)) if n else 0.0,
+                  n, prior_text, raw, None)
+        self.blk_text += texts
+        self.blk_conf += confs
+        self.blk_start += starts
+        self.blk_no += range(n)
+        self.blk_p1 += p1s
+        self.spans += n
+        if cfg.textequiv_level != "block":
+            spaces = sum(t.count(" ") for t in texts)
+            chars = pos - n  # every char of every block
+            self.spans += spaces + n  # words
+            if cfg.textequiv_level == "glyph":
+                self.spans += chars - spaces
+
+    def _row(self, text, conf, n_blocks, prior_text, raw, error) -> None:
+        self.text.append(text)
+        self.conf.append(conf)
+        self.n_blocks.append(n_blocks)
+        self.overwrote.append(bool(prior_text))
+        self.raw_charset.append(raw)
+        self.error.append(error)
+
+
+def _ids(prefix, sep: str, nums: np.ndarray) -> pa.Array:
+    """``"%s<sep>%04d" % (prefix, num)`` elementwise (``%04d`` widens past
+    9999 exactly like ``utf8_lpad``, which never truncates)."""
+    digits = pc.utf8_lpad(pa.array(nums, pa.int64()).cast(pa.string()), 4, "0")
+    return pc.binary_join_element_wise(prefix, digits, sep)
+
+
+def _struct(arrays: list, list_type: pa.ListType) -> pa.StructArray:
+    return pa.StructArray.from_arrays(arrays, fields=list(list_type.value_type))
+
+
+def _lists(per_row: np.ndarray, values: pa.Array, list_type, null) -> pa.Array:
+    """One list per row from per-row counts (error rows masked null)."""
+    offsets = np.zeros(len(per_row) + 1, dtype=np.int32)
+    np.cumsum(per_row, out=offsets[1:])
+    return pa.ListArray.from_arrays(pa.array(offsets), values, type=list_type,
+                                    mask=null)
+
+
+def _utf8(big: str, cps: np.ndarray) -> tuple[pa.Buffer, np.ndarray]:
+    """``big`` as utf-8 bytes plus the byte offset of each codepoint (and
+    of the end), for string arrays that slice it without copying."""
+    nbytes = (1 + (cps >= 0x80).astype(np.int64) + (cps >= 0x800)
+              + (cps >= 0x10000))
+    byte_off = np.zeros(len(cps) + 1, dtype=np.int64)
+    np.cumsum(nbytes, out=byte_off[1:])
+    if byte_off[-1] >= 1 << 31:
+        raise OverflowError("span text of one output batch exceeds 2 GiB")
+    return pa.py_buffer(big.encode("utf-8")), byte_off.astype(np.int32)
+
+
+def _slices(data: pa.Buffer, offsets: np.ndarray) -> pa.StringArray:
+    """String i = data[offsets[i]:offsets[i+1]]."""
+    return pa.StringArray.from_buffers(len(offsets) - 1,
+                                       pa.py_buffer(offsets), data)
+
+
+def _alts(cps: np.ndarray, chars: pa.Array, p1: np.ndarray, cutoff: float,
+          list_type: pa.ListType) -> pa.ListArray:
+    """Ranked alternatives per glyph: the char itself with ``p1``, then its
+    confusion/case alternative with ``p2 = quantize6((1-p1)*0.5)`` where
+    one exists and ``p2 >= cutoff`` (``extract_page``'s per-glyph rule)."""
+    p2 = quantize6((1.0 - p1) * 0.5)
+    uniq, inv = np.unique(cps, return_inverse=True)
+    alt_u = [_alt_char(chr(c)) for c in uniq.tolist()]
+    two = np.array([a is not None for a in alt_u], dtype=bool)[inv] & (p2 >= cutoff)
+    # the primary at off[g], the second (if any) right after it
+    off = np.zeros(len(cps) + 1, dtype=np.int32)
+    np.cumsum(1 + two.astype(np.int32), out=off[1:])
+    second = off[:-1][two] + 1
+    order = np.empty(off[-1], dtype=np.int64)
+    order[off[:-1]] = np.arange(len(cps))
+    order[second] = len(cps) + np.arange(len(second))
+    text = pa.concat_arrays([
+        chars,
+        pa.array([a or "" for a in alt_u], pa.string()).take(inv[two]),
+    ]).take(order)
+    conf = np.empty(off[-1], dtype=np.float64)
+    conf[off[:-1]] = p1
+    conf[second] = p2[two]
+    index = np.ones(off[-1], dtype=np.int32)
+    index[second] = 2
+    return pa.ListArray.from_arrays(
+        pa.array(off),
+        _struct([text, pa.array(conf), pa.array(index)], list_type),
+        type=list_type,
+    )
+
+
+def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
+                  url: pa.Array, lineage: list) -> pa.RecordBatch:
+    n_rows = len(p.text)
+    null = pa.array([e is not None for e in p.error], pa.bool_())
+    n_blk = np.array([k or 0 for k in p.n_blocks], dtype=np.int64)
+    blk_row = np.repeat(np.arange(n_rows), n_blk)
+    blk_len = np.fromiter(map(len, p.blk_text), np.int64, len(p.blk_text))
+    blk_start = np.array(p.blk_start, dtype=np.int32)
+    blk_id = _ids("blk", "", np.array(p.blk_no, dtype=np.int64))
+    t_blocks = schema.field("blocks").type
+    t_words = schema.field("words").type
+    t_glyphs = schema.field("glyphs").type
+    blocks = _struct(
+        [blk_id, pa.array(blk_start), pa.array(blk_start + blk_len.astype(np.int32)),
+         pa.array(p.blk_text, pa.string()), pa.array(p.blk_conf, pa.float64())],
+        t_blocks,
+    )
+    n_word = np.zeros(n_rows, dtype=np.int64)
+    n_glyph = np.zeros(n_rows, dtype=np.int64)
+    words = pa.array([], t_words.value_type)
+    glyphs = pa.array([], t_glyphs.value_type)
+
+    if level != "block" and p.blk_text:
+        # flat codepoints of all block texts, back to back (no separator)
+        big = "".join(p.blk_text)
+        cps = codepoints(big)
+        blk_off = np.zeros(len(blk_len) + 1, dtype=np.int64)
+        np.cumsum(blk_len, out=blk_off[1:])
+        # block text is single-space separated with no edge spaces, so a
+        # word is a maximal non-space run inside one block
+        solid = cps != 32
+        first = np.zeros(len(cps), dtype=bool)
+        first[blk_off[:-1]] = True
+        last = np.zeros(len(cps), dtype=bool)
+        last[blk_off[1:] - 1] = True
+        ws = np.flatnonzero(solid & (first | np.r_[True, ~solid[:-1]]))
+        we = np.flatnonzero(solid & (last | np.r_[~solid[1:], True])) + 1
+        w_blk = np.searchsorted(blk_off, ws, side="right") - 1
+        w_no = np.arange(len(ws)) - np.searchsorted(ws, blk_off[:-1])[w_blk]
+        w_at = blk_start[w_blk] - blk_off[w_blk]  # big index → doc offset
+        data, byte_off = _utf8(big, cps)
+        # words and the gaps between them tile big[ws[0]:we[-1]]; keep
+        # the words (even slots)
+        bounds = np.empty(2 * len(ws), dtype=np.int64)
+        bounds[0::2], bounds[1::2] = ws, we
+        word_text = _slices(data, byte_off[bounds]).take(
+            np.arange(0, len(bounds) - 1, 2))
+        blk_id_w = blk_id.take(w_blk)
+        word_id = _ids(blk_id_w, "_word", w_no)
+        words = _struct(
+            [blk_id_w, word_id, pa.array((ws + w_at).astype(np.int32)),
+             pa.array((we + w_at).astype(np.int32)), word_text],
+            t_words,
+        )
+        n_word = np.bincount(blk_row[w_blk], minlength=n_rows)
+
+        if level == "glyph":
+            gp = np.flatnonzero(solid)
+            g_word = np.searchsorted(ws, gp, side="right") - 1
+            g_blk = w_blk[g_word]
+            g_start = (gp + w_at[g_word]).astype(np.int32)
+            alts = _alts(cps[gp], _slices(data, byte_off).take(gp),
+                         np.concatenate(p.blk_p1)[gp], cutoff,
+                         t_glyphs.value_type.field("alts").type)
+            glyphs = _struct(
+                [_ids(word_id.take(g_word), "_glyph", gp - ws[g_word]),
+                 blk_id.take(g_blk), pa.array(g_start), pa.array(g_start + 1),
+                 alts],
+                t_glyphs,
+            )
+            n_glyph = np.bincount(blk_row[g_blk], minlength=n_rows)
+
+    columns = {
+        "url": url,
+        "text": pa.array(p.text, pa.string()),
+        "conf": pa.array(p.conf, pa.float64()),
+        "n_blocks": pa.array(p.n_blocks, pa.int32()),
+        "blocks": _lists(n_blk, blocks, t_blocks, null),
+        "words": _lists(n_word, words, t_words, null),
+        "glyphs": _lists(n_glyph, glyphs, t_glyphs, null),
+        "overwrote": pa.array(p.overwrote, pa.bool_()),
+        "raw_charset": pa.array(p.raw_charset, pa.bool_()),
+        "error": pa.array(p.error, pa.string()),
+    }
+    columns.update(zip(LINEAGE_COLS, lineage))
+    arrays = []
+    for f in schema:
+        a = columns[f.name]
+        arrays.append(a if a.type == f.type else a.cast(f.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def extract_arrow(batch: pa.RecordBatch, cfg: ExtractConfig,
+                  schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """One Arrow batch of pages → output batches typed by ``schema``.
+
+    Columns required: url, html, text, lang (schema.KERNEL_INPUT_COLS).
+    The lineage columns pass through unchanged when present and are null
+    otherwise.  Rows keep their input order; a new output batch starts
+    whenever ``MAX_BATCH_SPANS`` spans have been emitted.
+    """
+    names = batch.schema.names
+    n = batch.num_rows
+    html = batch.column("html").to_pylist()
+    prior = batch.column("text").to_pylist()
+    lang = batch.column("lang").to_pylist()
+    lo = 0
+    pending = _Pending()
+    for i in range(n):
+        pending.add_page(html[i], prior[i], lang[i], cfg)
+        if pending.spans >= MAX_BATCH_SPANS or i == n - 1:
+            rows = i + 1 - lo
+            lineage = [
+                batch.column(c).slice(lo, rows) if c in names
+                else pa.nulls(rows, schema.field(c).type)
+                for c in LINEAGE_COLS
+            ]
+            yield _record_batch(pending, cfg.textequiv_level,
+                                cfg.glyph_conf_cutoff, schema,
+                                batch.column("url").slice(lo, rows), lineage)
+            lo = i + 1
+            pending = _Pending()
+
+
+def arrow_map_fn(cfg: ExtractConfig, schema: pa.Schema,
+                 accs: Optional[dict] = None):
+    """Build the ``mapInArrow`` iterator function.
+
+    ``schema``: the Arrow form of ``schema.FLAT_OUTPUT_SCHEMA``.  ``accs``:
+    optional accumulators (docs, failed, overwrote, raw_charset), added
+    per output batch from its Arrow null and true counts.  Config and
+    schema are captured once per task, before the batch loop.
+    """
+
+    def _fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for out in extract_arrow(batch, cfg, schema):
+                if accs is not None:
+                    accs["docs"].add(out.num_rows)
+                    accs["failed"].add(out.num_rows
+                                       - out.column("error").null_count)
+                    for name in ("overwrote", "raw_charset"):
+                        accs[name].add(pc.sum(out.column(name)).as_py() or 0)
+                yield out
+
+    return _fn

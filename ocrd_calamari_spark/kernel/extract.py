@@ -15,14 +15,17 @@ Mirrors the reference's ``process_page_pcgts`` composition
 The position pipeline runs vectorized (kernel/fastpath.py, numpy over
 codepoint arrays); kernel/textproc.py holds the scalar specification the
 vectorization is proven equivalent to.  The whole module is pure
-pandas/numpy — it runs identically as the frozen single-process oracle and
-inside ``mapInPandas`` (SURVEY.md §5.2).
+pandas/numpy.  It is the scalar specification of span emission and the
+frozen single-process oracle; inside Spark, ``kernel/columnar.py`` runs the
+same per-page composition but emits the spans as Arrow columns for
+``mapInArrow`` (SURVEY.md §5.2), proven equal row for row by
+tests/test_columnar_equiv.py.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -207,18 +210,3 @@ def extract_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     # per-cell python path; column lists build each Series in one shot
     data = {c: [r[c] for r in rows] for c in _OUT_COLS}
     return pd.DataFrame(data, columns=_OUT_COLS)
-
-
-def make_map_fn(cfg: ExtractConfig):
-    """Build the ``mapInPandas`` iterator function.
-
-    Config is captured once per task before the batch loop — the analogue of
-    the reference's one-time ``setup()`` (recognize.py:59-82), minus the
-    90 MB checkpoints: our extractors are cheap pure functions.
-    """
-
-    def _fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield extract_batch(pdf, cfg)
-
-    return _fn

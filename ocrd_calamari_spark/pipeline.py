@@ -1,4 +1,4 @@
-"""Spark orchestration: read → prune → salt-repartition → mapInPandas → write.
+"""Spark orchestration: read → prune → salt-repartition → mapInArrow → write.
 
 The whole reference concurrency layer (ocrd_calamari/recognize.py:400-703 —
 mp queues, fill locks, dummy batches, spawn contexts) is replaced by this
@@ -21,9 +21,10 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ocrd_calamari_spark.config import ExtractConfig
-from ocrd_calamari_spark.kernel.extract import extract_batch
+from ocrd_calamari_spark.kernel.columnar import LINEAGE_COLS, arrow_map_fn
 from ocrd_calamari_spark.schema import (
     FLAT_OUTPUT_SCHEMA,
     KERNEL_INPUT_COLS,
@@ -73,13 +74,15 @@ def read_pages(
 DEFAULT_SALT = 16  # sub-buckets per host for skew spreading
 
 
-def _map_fn_with_lineage(cfg: ExtractConfig, accs: dict | None = None):
-    """mapInPandas fn: extraction + lineage passthrough.
+def extraction_map_fn(cfg: ExtractConfig, accs: dict | None = None):
+    """The one ``mapInArrow`` function of the engine (batch and streaming):
+    columnar extraction plus lineage passthrough.
 
-    Lineage columns (_src_file, _part_id) ride along the input batch and are
-    re-attached to the output rows — the keyed re-association the reference
-    does through a shared Manager dict (recognize.py:662-693) is free here
-    because input and output of a batch stay aligned per url.
+    Lineage columns (_src_file, _src_row, _part_id) ride along the input
+    batch and leave as the same Arrow arrays, sliced but not copied — the
+    keyed re-association the reference does through a shared Manager dict
+    (recognize.py:662-693) is free here because input and output of a
+    batch stay aligned per url.  Absent lineage columns come back null.
 
     ``accs``: optional dict of SparkContext accumulators (docs, failed,
     overwrote, raw_charset) updated per batch — the live-metrics channel the
@@ -87,23 +90,7 @@ def _map_fn_with_lineage(cfg: ExtractConfig, accs: dict | None = None):
     output; accumulators can overcount on task retry, which is why they are
     the dashboard, not the ledger).
     """
-
-    def _fn(batches):
-        for pdf in batches:
-            out = extract_batch(pdf, cfg)
-            # columnar passthrough: numpy arrays assigned whole — the
-            # struct (incl. the constant snapshot_id) is assembled
-            # JVM-side in extract_df, not per-row in Python
-            for col in ("_src_file", "_src_row", "_part_id"):
-                out[col] = pdf[col].values if col in pdf else None
-            if accs is not None:
-                accs["docs"].add(len(out))
-                accs["failed"].add(int(out["error"].notna().sum()))
-                accs["overwrote"].add(int(out["overwrote"].sum()))
-                accs["raw_charset"].add(int(out["raw_charset"].sum()))
-            yield out
-
-    return _fn
+    return arrow_map_fn(cfg, to_arrow_schema(FLAT_OUTPUT_SCHEMA), accs)
 
 
 def make_accumulators(spark: SparkSession) -> dict:
@@ -186,7 +173,7 @@ def extract_df(
             sel = with_part_id(sel, 1 << 14)
         sel = sel.withColumn("_src_file", F.expr(lineage_cols[0]))
         sel = sel.withColumn("_src_row", F.expr(lineage_cols[1]))
-        cols = cols + ["_src_file", "_src_row", "_part_id"]
+        cols = cols + list(LINEAGE_COLS)
     sel = sel.select(*cols)
     if repartition:
         host = F.parse_url(F.col("url"), F.lit("HOST"))
@@ -195,8 +182,8 @@ def extract_df(
             sel = sel.repartition(num_partitions, host, salt_col)
         else:
             sel = sel.repartition(host, salt_col)
-    mapped = sel.mapInPandas(
-        _map_fn_with_lineage(cfg, accumulators),
+    mapped = sel.mapInArrow(
+        extraction_map_fn(cfg, accumulators),
         FLAT_OUTPUT_SCHEMA,
     )
     out_cols = [f.name for f in OUTPUT_SCHEMA.fields if f.name != "lineage"]

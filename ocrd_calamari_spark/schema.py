@@ -104,9 +104,9 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# UDF-internal variant: lineage rides as three FLAT columns (columnar numpy
-# passthrough in the Python worker — no per-row dict building) and the
-# lineage struct is assembled JVM-side by a Project after mapInPandas.
+# UDF-internal variant: lineage rides as three FLAT columns (the input
+# batch's Arrow arrays pass through the Python worker uncopied) and the
+# lineage struct is assembled JVM-side by a Project after mapInArrow.
 FLAT_OUTPUT_SCHEMA = StructType(
     [f for f in OUTPUT_SCHEMA.fields if f.name != "lineage"]
     + [
@@ -117,5 +117,5 @@ FLAT_OUTPUT_SCHEMA = StructType(
 )
 
 # Column subset the extraction kernel actually needs — selected explicitly
-# before mapInPandas so Catalyst prunes the parquet/Iceberg scan to these.
+# before mapInArrow so Catalyst prunes the parquet/Iceberg scan to these.
 KERNEL_INPUT_COLS = ["url", "html", "text", "lang"]

@@ -3,7 +3,7 @@
 The reference is bounded batch (SURVEY.md §2.9 — no streaming operators
 anywhere), but the 10^12-row production shape ingests crawl deltas
 incrementally.  The same extraction kernel runs unchanged under
-``readStream``: mapInPandas is streaming-compatible, and the checkpoint
+``readStream``: mapInArrow is streaming-compatible, and the checkpoint
 location gives exactly-once file-source progress tracking (the streaming
 twin of the batch manifest in pipeline.py).
 """
@@ -14,8 +14,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ocrd_calamari_spark.config import ExtractConfig
-from ocrd_calamari_spark.kernel.extract import make_map_fn
-from ocrd_calamari_spark.schema import KERNEL_INPUT_COLS, OUTPUT_SCHEMA, PAGES_SCHEMA
+from ocrd_calamari_spark.pipeline import extraction_map_fn
+from ocrd_calamari_spark.schema import (
+    FLAT_OUTPUT_SCHEMA, KERNEL_INPUT_COLS, OUTPUT_SCHEMA, PAGES_SCHEMA,
+)
 
 def read_pages_stream(spark: SparkSession, in_dir: str,
                       max_files_per_trigger: int = 8) -> DataFrame:
@@ -28,15 +30,15 @@ def read_pages_stream(spark: SparkSession, in_dir: str,
 
 
 def extract_stream(pages: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame:
-    """Streaming extraction: identical kernel, streaming micro-batches."""
-    cfg = cfg or ExtractConfig()
-    from pyspark.sql.types import StructType
-
-    out_schema = StructType(
-        [f for f in OUTPUT_SCHEMA.fields if f.name != "lineage"]
-    )
-    return pages.select(*KERNEL_INPUT_COLS).mapInPandas(
-        make_map_fn(cfg), out_schema
+    """Streaming extraction: the batch map function over streaming
+    micro-batches.  No lineage columns go in, so they come back null and
+    are dropped."""
+    out_cols = [f.name for f in OUTPUT_SCHEMA.fields if f.name != "lineage"]
+    return (
+        pages.select(*KERNEL_INPUT_COLS)
+        .mapInArrow(extraction_map_fn(cfg or ExtractConfig()),
+                    FLAT_OUTPUT_SCHEMA)
+        .select(*out_cols)
     )
 
 

@@ -8,7 +8,7 @@ step toward real-cluster confidence in a sandbox with no cluster.
 Checks (all hard asserts):
 1. extraction byte-identity: Spark output text/conf per url ==
    the committed golden parquet (the frozen single-process kernel
-   oracle) — mapInPandas over executors in separate JVMs;
+   oracle) — mapInArrow over executors in separate JVMs;
 2. minhash_dedup at sf0.01 == its DuckDB oracle (banded-LSH self-join:
    cross-JVM shuffle files);
 3. decontaminate at sf0.01 == its DuckDB oracle (gram-set broadcast:

@@ -54,7 +54,7 @@ def main():
     ext = extract_df(pages, ExtractConfig(), with_lineage=False, repartition=False)
     sections.append((
         "Extraction (map-only path)",
-        "No Exchange anywhere: scan → (page synth) → MapInPandas. At 100 TB "
+        "No Exchange anywhere: scan → (page synth) → MapInArrow. At 100 TB "
         "this is the default — scan splits are byte-balanced, so no payload "
         "ever crosses the shuffle.",
         plan_of(ext, "simple"),

@@ -130,6 +130,28 @@ class TestGlyphLevelThroughSpark:
                 seen_alts += len(alts)
         assert seen_alts >= 100  # ≈ test_recognize.py:139-140
 
+    def test_glyph_spans_equal_oracle_per_url(self, spark, pages_parquet,
+                                              pages_pdf):
+        """Every span list of every url, exactly as the single-process
+        oracle emits it — None for error rows, [] for empty lists."""
+        cfg = ExtractConfig(textequiv_level="glyph")
+        cols = ["error", "blocks", "words", "glyphs"]
+        got = {
+            r["url"]: r.asDict(recursive=True)
+            for r in extract_df(read_pages(spark, pages_parquet), cfg)
+            .select("url", *cols).collect()
+        }
+        want = extract_batch(pages_pdf, cfg)
+        assert len(got) == len(want) == len(pages_pdf)
+        n_errors = 0
+        for rec in want.to_dict("records"):
+            row = got[rec["url"]]
+            assert (row["error"] is None) == (rec["error"] is None), rec["url"]
+            n_errors += rec["error"] is not None
+            for c in cols[1:]:
+                assert row[c] == rec[c], (rec["url"], c)
+        assert n_errors > 0
+
 
 class TestSkewDistribution:
     def test_salted_repartition_spreads_skewed_host(self, spark, pages_parquet):

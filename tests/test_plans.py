@@ -78,7 +78,7 @@ class TestJoinAndAggStrategies:
                          repartition=False)
         plan = plan_of(out, "simple")
         assert "Exchange" not in plan  # map-only: scan → python map, no shuffle
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
 
     def test_salted_repartition_is_single_exchange(self, spark, pages_parquet):
         df = read_pages(spark, pages_parquet)
