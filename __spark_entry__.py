@@ -3,7 +3,7 @@
 entry(spark)   — flagship extraction over pages synthesized from
                  /root/testdata/sf0.001/documents.parquet
 queries()      — one entry per implemented operator (SURVEY.md §2 +
-                 training-data-pipeline ops)
+                 training-data-pipeline ops), in registry order
 oracle_sql()   — DuckDB twins for the SQL-expressible subset; extraction
                  and hash-algorithm-specific ops are rows-only by design.
 """
@@ -19,9 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ocrd_calamari_spark.entry_queries import ORACLES, QUERIES  # noqa: E402
-from ocrd_calamari_spark.rotation import rotated_order  # noqa: E402
-
-_REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -30,13 +27,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # The driver's correctness harness samples the first ~50 keys, so the
-    # dict is ordered mechanically from the recorded evidence: keys with
-    # the least driver-visible proof (never checked / changed since green /
-    # previously failed) come first.  See ocrd_calamari_spark/rotation.py
-    # and scripts/rotate_registry.py for the policy + inspection surface.
-    order = rotated_order(list(QUERIES), set(ORACLES), _REPO_DIR)
-    return {k: QUERIES[k] for k in order}
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

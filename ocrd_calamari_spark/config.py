@@ -13,7 +13,7 @@ heuristic "models", registered in kernel/vote.py — the analogue of globbing
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 VOTERS = ("confidence_voter_default_ctc", "sequence_voter")
 LEVELS = ("block", "word", "glyph")  # ≈ textequiv_level {line, word, glyph}
@@ -21,6 +21,13 @@ LEVELS = ("block", "word", "glyph")  # ≈ textequiv_level {line, word, glyph}
 # Block-level "tiny segment" filter: the analogue of the reference's skip of
 # lines with height<=8 / width<=8 / all-background (recognize.py:166-179).
 MIN_VISIBLE_CHARS = 8
+
+# Fused-vote acceptance bar of a block.
+ACCEPT_THRESHOLD = 0.5
+
+# The voting extractors (kernel/vote.py EXTRACTORS) ≈ the 5-fold checkpoint
+# ensemble (ocrd-tool.json:65).
+ENSEMBLE = ("density", "link_density", "readability")
 
 
 @dataclass(frozen=True)
@@ -34,11 +41,6 @@ class ExtractConfig:
     voter: str = "confidence_voter_default_ctc"
     textequiv_level: str = "block"
     glyph_conf_cutoff: float = 0.001  # reference default, ocrd-tool.json:44-49
-    accept_threshold: float = 0.5  # fused-vote acceptance bar
-    min_visible_chars: int = MIN_VISIBLE_CHARS
-    extractors: tuple = field(
-        default=("density", "link_density", "readability")
-    )  # ≈ 5-fold checkpoint ensemble, ocrd-tool.json:65
 
     def __post_init__(self):
         if self.voter not in VOTERS:
@@ -53,5 +55,3 @@ class ExtractConfig:
         # primary probability floor would crash it.  We fail fast instead.
         if not (0.0 <= self.glyph_conf_cutoff < 0.5):
             raise ValueError("glyph_conf_cutoff must be in [0, 0.5)")
-        if not (0.0 <= self.accept_threshold <= 1.0):
-            raise ValueError("accept_threshold must be in [0, 1]")

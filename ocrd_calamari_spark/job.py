@@ -65,6 +65,10 @@ def parse_args(argv):
         p.error("--buckets must be >= 1")
     if args.chunks < 1:
         p.error("--chunks must be >= 1")
+    if args.partitions is not None and args.partitions < 1:
+        # extract_df reads 0 as "unset" and Spark fails on a negative
+        # width only after the session is up
+        p.error("--partitions must be >= 1")
     return args
 
 

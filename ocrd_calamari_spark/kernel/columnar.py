@@ -31,7 +31,12 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from ocrd_calamari_spark.config import ExtractConfig
+from ocrd_calamari_spark.config import (
+    ACCEPT_THRESHOLD,
+    ENSEMBLE,
+    MIN_VISIBLE_CHARS,
+    ExtractConfig,
+)
 from ocrd_calamari_spark.kernel.decode import decode_html
 from ocrd_calamari_spark.kernel.extract import _alt_char, _looks_binary
 from ocrd_calamari_spark.kernel.fastpath import codepoints, normalize_block, quantize6
@@ -78,10 +83,10 @@ class _Pending:
                 raise ValueError("binary payload (control-char fraction exceeded)")
             texts, confs, p1s = [], [], []
             for blk in segment(decoded):
-                if blk.visible_len() < cfg.min_visible_chars:
+                if blk.visible_len() < MIN_VISIBLE_CHARS:
                     continue
                 accept, fused = vote_block(
-                    blk, lang, cfg.extractors, cfg.voter, cfg.accept_threshold
+                    blk, lang, ENSEMBLE, cfg.voter, ACCEPT_THRESHOLD
                 )
                 if not accept:
                     continue

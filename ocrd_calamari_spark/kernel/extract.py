@@ -30,7 +30,12 @@ from typing import Optional
 import numpy as np
 import pandas as pd
 
-from ocrd_calamari_spark.config import ExtractConfig
+from ocrd_calamari_spark.config import (
+    ACCEPT_THRESHOLD,
+    ENSEMBLE,
+    MIN_VISIBLE_CHARS,
+    ExtractConfig,
+)
 from ocrd_calamari_spark.kernel.decode import decode_html
 from ocrd_calamari_spark.kernel.fastpath import normalize_block, quantize6
 from ocrd_calamari_spark.kernel.segment import segment
@@ -107,10 +112,10 @@ def extract_page(
         conf_sum = 0.0
         for blk in segment(decoded):
             # F4 tiny-segment filter (recognize.py:166-179)
-            if blk.visible_len() < cfg.min_visible_chars:
+            if blk.visible_len() < MIN_VISIBLE_CHARS:
                 continue
             accept, fused = vote_block(
-                blk, lang, cfg.extractors, cfg.voter, cfg.accept_threshold
+                blk, lang, ENSEMBLE, cfg.voter, ACCEPT_THRESHOLD
             )
             if not accept:
                 continue

@@ -600,34 +600,3 @@ def compact_output(spark: SparkSession, out_dir: str,
         )
     return stats
 
-
-def write_partitioned_rollup(df: DataFrame, out_dir: str,
-                             partition_col: str = "day") -> None:
-    """Idempotent partitioned-aggregate sink: DYNAMIC partition overwrite
-    replaces exactly the partitions present in ``df`` and leaves every
-    other partition untouched — the standard lakehouse merge pattern for
-    periodic rollups (hourly/daily stats folded into a long-lived table)
-    without read-modify-write.
-
-    Why this instead of ``mode("overwrite")`` (static): static overwrite
-    TRUNCATES the whole table first, so a daily job would destroy all
-    history; dynamic scopes the overwrite to the partitions being
-    written.  Re-running the same day is idempotent (the partition is
-    replaced wholesale, never appended), which makes the rollup job
-    safely retryable — the same at-least-once-becomes-exactly-once
-    property the extraction manifest provides, here at partition
-    granularity.
-
-    At 100 TB: one day's rollup rewrite touches one partition directory;
-    history partitions are never listed, read, or rewritten.  (On a real
-    cluster the same call works against an Iceberg table via
-    ``overwritePartitions()`` — parquet is the sandbox-drivable path,
-    matching the reader-side Iceberg gating in read_pages.)
-    """
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", OUTPUT_COMPRESSION)
-        .partitionBy(partition_col)
-        .parquet(out_dir)
-    )

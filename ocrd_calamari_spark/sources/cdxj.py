@@ -18,11 +18,11 @@ values are all STRINGS (the CDXJ convention) — numeric casts happen
 here, typed.
 
 Spark shape: the text source does the distributed line splitting (and
-transparent .gz decompression — shard-granular parallelism, like JSONL);
+transparent .gz decompression — shard-granular parallelism);
 the split/parse is JVM-only (``split(line, ' ', 3)`` + ``from_json``), no
 Python.  Malformed lines (missing fields, bad JSON, bad timestamp) are
-DATA, not task failures: raw line preserved in ``_corrupt``, same
-quarantine policy as the JSONL source and the extraction kernel.
+DATA, not task failures: raw line preserved in ``_corrupt``, the same
+quarantine policy as the extraction kernel's error rows.
 """
 
 from __future__ import annotations
@@ -97,10 +97,9 @@ def read_cdxj(
 def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(clean, quarantined) — clean rows lose the corrupt column.
 
-    Unlike the JSONL source there is no corrupt-column-only plan
-    restriction here (the parse is explicit expressions over a text
-    scan), so no persist is forced; callers that consume both sides
-    should still cache the parsed frame themselves to parse once.
+    The parse is explicit expressions over a text scan, so no persist
+    is forced; callers that consume both sides should cache the parsed
+    frame themselves to parse once.
     """
     clean = df.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.where(F.col(CORRUPT_COL).isNotNull())

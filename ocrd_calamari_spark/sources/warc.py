@@ -237,50 +237,10 @@ def records_to_rows(name: str, data: bytes) -> Iterator[dict]:
         }
 
 
-def wet_records_to_rows(name: str, data: bytes) -> Iterator[dict]:
-    """WET file bytes → pages rows.  WET is the Common-Crawl
-    extracted-text distribution: the SAME WARC container format, but
-    records are ``warc-type: conversion`` carrying a plain-text body with
-    no HTTP envelope — so the splitter, gzip-member handling, and bomb
-    caps are shared with the response reader verbatim; only the record
-    filter and payload mapping differ (text filled, html None).  The
-    warcinfo header record and any response records in a mixed file are
-    skipped."""
-    if name.endswith(".gz"):
-        data = _bounded_gunzip_members(data, _MAX_FILE_BYTES)
-    for i, (headers, body) in enumerate(iter_warc_records(data)):
-        if headers.get(b"warc-type") != b"conversion":
-            continue
-        url = headers.get(b"warc-target-uri")
-        if url is None:
-            continue
-        yield {
-            "url": url.decode("utf-8", "replace"),
-            "warc_ts": _warc_ts(headers),
-            "html": None,
-            "text": body.decode("utf-8", "replace"),
-            "lang": None,
-            "_src_file": name,
-            "_src_row": i,
-        }
-
-
-def read_wet(spark: SparkSession, path: str) -> DataFrame:
-    """WET file(s) → pages DataFrame with ``text`` populated and ``html``
-    None — the already-extracted Common-Crawl text tier, feeding the
-    text-side operators (dedup, quality, lang-id) directly without the
-    extraction kernel.  Same binaryFile → mapInPandas shape as
-    ``read_warc`` (whole-file units; WET shards are ~100 MB-bounded by
-    the producer, and the gzip bomb caps still guard the decode)."""
-    return _read_warc_family(spark, path, wet_records_to_rows)
-
-
-def _read_warc_family(spark: SparkSession, path: str,
-                      row_fn) -> DataFrame:
-    """Shared binaryFile → mapInPandas scan for WARC-container formats;
-    ``row_fn(name, bytes) -> Iterator[dict]`` decides the record filter
-    and payload mapping (response → html for WARC, conversion → text for
-    WET)."""
+def read_warc(spark: SparkSession, path: str) -> DataFrame:
+    """WARC file(s) → pages DataFrame (url, warc_ts, html, text, lang,
+    _src_file, _src_row): a binaryFile scan whose rows are split into
+    response records by ``records_to_rows`` inside ``mapInPandas``."""
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
 
@@ -301,90 +261,7 @@ def _read_warc_family(spark: SparkSession, path: str,
             rows = []
             for name, content in zip(pdf["path"].values,
                                      pdf["content"].values):
-                rows.extend(row_fn(str(name), bytes(content)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(_fn, schema)
-
-
-def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """WARC file(s) → pages DataFrame (url, warc_ts, html, text, lang,
-    _src_file, _src_row)."""
-    return _read_warc_family(spark, path, records_to_rows)
-
-
-def wat_records_to_rows(name: str, data: bytes) -> Iterator[dict]:
-    """WAT file bytes → link rows.  WAT is the Common-Crawl METADATA
-    tier: ``warc-type: metadata`` records whose body is a JSON envelope;
-    outlinks live at Envelope → Payload-Metadata →
-    HTTP-Response-Metadata → HTML-Metadata → Links (a list of {path,
-    url} objects).  One row per (page, outlink) with the page url and
-    capture ts — the link-graph feed (extract_links / pagerank / HITS /
-    anchor ops) at ~1/20 the archive bytes, no HTML parse.  A record
-    whose JSON is malformed or link-free is skipped, not fatal (same
-    quarantine philosophy as the JSONL source)."""
-    import json as _json
-
-    if name.endswith(".gz"):
-        data = _bounded_gunzip_members(data, _MAX_FILE_BYTES)
-    for i, (headers, body) in enumerate(iter_warc_records(data)):
-        if headers.get(b"warc-type") != b"metadata":
-            continue
-        url = headers.get(b"warc-target-uri")
-        if url is None:
-            continue
-        try:
-            env = _json.loads(body.decode("utf-8", "replace"))
-            links = (
-                env["Envelope"]["Payload-Metadata"]
-                ["HTTP-Response-Metadata"]["HTML-Metadata"]["Links"]
-            )
-        except (ValueError, KeyError, TypeError):
-            continue
-        src = url.decode("utf-8", "replace")
-        ts = _warc_ts(headers)
-        for j, link in enumerate(links):
-            href = link.get("url") if isinstance(link, dict) else None
-            if not href:
-                continue
-            yield {
-                "url": src,
-                "warc_ts": ts,
-                "href": str(href),
-                "link_idx": j,
-                "_src_file": name,
-                "_src_row": i,
-            }
-
-
-def read_wat(spark: SparkSession, path: str) -> DataFrame:
-    """WAT file(s) → outlink DataFrame (url, warc_ts, href, link_idx,
-    _src_file, _src_row) — the link-graph tier: plan the graph ops off
-    the ~5 % metadata bytes instead of re-parsing HTML at archive scale
-    (the CDXJ lesson applied to links).  Same binaryFile → mapInPandas
-    shape and bomb caps as the WARC/WET readers."""
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType, TimestampType)
-
-    schema = StructType([
-        StructField("url", StringType(), True),
-        StructField("warc_ts", TimestampType(), True),
-        StructField("href", StringType(), True),
-        StructField("link_idx", LongType(), True),
-        StructField("_src_file", StringType(), True),
-        StructField("_src_row", LongType(), True),
-    ])
-    files = spark.read.format("binaryFile").load(path).select(
-        "path", "content"
-    )
-
-    def _fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            rows = []
-            for name, content in zip(pdf["path"].values,
-                                     pdf["content"].values):
-                rows.extend(wat_records_to_rows(str(name), bytes(content)))
+                rows.extend(records_to_rows(str(name), bytes(content)))
             yield pd.DataFrame(rows, columns=cols)
 
     return files.mapInPandas(_fn, schema)
@@ -432,95 +309,3 @@ def write_warc(pages_pdf: pd.DataFrame, path: str,
     with open(path, "wb") as f:
         f.write(blob)
 
-
-def write_wat(pages_pdf: pd.DataFrame, path: str,
-              compress: bool = False) -> None:
-    """(url, warc_ts, hrefs list) rows → one WAT file (warcinfo +
-    metadata records carrying the Common-Crawl JSON envelope) — the
-    test/bench producer for ``read_wat``."""
-    import hashlib
-    import json as _json
-
-    out = bytearray()
-
-    def record(rtype: str, body: bytes, extra: dict) -> bytes:
-        rid = hashlib.md5(
-            rtype.encode() + extra.get("WARC-Target-URI", "").encode()
-        ).hexdigest()
-        head = [b"WARC/1.0", b"WARC-Type: " + rtype.encode(),
-                b"WARC-Record-ID: <urn:uuid:" + rid.encode() + b">"]
-        for k, v in extra.items():
-            head.append(k.encode() + b": " + v.encode())
-        head.append(b"Content-Length: " + str(len(body)).encode())
-        return b"\r\n".join(head) + _CRLF2 + body + _CRLF2
-
-    out += record("warcinfo", b"software: ocrd-calamari-spark-gen\r\n",
-                  {"WARC-Date": "2024-06-01T00:00:00Z"})
-    for _, row in pages_pdf.iterrows():
-        env = {
-            "Envelope": {
-                "Payload-Metadata": {
-                    "HTTP-Response-Metadata": {
-                        "HTML-Metadata": {
-                            "Links": [
-                                {"path": "A@/href", "url": h}
-                                for h in (row["hrefs"] or [])
-                            ]
-                        }
-                    }
-                }
-            }
-        }
-        ts = row["warc_ts"]
-        iso = (pd.Timestamp(ts).strftime("%Y-%m-%dT%H:%M:%SZ")
-               if ts is not None else "2024-06-01T00:00:00Z")
-        out += record(
-            "metadata", _json.dumps(env).encode("utf-8"), {
-                "WARC-Target-URI": row["url"],
-                "WARC-Date": iso,
-                "Content-Type": "application/json",
-            })
-    blob = bytes(out)
-    if compress:
-        blob = gzip.compress(blob)
-    with open(path, "wb") as f:
-        f.write(blob)
-
-
-def write_wet(pages_pdf: pd.DataFrame, path: str,
-              compress: bool = False) -> None:
-    """pages rows → one WET file (warcinfo + conversion records with
-    plain-text bodies, no HTTP envelope) — the Common-Crawl
-    extracted-text shard shape, for tests/benches of ``read_wet``."""
-    import hashlib
-
-    out = bytearray()
-
-    def record(rtype: str, body: bytes, extra: dict) -> bytes:
-        rid = hashlib.md5(
-            rtype.encode() + extra.get("WARC-Target-URI", "").encode()
-        ).hexdigest()
-        head = [b"WARC/1.0", b"WARC-Type: " + rtype.encode(),
-                b"WARC-Record-ID: <urn:uuid:" + rid.encode() + b">"]
-        for k, v in extra.items():
-            head.append(k.encode() + b": " + v.encode())
-        head.append(b"Content-Length: " + str(len(body)).encode())
-        return b"\r\n".join(head) + _CRLF2 + body + _CRLF2
-
-    out += record("warcinfo", b"software: ocrd-calamari-spark-gen\r\n",
-                  {"WARC-Date": "2024-06-01T00:00:00Z"})
-    for _, row in pages_pdf.iterrows():
-        body = (row["text"] or "").encode("utf-8")
-        ts = row["warc_ts"]
-        iso = (pd.Timestamp(ts).strftime("%Y-%m-%dT%H:%M:%SZ")
-               if ts is not None else "2024-06-01T00:00:00Z")
-        out += record("conversion", body, {
-            "WARC-Target-URI": row["url"],
-            "WARC-Date": iso,
-            "Content-Type": "text/plain",
-        })
-    blob = bytes(out)
-    if compress:
-        blob = gzip.compress(blob)
-    with open(path, "wb") as f:
-        f.write(blob)

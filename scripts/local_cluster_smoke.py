@@ -1,7 +1,6 @@
-"""Multi-JVM smoke (build plan §7.1.7): run the golden e2e plus one
-shuffle-heavy and one broadcast query on ``local-cluster[2,4,2048]`` —
-two SEPARATE executor JVMs, so cross-JVM Arrow batches, shuffle-file
-transport, and broadcast distribution are actually exercised (all of
+"""Multi-JVM smoke (build plan §7.1.7): run the extraction engine on
+``local-cluster[2,4,2048]`` — two SEPARATE executor JVMs, so cross-JVM
+Arrow batches and shuffle-file transport are actually exercised (both of
 which ``local[N]`` short-circuits in-process).  The cheapest available
 step toward real-cluster confidence in a sandbox with no cluster.
 
@@ -9,12 +8,12 @@ Checks (all hard asserts):
 1. extraction byte-identity: Spark output text/conf per url ==
    the committed golden parquet (the frozen single-process kernel
    oracle) — mapInArrow over executors in separate JVMs;
-2. minhash_dedup at sf0.01 == its DuckDB oracle (banded-LSH self-join:
-   cross-JVM shuffle files);
-3. decontaminate at sf0.01 == its DuckDB oracle (gram-set broadcast:
-   cross-JVM broadcast transport).
+2. the WARC path: ``gen_pages(400, seed=42)`` written as WARC files and
+   run through ``extract_df(read_pages(spark, "warc:…"))`` — binaryFile →
+   records → salted repartition (cross-JVM shuffle files) → mapInArrow —
+   equals single-process ``extract_batch`` over the same records, per url.
 
-Usage: python scripts/local_cluster_smoke.py   (~2-3 min)
+Usage: python scripts/local_cluster_smoke.py   (~2 min)
 """
 
 from __future__ import annotations
@@ -27,7 +26,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
 
-import duckdb  # noqa: E402
+import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
 import pyspark  # noqa: E402
 
@@ -35,32 +34,35 @@ os.environ.setdefault("SPARK_HOME", os.path.dirname(pyspark.__file__))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-SF = "/root/testdata/sf0.01"
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
 GOLDEN = os.path.join(REPO, "tests", "golden", "pages_golden.parquet")
+WARC_FILES = 4
+COMPARED = ("text", "conf", "n_blocks", "blocks", "words", "overwrote",
+            "raw_charset", "error")
 
 
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        if "datetime" in str(df[c].dtype):
-            df[c] = df[c].astype("datetime64[us]")
-        if str(df[c].dtype).startswith(("int", "uint")) \
-                and str(df[c].dtype) != "int64":
-            df[c] = df[c].astype("int64")
-        if str(df[c].dtype) == "float32":
-            df[c] = df[c].astype("float64")
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
+def _canon(v):
+    """Spark rows and oracle dicts to one comparable shape (an empty span
+    list may come back from Arrow as [] or None; pandas holds an error
+    row's null conf / n_blocks as NaN)."""
+    if isinstance(v, float) and v != v:
+        return None
+    if hasattr(v, "asDict"):
+        v = v.asDict(recursive=True)
+    if isinstance(v, np.ndarray):
+        v = v.tolist()
+    if isinstance(v, dict):
+        return {k: _canon(x) for k, x in v.items()}
+    if isinstance(v, (list, tuple)):
+        return [_canon(x) for x in v] or None
+    return v
 
 
 def main() -> None:
     from ocrd_calamari_spark.config import ExtractConfig
-    from ocrd_calamari_spark.entry_queries import ORACLES, QUERIES
     from ocrd_calamari_spark.gen import gen_pages, write_pages_parquet
+    from ocrd_calamari_spark.kernel.extract import extract_batch
     from ocrd_calamari_spark.pipeline import extract_df, read_pages
+    from ocrd_calamari_spark.sources.warc import records_to_rows, write_warc
 
     spark = (
         SparkSession.builder.master("local-cluster[2,4,2048]")
@@ -113,19 +115,32 @@ def main() -> None:
     print("[OK]   golden e2e: 400 urls byte-identical across 2 executor "
           "JVMs (cross-JVM Arrow)")
 
-    # --- 2+3. shuffle-heavy + broadcast queries vs DuckDB oracle ---
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{SF}/{t}.parquet')")
-    for name, why in (("minhash_dedup", "cross-JVM shuffle files"),
-                      ("decontaminate", "cross-JVM broadcast transport")):
-        got = normalize(QUERIES[name](spark, SF).toPandas())
-        want = normalize(con.execute(ORACLES[name]).df())
-        assert list(got.columns) == list(want.columns), name
-        assert len(got) == len(want), (name, len(got), len(want))
-        pd.testing.assert_frame_equal(got, want, check_dtype=False)
-        print(f"[OK]   {name}: {len(got)} rows match oracle ({why})")
+    # --- 2. WARC path: binaryFile → records → salted shuffle → map ---
+    pages = gen_pages(400, seed=42)
+    warc_dir = os.path.join(work, "warc")
+    os.makedirs(warc_dir)
+    records = []
+    for k in range(WARC_FILES):
+        path = os.path.join(warc_dir, "part-%02d.warc.gz" % k)
+        write_warc(pages.iloc[k::WARC_FILES], path, compress=True)
+        with open(path, "rb") as f:
+            records.extend(records_to_rows(path, f.read()))
+    cfg = ExtractConfig(textequiv_level="word")
+    df = extract_df(read_pages(spark, "warc:" + warc_dir), cfg,
+                    lineage_cols=("_src_file", "_src_row"))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" in plan, "expected the salted repartition exchange"
+    got = {r["url"]: r.asDict(recursive=True)
+           for r in df.select("url", *COMPARED).collect()}
+    oracle = extract_batch(pd.DataFrame(records), cfg)
+    assert len(got) == len(oracle) == 400, (len(got), len(oracle))
+    bad = [rec["url"] for rec in oracle.to_dict("records")
+           if rec["url"] not in got
+           or any(_canon(got[rec["url"]][c]) != _canon(rec[c])
+                  for c in COMPARED)]
+    assert not bad, f"WARC path differs from extract_batch on {bad[:5]}"
+    print(f"[OK]   warc path: 400 urls from {WARC_FILES} WARC files equal "
+          "extract_batch across a cross-JVM shuffle")
 
     spark.stop()
     print("multi-JVM smoke: all checks pass")

@@ -1,6 +1,7 @@
 """Driver-contract guard: __spark_entry__ loads, entry() runs at sf0.001,
-every queries() entry is callable, and a fast subset of oracle pairs match
-DuckDB (the full gate is scripts/check_oracles.py at sf0.01)."""
+every queries() entry is callable, the extraction entries run and return
+their columns, and a fast subset of oracle pairs match DuckDB (the full
+gate is scripts/check_oracles.py at sf0.01)."""
 
 import duckdb
 import pandas as pd
@@ -20,6 +21,17 @@ FAST_ORACLED = ["filter_project", "topk_per_lang", "join_revenue",
                 "soft404_filter", "mojibake_detect", "clean_pipeline",
                 "lang_mix", "global_shuffle", "vocab_coverage",
                 "paragraph_dedup", "bpe_encode", "exact_sample"]
+SCALAR_COLS = ["url", "text", "conf", "n_blocks", "error"]
+EXTRACTION_COLS = {
+    "extract_pages": SCALAR_COLS,
+    "extract_word_spans": ["url", "word_id", "start", "end", "word_text",
+                           "span_ok"],
+    "extract_sequence_voter": SCALAR_COLS,
+    "extract_glyph_spans": ["url", "glyph_id", "start", "end", "n_alts",
+                            "top_text"],
+    "extract_golden_diff": ["url", "text", "conf", "n_blocks", "overwrote",
+                            "raw_charset", "error"],
+}
 
 
 @pytest.fixture(scope="module")
@@ -71,40 +83,22 @@ def test_oracle_parity_fast_subset(spark, entrymod, duck, name):
     pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
-def test_rotation_front_loads_unproven_keys(entrymod, tmp_path):
-    """queries() ordering is the mechanical rotation: never-checked /
-    changed-since-green / previously-failed keys sort into the driver's
-    ~50-entry sample window ahead of recently-green ones."""
-    import json
+@pytest.mark.parametrize("name", list(EXTRACTION_COLS))
+def test_extraction_query_runs_with_expected_columns(spark, entrymod, name):
+    df = entrymod.queries()[name](spark, SF)
+    assert df.columns == EXTRACTION_COLS[name]
+    rows = df.collect()
+    assert len(rows) > 0
+    if "span_ok" in df.columns:
+        assert all(r["span_ok"] is not False for r in rows)
 
-    from ocrd_calamari_spark.rotation import rotated_order
 
-    keys = list(entrymod.queries())
-    oracles = set(entrymod.oracle_sql())
-
-    # live ordering: every key the evidence files have never certified
-    # must sit inside the first-50 window (there are < 50 of them today;
-    # if the registry outgrows that, the assert flags the overflow)
-    from ocrd_calamari_spark.rotation import load_evidence
-
-    last = load_evidence(entrymod._REPO_DIR)
-    never = [k for k in keys if k not in last]
-    assert all(keys.index(k) < 50 for k in never), never
-
-    # synthetic evidence: a failed row re-fronts; green rows demote by age
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
-        "a_old_green": {"err": None},
-        "c_failed": {"err": "boom"},
-    }))
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
-        "b_new_green": {"err": None},
-        "d_rows_only": {"err": "no_oracle"},
-    }))
-    order = rotated_order(
-        ["a_old_green", "b_new_green", "c_failed", "d_rows_only", "e_never"],
-        {"a_old_green", "b_new_green", "c_failed", "e_never"},
-        str(tmp_path),
-        forced_front=(),
-    )
-    assert order == ["c_failed", "e_never", "a_old_green", "b_new_green",
-                     "d_rows_only"]
+def test_golden_diff_matches_oracle_exactly(spark, entrymod):
+    """The golden certificate compared unsorted and unnormalised: same
+    columns, same row order, same values (the oracle reads the committed
+    golden parquet)."""
+    name = "extract_golden_diff"
+    sdf = entrymod.queries()[name](spark, SF).toPandas()
+    odf = duckdb.connect().execute(entrymod.oracle_sql()[name]).fetchdf()
+    assert list(sdf.columns) == list(odf.columns)
+    pd.testing.assert_frame_equal(sdf, odf, check_exact=True)

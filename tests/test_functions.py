@@ -1550,17 +1550,6 @@ class TestApiGuards:
         with pytest.raises(ValueError, match="n_files"):
             zorder_layout(df, "a", "b", n_files=0)
 
-    def test_jsonl_allows_corrupt_substring_names(self, spark, tmp_path):
-        from ocrd_calamari_spark.sources.jsonl import read_jsonl
-
-        p = tmp_path / "d.jsonl"
-        p.write_text('{"doc_id": 1, "_corruption_score": 0.5}\n')
-        out = read_jsonl(
-            spark, str(p), "doc_id bigint, _corruption_score double",
-            with_lineage=False,
-        )
-        assert out.count() == 1
-
     def test_canonical_url_passthrough_not_null(self, spark):
         from pyspark.sql import functions as F
 

@@ -405,6 +405,7 @@ class TestResumeCorpusGuards:
         from ocrd_calamari_spark.job import parse_args
 
         base = ["--source", "x", "--out", "y"]
-        for extra in (["--buckets", "0"], ["--chunks", "0"]):
+        for extra in (["--buckets", "0"], ["--chunks", "0"],
+                      ["--partitions", "0"], ["--partitions", "-1"]):
             with _pytest.raises(SystemExit):
                 parse_args(base + extra)

@@ -2,13 +2,12 @@
 extraction parity with the parquet-sourced pipeline."""
 
 import gzip
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from ocrd_calamari_spark.config import ExtractConfig
-from ocrd_calamari_spark.pipeline import read_pages, run_extraction, read_output
+from ocrd_calamari_spark.pipeline import run_extraction, read_output
 from ocrd_calamari_spark.sources.warc import (
     iter_warc_records,
     read_warc,
@@ -75,6 +74,20 @@ class TestWarcRoundTrip:
         idx = sorted(r["_src_row"] for r in rows)
         assert idx[0] >= 1  # record 0 is warcinfo, skipped
         assert len(set(idx)) == len(idx)  # unique per record
+
+    def test_mixed_container_keeps_only_response_records(
+            self, spark, pages_pdf, tmp_path):
+        """A concatenated response + conversion + metadata stream: the
+        record-type filter, not file naming, decides what read_warc sees."""
+        p = str(tmp_path / "mixed.warc")
+        write_warc(pages_pdf.head(5), p)
+        with open(p, "ab") as f:
+            for rtype in (b"conversion", b"metadata"):
+                f.write(b"WARC/1.0\r\nWARC-Type: " + rtype + b"\r\n"
+                        b"WARC-Target-URI: https://other.example/\r\n"
+                        b"Content-Length: 4\r\n\r\nbody\r\n\r\n")
+        got = read_warc(spark, p).toPandas()
+        assert sorted(got["url"]) == sorted(pages_pdf.head(5)["url"])
 
     def test_malformed_tail_stops_cleanly(self):
         bad = (b"WARC/1.0\r\nWARC-Type: response\r\n"
@@ -252,143 +265,3 @@ class TestHttpBodyDecoding:
         body2 = (b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
                  b"5\r\nhello")
         assert _http_payload(body2) == b"hello"
-
-
-class TestWetSource:
-    """WET (Common-Crawl extracted text) tier: conversion records, plain
-    text bodies, shared container machinery with the WARC reader."""
-
-    @pytest.fixture(scope="class")
-    def wet_pdf(self, pages_pdf):
-        pdf = pages_pdf[["url", "warc_ts"]].copy()
-        pdf["text"] = [
-            f"Document {i} body with words\nand a café — naïve line."
-            for i in range(len(pdf))
-        ]
-        return pdf
-
-    def test_round_trip_text_exact(self, spark, wet_pdf, tmp_path_factory):
-        from ocrd_calamari_spark.sources.warc import read_wet, write_wet
-
-        d = tmp_path_factory.mktemp("wet")
-        p = str(d / "crawl-00000.warc.wet")
-        write_wet(wet_pdf, p)
-        got = read_wet(spark, p).toPandas().set_index("url")
-        src = wet_pdf.set_index("url")
-        assert sorted(got.index) == sorted(src.index)
-        for url in src.index:
-            assert got.loc[url, "text"] == src.loc[url, "text"]
-        assert got["html"].isna().all()
-        assert got["warc_ts"].notna().all()
-
-    def test_gzip_round_trip(self, spark, wet_pdf, tmp_path_factory):
-        from ocrd_calamari_spark.sources.warc import read_wet, write_wet
-
-        d = tmp_path_factory.mktemp("wetgz")
-        p = str(d / "crawl-00000.warc.wet.gz")
-        write_wet(wet_pdf, p, compress=True)
-        got = read_wet(spark, p).toPandas()
-        assert len(got) == len(wet_pdf)
-        assert set(got["url"]) == set(wet_pdf["url"])
-
-    def test_mixed_container_filters_by_record_type(
-            self, spark, pages_pdf, wet_pdf, tmp_path_factory):
-        """A concatenated response+conversion stream: read_warc must see
-        only the response records, read_wet only the conversion ones —
-        the record-type filter, not file naming, decides."""
-        from ocrd_calamari_spark.sources.warc import (
-            read_wet, write_warc, write_wet)
-
-        d = tmp_path_factory.mktemp("mixed")
-        pw, pt = str(d / "a.warc"), str(d / "b.warc")
-        write_warc(pages_pdf.head(5), pw)
-        write_wet(wet_pdf.head(7), pt)
-        mixed = str(d / "mixed.warc")
-        with open(mixed, "wb") as f:
-            f.write(open(pw, "rb").read() + open(pt, "rb").read())
-        assert read_wet(spark, mixed).count() == 7
-        assert read_warc(spark, mixed).count() == 5
-
-    def test_wet_feeds_text_operators_directly(
-            self, spark, wet_pdf, tmp_path_factory):
-        """The WET tier's point: text-side ops run with no extraction
-        kernel in between."""
-        from ocrd_calamari_spark.functions.text import mojibake_scores
-        from ocrd_calamari_spark.sources.warc import read_wet, write_wet
-
-        d = tmp_path_factory.mktemp("wetops")
-        p = str(d / "x.warc.wet")
-        write_wet(wet_pdf.head(20), p)
-        pages = read_wet(spark, p).select(
-            F.col("url").alias("doc_id"), "text")
-        rows = mojibake_scores(pages).collect()
-        assert len(rows) == 20
-        assert all(not r.is_mojibake for r in rows)
-
-
-class TestWatSource:
-    """WAT (Common-Crawl metadata/link) tier: JSON-envelope metadata
-    records → one (page, outlink) row per link — the link-graph feed
-    at ~1/20 the archive bytes."""
-
-    @pytest.fixture(scope="class")
-    def wat_pdf(self, pages_pdf):
-        pdf = pages_pdf[["url", "warc_ts"]].head(12).copy()
-        pdf["hrefs"] = [
-            [f"https://host{i % 3}.example/p/{j}" for j in range(i % 4)]
-            for i in range(len(pdf))
-        ]
-        return pdf
-
-    def test_round_trip_links_exact(self, spark, wat_pdf,
-                                    tmp_path_factory):
-        from ocrd_calamari_spark.sources.warc import read_wat, write_wat
-
-        d = tmp_path_factory.mktemp("wat")
-        p = str(d / "crawl-00000.warc.wat")
-        write_wat(wat_pdf, p)
-        got = read_wat(spark, p).toPandas()
-        want = [(r["url"], h, j)
-                for _, r in wat_pdf.iterrows()
-                for j, h in enumerate(r["hrefs"])]
-        assert sorted(zip(got["url"], got["href"], got["link_idx"])) \
-            == sorted(want)
-        assert got["warc_ts"].notna().all()
-
-    def test_malformed_json_record_is_skipped_not_fatal(
-            self, spark, wat_pdf, tmp_path_factory):
-        from ocrd_calamari_spark.sources.warc import read_wat, write_wat
-
-        d = tmp_path_factory.mktemp("watbad")
-        p = str(d / "bad.warc.wat")
-        write_wat(wat_pdf, p)
-        blob = open(p, "rb").read()
-        bad = (b"WARC/1.0\r\nWARC-Type: metadata\r\n"
-               b"WARC-Record-ID: <urn:uuid:deadbeef>\r\n"
-               b"WARC-Target-URI: https://broken.example/\r\n"
-               b"Content-Length: 9\r\n\r\nnot json!\r\n\r\n")
-        with open(p, "wb") as f:
-            f.write(blob + bad)
-        got = read_wat(spark, p).toPandas()
-        assert "https://broken.example/" not in set(got["url"])
-        n_links = sum(len(h) for h in wat_pdf["hrefs"])
-        assert len(got) == n_links
-
-    def test_wat_feeds_link_graph_directly(self, spark, wat_pdf,
-                                           tmp_path_factory):
-        """Host-level edges straight off the metadata tier — no HTML
-        parse anywhere in the plan."""
-        from ocrd_calamari_spark.sources.warc import read_wat, write_wat
-
-        d = tmp_path_factory.mktemp("watgraph")
-        p = str(d / "g.warc.wat")
-        write_wat(wat_pdf, p)
-        links = read_wat(spark, p)
-        edges = (links
-                 .select(F.expr("parse_url(url, 'HOST')").alias("src"),
-                         F.expr("parse_url(href, 'HOST')").alias("dst"))
-                 .where(F.col("dst").isNotNull())
-                 .groupBy("src", "dst").count())
-        rows = edges.collect()
-        assert len(rows) > 0
-        assert all(r["count"] >= 1 for r in rows)
