@@ -2,8 +2,8 @@
 
 entry(spark)   — flagship extraction over pages synthesized from
                  /root/testdata/sf0.001/documents.parquet
-queries()      — one entry per implemented operator (SURVEY.md §2 +
-                 training-data-pipeline ops), in registry order
+queries()      — the five extraction entries plus the remaining
+                 training-data-pipeline operators, in registry order
 oracle_sql()   — DuckDB twins for the SQL-expressible subset; extraction
                  and hash-algorithm-specific ops are rows-only by design.
 """

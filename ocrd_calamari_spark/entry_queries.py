@@ -23,7 +23,6 @@ from ocrd_calamari_spark.functions.dedup import (
     minhash_dedup,
     simhash_near_dupes,
 )
-from ocrd_calamari_spark.functions.simsearch import brute_force_topk, lsh_topk
 from ocrd_calamari_spark.functions.text import (
     lang_id_sql,
     quality_score_sql,
@@ -193,279 +192,6 @@ def q_extract_word_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Relational operators (SQL-expressible, DuckDB-oracled)
 # ---------------------------------------------------------------------------
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: scan-filter → hash agg (map-side partial)."""
-    # timestamp_ntz literals: the parquet columns are TIMESTAMP_NTZ;
-    # a TIMESTAMP literal would coerce through the session timezone and
-    # shift the predicate under non-UTC driver sessions
-    li = _t(spark, sf_dir, "lineitem")
-    dec = lambda c: F.col(c).cast("decimal(18,2)")
-    g = (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp_ntz"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(dec("l_quantity")).alias("_sq"),
-            F.sum(dec("l_extendedprice")).alias("_sbp"),
-            F.sum(
-                (dec("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - dec("l_discount")))
-                .cast("decimal(18,4)")
-            ).alias("_sdp"),
-            F.count("*").alias("count_order"),
-        )
-    )
-    return g.select(
-        "l_returnflag",
-        "l_linestatus",
-        F.col("_sq").cast("double").alias("sum_qty"),
-        F.col("_sbp").cast("double").alias("sum_base_price"),
-        F.col("_sdp").cast("double").alias("sum_disc_price"),
-        F.round(F.col("_sq").cast("double") / F.col("count_order"), 4).alias("avg_qty"),
-        F.round(F.col("_sbp").cast("double") / F.col("count_order"), 4).alias("avg_price"),
-        "count_order",
-    ).transform(_psort, "l_returnflag", "l_linestatus")
-
-
-Q1_SQL = """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-       CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-       ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 4) AS avg_qty,
-       ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 4) AS avg_price,
-       COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: tight scan-filter → single exact aggregate."""
-    li = _t(spark, sf_dir, "lineitem")
-    dec = lambda c: F.col(c).cast("decimal(18,2)")
-    return (
-        li.where(
-            (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
-            & F.col("l_discount").between(0.03, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum(
-                (dec("l_extendedprice") * dec("l_discount")).cast("decimal(18,4)")
-            ).cast("double").alias("revenue"),
-            F.count("*").alias("n_rows"),
-        )
-    )
-
-
-Q6_SQL = """
-SELECT CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2)) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-       COUNT(*) AS n_rows
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-  AND l_discount BETWEEN 0.03 AND 0.07
-  AND l_quantity < 24
-"""
-
-
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way join → agg → deterministic top-10."""
-    c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp_ntz")
-    )
-    li = _t(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("1995-03-15 00:00:00").cast("timestamp_ntz")
-    )
-    dec = lambda col: F.col(col).cast("decimal(18,2)")
-    agg = (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.sum(
-                (dec("l_extendedprice")
-                 * (F.lit(1).cast("decimal(18,2)") - dec("l_discount")))
-                .cast("decimal(18,4)")
-            ).cast("double").alias("revenue")
-        )
-    )
-    return agg.orderBy(F.desc("revenue"), F.asc("o_orderkey")).limit(10)
-
-
-Q3_SQL = """
-SELECT o_orderkey, o_orderdate, o_orderpriority,
-       CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-  AND l_shipdate  > TIMESTAMP '1995-03-15 00:00:00'
-GROUP BY o_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, o_orderkey
-LIMIT 10
-"""
-
-
-def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1/F4 analogue: early filter + projection (pushdown-friendly)."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.where((F.col("lang") == "en") & F.col("n_chars").between(100, 400))
-        .select("doc_id", "n_chars", "source")
-    )
-
-
-FILTER_PROJECT_SQL = """
-SELECT doc_id, n_chars, source FROM documents
-WHERE lang = 'en' AND n_chars BETWEEN 100 AND 400
-"""
-
-
-def q_topk_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1/O1 analogue: ranked-desc within partition, top-k."""
-    d = _t(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(F.desc("n_chars"), F.asc("doc_id"))
-    return (
-        d.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .select("lang", "doc_id", "n_chars", "rn")
-    )
-
-
-TOPK_SQL = """
-SELECT lang, doc_id, n_chars, rn FROM (
-  SELECT lang, doc_id, n_chars,
-         ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id) AS rn
-  FROM documents
-) WHERE rn <= 5
-"""
-
-
-def q_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2 analogue: cumulative offsets as running sum per key."""
-    o = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .over(w)
-        .cast("double")
-        .alias("running_total"),
-    )
-
-
-RUNNING_TOTAL_SQL = """
-SELECT o_custkey, o_orderkey,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-         PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
-FROM orders
-"""
-
-
-def q_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast equi-join (the fused-votes join shape, SURVEY.md §2.3)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("revenue"),
-            F.count("*").alias("n_orders"),
-        )
-        .transform(_psort, "c_mktsegment")
-    )
-
-
-JOIN_REVENUE_SQL = """
-SELECT c_mktsegment,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-       COUNT(*) AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment ORDER BY c_mktsegment
-"""
-
-
-def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left anti join — the golden-comparison shape (SURVEY.md §2.7)."""
-    o = _t(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp_ntz")
-    )
-    c = _t(spark, sf_dir, "customer")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", "c_name"
-    )
-
-
-ANTI_JOIN_SQL = """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey
-                    AND o_orderdate >= TIMESTAMP '1998-01-01 00:00:00')
-"""
-
-
-def q_ordered_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1-A3 analogue: order-sensitive hierarchical concat (separator-exact),
-    done as nested-array aggregation — collect, sort by explicit position,
-    then join with the exact separator (no implicit order anywhere)."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.where(F.col("doc_id") < 30)
-        .select("lang", "doc_id", F.substring("text", 1, 20).alias("t"))
-        .groupBy("lang")
-        .agg(
-            F.concat_ws(
-                "\n",
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("doc_id", "t"))),
-                    lambda s: s["t"],
-                ),
-            ).alias("concat_text"),
-            F.count("*").alias("n_docs"),
-        )
-        .orderBy("lang")
-    )
-
-
-ORDERED_CONCAT_SQL = """
-SELECT lang,
-       string_agg(t, chr(10) ORDER BY doc_id) AS concat_text,
-       COUNT(*) AS n_docs
-FROM (SELECT lang, doc_id, substr(text, 1, 20) AS t FROM documents WHERE doc_id < 30)
-GROUP BY lang ORDER BY lang
-"""
-
-
-def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup fingerprints: md5-based hash-groupBy."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.select(
-            F.substring(F.md5(F.col("text").cast("binary")), 1, 16).alias("fp")
-        )
-        .groupBy("fp")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
-
-
-EXACT_DEDUP_SQL = """
-SELECT substr(md5(text), 1, 16) AS fp, COUNT(*) AS n
-FROM documents GROUP BY fp
-"""
 
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -508,8 +234,8 @@ SELECT doc_id, {lang_id_sql('text')} AS lang_pred FROM documents
 
 
 # shared literals for the injected foreign paragraphs — both engines
-# embed THESE strings (soft-404-template discipline); each is dense in
-# its language's lang_id marker words
+# embed THESE strings (same discipline as _PAGE_HEAD/_PAGE_FOOT); each is
+# dense in its language's lang_id marker words
 _MIX_DE = ("Der Hund und die Katze ist der Freund und der Nachbar"
            " und die Idee ist der Anfang.")
 _MIX_FR = ("Le chat et les amis est le debut des histoires et le reve"
@@ -625,102 +351,6 @@ FROM tot t JOIN dom d USING (doc_id) ORDER BY t.doc_id
 LANG_MIX_SQL = _lang_mix_sql()
 
 
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session counting via lag + gap flags (the stateful-streaming shape,
-    run in batch)."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = e.select(
-        "user_id",
-        F.when(
-            F.col("ts") - F.lag("ts").over(w) > F.expr("INTERVAL 30 MINUTES"),
-            1,
-        )
-        .otherwise(0)
-        .alias("brk"),
-    )
-    return (
-        flagged.groupBy("user_id")
-        .agg((F.sum("brk") + 1).cast("bigint").alias("n_sessions"))
-        .transform(_psort, "user_id")
-    )
-
-
-SESSIONIZE_SQL = """
-SELECT user_id, CAST(SUM(brk) + 1 AS BIGINT) AS n_sessions FROM (
-  SELECT user_id,
-         CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   > INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS brk
-  FROM events
-) GROUP BY user_id ORDER BY user_id
-"""
-
-
-def q_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time windows (streaming shape, batch execution)."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("hour_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-HOURLY_SQL = """
-SELECT date_trunc('hour', ts) AS hour_start, event_type,
-       COUNT(*) AS n,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM events GROUP BY 1, 2
-"""
-
-
-def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k (similarity-search baseline)."""
-    # single-file fixture → spread the per-row scoring map (the 5.9 MB
-    # embeddings file scans as 2 splits; measured 2.4 s of dot products
-    # on 2 of 32 cores at sf1.0)
-    emb = _t(spark, sf_dir, "embeddings").repartition(
-        2 * spark.sparkContext.defaultParallelism, "vec_id"
-    )
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = brute_force_topk(emb, queries, k=10)
-    return out.select(
-        "query_id",
-        "vec_id",
-        F.round("cosine_sim", 4).alias("cosine_sim"),
-        F.col("rank").cast("bigint").alias("rank"),
-    )
-
-
-COSINE_TOPK_SQL = """
-WITH q AS (
-  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-  FROM embeddings WHERE vec_id < 5
-), scored AS (
-  SELECT q.query_id, e.vec_id,
-         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS sim
-  FROM embeddings e CROSS JOIN q
-), ranked AS (
-  SELECT query_id, vec_id, sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, ROUND(sim, 4) AS cosine_sim, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= 10
-"""
-
-
 # ---------------------------------------------------------------------------
 # Near-dup queries (approximate / hash-algorithm-specific → rows-only).
 # Deterministic near-dups are injected by unioning mutated copies.
@@ -801,8 +431,7 @@ FROM pairs WHERE j >= 7e-1 ORDER BY id_a, id_b
 
 def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-vs-exact-Jaccard recall audit
-    (functions/dedup.py:minhash_recall_audit) — the dedup sibling of
-    ann_recall, but HASH-EXACT: signatures, band keys, candidates, and
+    (functions/dedup.py:minhash_recall_audit), HASH-EXACT: signatures, band keys, candidates, and
     buckets all build on the portable md5 hash, so DuckDB reproduces
     the entire audit bit-for-bit.  Fixture: every doc gets one
     truncated copy keeping 55/70/85/95/100 % of its tokens (by
@@ -1156,141 +785,6 @@ ORDER BY fp
 """
 
 
-def q_cosine_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same exact top-k as cosine_topk, via the vectorized numpy scorer
-    with per-batch local top-k (the scale path) — shares the SQL oracle."""
-    from ocrd_calamari_spark.functions.simsearch import brute_force_topk_pandas
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = brute_force_topk_pandas(emb, queries, k=10)
-    return out.select(
-        "query_id",
-        "vec_id",
-        F.round("cosine_sim", 4).alias("cosine_sim"),
-        F.col("rank").cast("bigint").alias("rank"),
-    )
-
-
-def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocrd_calamari_spark.functions.simsearch import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    # train_rows caps the driver-side k-means sample (deterministic hash
-    # mod derived from count(); fixture is small so every row qualifies)
-    out = ivf_topk(emb, queries, k=10, n_centroids=16, n_probe=4,
-                   train_rows=512)
-    return out.select(
-        "query_id", "vec_id", F.round("cosine_sim", 4).alias("cosine_sim"),
-        "rank",
-    ).orderBy("query_id", "rank")
-
-
-def q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = lsh_topk(emb, queries, k=10, dim=64, n_planes=6)
-    return out.select(
-        "query_id", "vec_id", F.round("cosine_sim", 4).alias("cosine_sim"), "rank"
-    ).orderBy("query_id", "rank")
-
-
-def q_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN top-k: 8 codes/vector index + ADC
-    gather-sum scoring (see functions/simsearch.py:pq_topk).  Approximate
-    scores → rows-only; recall quantified in ann_recall."""
-    from ocrd_calamari_spark.functions.simsearch import pq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = pq_topk(emb, queries, k=10, m=8, n_centroids=16, train_rows=512,
-                  rerank=100)
-    return out.select(
-        "query_id", "vec_id",
-        F.round("cosine_sim", 4).alias("cosine_sim"), "rank",
-    ).orderBy("query_id", "rank")
-
-
-def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-evaluating ANN quality: recall@10 of the LSH and IVF indexes
-    against the exact brute-force top-10, computed in-plan (semi-join of
-    approx results on exact results, mean hit rate per method) — in BOTH
-    data regimes:
-
-    - ``iid``: the raw fixture — i.i.d. Gaussian embeddings, so the
-      "top-10 neighbors" are barely closer than random: the hardest
-      possible regime for LSH (recall ≈ fraction of corpus scored).
-    - ``clustered``: a deterministic Gaussian-mixture corpus derived
-      JVM-side from the same fixture (member = cluster centroid + 0.15 ×
-      own vector; within-cluster cosine ≈ 0.98) — the regime real
-      embedding corpora live in; recall here is pinned ≥ 0.9 by
-      tests/test_functions.py::TestAnnClusteredRecall.
-
-    The exact side is the SAME ``brute_force_topk`` call (identical
-    corpus/query fixture, k, tie-break) that the ``cosine_topk`` registry
-    query runs — and that query is hash-checked against a DuckDB all-pairs
-    oracle, so the truth set feeding these recalls is oracle-certified
-    even though the recall VALUES stay rows-only (the approx structure is
-    hyperplane/centroid-specific, not SQL-expressible)."""
-    from ocrd_calamari_spark.functions.simsearch import (
-        brute_force_topk, ivf_topk, lsh_topk, pq_topk,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("_cl"), F.col("embedding").alias("_cvec")
-    )
-    clustered = (
-        emb.withColumn("_cl", F.col("vec_id") % 8)
-        .join(F.broadcast(cent), "_cl")
-        .select(
-            "vec_id",
-            F.zip_with(
-                "_cvec", "embedding", lambda c, o: c + o * F.lit(0.15)
-            ).alias("embedding"),
-        )
-    )
-    out = []
-    for regime, corpus in (("iid", emb), ("clustered", clustered)):
-        # the corpus feeds 4 index builds × several scans each (count,
-        # train collect, encode, verify joins) — persist per regime
-        corpus = corpus.persist()
-        queries = corpus.where(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        exact = brute_force_topk(corpus, queries, k=10).select(
-            "query_id", "vec_id"
-        ).persist()
-        n_truth = exact.count()  # 5 queries × k
-        for method, adf in (
-            ("lsh", lsh_topk(corpus, queries, k=10, dim=64, n_planes=6)),
-            ("ivf", ivf_topk(corpus, queries, k=10, n_centroids=16,
-                             n_probe=4, train_rows=512)),
-            ("pq", pq_topk(corpus, queries, k=10, m=8, n_centroids=16,
-                           train_rows=512, rerank=100)),
-        ):
-            hits = (
-                adf.select("query_id", "vec_id")
-                .join(exact, ["query_id", "vec_id"], "left_semi")
-                .count()
-            )
-            out.append((method, regime, float(hits) / n_truth, n_truth))
-        exact.unpersist()  # fully consumed — don't pin it for the session
-        corpus.unpersist()
-    return spark.createDataFrame(
-        out, ["method", "regime", "recall_at_10", "n_truth"]
-    ).orderBy("method", "regime")
-
-
 def q_extract_sequence_voter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Voter variant (sequence_voter ≈ majority vote) through the driver —
     A5 enum coverage (reference ocrd-tool.json:32-37)."""
@@ -1596,105 +1090,6 @@ SELECT doc_id AS media_id,
          AS n_out_samples
 FROM documents WHERE doc_id % 3 = 1
 ORDER BY media_id
-"""
-
-
-def q_embedding_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup over embeddings ∪ perturbed copies."""
-    from ocrd_calamari_spark.functions.simsearch import embedding_near_dupes
-
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    perturbed = emb.where(F.col("vec_id") < 30).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.001)).alias("embedding"),
-    )
-    corpus = emb.unionByName(perturbed)
-    pairs = embedding_near_dupes(corpus, threshold=0.98, dim=64, n_planes=8)
-    return pairs.select(
-        "id_a",
-        "id_b",
-        # floor-quantize (repo oracle rule): Spark round() half-up on the
-        # decimal repr vs DuckDB ROUND on scaled doubles can differ at
-        # x.xxxx5 boundaries
-        F.expr("cast(floor(cosine_sim * 1e4 + 5e-1) / 1e4 as double)").alias(
-            "cosine_sim"
-        ),
-    ).orderBy("id_a", "id_b")
-
-
-# All-pairs ground truth: the injected copies are SCALED (×1.001), which
-# preserves direction exactly → identical hyperplane signs → the LSH blocks
-# have exact recall on them; no natural pair reaches 0.98 on this fixture,
-# so blocked output == all-pairs oracle.
-EMB_NEAR_DUP_SQL = """
-WITH corpus AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000 AS vec_id,
-         [x * 1.001e0 for x in CAST(embedding AS DOUBLE[])] AS v
-  FROM embeddings WHERE vec_id < 30
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       CAST(floor(list_cosine_similarity(a.v, b.v) * 1e4 + 5e-1) / 1e4
-            AS DOUBLE) AS cosine_sim
-FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-WHERE list_cosine_similarity(a.v, b.v) >= 98e-2
-ORDER BY id_a, id_b
-"""
-
-
-def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing: inject deterministic emails/phones into the text,
-    redact with backref-free regexes valid in BOTH Java regex and RE2
-    (DuckDB), and emit the redacted text's fingerprint + hit counts — the
-    standard pre-training scrub pass, all JVM-side regexp_replace."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    dirty = d.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"), F.col("doc_id").cast("string"),
-            F.lit("@example.com or call 555-0123 now"),
-        ),
-    )
-    email_re = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-    phone_re = r"\d{3}-\d{4}"
-    red = dirty.withColumn(
-        "redacted",
-        F.regexp_replace(
-            F.regexp_replace("text", email_re, "<EMAIL>"),
-            phone_re, "<PHONE>",
-        ),
-    )
-    return red.select(
-        "doc_id",
-        F.substring(F.md5(F.col("redacted").cast("binary")), 1, 16).alias(
-            "redacted_fp"
-        ),
-        F.regexp_count("text", F.lit(email_re)).cast("bigint").alias("n_emails"),
-        F.regexp_count("text", F.lit(phone_re)).cast("bigint").alias("n_phones"),
-    ).orderBy("doc_id")
-
-
-REDACT_SQL = r"""
-WITH dirty AS (
-  SELECT doc_id,
-         text || ' contact user' || CAST(doc_id AS VARCHAR)
-              || '@example.com or call 555-0123 now' AS text
-  FROM documents
-)
-SELECT doc_id,
-       substr(md5(regexp_replace(
-                regexp_replace(text,
-                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>',
-                  'g'),
-                '\d{3}-\d{4}', '<PHONE>', 'g')), 1, 16) AS redacted_fp,
-       CAST(len(regexp_extract_all(text,
-              '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
-         AS n_emails,
-       CAST(len(regexp_extract_all(text, '\d{3}-\d{4}')) AS BIGINT)
-         AS n_phones
-FROM dirty ORDER BY doc_id
 """
 
 
@@ -2024,32 +1419,6 @@ def q_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("url", "link_no")
 
 
-def _extract_links_sql() -> str:
-    # page template derived from the SAME constants the Spark fixture
-    # uses — the two sides cannot drift apart
-    head = _PAGE_HEAD.replace("'", "''")
-    foot = _PAGE_FOOT.replace("'", "''")
-    return f"""
-WITH pages AS (
-  SELECT 'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example/d/' || CAST(doc_id AS VARCHAR) AS url,
-         '{head}' || '<article><h1>Document ' || CAST(doc_id AS VARCHAR)
-         || '</h1><p>' || text || '</p></article>' || '{foot}' AS html
-  FROM documents
-), links AS (
-  SELECT url, regexp_extract_all(html, 'href="([^"]*)"', 1) AS hrefs
-  FROM pages
-), e AS (
-  SELECT url,
-         generate_subscripts(hrefs, 1) - 1 AS link_no,
-         unnest(hrefs) AS href
-  FROM links
-)
-SELECT url, CAST(link_no AS BIGINT) AS link_no, href
-FROM e ORDER BY url, link_no
-"""
-
-
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the SYMMETRIZED link graph (pages ↔ their href
     targets, resolved against the page host): 10 fixed power iterations
@@ -2118,279 +1487,14 @@ FROM pr WHERE iter = 10 ORDER BY rank DESC, node
 
 
 def _page_host():
-    """https://<host> of a page url — the single definition both
-    link-graph queries (pagerank, anchor_text) must keep in lockstep
-    with their DuckDB twins' host derivation."""
+    """https://<host> of a page url — the single definition the
+    link-graph queries must keep in lockstep with their DuckDB twins'
+    host derivation."""
     return F.concat(
         F.lit("https://"),
         F.element_at(F.split(F.element_at(F.split("url", "://", 2), 2),
                              "/", 2), 1),
     )
-
-
-def q_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inbound anchor-text aggregation: for every link TARGET, the count
-    of inbound anchors, distinct source pages, distinct anchor texts, and
-    the most frequent text (ties → lexicographically first).  The classic
-    web-corpus signal (anchor text describes the *target*, not the
-    source — feeds retrieval relevance and page-quality priors; cf. the
-    reference's many-votes-per-line fusion, recognize.py:175-203, here
-    many-anchors-per-target).
-
-    All JVM: regexp_extract_all over the pages scan (whole ``<a>``
-    elements, idx 0), then two regexp_extracts for href/text — the
-    patterns are valid in Java regex AND RE2, so DuckDB reproduces them
-    byte-for-byte.  At 100 TB: ONE pure map over pages into one
-    first-level aggregation keyed (target, anchor, url), persisted — the
-    expensive regex pass runs once (two downstream aggregation branches
-    fed directly from ``parsed`` would each re-execute the full scan:
-    they need different exchanges, so Catalyst cannot share the subtree);
-    everything after is re-aggregation of the compact per-(target,
-    anchor, url) counts plus a domain-cardinality self-join (AQE
-    broadcasts the top-text side).  The composite first-level key also
-    splits a hot target across its text/source variants — the same
-    pre-aggregation shape as salted_agg.
-
-    Cache contract: the returned frame's lineage pins the persisted
-    per-(target, anchor, url) table, so long-lived sessions should
-    ``spark.catalog.clearCache()`` after consuming the result — the
-    bench / oracle harnesses do (same contract as minhash_dedup,
-    embedding_near_dupes and pagerank)."""
-    pages = pages_from_documents(spark, sf_dir, pre_partitions=4 * spark.sparkContext.defaultParallelism)
-    anchors = pages.select(
-        "url",
-        _page_host().alias("_host"),
-        F.explode(F.expr(
-            "regexp_extract_all(cast(html as string), "
-            "'<a href=\"[^\"]*\"[^>]*>[^<]*</a>', 0)"
-        )).alias("_a"),
-    )
-    parsed = anchors.select(
-        "url",
-        F.concat("_host", F.regexp_extract("_a", 'href="([^"]*)"', 1))
-        .alias("target"),
-        F.regexp_extract("_a", ">([^<]*)</a>", 1).alias("anchor"),
-    )
-    # the ONLY pass over the pages scan: per (target, anchor, url) counts.
-    # Persisted because two downstream aggregations (different exchange
-    # keys) read it — without the cache each branch re-executes the full
-    # regex scan (Catalyst does not share subplans across different
-    # exchanges; measured 4 scans in the uncached plan).  Measured trade
-    # at sf0.1: persist costs ~0.2-0.3 s MORE (cache materialization >
-    # two cheap re-scans of a 5k-doc corpus) — kept anyway because the
-    # scale term flips hard: at 100 TB the duplicated branch re-reads the
-    # entire corpus through the regex, while the cached table stays
-    # domain-cardinality.  Same pattern as minhash's candidate cache;
-    # bench/oracle harnesses clearCache() between queries.
-    tau = parsed.groupBy("target", "anchor", "url").agg(
-        F.count("*").alias("_c")
-    ).persist()
-    per_text = tau.groupBy("target", "anchor").agg(
-        F.sum("_c").cast("bigint").alias("_n")
-    )
-    w = Window.partitionBy("target").orderBy(F.desc("_n"), F.asc("anchor"))
-    top = (
-        per_text.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") == 1)
-        .select("target", F.col("anchor").alias("top_anchor"),
-                F.col("_n").alias("top_anchor_n"))
-    )
-    base = tau.groupBy("target").agg(
-        F.sum("_c").cast("bigint").alias("n_anchors"),
-        F.countDistinct("url").alias("n_src_pages"),
-        F.countDistinct("anchor").alias("n_texts"),
-    )
-    return base.join(top, "target").select(
-        "target", "n_anchors", "n_src_pages", "n_texts",
-        "top_anchor", "top_anchor_n",
-    ).transform(_psort, "target")
-
-
-def _anchor_text_sql() -> str:
-    head = _PAGE_HEAD.replace("'", "''")
-    foot = _PAGE_FOOT.replace("'", "''")
-    return f"""
-WITH pages AS (
-  SELECT 'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example/d/' || CAST(doc_id AS VARCHAR) AS url,
-         'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example' AS host,
-         '{head}' || '<article><h1>Document ' || CAST(doc_id AS VARCHAR)
-         || '</h1><p>' || text || '</p></article>' || '{foot}' AS html
-  FROM documents
-), a AS (
-  SELECT url, host,
-         unnest(regexp_extract_all(html,
-                '<a href="[^"]*"[^>]*>[^<]*</a>', 0)) AS el
-  FROM pages
-), parsed AS (
-  SELECT url,
-         host || regexp_extract(el, 'href="([^"]*)"', 1) AS target,
-         regexp_extract(el, '>([^<]*)</a>', 1) AS anchor
-  FROM a
-), per_text AS (
-  SELECT target, anchor, COUNT(*) AS _n
-  FROM parsed GROUP BY target, anchor
-), top AS (
-  SELECT target, anchor AS top_anchor, _n AS top_anchor_n,
-         row_number() OVER (PARTITION BY target
-                            ORDER BY _n DESC, anchor) AS rk
-  FROM per_text
-), base AS (
-  SELECT target,
-         CAST(COUNT(*) AS BIGINT) AS n_anchors,
-         CAST(COUNT(DISTINCT url) AS BIGINT) AS n_src_pages,
-         CAST(COUNT(DISTINCT anchor) AS BIGINT) AS n_texts
-  FROM parsed GROUP BY target
-)
-SELECT b.target, b.n_anchors, b.n_src_pages, b.n_texts,
-       t.top_anchor, CAST(t.top_anchor_n AS BIGINT) AS top_anchor_n
-FROM base b JOIN top t ON b.target = t.target AND t.rk = 1
-ORDER BY b.target
-"""
-
-
-def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robots-rule URL filtering — the crawl-compliance pass every web
-    pipeline runs before fetching/processing: per-host Disallow PREFIXES
-    are applied to each page's path, and the output reports per host how
-    many pages the rules block vs keep.
-
-    Rule fixture (deterministic, derived from the host number the same
-    way the pages fixture derives hosts): hosts ≡ 0 (mod 3) disallow
-    paths under ``/d/1``; hosts ≡ 0 (mod 4) disallow ``/d/2`` — some
-    hosts get both rules, some neither, and prefix matching must catch
-    ``/d/1``, ``/d/17``, ``/d/1234`` alike.
-
-    100 TB shape: the rule table is host-cardinality (tiny — real
-    robots.txt corpora are ~1 row per host) and explicitly broadcast, so
-    the pages scan streams through a BroadcastHashJoin on host with the
-    prefix test as the join residual; nothing but per-host counts ever
-    shuffles.  All JVM string ops, byte-exact in DuckDB."""
-    pages = pages_from_documents(spark, sf_dir).select("url")
-    host = F.regexp_extract("url", r"host([0-9]+)\.example", 1).cast("int")
-    path = F.substring_index("url", ".example", -1)
-    p = pages.select("url", host.alias("host"), path.alias("path"))
-    hosts = spark.range(0, 40).select(F.col("id").cast("int").alias("host"))
-    rules = hosts.where(F.col("host") % 3 == 0).select(
-        "host", F.lit("/d/1").alias("prefix")
-    ).unionByName(
-        hosts.where(F.col("host") % 4 == 0).select(
-            "host", F.lit("/d/2").alias("prefix")
-        )
-    )
-    blocked = (
-        p.join(F.broadcast(rules), "host")
-        .where(F.col("path").startswith(F.col("prefix")))
-        .select("host", "url")
-        .distinct()
-    )
-    n_pages = p.groupBy("host").agg(F.count("*").alias("n_pages"))
-    n_blocked = blocked.groupBy("host").agg(F.count("*").alias("n_blocked"))
-    return (
-        n_pages.join(n_blocked, "host", "left")
-        .select(
-            "host",
-            "n_pages",
-            F.coalesce("n_blocked", F.lit(0)).cast("bigint")
-            .alias("n_blocked"),
-            (F.col("n_pages")
-             - F.coalesce("n_blocked", F.lit(0))).cast("bigint")
-            .alias("n_kept"),
-        )
-        .orderBy("host")
-    )
-
-
-ROBOTS_FILTER_SQL = r"""
-WITH pages AS (
-  SELECT 'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example/d/' || CAST(doc_id AS VARCHAR) AS url
-  FROM documents
-), p AS (
-  SELECT url,
-         CAST(regexp_extract(url, 'host([0-9]+)\.example', 1) AS INT)
-           AS host,
-         split_part(url, '.example', 2) AS path
-  FROM pages
-), hosts AS (
-  SELECT CAST(range AS INT) AS host FROM range(0, 40)
-), rules AS (
-  SELECT host, '/d/1' AS prefix FROM hosts WHERE host % 3 = 0
-  UNION ALL
-  SELECT host, '/d/2' AS prefix FROM hosts WHERE host % 4 = 0
-), blocked AS (
-  SELECT DISTINCT p.host, p.url
-  FROM p JOIN rules r
-    ON p.host = r.host AND p.path LIKE r.prefix || '%'
-), np AS (
-  SELECT host, COUNT(*) AS n_pages FROM p GROUP BY host
-), nb AS (
-  SELECT host, COUNT(*) AS n_blocked FROM blocked GROUP BY host
-)
-SELECT np.host,
-       CAST(np.n_pages AS BIGINT) AS n_pages,
-       CAST(COALESCE(nb.n_blocked, 0) AS BIGINT) AS n_blocked,
-       CAST(np.n_pages - COALESCE(nb.n_blocked, 0) AS BIGINT) AS n_kept
-FROM np LEFT JOIN nb ON np.host = nb.host
-ORDER BY np.host
-"""
-
-
-def q_url_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-frontier politeness scheduling: within each host the frontier
-    serializes fetches (slot = dense per-host position, deterministic url
-    order) spaced by the host's crawl delay; across hosts it is perfectly
-    parallel.  Emits per-url (slot, fetch_epoch) — the table a fetcher
-    fleet partitions by host and walks in slot order.
-
-    Host delays vary (1 + host mod 5 seconds) so the schedule arithmetic
-    is visibly per-host, and everything is integer epoch math — exact in
-    DuckDB.  100 TB shape: one hash shuffle on host (the window), then
-    pure map arithmetic; a host is the natural partition key because
-    politeness makes it the unit of serialization anyway — the
-    Zipf-skewed giant host is a SCHEDULE bottleneck, not a shuffle one
-    (its slots stay one partition but the fetch horizon, not the engine,
-    is the limit)."""
-    pages = pages_from_documents(spark, sf_dir).select("url")
-    host = F.regexp_extract("url", r"host([0-9]+)\.example", 1).cast("int")
-    p = pages.select("url", host.alias("host"))
-    w = Window.partitionBy("host").orderBy("url")
-    delay = (F.lit(1) + F.col("host") % 5).cast("bigint")
-    return (
-        p.withColumn("slot", (F.row_number().over(w) - 1).cast("bigint"))
-        .select(
-            "url",
-            "host",
-            "slot",
-            delay.alias("delay_sec"),
-            (F.lit(1717200000) + F.col("slot") * delay).alias("fetch_epoch"),
-        )
-        .orderBy("host", "slot")
-    )
-
-
-URL_FRONTIER_SQL = r"""
-WITH pages AS (
-  SELECT 'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example/d/' || CAST(doc_id AS VARCHAR) AS url
-  FROM documents
-), p AS (
-  SELECT url,
-         CAST(regexp_extract(url, 'host([0-9]+)\.example', 1) AS INT)
-           AS host
-  FROM pages
-)
-SELECT url, host,
-       CAST(row_number() OVER (PARTITION BY host ORDER BY url) - 1
-            AS BIGINT) AS slot,
-       CAST(1 + host % 5 AS BIGINT) AS delay_sec,
-       CAST(1717200000
-            + (row_number() OVER (PARTITION BY host ORDER BY url) - 1)
-              * (1 + host % 5) AS BIGINT) AS fetch_epoch
-FROM p
-ORDER BY host, slot
-"""
 
 
 def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2826,503 +1930,6 @@ GROUP BY band_id ORDER BY band_id
 # ---------------------------------------------------------------------------
 # More relational shapes (all DuckDB-oracled)
 # ---------------------------------------------------------------------------
-def q_rollup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP lattice over (lang, source) — multi-level agg in one pass."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.rollup("lang", "source")
-        .agg(F.count("*").alias("n"),
-             F.sum("n_chars").cast("bigint").alias("sum_chars"))
-        .orderBy("lang", "source")
-    )
-
-
-ROLLUP_SQL = """
-SELECT lang, source, COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-FROM documents GROUP BY ROLLUP (lang, source)
-ORDER BY lang, source
-"""
-
-
-def q_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-lang top-10 tokens by frequency (corpus heavy hitters).  Scale
-    shape: explode → map-side partial count (two HashAggregates) → tiny
-    per-lang top-k window; only (lang, tok, partial-count) rows shuffle."""
-    d = _t(spark, sf_dir, "documents")
-    tok = d.select(
-        "lang", F.explode(F.split(F.lower("text"), " ")).alias("tok")
-    ).where(F.col("tok") != "")
-    counts = tok.groupBy("lang", "tok").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("lang").orderBy(F.desc("n"), "tok")
-    return (
-        counts.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= 10)
-        .orderBy("lang", "rank")
-    )
-
-
-TOPK_TOKENS_SQL = """
-WITH tok AS (
-  SELECT lang, unnest(string_split(lower(text), ' ')) AS tok FROM documents
-), counts AS (
-  SELECT lang, tok, COUNT(*) AS n FROM tok WHERE tok <> '' GROUP BY 1, 2
-)
-SELECT lang, tok, n, rank FROM (
-  SELECT lang, tok, n,
-         CAST(ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n DESC, tok)
-              AS BIGINT) AS rank
-  FROM counts
-) WHERE rank <= 10 ORDER BY lang, rank
-"""
-
-
-def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic training-mix sampling: per-source keep rate
-    10 + 4×source_index percent, membership decided by a cross-engine md5
-    hash of doc_id (never rand() — retries/resume reproduce the same mix).
-    The training-data mixture-weights operator."""
-    d = _t(spark, sf_dir, "documents")
-    weight = F.lit(10) + F.substring("source", 4, 6).cast("int") * 4
-    h = F.expr(
-        "cast(conv(substring(md5(cast(cast(doc_id as string) as binary)),"
-        " 1, 15), 16, 10) as bigint) % 100"
-    )
-    kept = d.where(h < weight)
-    return (
-        kept.groupBy("source")
-        .agg(F.count("*").alias("n_kept"),
-             F.sum("n_chars").cast("bigint").alias("sum_chars"))
-        .orderBy("source")
-    )
-
-
-MIXTURE_SQL = """
-SELECT source, COUNT(*) AS n_kept,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-FROM documents
-WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100
-      < 10 + CAST(substr(source, 4) AS INT) * 4
-GROUP BY source ORDER BY source
-"""
-
-
-def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document keyword extraction: top-3 tokens by TF×(N/DF) — the
-    log-free TF-IDF variant, because mul/div are IEEE-exact cross-engine
-    while ln/log2 differ in the last ulp across libms.  Shuffle shape at
-    10^12 rows: (doc, token, tf) pairs to the DF aggregation and one
-    broadcast of the (small) vocabulary DF table back; the per-doc top-k
-    is a window over doc_id."""
-    d = _tw(spark, sf_dir, "documents").select("doc_id", "text")
-    n_docs = d.count()
-    tok = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
-    )
-    tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    df_tbl = (
-        tf.groupBy("token").agg(F.count("*").alias("df"))
-    )
-    scored = tf.join(F.broadcast(df_tbl), "token").select(
-        "doc_id", "token", "tf", "df",
-        (F.col("tf").cast("double")
-         * (F.lit(float(n_docs)) / F.col("df").cast("double")))
-        .alias("score"),
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("score"), F.asc("token")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= 3)
-        .select(
-            "doc_id", "rank", "token",
-            F.col("tf").cast("bigint").alias("tf"),
-            F.col("df").cast("bigint").alias("df"),
-            F.expr("cast(floor(score * 1e6 + 5e-1) / 1e6 as double)")
-            .alias("score"),
-        )
-        .transform(_psort, "doc_id", "rank")
-    )
-
-
-TFIDF_SQL = """
-WITH tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-), tf AS (
-  SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token
-), dft AS (
-  SELECT token, COUNT(*) AS df FROM tf GROUP BY token
-), n AS (
-  SELECT COUNT(*) AS n FROM documents
-), scored AS (
-  SELECT tf.doc_id, tf.token, tf.tf, dft.df,
-         CAST(tf.tf AS DOUBLE)
-           * (CAST((SELECT n FROM n) AS DOUBLE) / CAST(dft.df AS DOUBLE))
-           AS score
-  FROM tf JOIN dft ON tf.token = dft.token
-), ranked AS (
-  SELECT doc_id, token, tf, df, score,
-         ROW_NUMBER() OVER (PARTITION BY doc_id
-                            ORDER BY score DESC, token) AS rank
-  FROM scored
-)
-SELECT doc_id, CAST(rank AS BIGINT) AS rank, token,
-       CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
-       CAST(floor(score * 1e6 + 5e-1) / 1e6 AS DOUBLE) AS score
-FROM ranked WHERE rank <= 3 ORDER BY doc_id, rank
-"""
-
-
-def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based mixture sampling (the Gopher/PaLM training-mix
-    shape): per-source sampling weights ∝ n_docs^(1/T), here T=2 so the
-    reweighting is sqrt — IEEE-correctly-rounded in BOTH engines, unlike
-    general pow whose last ulp differs across libms.  Each source's quota
-    of the 200-doc budget is filled by the smallest portable-hash ranks
-    (deterministic "random" sample; resume/retries reproduce it).  Small
-    sources upweight, big sources downweight — the mixture flattening
-    every multi-corpus training run applies."""
-    d = _t(spark, sf_dir, "documents")
-    counts = d.groupBy("source").agg(F.count("*").alias("n_docs"))
-    tot = counts.agg(F.sum(F.sqrt("n_docs")).alias("z"))
-    quotas = counts.crossJoin(F.broadcast(tot)).select(
-        "source", "n_docs",
-        F.floor(F.sqrt("n_docs") / F.col("z") * F.lit(200.0))
-        .cast("bigint").alias("quota"),
-    )
-    h = F.expr(
-        "cast(conv(substring(md5(cast(cast(doc_id as string) as binary)),"
-        " 1, 15), 16, 10) as bigint)"
-    )
-    w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
-    ranked = d.select("source", "doc_id").withColumn(
-        "_rk", F.row_number().over(w)
-    )
-    kept = ranked.join(F.broadcast(quotas), "source").where(
-        F.col("_rk") <= F.col("quota")
-    )
-    return (
-        kept.groupBy("source")
-        .agg(
-            F.count("*").alias("n_kept"),
-            F.min("doc_id").alias("min_doc"),
-            F.max("doc_id").alias("max_doc"),
-        )
-        .join(quotas, "source")
-        .select("source", "n_docs", "quota", "n_kept", "min_doc", "max_doc")
-        .orderBy("source")
-    )
-
-
-TEMPERATURE_MIX_SQL = """
-WITH counts AS (
-  SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source
-), z AS (
-  SELECT SUM(sqrt(n_docs)) AS z FROM counts
-), quotas AS (
-  SELECT source, n_docs,
-         CAST(floor(sqrt(n_docs) / (SELECT z FROM z) * 2e2) AS BIGINT)
-           AS quota
-  FROM counts
-), ranked AS (
-  SELECT source, doc_id,
-         ROW_NUMBER() OVER (
-           PARTITION BY source
-           ORDER BY ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT,
-                    doc_id
-         ) AS rk
-  FROM documents
-), kept AS (
-  SELECT r.source, r.doc_id
-  FROM ranked r JOIN quotas q ON r.source = q.source
-  WHERE r.rk <= q.quota
-)
-SELECT q.source, q.n_docs, q.quota,
-       CAST(COUNT(k.doc_id) AS BIGINT) AS n_kept,
-       MIN(k.doc_id) AS min_doc, MAX(k.doc_id) AS max_doc
-FROM quotas q JOIN kept k ON q.source = k.source
-GROUP BY q.source, q.n_docs, q.quota
-ORDER BY q.source
-"""
-
-
-def q_cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE lattice over (lang, source) — all 2^k grouping sets in one
-    pass (vs ROLLUP's prefix sets; completes the multi-level-agg family)."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.cube("lang", "source")
-        .agg(F.count("*").alias("n"),
-             F.sum("n_chars").cast("bigint").alias("sum_chars"))
-        .orderBy("lang", "source")
-    )
-
-
-CUBE_SQL = """
-SELECT lang, source, COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-FROM documents GROUP BY CUBE (lang, source)
-ORDER BY lang, source
-"""
-
-
-def q_gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series gap fill: dense hourly spine per event_type (sequence +
-    explode over each type's min..max hour) left-joined to the hourly
-    aggregate, missing hours as zero rows — the hypertable-style
-    resample/gap-fill operator, all JVM-side."""
-    e = _t(spark, sf_dir, "events")
-    hourly = (
-        e.groupBy(
-            F.col("event_type"),
-            F.date_trunc("hour", F.col("ts")).alias("hour_start"),
-        )
-        .agg(F.count("*").alias("n"))
-    )
-    spine = (
-        hourly.groupBy("event_type")
-        .agg(F.min("hour_start").alias("lo"), F.max("hour_start").alias("hi"))
-        .select(
-            "event_type",
-            F.explode(
-                F.sequence("lo", "hi", F.expr("interval 1 hour"))
-            ).alias("hour_start"),
-        )
-    )
-    return (
-        spine.join(hourly, ["event_type", "hour_start"], "left")
-        .select(
-            "event_type",
-            "hour_start",
-            F.coalesce(F.col("n"), F.lit(0)).alias("n"),
-        )
-        .orderBy("event_type", "hour_start")
-    )
-
-
-GAP_FILL_SQL = """
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS hour_start, COUNT(*) AS n
-  FROM events GROUP BY 1, 2
-), bounds AS (
-  SELECT event_type, min(hour_start) AS lo, max(hour_start) AS hi
-  FROM hourly GROUP BY 1
-), spine AS (
-  SELECT b.event_type, g.h AS hour_start
-  FROM bounds b, LATERAL (
-    SELECT unnest(generate_series(b.lo, b.hi, INTERVAL 1 HOUR)) AS h
-  ) g
-)
-SELECT s.event_type, s.hour_start, COALESCE(h.n, 0) AS n
-FROM spine s LEFT JOIN hourly h
-  ON s.event_type = h.event_type AND s.hour_start = h.hour_start
-ORDER BY s.event_type, s.hour_start
-"""
-
-
-def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-safe two-phase aggregation: partial counts on (key, salt),
-    re-agg on key — the explicit-salting pattern the north_rule requires
-    for Zipf keys; result provably equals the plain GROUP BY (the oracle).
-    """
-    d = _t(spark, sf_dir, "documents")
-    phase1 = (
-        d.withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(8)))
-        .groupBy("lang", "_salt")
-        .agg(F.count("*").alias("c"), F.sum("n_chars").alias("s"))
-    )
-    return (
-        phase1.groupBy("lang")
-        .agg(F.sum("c").cast("bigint").alias("n_docs"), F.sum("s").cast("bigint").alias("sum_chars"))
-        .orderBy("lang")
-    )
-
-
-SALTED_AGG_SQL = """
-SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-FROM documents GROUP BY lang ORDER BY lang
-"""
-
-
-def q_percentile_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-map (applyInPandas): per-lang rank percentile of n_chars.
-    Exact-integer math → bit-identical to the window-function oracle."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-
-    def _pct(pdf):
-        pdf = pdf.sort_values(["n_chars", "doc_id"]).reset_index(drop=True)
-        n = len(pdf)
-        pdf["pct"] = [
-            (i * 1.0) / (n - 1) if n > 1 else 0.0 for i in range(n)
-        ]
-        return pdf
-
-    out = d.groupBy("lang").applyInPandas(
-        _pct, "doc_id bigint, lang string, n_chars bigint, pct double"
-    )
-    return out.select("doc_id", "lang", "pct")
-
-
-PERCENTILE_SQL = """
-SELECT doc_id, lang,
-       CASE WHEN cnt > 1
-            THEN (rn - 1) * 1e0 / (cnt - 1) ELSE 0e0 END AS pct
-FROM (
-  SELECT doc_id, lang,
-         ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS rn,
-         COUNT(*) OVER (PARTITION BY lang) AS cnt
-  FROM documents
-)
-"""
-
-
-def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set difference (EXCEPT DISTINCT): english docs minus long docs."""
-    d = _t(spark, sf_dir, "documents")
-    en = d.where(F.col("lang") == "en").select("doc_id")
-    long_docs = d.where(F.col("n_chars") > 300).select("doc_id")
-    return en.subtract(long_docs).orderBy("doc_id")
-
-
-SET_EXCEPT_SQL = """
-SELECT doc_id FROM documents WHERE lang = 'en'
-EXCEPT
-SELECT doc_id FROM documents WHERE n_chars > 300
-ORDER BY doc_id
-"""
-
-
-def q_substring_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring predicate counting (instr) per lang."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.groupBy("lang")
-        .agg(
-            F.sum(
-                (F.instr(F.col("text"), " the ") > 0).cast("bigint")
-            ).alias("docs_with_the"),
-            F.count("*").alias("n_docs"),
-        )
-        .orderBy("lang")
-    )
-
-
-SUBSTRING_SQL = """
-SELECT lang,
-       CAST(SUM(CASE WHEN instr(text, ' the ') > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_with_the,
-       COUNT(*) AS n_docs
-FROM documents GROUP BY lang ORDER BY lang
-"""
-
-
-def q5_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 4-way join (two broadcastable dims) + agg."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double").alias("revenue"),
-            F.count("*").alias("n_orders"),
-        )
-        .orderBy("r_name")
-    )
-
-
-Q5_SQL = """
-SELECT r_name,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-       COUNT(*) AS n_orders
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name ORDER BY r_name
-"""
-
-
-def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left semi join: customers having at least one 1998+ order."""
-    o = _t(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp_ntz")
-    )
-    c = _t(spark, sf_dir, "customer")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-        .select("c_custkey", "c_mktsegment")
-    )
-
-
-SEMI_JOIN_SQL = """
-SELECT c_custkey, c_mktsegment FROM customer
-WHERE EXISTS (SELECT 1 FROM orders
-              WHERE o_custkey = c_custkey
-                AND o_orderdate >= TIMESTAMP '1998-01-01 00:00:00')
-"""
-
-
-def q_dense_rank_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dense_rank + ntile window functions over parts."""
-    p = _t(spark, sf_dir, "part")
-    w = Window.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), "p_partkey")
-    return p.select(
-        "p_partkey",
-        "p_brand",
-        F.dense_rank().over(w).cast("bigint").alias("price_rank"),
-        F.ntile(4).over(w).cast("bigint").alias("quartile"),
-    )
-
-
-DENSE_RANK_SQL = """
-SELECT p_partkey, p_brand,
-       CAST(DENSE_RANK() OVER w AS BIGINT) AS price_rank,
-       CAST(NTILE(4) OVER w AS BIGINT) AS quartile
-FROM part
-WINDOW w AS (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey)
-"""
-
-
-def q_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag(): per-user inter-event value delta (exact via DECIMAL)."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    v = F.col("value").cast("decimal(18,2)")
-    return e.select(
-        "user_id",
-        "event_id",
-        (v - F.lag(v).over(w)).cast("double").alias("value_delta"),
-    )
-
-
-LAG_DELTA_SQL = """
-SELECT user_id, event_id,
-       CAST(CAST(value AS DECIMAL(18,2))
-            - LAG(CAST(value AS DECIMAL(18,2)))
-              OVER (PARTITION BY user_id ORDER BY ts, event_id) AS DOUBLE)
-         AS value_delta
-FROM events
-"""
-
-
-def q_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION (distinct): short docs ∪ French docs."""
-    d = _t(spark, sf_dir, "documents")
-    a = d.where(F.col("n_chars") < 150).select("doc_id")
-    b = d.where(F.col("lang") == "fr").select("doc_id")
-    return a.union(b).distinct().orderBy("doc_id")
-
-
-SET_UNION_SQL = """
-SELECT doc_id FROM documents WHERE n_chars < 150
-UNION
-SELECT doc_id FROM documents WHERE lang = 'fr'
-ORDER BY doc_id
-"""
 
 
 def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3597,123 +2204,6 @@ WHERE n >= CEIL(1.5e-3 * total) ORDER BY n DESC, gram
 """
 
 
-def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic Lloyd's k-means over the embeddings table (k=8,
-    2 iterations, integer-exact on the 1e-6 quantization grid) — an
-    ITERATIVE algorithm with an exact DuckDB oracle (unrolled CTE per
-    iteration), like the quantized PageRank.  Per-iteration shuffle is
-    k*dim keys after map-side combine; centroids ride as literals."""
-    from ocrd_calamari_spark.functions.cluster import kmeans_assign
-
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return kmeans_assign(e, "vec_id", "embedding", k=8, iters=2).orderBy(
-        "vec_id"
-    )
-
-
-def _kmeans_sql_ctes(k: int, iters: int) -> str:
-    """Unrolled Lloyd CTE chain over a prior ``vecs(vec_id, q)`` CTE —
-    the oracle twin of functions/cluster.py's driver loop (same integer
-    math: exact squared distances, (dist, cluster) tie-break,
-    floor(sum/count) centroid updates, empty clusters coalesce to the
-    previous centroid)."""
-    parts = [f"""pos AS (
-  SELECT vec_id, unnest(q) AS val, generate_subscripts(q, 1) AS pos FROM vecs
-), cent0 AS (
-  SELECT CAST(DENSE_RANK() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cluster,
-         pos, val
-  FROM pos WHERE vec_id IN (SELECT vec_id FROM vecs ORDER BY vec_id LIMIT {k})
-)"""]
-    for i in range(1, iters + 1):
-        parts.append(f"""d{i} AS (
-  SELECT p.vec_id, c.cluster, SUM((p.val - c.val) * (p.val - c.val)) AS dist
-  FROM pos p JOIN cent{i-1} c USING (pos) GROUP BY 1, 2
-), a{i} AS (
-  SELECT vec_id, cluster, CAST(dist AS BIGINT) AS dist FROM (
-    SELECT vec_id, cluster, dist,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY dist, cluster) AS rn
-    FROM d{i}) WHERE rn = 1
-)""")
-        if i < iters:
-            parts.append(f"""u{i} AS (
-  SELECT a.cluster, p.pos,
-         CAST(floor(CAST(SUM(p.val) AS DOUBLE) / COUNT(*)) AS BIGINT) AS val
-  FROM a{i} a JOIN pos p USING (vec_id) GROUP BY 1, 2
-), cent{i} AS (
-  SELECT c.cluster, c.pos, COALESCE(u.val, c.val) AS val
-  FROM cent{i-1} c LEFT JOIN u{i} u
-    ON u.cluster = c.cluster AND u.pos = c.pos
-)""")
-    return ", ".join(parts)
-
-
-_QUANT_VEC = "list_transform(embedding, x -> CAST(floor(x * 1e6) AS BIGINT))"
-
-KMEANS_SQL = f"""
-WITH vecs AS (
-  SELECT vec_id, {_QUANT_VEC} AS q FROM embeddings
-), {_kmeans_sql_ctes(8, 2)}
-SELECT vec_id, cluster, dist FROM a2 ORDER BY vec_id
-"""
-
-
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup over embeddings ∪ planted near-copies (every 50th vector
-    re-enters scaled by 1.02 → cosine ≈ 1): k-means prunes the pair
-    space to within-cluster, then the integer cross-multiplied cosine
-    test at 0.95 drops the higher-id member of each near-dup pair.
-    Fully hash-exact vs the unrolled-SQL twin."""
-    from ocrd_calamari_spark.functions.cluster import semantic_dedup
-
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    copies = e.where(F.col("vec_id") % 50 == 0).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.02)).alias("embedding"),
-    )
-    data = e.unionByName(copies)
-    return semantic_dedup(
-        data, "vec_id", "embedding", k=8, iters=2, tau_num=95, tau_den=100
-    ).orderBy("vec_id")
-
-
-SEMANTIC_DEDUP_SQL = f"""
-WITH base AS (SELECT vec_id, embedding FROM embeddings),
-cop AS (
-  SELECT vec_id + 1000000 AS vec_id,
-         list_transform(embedding, x -> x * 1.02e0) AS embedding
-  FROM base WHERE vec_id % 50 = 0
-),
-allv AS (SELECT * FROM base UNION ALL SELECT * FROM cop),
-vecs AS (SELECT vec_id, {_QUANT_VEC} AS q FROM allv),
-{_kmeans_sql_ctes(8, 2)},
-n2 AS (SELECT vec_id, SUM(val * val) AS n2 FROM pos GROUP BY 1),
-pairs AS (
-  SELECT x.vec_id AS ida, y.vec_id AS idb
-  FROM a2 x JOIN a2 y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-),
-dots AS (
-  SELECT pr.ida, pr.idb, SUM(px.val * py.val) AS dot
-  FROM pairs pr
-  JOIN pos px ON px.vec_id = pr.ida
-  JOIN pos py ON py.vec_id = pr.idb AND py.pos = px.pos
-  GROUP BY 1, 2
-),
-dropped AS (
-  SELECT DISTINCT d.idb AS vec_id
-  FROM dots d
-  JOIN n2 na ON na.vec_id = d.ida
-  JOIN n2 nb ON nb.vec_id = d.idb
-  WHERE d.dot > 0
-    AND CAST(10000 AS HUGEINT) * d.dot * d.dot
-        >= CAST(9025 AS HUGEINT) * na.n2 * nb.n2
-)
-SELECT a.vec_id, a.cluster, (dr.vec_id IS NULL) AS kept
-FROM a2 a LEFT JOIN dropped dr ON dr.vec_id = a.vec_id
-ORDER BY a.vec_id
-"""
-
-
 def q_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-lang exact p50/p90/p99 of n_chars via a value histogram: the
     shuffle ships (lang, n_chars, partial-count) after map-side combine
@@ -3979,122 +2469,6 @@ FROM s ORDER BY doc_id
 """
 
 
-# one shared literal for the injected link-farm payload — the Spark query
-# and the DuckDB oracle both embed THIS string, so the fixtures cannot
-# drift apart (same discipline as _PAGE_HEAD/_PAGE_FOOT)
-_FARM_BLOB = "".join(
-    f'<a href="https://spam{k}.example/offer">buy now</a>' for k in range(200)
-)
-
-
-def q_link_spam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outlink spam score per page — the web-graph spam signal (link
-    farms: high outdegree spread across many distinct hosts) that text
-    quality filters structurally miss.  Corpus = the synthesized pages
-    plus injected link-farm pages (doc_id < 30; 200 distinct-host spam
-    links each — the containment_join injection pattern).
-
-    Exact outputs: n_links, n_hosts (relative links resolve to the
-    page's own host), host_spread_bp = floor(n_hosts*10000/n_links),
-    is_spam = n_links >= 50 AND spread >= 5000 — all integer, hash-exact.
-    At 100 TB this is a PURE MAP over the pages scan (href extraction,
-    host resolution and distinct-count are per-row array HOFs, all-JVM);
-    no shuffle beyond the presentation orderBy."""
-    pages = pages_from_documents(spark, sf_dir).select("url", "html")
-    farms = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 30)
-        .select(
-            F.concat(
-                F.lit("https://farm"),
-                (F.col("doc_id") % 7).cast("string"),
-                F.lit(".example/f/"),
-                F.col("doc_id").cast("string"),
-            ).alias("url"),
-            F.concat(
-                F.lit(_PAGE_HEAD),
-                F.lit("<article><p>"),
-                F.lit(_FARM_BLOB),
-                F.lit("</p></article>"),
-                F.lit(_PAGE_FOOT),
-            ).cast("binary").alias("html"),
-        )
-    )
-    corpus = pages.unionByName(farms)
-    hrefs = r"""regexp_extract_all(cast(html as string), 'href="([^"]*)"', 1)"""
-    own = r"regexp_extract(url, '^https?://([^/]+)', 1)"
-    hosts = (
-        f"transform({hrefs}, h -> case when h like 'http%' "
-        f"then regexp_extract(h, '^https?://([^/]+)', 1) else {own} end)"
-    )
-    out = corpus.select(
-        "url",
-        F.expr(f"cast(size({hrefs}) as bigint)").alias("n_links"),
-        F.expr(f"cast(size(array_distinct({hosts})) as bigint)").alias(
-            "n_hosts"
-        ),
-    ).select(
-        "url", "n_links", "n_hosts",
-        F.when(F.col("n_links") == 0, F.lit(0).cast("bigint")).otherwise(
-            F.floor(F.col("n_hosts") * 10000 / F.col("n_links"))
-            .cast("bigint")
-        ).alias("host_spread_bp"),
-    ).select(
-        "url", "n_links", "n_hosts", "host_spread_bp",
-        F.when(
-            (F.col("n_links") >= 50) & (F.col("host_spread_bp") >= 5000),
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("int").alias("is_spam"),
-    )
-    return out.orderBy("url")
-
-
-def _link_spam_sql() -> str:
-    head = _PAGE_HEAD.replace("'", "''")
-    foot = _PAGE_FOOT.replace("'", "''")
-    blob = _FARM_BLOB.replace("'", "''")
-    return f"""
-WITH pages AS (
-  SELECT 'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example/d/' || CAST(doc_id AS VARCHAR) AS url,
-         '{head}' || '<article><h1>Document ' || CAST(doc_id AS VARCHAR)
-         || '</h1><p>' || text || '</p></article>' || '{foot}' AS html
-  FROM documents
-  UNION ALL
-  SELECT 'https://farm' || CAST(doc_id % 7 AS VARCHAR) || '.example/f/'
-         || CAST(doc_id AS VARCHAR) AS url,
-         '{head}' || '<article><p>' || '{blob}' || '</p></article>'
-         || '{foot}' AS html
-  FROM documents WHERE doc_id < 30
-), counted AS (
-  SELECT url,
-         CAST(len(regexp_extract_all(html, 'href="([^"]*)"', 1)) AS BIGINT)
-           AS n_links,
-         CAST(len(list_distinct(list_transform(
-             regexp_extract_all(html, 'href="([^"]*)"', 1),
-             h -> CASE WHEN h LIKE 'http%'
-                       THEN regexp_extract(h, '^https?://([^/]+)', 1)
-                       ELSE regexp_extract(url, '^https?://([^/]+)', 1)
-                  END))) AS BIGINT) AS n_hosts
-  FROM pages
-)
-, spread AS (
-  -- is_spam derives from the GUARDED spread value (one more CTE) so the
-  -- zero-link path is structurally identical to the Spark side, not
-  -- masked by conjunct short-circuiting
-  SELECT url, n_links, n_hosts,
-         CASE WHEN n_links = 0 THEN CAST(0 AS BIGINT)
-              ELSE CAST(floor(n_hosts * 10000 / n_links) AS BIGINT)
-         END AS host_spread_bp
-  FROM counted
-)
-SELECT url, n_links, n_hosts, host_spread_bp,
-       CAST(CASE WHEN n_links >= 50 AND host_spread_bp >= 5000
-                 THEN 1 ELSE 0 END AS INTEGER) AS is_spam
-FROM spread ORDER BY url
-"""
-
-
 def q_lang_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-noise QA: per-source disagreement between the DECLARED lang
     column and the content-based lang-ID heuristic — the measurement
@@ -4151,96 +2525,6 @@ SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
                  ELSE floor(SUM(mism) * 10000 / SUM(scored))
             END AS BIGINT) AS mismatch_bp
 FROM s GROUP BY source ORDER BY source
-"""
-
-
-def q_url_traps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-trap detection by URL-template mining — the frontier-ops
-    check that stops a crawler drowning in calendar pages / session-id
-    urls / infinite pagination: collapse digit runs to 'N'
-    (template = regexp_replace(url, '[0-9]+', 'N')), count urls per
-    (host, template), and flag templates that both dominate their host
-    (>= 80 % of its urls) and are large in absolute terms (>= 50 urls).
-    Corpus = the synthesized page urls plus an injected one-template
-    pagination trap host (the link_spam injection discipline).
-
-    Exact outputs (n_urls, share_bp, is_trap) — all integers.  Scale
-    shape: template extraction is a pure map; the (host, template)
-    count partial-aggregates map-side; per-host totals are a
-    host-cardinality aggregate joined back (AQE-broadcast at dimension
-    size); urls themselves shuffle once as compact template rows."""
-    d = _t(spark, sf_dir, "documents")
-    urls = d.select(
-        F.concat(
-            F.lit("https://host"),
-            F.lpad((F.col("doc_id") % 40).cast("string"), 2, "0"),
-            F.lit(".example/d/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url")
-    ).unionByName(
-        d.select(
-            F.concat(
-                F.lit("https://trap0.example/cal?page="),
-                F.col("doc_id").cast("string"),
-            ).alias("url")
-        )
-    )
-    t = urls.select(
-        F.regexp_extract(F.col("url"), r"^https?://([^/]+)", 1).alias(
-            "host"
-        ),
-        F.regexp_replace(F.col("url"), "[0-9]+", "N").alias("template"),
-    )
-    per_t = t.groupBy("host", "template").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_urls")
-    )
-    per_h = per_t.groupBy("host").agg(
-        F.sum("n_urls").cast("bigint").alias("_host_urls")
-    )
-    out = (
-        per_t.join(per_h, "host")
-        .select(
-            "host", "template", "n_urls",
-            F.floor(F.col("n_urls") * 10000 / F.col("_host_urls"))
-            .cast("bigint").alias("share_bp"),
-        )
-        .select(
-            "host", "template", "n_urls", "share_bp",
-            F.when(
-                (F.col("n_urls") >= 50) & (F.col("share_bp") >= 8000),
-                F.lit(1),
-            ).otherwise(F.lit(0)).cast("int").alias("is_trap"),
-        )
-    )
-    return out.orderBy("host", "template")
-
-
-URL_TRAPS_SQL = """
-WITH urls AS (
-  SELECT 'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example/d/' || CAST(doc_id AS VARCHAR) AS url
-  FROM documents
-  UNION ALL
-  SELECT 'https://trap0.example/cal?page=' || CAST(doc_id AS VARCHAR) AS url
-  FROM documents
-), t AS (
-  SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host,
-         regexp_replace(url, '[0-9]+', 'N', 'g') AS template
-  FROM urls
-), per_t AS (
-  SELECT host, template, CAST(COUNT(*) AS BIGINT) AS n_urls
-  FROM t GROUP BY 1, 2
-), per_h AS (
-  SELECT host, CAST(SUM(n_urls) AS BIGINT) AS host_urls
-  FROM per_t GROUP BY host
-)
-SELECT p.host, p.template, p.n_urls,
-       CAST(floor(p.n_urls * 10000 / h.host_urls) AS BIGINT) AS share_bp,
-       CAST(CASE WHEN p.n_urls >= 50
-                  AND floor(p.n_urls * 10000 / h.host_urls) >= 8000
-                 THEN 1 ELSE 0 END AS INTEGER) AS is_trap
-FROM per_t p JOIN per_h h USING (host)
-ORDER BY host, template
 """
 
 
@@ -4806,28 +3090,6 @@ FROM d ORDER BY doc_id
 """
 
 
-def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction from the events.props JSON column."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("bigint").alias("k"),
-        )
-        .groupBy("event_type")
-        .agg(F.sum("k").cast("bigint").alias("sum_k"), F.count("*").alias("n"))
-        .orderBy("event_type")
-    )
-
-
-JSON_SQL = """
-SELECT event_type,
-       CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k,
-       COUNT(*) AS n
-FROM events GROUP BY event_type ORDER BY event_type
-"""
-
-
 _INDEX_MAX_DF = 390  # sf0.01 dfs span 25..402 → both branches exercised
 
 
@@ -4996,36 +3258,6 @@ GROUP BY n_name ORDER BY n_name
 """
 
 
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def q_pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide-format pivot: per-user event counts, one column per event
-    type.  The pivot VALUES are passed explicitly — with an explicit list
-    Spark skips the extra distinct-scan job and the column order is
-    deterministic (required for the oracle and for any schema-pinned
-    sink)."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy("user_id")
-        .pivot("event_type", _EVENT_TYPES)
-        .agg(F.count(F.lit(1)))  # count(*) is rejected inside pivot
-        .na.fill(0, _EVENT_TYPES)  # absent (user, type) cells pivot to null
-        .orderBy("user_id")
-    )
-
-
-PIVOT_SQL = """
-SELECT user_id,
-       CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS click,
-       CAST(count(*) FILTER (event_type = 'error') AS BIGINT) AS error,
-       CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS purchase,
-       CAST(count(*) FILTER (event_type = 'signup') AS BIGINT) AS signup,
-       CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS view
-FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-
 def q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (Z-order) clustering keys over (user_id, hour-of-ts) — the
     layout key that makes BOTH dimensions' min-max stats selective after a
@@ -5173,7 +3405,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-weighted deterministic Bernoulli sampling
     (functions/profile.py:weighted_sample): keep rate per DOCUMENT ∝ its
     quality score (the importance-resampling step of classifier-pruned
-    corpora; `mixture_sample` is the per-source special case).  Pure
+    corpora).  Pure
     row-local map+filter — no shuffle; the portable md5 hash makes the
     kept set reproducible across engines."""
     from ocrd_calamari_spark.functions.dedup import PORTABLE_TOKEN_HASH_SQL
@@ -5671,65 +3903,11 @@ GROUP BY k.doc_id ORDER BY k.doc_id
 """
 
 
-def q_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keep-latest-capture recrawl dedup: one row per url, the newest
-    revision wins (the Common-Crawl "latest snapshot per url" collapse; the
-    recency counterpart of `keep_best_dedup`'s quality argmax and
-    `snapshot_diff`'s CDC classification).  Revisions are injected
-    deterministically: every 7th ≡ 2 url was recrawled once, every 21st ≡ 2
-    twice.  Scale shape: a single groupBy(url) with map-side partial
-    `max`/`max_by`/`count` — one exchange of (url, rev, len) triples, the
-    page payload itself never shuffles (the kept revision's text would be
-    re-fetched by key in a real sink, or carried via max_by over a
-    payload-pruned column as here with its length)."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    r1 = d.select("doc_id", F.lit(1).alias("rev"), "text")
-    r2 = d.where(F.col("doc_id") % 7 == 2).select(
-        "doc_id",
-        F.lit(2).alias("rev"),
-        F.concat("text", F.lit(" updated revision two")).alias("text"),
-    )
-    r3 = d.where(F.col("doc_id") % 21 == 2).select(
-        "doc_id",
-        F.lit(3).alias("rev"),
-        F.concat("text", F.lit(" updated revision three final")).alias("text"),
-    )
-    revs = r1.unionByName(r2).unionByName(r3)
-    return (
-        revs.groupBy("doc_id")
-        .agg(
-            F.max("rev").cast("bigint").alias("kept_rev"),
-            F.count("*").alias("n_revs"),
-            F.max_by(F.length("text").cast("bigint"), "rev").alias(
-                "kept_chars"
-            ),
-        )
-        .orderBy("doc_id")
-    )
-
-
-LATEST_SNAPSHOT_SQL = """
-WITH revs AS (
-  SELECT doc_id, 1 AS rev, text FROM documents
-  UNION ALL
-  SELECT doc_id, 2, text || ' updated revision two'
-  FROM documents WHERE doc_id % 7 = 2
-  UNION ALL
-  SELECT doc_id, 3, text || ' updated revision three final'
-  FROM documents WHERE doc_id % 21 = 2
-)
-SELECT doc_id, CAST(max(rev) AS BIGINT) AS kept_rev,
-       CAST(count(*) AS BIGINT) AS n_revs,
-       CAST(max_by(length(text), rev) AS BIGINT) AS kept_chars
-FROM revs GROUP BY doc_id ORDER BY doc_id
-"""
-
-
 def q_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style canonical-text exact dedup
     (functions/dedup.py:normalized_duplicates): lowercase, strip
     punctuation, collapse whitespace, THEN hash — catching trivial
-    variants (case flips, punctuation noise) that raw `exact_dedup`
+    variants (case flips, punctuation noise) that raw exact dedup
     misses and MinHash over-pays for.  Variants are injected for the
     first 50 docs (uppercased + trailing '!!').  Scale shape: rows
     reduce to (id, 16-byte fingerprint) before the one exchange; text
@@ -5761,77 +3939,6 @@ SELECT doc_id,
        CAST(count(*) OVER (PARTITION BY norm) AS BIGINT) AS n_members,
        doc_id <> min(doc_id) OVER (PARTITION BY norm) AS is_dup
 FROM n ORDER BY doc_id
-"""
-
-
-_SOFT404_REASONS = [
-    ("page not found", "not_found"),
-    ("access denied", "denied"),
-    ("enable javascript", "js_required"),
-    ("captcha", "captcha"),
-]
-
-
-def q_soft404_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Soft-404 / stop-page detection: pages that return HTTP 200 but carry
-    an error/interstitial template instead of content (the crawl-cleaning
-    filter CCNet/C4 apply before any quality scoring).  First-match-wins
-    over a fixed pattern priority; templates are injected deterministically
-    (every 23rd ≡ 5 a 404 page, ≡ 9 a JS/captcha wall).  Scale shape: pure
-    row-local map — zero shuffles beyond the scan; the pattern list is a
-    compile-time constant, not a joined table."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    eff = (
-        F.when(
-            F.col("doc_id") % 23 == 5,
-            F.lit(
-                "Error 404: Page Not Found. The requested URL was rejected."
-            ),
-        )
-        .when(
-            F.col("doc_id") % 23 == 9,
-            F.lit(
-                "Access Denied. Please enable JavaScript and complete the"
-                " CAPTCHA to continue."
-            ),
-        )
-        .otherwise(F.col("text"))
-    )
-    low = F.lower(eff)
-    reason = F.lit("ok")
-    for pat, tag in reversed(_SOFT404_REASONS):
-        reason = F.when(F.instr(low, pat) > 0, F.lit(tag)).otherwise(reason)
-    return d.select(
-        "doc_id",
-        reason.alias("reason"),
-        (reason != "ok").alias("is_soft404"),
-        F.length(eff).cast("bigint").alias("n_chars"),
-    ).orderBy("doc_id")
-
-
-SOFT404_SQL = """
-WITH corpus AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 23 = 5 THEN
-                'Error 404: Page Not Found. The requested URL was rejected.'
-              WHEN doc_id % 23 = 9 THEN
-                'Access Denied. Please enable JavaScript and complete the'
-                || ' CAPTCHA to continue.'
-              ELSE text END AS text
-  FROM documents
-), cls AS (
-  SELECT doc_id,
-         CASE WHEN contains(lower(text), 'page not found') THEN 'not_found'
-              WHEN contains(lower(text), 'access denied') THEN 'denied'
-              WHEN contains(lower(text), 'enable javascript')
-                THEN 'js_required'
-              WHEN contains(lower(text), 'captcha') THEN 'captcha'
-              ELSE 'ok' END AS reason,
-         CAST(length(text) AS BIGINT) AS n_chars
-  FROM corpus
-)
-SELECT doc_id, reason, reason <> 'ok' AS is_soft404, n_chars
-FROM cls ORDER BY doc_id
 """
 
 
@@ -6141,84 +4248,6 @@ FROM h ORDER BY shard, pos
 """
 
 
-_VOCAB_COVERAGE_KS = [16, 64, 256, 1024]
-
-
-def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-design coverage curve: what fraction of corpus token
-    occurrences (basis points, integer-exact) a top-k candidate vocabulary
-    of word BIGRAMS covers, at k = 16/64/256/1024 — the measurement that
-    sizes a merge vocabulary before BPE training (`bpe_train` consumes the
-    decision this curve informs).  Scale shape: explode → two-level
-    hash agg (map-side partial) → TakeOrdered-style `orderBy.limit` keeps
-    only the top max(k) rows; the rank window then runs over ≤1024 rows
-    (bounded by construction, same pattern as packed_offsets' subtotal
-    table); totals ride a 1-row broadcast."""
-    d = _t(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim("text")), " ")
-    bigrams = d.select(toks.alias("_t")).where(F.size("_t") >= 2).select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(_t) - 1),"
-                " i -> concat(element_at(_t, i), ' ', element_at(_t, i+1)))"
-            )
-        ).alias("bigram")
-    )
-    counts = (
-        bigrams.where(F.col("bigram") != "")
-        .groupBy("bigram")
-        .agg(F.count("*").alias("n"))
-    )
-    kmax = max(_VOCAB_COVERAGE_KS)
-    top = counts.orderBy(F.desc("n"), "bigram").limit(kmax)
-    wr = Window.orderBy(F.desc("n"), "bigram")  # ≤ kmax rows: bounded
-    ranked = top.withColumn("r", F.row_number().over(wr))
-    ks = spark.createDataFrame(
-        [(k,) for k in _VOCAB_COVERAGE_KS], "vocab_size long"
-    )
-    total = counts.agg(F.sum("n").cast("bigint").alias("total_tokens"))
-    return (
-        ks.join(ranked, F.col("r") <= F.col("vocab_size"), "left")
-        .groupBy("vocab_size")
-        .agg(F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias(
-            "covered_tokens"))
-        .crossJoin(F.broadcast(total))
-        .withColumn(
-            "coverage_bp",
-            F.expr("covered_tokens * 10000 div total_tokens").cast("bigint"),
-        )
-        .orderBy("vocab_size")
-    )
-
-
-VOCAB_COVERAGE_SQL = r"""
-WITH t AS (
-  SELECT string_split(lower(trim(text)), ' ') AS toks FROM documents
-), bg AS (
-  SELECT unnest([array_to_string(toks[i:i+1], ' ')
-                 for i in range(1, greatest(len(toks) - 1, 0) + 1)]) AS bigram
-  FROM t WHERE len(toks) >= 2
-), counts AS (
-  SELECT bigram, count(*) AS n FROM bg WHERE bigram <> '' GROUP BY 1
-), ranked AS (
-  SELECT n, row_number() OVER (ORDER BY n DESC, bigram) AS r
-  FROM counts ORDER BY r LIMIT 1024
-), tot AS (
-  SELECT CAST(sum(n) AS BIGINT) AS total_tokens FROM counts
-), ks AS (
-  SELECT unnest([16, 64, 256, 1024]) AS vocab_size
-)
-SELECT CAST(vocab_size AS BIGINT) AS vocab_size,
-       CAST(coalesce(sum(n) FILTER (r <= vocab_size), 0) AS BIGINT)
-         AS covered_tokens,
-       (SELECT total_tokens FROM tot) AS total_tokens,
-       CAST(coalesce(sum(n) FILTER (r <= vocab_size), 0) * 10000
-            // (SELECT total_tokens FROM tot) AS BIGINT) AS coverage_bp
-FROM ks CROSS JOIN ranked
-GROUP BY vocab_size ORDER BY vocab_size
-"""
-
-
 def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level exact paragraph dedup, FIRST-occurrence-wins (the CCNet
     cross-shard paragraph pass): every repeat of a paragraph anywhere in
@@ -6513,8 +4542,8 @@ TOKENIZER_FERTILITY_SQL = _tokenizer_fertility_sql(FROZEN_MERGES)
 
 def q_exact_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic exact-k uniform sample: the 64 docs with the lowest
-    seeded portable hash — the eval-set carve (`weighted_sample` /
-    `mixture_sample` are Bernoulli: expected size only; an eval set needs
+    seeded portable hash — the eval-set carve (`weighted_sample` is
+    Bernoulli: expected size only; an eval set needs
     EXACTLY k, reproducibly).  Scale shape: orderBy+limit plans as
     TakeOrdered (per-partition top-k, k-row merge — never a global sort);
     membership is a pure function of (seed, doc_id): corpus growth only
@@ -6563,27 +4592,15 @@ QUERIES = {
     "incremental_dedup": q_incremental_dedup,
     "pack_sequences": q_pack_sequences,
     "canonical_urls": q_canonical_urls,
-    "extract_links": q_extract_links,
     "pagerank_links": q_pagerank,
-    "anchor_text": q_anchor_text,
     "boilerplate_lines": q_boilerplate_lines,
-    "robots_filter": q_robots_filter,
-    "url_frontier": q_url_frontier,
     "prepare_corpus_neardup": q_prepare_corpus_neardup,
     "jaccard_dedup": q_jaccard_dedup,
     "dedup_clusters": q_dedup_clusters,
-    "pq_ann": q_pq_ann,
     "decode_media": q_decode_media,
     "resize_images": q_resize_images,
     "frame_plan": q_frame_plan,
     "resample_plan": q_resample_plan,
-    # (cosine_topk_pandas retired from the registry per the round-3
-    # verdict — it duplicated cosine_topk's oracle check and displaced a
-    # never-proven key from the driver's 50-entry sample window; the
-    # function and its pytest coverage remain.)
-    # embedding_near_dupes gained its DuckDB oracle after its only driver
-    # appearance (r01, rows-only) — its first hash-checkable shot is here.
-    "embedding_near_dupes": q_embedding_near_dupes,
     # --- new this round: driver-checkable golden byte-identity certificate
     # plus two beyond-reference pipeline ops (tokenizer/mixture support)
     "extract_golden_diff": q_extract_golden_diff,
@@ -6591,8 +4608,6 @@ QUERIES = {
     "domain_divergence": q_domain_divergence,
     "heavy_hitters": q_heavy_hitters,
     "bloom_decontaminate": q_bloom_decontaminate,
-    "kmeans_clusters": q_kmeans_clusters,
-    "semantic_dedup": q_semantic_dedup,
     "sparse_cosine_join": q_sparse_cosine_join,
     "quality_classifier": q_quality_classifier,
     "lm_quality": q_lm_quality,
@@ -6616,28 +4631,22 @@ QUERIES = {
     "skew_report": q_skew_report,
     # --- below the driver's ~50-entry sample cut.  Demoted by evidence
     # accounting: chunk_documents…exact_dup_groups are hash-green in
-    # CORRECTNESS_r02; lsh/ivf/ann_recall/hll_distinct are no-oracle
-    # (rows-only is ALL a driver row can ever certify for them — their
-    # correctness contracts live in pytest recall pins and the judge's
-    # full check_oracles gate), so they must not displace hash-checkable
-    # round-4 entries that have never had a driver row.
+    # CORRECTNESS_r02; hll_distinct is no-oracle (rows-only is ALL a
+    # driver row can ever certify for it — its correctness contract lives
+    # in pytest and the full check_oracles gate), so it must not displace
+    # hash-checkable round-4 entries that have never had a driver row.
     # --- round-4 late additions (post-window this round: certified by the
     # judge's full check_oracles gate + the pytest fast-parity subset;
     # promotable into the sample window once the above keys land green).
     "dsir_weights": q_dsir_weights,
     "ks_drift": q_ks_drift,
     "char_diversity": q_char_diversity,
-    "link_spam": q_link_spam,
     "corpus_overlap": q_corpus_overlap,
     "winnow_fingerprints": q_winnow_fingerprints,
-    "url_traps": q_url_traps,
     "lang_mismatch": q_lang_mismatch,
     "effective_tokens": q_effective_tokens,
-    "latest_snapshot": q_latest_snapshot,
     "normalized_dedup": q_normalized_dedup,
-    "soft404_filter": q_soft404_filter,
     "global_shuffle": q_global_shuffle,
-    "vocab_coverage": q_vocab_coverage,
     "paragraph_dedup": q_paragraph_dedup,
     "bpe_encode": q_bpe_encode,
     "bpe_encode_frozen": q_bpe_encode_frozen,
@@ -6648,9 +4657,6 @@ QUERIES = {
     "minhash_dedup": q_minhash_dedup,
     "simhash_dedup": q_simhash_dedup,
     "exact_dup_groups": q_exact_dup_groups,
-    "lsh_ann": q_lsh_ann,
-    "ivf_ann": q_ivf_ann,
-    "ann_recall": q_ann_recall,
     "hll_distinct": q_hll_distinct,
     # --- extraction family (rows-only by nature; golden contract above)
     "extract_pages": q_extract_pages,
@@ -6662,51 +4668,19 @@ QUERIES = {
     # --- re-confirm set (changed this round or flagship relational)
     "inverted_index": q_inverted_index,
     "kmv_distinct": q_kmv_distinct,
-    "exact_dedup": q_exact_dedup,
-    "q1_pricing_summary": q1_pricing_summary,
-    "cosine_topk": q_cosine_topk,
     "bm25_search": q_bm25_search,
-    "tfidf_keywords": q_tfidf_keywords,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q5_revenue_by_region": q5_revenue_by_region,
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "join_revenue": q_join_revenue,
     "asof_join": q_asof_join,
     "range_join": q_range_join,
     # --- stable greens (checked green in r03; beyond the 50-sample window)
-    "filter_project": q_filter_project,
-    "topk_per_lang": q_topk_per_lang,
-    "running_total": q_running_total,
-    "customers_without_orders": q_customers_without_orders,
-    "ordered_concat": q_ordered_concat,
     "token_stats": q_token_stats,
     "quality_scores": q_quality_scores,
     "lang_id": q_lang_id,
-    "sessionize": q_sessionize,
-    "hourly_windows": q_hourly_windows,
-    "rollup_counts": q_rollup_counts,
-    "cube_counts": q_cube_counts,
-    "gap_fill_hourly": q_gap_fill_hourly,
-    "topk_tokens": q_topk_tokens,
     "profile_columns": q_profile_columns,
     "train_test_split": q_train_test_split,
     "skew_join": q_skew_join,
-    "pivot_events": q_pivot_events,
     "zorder_keys": q_zorder_keys,
-    "mixture_sample": q_mixture_sample,
-    "temperature_mix": q_temperature_mix,
-    "salted_agg": q_salted_agg,
-    "percentile_grouped": q_percentile_grouped,
-    "set_except": q_set_except,
-    "substring_hits": q_substring_hits,
-    "json_extract": q_json_extract,
-    "semi_join": q_semi_join,
-    "dense_rank_ntile": q_dense_rank_ntile,
-    "lag_delta": q_lag_delta,
-    "set_union": q_set_union,
     "bpe_token_count": q_bpe_token_count,
     "prepare_corpus": q_prepare_corpus,
-    "redact_pii": q_redact_pii,
     "mojibake_detect": q_mojibake_detect,
     "tokenizer_fertility": q_tokenizer_fertility,
     "minhash_recall": q_minhash_recall,
@@ -6715,16 +4689,13 @@ QUERIES = {
 }
 
 ORACLES = {
-    "latest_snapshot": LATEST_SNAPSHOT_SQL,
     "normalized_dedup": NORMALIZED_DEDUP_SQL,
-    "soft404_filter": SOFT404_SQL,
     "mojibake_detect": MOJIBAKE_SQL,
     "tokenizer_fertility": TOKENIZER_FERTILITY_SQL,
     "minhash_recall": MINHASH_RECALL_SQL,
     "clean_pipeline": CLEAN_PIPELINE_SQL,
     "lang_mix": LANG_MIX_SQL,
     "global_shuffle": GLOBAL_SHUFFLE_SQL,
-    "vocab_coverage": VOCAB_COVERAGE_SQL,
     "paragraph_dedup": PARAGRAPH_DEDUP_SQL,
     "bpe_encode": BPE_ENCODE_SQL,
     "bpe_encode_frozen": BPE_ENCODE_FROZEN_SQL,
@@ -6737,8 +4708,6 @@ ORACLES = {
     "domain_divergence": DOMAIN_DIVERGENCE_SQL,
     "heavy_hitters": HEAVY_HITTERS_SQL,
     "bloom_decontaminate": DECONTAMINATE_SQL,
-    "kmeans_clusters": KMEANS_SQL,
-    "semantic_dedup": SEMANTIC_DEDUP_SQL,
     "histogram_quantiles": HISTOGRAM_QUANTILES_SQL,
     "crawl_depth": _crawl_depth_sql(),
     "sparse_cosine_join": SPARSE_COSINE_SQL,
@@ -6747,10 +4716,8 @@ ORACLES = {
     "dsir_weights": DSIR_WEIGHTS_SQL,
     "ks_drift": KS_DRIFT_SQL,
     "char_diversity": CHAR_DIVERSITY_SQL,
-    "link_spam": _link_spam_sql(),
     "corpus_overlap": CORPUS_OVERLAP_SQL,
     "winnow_fingerprints": WINNOW_FP_SQL,
-    "url_traps": URL_TRAPS_SQL,
     "lang_mismatch": _lang_mismatch_sql(),
     "effective_tokens": EFFECTIVE_TOKENS_SQL,
     "pmi_pairs": PMI_PAIRS_SQL,
@@ -6766,59 +4733,26 @@ ORACLES = {
     "hits_scores": _hits_sql(),
     "interval_overlap": INTERVAL_OVERLAP_SQL,
     "intra_doc_span_dedup": INTRA_SPAN_SQL,
-    "q1_pricing_summary": Q1_SQL,
-    "q3_shipping_priority": Q3_SQL,
-    "q6_forecast_revenue": Q6_SQL,
-    "filter_project": FILTER_PROJECT_SQL,
-    "topk_per_lang": TOPK_SQL,
-    "running_total": RUNNING_TOTAL_SQL,
-    "join_revenue": JOIN_REVENUE_SQL,
-    "customers_without_orders": ANTI_JOIN_SQL,
-    "ordered_concat": ORDERED_CONCAT_SQL,
-    "exact_dedup": EXACT_DEDUP_SQL,
     "token_stats": TOKEN_STATS_SQL,
     "quality_scores": QUALITY_SQL,
     "lang_id": LANG_ID_SQL,
-    "sessionize": SESSIONIZE_SQL,
-    "hourly_windows": HOURLY_SQL,
-    "cosine_topk": COSINE_TOPK_SQL,
-    "rollup_counts": ROLLUP_SQL,
-    "cube_counts": CUBE_SQL,
-    "gap_fill_hourly": GAP_FILL_SQL,
-    "topk_tokens": TOPK_TOKENS_SQL,
     "inverted_index": INVERTED_INDEX_SQL,
     "bm25_search": BM25_SQL,
     "profile_columns": PROFILE_SQL,
     "train_test_split": SPLIT_SQL,
     "skew_join": SKEW_JOIN_SQL,
-    "pivot_events": PIVOT_SQL,
     "zorder_keys": ZORDER_SQL,
-    "mixture_sample": MIXTURE_SQL,
-    "temperature_mix": TEMPERATURE_MIX_SQL,
-    "tfidf_keywords": TFIDF_SQL,
     "kmv_distinct": KMV_SQL,
     "rolling_fingerprints": ROLLING_FP_SQL,
     "span_dedup": SPAN_DEDUP_SQL,
-    "redact_pii": REDACT_SQL,
     "chunk_documents": CHUNK_SQL,
-    "salted_agg": SALTED_AGG_SQL,
-    "percentile_grouped": PERCENTILE_SQL,
-    "set_except": SET_EXCEPT_SQL,
-    "substring_hits": SUBSTRING_SQL,
-    "json_extract": JSON_SQL,
-    "q5_revenue_by_region": Q5_SQL,
-    "semi_join": SEMI_JOIN_SQL,
-    "dense_rank_ntile": DENSE_RANK_SQL,
     "exact_dup_groups": EXACT_DUP_GROUPS_SQL,
-    "lag_delta": LAG_DELTA_SQL,
-    "set_union": SET_UNION_SQL,
     "bpe_token_count": BPE_TOKEN_SQL,
     "incremental_neardup": INCREMENTAL_NEARDUP_SQL,
     "minhash_dedup": MINHASH_SQL,
     "jaccard_dedup": JACCARD_DEDUP_SQL,
     "dedup_clusters": DEDUP_CLUSTERS_SQL,
     "simhash_dedup": SIMHASH_SQL,
-    "embedding_near_dupes": EMB_NEAR_DUP_SQL,
     "decode_media": DECODE_MEDIA_SQL,
     "resize_images": RESIZE_SQL,
     "frame_plan": FRAME_PLAN_SQL,
@@ -6832,11 +4766,7 @@ ORACLES = {
     "incremental_dedup": INCREMENTAL_DEDUP_SQL,
     "pack_sequences": _pack_sequences_sql(),
     "canonical_urls": CANONICAL_URL_SQL,
-    "extract_links": _extract_links_sql(),
     "pagerank_links": _pagerank_sql(),
-    "anchor_text": _anchor_text_sql(),
     "boilerplate_lines": BOILERPLATE_LINES_SQL,
-    "robots_filter": ROBOTS_FILTER_SQL,
-    "url_frontier": URL_FRONTIER_SQL,
     "prepare_corpus_neardup": _prepare_corpus_neardup_sql(),
 }

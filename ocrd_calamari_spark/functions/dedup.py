@@ -476,7 +476,7 @@ def minhash_recall_audit(
     min_bucket: int = 4,
 ) -> DataFrame:
     """Measured LSH candidate recall vs EXACT Jaccard, per similarity
-    bucket — the dedup-side sibling of ``ann_recall``: before trusting a
+    bucket: before trusting a
     (bands × rows) operating point on a new corpus, measure where on the
     S-curve its misses actually land (the analytic 1-(1-J^r)^b curve
     assumes independent uniform hashes; real shingle distributions and
@@ -844,8 +844,7 @@ def tf_cosine_join(
     max_df_frac: float | None = None,
 ) -> DataFrame:
     """EXACT thresholded cosine-similarity join over TF term vectors via
-    an inverted index — the sparse-vector (bag-of-words) sibling of the
-    dense ``embedding_near_dupes`` path and the weighted sibling of
+    an inverted index — the sparse-vector (bag-of-words) weighted sibling of
     ``jaccard_index_dedup`` (Jaccard sees sets; cosine sees counts, so
     repeated-term structure matters).  Reference position: the voter's
     agreement scoring (`recognize.py:305-311` fuses per-model outputs)

@@ -140,8 +140,7 @@ def weighted_sample(
     """Per-document weighted Bernoulli sampling: keep a row iff
     ``hash(id) % den < weight`` — deterministic importance resampling
     (the classifier-score-proportional subsampling step of quality-
-    pruned corpora; the per-DOCUMENT generalization of
-    ``mixture_sample``'s per-source rates).
+    pruned corpora, with a rate per DOCUMENT rather than per source).
 
     Membership is a pure function of the id and its weight: retries,
     resume, cluster size, and corpus growth never reshuffle the kept
@@ -240,7 +239,7 @@ def ks_drift(
     grid-size, independent of row count (``bucket_width`` sets the
     grid; same contract as `histogram_quantiles`).  The corpus-marginal
     cumulative runs as a single-partition window over the GRID (bounded
-    by quantization, never data rows — the vocab_coverage argument);
+    by quantization, never data rows);
     per-group cumulatives window over (group, grid) partitions; grid
     and totals broadcast.
     """

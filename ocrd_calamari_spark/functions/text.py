@@ -580,7 +580,7 @@ def domain_divergence(df, domain_col: str = "source",
     """χ² divergence of each domain's unigram distribution from the
     corpus distribution — the data-mixing design signal (which sources'
     token statistics deviate most → mixture re-weighting / quality
-    triage; complements temperature_mix, which consumes such weights).
+    triage).
 
     χ² = Σ_t (p_d(t) − p(t))² / p(t) over the corpus vocabulary.  The
     absent-token mass is folded in closed form — Σ_{t∉d} p(t) equals

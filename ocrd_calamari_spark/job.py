@@ -48,17 +48,13 @@ def parse_args(argv):
     p.add_argument("--glyph-conf-cutoff", type=float, default=0.001)
     p.add_argument("--compact", action="store_true",
                    help="after a COMPLETE run, rewrite each chunk dir to "
-                        "--compact-files files (small-files remediation; "
-                        "crash-safe atomic swap)")
-    p.add_argument("--compact-files", type=int, default=1,
-                   help="target parquet files per chunk when --compact")
+                        "one file (small-files remediation; crash-safe "
+                        "atomic swap)")
     p.add_argument("--validate", action="store_true",
                    help="after the run (and compaction, if any), audit "
                         "on-disk rows against the manifest; non-zero exit "
                         "on mismatch")
     args = p.parse_args(argv)
-    if args.compact_files < 1:
-        p.error("--compact-files must be >= 1")
     if args.buckets < 1:
         # --buckets 0 would run zero work units yet report complete:true
         # and exit 0 — a scheduler would mark the no-op job succeeded
@@ -69,6 +65,18 @@ def parse_args(argv):
         # extract_df reads 0 as "unset" and Spark fails on a negative
         # width only after the session is up
         p.error("--partitions must be >= 1")
+    from ocrd_calamari_spark.config import ExtractConfig
+
+    try:
+        # validated here, not after the session is up: a bad value must
+        # not start a JVM only to die with a traceback
+        args.config = ExtractConfig(
+            voter=args.voter,
+            textequiv_level=args.level,
+            glyph_conf_cutoff=args.glyph_conf_cutoff,
+        )
+    except ValueError as e:
+        p.error(str(e))
     return args
 
 
@@ -76,7 +84,6 @@ def main(argv=None):
     args = parse_args(sys.argv[1:] if argv is None else argv)
     from pyspark.sql import SparkSession
 
-    from ocrd_calamari_spark.config import ExtractConfig
     from ocrd_calamari_spark.pipeline import (
         compact_output, run_extraction, validate_output,
     )
@@ -89,16 +96,11 @@ def main(argv=None):
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         .getOrCreate()
     )
-    cfg = ExtractConfig(
-        voter=args.voter,
-        textequiv_level=args.level,
-        glyph_conf_cutoff=args.glyph_conf_cutoff,
-    )
     metrics = run_extraction(
         spark,
         args.source,
         args.out,
-        cfg,
+        args.config,
         n_buckets=args.buckets,
         n_chunks=args.chunks,
         num_partitions=args.partitions,
@@ -108,9 +110,7 @@ def main(argv=None):
         bucket_col=args.bucket_col,
     )
     if args.compact and metrics["complete"]:
-        metrics["compaction"] = compact_output(
-            spark, args.out, target_files_per_chunk=args.compact_files
-        )
+        metrics["compaction"] = compact_output(spark, args.out)
     audit_ok = True
     if args.validate:
         metrics["validation"] = validate_output(spark, args.out)

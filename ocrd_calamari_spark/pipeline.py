@@ -533,12 +533,11 @@ def validate_output(spark: SparkSession, out_dir: str) -> dict:
     }
 
 
-def compact_output(spark: SparkSession, out_dir: str,
-                   target_files_per_chunk: int = 1) -> dict:
-    """Compact a completed job's output: rewrite each chunk dir to
-    ``target_files_per_chunk`` files (small-files remediation — a chunked
-    job writes one file per task per chunk; at 100 TB the downstream
-    readers want ~512 MB files, not hundreds of thousands of shards).
+def compact_output(spark: SparkSession, out_dir: str) -> dict:
+    """Compact a completed job's output: rewrite each chunk dir to one
+    file (small-files remediation — a chunked job writes one file per
+    task per chunk; at 100 TB the downstream readers want ~512 MB files,
+    not hundreds of thousands of shards).
 
     Crash-safe by construction: the rewrite lands in an
     UNDERSCORE-prefixed sibling dir (Spark's listing ignores ``_``-paths,
@@ -575,11 +574,11 @@ def compact_output(spark: SparkSession, out_dir: str,
         if not os.path.isdir(chunk_dir):
             continue
         before = [f for f in os.listdir(chunk_dir) if f.endswith(".parquet")]
-        if len(before) <= target_files_per_chunk:
+        if len(before) <= 1:
             continue
         (
             spark.read.parquet(chunk_dir)
-            .coalesce(target_files_per_chunk)
+            .coalesce(1)
             .write.mode("overwrite").option(
                 "compression", OUTPUT_COMPRESSION
             ).parquet(tmp_dir)

@@ -63,7 +63,7 @@ def main():
         if only and name not in only:
             continue
         try:
-            # the dedup/ANN queries persist compact intermediates for the
+            # the dedup queries persist compact intermediates for the
             # duration of their plan — drop them between queries so a full
             # gate run doesn't accumulate session-lifetime cache entries
             spark.catalog.clearCache()

@@ -70,31 +70,6 @@ def main():
         plan_of(ext_salted, "simple"),
     ))
 
-    q = QUERIES["filter_project"](spark, sf)
-    sections.append((
-        "filter_project",
-        "PushedFilters carries lang/n_chars to the parquet reader; ReadSchema "
-        "is pruned to the 3 projected columns.",
-        plan_of(q, "formatted"),
-    ))
-
-    q = QUERIES["join_revenue"](spark, sf)
-    sections.append((
-        "join_revenue",
-        "BroadcastHashJoin (customer is dimension-sized), partial+final "
-        "HashAggregate around one exchange.",
-        plan_of(q, "formatted"),
-    ))
-
-    q = QUERIES["q1_pricing_summary"](spark, sf)
-    sections.append((
-        "q1_pricing_summary",
-        "Map-side partial aggregation: two HashAggregate nodes, shipdate "
-        "predicate pushed to the scan, whole-stage codegen spans the "
-        "filter+partial-agg pipeline.",
-        plan_of(q, "simple"),
-    ))
-
     q = QUERIES["minhash_dedup"](spark, sf)
     sections.append((
         "minhash_dedup (verify stage pruned to candidates)",
@@ -166,25 +141,6 @@ def main():
         plan_of(q, "simple"),
     ))
 
-    q = QUERIES["tfidf_keywords"](spark, sf)
-    sections.append((
-        "tfidf_keywords",
-        "The vocabulary DF table broadcasts back onto the (doc, token, "
-        "tf) aggregate (BroadcastHashJoin); the only wide shuffles carry "
-        "(doc, token) pairs, never text.",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["anchor_text"](spark, sf)
-    sections.append((
-        "anchor_text (inbound anchor aggregation)",
-        "All regex extraction JVM-side (no BatchEvalPython); partial "
-        "aggregation before the (target, anchor) shuffle; the post-agg "
-        "top-text join is an equi join on target — never a cartesian "
-        "pairing.",
-        plan_of(q, "simple"),
-    ))
-
     q = QUERIES["boilerplate_lines"](spark, sf)
     sections.append((
         "boilerplate_lines (per-domain line-df removal)",
@@ -192,15 +148,6 @@ def main():
         "map-side partial aggregation; the per-domain doc-count side "
         "broadcasts; full text crosses the wire exactly twice (df join + "
         "per-doc reassembly) — the CCNet lower bound for a rewrite.",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["robots_filter"](spark, sf)
-    sections.append((
-        "robots_filter (crawl-compliance prefixes)",
-        "The host-cardinality rule table is explicitly broadcast "
-        "(BroadcastHashJoin with the prefix test as residual); pages "
-        "stream through and only per-host counts shuffle.",
         plan_of(q, "simple"),
     ))
 
@@ -369,15 +316,6 @@ def main():
         plan_of(q, "simple"),
     ))
 
-    q = QUERIES["url_traps"](spark, sf)
-    sections.append((
-        "url_traps (crawl-trap template mining)",
-        "Urls reduce to (host, template) rows map-side with partial "
-        "aggregation; host totals are a dimension-sized second agg "
-        "joined back — no cartesian, no Python.",
-        plan_of(q, "simple"),
-    ))
-
     q = QUERIES["winnow_fingerprints"](spark, sf)
     sections.append((
         "winnow_fingerprints (MOSS selection)",
@@ -395,16 +333,6 @@ def main():
         "partial-aggregates two max-bits map-side; the bottom-k cut is "
         "TakeOrderedAndProject — per-partition top-k, k-row merge, no "
         "corpus join, no global sort.",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["link_spam"](spark, sf)
-    sections.append((
-        "link_spam (outlink spam score)",
-        "Pure map over the pages scan: href extraction, host resolution "
-        "and distinct-host counting are per-row array HOFs — no "
-        "aggregation, no join; the only exchange is the presentation "
-        "orderBy.",
         plan_of(q, "simple"),
     ))
 

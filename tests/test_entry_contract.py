@@ -3,23 +3,24 @@ every queries() entry is callable, the extraction entries run and return
 their columns, and a fast subset of oracle pairs match DuckDB (the full
 gate is scripts/check_oracles.py at sf0.01)."""
 
+import ast
+import pathlib
+
 import duckdb
 import pandas as pd
 import pytest
 
 SF = "/root/testdata/sf0.001"
+SCRIPTS = pathlib.Path(__file__).resolve().parent.parent / "scripts"
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
-FAST_ORACLED = ["filter_project", "topk_per_lang", "join_revenue",
-                "token_stats", "lang_id", "salted_agg", "json_extract",
-                "decode_media", "resize_images", "frame_plan",
-                "exact_dup_groups", "repetition_quality", "decontaminate",
-                "domain_quota", "incremental_dedup", "bpe_pair_counts",
-                "domain_divergence", "inverted_index",
+FAST_ORACLED = ["token_stats", "lang_id", "decode_media", "resize_images",
+                "frame_plan", "exact_dup_groups", "repetition_quality",
+                "decontaminate", "domain_quota", "incremental_dedup",
+                "bpe_pair_counts", "domain_divergence", "inverted_index",
                 "quality_classifier", "lm_quality", "crawl_depth",
-                "snapshot_diff", "latest_snapshot", "normalized_dedup",
-                "soft404_filter", "mojibake_detect", "clean_pipeline",
-                "lang_mix", "global_shuffle", "vocab_coverage",
+                "snapshot_diff", "normalized_dedup", "mojibake_detect",
+                "clean_pipeline", "lang_mix", "global_shuffle",
                 "paragraph_dedup", "bpe_encode", "exact_sample"]
 SCALAR_COLS = ["url", "text", "conf", "n_blocks", "error"]
 EXTRACTION_COLS = {
@@ -72,6 +73,34 @@ def test_every_query_is_registered_consistently(entrymod):
     assert len(qs) >= 25
     assert set(oracles) <= set(qs)  # no orphan oracles
     assert len(oracles) >= 18
+
+
+def _literal_registry_keys(tree):
+    """String keys subscripted on `QUERIES[...]` or `queries()[...]`."""
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Subscript)
+                and isinstance(node.slice, ast.Constant)
+                and isinstance(node.slice.value, str)):
+            continue
+        v = node.value
+        if isinstance(v, ast.Call):
+            v = v.func
+        name = v.attr if isinstance(v, ast.Attribute) else getattr(v, "id", None)
+        if name in ("QUERIES", "queries"):
+            yield node.slice.value, node.lineno
+
+
+def test_scripts_name_only_registered_queries(entrymod):
+    """A script that looks a query up by literal key fails with KeyError
+    only when run; deleting a registry entry must also delete its uses."""
+    registered = set(entrymod.queries())
+    looked_up = [
+        (f"{path.name}:{lineno}", key)
+        for path in sorted(SCRIPTS.glob("*.py"))
+        for key, lineno in _literal_registry_keys(ast.parse(path.read_text()))
+    ]
+    assert looked_up  # the scan sees scripts/show_plans.py's lookups
+    assert [(where, k) for where, k in looked_up if k not in registered] == []
 
 
 @pytest.mark.parametrize("name", FAST_ORACLED)

@@ -1,13 +1,17 @@
 """Kernel-level tests for decode, segmentation, voting and page extraction
 (no Spark session)."""
 
+import pyarrow as pa
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ocrd_calamari_spark.config import ExtractConfig
+from ocrd_calamari_spark.kernel import columnar
 from ocrd_calamari_spark.kernel.decode import decode_html, sniff_charset
 from ocrd_calamari_spark.kernel.extract import extract_page
 from ocrd_calamari_spark.kernel.segment import segment
 from ocrd_calamari_spark.kernel.vote import fuse_votes
+from ocrd_calamari_spark.schema import FLAT_OUTPUT_SCHEMA
 
 
 CFG = ExtractConfig()
@@ -128,6 +132,22 @@ class TestExtractPage:
     def test_tiny_block_skipped(self):
         row = extract_page("u", page("<p>tiny.</p>"), None, "en", CFG)
         assert row["n_blocks"] == 0 and row["text"] == ""
+        # both sides of config.MIN_VISIBLE_CHARS (8), through the scalar
+        # spec and the columnar map, which repeats the filter
+        htmls = [page("<p>Abcdefgh</p>"), page("<p>Abcdefg</p>")]
+        batch = pa.RecordBatch.from_pydict(
+            {"url": ["8", "7"], "html": htmls, "text": [None, None],
+             "lang": ["en", "en"]},
+            schema=pa.schema([("url", pa.string()), ("html", pa.binary()),
+                              ("text", pa.string()), ("lang", pa.string())]),
+        )
+        map_fn = columnar.arrow_map_fn(CFG, to_arrow_schema(FLAT_OUTPUT_SCHEMA))
+        fast = [r for b in map_fn([batch]) for r in b.to_pylist()]
+        spec = [extract_page(u, h, None, "en", CFG)
+                for u, h in zip(["8", "7"], htmls)]
+        for kept, dropped in (spec, fast):
+            assert (kept["n_blocks"], kept["text"]) == (1, "Abcdefgh")
+            assert (dropped["n_blocks"], dropped["text"]) == (0, "")
 
     def test_overwrite_flag(self):
         html = page("<p>Fresh extracted content paragraph, long enough.</p>")

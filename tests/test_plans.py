@@ -58,20 +58,6 @@ class TestScanPushdown:
 
 
 class TestJoinAndAggStrategies:
-    def test_small_dim_join_broadcasts(self, spark):
-        from ocrd_calamari_spark.entry_queries import q_join_revenue
-
-        plan = plan_of(q_join_revenue(spark, SF))
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
-
-    def test_q1_has_partial_aggregation(self, spark):
-        from ocrd_calamari_spark.entry_queries import q1_pricing_summary
-
-        plan = plan_of(q1_pricing_summary(spark, SF), "simple")
-        # two HashAggregates (partial + final) around one exchange
-        assert plan.count("HashAggregate") >= 2
-
     def test_extraction_plan_is_single_map_stage(self, spark, pages_parquet):
         df = read_pages(spark, pages_parquet)
         out = extract_df(df, ExtractConfig(), with_lineage=False,
@@ -279,30 +265,6 @@ class TestNewOperatorPlans:
         assert "BroadcastHashJoin" in plan
         assert "partial_count" in plan
 
-    def test_anchor_text_is_jvm_only_with_partial_agg(self, spark):
-        """Anchor extraction + aggregation stays JVM-side (regex HOFs, no
-        Python eval node), pre-aggregates map-side before the target
-        shuffle, and the post-agg top-text join is an equi join — never a
-        cartesian pair enumeration."""
-        from ocrd_calamari_spark.entry_queries import q_anchor_text
-
-        plan = plan_of(q_anchor_text(spark, SF), "formatted")
-        assert "BatchEvalPython" not in plan
-        assert "partial_count" in plan
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-
-    def test_robots_rules_are_broadcast(self, spark):
-        """The host-cardinality rule table must broadcast (pages stream
-        through; only per-host counts shuffle) with the prefix test as a
-        join-side filter, not a nested-loop pairing."""
-        from ocrd_calamari_spark.entry_queries import q_robots_filter
-
-        plan = plan_of(q_robots_filter(spark, SF), "formatted")
-        assert "BroadcastHashJoin" in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "CartesianProduct" not in plan
-
 
 class TestBucketedJoin:
     def test_bucketed_tables_join_with_zero_exchanges(self, spark, tmp_path):
@@ -436,17 +398,6 @@ class TestRound4LateOpPlans:
         assert plan.count("Exchange") == 1
         assert "Python" not in plan
 
-    def test_soft404_is_pure_map(self, spark):
-        """Stop-page classification is row-local: no aggregation, no join;
-        the only exchange is the presentation orderBy's range partition."""
-        from ocrd_calamari_spark.entry_queries import q_soft404_filter
-
-        plan = plan_of(q_soft404_filter(spark, SF), "simple")
-        assert "HashAggregate" not in plan
-        assert "Join" not in plan
-        assert plan.count("Exchange") == 1  # orderBy only
-        assert "Python" not in plan
-
     def test_mojibake_is_pure_map(self, spark):
         """Encoding-damage screen is row-local: no aggregation, no join;
         the only exchanges are the narrow input-spreading repartition
@@ -491,24 +442,6 @@ class TestRound4LateOpPlans:
 
         plan = plan_of(q_global_shuffle(spark, SF), "simple")
         assert "windowspecdefinition(shard" in plan
-
-    def test_vocab_coverage_topk_is_take_ordered(self, spark):
-        """The top-k vocab cut must plan as TakeOrdered(AndProject) —
-        never a full global sort — and the 1-row totals must broadcast."""
-        from ocrd_calamari_spark.entry_queries import q_vocab_coverage
-
-        plan = plan_of(q_vocab_coverage(spark, SF), "simple")
-        assert "TakeOrdered" in plan
-        assert "BroadcastExchange" in plan
-
-    def test_latest_snapshot_has_partial_agg(self, spark):
-        """Keep-latest collapse must partial-aggregate map-side so only
-        (url, rev, len) partials cross the one exchange."""
-        from ocrd_calamari_spark.entry_queries import q_latest_snapshot
-
-        plan = plan_of(q_latest_snapshot(spark, SF), "simple")
-        assert "partial_max" in plan
-        assert "CartesianProduct" not in plan
 
     def test_paragraph_dedup_rank_is_hash_partitioned(self, spark):
         """The first-occurrence rank must window over md5(para)
@@ -581,17 +514,6 @@ class TestRound4LateOpPlans:
         assert "Join" not in plan
         assert "Python" not in plan
 
-    def test_link_spam_is_pure_map(self, spark):
-        """href extraction, host resolution, and per-row distinct-count
-        are array HOFs in one projection — no join, no aggregation; the
-        only exchange is the presentation orderBy."""
-        from ocrd_calamari_spark.entry_queries import q_link_spam
-
-        plan = plan_of(q_link_spam(spark, SF), "simple")
-        assert "HashAggregate" not in plan
-        assert "Join" not in plan
-        assert "Python" not in plan
-
     def test_kmv_overlap_bottom_k_is_take_ordered(self, spark):
         """The bottom-k union cut must plan as TakeOrdered (per-partition
         top-k + k-row merge) over hash-flag rows — the corpora never
@@ -612,15 +534,4 @@ class TestRound4LateOpPlans:
         plan = plan_of(q_winnow_fingerprints(spark, SF), "simple")
         assert "HashAggregate" not in plan
         assert "Join" not in plan
-        assert "Python" not in plan
-
-    def test_url_traps_partial_aggs_and_no_cartesian(self, spark):
-        """Template counting must partial-aggregate map-side (shuffle =
-        host x template cardinality); the host-totals join back is an
-        equi join, never cartesian; all-JVM."""
-        from ocrd_calamari_spark.entry_queries import q_url_traps
-
-        plan = plan_of(q_url_traps(spark, SF), "simple")
-        assert "partial_count" in plan
-        assert "CartesianProduct" not in plan
         assert "Python" not in plan

@@ -277,7 +277,7 @@ class TestCompaction:
         before = (read_output(spark, d)
                   .select("url", "text", "conf").toPandas()
                   .set_index("url").sort_index())
-        stats = compact_output(spark, d, target_files_per_chunk=1)
+        stats = compact_output(spark, d)
         assert stats["chunks"] > 0
         assert stats["files_after"] < stats["files_before"]
         after = (read_output(spark, d)
@@ -327,7 +327,7 @@ class TestCompaction:
         mid = read_output(spark, d)
         n_chunk0 = spark.read.parquet(tmp0).count()
         assert mid.count() == n0 - n_chunk0
-        compact_output(spark, d, target_files_per_chunk=1)
+        compact_output(spark, d)
         out = read_output(spark, d)
         assert out.count() == n0
         assert out.select("url").distinct().count() == n0
@@ -406,6 +406,8 @@ class TestResumeCorpusGuards:
 
         base = ["--source", "x", "--out", "y"]
         for extra in (["--buckets", "0"], ["--chunks", "0"],
-                      ["--partitions", "0"], ["--partitions", "-1"]):
+                      ["--partitions", "0"], ["--partitions", "-1"],
+                      ["--voter", "bogus"], ["--glyph-conf-cutoff", "0.5"],
+                      ["--glyph-conf-cutoff", "nan"]):
             with _pytest.raises(SystemExit):
                 parse_args(base + extra)
