@@ -10,7 +10,8 @@
 
 At 10^12-row scale the knobs that matter:
   --buckets   work-unit granularity for checkpoint/resume (xxhash64(url)
-              buckets; each chunk of buckets commits to the manifest)
+              buckets, or xxhash64(file path) for a warc: source; each
+              chunk of buckets commits to the manifest)
   --chunks    manifest commit frequency — smaller chunks = finer resume
   --since/--until  partition pruning on days(warc_ts) — reaches the
               Iceberg scan, prunes snapshots/files before any compute
@@ -36,9 +37,13 @@ def parse_args(argv):
     p.add_argument("--out", required=True, help="output root directory")
     p.add_argument("--snapshot-id", type=int, default=None,
                    help="pin an Iceberg snapshot (lineage + reproducibility)")
-    p.add_argument("--since", default=None, help="warc_ts lower bound")
-    p.add_argument("--until", default=None, help="warc_ts upper bound")
-    p.add_argument("--buckets", type=int, default=4096)
+    p.add_argument("--since", default=None,
+                   help="warc_ts lower bound (not for warc: sources)")
+    p.add_argument("--until", default=None,
+                   help="warc_ts upper bound (not for warc: sources)")
+    p.add_argument("--buckets", type=int, default=4096,
+                   help="resume work units: xxhash64(url) buckets; a "
+                        "warc: source buckets whole archives by file path")
     p.add_argument("--chunks", type=int, default=64)
     p.add_argument("--partitions", type=int, default=None,
                    help="explicit repartition width (default: let AQE size)")
@@ -61,6 +66,11 @@ def parse_args(argv):
         p.error("--buckets must be >= 1")
     if args.chunks < 1:
         p.error("--chunks must be >= 1")
+    if args.source.startswith("warc:") and (args.since is not None
+                                            or args.until is not None):
+        # read_pages would raise only after the session is up
+        p.error("--since/--until prune on warc_ts; a warc: source is "
+                "read as whole archives and has none")
     if args.partitions is not None and args.partitions < 1:
         # extract_df reads 0 as "unset" and Spark fails on a negative
         # width only after the session is up

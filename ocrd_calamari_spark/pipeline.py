@@ -1,5 +1,12 @@
 """Spark orchestration: read → prune → salt-repartition → mapInArrow → write.
 
+Two plans share the one ``mapInArrow`` function, chosen by the input frame:
+  - pages (parquet / Iceberg): scan → salted repartition → map;
+  - WARC archives (binaryFile rows, recognised by their ``content``
+    column): scan → map, where the map splits each archive into its
+    records and extracts them in the same task — one Python stage, no
+    shuffle, and resume chunks of whole archive files.
+
 The whole reference concurrency layer (ocrd_calamari/recognize.py:400-703 —
 mp queues, fill locks, dummy batches, spawn contexts) is replaced by this
 declarative plan; Spark owns batching, backpressure and worker lifecycle
@@ -7,7 +14,7 @@ declarative plan; Spark owns batching, backpressure and worker lifecycle
 
 Scale features (BASELINE.json north_rule):
   - partition pruning predicates on ``warc_ts`` reach the scan
-  - deterministic host-salted repartition for Zipf-skewed hosts
+  - deterministic host-salted repartition for Zipf-skewed hosts on pages
     (salt from xxhash64(url), never rand() — resume must be stable)
   - per-partition lineage (snapshot_id, file, part_id) on every output row
   - chunked checkpoint manifest → kill-and-resume without duplicate work
@@ -30,6 +37,7 @@ from ocrd_calamari_spark.schema import (
     KERNEL_INPUT_COLS,
     OUTPUT_SCHEMA,
 )
+from ocrd_calamari_spark.sources.warc import records_to_batch
 
 # ---------------------------------------------------------------------------
 # Source (S1/S2): Iceberg table in prod, parquet locally.  Iceberg gives
@@ -47,16 +55,22 @@ def read_pages(
 
     ``source``: ``iceberg:<catalog.db.table>``, ``warc:<path glob>``
     (Common-Crawl-style archives, sources/warc.py), or a parquet path.
+    A ``warc:`` source comes back as its binaryFile frame (path, content,
+    …), one row per archive, which ``extract_df`` splits inside its map.
+    An archive has no ``warc_ts`` column to prune on, so ``since`` /
+    ``until`` with a ``warc:`` source raise ValueError.
     """
+    if source.startswith("warc:") and (since is not None
+                                       or until is not None):
+        raise ValueError("since/until prune on warc_ts, which a warc: "
+                         "source (whole archive files) does not have")
     if source.startswith("iceberg:"):
         reader = spark.read.format("iceberg")
         if snapshot_id is not None:
             reader = reader.option("snapshot-id", str(snapshot_id))
         df = reader.load(source[len("iceberg:"):])
     elif source.startswith("warc:"):
-        from ocrd_calamari_spark.sources.warc import read_warc
-
-        df = read_warc(spark, source[len("warc:"):])
+        df = spark.read.format("binaryFile").load(source[len("warc:"):])
     else:
         df = spark.read.parquet(source)
     # Partition predicates: Catalyst pushes these to the scan
@@ -74,9 +88,36 @@ def read_pages(
 DEFAULT_SALT = 16  # sub-buckets per host for skew spreading
 
 
+def _is_archives(df: DataFrame) -> bool:
+    """A binaryFile frame of WARC archives rather than a pages frame."""
+    return "content" in df.columns
+
+
+def _pages_batches(batches):
+    """Pages batches pass through; an archive batch (binaryFile rows,
+    recognised by its ``content`` column) becomes one pages batch per
+    archive, carrying the row's ``_part_id`` to every record."""
+    for batch in batches:
+        names = batch.schema.names
+        if "content" not in names:
+            yield batch
+            continue
+        paths = batch.column("path")
+        content = batch.column("content")
+        part = batch.column("_part_id") if "_part_id" in names else None
+        for i in range(batch.num_rows):
+            pages = records_to_batch(
+                paths[i].as_py(), content[i].as_py(),
+                None if part is None else part[i].as_py())
+            if pages.num_rows:
+                yield pages
+
+
 def extraction_map_fn(cfg: ExtractConfig, accs: dict | None = None):
     """The one ``mapInArrow`` function of the engine (batch and streaming):
-    columnar extraction plus lineage passthrough.
+    columnar extraction plus lineage passthrough.  Its input is pages
+    batches or binaryFile archive batches, which it splits into records
+    first (``_pages_batches``).
 
     Lineage columns (_src_file, _src_row, _part_id) ride along the input
     batch and leave as the same Arrow arrays, sliced but not copied — the
@@ -90,7 +131,12 @@ def extraction_map_fn(cfg: ExtractConfig, accs: dict | None = None):
     output; accumulators can overcount on task retry, which is why they are
     the dashboard, not the ledger).
     """
-    return arrow_map_fn(cfg, to_arrow_schema(FLAT_OUTPUT_SCHEMA), accs)
+    extract = arrow_map_fn(cfg, to_arrow_schema(FLAT_OUTPUT_SCHEMA), accs)
+
+    def _fn(batches):
+        return extract(_pages_batches(batches))
+
+    return _fn
 
 
 def make_accumulators(spark: SparkSession) -> dict:
@@ -102,15 +148,20 @@ def make_accumulators(spark: SparkSession) -> dict:
 
 
 def with_part_id(df: DataFrame, n_buckets: int) -> DataFrame:
-    """Deterministic work-unit id: pmod(xxhash64(url), n_buckets).
+    """Deterministic work-unit id: pmod(xxhash64(url), n_buckets), or on
+    an archive frame pmod(xxhash64(_metadata.file_path), n_buckets).
 
     JVM-side xxhash64 — stable across runs/retries, the resume key.
-    NOTE: as a computed column this id cannot prune the scan; prefer a
+    NOTE: on pages this computed id cannot prune the scan; prefer a
     storage-aligned bucket column (``bucket_col`` in run_extraction) so
-    each resume chunk reads only its own files.
+    each resume chunk reads only its own files.  On archives the whole
+    file is the unit, and Spark evaluates a predicate over ``_metadata``
+    while it lists the files, so a chunk's filter on this id opens only
+    the chunk's own archives.
     """
+    key = "_metadata.file_path" if _is_archives(df) else "url"
     return df.withColumn(
-        "_part_id", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
+        "_part_id", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
     )
 
 
@@ -164,28 +215,48 @@ def extract_df(
     default ``_metadata.*`` exists only on Spark file sources (parquet/
     orc/csv); Iceberg DSv2 scans expose ``_file`` / ``_pos`` instead —
     run_extraction selects the right pair from the source scheme.
+
+    An archive frame (``read_pages(spark, "warc:…")``, recognised by its
+    ``content`` column) runs map-only: the map splits each archive into
+    its records and extracts them in the same task.  Record lineage
+    (file, record index) comes from the splitter, ``part_id`` from the
+    frame's ``_part_id`` when present, else pmod(xxhash64(url), 1<<14)
+    after the map.  ``lineage_cols``, ``num_partitions``, ``salt`` and
+    ``repartition`` are ignored there: parallelism is the scan's file
+    splits, because a repartition would shuffle whole archives.
     """
     cfg = cfg or ExtractConfig()
-    cols = list(KERNEL_INPUT_COLS)
-    sel = df
-    if with_lineage:
-        if "_part_id" not in sel.columns:
-            sel = with_part_id(sel, 1 << 14)
-        sel = sel.withColumn("_src_file", F.expr(lineage_cols[0]))
-        sel = sel.withColumn("_src_row", F.expr(lineage_cols[1]))
-        cols = cols + list(LINEAGE_COLS)
-    sel = sel.select(*cols)
-    if repartition:
-        host = F.parse_url(F.col("url"), F.lit("HOST"))
-        salt_col = F.pmod(F.xxhash64(F.col("url")), F.lit(salt))
-        if num_partitions:
-            sel = sel.repartition(num_partitions, host, salt_col)
-        else:
-            sel = sel.repartition(host, salt_col)
+    archives = _is_archives(df)
+    if archives:
+        sel = df.select(*[c for c in ("path", "content", "_part_id")
+                          if c in df.columns])
+    else:
+        cols = list(KERNEL_INPUT_COLS)
+        sel = df
+        if with_lineage:
+            if "_part_id" not in sel.columns:
+                sel = with_part_id(sel, 1 << 14)
+            sel = sel.withColumn("_src_file", F.expr(lineage_cols[0]))
+            sel = sel.withColumn("_src_row", F.expr(lineage_cols[1]))
+            cols = cols + list(LINEAGE_COLS)
+        sel = sel.select(*cols)
+        if repartition:
+            host = F.parse_url(F.col("url"), F.lit("HOST"))
+            salt_col = F.pmod(F.xxhash64(F.col("url")), F.lit(salt))
+            if num_partitions:
+                sel = sel.repartition(num_partitions, host, salt_col)
+            else:
+                sel = sel.repartition(host, salt_col)
     mapped = sel.mapInArrow(
         extraction_map_fn(cfg, accumulators),
         FLAT_OUTPUT_SCHEMA,
     )
+    if archives and not with_lineage:
+        mapped = mapped.withColumns({
+            f.name: F.lit(None).cast(f.dataType)
+            for f in FLAT_OUTPUT_SCHEMA.fields if f.name in LINEAGE_COLS})
+    elif archives and "_part_id" not in df.columns:
+        mapped = with_part_id(mapped, 1 << 14)
     out_cols = [f.name for f in OUTPUT_SCHEMA.fields if f.name != "lineage"]
     return mapped.select(
         *out_cols,
@@ -283,6 +354,11 @@ def run_extraction(
     own files; the computed-``_part_id`` fallback is correct but re-reads
     the full source once per chunk (64× at production defaults).
     ``n_buckets`` must equal the physical bucket count in that case.
+
+    A ``warc:`` source buckets whole archive files by their path
+    (``with_part_id``; manifest ``bucket_scheme`` ``"_warc_file"``): each
+    chunk opens only its own archives, and every record of a file lands
+    in the file's chunk.
     """
     import shutil
 
@@ -296,7 +372,12 @@ def run_extraction(
     # pmod(xxhash64(url)) fallback assign the same url to DIFFERENT part
     # ids, so a resume that switches scheme would reinterpret completed
     # part ids under the other hashing.
-    bucket_scheme = bucket_col if bucket_col is not None else "_computed"
+    if bucket_col is not None:
+        bucket_scheme = bucket_col
+    elif source.startswith("warc:"):
+        bucket_scheme = "_warc_file"
+    else:
+        bucket_scheme = "_computed"
     for rec in done.values():
         rec_n = rec.get("n_buckets")
         if rec_n is not None and rec_n != n_buckets:
@@ -381,9 +462,6 @@ def run_extraction(
         pages = with_part_id(pages, n_buckets)
     if source.startswith("iceberg:"):
         lineage_cols = ("_file", "_pos")  # Iceberg DSv2 metadata columns
-    elif source.startswith("warc:"):
-        # record-level lineage emitted by the WARC record splitter itself
-        lineage_cols = ("_src_file", "_src_row")
     else:
         lineage_cols = ("_metadata.file_path", "_metadata.row_index")
 

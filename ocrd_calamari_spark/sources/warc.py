@@ -6,15 +6,19 @@ body, CRLFCRLF — optionally gzip-compressed with one member per record
 (the Common Crawl layout; multi-member gzip decompresses in one call).
 
 Spark shape: `spark.read.format("binaryFile")` gives one row per WARC
-file (path, bytes); record splitting + HTTP payload extraction run in a
-``mapInPandas`` batch over those rows.  Parallelism is file-granular —
-exactly right for the real corpus shape (Common Crawl segments are ~1 GB
-gzip × ~72k files per crawl, far more files than executor slots).  Each
-task holds one file's bytes; executor memory budgets ≈ concurrent tasks ×
-file size, the same budget every WARC reader (warcio, FastWARC, Spark
-binaryFile) carries.  A DSv2 streaming-split reader would lift the
-single-file-in-memory bound; the record parser below would be reused
-unchanged.
+file (path, bytes).  The engine's one ``mapInArrow`` function splits each
+file with ``records_to_rows`` and hands its response records to the
+extraction kernel as one Arrow pages batch (``records_to_batch``), in the
+same task: the html never returns to the JVM and there is no shuffle.
+Parallelism is file-granular — exactly right for the real corpus shape
+(Common Crawl segments are ~1 GB gzip × ~72k files per crawl, far more
+files than executor slots, and a file above ``maxPartitionBytes`` is a
+task of its own).  Each task holds one file's bytes; executor memory
+budgets ≈ concurrent tasks × file size, the same budget every WARC reader
+(warcio, FastWARC, Spark binaryFile) carries.  A DSv2 streaming-split
+reader would lift the single-file-in-memory bound; the record parser
+below would be reused unchanged.  ``read_warc`` is the same splitter as a
+pages DataFrame, for staging archives into a pages table.
 
 Reference analogue: S1/S3 — the workspace/file-group scan + page payload
 load (`ocrd_calamari/recognize.py:110-124` resolves image payloads from
@@ -28,6 +32,7 @@ from datetime import datetime, timezone
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -237,10 +242,50 @@ def records_to_rows(name: str, data: bytes) -> Iterator[dict]:
         }
 
 
+# The pages batch the extraction kernel reads (schema.KERNEL_INPUT_COLS
+# plus the lineage columns of kernel/columnar.py).
+_PAGES_BATCH_SCHEMA = pa.schema([
+    ("url", pa.string()),
+    ("html", pa.binary()),
+    ("text", pa.string()),
+    ("lang", pa.string()),
+    ("_src_file", pa.string()),
+    ("_src_row", pa.int64()),
+    ("_part_id", pa.int32()),
+])
+
+
+def records_to_batch(name: str, data: bytes,
+                     part_id: int | None = None) -> pa.RecordBatch:
+    """WARC file bytes → one Arrow pages batch of its response records:
+    the rows of ``records_to_rows`` without ``warc_ts``, plus the file's
+    ``_part_id`` on every record."""
+    url, html, row = [], [], []
+    for rec in records_to_rows(name, data):
+        url.append(rec["url"])
+        html.append(rec["html"])
+        row.append(rec["_src_row"])
+    n = len(url)
+    return pa.RecordBatch.from_arrays([
+        pa.array(url, pa.string()),
+        pa.array(html, pa.binary()),
+        pa.nulls(n, pa.string()),
+        pa.nulls(n, pa.string()),
+        pa.array([name] * n, pa.string()),
+        pa.array(row, pa.int64()),
+        pa.array([part_id] * n, pa.int32()),
+    ], schema=_PAGES_BATCH_SCHEMA)
+
+
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """WARC file(s) → pages DataFrame (url, warc_ts, html, text, lang,
     _src_file, _src_row): a binaryFile scan whose rows are split into
-    response records by ``records_to_rows`` inside ``mapInPandas``."""
+    response records by ``records_to_rows`` inside ``mapInPandas``.
+
+    The staging view of an archive (e.g. for ``write_bucketed_staging``).
+    Extraction does not go through it: ``pipeline.extract_df`` splits the
+    binaryFile rows of ``read_pages(spark, "warc:…")`` inside its own
+    map."""
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
 

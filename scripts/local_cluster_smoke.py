@@ -7,10 +7,11 @@ step toward real-cluster confidence in a sandbox with no cluster.
 Checks (all hard asserts):
 1. extraction byte-identity: Spark output text/conf per url ==
    the committed golden parquet (the frozen single-process kernel
-   oracle) — mapInArrow over executors in separate JVMs;
+   oracle) — parquet scan → salted repartition (cross-JVM shuffle
+   files) → mapInArrow over executors in separate JVMs;
 2. the WARC path: ``gen_pages(400, seed=42)`` written as WARC files and
    run through ``extract_df(read_pages(spark, "warc:…"))`` — binaryFile →
-   records → salted repartition (cross-JVM shuffle files) → mapInArrow —
+   one mapInArrow that splits the records and extracts them, no shuffle —
    equals single-process ``extract_batch`` over the same records, per url.
 
 Usage: python scripts/local_cluster_smoke.py   (~2 min)
@@ -98,12 +99,11 @@ def main() -> None:
     work = tempfile.mkdtemp(prefix="ocs_mjvm_")
     src = os.path.join(work, "pages.parquet")
     write_pages_parquet(gen_pages(400, seed=42), src)
-    out = (
-        extract_df(read_pages(spark, src),
-                   ExtractConfig(textequiv_level="word"))
-        .select("url", "text", "conf", "error")
-        .toPandas().set_index("url")
-    )
+    df = extract_df(read_pages(spark, src),
+                    ExtractConfig(textequiv_level="word"))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" in plan, "expected the salted repartition exchange"
+    out = df.select("url", "text", "conf", "error").toPandas().set_index("url")
     golden = pd.read_parquet(GOLDEN).set_index("url")
     joined = golden.join(out, lsuffix="_o", rsuffix="_s")
     assert len(joined) == 400
@@ -113,9 +113,9 @@ def main() -> None:
     assert (joined.loc[ok, "conf_o"] == joined.loc[ok, "conf_s"]).all()
     assert (joined["error_o"].isna() == joined["error_s"].isna()).all()
     print("[OK]   golden e2e: 400 urls byte-identical across 2 executor "
-          "JVMs (cross-JVM Arrow)")
+          "JVMs (cross-JVM Arrow and shuffle)")
 
-    # --- 2. WARC path: binaryFile → records → salted shuffle → map ---
+    # --- 2. WARC path: binaryFile → one map (split + extract) ---
     pages = gen_pages(400, seed=42)
     warc_dir = os.path.join(work, "warc")
     os.makedirs(warc_dir)
@@ -126,10 +126,10 @@ def main() -> None:
         with open(path, "rb") as f:
             records.extend(records_to_rows(path, f.read()))
     cfg = ExtractConfig(textequiv_level="word")
-    df = extract_df(read_pages(spark, "warc:" + warc_dir), cfg,
-                    lineage_cols=("_src_file", "_src_row"))
+    df = extract_df(read_pages(spark, "warc:" + warc_dir), cfg)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in plan, "expected the salted repartition exchange"
+    assert "Exchange" not in plan, "the WARC plan must not shuffle"
+    assert plan.count("MapInArrow") == 1, "expected one fused map"
     got = {r["url"]: r.asDict(recursive=True)
            for r in df.select("url", *COMPARED).collect()}
     oracle = extract_batch(pd.DataFrame(records), cfg)
@@ -140,7 +140,7 @@ def main() -> None:
                   for c in COMPARED)]
     assert not bad, f"WARC path differs from extract_batch on {bad[:5]}"
     print(f"[OK]   warc path: 400 urls from {WARC_FILES} WARC files equal "
-          "extract_batch across a cross-JVM shuffle")
+          "extract_batch through one fused map stage")
 
     spark.stop()
     print("multi-JVM smoke: all checks pass")

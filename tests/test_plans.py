@@ -66,6 +66,20 @@ class TestJoinAndAggStrategies:
         assert "Exchange" not in plan  # map-only: scan → python map, no shuffle
         assert "MapInArrow" in plan
 
+    def test_warc_plan_is_one_fused_map_stage(self, spark, pages_pdf,
+                                              tmp_path):
+        """binaryFile → record split + kernel in one mapInArrow: no
+        pandas reader, no shuffle of records."""
+        from ocrd_calamari_spark.sources.warc import write_warc
+
+        write_warc(pages_pdf.head(10), str(tmp_path / "a.warc"))
+        out = extract_df(read_pages(spark, "warc:" + str(tmp_path)),
+                         ExtractConfig())
+        plan = plan_of(out, "simple")
+        assert "Exchange" not in plan
+        assert plan.count("MapInArrow") == 1
+        assert "MapInPandas" not in plan
+
     def test_salted_repartition_is_single_exchange(self, spark, pages_parquet):
         df = read_pages(spark, pages_parquet)
         out = extract_df(df, ExtractConfig(), with_lineage=False,

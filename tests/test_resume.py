@@ -408,6 +408,8 @@ class TestResumeCorpusGuards:
         for extra in (["--buckets", "0"], ["--chunks", "0"],
                       ["--partitions", "0"], ["--partitions", "-1"],
                       ["--voter", "bogus"], ["--glyph-conf-cutoff", "0.5"],
-                      ["--glyph-conf-cutoff", "nan"]):
+                      ["--glyph-conf-cutoff", "nan"],
+                      ["--source", "warc:x", "--since", "2024-06-01"],
+                      ["--source", "warc:x", "--until", "2024-07-01"]):
             with _pytest.raises(SystemExit):
                 parse_args(base + extra)

@@ -1,19 +1,39 @@
-"""WARC source: round-trip, gzip members, record lineage, and end-to-end
-extraction parity with the parquet-sourced pipeline."""
+"""WARC source: round-trip, gzip members, record lineage, end-to-end
+extraction parity with the parquet-sourced pipeline, the fused archive
+plan against the staged pages view, and archive-granular resume."""
 
 import gzip
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from ocrd_calamari_spark.config import ExtractConfig
-from ocrd_calamari_spark.pipeline import run_extraction, read_output
+from ocrd_calamari_spark.pipeline import (
+    Manifest,
+    extract_df,
+    read_output,
+    read_pages,
+    run_extraction,
+    validate_output,
+    with_part_id,
+)
 from ocrd_calamari_spark.sources.warc import (
+    _CRLF2,
     iter_warc_records,
     read_warc,
     records_to_rows,
     write_warc,
 )
+
+
+def _response(url: bytes, http_head: bytes, payload: bytes) -> bytes:
+    body = http_head + _CRLF2 + payload
+    head = (b"WARC/1.0\r\nWARC-Type: response\r\n"
+            b"WARC-Target-URI: " + url + b"\r\n"
+            b"WARC-Date: 2024-06-01T00:00:00Z\r\n"
+            b"Content-Length: " + str(len(body)).encode())
+    return head + _CRLF2 + body + _CRLF2
 
 
 @pytest.fixture(scope="module")
@@ -217,34 +237,23 @@ class TestHttpBodyDecoding:
         encoding — the reader must hand the kernel markup bytes."""
         import gzip as _gz
 
-        from ocrd_calamari_spark.sources.warc import _CRLF2
-
         html = b"<html><body><p>hello chunked world</p></body></html>"
-
-        def record(url, http_head: bytes, payload: bytes) -> bytes:
-            body = http_head + _CRLF2 + payload
-            head = (b"WARC/1.0\r\nWARC-Type: response\r\n"
-                    b"WARC-Target-URI: " + url + b"\r\n"
-                    b"WARC-Date: 2024-06-01T00:00:00Z\r\n"
-                    b"Content-Length: " + str(len(body)).encode())
-            return head + _CRLF2 + body + _CRLF2
-
         mid = len(html) // 2
         chunked = (hex(mid)[2:].encode() + b"\r\n" + html[:mid] + b"\r\n"
                    + hex(len(html) - mid)[2:].encode() + b"\r\n" + html[mid:]
                    + b"\r\n0\r\n\r\n")
         gz = _gz.compress(html)
         data = (
-            record(b"http://a/", b"HTTP/1.1 200 OK\r\n"
+            _response(b"http://a/", b"HTTP/1.1 200 OK\r\n"
                    b"Transfer-Encoding: chunked", chunked)
-            + record(b"http://b/", b"HTTP/1.1 200 OK\r\n"
+            + _response(b"http://b/", b"HTTP/1.1 200 OK\r\n"
                      b"Content-Encoding: gzip", gz)
-            + record(b"http://c/", b"HTTP/1.1 200 OK\r\n"
+            + _response(b"http://c/", b"HTTP/1.1 200 OK\r\n"
                      b"Transfer-Encoding: chunked\r\n"
                      b"Content-Encoding: gzip",
                      hex(len(gz))[2:].encode() + b"\r\n" + gz
                      + b"\r\n0\r\n\r\n")
-            + record(b"http://d/", b"HTTP/1.1 200 OK", html)
+            + _response(b"http://d/", b"HTTP/1.1 200 OK", html)
         )
         p = str(tmp_path / "enc.warc")
         with open(p, "wb") as f:
@@ -265,3 +274,175 @@ class TestHttpBodyDecoding:
         body2 = (b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
                  b"5\r\nhello")
         assert _http_payload(body2) == b"hello"
+
+
+def _odd_records() -> list[bytes]:
+    """warcinfo, request and metadata records around chunked, gzip and
+    plain responses, one of them a binary (poison) payload."""
+    html = b"<html><body><p>fused archive paragraph one</p></body></html>"
+    gz = gzip.compress(html)
+    chunked = (hex(10)[2:].encode() + b"\r\n" + html[:10] + b"\r\n"
+               + hex(len(html) - 10)[2:].encode() + b"\r\n" + html[10:]
+               + b"\r\n0\r\n\r\n")
+
+    def other(rtype: bytes) -> bytes:
+        return (b"WARC/1.0\r\nWARC-Type: " + rtype + b"\r\n"
+                b"WARC-Target-URI: https://odd.example/other\r\n"
+                b"Content-Length: 4\r\n\r\nbody\r\n\r\n")
+
+    return [
+        b"WARC/1.0\r\nWARC-Type: warcinfo\r\nContent-Length: 9\r\n\r\n"
+        b"software:\r\n\r\n",
+        other(b"request"),
+        _response(b"https://odd.example/chunked",
+                  b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked", chunked),
+        other(b"metadata"),
+        _response(b"https://odd.example/gzip",
+                  b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip", gz),
+        _response(b"https://odd.example/poison", b"HTTP/1.1 200 OK",
+                  b"\x00\x01\x02\x03" * 512),
+        _response(b"https://odd.example/plain", b"HTTP/1.1 200 OK", html),
+    ]
+
+
+def _write_archives(pages, d, n_files: int) -> None:
+    """``pages`` spread over ``n_files`` archives, plain and gzip."""
+    for k in range(n_files):
+        name = "part-%02d.warc" % k + (".gz" if k % 2 else "")
+        write_warc(pages.iloc[k::n_files], os.path.join(d, name),
+                   compress=bool(k % 2))
+
+
+def _n_records(path: str) -> int:
+    with open(path, "rb") as f:
+        return len(list(records_to_rows(path, f.read())))
+
+
+def _expected_records(d: str) -> int:
+    return sum(_n_records(os.path.join(d, name)) for name in os.listdir(d))
+
+
+class TestFusedArchivePlan:
+    """``extract_df`` over ``read_pages(spark, "warc:…")`` splits and
+    extracts in one map; its output must equal the staged plan that
+    extracts the ``read_warc`` pages view, row for row."""
+
+    @pytest.fixture(scope="class")
+    def archive_dir(self, pages_pdf, tmp_path_factory):
+        d = str(tmp_path_factory.mktemp("fused"))
+        _write_archives(pages_pdf.head(72), d, 3)
+        # the odd records as a per-record multi-member gzip archive (the
+        # Common Crawl layout)
+        with open(os.path.join(d, "odd.warc.gz"), "wb") as f:
+            f.write(b"".join(gzip.compress(r) for r in _odd_records()))
+        return d
+
+    @pytest.mark.parametrize("level", ["block", "word", "glyph"])
+    def test_fused_equals_staged_pages_view(self, spark, archive_dir, level):
+        cfg = ExtractConfig(textequiv_level=level)
+        fused = extract_df(read_pages(spark, "warc:" + archive_dir), cfg)
+        staged = extract_df(read_warc(spark, archive_dir), cfg,
+                            lineage_cols=("_src_file", "_src_row"))
+        assert fused.schema == staged.schema
+
+        def rows(df):
+            return sorted((r.asDict(recursive=True) for r in df.collect()),
+                          key=lambda r: r["url"])
+
+        a, b = rows(fused), rows(staged)
+        assert len(a) == _expected_records(archive_dir)
+        assert a == b
+        by_url = {r["url"]: r for r in a}
+        assert by_url["https://odd.example/poison"]["error"] is not None
+        assert any(r["error"] is not None for r in a
+                   if not r["url"].startswith("https://odd."))
+        for u in ("chunked", "gzip", "plain"):
+            assert by_url["https://odd.example/" + u]["text"] == (
+                "fused archive paragraph one")
+        assert all(r["lineage"]["file"] and r["lineage"]["row_index"] >= 1
+                   and r["lineage"]["part_id"] is not None for r in a)
+
+    def test_without_lineage_matches_staged(self, spark, archive_dir):
+        cfg = ExtractConfig()
+        fused = extract_df(read_pages(spark, "warc:" + archive_dir), cfg,
+                           with_lineage=False)
+        staged = extract_df(read_warc(spark, archive_dir), cfg,
+                            with_lineage=False)
+        assert fused.schema == staged.schema
+        assert (sorted(fused.select("url", "text", "lineage").collect())
+                == sorted(staged.select("url", "text", "lineage").collect()))
+
+    def test_window_on_archives_raises(self, spark, archive_dir):
+        for window in ({"since": "2024-01-01"}, {"until": "2024-01-01"}):
+            with pytest.raises(ValueError, match="warc_ts"):
+                read_pages(spark, "warc:" + archive_dir, **window)
+
+
+class TestArchiveGranularResume:
+    """A ``warc:`` source resumes by whole archive files: every record of
+    a file lands in the file's chunk, and a chunk opens only its own
+    archives."""
+
+    N_FILES = 6
+
+    @pytest.fixture()
+    def archive_dir(self, pages_pdf, tmp_path):
+        d = str(tmp_path / "warc")
+        os.makedirs(d)
+        _write_archives(pages_pdf.head(120), d, self.N_FILES)
+        return d
+
+    def test_killed_then_resumed_run_commits_each_archive_once(
+            self, spark, archive_dir, tmp_path):
+        src = "warc:" + archive_dir
+        out = str(tmp_path / "out")
+        kw = dict(n_buckets=8, n_chunks=4)
+        m1 = run_extraction(spark, src, out, ExtractConfig(),
+                            stop_after_chunks=1, **kw)
+        assert m1["chunks_this_run"] == 1 and not m1["complete"]
+        m2 = run_extraction(spark, src, out, ExtractConfig(), **kw)
+        assert m2["complete"]
+        assert m1["rows_this_run"] + m2["rows_this_run"] == m2["rows_total"]
+
+        recs = list(Manifest(out).completed().values())
+        assert {r["bucket_scheme"] for r in recs} == {"_warc_file"}
+        files = [f["file"] for r in recs for f in r["files"]]
+        assert len(files) == len(set(files)) == self.N_FILES
+        assert sorted(os.path.basename(f) for f in files) == sorted(
+            os.listdir(archive_dir))
+
+        n_records = _expected_records(archive_dir)
+        res = read_output(spark, out)
+        assert res.count() == n_records == m2["rows_total"]
+        assert res.groupBy("lineage.file", "lineage.row_index").count() \
+            .where("count > 1").count() == 0
+        assert validate_output(spark, out)["ok"]
+
+    def test_resume_against_computed_scheme_raises(self, spark, archive_dir,
+                                                   tmp_path):
+        out = str(tmp_path / "out")
+        Manifest(out).commit({
+            "chunk_id": 0, "part_ids": [0], "n_buckets": 8,
+            "bucket_scheme": "_computed", "source": "warc:" + archive_dir,
+            "rows": 0, "failed": 0, "overwrote": 0, "raw_charset": 0,
+            "files": [],
+        })
+        with pytest.raises(ValueError, match="bucket_scheme"):
+            run_extraction(spark, "warc:" + archive_dir, out,
+                           ExtractConfig(), n_buckets=8, n_chunks=4)
+
+    def test_chunk_opens_only_its_own_archives(self, spark, archive_dir):
+        pages = with_part_id(read_pages(spark, "warc:" + archive_dir), 64)
+        part = {r["path"]: r["_part_id"]
+                for r in pages.select("path", "_part_id").collect()}
+        keep = part[min(part)]
+        others = [p for p, b in part.items() if b != keep]
+        assert others
+        # the listing is already cached: a scan that opened another
+        # chunk's archive would now fail on the missing file
+        for p in others:
+            os.remove(p[len("file:"):])
+        chunk = pages.where(F.col("_part_id").isin([keep]))
+        got = extract_df(chunk, ExtractConfig())
+        assert got.count() == sum(_n_records(p[len("file:"):])
+                                  for p, b in part.items() if b == keep)
