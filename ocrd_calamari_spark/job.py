@@ -46,7 +46,9 @@ def parse_args(argv):
                         "warc: source buckets whole archives by file path")
     p.add_argument("--chunks", type=int, default=64)
     p.add_argument("--partitions", type=int, default=None,
-                   help="explicit repartition width (default: let AQE size)")
+                   help="width of the extraction stage on pages (default: "
+                        "one task per core, or the scan's own splits when "
+                        "there are at least that many)")
     p.add_argument("--level", default="block",
                    choices=["block", "word", "glyph"])
     p.add_argument("--voter", default="confidence_voter_default_ctc")

@@ -1,7 +1,8 @@
-"""Spark orchestration: read → prune → salt-repartition → mapInArrow → write.
+"""Spark orchestration: read → prune → size the map stage → mapInArrow → write.
 
 Two plans share the one ``mapInArrow`` function, chosen by the input frame:
-  - pages (parquet / Iceberg): scan → salted repartition → map;
+  - pages (parquet / Iceberg): scan → map, with one url-hash repartition
+    in between when the scan has fewer splits than the stage's width;
   - WARC archives (binaryFile rows, recognised by their ``content``
     column): scan → map, where the map splits each archive into its
     records and extracts them in the same task — one Python stage, no
@@ -14,8 +15,10 @@ declarative plan; Spark owns batching, backpressure and worker lifecycle
 
 Scale features (BASELINE.json north_rule):
   - partition pruning predicates on ``warc_ts`` reach the scan
-  - deterministic host-salted repartition for Zipf-skewed hosts on pages
-    (salt from xxhash64(url), never rand() — resume must be stable)
+  - one wave of Python tasks on pages: a task per core, or the scan's
+    own byte-balanced splits when there are at least that many; the
+    repartition key is the url alone, which spreads a Zipf-skewed host
+    evenly and is deterministic (resume must be stable)
   - per-partition lineage (snapshot_id, file, part_id) on every output row
   - chunked checkpoint manifest → kill-and-resume without duplicate work
   - docs/sec + failure counts from the written output (exact, replayable)
@@ -85,9 +88,6 @@ def read_pages(
 # ---------------------------------------------------------------------------
 # Extraction plan
 # ---------------------------------------------------------------------------
-DEFAULT_SALT = 16  # sub-buckets per host for skew spreading
-
-
 def _is_archives(df: DataFrame) -> bool:
     """A binaryFile frame of WARC archives rather than a pages frame."""
     return "content" in df.columns
@@ -197,7 +197,6 @@ def extract_df(
     cfg: ExtractConfig | None = None,
     *,
     num_partitions: int | None = None,
-    salt: int = DEFAULT_SALT,
     snapshot_id: int | None = None,
     with_lineage: bool = True,
     repartition: bool = True,
@@ -208,8 +207,15 @@ def extract_df(
     """The core logical plan: pages DataFrame → extraction output DataFrame.
 
     Column-prunes to exactly the kernel inputs (+ lineage cols) before the
-    UDF so the scan reads only url/html/text/lang; salts Zipf-skewed hosts
-    deterministically before repartitioning.
+    UDF so the scan reads only url/html/text/lang.
+
+    On a pages frame the map stage is ``num_partitions`` wide, else one
+    task per core (``defaultParallelism``).  Without ``num_partitions``, a
+    scan that already yields at least that many splits runs map-only:
+    Spark sizes those splits by bytes, and kernel cost follows the html
+    bytes.  Otherwise the frame is hash-repartitioned once by url, which
+    spreads even a Zipf-skewed host over every task.  ``repartition=False``
+    always runs map-only on the scan's splits.
 
     ``lineage_cols``: (file, row-position) metadata expressions.  The
     default ``_metadata.*`` exists only on Spark file sources (parquet/
@@ -221,7 +227,7 @@ def extract_df(
     its records and extracts them in the same task.  Record lineage
     (file, record index) comes from the splitter, ``part_id`` from the
     frame's ``_part_id`` when present, else pmod(xxhash64(url), 1<<14)
-    after the map.  ``lineage_cols``, ``num_partitions``, ``salt`` and
+    after the map.  ``lineage_cols``, ``num_partitions`` and
     ``repartition`` are ignored there: parallelism is the scan's file
     splits, because a repartition would shuffle whole archives.
     """
@@ -241,12 +247,11 @@ def extract_df(
             cols = cols + list(LINEAGE_COLS)
         sel = sel.select(*cols)
         if repartition:
-            host = F.parse_url(F.col("url"), F.lit("HOST"))
-            salt_col = F.pmod(F.xxhash64(F.col("url")), F.lit(salt))
-            if num_partitions:
-                sel = sel.repartition(num_partitions, host, salt_col)
-            else:
-                sel = sel.repartition(host, salt_col)
+            width = (num_partitions
+                     or sel.sparkSession.sparkContext.defaultParallelism)
+            # getNumPartitions plans the scan (lists files), runs no job
+            if num_partitions or sel.rdd.getNumPartitions() < width:
+                sel = sel.repartition(width, F.col("url"))
     mapped = sel.mapInArrow(
         extraction_map_fn(cfg, accumulators),
         FLAT_OUTPUT_SCHEMA,

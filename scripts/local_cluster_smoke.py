@@ -7,8 +7,9 @@ step toward real-cluster confidence in a sandbox with no cluster.
 Checks (all hard asserts):
 1. extraction byte-identity: Spark output text/conf per url ==
    the committed golden parquet (the frozen single-process kernel
-   oracle) — parquet scan → salted repartition (cross-JVM shuffle
-   files) → mapInArrow over executors in separate JVMs;
+   oracle) — a one-split parquet scan → url-hash repartition to one
+   task per executor core (8; cross-JVM shuffle files) → mapInArrow
+   over executors in separate JVMs;
 2. the WARC path: ``gen_pages(400, seed=42)`` written as WARC files and
    run through ``extract_df(read_pages(spark, "warc:…"))`` — binaryFile →
    one mapInArrow that splits the records and extracts them, no shuffle —
@@ -20,6 +21,7 @@ Usage: python scripts/local_cluster_smoke.py   (~2 min)
 from __future__ import annotations
 
 import os
+import re
 import sys
 import tempfile
 
@@ -102,7 +104,8 @@ def main() -> None:
     df = extract_df(read_pages(spark, src),
                     ExtractConfig(textequiv_level="word"))
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in plan, "expected the salted repartition exchange"
+    assert re.search(r"Exchange hashpartitioning\(url#\d+, 8\)", plan), \
+        "expected one url-hash repartition to the 8 executor cores"
     out = df.select("url", "text", "conf", "error").toPandas().set_index("url")
     golden = pd.read_parquet(GOLDEN).set_index("url")
     joined = golden.join(out, lsuffix="_o", rsuffix="_s")

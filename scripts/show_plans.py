@@ -60,14 +60,14 @@ def main():
         plan_of(ext, "simple"),
     ))
 
-    ext_salted = extract_df(pages, ExtractConfig(), with_lineage=False,
-                            num_partitions=16, salt=8)
+    ext_url = extract_df(pages, ExtractConfig(), with_lineage=False)
     sections.append((
-        "Extraction (host-salted repartition fallback)",
-        "Exactly ONE Exchange, keyed on (host, pmod(xxhash64(url), salt)) — "
-        "the explicit Zipf-skew spreading the north_rule requires, opt-in "
-        "because it re-writes payload bytes through shuffle storage.",
-        plan_of(ext_salted, "simple"),
+        "Extraction (url-hash repartition when the scan has few splits)",
+        "Exactly ONE Exchange, hashpartitioning(url, cores): one wave of "
+        "Python tasks, and the url hash spreads a Zipf-skewed host over "
+        "every task.  A scan with at least one split per core runs map-only "
+        "instead, so at 100 TB no payload is re-written to shuffle storage.",
+        plan_of(ext_url, "simple"),
     ))
 
     q = QUERIES["minhash_dedup"](spark, sf)

@@ -154,30 +154,47 @@ class TestGlyphLevelThroughSpark:
 
 
 class TestSkewDistribution:
-    def test_salted_repartition_spreads_skewed_host(self, spark, pages_parquet):
-        """host00 holds ~30% of rows (gen.py Zipf fixture); after the salted
-        repartition no output partition should hold more than ~3x the mean."""
-        from pyspark.sql import functions as F
+    @pytest.fixture(scope="class")
+    def zipf_pages(self, tmp_path_factory):
+        from ocrd_calamari_spark.gen import gen_pages, write_pages_parquet
 
-        df = read_pages(spark, pages_parquet)
-        n_parts = 16
-        host = F.parse_url(F.col("url"), F.lit("HOST"))
-        salted = df.repartition(
-            n_parts, host, F.pmod(F.xxhash64("url"), F.lit(8))
-        )
-        sizes = (
-            salted.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid").count().collect()
-        )
-        counts = [r["count"] for r in sizes]
-        assert max(counts) <= 3 * (sum(counts) / len(counts))
-        # unsalted repartition by host alone concentrates ~30% in one task
-        unsalted = df.repartition(n_parts, host)
-        sizes_u = (
-            unsalted.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid").count().collect()
-        )
-        assert max(r["count"] for r in sizes_u) > max(counts)
+        pdf = gen_pages(1500, seed=5)
+        path = str(tmp_path_factory.mktemp("zipf") / "pages.parquet")
+        write_pages_parquet(pdf, path)
+        return pdf, path
+
+    def test_url_key_spreads_skewed_host(self, spark, zipf_pages):
+        """host00 holds ~30% of rows (gen.py Zipf fixture).  The engine's
+        url-keyed repartition (one scan split → one task per core at
+        local[4]) leaves no task empty and none above 3x the mean, in rows
+        and in html bytes, and spreads host00 over every task."""
+        pdf, path = zipf_pages
+        df = read_pages(spark, path)
+        out = extract_df(df, ExtractConfig(), with_lineage=False)
+        pid = (out.select("url", F.spark_partition_id().alias("pid"))
+               .toPandas())
+        n_parts = spark.sparkContext.defaultParallelism
+        tasks = pdf.merge(pid, on="url", validate="one_to_one")
+        assert len(tasks) == len(pdf)
+        tasks["html_bytes"] = tasks["html"].map(len)
+        per_task = tasks.groupby("pid").agg(
+            rows=("url", "size"), html_bytes=("html_bytes", "sum"))
+        assert sorted(per_task.index) == list(range(n_parts))
+        for col in ("rows", "html_bytes"):
+            assert per_task[col].max() <= 3 * per_task[col].mean(), col
+        host = tasks["url"].str.extract(r"//([^/]+)/", expand=False)
+        hot = host.value_counts().idxmax()
+        assert hot == "host00.example"
+        assert tasks.loc[host == hot, "pid"].nunique() == n_parts
+        # repartitioning by host alone puts all of host00 in one task,
+        # which then holds more rows than any url-keyed task
+        by_host = (df.repartition(n_parts, F.parse_url(F.col("url"),
+                                                       F.lit("HOST")))
+                   .select("url", F.spark_partition_id().alias("pid"))
+                   .toPandas())
+        assert by_host.loc[by_host["url"].str.contains("//" + hot + "/"),
+                           "pid"].nunique() == 1
+        assert by_host["pid"].value_counts().max() > per_task["rows"].max()
 
 
 class TestParallelismInvariance:

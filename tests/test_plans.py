@@ -5,6 +5,7 @@ partial aggregation, and no spurious exchanges in the map-only pipeline."""
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -80,12 +81,49 @@ class TestJoinAndAggStrategies:
         assert plan.count("MapInArrow") == 1
         assert "MapInPandas" not in plan
 
-    def test_salted_repartition_is_single_exchange(self, spark, pages_parquet):
+    def test_explicit_width_is_single_exchange(self, spark, pages_parquet):
         df = read_pages(spark, pages_parquet)
         out = extract_df(df, ExtractConfig(), with_lineage=False,
-                         num_partitions=16, salt=8)
+                         num_partitions=16)
         plan = plan_of(out, "simple")
         assert plan.count("Exchange") == 1
+        assert re.search(r"hashpartitioning\(url#\d+, 16\)", plan)
+
+    def test_few_splits_repartition_once_by_url(self, spark, pages_parquet):
+        """One scan split against local[4]: one Exchange to one task per
+        core, keyed on the url alone (no host term)."""
+        out = extract_df(read_pages(spark, pages_parquet), ExtractConfig())
+        plan = plan_of(out, "simple")
+        assert plan.count("Exchange") == 1
+        assert re.search(r"hashpartitioning\(url#\d+, 4\)", plan)
+        assert "parse_url" not in plan
+
+    def test_enough_splits_run_map_only(self, spark, pages_pdf, tmp_path):
+        """The same rows as 4 files give 4 scan splits, one per core, so
+        the map runs on them without a shuffle."""
+        from ocrd_calamari_spark.gen import write_pages_parquet
+
+        for k in range(4):
+            write_pages_parquet(pages_pdf.iloc[k::4],
+                                str(tmp_path / f"part-{k}.parquet"))
+        df = read_pages(spark, str(tmp_path))
+        assert df.rdd.getNumPartitions() >= 4
+        plan = plan_of(extract_df(df, ExtractConfig()), "simple")
+        assert "Exchange" not in plan
+        assert "MapInArrow" in plan
+
+    def test_sizing_runs_no_job(self, spark, pages_parquet):
+        """Counting the scan's splits plans the query but launches no
+        Spark job."""
+        sc = spark.sparkContext
+        df = read_pages(spark, pages_parquet)
+        sc.setJobGroup("extract_df-sizing", "plan only")
+        try:
+            extract_df(df, ExtractConfig())
+            jobs = sc.statusTracker().getJobIdsForGroup("extract_df-sizing")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(jobs) == []
 
     def test_whole_stage_codegen_on_relational_path(self, spark):
         from ocrd_calamari_spark.entry_queries import q_token_stats
