@@ -47,8 +47,11 @@ def parse_args(argv):
     p.add_argument("--chunks", type=int, default=64)
     p.add_argument("--partitions", type=int, default=None,
                    help="width of the extraction stage on pages (default: "
-                        "one task per core, or the scan's own splits when "
-                        "there are at least that many)")
+                        "when only whole files are filtered out, as with "
+                        "--bucket-col, the chunk's own scan splits if "
+                        "there are at least one per core, else one task "
+                        "per core; when rows are filtered, AQE sizes the "
+                        "stage from the chunk's bytes)")
     p.add_argument("--level", default="block",
                    choices=["block", "word", "glyph"])
     p.add_argument("--voter", default="confidence_voter_default_ctc")

@@ -2,7 +2,8 @@
 
 Two plans share the one ``mapInArrow`` function, chosen by the input frame:
   - pages (parquet / Iceberg): scan → map, with one url-hash repartition
-    in between when the scan has fewer splits than the stage's width;
+    in between unless an unfiltered scan has enough splits for the
+    stage's width;
   - WARC archives (binaryFile rows, recognised by their ``content``
     column): scan → map, where the map splits each archive into its
     records and extracts them in the same task — one Python stage, no
@@ -15,10 +16,12 @@ declarative plan; Spark owns batching, backpressure and worker lifecycle
 
 Scale features (BASELINE.json north_rule):
   - partition pruning predicates on ``warc_ts`` reach the scan
-  - one wave of Python tasks on pages: a task per core, or the scan's
-    own byte-balanced splits when there are at least that many; the
-    repartition key is the url alone, which spreads a Zipf-skewed host
-    evenly and is deterministic (resume must be stable)
+  - one wave of Python tasks on pages: a task per core, or an
+    unfiltered scan's own byte-balanced splits when there are at least
+    that many; a resume chunk filtered above the scan is sized by AQE
+    from the bytes that survive; the repartition key is the url alone,
+    which spreads a Zipf-skewed host evenly and is deterministic (resume
+    must be stable)
   - per-partition lineage (snapshot_id, file, part_id) on every output row
   - chunked checkpoint manifest → kill-and-resume without duplicate work
   - docs/sec + failure counts from the written output (exact, replayable)
@@ -91,6 +94,28 @@ def read_pages(
 def _is_archives(df: DataFrame) -> bool:
     """A binaryFile frame of WARC archives rather than a pages frame."""
     return "content" in df.columns
+
+
+def _scan_splits(df: DataFrame) -> int | None:
+    """The number of scan splits, or None unless every split reaches the
+    map whole.
+
+    Counted only when the physical plan is a file scan under projections:
+    then each split carries its full byte-balanced share of rows, and
+    counting them plans and lists files but runs no job.  A row filter
+    above the scan (a computed-``_part_id`` chunk keeps 1/n_chunks of each
+    split), an Exchange, a join or a cache gives None; building the RDD of
+    a plan with an Exchange would run its shuffle stages under AQE.  A
+    filter on partition columns prunes files inside the scan and leaves no
+    Filter node.
+    """
+    node = df._jdf.queryExecution().sparkPlan()
+    while node.nodeName() == "Project":
+        node = node.child()
+    if node.getClass().getSimpleName() not in ("FileSourceScanExec",
+                                                "BatchScanExec"):
+        return None
+    return df.rdd.getNumPartitions()
 
 
 def _pages_batches(batches):
@@ -209,13 +234,18 @@ def extract_df(
     Column-prunes to exactly the kernel inputs (+ lineage cols) before the
     UDF so the scan reads only url/html/text/lang.
 
-    On a pages frame the map stage is ``num_partitions`` wide, else one
-    task per core (``defaultParallelism``).  Without ``num_partitions``, a
-    scan that already yields at least that many splits runs map-only:
-    Spark sizes those splits by bytes, and kernel cost follows the html
-    bytes.  Otherwise the frame is hash-repartitioned once by url, which
-    spreads even a Zipf-skewed host over every task.  ``repartition=False``
-    always runs map-only on the scan's splits.
+    On a pages frame the map stage is hash-repartitioned once by url,
+    which spreads even a Zipf-skewed host over every task, to
+    ``num_partitions`` tasks when given.  Without it, a bare file scan
+    (projections only, no row filter above it) that yields at least one
+    split per core (``defaultParallelism``) runs map-only: Spark sizes
+    those splits by bytes, and kernel cost follows the html bytes.  A
+    bare scan with fewer splits is repartitioned to one task per core.
+    Any other frame, such as a computed-``_part_id`` resume chunk that
+    keeps a fraction of every split, is repartitioned without a width, so
+    AQE sizes the stage from the bytes that survive the filter (else
+    ``spark.sql.shuffle.partitions``).  ``repartition=False`` always runs
+    map-only on the frame's partitions.
 
     ``lineage_cols``: (file, row-position) metadata expressions.  The
     default ``_metadata.*`` exists only on Spark file sources (parquet/
@@ -246,12 +276,15 @@ def extract_df(
             sel = sel.withColumn("_src_row", F.expr(lineage_cols[1]))
             cols = cols + list(LINEAGE_COLS)
         sel = sel.select(*cols)
-        if repartition:
-            width = (num_partitions
-                     or sel.sparkSession.sparkContext.defaultParallelism)
-            # getNumPartitions plans the scan (lists files), runs no job
-            if num_partitions or sel.rdd.getNumPartitions() < width:
-                sel = sel.repartition(width, F.col("url"))
+        if repartition and num_partitions:
+            sel = sel.repartition(num_partitions, F.col("url"))
+        elif repartition:
+            cores = sel.sparkSession.sparkContext.defaultParallelism
+            splits = _scan_splits(sel)
+            if splits is None:
+                sel = sel.repartition(F.col("url"))
+            elif splits < cores:
+                sel = sel.repartition(cores, F.col("url"))
     mapped = sel.mapInArrow(
         extraction_map_fn(cfg, accumulators),
         FLAT_OUTPUT_SCHEMA,

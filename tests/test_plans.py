@@ -11,7 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocrd_calamari_spark.config import ExtractConfig
-from ocrd_calamari_spark.pipeline import extract_df, read_pages
+from ocrd_calamari_spark.pipeline import (
+    _scan_splits, extract_df, read_pages, with_part_id, write_bucketed_staging,
+)
 
 SF = "/root/testdata/sf0.01"
 
@@ -98,28 +100,72 @@ class TestJoinAndAggStrategies:
         assert re.search(r"hashpartitioning\(url#\d+, 4\)", plan)
         assert "parse_url" not in plan
 
-    def test_enough_splits_run_map_only(self, spark, pages_pdf, tmp_path):
-        """The same rows as 4 files give 4 scan splits, one per core, so
-        the map runs on them without a shuffle."""
+    @pytest.fixture
+    def four_files(self, pages_pdf, tmp_path):
+        """The pages as 4 files: 4 scan splits, one per core."""
         from ocrd_calamari_spark.gen import write_pages_parquet
 
         for k in range(4):
             write_pages_parquet(pages_pdf.iloc[k::4],
                                 str(tmp_path / f"part-{k}.parquet"))
-        df = read_pages(spark, str(tmp_path))
+        return str(tmp_path)
+
+    def test_enough_splits_run_map_only(self, spark, four_files):
+        """4 scan splits against local[4]: the map runs on them without a
+        shuffle."""
+        df = read_pages(spark, four_files)
         assert df.rdd.getNumPartitions() >= 4
         plan = plan_of(extract_df(df, ExtractConfig()), "simple")
         assert "Exchange" not in plan
         assert "MapInArrow" in plan
 
+    def test_filtered_chunk_repartitions_for_aqe(self, spark, four_files):
+        """A computed-_part_id resume chunk (run_extraction without
+        bucket_col) keeps a fraction of every split's rows, so its 4 splits
+        do not count: one url-hash Exchange without a width, which AQE
+        sizes from the surviving bytes (spark.sql.shuffle.partitions = 8
+        before coalescing)."""
+        pages = with_part_id(read_pages(spark, four_files), 64)
+        chunk = pages.where(F.col("_part_id").isin(list(range(16))))
+        plan = plan_of(extract_df(chunk, ExtractConfig()), "simple")
+        assert plan.count("Exchange") == 1
+        assert re.search(
+            r"hashpartitioning\(url#\d+, 8\), REPARTITION_BY_COL", plan)
+
+    def test_split_count_only_on_bare_scans(self, spark, pages_parquet,
+                                            tmp_path):
+        """A chunk predicate on a partition column (bucket_col) prunes
+        files inside the scan and its splits count; a row filter, an
+        Exchange or an aggregate above the scan gives None."""
+        df = read_pages(spark, pages_parquet)
+        staged = str(tmp_path / "bucketed")
+        write_bucketed_staging(df, staged, 4)
+        pruned = (spark.read.parquet(staged)
+                  .withColumn("_part_id", F.col("bucket").cast("int"))
+                  .where(F.col("_part_id").isin([0, 1])))
+        assert _scan_splits(pruned.select("url", "html")) >= 1
+        assert _scan_splits(df.select("url", "html")) >= 1
+        for other in (with_part_id(df, 64).where(F.col("_part_id") < 8),
+                      df.repartition(3),
+                      df.groupBy("url").agg(F.max("html").alias("html"))):
+            assert _scan_splits(other) is None
+
     def test_sizing_runs_no_job(self, spark, pages_parquet):
-        """Counting the scan's splits plans the query but launches no
-        Spark job."""
+        """Sizing the stage plans the query but launches no Spark job, on a
+        bare scan and on inputs with a row filter, an Exchange or an
+        aggregate (AQE would run their shuffle stages to build an RDD)."""
         sc = spark.sparkContext
         df = read_pages(spark, pages_parquet)
+        frames = (with_part_id(df, 64).where(F.col("_part_id") < 8),
+                  df.repartition(3),
+                  df.groupBy("url").agg(F.max("html").alias("html"),
+                                        F.max("text").alias("text"),
+                                        F.max("lang").alias("lang")))
         sc.setJobGroup("extract_df-sizing", "plan only")
         try:
             extract_df(df, ExtractConfig())
+            for frame in frames:
+                extract_df(frame, ExtractConfig(), with_lineage=False)
             jobs = sc.statusTracker().getJobIdsForGroup("extract_df-sizing")
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
