@@ -85,10 +85,13 @@ def main() -> None:
     spark.sparkContext.addPyFile(
         build_zip(os.path.join(REPO, "dist", "ocrd_calamari_spark.zip")))
     # executor JVMs register asynchronously — wait for both before
-    # asserting (defaultParallelism grows as cores arrive)
+    # asserting (defaultParallelism grows as cores arrive; an executor's
+    # block manager can register after its cores)
     import time
     for _ in range(60):
-        if spark.sparkContext.defaultParallelism >= 8:
+        if (spark.sparkContext.defaultParallelism >= 8
+                and spark.sparkContext._jsc.sc().getExecutorMemoryStatus()
+                .size() >= 3):
             break
         time.sleep(1.0)
     execs = spark.sparkContext.defaultParallelism
