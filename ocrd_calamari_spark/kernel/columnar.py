@@ -1,12 +1,17 @@
 """Columnar span emission: one Arrow batch of pages in → Arrow batches of
 output rows out, for ``DataFrame.mapInArrow``.
 
-Per page it runs the same decode → segment → vote → ``normalize_block``
-composition as ``extract.extract_page``; only the emission differs.  The
-scalar path builds one dict per span (and a list of alternative dicts per
-glyph) that pandas then converts to Arrow.  Here each level is a set of
-flat numpy/Arrow columns over the whole batch — starts, ends, ids, texts,
-confidences — and the nesting is Arrow list offsets per row, the flat
+It computes what ``extract.extract_page`` computes, in two stages.  Per
+page: decode → segment → ``vote.vote_ensemble`` (the fused form of
+``vote_block``) → the text half of ``normalize_block`` (strip and
+collapse spaces).  Once per output batch, over the concatenated
+codepoints of every kept block: the numeric half of ``normalize_block``
+(the ``char_p1`` gather and quantize, block confs, then page confs,
+``_block_numbers``) and the span emission.  The scalar path builds one
+dict per span (and a list of alternative dicts per glyph) that pandas
+then converts to Arrow.  Here each level is a set of flat numpy/Arrow
+columns over the whole batch — starts, ends, ids, texts, confidences —
+and the nesting is Arrow list offsets per row, the flat
 record-plus-repetition layout of Dremel:
 
   blocks   Python lists per block (a few dozen per page)
@@ -17,10 +22,14 @@ record-plus-repetition layout of Dremel:
   ids      ``pc.binary_join_element_wise`` + ``utf8_lpad`` for ``%04d``
 
 ``extract.extract_page`` / ``extract_batch`` remain the scalar
-specification and the single-process oracle; tests/test_columnar_equiv.py
-proves the two paths equal row for row, the way test_fastpath_equiv.py
-pairs ``textproc`` with ``fastpath``.  Like the rest of the kernel this
-module imports no pyspark: the caller passes the Arrow output schema.
+specification and the single-process oracle, with ``vote_block`` and
+``normalize_block`` inside them; tests/test_columnar_equiv.py proves the
+two paths equal row for row (and the fused vote and the batched block
+confs equal their scalar forms), the way test_fastpath_equiv.py pairs
+``textproc`` with ``fastpath``.  A page the batch stage would fail on (a
+lone surrogate in a kept block) is caught per page, so it stays one
+error row.  Like the rest of the kernel this module imports no pyspark:
+the caller passes the Arrow output schema.
 """
 
 from __future__ import annotations
@@ -33,15 +42,19 @@ import pyarrow.compute as pc
 
 from ocrd_calamari_spark.config import (
     ACCEPT_THRESHOLD,
-    ENSEMBLE,
     MIN_VISIBLE_CHARS,
     ExtractConfig,
 )
 from ocrd_calamari_spark.kernel.decode import decode_html
 from ocrd_calamari_spark.kernel.extract import _alt_char, _looks_binary
-from ocrd_calamari_spark.kernel.fastpath import codepoints, normalize_block, quantize6
+from ocrd_calamari_spark.kernel.fastpath import (
+    _MULTISPACE_RE,
+    _jitter_lut_05,
+    codepoints,
+    quantize6,
+)
 from ocrd_calamari_spark.kernel.segment import segment
-from ocrd_calamari_spark.kernel.vote import vote_block
+from ocrd_calamari_spark.kernel.vote import vote_ensemble
 
 # An output batch is cut once the spans (blocks + words + glyphs) emitted
 # since the last cut reach this many, so one input batch of big glyph pages
@@ -57,21 +70,21 @@ class _Pending:
 
     def __init__(self):
         self.text: list = []
-        self.conf: list = []
         self.n_blocks: list = []
         self.overwrote: list = []
         self.raw_charset: list = []
         self.error: list = []
         # one entry per block of the ok rows, in output order
         self.blk_text: list = []
-        self.blk_conf: list = []
+        self.blk_fused: list = []
         self.blk_start: list = []
         self.blk_no: list = []
-        self.blk_p1: list = []
         self.spans = 0
 
     def add_page(self, html, prior_text, lang, cfg: ExtractConfig) -> None:
-        """Extract one page.  Its blocks are committed only once the whole
+        """Extract one page down to its block texts and fused votes; the
+        numbers (p1 and the confs) follow once per batch in
+        ``_record_batch``.  Its blocks are committed only once the whole
         page succeeded, so an exception part way through leaves an error
         row and no partial spans."""
         raw = False
@@ -81,38 +94,44 @@ class _Pending:
             decoded, raw = decode_html(bytes(html))
             if _looks_binary(decoded):
                 raise ValueError("binary payload (control-char fraction exceeded)")
-            texts, confs, p1s = [], [], []
+            texts, fused_confs = [], []
             for blk in segment(decoded):
                 if blk.visible_len() < MIN_VISIBLE_CHARS:
                     continue
-                accept, fused = vote_block(
-                    blk, lang, ENSEMBLE, cfg.voter, ACCEPT_THRESHOLD
-                )
+                accept, fused = vote_ensemble(blk, lang, cfg.voter,
+                                              ACCEPT_THRESHOLD)
                 if not accept:
                     continue
-                text, p1, conf = normalize_block(blk.raw_text, fused)
+                # the text half of normalize_block
+                text = _MULTISPACE_RE.sub(" ", blk.raw_text.strip(" "))
                 if text:
                     texts.append(text)
-                    confs.append(conf)
-                    p1s.append(p1)
+                    fused_confs.append(fused)
+            page = "\n".join(texts)
+            try:
+                page.encode("utf-8")
+            except UnicodeEncodeError:
+                # A lone surrogate (utf-7 "+2AA-" decodes to one) would
+                # fail the batch's single codepoints call; it fails this
+                # page alone, with the error extract_page raises on the
+                # first such block.
+                for text in texts:
+                    codepoints(text)
+                raise
         except Exception as exc:  # error row, never a task failure
-            self._row(None, None, None, prior_text, raw,
+            self._row(None, None, prior_text, raw,
                       f"{type(exc).__name__}: {exc}")
             return
-        conf_sum, pos, starts = 0.0, 0, []
-        for text, conf in zip(texts, confs):
-            conf_sum += conf  # same summation order as extract_page
+        pos, starts = 0, []
+        for text in texts:
             starts.append(pos)
             pos += len(text) + 1  # "\n" separator
         n = len(texts)
-        self._row("\n".join(texts),
-                  float(quantize6(conf_sum / n)) if n else 0.0,
-                  n, prior_text, raw, None)
+        self._row(page, n, prior_text, raw, None)
         self.blk_text += texts
-        self.blk_conf += confs
+        self.blk_fused += fused_confs
         self.blk_start += starts
         self.blk_no += range(n)
-        self.blk_p1 += p1s
         self.spans += n
         if cfg.textequiv_level != "block":
             spaces = sum(t.count(" ") for t in texts)
@@ -121,13 +140,67 @@ class _Pending:
             if cfg.textequiv_level == "glyph":
                 self.spans += chars - spaces
 
-    def _row(self, text, conf, n_blocks, prior_text, raw, error) -> None:
+    def _row(self, text, n_blocks, prior_text, raw, error) -> None:
         self.text.append(text)
-        self.conf.append(conf)
         self.n_blocks.append(n_blocks)
         self.overwrote.append(bool(prior_text))
         self.raw_charset.append(raw)
         self.error.append(error)
+
+
+def _block_numbers(cps: np.ndarray, blk_off: np.ndarray,
+                   blk_fused: list) -> tuple[np.ndarray, np.ndarray]:
+    """The numeric half of ``normalize_block`` for every block of a batch.
+
+    ``cps``: the codepoints of the block texts back to back; block b is
+    ``cps[blk_off[b]:blk_off[b + 1]]`` with fused vote ``blk_fused[b]``.
+    Returns ``k = p1 * 1e6`` per codepoint (integer-valued float64) and
+    each block's conf.
+
+    ``k`` is ``char_p1`` before its final divide: the same gather, clip
+    and quantize, over ``np.repeat`` of each block's Python float ``0.70 +
+    0.30 * fused``.  Block conf is ``quantize6(p1.sum() / n)``.  With
+    exact arithmetic that is ``floor((2Σk + n) / 2n) / 1e6``; the float
+    form is off from it by less than ``(n + 4) * 2**-53 * 1e6`` units of
+    ``k`` (the pairwise sum's rounding, then three more roundings).  So a
+    block further than 9× that from a half boundary gets the integer
+    result, and one nearer (every exact tie, 2Σk ≡ n mod 2n) gets the
+    scalar expression.
+    """
+    n = np.diff(blk_off)
+    base = np.array([0.70 + 0.30 * f for f in blk_fused], dtype=np.float64)
+    k = _jitter_lut_05()[cps]
+    np.subtract(np.repeat(base, n), k, out=k)
+    np.clip(k, 0.5, 0.999, out=k)
+    np.multiply(k, 1e6, out=k)
+    np.add(k, 0.5, out=k)
+    np.floor(k, out=k)
+    # integer-valued doubles whose total is below 2**53 sum exactly
+    two_sum = 2 * np.add.reduceat(k, blk_off[:-1]).astype(np.int64) + n
+    q, r = np.divmod(two_sum, 2 * n)
+    conf = q / 1e6
+    near = np.minimum(r, 2 * n - r) <= 2e-9 * n * (n + 4)
+    for b in np.flatnonzero(near).tolist():
+        lo, hi = blk_off[b], blk_off[b + 1]
+        conf[b] = quantize6(np.float64((k[lo:hi] / 1e6).sum()) / int(hi - lo))
+    return k, conf
+
+
+def _page_confs(blk_conf: np.ndarray, n_blocks: list) -> list:
+    """``extract_page``'s row conf: quantize6 of the mean block conf, summed
+    block by block in page order (None for an error row)."""
+    confs = blk_conf.tolist()
+    out, at = [], 0
+    for n in n_blocks:
+        if not n:
+            out.append(None if n is None else 0.0)
+            continue
+        conf_sum = 0.0
+        for c in confs[at:at + n]:
+            conf_sum += c
+        at += n
+        out.append(quantize6(conf_sum / n))
+    return out
 
 
 def _ids(prefix, sep: str, nums: np.ndarray) -> pa.Array:
@@ -206,6 +279,12 @@ def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
     n_blk = np.array([k or 0 for k in p.n_blocks], dtype=np.int64)
     blk_row = np.repeat(np.arange(n_rows), n_blk)
     blk_len = np.fromiter(map(len, p.blk_text), np.int64, len(p.blk_text))
+    blk_off = np.zeros(len(blk_len) + 1, dtype=np.int64)
+    np.cumsum(blk_len, out=blk_off[1:])
+    # flat codepoints of all block texts, back to back (no separator)
+    big = "".join(p.blk_text)
+    cps = codepoints(big)
+    k, blk_conf = _block_numbers(cps, blk_off, p.blk_fused)
     blk_start = np.array(p.blk_start, dtype=np.int32)
     blk_id = _ids("blk", "", np.array(p.blk_no, dtype=np.int64))
     t_blocks = schema.field("blocks").type
@@ -213,7 +292,7 @@ def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
     t_glyphs = schema.field("glyphs").type
     blocks = _struct(
         [blk_id, pa.array(blk_start), pa.array(blk_start + blk_len.astype(np.int32)),
-         pa.array(p.blk_text, pa.string()), pa.array(p.blk_conf, pa.float64())],
+         pa.array(p.blk_text, pa.string()), pa.array(blk_conf)],
         t_blocks,
     )
     n_word = np.zeros(n_rows, dtype=np.int64)
@@ -222,11 +301,6 @@ def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
     glyphs = pa.array([], t_glyphs.value_type)
 
     if level != "block" and p.blk_text:
-        # flat codepoints of all block texts, back to back (no separator)
-        big = "".join(p.blk_text)
-        cps = codepoints(big)
-        blk_off = np.zeros(len(blk_len) + 1, dtype=np.int64)
-        np.cumsum(blk_len, out=blk_off[1:])
         # block text is single-space separated with no edge spaces, so a
         # word is a maximal non-space run inside one block
         solid = cps != 32
@@ -261,7 +335,7 @@ def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
             g_blk = w_blk[g_word]
             g_start = (gp + w_at[g_word]).astype(np.int32)
             alts = _alts(cps[gp], _slices(data, byte_off).take(gp),
-                         np.concatenate(p.blk_p1)[gp], cutoff,
+                         k[gp] / 1e6, cutoff,
                          t_glyphs.value_type.field("alts").type)
             glyphs = _struct(
                 [_ids(word_id.take(g_word), "_glyph", gp - ws[g_word]),
@@ -274,7 +348,7 @@ def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
     columns = {
         "url": url,
         "text": pa.array(p.text, pa.string()),
-        "conf": pa.array(p.conf, pa.float64()),
+        "conf": pa.array(_page_confs(blk_conf, p.n_blocks), pa.float64()),
         "n_blocks": pa.array(p.n_blocks, pa.int32()),
         "blocks": _lists(n_blk, blocks, t_blocks, null),
         "words": _lists(n_word, words, t_words, null),

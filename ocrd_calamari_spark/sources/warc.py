@@ -219,10 +219,9 @@ def _bounded_gunzip_members(data: bytes, max_total: int) -> bytes:
     return bytes(out)
 
 
-def records_to_rows(name: str, data: bytes) -> Iterator[dict]:
-    """WARC file bytes → pages rows (response records only), with
-    (_src_file, _src_row) record lineage — WARC sources have no scan-level
-    metadata columns once the bytes pass through the record splitter."""
+def _responses(name: str, data: bytes) -> Iterator[tuple]:
+    """WARC file bytes → (record index, headers, url, html) per response
+    record with a target URI."""
     if name.endswith(".gz"):
         data = _bounded_gunzip_members(data, _MAX_FILE_BYTES)
     for i, (headers, body) in enumerate(iter_warc_records(data)):
@@ -231,10 +230,18 @@ def records_to_rows(name: str, data: bytes) -> Iterator[dict]:
         url = headers.get(b"warc-target-uri")
         if url is None:
             continue
+        yield i, headers, url.decode("utf-8", "replace"), _http_payload(body)
+
+
+def records_to_rows(name: str, data: bytes) -> Iterator[dict]:
+    """WARC file bytes → pages rows (response records only), with
+    (_src_file, _src_row) record lineage — WARC sources have no scan-level
+    metadata columns once the bytes pass through the record splitter."""
+    for i, headers, url, html in _responses(name, data):
         yield {
-            "url": url.decode("utf-8", "replace"),
+            "url": url,
             "warc_ts": _warc_ts(headers),
-            "html": _http_payload(body),
+            "html": html,
             "text": None,
             "lang": None,
             "_src_file": name,
@@ -258,13 +265,13 @@ _PAGES_BATCH_SCHEMA = pa.schema([
 def records_to_batch(name: str, data: bytes,
                      part_id: int | None = None) -> pa.RecordBatch:
     """WARC file bytes → one Arrow pages batch of its response records:
-    the rows of ``records_to_rows`` without ``warc_ts``, plus the file's
-    ``_part_id`` on every record."""
+    the rows of ``records_to_rows`` without ``warc_ts`` (never parsed
+    here), plus the file's ``_part_id`` on every record."""
     url, html, row = [], [], []
-    for rec in records_to_rows(name, data):
-        url.append(rec["url"])
-        html.append(rec["html"])
-        row.append(rec["_src_row"])
+    for i, _, u, h in _responses(name, data):
+        url.append(u)
+        html.append(h)
+        row.append(i)
     n = len(url)
     return pa.RecordBatch.from_arrays([
         pa.array(url, pa.string()),

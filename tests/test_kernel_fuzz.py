@@ -131,7 +131,9 @@ def test_arrow_map_fn_arbitrary_bytes_never_raise(payloads, level, cutoff):
 def test_exception_mid_page_becomes_error_row(pages, level):
     """A page whose k-th block raises inside the kernel becomes an error
     row; the blocks, words and glyphs built for its first k-1 blocks are
-    rolled back and the other rows are untouched."""
+    rolled back and the other rows are untouched.  The fault is injected
+    into the per-block vote, the last per-block call both paths make (the
+    columnar path computes p1 and the confs once per batch)."""
     payloads = [
         ("<html><body><article>" + "".join(
             f"<p>{_PARA}{' BOOM' if boom else ''}</p>" for boom in page
@@ -140,17 +142,18 @@ def test_exception_mid_page_becomes_error_row(pages, level):
     ]
     cfg = ExtractConfig(textequiv_level=level)
     clean = run_arrow(payloads, cfg)
-    real = columnar.normalize_block
 
-    def exploding(raw_text, fused):
-        if "BOOM" in raw_text:
-            raise RuntimeError("boom")
-        return real(raw_text, fused)
+    def exploding(vote):
+        def _vote(blk, *args):
+            if "BOOM" in blk.raw_text:
+                raise RuntimeError("boom")
+            return vote(blk, *args)
+        return _vote
 
     mp = pytest.MonkeyPatch()
     try:
-        mp.setattr(columnar, "normalize_block", exploding)
-        mp.setattr(extract, "normalize_block", exploding)
+        mp.setattr(columnar, "vote_ensemble", exploding(columnar.vote_ensemble))
+        mp.setattr(extract, "vote_block", exploding(extract.vote_block))
         rows = run_arrow(payloads, cfg)
         scalar = [extract.extract_page(f"u{i}", p, None, "de", cfg)
                   for i, p in enumerate(payloads)]
