@@ -2,17 +2,16 @@
 output rows out, for ``DataFrame.mapInArrow``.
 
 It computes what ``extract.extract_page`` computes, in two stages.  Per
-page: decode → segment → ``vote.vote_ensemble`` (the fused form of
-``vote_block``) → the text half of ``normalize_block`` (strip and
-collapse spaces).  Once per output batch, over the concatenated
-codepoints of every kept block: the numeric half of ``normalize_block``
-(the ``char_p1`` gather and quantize, block confs, then page confs,
-``_block_numbers``) and the span emission.  The scalar path builds one
-dict per span (and a list of alternative dicts per glyph) that pandas
-then converts to Arrow.  Here each level is a set of flat numpy/Arrow
-columns over the whole batch — starts, ends, ids, texts, confidences —
-and the nesting is Arrow list offsets per row, the flat
-record-plus-repetition layout of Dremel:
+page: decode → segment → ``vote_block`` → the text half of
+``normalize_block`` (strip and collapse spaces).  Once per output batch,
+over the concatenated codepoints of every kept block: the numeric half
+of ``normalize_block`` (the ``char_p1`` gather and quantize, block
+confs, then page confs, ``_block_numbers``) and the span emission.  The
+scalar path builds one dict per span (and a list of alternative dicts
+per glyph) that pandas then converts to Arrow.  Here each level is a set
+of flat numpy/Arrow columns over the whole batch — starts, ends, ids,
+texts, confidences — and the nesting is Arrow list offsets per row, the
+flat record-plus-repetition layout of Dremel:
 
   blocks   Python lists per block (a few dozen per page)
   words    non-space runs of the concatenated block texts (codepoint masks)
@@ -24,8 +23,8 @@ record-plus-repetition layout of Dremel:
 ``extract.extract_page`` / ``extract_batch`` remain the scalar
 specification and the single-process oracle, with ``vote_block`` and
 ``normalize_block`` inside them; tests/test_columnar_equiv.py proves the
-two paths equal row for row (and the fused vote and the batched block
-confs equal their scalar forms), the way test_fastpath_equiv.py pairs
+two paths equal row for row (and the batched block confs equal
+``normalize_block``'s), the way test_fastpath_equiv.py pairs
 ``textproc`` with ``fastpath``.  A page the batch stage would fail on (a
 lone surrogate in a kept block) is caught per page, so it stays one
 error row.  Like the rest of the kernel this module imports no pyspark:
@@ -42,6 +41,7 @@ import pyarrow.compute as pc
 
 from ocrd_calamari_spark.config import (
     ACCEPT_THRESHOLD,
+    ENSEMBLE,
     MIN_VISIBLE_CHARS,
     ExtractConfig,
 )
@@ -54,7 +54,7 @@ from ocrd_calamari_spark.kernel.fastpath import (
     quantize6,
 )
 from ocrd_calamari_spark.kernel.segment import segment
-from ocrd_calamari_spark.kernel.vote import vote_ensemble
+from ocrd_calamari_spark.kernel.vote import vote_block
 
 # An output batch is cut once the spans (blocks + words + glyphs) emitted
 # since the last cut reach this many, so one input batch of big glyph pages
@@ -98,8 +98,9 @@ class _Pending:
             for blk in segment(decoded):
                 if blk.visible_len() < MIN_VISIBLE_CHARS:
                     continue
-                accept, fused = vote_ensemble(blk, lang, cfg.voter,
-                                              ACCEPT_THRESHOLD)
+                accept, fused = vote_block(
+                    blk, lang, ENSEMBLE, cfg.voter, ACCEPT_THRESHOLD
+                )
                 if not accept:
                     continue
                 # the text half of normalize_block
@@ -149,54 +150,43 @@ class _Pending:
 
 
 def _block_numbers(cps: np.ndarray, blk_off: np.ndarray,
-                   blk_fused: list) -> tuple[np.ndarray, np.ndarray]:
+                   blk_fused: list) -> tuple[np.ndarray, list]:
     """The numeric half of ``normalize_block`` for every block of a batch.
 
     ``cps``: the codepoints of the block texts back to back; block b is
     ``cps[blk_off[b]:blk_off[b + 1]]`` with fused vote ``blk_fused[b]``.
-    Returns ``k = p1 * 1e6`` per codepoint (integer-valued float64) and
-    each block's conf.
+    Returns p1 per codepoint and each block's conf.
 
-    ``k`` is ``char_p1`` before its final divide: the same gather, clip
-    and quantize, over ``np.repeat`` of each block's Python float ``0.70 +
-    0.30 * fused``.  Block conf is ``quantize6(p1.sum() / n)``.  With
-    exact arithmetic that is ``floor((2Σk + n) / 2n) / 1e6``; the float
-    form is off from it by less than ``(n + 4) * 2**-53 * 1e6`` units of
-    ``k`` (the pairwise sum's rounding, then three more roundings).  So a
-    block further than 9× that from a half boundary gets the integer
-    result, and one nearer (every exact tie, 2Σk ≡ n mod 2n) gets the
-    scalar expression.
+    p1 is ``char_p1``'s gather, clip and quantize, in place, over
+    ``np.repeat`` of each block's Python float ``0.70 + 0.30 * fused``.
+    Each block's conf is ``normalize_block``'s own expression over its
+    slice: the sum is numpy's pairwise ``.sum()``, which no sequential
+    form reproduces at a quantize6 half boundary.
     """
-    n = np.diff(blk_off)
+    p1 = _jitter_lut_05()[cps]
     base = np.array([0.70 + 0.30 * f for f in blk_fused], dtype=np.float64)
-    k = _jitter_lut_05()[cps]
-    np.subtract(np.repeat(base, n), k, out=k)
-    np.clip(k, 0.5, 0.999, out=k)
-    np.multiply(k, 1e6, out=k)
-    np.add(k, 0.5, out=k)
-    np.floor(k, out=k)
-    # integer-valued doubles whose total is below 2**53 sum exactly
-    two_sum = 2 * np.add.reduceat(k, blk_off[:-1]).astype(np.int64) + n
-    q, r = np.divmod(two_sum, 2 * n)
-    conf = q / 1e6
-    near = np.minimum(r, 2 * n - r) <= 2e-9 * n * (n + 4)
-    for b in np.flatnonzero(near).tolist():
-        lo, hi = blk_off[b], blk_off[b + 1]
-        conf[b] = quantize6(np.float64((k[lo:hi] / 1e6).sum()) / int(hi - lo))
-    return k, conf
+    np.subtract(np.repeat(base, np.diff(blk_off)), p1, out=p1)
+    np.clip(p1, 0.5, 0.999, out=p1)
+    np.multiply(p1, 1e6, out=p1)
+    np.add(p1, 0.5, out=p1)
+    np.floor(p1, out=p1)
+    np.divide(p1, 1e6, out=p1)
+    off = blk_off.tolist()
+    conf = [float(quantize6(np.float64(p1[lo:hi].sum()) / (hi - lo)))
+            for lo, hi in zip(off, off[1:])]
+    return p1, conf
 
 
-def _page_confs(blk_conf: np.ndarray, n_blocks: list) -> list:
+def _page_confs(blk_conf: list, n_blocks: list) -> list:
     """``extract_page``'s row conf: quantize6 of the mean block conf, summed
     block by block in page order (None for an error row)."""
-    confs = blk_conf.tolist()
     out, at = [], 0
     for n in n_blocks:
         if not n:
             out.append(None if n is None else 0.0)
             continue
         conf_sum = 0.0
-        for c in confs[at:at + n]:
+        for c in blk_conf[at:at + n]:
             conf_sum += c
         at += n
         out.append(quantize6(conf_sum / n))
@@ -284,7 +274,7 @@ def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
     # flat codepoints of all block texts, back to back (no separator)
     big = "".join(p.blk_text)
     cps = codepoints(big)
-    k, blk_conf = _block_numbers(cps, blk_off, p.blk_fused)
+    p1, blk_conf = _block_numbers(cps, blk_off, p.blk_fused)
     blk_start = np.array(p.blk_start, dtype=np.int32)
     blk_id = _ids("blk", "", np.array(p.blk_no, dtype=np.int64))
     t_blocks = schema.field("blocks").type
@@ -292,7 +282,7 @@ def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
     t_glyphs = schema.field("glyphs").type
     blocks = _struct(
         [blk_id, pa.array(blk_start), pa.array(blk_start + blk_len.astype(np.int32)),
-         pa.array(p.blk_text, pa.string()), pa.array(blk_conf)],
+         pa.array(p.blk_text, pa.string()), pa.array(blk_conf, pa.float64())],
         t_blocks,
     )
     n_word = np.zeros(n_rows, dtype=np.int64)
@@ -335,7 +325,7 @@ def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
             g_blk = w_blk[g_word]
             g_start = (gp + w_at[g_word]).astype(np.int32)
             alts = _alts(cps[gp], _slices(data, byte_off).take(gp),
-                         k[gp] / 1e6, cutoff,
+                         p1[gp], cutoff,
                          t_glyphs.value_type.field("alts").type)
             glyphs = _struct(
                 [_ids(word_id.take(g_word), "_glyph", gp - ws[g_word]),

@@ -122,50 +122,3 @@ def vote_block(block: Block, lang: str, extractor_names, voter: str,
                threshold: float) -> tuple[bool, float]:
     scores = [EXTRACTORS[name](block, lang) for name in extractor_names]
     return fuse_votes(scores, voter, threshold)
-
-
-def vote_ensemble(block: Block, lang: str, voter: str,
-                  threshold: float) -> tuple[bool, float]:
-    """``vote_block(block, lang, ENSEMBLE, voter, threshold)`` in one call.
-
-    The density, link-density and readability scores and the fusion run
-    inline, with the same float operations in the same order, so the
-    registry lookup, the score list and four calls per block are gone.
-    ``vote_block`` stays the specification; tests/test_columnar_equiv.py
-    proves the two equal for both voters.
-    """
-    visible = block.visible_len()
-    x = (visible / (1.0 + block.n_tags) - 20.0) / 15.0
-    density = round(0.0 if x < -60.0 else
-                    1.0 if x > 60.0 else 1.0 / (1.0 + math.exp(-x)), 6)
-    if visible == 0:
-        link = 0.0
-    else:
-        link = round(_clamp01(1.0 - 1.2 * (block.n_link_chars / visible)), 6)
-
-    base = _CONTENT_TAGS.get(block.tag)
-    if base is None:
-        base = _LIST_TAGS.get(block.tag, 0.50)
-    text = block.raw_text
-    n_punct = text.count(".") + text.count("!") + text.count("?")
-    profile = STOPWORDS.get(lang or _DEFAULT_PROFILE, STOPWORDS[_DEFAULT_PROFILE])
-    hits = 0
-    for t in text.lower().split(" "):
-        if t and t in profile:
-            hits += 1
-            if hits == 5:
-                break
-    readability = round(_clamp01(
-        base + 0.20 * min(1.0, n_punct / 3.0) + 0.10 * min(1.0, hits / 5.0)
-        - 0.02 * max(0, block.depth - 8)), 6)
-
-    scores = (density, link, readability)
-    if voter == "sequence_voter":
-        ayes = [s for s in scores if s >= threshold]
-        if len(ayes) * 2 > 3:
-            return True, round(sum(ayes) / len(ayes), 6)
-        nays = [s for s in scores if s < threshold]
-        side = nays if nays else ayes
-        return False, round(sum(side) / len(side), 6)
-    fused = sum(scores) / 3
-    return fused >= threshold, round(fused, 6)

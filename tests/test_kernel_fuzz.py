@@ -143,17 +143,17 @@ def test_exception_mid_page_becomes_error_row(pages, level):
     cfg = ExtractConfig(textequiv_level=level)
     clean = run_arrow(payloads, cfg)
 
-    def exploding(vote):
-        def _vote(blk, *args):
-            if "BOOM" in blk.raw_text:
-                raise RuntimeError("boom")
-            return vote(blk, *args)
-        return _vote
+    real = columnar.vote_block
+
+    def exploding(blk, *args):
+        if "BOOM" in blk.raw_text:
+            raise RuntimeError("boom")
+        return real(blk, *args)
 
     mp = pytest.MonkeyPatch()
     try:
-        mp.setattr(columnar, "vote_ensemble", exploding(columnar.vote_ensemble))
-        mp.setattr(extract, "vote_block", exploding(extract.vote_block))
+        mp.setattr(columnar, "vote_block", exploding)
+        mp.setattr(extract, "vote_block", exploding)
         rows = run_arrow(payloads, cfg)
         scalar = [extract.extract_page(f"u{i}", p, None, "de", cfg)
                   for i, p in enumerate(payloads)]
