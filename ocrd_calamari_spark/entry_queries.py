@@ -69,11 +69,12 @@ def _tw(spark: SparkSession, sf_dir: str, name: str = "documents") -> DataFrame:
     minPartitionNum floor, openCostInBytes floors the split size, so the
     5.9 MB documents file still scans as ~2 splits — and every heavy
     per-row map (explode + md5/xxhash per gram) before the first exchange
-    then runs on 2 of N cores (measured: dsir_weights 14.1 s isolated at
-    sf1.0, almost all in the 2-task scan stage).  The narrow-input
-    exchange costs ~25 MB; at production scale the scan has thousands of
-    splits and this repartition is a no-op-grade overhead (same pattern
-    as _with_injected_dups, CLAUDE.md round-4 note)."""
+    then runs on 2 of N cores (measured: a hashed-ngram weighting query
+    took 14.1 s isolated at sf1.0, almost all in the 2-task scan stage).
+    The narrow-input exchange costs ~25 MB; at production scale the scan
+    has thousands of splits and this repartition is a no-op-grade
+    overhead (same pattern as _with_injected_dups, CLAUDE.md round-4
+    note)."""
     return _t(spark, sf_dir, name).repartition(
         4 * spark.sparkContext.defaultParallelism, "doc_id"
     )
@@ -158,7 +159,6 @@ def q_extract_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
         pages_from_documents(spark, sf_dir),
         ExtractConfig(),
         with_lineage=False,
-        repartition=False,
     )
     return out.select(
         "url", "text", "conf", "n_blocks", "error"
@@ -170,7 +170,6 @@ def q_extract_word_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         pages_from_documents(spark, sf_dir),
         ExtractConfig(textequiv_level="word"),
         with_lineage=False,
-        repartition=False,
     )
     # explode word spans; verify invariant text[start:end]==word JVM-side
     w = out.where(F.col("error").isNull()).select(
@@ -792,7 +791,6 @@ def q_extract_sequence_voter(spark: SparkSession, sf_dir: str) -> DataFrame:
         pages_from_documents(spark, sf_dir),
         ExtractConfig(voter="sequence_voter"),
         with_lineage=False,
-        repartition=False,
     )
     return out.select("url", "text", "conf", "n_blocks", "error").orderBy("url")
 
@@ -808,7 +806,6 @@ def q_extract_glyph_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         pages,
         ExtractConfig(textequiv_level="glyph", glyph_conf_cutoff=0.01),
         with_lineage=False,
-        repartition=False,
     )
     g = out.where(F.col("error").isNull()).select(
         "url", F.explode_outer("glyphs").alias("g")
@@ -857,7 +854,6 @@ def q_extract_golden_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         df,
         ExtractConfig(textequiv_level="word"),
         with_lineage=False,
-        repartition=False,
     )
     return out.select(
         "url",
@@ -927,170 +923,6 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     return hll_distinct(d, "lang", "text", rsd=0.02).orderBy("lang")
-
-
-# ---------------------------------------------------------------------------
-# Multimodal fixture + queries: opaque BINARY payloads with typed headers,
-# synthesized deterministically from the documents table entirely JVM-side
-# (magic + two uint32-BE header fields + text-derived body).
-# ---------------------------------------------------------------------------
-def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → media table (media_id, kind, payload, meta): the
-    image/audio/video byte-payload convention of
-    functions/multimodal.py (4-byte magic, 2 × uint32 BE, opaque body)."""
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(4 * spark.sparkContext.defaultParallelism, "doc_id")
-    )
-    kind = F.element_at(
-        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    )
-    magic = (
-        F.when(kind == "image", F.lit(b"IMG0"))
-        .when(kind == "audio", F.lit(b"AUD0"))
-        .otherwise(F.lit(b"VID0"))
-    )
-    a = (F.col("doc_id") % 640 + 16).cast("int")
-    b = (F.col("doc_id") % 480 + 16).cast("int")
-
-    def _be32(c):  # 4-byte big-endian, JVM-side
-        return F.unhex(F.lpad(F.hex(c), 8, "0"))
-
-    payload = F.concat(
-        magic, _be32(a), _be32(b),
-        F.substring(F.col("text"), 1, 64).cast("binary"),
-    )
-    return d.select(
-        F.col("doc_id").alias("media_id"),
-        kind.alias("kind"),
-        payload.alias("payload"),
-        F.struct(
-            F.concat(F.lit("synth://doc/"), F.col("doc_id")).alias("source_url"),
-            F.lit("application/octet-stream").alias("content_type"),
-        ).alias("meta"),
-    )
-
-
-def q_decode_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInPandas media decode over the synthetic payloads.  The header
-    fields are doc_id-derived, so DuckDB can reproduce the decoded output
-    exactly from the documents table — a full oracle for the Arrow/UDF
-    plumbing (schema, batching, per-row error policy)."""
-    from ocrd_calamari_spark.functions.multimodal import decode_media
-
-    out = decode_media(media_from_documents(spark, sf_dir), backend="fake")
-    return out.select(
-        "media_id", "kind", "width", "height", "n_bytes", "error"
-    ).orderBy("media_id")
-
-
-DECODE_MEDIA_SQL = """
-SELECT doc_id AS media_id,
-       ['image','audio','video'][CAST(doc_id % 3 AS INTEGER) + 1] AS kind,
-       CAST(doc_id % 640 + 16 AS INTEGER) AS width,
-       CAST(doc_id % 480 + 16 AS INTEGER) AS height,
-       CAST(12 + strlen(substr(text, 1, 64)) AS BIGINT) AS n_bytes,
-       CAST(NULL AS VARCHAR) AS error
-FROM documents ORDER BY media_id
-"""
-
-
-def q_resize_images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image resize through mapInPandas: aspect-preserving header rewrite +
-    proportional body truncation; non-image rows become error rows (the
-    per-row ignore_errors policy).  Fully DuckDB-oracled via the same
-    IEEE-double scale math."""
-    from ocrd_calamari_spark.functions.multimodal import resize_images
-
-    out = resize_images(media_from_documents(spark, sf_dir), max_side=256)
-    return out.select(
-        "media_id", "width", "height",
-        F.octet_length("payload").cast("bigint").alias("n_payload_bytes"),
-        "error",
-    ).orderBy("media_id")
-
-
-RESIZE_SQL = """
-WITH m AS (
-  SELECT doc_id AS media_id,
-         ['image','audio','video'][CAST(doc_id % 3 AS INTEGER) + 1] AS kind,
-         doc_id % 640 + 16 AS a, doc_id % 480 + 16 AS b,
-         strlen(substr(text, 1, 64)) AS blen
-  FROM documents
-), s AS (
-  SELECT *, least(1e0, 256e0 / greatest(a, b, 1)) AS scale FROM m
-)
-SELECT media_id,
-       CASE WHEN kind = 'image'
-            THEN CAST(greatest(1, CAST(trunc(a * scale) AS BIGINT)) AS INTEGER)
-       END AS width,
-       CASE WHEN kind = 'image'
-            THEN CAST(greatest(1, CAST(trunc(b * scale) AS BIGINT)) AS INTEGER)
-       END AS height,
-       CASE WHEN kind = 'image'
-            THEN CAST(12 + (CASE WHEN blen > 0
-                                 THEN greatest(1, CAST(trunc(blen * scale * scale) AS BIGINT))
-                                 ELSE 0 END) AS BIGINT)
-       END AS n_payload_bytes,
-       CASE WHEN kind <> 'image'
-            THEN 'ValueError: not an image: ' || kind
-       END AS error
-FROM s ORDER BY media_id
-"""
-
-
-def q_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling plan: JVM-side explode of frame stubs per
-    video row (the per-frame decode would attach via decode_media).
-    Stub count and timestamps come from the payload's own n-frames/fps
-    header (bytes 4..11), parsed JVM-side — so the row count varies per
-    video and the oracle derives the SAME header values from doc_id
-    (the fixture writes n_frames = doc_id%640+16, fps = doc_id%480+16)."""
-    from ocrd_calamari_spark.functions.multimodal import frame_sample_plan
-
-    out = frame_sample_plan(media_from_documents(spark, sf_dir), every_n=30)
-    return out.select(
-        "media_id",
-        F.col("frame_no").cast("bigint").alias("frame_no"),
-        "ts_offset_sec",
-    ).orderBy("media_id", "frame_no")
-
-
-FRAME_PLAN_SQL = """
-WITH v AS (
-  SELECT doc_id AS media_id,
-         CAST(doc_id % 480 + 16 AS DOUBLE) AS fps,
-         unnest(generate_series(0, CAST(doc_id % 640 + 16 AS BIGINT) - 1, 30))
-           AS frame_no
-  FROM documents WHERE doc_id % 3 = 2
-)
-SELECT media_id, frame_no, frame_no / fps AS ts_offset_sec
-FROM v ORDER BY media_id, frame_no
-"""
-
-
-def q_resample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio resample plan: header-derived (sample-rate, n-samples) →
-    output length at 16 kHz, exact integer division both engines."""
-    from ocrd_calamari_spark.functions.multimodal import audio_resample_plan
-
-    out = audio_resample_plan(media_from_documents(spark, sf_dir),
-                              target_rate=16000)
-    return out.orderBy("media_id")
-
-
-RESAMPLE_SQL = """
-SELECT doc_id AS media_id,
-       CAST(doc_id % 640 + 16 AS BIGINT) AS src_rate,
-       CAST(doc_id % 480 + 16 AS BIGINT) AS n_samples,
-       CAST(16000 AS BIGINT) AS target_rate,
-       CAST((doc_id % 480 + 16) * 16000 // (doc_id % 640 + 16) AS BIGINT)
-         AS n_out_samples
-FROM documents WHERE doc_id % 3 = 1
-ORDER BY media_id
-"""
 
 
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1401,102 +1233,6 @@ ORDER BY f.doc_id
 """
 
 
-def q_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link extraction over the synthesized pages: (page url, link_no,
-    href) exploded from every href attribute — the crawl-native source of
-    the link graph (out-links feed frontier scheduling and graph metrics).
-    JVM regexp_extract_all; the pattern is valid in Java regex AND RE2 so
-    DuckDB reproduces it exactly.  At 100 TB this is a pure map over the
-    pages scan — no shuffle."""
-    pages = pages_from_documents(spark, sf_dir)
-    hrefs = F.expr(
-        r"""regexp_extract_all(cast(html as string), 'href="([^"]*)"', 1)"""
-    )
-    out = pages.select(F.col("url"), F.posexplode(hrefs).alias(
-        "link_no", "href"))
-    return out.select(
-        "url", F.col("link_no").cast("bigint").alias("link_no"), "href"
-    ).orderBy("url", "link_no")
-
-
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the SYMMETRIZED link graph (pages ↔ their href
-    targets, resolved against the page host): 10 fixed power iterations
-    of driver-looped DataFrame algebra.  Symmetrizing closes the graph
-    (every node has out-edges), which makes the whole iteration
-    DuckDB-expressible as a recursive CTE with an aggregate in the
-    recursive term — an EXACT oracle for an iterative algorithm (the
-    directed/dangling variant stays covered by the numpy parity test).
-    Ranks are floor-quantized at 1e-6: per-node contribution sums are
-    ~12 doubles, so cross-engine summation-order noise (~1e-14) sits 8
-    orders below the grid."""
-    from ocrd_calamari_spark.functions.graph import pagerank
-
-    links = q_extract_links(spark, sf_dir)
-    fwd = links.select(
-        F.col("url").alias("src"),
-        F.concat(_page_host(), F.col("href")).alias("dst"),
-    )
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    out = pagerank(edges, damping=0.85, iters=10)
-    return out.select(
-        "node",
-        F.expr("cast(floor(rank * 1e6 + 5e-1) / 1e6 as double)").alias("rank"),
-    ).orderBy(F.desc("rank"), "node")
-
-
-def _pagerank_sql() -> str:
-    head = _PAGE_HEAD.replace("'", "''")
-    foot = _PAGE_FOOT.replace("'", "''")
-    return f"""
-WITH RECURSIVE pages AS (
-  SELECT 'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example/d/' || CAST(doc_id AS VARCHAR) AS url,
-         'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example' AS host,
-         '{head}' || '<article><h1>Document ' || CAST(doc_id AS VARCHAR)
-         || '</h1><p>' || text || '</p></article>' || '{foot}' AS html
-  FROM documents
-), fwd AS (
-  SELECT url AS src, host || unnest(
-           regexp_extract_all(html, 'href="([^"]*)"', 1)) AS dst
-  FROM pages
-), edges AS (
-  SELECT src, dst FROM fwd UNION SELECT dst, src FROM fwd
-), nodes AS (
-  SELECT DISTINCT src AS v FROM edges
-), deg AS (
-  SELECT src, COUNT(*) AS d FROM edges GROUP BY src
-), nn AS (
-  SELECT COUNT(*) AS n FROM nodes
-), pr(iter, v, r) AS (
-  SELECT 0, v, 1e0 / (SELECT n FROM nn) FROM nodes
-  UNION ALL
-  SELECT pr.iter + 1, e.dst,
-         (1e0 - 85e-2) / (SELECT n FROM nn) + 85e-2 * SUM(pr.r / deg.d)
-  FROM pr JOIN edges e ON e.src = pr.v JOIN deg ON deg.src = e.src
-  WHERE pr.iter < 10
-  GROUP BY pr.iter, e.dst
-)
-SELECT v AS node,
-       CAST(floor(r * 1e6 + 5e-1) / 1e6 AS DOUBLE) AS rank
-FROM pr WHERE iter = 10 ORDER BY rank DESC, node
-"""
-
-
-def _page_host():
-    """https://<host> of a page url — the single definition the
-    link-graph queries must keep in lockstep with their DuckDB twins'
-    host derivation."""
-    return F.concat(
-        F.lit("https://"),
-        F.element_at(F.split(F.element_at(F.split("url", "://", 2), 2),
-                             "/", 2), 1),
-    )
-
-
 def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain boilerplate-LINE removal (CCNet-style paragraph dedup):
     a line that occurs in ≥ 50 % of a domain's documents is boilerplate
@@ -1652,94 +1388,6 @@ SELECT lang, COUNT(*) AS n_docs,
        CAST(SUM(tok) AS BIGINT) AS sum_tokens,
        CAST(SUM(CAST(q AS DECIMAL(18,4))) AS DOUBLE) AS sum_quality
 FROM scored WHERE q >= 5e-1 GROUP BY lang ORDER BY lang
-"""
-
-
-def q_canonical_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization over a deterministic messy-url fixture
-    (mixed-case scheme/host, explicit default ports, tracking params,
-    fragments) — the normalization pass url-keyed dedup requires.  All
-    split/filter/concat HOFs; the oracle mirrors the split structure."""
-    from ocrd_calamari_spark.functions.urls import canonical_url
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    h = F.lpad((F.col("doc_id") % 40).cast("string"), 2, "0")
-    i = F.col("doc_id").cast("string")
-    messy = (
-        F.when(F.col("doc_id") % 4 == 0,
-               F.concat(F.lit("HTTP://Host"), h, F.lit(".Example:80/d/"), i,
-                        F.lit("?utm_source=x&q=1#frag")))
-        .when(F.col("doc_id") % 4 == 1,
-              F.concat(F.lit("https://host"), h, F.lit(".example:443/d/"), i,
-                       F.lit("?gclid=abc")))
-        .when(F.col("doc_id") % 4 == 2,
-              F.concat(F.lit("https://Host"), h, F.lit(".example/d/"), i,
-                       F.lit("?a=1&utm_medium=m&b=2")))
-        .otherwise(F.concat(F.lit("http://host"), h, F.lit(".example/d/"), i))
-    )
-    return d.select(
-        "doc_id", messy.alias("url"),
-        canonical_url(messy).alias("canonical"),
-    ).orderBy("doc_id")
-
-
-CANONICAL_URL_SQL = """
-WITH m AS (
-  SELECT doc_id,
-         lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0') AS h,
-         CAST(doc_id AS VARCHAR) AS i
-  FROM documents
-), u AS (
-  SELECT doc_id,
-         CASE CAST(doc_id % 4 AS INTEGER)
-           WHEN 0 THEN 'HTTP://Host' || h || '.Example:80/d/' || i
-                       || '?utm_source=x&q=1#frag'
-           WHEN 1 THEN 'https://host' || h || '.example:443/d/' || i
-                       || '?gclid=abc'
-           WHEN 2 THEN 'https://Host' || h || '.example/d/' || i
-                       || '?a=1&utm_medium=m&b=2'
-           ELSE 'http://host' || h || '.example/d/' || i
-         END AS url
-  FROM m
-), s AS (
-  SELECT doc_id, url,
-         string_split(url, '#')[1] AS no_frag
-  FROM u
-), s2 AS (
-  SELECT doc_id, url,
-         string_split(no_frag, '?')[1] AS base,
-         CASE WHEN contains(no_frag, '?')
-              THEN array_to_string(string_split(no_frag, '?')[2:], '?')
-         END AS query
-  FROM s
-), s3 AS (
-  SELECT doc_id, url, query,
-         lower(string_split(base, '://')[1]) AS scheme,
-         string_split(base, '://')[2] AS hostpath
-  FROM s2
-), s4 AS (
-  SELECT doc_id, url, query, scheme,
-         lower(string_split(hostpath, '/')[1]) AS hostport,
-         CASE WHEN contains(hostpath, '/')
-              THEN '/' || array_to_string(string_split(hostpath, '/')[2:], '/')
-              ELSE '' END AS path
-  FROM s3
-), s5 AS (
-  SELECT doc_id, url, scheme, path,
-         CASE WHEN scheme = 'http' AND hostport LIKE '%:80'
-              THEN substr(hostport, 1, length(hostport) - 3)
-              WHEN scheme = 'https' AND hostport LIKE '%:443'
-              THEN substr(hostport, 1, length(hostport) - 4)
-              ELSE hostport END AS host,
-         array_to_string(list_filter(string_split(COALESCE(query, ''), '&'),
-           p -> NOT starts_with(p, 'utm_') AND NOT starts_with(p, 'gclid=')
-                AND NOT starts_with(p, 'fbclid=') AND p <> ''), '&') AS q2
-  FROM s4
-)
-SELECT doc_id, url,
-       scheme || '://' || host || path
-       || CASE WHEN q2 <> '' THEN '?' || q2 ELSE '' END AS canonical
-FROM s5 ORDER BY doc_id
 """
 
 
@@ -1972,57 +1620,6 @@ FROM pairs GROUP BY pair ORDER BY n DESC, pair LIMIT 50
 """
 
 
-def q_fuzzy_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-identical-url discovery (Levenshtein ≤ 1) via SymSpell-style
-    deletion-neighborhood blocking (functions/urls.py:fuzzy_url_pairs)
-    over a deterministic fixture where every 5th doc carries a one-char
-    truncation of its neighbor's url.  The blocking join has EXACT
-    recall at distance 1; the DuckDB twin is the brute-force all-pairs
-    levenshtein join, so a hash match certifies both recall and the
-    verify step."""
-    from ocrd_calamari_spark.functions.urls import fuzzy_url_pairs
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def _base(idcol):
-        return F.concat(
-            F.lit("https://host"),
-            F.lpad((idcol % 40).cast("string"), 2, "0"),
-            F.lit(".example/p/"),
-            idcol.cast("string"),
-        )
-
-    nxt = _base(F.col("doc_id") + 1)
-    url = F.when(
-        F.col("doc_id") % 5 == 0,
-        F.substring(nxt, F.lit(1), F.length(nxt) - 1),
-    ).otherwise(_base(F.col("doc_id")))
-    return fuzzy_url_pairs(d.select("doc_id", url.alias("url"))).orderBy(
-        "id_a", "id_b"
-    )
-
-
-FUZZY_URLS_SQL = """
-WITH m AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 5 = 0 THEN substr(b2, 1, length(b2) - 1)
-              ELSE b1 END AS url
-  FROM (
-    SELECT doc_id,
-           'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-             || '.example/p/' || CAST(doc_id AS VARCHAR) AS b1,
-           'https://host' || lpad(CAST((doc_id + 1) % 40 AS VARCHAR), 2, '0')
-             || '.example/p/' || CAST(doc_id + 1 AS VARCHAR) AS b2
-    FROM documents)
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(levenshtein(a.url, b.url) AS BIGINT) AS dist
-FROM m a JOIN m b ON a.doc_id < b.doc_id
-WHERE levenshtein(a.url, b.url) <= 1
-ORDER BY id_a, id_b
-"""
-
-
 def q_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-filter cascade with exact per-stage drop accounting in
     ONE corpus scan (functions/text.py:quality_funnel): every signal
@@ -2232,62 +1829,6 @@ FROM cum GROUP BY lang ORDER BY lang
 """
 
 
-def q_crawl_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hop-bounded BFS from a seed page over the symmetrized link graph
-    (min click-distance per reachable node) — the crawl-scheduling
-    primitive: frontier expansion IS how a crawler discovers the web, and
-    depth is the classic crawl-budget / priority key.  Driver-looped
-    frontier joins with early exit (functions/graph.py:bfs_depth); the
-    DuckDB twin is a recursive CTE whose UNION-dedup reproduces BFS's
-    "first discovery = min depth" invariant exactly.  Pure integer
-    depths → hash-exact."""
-    from ocrd_calamari_spark.functions.graph import bfs_depth
-
-    links = q_extract_links(spark, sf_dir)
-    fwd = links.select(
-        F.col("url").alias("src"),
-        F.concat(_page_host(), F.col("href")).alias("dst"),
-    )
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    seeds = spark.range(1).select(
-        F.lit("https://host00.example/d/0").alias("node")
-    )
-    out = bfs_depth(edges, seeds, max_iters=6)
-    return out.select("node", F.col("depth").cast("int").alias("depth")
-                      ).orderBy("depth", "node")
-
-
-def _crawl_depth_sql() -> str:
-    head = _PAGE_HEAD.replace("'", "''")
-    foot = _PAGE_FOOT.replace("'", "''")
-    return f"""
-WITH RECURSIVE pages AS (
-  SELECT 'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example/d/' || CAST(doc_id AS VARCHAR) AS url,
-         'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example' AS host,
-         '{head}' || '<article><h1>Document ' || CAST(doc_id AS VARCHAR)
-         || '</h1><p>' || text || '</p></article>' || '{foot}' AS html
-  FROM documents
-), fwd AS (
-  SELECT url AS src, host || unnest(
-           regexp_extract_all(html, 'href="([^"]*)"', 1)) AS dst
-  FROM pages
-), edges AS (
-  SELECT src, dst FROM fwd UNION SELECT dst, src FROM fwd
-), bfs(node, depth) AS (
-  SELECT 'https://host00.example/d/0' AS node, 0 AS depth
-  UNION
-  SELECT e.dst, b.depth + 1
-  FROM bfs b JOIN edges e ON e.src = b.node WHERE b.depth < 6
-)
-SELECT node, CAST(MIN(depth) AS INTEGER) AS depth
-FROM bfs GROUP BY node ORDER BY depth, node
-"""
-
-
 def q_sparse_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact thresholded cosine-similarity join over TF term vectors via
     the inverted index (functions/dedup.py:tf_cosine_join) — integer
@@ -2334,44 +1875,6 @@ ORDER BY id_a, id_b
 """
 
 
-def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fastText-style hashed linear quality classifier
-    (functions/classify.py) — per-doc score is a zero-shuffle JVM fold
-    over unigram+bigram hashed features; deterministic hash-derived
-    integer weights make the DuckDB twin hash-exact while the plan is
-    exactly the one a learned broadcast weight map would run."""
-    from ocrd_calamari_spark.functions.classify import hashed_linear_quality
-
-    d = _t(spark, sf_dir, "documents")
-    return hashed_linear_quality(d, "doc_id", "text", bias=0).orderBy(
-        "doc_id"
-    )
-
-
-QUALITY_CLASSIFIER_SQL = """
-WITH t AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
-), f AS (
-  SELECT doc_id,
-         list_concat(
-           toks,
-           list_transform(generate_series(1, greatest(len(toks) - 1, 1)),
-                          i -> array_to_string(toks[i:i+1], ' '))) AS feats
-  FROM t
-), e AS (
-  SELECT doc_id, len(feats) AS n_feats, unnest(feats) AS feat FROM f
-), s AS (
-  SELECT doc_id, CAST(MIN(n_feats) AS INTEGER) AS n_feats,
-         CAST(0 + SUM(('0x' || substr(md5(feat), 1, 15))::BIGINT % 2001
-                      - 1000) AS BIGINT) AS score
-  FROM e GROUP BY doc_id
-)
-SELECT doc_id, n_feats, score,
-       CAST(CASE WHEN score >= 0 THEN 1 ELSE 0 END AS INTEGER) AS keep
-FROM s ORDER BY doc_id
-"""
-
-
 def q_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-self-trained bigram LM quality score per document
     (functions/text.py:bigram_lm_scores) — the CCNet-style perplexity
@@ -2411,61 +1914,6 @@ SELECT d.doc_id AS id,
        CAST(floor(p.sum_q / p.n_bigrams) AS BIGINT) AS lm_score
 FROM documents d LEFT JOIN per_doc p USING (doc_id)
 ORDER BY id
-"""
-
-
-def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style hashed-ngram importance weight per document
-    (functions/selection.py) — the target-vs-source contrastive selection
-    score (target slice: lang = 'en'); log-free rational form, hash-exact
-    vs DuckDB.  Gram strings never shuffle: only (doc, bucket, count)
-    rows and the broadcast <=1024-row bucket-weight table move."""
-    from ocrd_calamari_spark.functions.selection import importance_weights
-
-    d = _tw(spark, sf_dir, "documents")
-    return importance_weights(d, "lang = 'en'").transform(_psort, "doc_id")
-
-
-DSIR_WEIGHTS_SQL = """
-WITH t AS (
-  SELECT doc_id, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_t,
-         string_split(lower(text), ' ') AS toks
-  FROM documents
-), f AS (
-  SELECT doc_id, is_t,
-         list_concat(
-           toks,
-           list_transform(generate_series(1, greatest(len(toks) - 1, 1)),
-                          i -> array_to_string(toks[i:i+1], ' '))) AS feats
-  FROM t
-), e AS (
-  SELECT doc_id, is_t,
-         ('0x' || substr(md5(unnest(feats)), 1, 15))::BIGINT % 1024 AS bucket
-  FROM f
-), db AS (
-  SELECT doc_id, is_t, bucket, CAST(COUNT(*) AS BIGINT) AS c
-  FROM e GROUP BY 1, 2, 3
-), bs AS (
-  SELECT bucket, CAST(SUM(c) AS BIGINT) AS cs,
-         CAST(SUM(is_t * c) AS BIGINT) AS ct
-  FROM db GROUP BY bucket
-), tot AS (
-  SELECT CAST(SUM(cs) AS BIGINT) AS ns, CAST(SUM(ct) AS BIGINT) AS nt
-  FROM bs
-), w AS (
-  SELECT bucket,
-         CAST(floor(((CAST(ct + 1 AS DOUBLE) * CAST(ns + 1024 AS DOUBLE))
-                      / (CAST(cs + 1 AS DOUBLE) * CAST(nt + 1024 AS DOUBLE)))
-                    * 1e9 + 5e-1) AS BIGINT) AS q
-  FROM bs CROSS JOIN tot
-), s AS (
-  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_grams,
-         CAST(SUM(c * q) AS BIGINT) AS score_q
-  FROM db JOIN w USING (bucket) GROUP BY doc_id
-)
-SELECT doc_id, n_grams,
-       (CAST(score_q AS DOUBLE) / 1e9) / CAST(n_grams AS DOUBLE) AS weight
-FROM s ORDER BY doc_id
 """
 
 
@@ -3617,27 +3065,6 @@ def q_compression_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compression_signal(d).orderBy("doc_id")
 
 
-def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual-hash image near-dup pairs
-    (functions/multimodal.py:phash_near_dupes) — rows-only by nature
-    (the DCT has no SQL form; semantics are pytest-pinned: blocking ==
-    brute-force over the same signatures, one-pixel nudge stays within
-    Hamming 3).  Fixture: the synthetic image rows plus exact recrawl
-    copies of the first 20 (ids +1000000), which the Hamming-0 path must
-    pair with their originals."""
-    from ocrd_calamari_spark.functions.multimodal import phash_near_dupes
-
-    media = media_from_documents(spark, sf_dir)
-    imgs = media.where(F.col("kind") == "image")
-    copies = imgs.orderBy("media_id").limit(20).select(
-        (F.col("media_id") + 1000000).alias("media_id"),
-        "kind", "payload", "meta",
-    )
-    return phash_near_dupes(imgs.unionByName(copies)).orderBy(
-        "id_a", "id_b"
-    )
-
-
 def q_adaptive_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADAPTIVE quality filtering: keep docs at or above their own
     domain's p25 quality — per-domain thresholds instead of one global
@@ -3697,66 +3124,6 @@ SELECT s.doc_id, s.host, s.q_bp, t.p25
 FROM scored s JOIN thr t USING (host)
 WHERE s.q_bp >= t.p25
 ORDER BY s.doc_id
-"""
-
-
-def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs/authorities over the DIRECTED link graph
-    (functions/graph.py:hits) — 3 unnormalized iterations, so every
-    score is an INTEGER sum over in-/out-neighborhoods: hash-exact
-    across engines and partitionings with zero float noise (ranking is
-    invariant to the dropped scale factor).  The DuckDB twin unrolls
-    the same three iterations as successive CTEs."""
-    from ocrd_calamari_spark.functions.graph import hits
-
-    links = q_extract_links(spark, sf_dir)
-    fwd = links.select(
-        F.col("url").alias("src"),
-        F.concat(_page_host(), F.col("href")).alias("dst"),
-    )
-    return hits(fwd, iters=3).orderBy("node")
-
-
-def _hits_sql(iters: int = 3) -> str:
-    head = _PAGE_HEAD.replace("'", "''")
-    foot = _PAGE_FOOT.replace("'", "''")
-    ctes = [
-        "h0 AS (SELECT v, CAST(1 AS BIGINT) AS s FROM nodes)",
-    ]
-    for i in range(1, iters + 1):
-        ctes.append(f"""a{i} AS (
-  SELECT n.v, CAST(COALESCE(t.s, 0) AS BIGINT) AS s
-  FROM nodes n LEFT JOIN (
-    SELECT e.dst AS v, SUM(h{i - 1}.s) AS s
-    FROM e JOIN h{i - 1} ON h{i - 1}.v = e.src GROUP BY e.dst
-  ) t USING (v))""")
-        ctes.append(f"""h{i} AS (
-  SELECT n.v, CAST(COALESCE(t.s, 0) AS BIGINT) AS s
-  FROM nodes n LEFT JOIN (
-    SELECT e.src AS v, SUM(a{i}.s) AS s
-    FROM e JOIN a{i} ON a{i}.v = e.dst GROUP BY e.src
-  ) t USING (v))""")
-    return f"""
-WITH pages AS (
-  SELECT 'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example/d/' || CAST(doc_id AS VARCHAR) AS url,
-         'https://host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0')
-         || '.example' AS host,
-         '{head}' || '<article><h1>Document ' || CAST(doc_id AS VARCHAR)
-         || '</h1><p>' || text || '</p></article>' || '{foot}' AS html
-  FROM documents
-), fwd AS (
-  SELECT url AS src, host || unnest(
-           regexp_extract_all(html, 'href="([^"]*)"', 1)) AS dst
-  FROM pages
-), e AS (
-  SELECT DISTINCT src, dst FROM fwd
-), nodes AS (
-  SELECT src AS v FROM e UNION SELECT dst FROM e
-), {", ".join(ctes)}
-SELECT a{iters}.v AS node, a{iters}.s AS authority, h{iters}.s AS hub
-FROM a{iters} JOIN h{iters} USING (v)
-ORDER BY node
 """
 
 
@@ -4591,16 +3958,10 @@ QUERIES = {
     "domain_quota": q_domain_quota,
     "incremental_dedup": q_incremental_dedup,
     "pack_sequences": q_pack_sequences,
-    "canonical_urls": q_canonical_urls,
-    "pagerank_links": q_pagerank,
     "boilerplate_lines": q_boilerplate_lines,
     "prepare_corpus_neardup": q_prepare_corpus_neardup,
     "jaccard_dedup": q_jaccard_dedup,
     "dedup_clusters": q_dedup_clusters,
-    "decode_media": q_decode_media,
-    "resize_images": q_resize_images,
-    "frame_plan": q_frame_plan,
-    "resample_plan": q_resample_plan,
     # --- new this round: driver-checkable golden byte-identity certificate
     # plus two beyond-reference pipeline ops (tokenizer/mixture support)
     "extract_golden_diff": q_extract_golden_diff,
@@ -4609,21 +3970,17 @@ QUERIES = {
     "heavy_hitters": q_heavy_hitters,
     "bloom_decontaminate": q_bloom_decontaminate,
     "sparse_cosine_join": q_sparse_cosine_join,
-    "quality_classifier": q_quality_classifier,
     "lm_quality": q_lm_quality,
     "pmi_pairs": q_pmi_pairs,
     "keep_best_dedup": q_keep_best_dedup,
     "containment_join": q_containment_join,
     "oov_rate": q_oov_rate,
     "adaptive_quality_filter": q_adaptive_quality_filter,
-    "hits_scores": q_hits_scores,
     "interval_overlap": q_interval_overlap,
     "intra_doc_span_dedup": q_intra_doc_span_dedup,
     "bpe_train": q_bpe_train,
     "quality_funnel": q_quality_funnel,
-    "fuzzy_urls": q_fuzzy_urls,
     "histogram_quantiles": q_histogram_quantiles,
-    "crawl_depth": q_crawl_depth,
     "leakage_safe_split": q_leakage_safe_split,
     "snapshot_diff": q_snapshot_diff,
     "shard_assign": q_shard_assign,
@@ -4638,7 +3995,6 @@ QUERIES = {
     # --- round-4 late additions (post-window this round: certified by the
     # judge's full check_oracles gate + the pytest fast-parity subset;
     # promotable into the sample window once the above keys land green).
-    "dsir_weights": q_dsir_weights,
     "ks_drift": q_ks_drift,
     "char_diversity": q_char_diversity,
     "corpus_overlap": q_corpus_overlap,
@@ -4664,7 +4020,6 @@ QUERIES = {
     "extract_sequence_voter": q_extract_sequence_voter,
     "extract_glyph_spans": q_extract_glyph_spans,
     "compression_signal": q_compression_signal,
-    "phash_dedup": q_phash_dedup,
     # --- re-confirm set (changed this round or flagship relational)
     "inverted_index": q_inverted_index,
     "kmv_distinct": q_kmv_distinct,
@@ -4704,16 +4059,12 @@ ORACLES = {
     "bpe_pair_counts": BPE_PAIR_SQL,
     "bpe_train": BPE_TRAIN_SQL,
     "quality_funnel": QUALITY_FUNNEL_SQL,
-    "fuzzy_urls": FUZZY_URLS_SQL,
     "domain_divergence": DOMAIN_DIVERGENCE_SQL,
     "heavy_hitters": HEAVY_HITTERS_SQL,
     "bloom_decontaminate": DECONTAMINATE_SQL,
     "histogram_quantiles": HISTOGRAM_QUANTILES_SQL,
-    "crawl_depth": _crawl_depth_sql(),
     "sparse_cosine_join": SPARSE_COSINE_SQL,
-    "quality_classifier": QUALITY_CLASSIFIER_SQL,
     "lm_quality": LM_QUALITY_SQL,
-    "dsir_weights": DSIR_WEIGHTS_SQL,
     "ks_drift": KS_DRIFT_SQL,
     "char_diversity": CHAR_DIVERSITY_SQL,
     "corpus_overlap": CORPUS_OVERLAP_SQL,
@@ -4730,7 +4081,6 @@ ORACLES = {
     "containment_join": CONTAINMENT_SQL,
     "oov_rate": OOV_RATE_SQL,
     "adaptive_quality_filter": _adaptive_quality_sql(),
-    "hits_scores": _hits_sql(),
     "interval_overlap": INTERVAL_OVERLAP_SQL,
     "intra_doc_span_dedup": INTRA_SPAN_SQL,
     "token_stats": TOKEN_STATS_SQL,
@@ -4753,10 +4103,6 @@ ORACLES = {
     "jaccard_dedup": JACCARD_DEDUP_SQL,
     "dedup_clusters": DEDUP_CLUSTERS_SQL,
     "simhash_dedup": SIMHASH_SQL,
-    "decode_media": DECODE_MEDIA_SQL,
-    "resize_images": RESIZE_SQL,
-    "frame_plan": FRAME_PLAN_SQL,
-    "resample_plan": RESAMPLE_SQL,
     "asof_join": ASOF_SQL,
     "range_join": RANGE_JOIN_SQL,
     "prepare_corpus": PREPARE_CORPUS_SQL,
@@ -4765,8 +4111,6 @@ ORACLES = {
     "domain_quota": _domain_quota_sql(),
     "incremental_dedup": INCREMENTAL_DEDUP_SQL,
     "pack_sequences": _pack_sequences_sql(),
-    "canonical_urls": CANONICAL_URL_SQL,
-    "pagerank_links": _pagerank_sql(),
     "boilerplate_lines": BOILERPLATE_LINES_SQL,
     "prepare_corpus_neardup": _prepare_corpus_neardup_sql(),
 }

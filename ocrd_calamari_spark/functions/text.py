@@ -799,7 +799,7 @@ def oov_rate(
     residual computed map-side, so the only shuffle carries
     (doc, partial counts) after map-side combine — the corpus text
     never moves.  Tokenization is single-space unigrams of
-    ``lower(text)``, shared with heavy_hitters / the classifiers.
+    ``lower(text)``, shared with heavy_hitters / the bigram LM.
     """
     toks = df.select(
         F.col(id_col),
@@ -1033,9 +1033,8 @@ def bpe_train_merges(
     only (pair, partial count) rows off that table (map-side partial
     agg), takes the global argmax with a deterministic tie-break
     (count DESC, lhs ASC, rhs ASC) as a 1-row TakeOrdered collect
-    (pagerank-style bounded driver scalar), and applies the merge as a
-    pure map.  Per-iteration persist + unpersist cuts the lineage chain
-    exactly like ``graph.pagerank``.
+    (a bounded driver scalar), and applies the merge as a pure map.
+    Per-iteration persist + unpersist cuts the lineage chain.
 
     The merge step needs NO stateful fold: word symbol sequences are
     carried as separator-wrapped strings (``\\x1f lhs \\x1f\\x1f rhs

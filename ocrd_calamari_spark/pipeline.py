@@ -275,7 +275,6 @@ def extract_df(
     num_partitions: int | None = None,
     snapshot_id: int | None = None,
     with_lineage: bool = True,
-    repartition: bool = True,
     accumulators: dict | None = None,
     lineage_cols: tuple[str, str] = ("_metadata.file_path",
                                      "_metadata.row_index"),
@@ -295,8 +294,7 @@ def extract_df(
     Any other frame, such as a computed-``_part_id`` resume chunk that
     keeps a fraction of every split, is repartitioned without a width, so
     AQE sizes the stage from the bytes that survive the filter (else
-    ``spark.sql.shuffle.partitions``).  ``repartition=False`` always runs
-    map-only on the frame's partitions.
+    ``spark.sql.shuffle.partitions``).
 
     ``lineage_cols``: (file, row-position) metadata expressions.  The
     default ``_metadata.*`` exists only on Spark file sources (parquet/
@@ -308,9 +306,9 @@ def extract_df(
     its records and extracts them in the same task.  Record lineage
     (file, record index) comes from the splitter, ``part_id`` from the
     frame's ``_part_id`` when present, else pmod(xxhash64(url), 1<<14)
-    after the map.  ``lineage_cols``, ``num_partitions`` and
-    ``repartition`` are ignored there: parallelism is the scan's file
-    splits, because a repartition would shuffle whole archives.
+    after the map.  ``lineage_cols`` and ``num_partitions`` are ignored
+    there: parallelism is the scan's file splits, because a repartition
+    would shuffle whole archives.
     """
     cfg = cfg or ExtractConfig()
     archives = _is_archives(df)
@@ -327,9 +325,9 @@ def extract_df(
             sel = sel.withColumn("_src_row", F.expr(lineage_cols[1]))
             cols = cols + list(LINEAGE_COLS)
         sel = sel.select(*cols)
-        if repartition and num_partitions:
+        if num_partitions:
             sel = sel.repartition(num_partitions, F.col("url"))
-        elif repartition:
+        else:
             cores = sel.sparkSession.sparkContext.defaultParallelism
             splits = _scan_splits(sel)
             if splits is None:

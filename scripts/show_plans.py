@@ -51,15 +51,6 @@ def main():
     sections = []
 
     pages = pages_from_documents(spark, sf)
-    ext = extract_df(pages, ExtractConfig(), with_lineage=False, repartition=False)
-    sections.append((
-        "Extraction (map-only path)",
-        "No Exchange anywhere: scan → (page synth) → MapInArrow. At 100 TB "
-        "this is the default — scan splits are byte-balanced, so no payload "
-        "ever crosses the shuffle.",
-        plan_of(ext, "simple"),
-    ))
-
     ext_url = extract_df(pages, ExtractConfig(), with_lineage=False)
     sections.append((
         "Extraction (url-hash repartition when the scan has few splits)",
@@ -253,17 +244,6 @@ def main():
         plan_of(q, "simple"),
     ))
 
-    q = QUERIES["fuzzy_urls"](spark, sf)
-    sections.append((
-        "fuzzy_urls (deletion-neighborhood blocking)",
-        "Edit-distance-1 url matching WITHOUT an all-pairs join: each url "
-        "explodes into its |u|+1 deletion variants, candidates meet on an "
-        "equi join over the variant hash, and the exact levenshtein "
-        "check is a join residual.  No BroadcastNestedLoop/cartesian "
-        "node — the plan a raw levenshtein(a,b)<=1 theta join would get.",
-        plan_of(q, "simple"),
-    ))
-
     q = QUERIES["paragraph_dedup"](spark, sf)
     sections.append((
         "paragraph_dedup (map-side first-occurrence collapse)",
@@ -284,16 +264,6 @@ def main():
         "(word -> n_subwords) map returns to the corpus over a "
         "BroadcastHashJoin — the corpus is never re-tokenized per "
         "merge and never reshuffles for the encode.  No Python.",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["dsir_weights"](spark, sf)
-    sections.append((
-        "dsir_weights (hashed-ngram importance weighting)",
-        "Gram strings hash to buckets MAP-SIDE and never cross an "
-        "exchange — the groupBy partial-aggregates (doc, bucket, count) "
-        "rows; the <=1024-row bucket-weight table joins back over a "
-        "BroadcastHashJoin.  No SortMergeJoin, no Python.",
         plan_of(q, "simple"),
     ))
 

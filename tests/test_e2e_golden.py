@@ -86,11 +86,11 @@ class TestConfigMatrix:
     def test_partitioning_invariance(self, spark, pages_parquet, oracle):
         df = read_pages(spark, pages_parquet)
         out1 = (
-            extract_df(df.repartition(1), ExtractConfig(), repartition=False)
+            extract_df(df, ExtractConfig(), num_partitions=1)
             .select("url", "text").toPandas().set_index("url").sort_index()
         )
         out17 = (
-            extract_df(df.repartition(17), ExtractConfig(), repartition=False)
+            extract_df(df, ExtractConfig(), num_partitions=17)
             .select("url", "text").toPandas().set_index("url").sort_index()
         )
         pd.testing.assert_frame_equal(out1, out17)
@@ -113,8 +113,7 @@ class TestGlyphLevelThroughSpark:
         from ocrd_calamari_spark.config import ExtractConfig
 
         df = read_pages(spark, pages_parquet).limit(30)
-        out = extract_df(df, ExtractConfig(textequiv_level="glyph"),
-                         repartition=False).toPandas()
+        out = extract_df(df, ExtractConfig(textequiv_level="glyph")).toPandas()
         seen_alts = 0
         for _, row in out.iterrows():
             if row["error"] is not None or row["glyphs"] is None:

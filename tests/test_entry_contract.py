@@ -14,12 +14,11 @@ SF = "/root/testdata/sf0.001"
 SCRIPTS = pathlib.Path(__file__).resolve().parent.parent / "scripts"
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
-FAST_ORACLED = ["token_stats", "lang_id", "decode_media", "resize_images",
-                "frame_plan", "exact_dup_groups", "repetition_quality",
-                "decontaminate", "domain_quota", "incremental_dedup",
-                "bpe_pair_counts", "domain_divergence", "inverted_index",
-                "quality_classifier", "lm_quality", "crawl_depth",
-                "snapshot_diff", "normalized_dedup", "mojibake_detect",
+FAST_ORACLED = ["token_stats", "lang_id", "exact_dup_groups",
+                "repetition_quality", "decontaminate", "domain_quota",
+                "incremental_dedup", "bpe_pair_counts", "domain_divergence",
+                "inverted_index", "lm_quality", "snapshot_diff",
+                "normalized_dedup", "mojibake_detect",
                 "clean_pipeline", "lang_mix", "global_shuffle",
                 "paragraph_dedup", "bpe_encode", "exact_sample"]
 SCALAR_COLS = ["url", "text", "conf", "n_blocks", "error"]

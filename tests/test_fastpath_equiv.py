@@ -5,6 +5,7 @@ vectorization."""
 
 import math
 
+import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from ocrd_calamari_spark.kernel.extract import _alt_char
@@ -41,7 +42,7 @@ def scalar_positions(text: str, fused: float):
 
 @settings(max_examples=400, deadline=None)
 @given(
-    text=st.text(alphabet=ALPHABET, min_size=0, max_size=120),
+    text=st.text(alphabet=ALPHABET, min_size=0, max_size=400),
     fused=st.floats(min_value=0.5, max_value=1.0, allow_nan=False).map(
         lambda x: round(x, 6)
     ),
@@ -53,13 +54,15 @@ def test_text_assembly_equivalent(text, fused):
     fast_text, p1, conf = normalize_block(text, fused)
     assert fast_text == scalar_text
     if p1 is not None:
-        # conf within one 1e-6 quantum of the scalar mean: np pairwise vs
-        # sequential summation can land on opposite sides of a quantization
-        # boundary.  conf is diagnostic, not part of the byte-identity
-        # contract (the text assertion above is exact).
-        probs = [p.chars[0][1] for p in ps]
-        scalar_conf = float(quantize6(sum(probs) / len(probs)))
-        assert abs(conf - scalar_conf) <= 1.5e-6
+        # p1 and conf are part of the byte-identity contract (the golden
+        # pin and test_columnar_equiv compare conf bit for bit), so both
+        # are exact.  conf is the quantized mean taken with numpy's
+        # pairwise sum: a sequential sum lands on the other side of a
+        # quantize6 half boundary on some blocks, and blocks up to 400
+        # chars pass numpy's 128-element pairwise leaves.
+        probs = np.array([p.chars[0][1] for p in ps])
+        assert np.array_equal(p1, probs)
+        assert conf == float(quantize6(np.float64(probs.sum()) / len(probs)))
 
 
 @settings(max_examples=300, deadline=None)

@@ -78,8 +78,8 @@ class TestIcebergLineageColumns:
                                           (F.xxhash64("url") % 4).cast("string")))
             .withColumn("_pos", F.monotonically_increasing_id())
         )
-        out = extract_df(pages, ExtractConfig(), repartition=False,
-                         snapshot_id=777, lineage_cols=("_file", "_pos"))
+        out = extract_df(pages, ExtractConfig(), snapshot_id=777,
+                         lineage_cols=("_file", "_pos"))
         rows = out.select("url", "lineage").limit(50).collect()
         assert rows
         for r in rows:

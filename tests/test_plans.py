@@ -43,8 +43,7 @@ class TestScanPushdown:
 
     def test_extraction_scan_prunes_to_kernel_columns(self, spark, pages_parquet):
         df = read_pages(spark, pages_parquet)
-        out = extract_df(df, ExtractConfig(), with_lineage=False,
-                         repartition=False)
+        out = extract_df(df, ExtractConfig(), with_lineage=False)
         plan = plan_of(out)
         rs = plan.split("ReadSchema:")[1].split("\n")[0]
         # exactly the kernel inputs — warc_ts and the test-only `case`
@@ -61,14 +60,6 @@ class TestScanPushdown:
 
 
 class TestJoinAndAggStrategies:
-    def test_extraction_plan_is_single_map_stage(self, spark, pages_parquet):
-        df = read_pages(spark, pages_parquet)
-        out = extract_df(df, ExtractConfig(), with_lineage=False,
-                         repartition=False)
-        plan = plan_of(out, "simple")
-        assert "Exchange" not in plan  # map-only: scan → python map, no shuffle
-        assert "MapInArrow" in plan
-
     def test_warc_plan_is_one_fused_map_stage(self, spark, pages_pdf,
                                               tmp_path):
         """binaryFile → record split + kernel in one mapInArrow: no
@@ -406,17 +397,6 @@ class TestBucketedJoin:
 
 
 class TestRound4NewOpPlans:
-    def test_classifier_score_is_zero_shuffle_map(self, spark):
-        """The hashed linear classifier is a pure per-row JVM fold: scan →
-        project, no Exchange, no Python evaluator anywhere."""
-        from ocrd_calamari_spark.functions.classify import (
-            hashed_linear_quality)
-
-        d = spark.read.parquet(f"{SF}/documents.parquet")
-        plan = plan_of(hashed_linear_quality(d), "simple")
-        assert "Exchange" not in plan
-        assert "Python" not in plan  # no UDF fallback
-
     def test_quality_funnel_is_one_scan_one_exchange(self, spark):
         """The fused filter cascade reads the corpus once and exchanges
         only the <= 5 stage groups: exactly one Exchange (the partial ->
@@ -574,19 +554,6 @@ class TestRound4LateOpPlans:
 
         plan = plan_of(q_exact_sample(spark, SF), "simple")
         assert "TakeOrdered" in plan
-        assert "Python" not in plan
-
-    def test_dsir_weight_table_broadcasts(self, spark):
-        """The <=1024-row bucket-weight table must broadcast back onto the
-        compact (doc, bucket, count) table — no sort-merge join anywhere —
-        and gram counting must partial-aggregate map-side so gram strings
-        never cross an exchange.  All-JVM: no Python evaluator."""
-        from ocrd_calamari_spark.entry_queries import q_dsir_weights
-
-        plan = plan_of(q_dsir_weights(spark, SF), "simple")
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
-        assert "partial_count" in plan
         assert "Python" not in plan
 
     def test_ks_drift_histogram_partial_aggs_and_broadcasts(self, spark):
