@@ -15,6 +15,16 @@ At 10^12-row scale the knobs that matter:
   --chunks    manifest commit frequency — smaller chunks = finer resume
   --since/--until  partition pruning on days(warc_ts) — reaches the
               Iceberg scan, prunes snapshots/files before any compute
+
+The extraction stage sizes itself (``pipeline.extract_df``): a chunk
+pruned to whole files (``--bucket-col``) runs on its own scan splits when
+there is at least one per core, else on one task per core; a chunk whose
+rows are filtered (computed buckets) is sized by AQE from the bytes that
+survive.  AQE coalesces down from ``spark.sql.shuffle.partitions``, so to
+allow more, smaller tasks per chunk raise that setting or
+``spark.sql.adaptive.coalescePartitions.initialPartitionNum``:
+
+    spark-submit --conf spark.sql.adaptive.coalescePartitions.initialPartitionNum=4096 ...
 """
 
 from __future__ import annotations
@@ -45,13 +55,6 @@ def parse_args(argv):
                    help="resume work units: xxhash64(url) buckets; a "
                         "warc: source buckets whole archives by file path")
     p.add_argument("--chunks", type=int, default=64)
-    p.add_argument("--partitions", type=int, default=None,
-                   help="width of the extraction stage on pages (default: "
-                        "when only whole files are filtered out, as with "
-                        "--bucket-col, the chunk's own scan splits if "
-                        "there are at least one per core, else one task "
-                        "per core; when rows are filtered, AQE sizes the "
-                        "stage from the chunk's bytes)")
     p.add_argument("--level", default="block",
                    choices=["block", "word", "glyph"])
     p.add_argument("--voter", default="confidence_voter_default_ctc")
@@ -76,10 +79,6 @@ def parse_args(argv):
         # read_pages would raise only after the session is up
         p.error("--since/--until prune on warc_ts; a warc: source is "
                 "read as whole archives and has none")
-    if args.partitions is not None and args.partitions < 1:
-        # extract_df reads 0 as "unset" and Spark fails on a negative
-        # width only after the session is up
-        p.error("--partitions must be >= 1")
     from ocrd_calamari_spark.config import ExtractConfig
 
     try:
@@ -118,7 +117,6 @@ def main(argv=None):
         args.config,
         n_buckets=args.buckets,
         n_chunks=args.chunks,
-        num_partitions=args.partitions,
         snapshot_id=args.snapshot_id,
         since=args.since,
         until=args.until,

@@ -272,7 +272,6 @@ def extract_df(
     df: DataFrame,
     cfg: ExtractConfig | None = None,
     *,
-    num_partitions: int | None = None,
     snapshot_id: int | None = None,
     with_lineage: bool = True,
     accumulators: dict | None = None,
@@ -284,17 +283,17 @@ def extract_df(
     Column-prunes to exactly the kernel inputs (+ lineage cols) before the
     UDF so the scan reads only url/html/text/lang.
 
-    On a pages frame the map stage is hash-repartitioned once by url,
-    which spreads even a Zipf-skewed host over every task, to
-    ``num_partitions`` tasks when given.  Without it, a bare file scan
+    On a pages frame the stage sizes itself.  A bare file scan
     (projections only, no row filter above it) that yields at least one
     split per core (``defaultParallelism``) runs map-only: Spark sizes
     those splits by bytes, and kernel cost follows the html bytes.  A
-    bare scan with fewer splits is repartitioned to one task per core.
-    Any other frame, such as a computed-``_part_id`` resume chunk that
-    keeps a fraction of every split, is repartitioned without a width, so
-    AQE sizes the stage from the bytes that survive the filter (else
-    ``spark.sql.shuffle.partitions``).
+    bare scan with fewer splits is hash-repartitioned by url to one task
+    per core; the url key spreads even a Zipf-skewed host over every
+    task.  Any other frame, such as a computed-``_part_id`` resume chunk
+    that keeps a fraction of every split, is repartitioned by url
+    without a width, so AQE sizes the stage from the bytes that survive
+    the filter, coalescing down from ``spark.sql.shuffle.partitions``
+    (or ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``).
 
     ``lineage_cols``: (file, row-position) metadata expressions.  The
     default ``_metadata.*`` exists only on Spark file sources (parquet/
@@ -306,9 +305,9 @@ def extract_df(
     its records and extracts them in the same task.  Record lineage
     (file, record index) comes from the splitter, ``part_id`` from the
     frame's ``_part_id`` when present, else pmod(xxhash64(url), 1<<14)
-    after the map.  ``lineage_cols`` and ``num_partitions`` are ignored
-    there: parallelism is the scan's file splits, because a repartition
-    would shuffle whole archives.
+    after the map.  ``lineage_cols`` is ignored there: parallelism is the
+    scan's file splits, because a repartition would shuffle whole
+    archives.
     """
     cfg = cfg or ExtractConfig()
     archives = _is_archives(df)
@@ -325,15 +324,12 @@ def extract_df(
             sel = sel.withColumn("_src_row", F.expr(lineage_cols[1]))
             cols = cols + list(LINEAGE_COLS)
         sel = sel.select(*cols)
-        if num_partitions:
-            sel = sel.repartition(num_partitions, F.col("url"))
-        else:
-            cores = sel.sparkSession.sparkContext.defaultParallelism
-            splits = _scan_splits(sel)
-            if splits is None:
-                sel = sel.repartition(F.col("url"))
-            elif splits < cores:
-                sel = sel.repartition(cores, F.col("url"))
+        cores = sel.sparkSession.sparkContext.defaultParallelism
+        splits = _scan_splits(sel)
+        if splits is None:
+            sel = sel.repartition(F.col("url"))
+        elif splits < cores:
+            sel = sel.repartition(cores, F.col("url"))
     mapped = sel.mapInArrow(
         extraction_map_fn(cfg, accumulators),
         FLAT_OUTPUT_SCHEMA,
@@ -424,7 +420,6 @@ def run_extraction(
     *,
     n_buckets: int = 64,
     n_chunks: int = 4,
-    num_partitions: int | None = None,
     snapshot_id: int | None = None,
     since=None,
     until=None,
@@ -567,8 +562,8 @@ def run_extraction(
         chunk_id = next_chunk_id + gi
         subset = pages.where(F.col("_part_id").isin(group))
         result = extract_df(
-            subset, cfg, num_partitions=num_partitions, snapshot_id=snapshot_id,
-            accumulators=accs, lineage_cols=lineage_cols,
+            subset, cfg, snapshot_id=snapshot_id, accumulators=accs,
+            lineage_cols=lineage_cols,
         )
         chunk_dir = os.path.join(data_dir, "chunk=%d" % chunk_id)
         result.write.mode("overwrite").option(

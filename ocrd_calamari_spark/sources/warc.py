@@ -1,4 +1,4 @@
-"""WARC source: read Common-Crawl-style web archives into the pages table.
+"""WARC source: split Common-Crawl-style web archives into pages batches.
 
 The crawl-native input format (ISO 28500): a WARC file is a sequence of
 records — `WARC/1.0` header block, CRLFCRLF, `Content-Length` bytes of
@@ -6,10 +6,12 @@ body, CRLFCRLF — optionally gzip-compressed with one member per record
 (the Common Crawl layout; multi-member gzip decompresses in one call).
 
 Spark shape: `spark.read.format("binaryFile")` gives one row per WARC
-file (path, bytes).  The engine's one ``mapInArrow`` function splits each
-file with ``records_to_rows`` and hands its response records to the
-extraction kernel as one Arrow pages batch (``records_to_batch``), in the
-same task: the html never returns to the JVM and there is no shuffle.
+file (path, bytes).  The engine's one ``mapInArrow`` function hands each
+file to ``records_to_batch``, which splits it and returns its response
+records as one Arrow pages batch for the extraction kernel, in the same
+task: the html never returns to the JVM and there is no shuffle.  This
+module imports no pyspark, so the splitter runs inside the worker with
+the kernel's own dependencies only.
 Parallelism is file-granular — exactly right for the real corpus shape
 (Common Crawl segments are ~1 GB gzip × ~72k files per crawl, far more
 files than executor slots, and a file above ``maxPartitionBytes`` is a
@@ -17,8 +19,7 @@ task of its own).  Each task holds one file's bytes; executor memory
 budgets ≈ concurrent tasks × file size, the same budget every WARC reader
 (warcio, FastWARC, Spark binaryFile) carries.  A DSv2 streaming-split
 reader would lift the single-file-in-memory bound; the record parser
-below would be reused unchanged.  ``read_warc`` is the same splitter as a
-pages DataFrame, for staging archives into a pages table.
+below would be reused unchanged.
 
 Reference analogue: S1/S3 — the workspace/file-group scan + page payload
 load (`ocrd_calamari/recognize.py:110-124` resolves image payloads from
@@ -33,8 +34,6 @@ from typing import Iterator
 
 import pandas as pd
 import pyarrow as pa
-
-from pyspark.sql import DataFrame, SparkSession
 
 _CRLF2 = b"\r\n\r\n"
 
@@ -233,6 +232,10 @@ def _responses(name: str, data: bytes) -> Iterator[tuple]:
         yield i, headers, url.decode("utf-8", "replace"), _http_payload(body)
 
 
+# The engine reads with ``records_to_batch``.  Outside the tests, the only
+# caller left is perfbench's ``_warc_replay`` (``records_to_rows_s``), kept
+# until the benchmark times ``records_to_batch`` instead; then this and
+# ``_warc_ts`` go.
 def records_to_rows(name: str, data: bytes) -> Iterator[dict]:
     """WARC file bytes → pages rows (response records only), with
     (_src_file, _src_row) record lineage — WARC sources have no scan-level
@@ -282,41 +285,6 @@ def records_to_batch(name: str, data: bytes,
         pa.array(row, pa.int64()),
         pa.array([part_id] * n, pa.int32()),
     ], schema=_PAGES_BATCH_SCHEMA)
-
-
-def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """WARC file(s) → pages DataFrame (url, warc_ts, html, text, lang,
-    _src_file, _src_row): a binaryFile scan whose rows are split into
-    response records by ``records_to_rows`` inside ``mapInPandas``.
-
-    The staging view of an archive (e.g. for ``write_bucketed_staging``).
-    Extraction does not go through it: ``pipeline.extract_df`` splits the
-    binaryFile rows of ``read_pages(spark, "warc:…")`` inside its own
-    map."""
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
-    from ocrd_calamari_spark.schema import PAGES_SCHEMA
-
-    schema = StructType(
-        list(PAGES_SCHEMA.fields)
-        + [StructField("_src_file", StringType(), True),
-           StructField("_src_row", LongType(), True)]
-    )
-    files = spark.read.format("binaryFile").load(path).select(
-        "path", "content"
-    )
-
-    def _fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            rows = []
-            for name, content in zip(pdf["path"].values,
-                                     pdf["content"].values):
-                rows.extend(records_to_rows(str(name), bytes(content)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(_fn, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -13,7 +13,8 @@ Checks (all hard asserts):
 2. the WARC path: ``gen_pages(400, seed=42)`` written as WARC files and
    run through ``extract_df(read_pages(spark, "warc:…"))`` — binaryFile →
    one mapInArrow that splits the records and extracts them, no shuffle —
-   equals single-process ``extract_batch`` over the same records, per url.
+   equals single-process ``extract_batch`` over the same records, split
+   by ``records_to_batch`` (the splitter the engine's map runs), per url.
 
 Usage: python scripts/local_cluster_smoke.py   (~2 min)
 """
@@ -65,7 +66,7 @@ def main() -> None:
     from ocrd_calamari_spark.gen import gen_pages, write_pages_parquet
     from ocrd_calamari_spark.kernel.extract import extract_batch
     from ocrd_calamari_spark.pipeline import extract_df, read_pages
-    from ocrd_calamari_spark.sources.warc import records_to_rows, write_warc
+    from ocrd_calamari_spark.sources.warc import records_to_batch, write_warc
 
     spark = (
         SparkSession.builder.master("local-cluster[2,4,2048]")
@@ -130,7 +131,7 @@ def main() -> None:
         path = os.path.join(warc_dir, "part-%02d.warc.gz" % k)
         write_warc(pages.iloc[k::WARC_FILES], path, compress=True)
         with open(path, "rb") as f:
-            records.extend(records_to_rows(path, f.read()))
+            records.append(records_to_batch(path, f.read()).to_pandas())
     cfg = ExtractConfig(textequiv_level="word")
     df = extract_df(read_pages(spark, "warc:" + warc_dir), cfg)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -138,7 +139,7 @@ def main() -> None:
     assert plan.count("MapInArrow") == 1, "expected one fused map"
     got = {r["url"]: r.asDict(recursive=True)
            for r in df.select("url", *COMPARED).collect()}
-    oracle = extract_batch(pd.DataFrame(records), cfg)
+    oracle = extract_batch(pd.concat(records, ignore_index=True), cfg)
     assert len(got) == len(oracle) == 400, (len(got), len(oracle))
     bad = [rec["url"] for rec in oracle.to_dict("records")
            if rec["url"] not in got

@@ -24,6 +24,22 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def spark_conf(spark):
+    """Set session settings for one test: ``spark_conf({key: value})``.
+    Each key gets its earlier value back at teardown."""
+    saved = {}
+
+    def set_conf(settings: dict) -> None:
+        for key, value in settings.items():
+            saved.setdefault(key, spark.conf.get(key))
+            spark.conf.set(key, value)
+
+    yield set_conf
+    for key, value in saved.items():
+        spark.conf.set(key, value)
+
+
 @pytest.fixture(scope="session")
 def pages_pdf():
     from ocrd_calamari_spark.gen import gen_pages

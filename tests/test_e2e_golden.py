@@ -3,6 +3,8 @@ url to the frozen single-process oracle (the kernel run outside Spark) —
 BASELINE.json north_rule correctness bar, mirroring the reference's
 end-to-end fixture runs (test/test_recognize.py)."""
 
+import re
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -83,16 +85,31 @@ class TestConfigMatrix:
     """≈ the reference's ``/`pageparallel`/... fixture matrix
     (test/conftest.py:11-13): results invariant to parallelism."""
 
-    def test_partitioning_invariance(self, spark, pages_parquet, oracle):
-        df = read_pages(spark, pages_parquet)
-        out1 = (
-            extract_df(df, ExtractConfig(), num_partitions=1)
-            .select("url", "text").toPandas().set_index("url").sort_index()
-        )
-        out17 = (
-            extract_df(df, ExtractConfig(), num_partitions=17)
-            .select("url", "text").toPandas().set_index("url").sort_index()
-        )
+    def test_partitioning_invariance(self, spark, spark_conf, pages_parquet,
+                                     pages_pdf, tmp_path):
+        """The same pages as 1 file (one split: a url repartition to one
+        task per core) and as 17 files (17 splits: map-only, 17 tasks)."""
+        from ocrd_calamari_spark.gen import write_pages_parquet
+
+        for k in range(17):
+            write_pages_parquet(pages_pdf.iloc[k::17],
+                                str(tmp_path / f"part-{k:02d}.parquet"))
+        # Spark packs small files into one split up to its open cost; at
+        # the split size the open cost keeps every file a split of its own
+        spark_conf({"spark.sql.files.openCostInBytes":
+                    spark.conf.get("spark.sql.files.maxPartitionBytes")})
+        outs = []
+        for src in (pages_parquet, str(tmp_path)):
+            df = read_pages(spark, src)
+            res = extract_df(df, ExtractConfig())
+            outs.append((df.rdd.getNumPartitions(),
+                         res._jdf.queryExecution().executedPlan().toString(),
+                         res.select("url", "text").toPandas()
+                         .set_index("url").sort_index()))
+        (splits1, plan1, out1), (splits17, plan17, out17) = outs
+        assert splits1 == 1 and splits17 == 17
+        assert re.search(r"hashpartitioning\(url#\d+, 4\)", plan1)
+        assert "Exchange" not in plan17
         pd.testing.assert_frame_equal(out1, out17)
 
     def test_word_level_through_spark(self, spark, pages_parquet):
@@ -201,8 +218,10 @@ class TestParallelismInvariance:
     reference's pageparallel-matrix invariance (test/conftest.py:11-13,
     27-29: same fixture outputs across its 4-way --pageparallel settings).
     Each parallelism level runs in its own subprocess because one JVM can
-    host only one master; different num_partitions also shifts every Arrow
-    batch boundary, so this pins batch-shape independence too."""
+    host only one master.  The one-file source has fewer splits than
+    cores, so the stage is repartitioned by url to one task per core:
+    widths 2 and 8, which also shifts every Arrow batch boundary, so this
+    pins batch-shape independence too."""
 
     SCRIPT = r"""
 import sys
@@ -212,13 +231,11 @@ from ocrd_calamari_spark.pipeline import extract_df, read_pages
 
 cores, src, out = int(sys.argv[1]), sys.argv[2], sys.argv[3]
 spark = (SparkSession.builder.master(f"local[{cores}]")
-         .config("spark.sql.shuffle.partitions", str(2 * cores))
          .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                  str(64 * cores))
          .config("spark.ui.enabled", "false").getOrCreate())
 df = read_pages(spark, src)
-res = extract_df(df, ExtractConfig(), with_lineage=False,
-                 num_partitions=2 * cores)
+res = extract_df(df, ExtractConfig(), with_lineage=False)
 res.select("url", "text", "conf", "n_blocks", "error") \
    .write.mode("overwrite").parquet(out)
 spark.stop()

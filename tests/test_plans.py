@@ -74,14 +74,6 @@ class TestJoinAndAggStrategies:
         assert plan.count("MapInArrow") == 1
         assert "MapInPandas" not in plan
 
-    def test_explicit_width_is_single_exchange(self, spark, pages_parquet):
-        df = read_pages(spark, pages_parquet)
-        out = extract_df(df, ExtractConfig(), with_lineage=False,
-                         num_partitions=16)
-        plan = plan_of(out, "simple")
-        assert plan.count("Exchange") == 1
-        assert re.search(r"hashpartitioning\(url#\d+, 16\)", plan)
-
     def test_few_splits_repartition_once_by_url(self, spark, pages_parquet):
         """One scan split against local[4]: one Exchange to one task per
         core, keyed on the url alone (no host term)."""

@@ -263,8 +263,16 @@ class TestManifestGuards:
         assert m["complete"]
 
 
+def _uncoalesced(width: int) -> dict:
+    """Session settings for chunks of ``width`` url-hash partitions that
+    AQE leaves uncoalesced: the settings an operator sizes a chunk with."""
+    return {"spark.sql.shuffle.partitions": str(width),
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+
+
 class TestCompaction:
     def test_compact_preserves_rows_and_reduces_files(self, spark,
+                                                      spark_conf,
                                                       pages_parquet,
                                                       tmp_path_factory):
         import os
@@ -272,8 +280,8 @@ class TestCompaction:
         from ocrd_calamari_spark.pipeline import compact_output
 
         d = str(tmp_path_factory.mktemp("compact"))
-        run_extraction(spark, pages_parquet, d, n_buckets=8, n_chunks=4,
-                       num_partitions=8)  # 8 files per chunk
+        spark_conf(_uncoalesced(8))  # 8 files per chunk
+        run_extraction(spark, pages_parquet, d, n_buckets=8, n_chunks=4)
         before = (read_output(spark, d)
                   .select("url", "text", "conf").toPandas()
                   .set_index("url").sort_index())
@@ -294,6 +302,7 @@ class TestCompaction:
         assert compact_output(spark, d)["chunks"] == 0
 
     def test_crash_recovery_and_no_partition_pollution(self, spark,
+                                                       spark_conf,
                                                        pages_parquet,
                                                        tmp_path_factory):
         """Interrupted compaction must be recoverable and a leftover tmp
@@ -304,8 +313,8 @@ class TestCompaction:
         from ocrd_calamari_spark.pipeline import compact_output
 
         d = str(tmp_path_factory.mktemp("crash"))
-        run_extraction(spark, pages_parquet, d, n_buckets=8, n_chunks=4,
-                       num_partitions=4)
+        spark_conf(_uncoalesced(4))
+        run_extraction(spark, pages_parquet, d, n_buckets=8, n_chunks=4)
         data = os.path.join(d, "data")
         n0 = read_output(spark, d).count()
 
@@ -406,7 +415,6 @@ class TestResumeCorpusGuards:
 
         base = ["--source", "x", "--out", "y"]
         for extra in (["--buckets", "0"], ["--chunks", "0"],
-                      ["--partitions", "0"], ["--partitions", "-1"],
                       ["--voter", "bogus"], ["--glyph-conf-cutoff", "0.5"],
                       ["--glyph-conf-cutoff", "nan"],
                       ["--source", "warc:x", "--since", "2024-06-01"],

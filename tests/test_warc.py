@@ -1,14 +1,19 @@
-"""WARC source: round-trip, gzip members, record lineage, end-to-end
-extraction parity with the parquet-sourced pipeline, the fused archive
-plan against the staged pages view, and archive-granular resume."""
+"""WARC source: the record splitter the engine runs (``records_to_batch``,
+single-process) on round-trip, gzip members, record lineage and HTTP body
+decoding; end-to-end extraction parity with the parquet-sourced
+pipeline; the fused archive plan against the single-process oracle over
+the pages staged into the archives; and archive-granular resume."""
 
 import gzip
 import os
 
+import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from ocrd_calamari_spark.config import ExtractConfig
+from ocrd_calamari_spark.kernel.extract import extract_batch
 from ocrd_calamari_spark.pipeline import (
     Manifest,
     extract_df,
@@ -18,13 +23,20 @@ from ocrd_calamari_spark.pipeline import (
     validate_output,
     with_part_id,
 )
+from ocrd_calamari_spark.schema import LINEAGE_TYPE, OUTPUT_SCHEMA
 from ocrd_calamari_spark.sources.warc import (
     _CRLF2,
     iter_warc_records,
-    read_warc,
+    records_to_batch,
     records_to_rows,
     write_warc,
 )
+
+
+def _read(path: str) -> pa.RecordBatch:
+    """One archive file through the engine's splitter."""
+    with open(path, "rb") as f:
+        return records_to_batch(path, f.read())
 
 
 def _response(url: bytes, http_head: bytes, payload: bytes) -> bytes:
@@ -45,8 +57,8 @@ def warc_path(pages_pdf, tmp_path_factory):
 
 
 class TestWarcRoundTrip:
-    def test_read_back_matches_source(self, spark, pages_pdf, warc_path):
-        got = read_warc(spark, warc_path).toPandas().set_index("url")
+    def test_read_back_matches_source(self, pages_pdf, warc_path):
+        got = _read(warc_path).to_pandas().set_index("url")
         src = pages_pdf.set_index("url")
         assert sorted(got.index) == sorted(src.index)
         for url in src.index:
@@ -55,11 +67,15 @@ class TestWarcRoundTrip:
                 assert b == b""  # null payload round-trips as empty body
             else:
                 assert bytes(a) == bytes(b)
+        # the splitter leaves text / lang null: a response record has none
+        assert got["text"].isna().all() and got["lang"].isna().all()
         # timestamps survive (second precision)
-        ts_ok = got["warc_ts"].notna().all()
-        assert ts_ok
+        with open(warc_path, "rb") as f:
+            ts = {r["url"]: r["warc_ts"]
+                  for r in records_to_rows(warc_path, f.read())}
+        assert ts == src["warc_ts"].to_dict()
 
-    def test_gzip_multimember(self, spark, pages_pdf, tmp_path_factory):
+    def test_gzip_multimember(self, pages_pdf, tmp_path_factory):
         # per-record gzip members, the Common Crawl layout
         d = tmp_path_factory.mktemp("warcgz")
         plain = str(d / "x.warc")
@@ -76,29 +92,29 @@ class TestWarcRoundTrip:
                 nxt = len(data) if nxt == -1 else nxt
                 f.write(gzip.compress(data[pos:nxt]))
                 pos = nxt
-        got = read_warc(spark, gz)
-        assert got.count() == 20
+        assert _read(gz).num_rows == 20
 
-    def test_writer_gzip_mode_round_trips(self, spark, pages_pdf,
-                                          tmp_path_factory):
+    def test_writer_gzip_mode_round_trips(self, pages_pdf, tmp_path_factory):
         d = tmp_path_factory.mktemp("warcgzw")
         p = str(d / "x.warc.gz")
         write_warc(pages_pdf.head(15), p, compress=True)
-        got = read_warc(spark, p)
-        assert got.count() == 15
+        assert _read(p).num_rows == 15
 
-    def test_record_lineage_columns(self, spark, warc_path):
-        got = read_warc(spark, warc_path)
-        rows = got.select("_src_file", "_src_row").collect()
-        assert all(r["_src_file"].endswith("crawl-00000.warc") for r in rows)
-        idx = sorted(r["_src_row"] for r in rows)
-        assert idx[0] >= 1  # record 0 is warcinfo, skipped
-        assert len(set(idx)) == len(idx)  # unique per record
+    def test_record_lineage_columns(self, warc_path):
+        got = _read(warc_path)
+        assert all(f.endswith("crawl-00000.warc")
+                   for f in got.column("_src_file").to_pylist())
+        idx = got.column("_src_row").to_pylist()
+        # record 0 is warcinfo, skipped; then one response per page in
+        # write order
+        assert idx == list(range(1, got.num_rows + 1))
+        assert got.column("_part_id").null_count == got.num_rows
 
     def test_mixed_container_keeps_only_response_records(
-            self, spark, pages_pdf, tmp_path):
+            self, pages_pdf, tmp_path):
         """A concatenated response + conversion + metadata stream: the
-        record-type filter, not file naming, decides what read_warc sees."""
+        record-type filter, not file naming, decides what the splitter
+        keeps."""
         p = str(tmp_path / "mixed.warc")
         write_warc(pages_pdf.head(5), p)
         with open(p, "ab") as f:
@@ -106,8 +122,8 @@ class TestWarcRoundTrip:
                 f.write(b"WARC/1.0\r\nWARC-Type: " + rtype + b"\r\n"
                         b"WARC-Target-URI: https://other.example/\r\n"
                         b"Content-Length: 4\r\n\r\nbody\r\n\r\n")
-        got = read_warc(spark, p).toPandas()
-        assert sorted(got["url"]) == sorted(pages_pdf.head(5)["url"])
+        got = _read(p).column("url").to_pylist()
+        assert sorted(got) == sorted(pages_pdf.head(5)["url"])
 
     def test_malformed_tail_stops_cleanly(self):
         bad = (b"WARC/1.0\r\nWARC-Type: response\r\n"
@@ -115,7 +131,7 @@ class TestWarcRoundTrip:
         assert list(iter_warc_records(bad)) == []
         truncated = b"WARC/1.0\r\nWARC-Type: response"  # no header end
         assert list(iter_warc_records(truncated)) == []
-        assert list(records_to_rows("x.warc", b"")) == []
+        assert records_to_batch("x.warc", b"").num_rows == 0
 
 
 class TestFileLevelBombCap:
@@ -152,10 +168,14 @@ class TestFileLevelBombCap:
             _bounded_gunzip_members(bomb, max_total=1 << 20)
 
     def test_records_to_rows_enforces_cap(self, monkeypatch):
+        """Both splitters stop at the file cap: ``records_to_batch`` (the
+        engine's) and ``records_to_rows`` while it exists."""
         import ocrd_calamari_spark.sources.warc as warc_mod
 
         bomb = gzip.compress(b"\x00" * (16 << 20))
         monkeypatch.setattr(warc_mod, "_MAX_FILE_BYTES", 1 << 20)
+        with pytest.raises(ValueError, match="file cap"):
+            records_to_batch("bomb.warc.gz", bomb)
         with pytest.raises(ValueError, match="file cap"):
             list(records_to_rows("bomb.warc.gz", bomb))
 
@@ -232,7 +252,7 @@ class TestWarcExtractionParity:
 
 
 class TestHttpBodyDecoding:
-    def test_chunked_and_gzip_bodies(self, spark, tmp_path):
+    def test_chunked_and_gzip_bodies(self):
         """Real crawl responses use chunked framing and gzip content
         encoding — the reader must hand the kernel markup bytes."""
         import gzip as _gz
@@ -255,15 +275,13 @@ class TestHttpBodyDecoding:
                      + b"\r\n0\r\n\r\n")
             + _response(b"http://d/", b"HTTP/1.1 200 OK", html)
         )
-        p = str(tmp_path / "enc.warc")
-        with open(p, "wb") as f:
-            f.write(data)
-        got = {r["url"]: bytes(r["html"])
-               for r in read_warc(spark, p).collect()}
+        batch = records_to_batch("enc.warc", data)
+        got = dict(zip(batch.column("url").to_pylist(),
+                       batch.column("html").to_pylist()))
         assert got == {"http://a/": html, "http://b/": html,
                        "http://c/": html, "http://d/": html}
 
-    def test_malformed_encoding_falls_back_to_raw(self, spark, tmp_path):
+    def test_malformed_encoding_falls_back_to_raw(self):
         from ocrd_calamari_spark.sources.warc import _http_payload
 
         # declared gzip but not gzip → raw bytes back (kernel will flag)
@@ -276,101 +294,152 @@ class TestHttpBodyDecoding:
         assert _http_payload(body2) == b"hello"
 
 
-def _odd_records() -> list[bytes]:
-    """warcinfo, request and metadata records around chunked, gzip and
-    plain responses, one of them a binary (poison) payload."""
+def _odd_records() -> list[tuple[bytes, str | None, bytes | None]]:
+    """(record, url, html) for warcinfo, request and metadata records
+    around chunked, gzip and plain responses, one of them a binary
+    (poison) payload.  ``url`` and ``html`` are what the kernel should
+    see, None on the records that are not responses."""
     html = b"<html><body><p>fused archive paragraph one</p></body></html>"
+    poison = b"\x00\x01\x02\x03" * 512
     gz = gzip.compress(html)
     chunked = (hex(10)[2:].encode() + b"\r\n" + html[:10] + b"\r\n"
                + hex(len(html) - 10)[2:].encode() + b"\r\n" + html[10:]
                + b"\r\n0\r\n\r\n")
 
-    def other(rtype: bytes) -> bytes:
+    def other(rtype: bytes) -> tuple[bytes, None, None]:
         return (b"WARC/1.0\r\nWARC-Type: " + rtype + b"\r\n"
                 b"WARC-Target-URI: https://odd.example/other\r\n"
-                b"Content-Length: 4\r\n\r\nbody\r\n\r\n")
+                b"Content-Length: 4\r\n\r\nbody\r\n\r\n", None, None)
+
+    def response(name: str, http_head: bytes, payload: bytes,
+                 html: bytes) -> tuple[bytes, str, bytes]:
+        url = "https://odd.example/" + name
+        return _response(url.encode(), http_head, payload), url, html
 
     return [
-        b"WARC/1.0\r\nWARC-Type: warcinfo\r\nContent-Length: 9\r\n\r\n"
-        b"software:\r\n\r\n",
+        (b"WARC/1.0\r\nWARC-Type: warcinfo\r\nContent-Length: 9\r\n\r\n"
+         b"software:\r\n\r\n", None, None),
         other(b"request"),
-        _response(b"https://odd.example/chunked",
-                  b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked", chunked),
+        response("chunked", b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked",
+                 chunked, html),
         other(b"metadata"),
-        _response(b"https://odd.example/gzip",
-                  b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip", gz),
-        _response(b"https://odd.example/poison", b"HTTP/1.1 200 OK",
-                  b"\x00\x01\x02\x03" * 512),
-        _response(b"https://odd.example/plain", b"HTTP/1.1 200 OK", html),
+        response("gzip", b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip", gz,
+                 html),
+        response("poison", b"HTTP/1.1 200 OK", poison, poison),
+        response("plain", b"HTTP/1.1 200 OK", html, html),
     ]
+
+
+def _archive_name(k: int) -> str:
+    return "part-%02d.warc" % k + (".gz" if k % 2 else "")
 
 
 def _write_archives(pages, d, n_files: int) -> None:
     """``pages`` spread over ``n_files`` archives, plain and gzip."""
     for k in range(n_files):
-        name = "part-%02d.warc" % k + (".gz" if k % 2 else "")
-        write_warc(pages.iloc[k::n_files], os.path.join(d, name),
+        write_warc(pages.iloc[k::n_files], os.path.join(d, _archive_name(k)),
                    compress=bool(k % 2))
 
 
 def _n_records(path: str) -> int:
-    with open(path, "rb") as f:
-        return len(list(records_to_rows(path, f.read())))
+    return _read(path).num_rows
 
 
 def _expected_records(d: str) -> int:
     return sum(_n_records(os.path.join(d, name)) for name in os.listdir(d))
 
 
+COMPARED = ("text", "conf", "n_blocks", "blocks", "words", "glyphs")
+
+
 class TestFusedArchivePlan:
     """``extract_df`` over ``read_pages(spark, "warc:…")`` splits and
-    extracts in one map; its output must equal the staged plan that
-    extracts the ``read_warc`` pages view, row for row."""
+    extracts in one map; its rows must equal the single-process oracle
+    (``extract_batch``) over the staged pages: the pages ``write_warc``
+    was given and the odd records' responses, with no prior text and no
+    language, as a WARC response record carries them."""
+
+    N_FILES = 3
 
     @pytest.fixture(scope="class")
     def archive_dir(self, pages_pdf, tmp_path_factory):
         d = str(tmp_path_factory.mktemp("fused"))
-        _write_archives(pages_pdf.head(72), d, 3)
+        _write_archives(pages_pdf.head(72), d, self.N_FILES)
         # the odd records as a per-record multi-member gzip archive (the
         # Common Crawl layout)
         with open(os.path.join(d, "odd.warc.gz"), "wb") as f:
-            f.write(b"".join(gzip.compress(r) for r in _odd_records()))
+            f.write(b"".join(gzip.compress(r) for r, _, _ in _odd_records()))
         return d
 
+    @pytest.fixture(scope="class")
+    def staged(self, pages_pdf):
+        """The staged pages (url, html, text, lang) and each url's
+        (archive name, record index in that file)."""
+        pages, where = [], {}
+        for k in range(self.N_FILES):
+            part = pages_pdf.head(72).iloc[k::self.N_FILES]
+            # record 0 of a written archive is its warcinfo record
+            for i, (url, html) in enumerate(zip(part["url"], part["html"]),
+                                            start=1):
+                pages.append((url, html))
+                where[url] = (_archive_name(k), i)
+        for i, (_, url, html) in enumerate(_odd_records()):
+            if url is not None:
+                pages.append((url, html))
+                where[url] = ("odd.warc.gz", i)
+        pdf = pd.DataFrame(pages, columns=["url", "html"]).assign(
+            text=None, lang=None)
+        return pdf, where
+
+    @staticmethod
+    def _assert_rows_equal_oracle(rows, staged, cfg):
+        pdf, _ = staged
+        want = extract_batch(pdf, cfg).to_dict("records")
+        assert len(rows) == len(want) == len(pdf)
+        by_url = {r["url"]: r for r in rows}
+        for rec in want:
+            got = by_url[rec["url"]]
+            assert (got["error"] is None) == (rec["error"] is None), \
+                rec["url"]
+            if rec["error"] is None:
+                for c in COMPARED:
+                    assert got[c] == rec[c], (rec["url"], c)
+            else:
+                assert got["text"] is None, rec["url"]
+
     @pytest.mark.parametrize("level", ["block", "word", "glyph"])
-    def test_fused_equals_staged_pages_view(self, spark, archive_dir, level):
+    def test_fused_equals_staged_pages_view(self, spark, archive_dir, staged,
+                                            level):
         cfg = ExtractConfig(textequiv_level=level)
         fused = extract_df(read_pages(spark, "warc:" + archive_dir), cfg)
-        staged = extract_df(read_warc(spark, archive_dir), cfg,
-                            lineage_cols=("_src_file", "_src_row"))
-        assert fused.schema == staged.schema
-
-        def rows(df):
-            return sorted((r.asDict(recursive=True) for r in df.collect()),
-                          key=lambda r: r["url"])
-
-        a, b = rows(fused), rows(staged)
-        assert len(a) == _expected_records(archive_dir)
-        assert a == b
-        by_url = {r["url"]: r for r in a}
+        rows = [r.asDict(recursive=True) for r in fused.collect()]
+        assert len(rows) == _expected_records(archive_dir)
+        self._assert_rows_equal_oracle(rows, staged, cfg)
+        by_url = {r["url"]: r for r in rows}
         assert by_url["https://odd.example/poison"]["error"] is not None
-        assert any(r["error"] is not None for r in a
+        assert any(r["error"] is not None for r in rows
                    if not r["url"].startswith("https://odd."))
         for u in ("chunked", "gzip", "plain"):
             assert by_url["https://odd.example/" + u]["text"] == (
                 "fused archive paragraph one")
-        assert all(r["lineage"]["file"] and r["lineage"]["row_index"] >= 1
-                   and r["lineage"]["part_id"] is not None for r in a)
+        # lineage: the archive and the record's index in it
+        _, where = staged
+        for r in rows:
+            name, index = where[r["url"]]
+            assert r["lineage"]["file"].endswith("/" + name), r["url"]
+            assert r["lineage"]["row_index"] == index, r["url"]
+            assert r["lineage"]["part_id"] is not None
 
-    def test_without_lineage_matches_staged(self, spark, archive_dir):
+    def test_without_lineage_matches_staged(self, spark, archive_dir,
+                                            staged):
         cfg = ExtractConfig()
         fused = extract_df(read_pages(spark, "warc:" + archive_dir), cfg,
                            with_lineage=False)
-        staged = extract_df(read_warc(spark, archive_dir), cfg,
-                            with_lineage=False)
-        assert fused.schema == staged.schema
-        assert (sorted(fused.select("url", "text", "lineage").collect())
-                == sorted(staged.select("url", "text", "lineage").collect()))
+        assert fused.schema.names == OUTPUT_SCHEMA.names
+        rows = [r.asDict(recursive=True) for r in fused.collect()]
+        self._assert_rows_equal_oracle(rows, staged, cfg)
+        nulls = dict.fromkeys(LINEAGE_TYPE.names)
+        assert all(r["lineage"] == nulls for r in rows)
 
     def test_window_on_archives_raises(self, spark, archive_dir):
         for window in ({"since": "2024-01-01"}, {"until": "2024-01-01"}):
