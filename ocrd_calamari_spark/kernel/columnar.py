@@ -53,7 +53,7 @@ from ocrd_calamari_spark.kernel.fastpath import (
     codepoints,
     quantize6,
 )
-from ocrd_calamari_spark.kernel.segment import segment
+from ocrd_calamari_spark.kernel.segment import page_counts, segment
 from ocrd_calamari_spark.kernel.vote import vote_block
 
 # An output batch is cut once the spans (blocks + words + glyphs) emitted
@@ -63,6 +63,8 @@ from ocrd_calamari_spark.kernel.vote import vote_block
 MAX_BATCH_SPANS = 1 << 21
 
 LINEAGE_COLS = ("_src_file", "_src_row", "_part_id")
+# accumulator names of the two entries of segment.page_counts()
+_PATH_COUNTERS = ("segment_native", "segment_fallback")
 
 
 class _Pending:
@@ -393,11 +395,14 @@ def arrow_map_fn(cfg: ExtractConfig, schema: pa.Schema,
 
     ``schema``: the Arrow form of ``schema.FLAT_OUTPUT_SCHEMA``.  ``accs``:
     optional accumulators (docs, failed, overwrote, raw_charset), added
-    per output batch from its Arrow null and true counts.  Config and
+    per output batch from its Arrow null and true counts, and
+    segment_native / segment_fallback when the dict holds them: the pages
+    each segmenter ran on (``segment.page_counts()`` deltas).  Config and
     schema are captured once per task, before the batch loop.
     """
 
     def _fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        seen = page_counts()
         for batch in batches:
             for out in extract_arrow(batch, cfg, schema):
                 if accs is not None:
@@ -406,6 +411,11 @@ def arrow_map_fn(cfg: ExtractConfig, schema: pa.Schema,
                                        - out.column("error").null_count)
                     for name in ("overwrote", "raw_charset"):
                         accs[name].add(pc.sum(out.column(name)).as_py() or 0)
+                    now = page_counts()
+                    for k, name in enumerate(_PATH_COUNTERS):
+                        if name in accs:
+                            accs[name].add(now[k] - seen[k])
+                    seen = now
                 yield out
 
     return _fn

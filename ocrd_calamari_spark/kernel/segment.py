@@ -14,8 +14,12 @@ decoded text.
     decision to post-process positions, not the sentence
     (recognize.py:228-235)
 
-Built on the stdlib ``html.parser`` (tolerant of malformed markup; poisoned
-payloads that still defeat it surface as error rows upstream).
+Three implementations of one semantics, pinned equal by
+test_segment_equiv.py: ``segment_spec`` on the stdlib ``html.parser``
+(tolerant of malformed markup; poisoned payloads that still defeat it
+surface as error rows upstream), ``_segment_fused``, a regex token loop
+with the spec's handlers inlined, and the compiled ``_segment.c`` (loaded
+by ``native.py``), which ``segment()`` runs whenever it loads.
 """
 
 from __future__ import annotations
@@ -56,7 +60,7 @@ class Block:
     pos: int  # document order (O3: explicit position, no implicit order)
     tag: str
     depth: int  # DOM depth at the opening tag
-    chunks: list = field(default_factory=list)
+    chunks: list = field(default_factory=list)  # "".join() is raw_text
     n_link_chars: int = 0  # chars inside <a> subtrees
     n_tags: int = 0  # descendant element count (density denominator)
 
@@ -159,6 +163,10 @@ def segment_spec(html_text: str) -> list[Block]:
 # ---------------------------------------------------------------------------
 import html as _html
 import re as _re
+import threading as _threading
+
+from ocrd_calamari_spark.kernel import native as _native
+from ocrd_calamari_spark.kernel.native import F_AMP, F_ANCHOR, F_WS
 
 _TOKEN_RE = _re.compile(
     r"<!--.*?-->"                      # comment
@@ -170,8 +178,10 @@ _TOKEN_RE = _re.compile(
     # "<p aaaa…" with no closing ">" must fail in O(bound), not backtrack
     # over megabytes (a 1 MB such payload would otherwise stall the task;
     # tags with >4 KB of attributes are treated as text, divergence from
-    # HTMLParser on such input is accepted per test_segment_equiv.py)
-    r"((?:\"[^\"]*\"|'[^']*'|[^>\"']){0,4096}+)"
+    # HTMLParser on such input is accepted per test_segment_equiv.py).
+    # A "/" is an attribute char only when no ">" follows it, so the "/"
+    # of "/>" is left for the self-closing group
+    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'/]|/(?!>)){0,4096}+)"
     r"(/?)>",
     _re.DOTALL,
 )
@@ -180,6 +190,13 @@ _RAWTEXT = {"script", "style"}  # HTMLParser CDATA-mode elements
 _RAWTEXT_CLOSE = {
     t: _re.compile(r"</\s*%s\s*>" % t, _re.IGNORECASE) for t in _RAWTEXT
 }
+
+
+def _map_ws(text: str) -> str:
+    """The spec's whitespace replace chain ("\\n\\t\\r\\f\\v" → " ")."""
+    return (text.replace("\n", " ").replace("\t", " ")
+                .replace("\r", " ").replace("\f", " ")
+                .replace("\v", " "))
 
 
 def _segment_fused(html_text: str) -> list[Block]:
@@ -209,9 +226,7 @@ def _segment_fused(html_text: str) -> list[Block]:
             data = html_text[pos:end]
             if "&" in data:
                 data = unescape(data)
-            text = (data.replace("\n", " ").replace("\t", " ")
-                        .replace("\r", " ").replace("\f", " ")
-                        .replace("\v", " "))
+            text = _map_ws(data)
             blk = block_stack[-1]
             blk.chunks.append(text)
             if anchor_depth > 0:
@@ -285,11 +300,87 @@ def _segment_fused(html_text: str) -> list[Block]:
     return [b for b in blocks if b.visible_len() > 0]
 
 
+def _segment_native(seg: _native.Segmenter, html_text: str):
+    """The compiled segmenter (_segment.c, the state machine of
+    ``_segment_fused``) → blocks, or None when it leaves the page to
+    Python.  C reports each kept block's chunk spans; Python slices them,
+    unescapes each chunk that holds "&" and applies the whitespace replace
+    chain, as ``_segment_fused`` does.  A block without "&" is sliced and
+    joined in one piece, mapped only if C saw a chain char in it (the
+    chain maps char by char), and C has counted its visible and link
+    chars; a block with "&" is rebuilt chunk by chunk and counted after
+    the unescape."""
+    res = seg.run(html_text)
+    if res is None:
+        return None
+    # the out records of _segment.c: 9 ints per block, 3 per chunk
+    brec, crec = res
+    tags = seg.tags
+    blocks = []
+    it = iter(brec)
+    for pos, tag, depth, n_tags, lo, hi, vis, link, flags in zip(*[it] * 9):
+        if not flags & F_AMP:
+            if hi - lo == 1:
+                raw = html_text[crec[3 * lo]:crec[3 * lo + 1]]
+            else:
+                raw = "".join([html_text[crec[j]:crec[j + 1]]
+                               for j in range(3 * lo, 3 * hi, 3)])
+            if flags & F_WS:
+                raw = _map_ws(raw)
+            chunks = [raw]
+        else:
+            chunks = []
+            link = 0
+            for j in range(3 * lo, 3 * hi, 3):
+                data = html_text[crec[j]:crec[j + 1]]
+                if crec[j + 2] & F_AMP:
+                    data = _html.unescape(data)
+                text = _map_ws(data)
+                chunks.append(text)
+                if crec[j + 2] & F_ANCHOR:
+                    link += len(text.replace(" ", ""))
+            raw = "".join(chunks)
+            vis = len(raw) - raw.count(" ")
+            if vis == 0:
+                continue
+        blocks.append(Block(pos, tags[tag], depth, chunks, link, n_tags,
+                            raw, vis))
+    return blocks
+
+
+# Pages segmented in this process: [by the compiled segmenter, by the
+# Python fallback]; read through page_counts().  Process-wide on purpose:
+# the accumulators report per worker process, as deltas over a task.
+_PAGE_COUNTS = [0, 0]
+_COUNTS_LOCK = _threading.Lock()
+
+
+def page_counts() -> tuple[int, int]:
+    """Pages segmented in this process so far: (native, fallback).
+
+    A function, not the list, is what callers hold: cloudpickle ships a
+    closure's module-level values by copy, but a module function by
+    reference, so a map function on a worker reads the live counts."""
+    with _COUNTS_LOCK:
+        return _PAGE_COUNTS[0], _PAGE_COUNTS[1]
+
+
 def segment(html_text: str) -> list[Block]:
     """Parse html → candidate blocks in document order (may be empty).
 
-    Fused regex tokenizer+segmenter with HTMLParser-spec fallback on
-    scan errors."""
+    The compiled segmenter when it loads and accepts the page; else (no
+    compiler, a failed build or load, or a page C or its buffer cannot
+    take) the fused regex tokenizer+segmenter, with the HTMLParser spec as
+    the fallback on scan errors."""
+    seg = _native.load()
+    if seg is not None:
+        blocks = _segment_native(seg, html_text)
+        if blocks is not None:
+            with _COUNTS_LOCK:
+                _PAGE_COUNTS[0] += 1
+            return blocks
+    with _COUNTS_LOCK:
+        _PAGE_COUNTS[1] += 1
     try:
         return _segment_fused(html_text)
     except Exception:

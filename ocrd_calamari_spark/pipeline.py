@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ocrd_calamari_spark.config import ExtractConfig
+from ocrd_calamari_spark.kernel import native
 from ocrd_calamari_spark.kernel.columnar import LINEAGE_COLS, arrow_map_fn
 from ocrd_calamari_spark.schema import (
     FLAT_OUTPUT_SCHEMA,
@@ -220,7 +221,8 @@ def make_accumulators(spark: SparkSession) -> dict:
     test/test_recognize.py:47-52, :73-75)."""
     sc = spark.sparkContext
     return {name: sc.accumulator(0)
-            for name in ("docs", "failed", "overwrote", "raw_charset")}
+            for name in ("docs", "failed", "overwrote", "raw_charset",
+                         "segment_native", "segment_fallback")}
 
 
 def with_part_id(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -310,6 +312,7 @@ def extract_df(
     archives.
     """
     cfg = cfg or ExtractConfig()
+    native.load()  # compile once here, so local workers find it cached
     archives = _is_archives(df)
     if archives:
         sel = df.select(*[c for c in ("path", "content", "_part_id")

@@ -14,7 +14,9 @@ Checks (all hard asserts):
    run through ``extract_df(read_pages(spark, "warc:…"))`` — binaryFile →
    one mapInArrow that splits the records and extracts them, no shuffle —
    equals single-process ``extract_batch`` over the same records, split
-   by ``records_to_batch`` (the splitter the engine's map runs), per url.
+   by ``records_to_batch`` (the splitter the engine's map runs), per url;
+   the ``segment_native`` accumulator shows that the executors compiled
+   ``kernel/_segment.c`` from the zip and ran it.
 
 Usage: python scripts/local_cluster_smoke.py   (~2 min)
 """
@@ -65,7 +67,11 @@ def main() -> None:
     from ocrd_calamari_spark.config import ExtractConfig
     from ocrd_calamari_spark.gen import gen_pages, write_pages_parquet
     from ocrd_calamari_spark.kernel.extract import extract_batch
-    from ocrd_calamari_spark.pipeline import extract_df, read_pages
+    from ocrd_calamari_spark.pipeline import (
+        extract_df,
+        make_accumulators,
+        read_pages,
+    )
     from ocrd_calamari_spark.sources.warc import records_to_batch, write_warc
 
     spark = (
@@ -133,7 +139,9 @@ def main() -> None:
         with open(path, "rb") as f:
             records.append(records_to_batch(path, f.read()).to_pandas())
     cfg = ExtractConfig(textequiv_level="word")
-    df = extract_df(read_pages(spark, "warc:" + warc_dir), cfg)
+    accs = make_accumulators(spark)
+    df = extract_df(read_pages(spark, "warc:" + warc_dir), cfg,
+                    accumulators=accs)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, "the WARC plan must not shuffle"
     assert plan.count("MapInArrow") == 1, "expected one fused map"
@@ -148,6 +156,12 @@ def main() -> None:
     assert not bad, f"WARC path differs from extract_batch on {bad[:5]}"
     print(f"[OK]   warc path: 400 urls from {WARC_FILES} WARC files equal "
           "extract_batch through one fused map stage")
+    # the executors built kernel/_segment.c from the zip and ran it
+    native_pages = accs["segment_native"].value
+    fallback_pages = accs["segment_fallback"].value
+    assert native_pages > 0, (native_pages, fallback_pages)
+    print(f"[OK]   segmenter on the executors: {native_pages} pages native, "
+          f"{fallback_pages} fallback")
 
     spark.stop()
     print("multi-JVM smoke: all checks pass")

@@ -21,7 +21,9 @@ def build(out_path: str) -> str:
             if "__pycache__" in dirpath:
                 continue
             for name in sorted(filenames):
-                if not name.endswith(".py"):
+                # kernel/_segment.c rides along: executors compile it on
+                # first use (kernel/native.py)
+                if not name.endswith((".py", ".c")):
                     continue
                 full = os.path.join(dirpath, name)
                 zf.write(full, os.path.relpath(full, ROOT))

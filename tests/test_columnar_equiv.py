@@ -283,13 +283,15 @@ def test_bounded_output_batches_equal_unsplit(level, monkeypatch):
         assert pa.Table.from_batches(parts).equals(pa.Table.from_batches(whole))
 
 
-def test_accumulators_count_from_arrow():
-    class Acc:
-        def __init__(self):
-            self.value = 0
+class Acc:
+    def __init__(self):
+        self.value = 0
 
-        def add(self, v):
-            self.value += v
+    def add(self, v):
+        self.value += v
+
+
+def test_accumulators_count_from_arrow():
 
     pdf = gen_pages(120, seed=2)
     accs = {k: Acc() for k in ("docs", "failed", "overwrote", "raw_charset")}
@@ -299,3 +301,41 @@ def test_accumulators_count_from_arrow():
     assert accs["failed"].value == want["error"].notna().sum() > 0
     assert accs["overwrote"].value == want["overwrote"].sum() > 0
     assert accs["raw_charset"].value == want["raw_charset"].sum() > 0
+
+
+def test_forced_fallback_rows_equal_native(tmp_path, monkeypatch):
+    """``warc_ingest``-shaped input (``gen_pages(seed=7)`` as gzip WARC
+    archives split by ``records_to_batch``, block level): with the native
+    loader patched to return None, every page runs the fused Python
+    segmenter, the rows equal the native run's, and the two segment
+    counters say which path ran on how many pages."""
+    from ocrd_calamari_spark.kernel import native
+    from ocrd_calamari_spark.sources.warc import records_to_batch, write_warc
+
+    pages = gen_pages(2000, seed=7)
+    batches = []
+    for k in range(2):
+        path = str(tmp_path / f"part-{k:02d}.warc.gz")
+        write_warc(pages.iloc[k::2], path, compress=True)
+        with open(path, "rb") as f:
+            batches.append(records_to_batch(path, f.read()))
+
+    def run():
+        accs = {k: Acc() for k in ("docs", "failed", "overwrote",
+                                   "raw_charset", "segment_native",
+                                   "segment_fallback")}
+        fn = columnar.arrow_map_fn(ExtractConfig(), SCHEMA, accs)
+        return pa.Table.from_batches(list(fn(iter(batches)))), accs
+
+    got, accs = run()
+    segmented = accs["segment_native"].value + accs["segment_fallback"].value
+    ok_rows = got.column("error").null_count
+    assert accs["docs"].value == 2000
+    assert 2000 >= segmented >= ok_rows > 1500
+    if native.load() is not None:
+        assert accs["segment_fallback"].value == 0
+    monkeypatch.setattr(native, "load", lambda: None)
+    fallback, fb_accs = run()
+    assert fallback.equals(got)
+    assert fb_accs["segment_native"].value == 0
+    assert fb_accs["segment_fallback"].value == segmented

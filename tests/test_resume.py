@@ -17,6 +17,20 @@ def out_single(spark, pages_parquet, tmp_path_factory):
     return d, metrics
 
 
+def test_manifest_counts_segment_paths(out_single):
+    """The manifest's accumulators say which segmenter ran on the Python
+    workers: every page that reached segment() is counted once, and with
+    a loadable compiled segmenter none fell back."""
+    from ocrd_calamari_spark.kernel import native
+
+    _, metrics = out_single
+    acc = metrics["accumulators"]
+    segmented = acc["segment_native"] + acc["segment_fallback"]
+    assert acc["docs"] >= segmented >= acc["docs"] - acc["failed"] > 0
+    if native.load() is not None:
+        assert acc["segment_fallback"] == 0
+
+
 class TestResume:
     def test_kill_and_resume_identical(self, spark, pages_parquet, out_single,
                                        tmp_path_factory):

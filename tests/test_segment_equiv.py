@@ -1,20 +1,56 @@
-"""Differential test: the fast regex tokenizer must produce the same blocks
-as the HTMLParser spec tokenizer on generator output and on randomized
-well-formed-ish HTML (both drive the same _Segmenter event logic)."""
+"""Differential test: the compiled segmenter (``_segment.c`` through
+``kernel/native.py``), the fused regex tokenizer and the HTMLParser spec
+tokenizer must produce the same blocks on generator output and on
+randomized well-formed-ish HTML: native == fused everywhere, and
+fused == spec except on the pathological inputs documented below.
+``segment()`` runs the native path whenever it loads, so the tests that
+compare ``segment`` with ``segment_spec`` check native == spec."""
+
+import random
+import shutil
 
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from ocrd_calamari_spark.gen import gen_pages
+from ocrd_calamari_spark.kernel import native
 from ocrd_calamari_spark.kernel.decode import decode_html
-from ocrd_calamari_spark.kernel.segment import segment, segment_spec
+from ocrd_calamari_spark.kernel.segment import (
+    _segment_fused,
+    _segment_native,
+    segment,
+    segment_spec,
+)
+
+SEG = native.load()
+needs_native = pytest.mark.skipif(
+    SEG is None,
+    reason="compiled segmenter unavailable (no cc, or the build or load "
+           "failed): the native == fused tests did not run")
 
 
 def blocks_key(blocks):
     return [
-        (b.pos, b.tag, b.depth, b.raw_text, b.n_link_chars, b.n_tags)
+        (b.pos, b.tag, b.depth, b.raw_text, b.n_link_chars, b.n_tags,
+         b.visible_len())
         for b in blocks
     ]
+
+
+def native_key(html):
+    """The native blocks of ``html``; the page must not fall back."""
+    blocks = _segment_native(SEG, html)
+    assert blocks is not None, "the compiled segmenter left the page to Python"
+    return blocks_key(blocks)
+
+
+def corpus_texts(n, seed):
+    texts = []
+    for _, row in gen_pages(n, seed=seed).iterrows():
+        if row["case"] == "poison":
+            continue
+        texts.append(decode_html(bytes(row["html"]))[0])
+    return texts
 
 
 def test_corpus_equivalence():
@@ -35,32 +71,58 @@ _TAGS = ["p", "div", "li", "span", "a", "em", "nav", "script", "h2"]
 # tolerant grammar parses "<p</div>" as a tag literally named "p<", a
 # pathological-input divergence we accept (deterministic on both sides;
 # the product contract compares kernel output to the kernel-built oracle,
-# which always uses the same tokenizer).
+# which always uses the same tokenizer).  For the same reason an unquoted
+# attribute value that ends in "/" is EXCLUDED: HTMLParser keeps the "/"
+# of "<img href=a/>" in the value, so the tag does not self-close there,
+# while the tokenizers see "/>" (_FUSED_ONLY below).
+# A tag whose attributes pass the 4,096-codepoint bound is text to the
+# tokenizers and a tag to HTMLParser (test_attribute_bound_counts_codepoints).
+#
+# The exotic pieces pin the compiled segmenter's hazards: U+017F, U+0130
+# and U+0131 fold to "s" / "i" in the rawtext close, \x1c, \x85 and
+# U+3000 are \s there but not whitespace to the replace chain, a comment
+# splits "&amp;" into two chunks that never unescape, and "\ud800" is a
+# lone surrogate.
 _texts = st.lists(
     st.sampled_from(["a", "b", " ", "c", "&amp;", "< ", "&lt;", "é", "\n",
-                     "\t", "."]),
+                     "\t", "\r\f\v", ".", "\u017f", "\u0130", "\u0131",
+                     "\x1c", "\x85", "\u3000", "&am<!---->p;", "\ud800"]),
     min_size=0, max_size=30,
 ).map("".join)
+# self-closing forms, one per tag class (unknown, block, anchor, drop, void)
+_SELF_CLOSING = ["<span/>", "<p/>", "<a />", '<div class="x"/>', "<nav/>",
+                 "<br/>", "<script/>"]
+# an attribute group of exactly n codepoints (n units: the tag name's
+# leading space plus n - 1 multibyte codepoints, 2 to 4 bytes each in
+# UTF-8); 4,096 is the bound
+_LONG_ATTR = {n: " " + ("é日😀" * n)[:n - 1] for n in (4095, 4096, 4097)}
 
 
 @st.composite
-def html_frag(draw, depth=0):
+def html_frag(draw, depth=0, bound=4096):
     if depth > 3:
         return draw(_texts)
     parts = []
     for _ in range(draw(st.integers(0, 3))):
-        kind = draw(st.integers(0, 3))
+        kind = draw(st.integers(0, 5))
         if kind == 0:
             parts.append(draw(_texts))
         elif kind == 1:
             tag = draw(st.sampled_from(_TAGS))
-            inner = draw(html_frag(depth + 1))  # type: ignore
+            inner = draw(html_frag(depth + 1, bound))  # type: ignore
             attrs = draw(st.sampled_from(["", ' class="x"', ' href="a>b"']))
             parts.append(f"<{tag}{attrs}>{inner}</{tag}>")
         elif kind == 2:
             parts.append("<!-- a comment <p>ignored</p> -->")
-        else:
+        elif kind == 3:
             parts.append("<br>")
+        elif kind == 4:
+            parts.append(draw(st.sampled_from(_SELF_CLOSING)))
+        else:
+            n = draw(st.sampled_from([k for k in _LONG_ATTR if k <= bound]))
+            tag = draw(st.sampled_from(_TAGS))
+            inner = draw(_texts)
+            parts.append(f"<{tag}{_LONG_ATTR[n]}>{inner}</{tag}>")
     return "".join(parts)
 
 
@@ -124,3 +186,160 @@ def test_rawtext_close_requires_tag_boundary():
     ]
     for html in cases:
         assert blocks_key(segment(html)) == blocks_key(segment_spec(html)), html
+
+
+# ---------------------------------------------------------------------------
+# The compiled segmenter: native == fused everywhere
+# ---------------------------------------------------------------------------
+def test_native_loads_when_cc_present():
+    """With a compiler on PATH the native path must load: a silent
+    fallback would leave every test below skipped."""
+    if shutil.which("cc") is None:
+        pytest.skip("no cc on PATH: the compiled segmenter cannot build")
+    assert SEG is not None
+
+
+@needs_native
+@pytest.mark.parametrize("seed", [0, 7])
+def test_corpus_native_equals_fused(seed):
+    texts = corpus_texts(1000, seed)
+    diffs = [i for i, text in enumerate(texts)
+             if native_key(text) != blocks_key(_segment_fused(text))]
+    assert diffs == []
+
+
+@needs_native
+@settings(max_examples=300, deadline=None)
+@given(frag=html_frag(bound=4097))
+def test_random_html_native_equals_fused(frag):
+    html = f"<html><body>{frag}</body></html>"
+    assert native_key(html) == blocks_key(_segment_fused(html))
+
+
+@needs_native
+@settings(max_examples=200, deadline=None)
+@given(frag=html_frag(bound=4097))
+def test_rawtext_and_misnesting_native_equals_fused(frag):
+    html = (f"<body><script>var a = '<p>not content</p>';</script>"
+            f"<div>{frag}</div><p>tail</p></body>")
+    assert native_key(html) == blocks_key(_segment_fused(html))
+
+
+# Each hazard of _segment.c as one page.  fused == spec on these, so
+# native == fused == spec.
+_HAZARDS = [
+    # \s of the rawtext close: \x1c, \x85, U+3000; ASCII-only letters
+    '<p>a</p><script>x</script\x1c><p>b</p>',
+    '<p>a</p><script>x</\x85script　><p>b</p>',
+    '<p>a</p><script>x</scrïpt><p>b</p><script>y</script><p>c</p>',
+    '<p>a</p><style>x</stÿle><p>b</p>',
+    # self-closing tags: the fixed "/>" group
+    '<div/>hello<p>world</p>',
+    '<div>a<p/>bbb more</div>',
+    '<a/>xx<p>link text</p>',
+    '<p>a<a href="x" />b</p><div class="x"/>c<nav/>d',
+    # entities per chunk: a comment splits "&amp;"
+    '<p>x &am<!---->p; y &amp; z</p>',
+    '<p><a>&lt;&gt;</a> &#x41;&nbsp;</p>',
+    # a lone surrogate
+    '<p>a\ud800b</p><p>\udfff</p>',
+    # misnesting by name, unknown tags included, case-insensitive
+    '<div><custom-el><p>a</DIV>b</custom-el>c</div><p>d</p>',
+    '<DiV><p>a</div><p>b</P></dIv>',
+    # comments, cdata, declarations and processing instructions
+    '<p>a<!--x-->b<![CDATA[c]]>d<!doctype x>e<?pi x?>f</p>',
+    '<p>a<!-->b</p><p>c<!--->d</p>',
+]
+# Hazards where fused and spec part (pathological input, accepted like
+# "<p<"), so only native == fused is pinned.  The tokenizers close a
+# script at "</scrİpt>" because re.I folds U+0130 / U+0131 to "i" and
+# U+017F to "s"; HTMLParser's parse_endtag then compares the lowered name
+# with "script" and keeps the element open.  An unterminated "<![CDATA["
+# is a declaration up to the next ">" for the tokenizers, and HTMLParser
+# reads it another way.  An unquoted attribute value that ends in "/"
+# keeps the "/" in HTMLParser, so "<p href=a/>" opens a p there, while
+# the tokenizers read "/>" and close it at once (no generated page holds
+# "/>").
+_FUSED_ONLY = [
+    '<p>a</p><script>x</scrİpt><p>b</p>',
+    '<p>a</p><script>x</scrıpt><p>b</p>',
+    '<p>a</p><script>x</ſcript><p>b</p>',
+    '<p>a</p><style>x</ſtyle><p>b</p>',
+    '<p>a</p><script>x</SCRİPT ><p>b</p>',
+    '<p>a<![CDATA[b</p><p>c</p>',
+    '<div><p href=a/>x</div>',
+    '<p><a href=a/>x</p>y</p>',
+]
+
+
+@pytest.mark.parametrize("html", _HAZARDS)
+def test_hazards_fused_equals_spec(html):
+    assert blocks_key(_segment_fused(html)) == blocks_key(segment_spec(html))
+
+
+@needs_native
+@pytest.mark.parametrize("html", _HAZARDS + _FUSED_ONLY)
+def test_hazards_native_equals_fused(html):
+    assert native_key(html) == blocks_key(_segment_fused(html))
+
+
+def test_rawtext_close_folds_like_re():
+    """The fused loop closes a script at "</scrİpt>" (and "</ſcript>"):
+    the C port must follow re's folding, not HTMLParser's."""
+    for html in _FUSED_ONLY[:5]:
+        assert [b[3] for b in blocks_key(_segment_fused(html))] == ["a", "b"]
+
+
+@pytest.mark.parametrize("n", sorted(_LONG_ATTR))
+def test_attribute_bound_counts_codepoints(n):
+    """The bound is 4,096 units of codepoints (multibyte ones included):
+    at 4,095 and 4,096 the tag is a tag, at 4,097 it is text."""
+    html = f"<div><p{_LONG_ATTR[n]}>hello</p></div>"
+    fused = blocks_key(_segment_fused(html))
+    if n <= 4096:
+        assert fused == blocks_key(segment_spec(html))
+        assert [b[1] for b in fused] == ["p"]
+    else:
+        assert [b[1] for b in fused] == ["div"]
+    if SEG is not None:
+        assert native_key(html) == fused
+
+
+# ---------------------------------------------------------------------------
+# Bounds: one page never kills a worker
+# ---------------------------------------------------------------------------
+_BOUND_PAGES = {
+    "unclosed_tag_flood": ("<p " + "a" * 40) * 5000 + "tail",
+    "nested_divs": "<div>x" * 100_000,
+    "one_mb_no_gt": ("<div " + "x" * 4090) * 256,
+    "latin1_bytes": random.Random(0).randbytes(1 << 20).decode("latin-1"),
+}
+
+
+@needs_native
+@pytest.mark.parametrize("name", sorted(_BOUND_PAGES))
+def test_bound_pages_native_equals_fused(name):
+    html = _BOUND_PAGES[name]
+    assert native_key(html) == blocks_key(_segment_fused(html))
+
+
+@needs_native
+def test_capacity_overflow_is_an_error_code():
+    """Given less room than the page needs, C returns an error code and
+    writes nothing past the buffer it was given; segment() then runs the
+    fused loop on that page."""
+    import ctypes
+
+    html = "<div><p>a</p>" * 50 + "</div>"
+    page = html.encode(native._CODEC, "surrogatepass")
+    counts = (ctypes.c_int32 * 2)()
+    for cap in (0, 1, 10, 50):
+        need = SEG._per_tag * (cap + 1)
+        buf = (ctypes.c_int32 * (need + 64))()
+        for i in range(need, need + 64):
+            buf[i] = 0x5A5A5A5A
+        rc = SEG._fn(page, len(html), cap, buf, need, counts)
+        assert rc < 0
+        assert list(buf[need:]) == [0x5A5A5A5A] * 64
+    # a buffer smaller than the stated capacity needs is refused outright
+    assert SEG._fn(page, len(html), html.count("<"), buf, 10, counts) < 0

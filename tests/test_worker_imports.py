@@ -9,6 +9,7 @@ import sys
 WORKER_MODULES = (
     "ocrd_calamari_spark.kernel",
     "ocrd_calamari_spark.kernel.columnar",
+    "ocrd_calamari_spark.kernel.native",
     "ocrd_calamari_spark.sources.warc",
 )
 
