@@ -16,10 +16,10 @@
  *     units; a unit is one codepoint or one whole quoted string, so the
  *     bound counts codepoints, never bytes.  "/" is an attribute codepoint
  *     only when ">" does not follow it: "/>" closes a self-closing tag.
- *   - The rawtext close is Python's r"</\s*script\s*>" under re.I on str:
- *     \s is the 29 codepoints of is_ws() below; "s" also matches U+017F
- *     and "i" also matches U+0130 and U+0131 ("</scrİpt>" closes a
- *     script); c, r, p, t, y, l and e match only their ASCII case pair.
+ *   - The rawtext close is segment.py's r"</\s*[sS][cC][rR][iI][pP][tT]\s*>"
+ *     on str: \s is the 29 codepoints of is_ws() below, and each letter
+ *     matches only its ASCII case pair, as HTMLParser's end-tag name
+ *     [a-zA-Z] does ("</scrİpt>" does not close a script).
  *   - Tag names are ASCII ([a-zA-Z][a-zA-Z0-9.:_-]*) and compare after
  *     ASCII lowering.  A misnested close compares the names of open tags,
  *     unknown ones included, so the stack keeps each name's span.
@@ -89,6 +89,16 @@ int ocs_tag_count(void) { return N_TAGS; }
 const char *ocs_tag_name(int i) { return i >= 0 && i < N_TAGS ? TAGS[i].name : 0; }
 int ocs_tag_class(int i) { return i >= 0 && i < N_TAGS ? TAGS[i].cls : -1; }
 
+/* extract.py's _CTRL_RE, [\x00-\x08\x0e-\x1f], counted over the first n
+ * codepoints of a page (native.py passes at most the 4,096 that
+ * _looks_binary reads). */
+int32_t ocs_ctrl_count(const uint32_t *p, int32_t n) {
+    int32_t k = 0;
+    for (int32_t i = 0; i < n; i++)
+        k += p[i] <= 0x08 || (p[i] >= 0x0E && p[i] <= 0x1F);
+    return k;
+}
+
 static int is_alpha(uint32_t c) {
     return (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z');
 }
@@ -118,12 +128,8 @@ static int is_chain_ws(uint32_t c) {
     return c >= 0x09 && c <= 0x0D;
 }
 
-/* One letter of "script" / "style" under re.IGNORECASE. */
+/* One letter of "script" / "style": its ASCII case pair only. */
 static int fold_eq(uint32_t c, char want) {
-    if (want == 's')
-        return c == 's' || c == 'S' || c == 0x17F;
-    if (want == 'i')
-        return c == 'i' || c == 'I' || c == 0x130 || c == 0x131;
     return c == (uint32_t)want || c == (uint32_t)want - 32;
 }
 

@@ -1,17 +1,23 @@
 """Columnar span emission: one Arrow batch of pages in → Arrow batches of
 output rows out, for ``DataFrame.mapInArrow``.
 
-It computes what ``extract.extract_page`` computes, in two stages.  Per
-page: decode → segment → ``vote_block`` → the text half of
-``normalize_block`` (strip and collapse spaces).  Once per output batch,
-over the concatenated codepoints of every kept block: the numeric half
-of ``normalize_block`` (the ``char_p1`` gather and quantize, block
-confs, then page confs, ``_block_numbers``) and the span emission.  The
-scalar path builds one dict per span (and a list of alternative dicts
-per glyph) that pandas then converts to Arrow.  Here each level is a set
-of flat numpy/Arrow columns over the whole batch — starts, ends, ids,
-texts, confidences — and the nesting is Arrow list offsets per row, the
-flat record-plus-repetition layout of Dremel:
+It computes what ``extract.extract_page`` computes, in four stages.  Per
+page: decode → segment, with the binary-payload test counted in the
+compiled segmenter's pass (``segment(..., reject_binary=True)``), down to
+the candidate blocks.  Once per input batch: the vote of every candidate
+block in one ``vote.vote_blocks`` call (numpy scores, ≡ ``vote_block``
+per block; if it raises, the pages are voted one by one with
+``vote_block``, so a failing page is one error row).  Per page: the
+accepted blocks through the text half of ``normalize_block`` (strip and
+collapse spaces).  Once per output batch, over the concatenated
+codepoints of every kept block: the numeric half of ``normalize_block``
+(the ``char_p1`` gather and quantize, block confs, then page confs,
+``_block_numbers``) and the span emission.  The scalar path builds one
+dict per span (and a list of alternative dicts per glyph) that pandas
+then converts to Arrow.  Here each level is a set of flat numpy/Arrow
+columns over the whole batch — starts, ends, ids, texts, confidences —
+and the nesting is Arrow list offsets per row, the flat
+record-plus-repetition layout of Dremel:
 
   blocks   Python lists per block (a few dozen per page)
   words    non-space runs of the concatenated block texts (codepoint masks)
@@ -24,7 +30,8 @@ flat record-plus-repetition layout of Dremel:
 specification and the single-process oracle, with ``vote_block`` and
 ``normalize_block`` inside them; tests/test_columnar_equiv.py proves the
 two paths equal row for row (and the batched block confs equal
-``normalize_block``'s), the way test_fastpath_equiv.py pairs
+``normalize_block``'s, test_vote_equiv.py the batched vote equal
+``vote_block``'s), the way test_fastpath_equiv.py pairs
 ``textproc`` with ``fastpath``.  A page the batch stage would fail on (a
 lone surrogate in a kept block) is caught per page, so it stays one
 error row.  Like the rest of the kernel this module imports no pyspark:
@@ -46,7 +53,7 @@ from ocrd_calamari_spark.config import (
     ExtractConfig,
 )
 from ocrd_calamari_spark.kernel.decode import decode_html
-from ocrd_calamari_spark.kernel.extract import _alt_char, _looks_binary
+from ocrd_calamari_spark.kernel.extract import _alt_char
 from ocrd_calamari_spark.kernel.fastpath import (
     _MULTISPACE_RE,
     _jitter_lut_05,
@@ -54,7 +61,7 @@ from ocrd_calamari_spark.kernel.fastpath import (
     quantize6,
 )
 from ocrd_calamari_spark.kernel.segment import page_counts, segment
-from ocrd_calamari_spark.kernel.vote import vote_block
+from ocrd_calamari_spark.kernel.vote import vote_block, vote_blocks
 
 # An output batch is cut once the spans (blocks + words + glyphs) emitted
 # since the last cut reach this many, so one input batch of big glyph pages
@@ -83,47 +90,40 @@ class _Pending:
         self.blk_no: list = []
         self.spans = 0
 
-    def add_page(self, html, prior_text, lang, cfg: ExtractConfig) -> None:
-        """Extract one page down to its block texts and fused votes; the
-        numbers (p1 and the confs) follow once per batch in
-        ``_record_batch``.  Its blocks are committed only once the whole
-        page succeeded, so an exception part way through leaves an error
-        row and no partial spans."""
-        raw = False
-        try:
-            if html is None:
-                raise ValueError("null html payload")
-            decoded, raw = decode_html(bytes(html))
-            if _looks_binary(decoded):
-                raise ValueError("binary payload (control-char fraction exceeded)")
-            texts, fused_confs = [], []
-            for blk in segment(decoded):
-                if blk.visible_len() < MIN_VISIBLE_CHARS:
-                    continue
-                accept, fused = vote_block(
-                    blk, lang, ENSEMBLE, cfg.voter, ACCEPT_THRESHOLD
-                )
-                if not accept:
-                    continue
-                # the text half of normalize_block
-                text = _MULTISPACE_RE.sub(" ", blk.raw_text.strip(" "))
-                if text:
-                    texts.append(text)
-                    fused_confs.append(fused)
-            page = "\n".join(texts)
+    def add_page(self, blocks, votes, prior_text, raw, error,
+                 cfg: ExtractConfig) -> None:
+        """Add one page from its candidate blocks and their votes (the
+        fused vote of each accepted block, None for a rejected one), or an
+        error row when ``error`` is set.  The numbers (p1 and the confs)
+        follow once per batch in ``_record_batch``.  The blocks are
+        committed only once the whole page succeeded, so an exception part
+        way through leaves an error row and no partial spans."""
+        if error is None:
             try:
-                page.encode("utf-8")
-            except UnicodeEncodeError:
-                # A lone surrogate (utf-7 "+2AA-" decodes to one) would
-                # fail the batch's single codepoints call; it fails this
-                # page alone, with the error extract_page raises on the
-                # first such block.
-                for text in texts:
-                    codepoints(text)
-                raise
-        except Exception as exc:  # error row, never a task failure
-            self._row(None, None, prior_text, raw,
-                      f"{type(exc).__name__}: {exc}")
+                texts, fused_confs = [], []
+                for blk, fused in zip(blocks, votes):
+                    if fused is None:
+                        continue
+                    # the text half of normalize_block
+                    text = _MULTISPACE_RE.sub(" ", blk.raw_text.strip(" "))
+                    if text:
+                        texts.append(text)
+                        fused_confs.append(fused)
+                page = "\n".join(texts)
+                try:
+                    page.encode("utf-8")
+                except UnicodeEncodeError:
+                    # A lone surrogate (utf-7 "+2AA-" decodes to one) would
+                    # fail the batch's single codepoints call; it fails this
+                    # page alone, with the error extract_page raises on the
+                    # first such block.
+                    for text in texts:
+                        codepoints(text)
+                    raise
+            except Exception as exc:  # error row, never a task failure
+                error = _error(exc)
+        if error is not None:
+            self._row(None, None, prior_text, raw, error)
             return
         pos, starts = 0, []
         for text in texts:
@@ -149,6 +149,59 @@ class _Pending:
         self.overwrote.append(bool(prior_text))
         self.raw_charset.append(raw)
         self.error.append(error)
+
+
+def _error(exc: Exception) -> str:
+    return f"{type(exc).__name__}: {exc}"
+
+
+def _candidates(html) -> tuple:
+    """Decode and segment one page: (raw_charset, the blocks the vote sees,
+    error), the blocks None on an error row."""
+    raw = False
+    try:
+        if html is None:
+            raise ValueError("null html payload")
+        decoded, raw = decode_html(bytes(html))
+        blocks = [b for b in segment(decoded, reject_binary=True)
+                  if b.visible_len() >= MIN_VISIBLE_CHARS]  # the F4 filter
+    except Exception as exc:  # error row, never a task failure
+        return raw, None, _error(exc)
+    return raw, blocks, None
+
+
+def _vote_pages(pages: list, langs: list, voter: str, errors: list) -> list:
+    """The vote of every candidate block of an input batch, in one
+    ``vote_blocks`` call: per page, the fused vote of each block or None
+    for a rejected one.  If that call raises, the pages are voted one by
+    one with ``vote_block``, and a page that raises gets its error in
+    ``errors``."""
+    flat, flat_lang, sizes = [], [], []
+    for blocks, lang in zip(pages, langs):
+        k = len(blocks) if blocks else 0
+        flat += blocks or ()
+        flat_lang += [lang] * k
+        sizes.append(k)
+    try:
+        accept, fused = vote_blocks(flat, flat_lang, ENSEMBLE, voter,
+                                    ACCEPT_THRESHOLD)
+    except Exception:
+        out = []
+        for i, (blocks, lang) in enumerate(zip(pages, langs)):
+            try:
+                votes = [vote_block(b, lang, ENSEMBLE, voter, ACCEPT_THRESHOLD)
+                         for b in blocks or ()]
+            except Exception as exc:
+                errors[i] = _error(exc)
+                votes = []
+            out.append([f if a else None for a, f in votes])
+        return out
+    votes = [f if a else None for a, f in zip(accept, fused)]
+    out, at = [], 0
+    for k in sizes:
+        out.append(votes[at:at + k])
+        at += k
+    return out
 
 
 def _block_numbers(cps: np.ndarray, blk_off: np.ndarray,
@@ -368,13 +421,18 @@ def extract_arrow(batch: pa.RecordBatch, cfg: ExtractConfig,
     """
     names = batch.schema.names
     n = batch.num_rows
-    html = batch.column("html").to_pylist()
+    if n == 0:
+        return
     prior = batch.column("text").to_pylist()
     lang = batch.column("lang").to_pylist()
+    raw, pages, errors = map(list, zip(*map(_candidates,
+                                            batch.column("html").to_pylist())))
+    votes = _vote_pages(pages, lang, cfg.voter, errors)
     lo = 0
     pending = _Pending()
     for i in range(n):
-        pending.add_page(html[i], prior[i], lang[i], cfg)
+        pending.add_page(pages[i], votes[i], prior[i], raw[i], errors[i], cfg)
+        pages[i] = None  # its blocks are no longer needed
         if pending.spans >= MAX_BATCH_SPANS or i == n - 1:
             rows = i + 1 - lo
             lineage = [

@@ -41,12 +41,18 @@ _KEEP_INTS = 1 << 16
 _MAX_LEN = (1 << 31) - 1
 OUT_BLK, OUT_CHK = 9, 3  # int32s per out block / chunk record (_segment.c)
 F_ANCHOR, F_AMP, F_WS = 1, 2, 4  # chunk and block flags (_segment.c)
+# the head of a page whose control chars ocs_ctrl_count counts: the
+# 4,096 codepoints extract._looks_binary reads
+CTRL_HEAD = 4096
+# what run() returns for a page over its control-char limit
+BINARY = "binary"
 
 
 class Segmenter:
     """The loaded library: ``run(page)`` → (block records, chunk records)
-    as flat int lists in _segment.c's out layout, or None when the page
-    is left to Python."""
+    as flat int lists in _segment.c's out layout, ``BINARY`` for a page
+    over its control-char limit, or None when the page is left to
+    Python."""
 
     def __init__(self, lib: ctypes.CDLL, tag_class: dict):
         fn = lib.ocs_segment
@@ -63,6 +69,9 @@ class Segmenter:
         lib.ocs_init.argtypes = lib.ocs_ints_per_tag.argtypes = ()
         lib.ocs_tag_count.argtypes = ()
         lib.ocs_tag_name.argtypes = lib.ocs_tag_class.argtypes = (ctypes.c_int,)
+        lib.ocs_ctrl_count.argtypes = (ctypes.c_char_p, ctypes.c_int32)
+        lib.ocs_ctrl_count.restype = ctypes.c_int32
+        self._ctrl = lib.ocs_ctrl_count
         if lib.ocs_init() != 0:
             raise ValueError("_segment.c rejected its own tag table")
         table = [(lib.ocs_tag_name(i).decode(), lib.ocs_tag_class(i))
@@ -84,18 +93,26 @@ class Segmenter:
             buf = (ctypes.c_int32 * need)()
         return buf, local.counts
 
-    def run(self, page: str):
+    def run(self, page: str, ctrl_limit: float | None = None):
+        """Segment ``page``.  With ``ctrl_limit``, first count the control
+        chars of its head in the same codepoint buffer: a page where they
+        are more than that fraction of the head is ``BINARY`` and never
+        segmented (``extract._looks_binary``'s test)."""
         n = len(page)
         cap = page.count("<")
         need = self._per_tag * (cap + 1)
         if need > _MAX_INTS or n > _MAX_LEN:
             return None
+        data = page.encode(_CODEC, "surrogatepass")
+        if ctrl_limit is not None and n:
+            head = min(n, CTRL_HEAD)
+            if self._ctrl(data, head) / head > ctrl_limit:
+                return BINARY
         try:
             buf, counts = self._buffers(need)
         except MemoryError:
             return None
-        rc = self._fn(page.encode(_CODEC, "surrogatepass"), n, cap, buf,
-                      need, counts)
+        rc = self._fn(data, n, cap, buf, need, counts)
         if rc != 0:
             return None
         nb = OUT_BLK * counts[0]

@@ -187,8 +187,13 @@ _TOKEN_RE = _re.compile(
 )
 _RAWTEXT = {"script", "style"}  # HTMLParser CDATA-mode elements
 # CDATA close pattern — mirrors html.parser.HTMLParser.set_cdata_mode
+# (HTMLParser finds it under re.I, but its end-tag name is [a-zA-Z]: a
+# close such as "</scrİpt>", which re.I would fold to "script", is data
+# there, so each letter matches only its ASCII case pair here)
 _RAWTEXT_CLOSE = {
-    t: _re.compile(r"</\s*%s\s*>" % t, _re.IGNORECASE) for t in _RAWTEXT
+    t: _re.compile(r"</\s*%s\s*>" % "".join("[%s%s]" % (c, c.upper())
+                                            for c in t))
+    for t in _RAWTEXT
 }
 
 
@@ -300,9 +305,11 @@ def _segment_fused(html_text: str) -> list[Block]:
     return [b for b in blocks if b.visible_len() > 0]
 
 
-def _segment_native(seg: _native.Segmenter, html_text: str):
+def _segment_native(seg: _native.Segmenter, html_text: str,
+                    ctrl_limit: float | None = None):
     """The compiled segmenter (_segment.c, the state machine of
-    ``_segment_fused``) → blocks, or None when it leaves the page to
+    ``_segment_fused``) → blocks, ``native.BINARY`` for a page over
+    ``ctrl_limit`` (``Segmenter.run``), or None when it leaves the page to
     Python.  C reports each kept block's chunk spans; Python slices them,
     unescapes each chunk that holds "&" and applies the whitespace replace
     chain, as ``_segment_fused`` does.  A block without "&" is sliced and
@@ -310,9 +317,9 @@ def _segment_native(seg: _native.Segmenter, html_text: str):
     chain maps char by char), and C has counted its visible and link
     chars; a block with "&" is rebuilt chunk by chunk and counted after
     the unescape."""
-    res = seg.run(html_text)
-    if res is None:
-        return None
+    res = seg.run(html_text, ctrl_limit)
+    if res is None or res is _native.BINARY:
+        return res
     # the out records of _segment.c: 9 ints per block, 3 per chunk
     brec, crec = res
     tags = seg.tags
@@ -348,6 +355,9 @@ def _segment_native(seg: _native.Segmenter, html_text: str):
     return blocks
 
 
+# extract_page's error for a binary payload
+_BINARY_PAYLOAD = "binary payload (control-char fraction exceeded)"
+
 # Pages segmented in this process: [by the compiled segmenter, by the
 # Python fallback]; read through page_counts().  Process-wide on purpose:
 # the accumulators report per worker process, as deltas over a task.
@@ -365,20 +375,34 @@ def page_counts() -> tuple[int, int]:
         return _PAGE_COUNTS[0], _PAGE_COUNTS[1]
 
 
-def segment(html_text: str) -> list[Block]:
+def segment(html_text: str, reject_binary: bool = False) -> list[Block]:
     """Parse html → candidate blocks in document order (may be empty).
 
     The compiled segmenter when it loads and accepts the page; else (no
     compiler, a failed build or load, or a page C or its buffer cannot
     take) the fused regex tokenizer+segmenter, with the HTMLParser spec as
-    the fallback on scan errors."""
+    the fallback on scan errors.
+
+    ``reject_binary``: a binary payload raises extract_page's ValueError
+    before it is segmented.  The compiled segmenter counts the control
+    chars in the codepoint buffer it segments; the Python path calls
+    ``extract._looks_binary``."""
     seg = _native.load()
+    if reject_binary:
+        # the test is extract_page's, and extract imports this module
+        from ocrd_calamari_spark.kernel import extract
     if seg is not None:
-        blocks = _segment_native(seg, html_text)
+        blocks = _segment_native(
+            seg, html_text,
+            extract._CTRL_FRACTION_LIMIT if reject_binary else None)
+        if blocks is _native.BINARY:
+            raise ValueError(_BINARY_PAYLOAD)
         if blocks is not None:
             with _COUNTS_LOCK:
                 _PAGE_COUNTS[0] += 1
             return blocks
+    if reject_binary and extract._looks_binary(html_text):
+        raise ValueError(_BINARY_PAYLOAD)
     with _COUNTS_LOCK:
         _PAGE_COUNTS[1] += 1
     try:

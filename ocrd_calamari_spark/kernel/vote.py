@@ -10,11 +10,22 @@ BASELINE.json north_star: text-density sequential classifier, link-density,
 and readability-style tag/structure scoring.  All are pure deterministic
 functions of block features — determinism under retries/speculative
 execution is a correctness requirement (SURVEY.md §7.3).
+
+``vote_block`` is the specification: one block, three scorer calls and
+``fuse_votes``.  ``vote_blocks`` is the same vote over a whole batch of
+blocks, with the scores and the voters on numpy arrays;
+tests/test_vote_equiv.py pins it equal to ``vote_block`` block for block.
 """
 
 from __future__ import annotations
 
 import math
+from itertools import repeat
+from operator import attrgetter
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ocrd_calamari_spark.kernel.segment import Block
 
@@ -122,3 +133,169 @@ def vote_block(block: Block, lang: str, extractor_names, voter: str,
                threshold: float) -> tuple[bool, float]:
     scores = [EXTRACTORS[name](block, lang) for name in extractor_names]
     return fuse_votes(scores, voter, threshold)
+
+
+# ---------------------------------------------------------------------------
+# The same vote over many blocks at once
+# ---------------------------------------------------------------------------
+
+# readability's tag prior in one lookup (the two tables are disjoint)
+_TAG_BASE = {**_LIST_TAGS, **_CONTENT_TAGS}
+# round6's guard band around a half tie of x * 1e6: far wider than the
+# float error of that product (below 2e-10 for x <= 1) and than an ulp of
+# difference between np.exp and math.exp in the sigmoid
+_TIE_BAND = 1e-6
+# a mean score this close to the threshold is voted by vote_block (from
+# 3.12 CPython's sum() of floats compensates, so its last bit may differ
+# from the sequential sum of vote_blocks)
+_THRESHOLD_BAND = 1e-9
+
+
+def round6(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``round(x, 6)`` elementwise, and a mask of the elements to redo in
+    Python.
+
+    ``rint(x * 1e6) / 1e6`` is Python's correctly rounded result wherever
+    ``x * 1e6`` is not at a half tie: the integer is exact and one IEEE
+    division gives the double nearest it over 1e6.  Elements within
+    ``_TIE_BAND`` of a tie are flagged instead of trusted."""
+    d = x * 1e6
+    r = np.rint(d)
+    return r / 1e6, np.abs(np.abs(d - r) - 0.5) < _TIE_BAND
+
+
+def _density(f: dict) -> np.ndarray:
+    """score_density before its round."""
+    x = (f["vis"] / (1.0 + f["n_tags"]) - 20.0) / 15.0
+    s = 1.0 / (1.0 + np.exp(-np.clip(x, -60.0, 60.0)))
+    return np.where(x < -60.0, 0.0, np.where(x > 60.0, 1.0, s))
+
+
+def _link_density(f: dict) -> np.ndarray:
+    """score_link_density before its round (0.0 where nothing is visible)."""
+    vis = f["vis"]
+    ratio = np.divide(f["n_link"], vis, out=np.zeros_like(vis), where=vis > 0)
+    return np.where(vis > 0, np.clip(1.0 - 1.2 * ratio, 0.0, 1.0), 0.0)
+
+
+def _readability(f: dict) -> np.ndarray:
+    """score_readability before its round."""
+    punct_bonus = 0.20 * np.minimum(1.0, f["n_punct"] / 3.0)
+    stop_bonus = 0.10 * np.minimum(1.0, f["hits"] / 5.0)
+    depth_penalty = 0.02 * np.maximum(0.0, f["depth"] - 8.0)
+    return np.clip(f["base"] + punct_bonus + stop_bonus - depth_penalty,
+                   0.0, 1.0)
+
+
+def _n_punct(text: str) -> int:
+    """score_readability's ".!?" count of one block's text."""
+    return text.count(".") + text.count("!") + text.count("?")
+
+
+# the batched form of each scorer of EXTRACTORS
+_BATCHED = {"density": _density, "link_density": _link_density,
+            "readability": _readability}
+
+
+def _stop_hits(texts: list, langs) -> np.ndarray:
+    """score_readability's stopword hits per text, capped at 5.
+
+    The texts are lowered in one call: "\\n" joins them, never occurs in
+    a ``raw_text`` (the whitespace replace chain maps it) and ends the
+    final-sigma context of ``str.lower``, so each piece is that text's
+    own ``lower()``.  Arrow then splits the pieces at " " and looks each
+    token up once in the union of the profiles; a token counts when the
+    profile of its block's lang holds it.  Tokens compare as UTF-8 bytes
+    (``surrogatepass``), which is ``str`` equality."""
+    joined = "\n".join(texts)
+    if joined.count("\n") == len(texts) - 1:
+        data = pa.array([joined.lower().encode("utf-8", "surrogatepass")],
+                        pa.binary())
+        low = pc.split_pattern(data, b"\n").flatten()
+    else:  # a text holds "\n" (segment() never makes one)
+        low = pa.array([t.lower().encode("utf-8", "surrogatepass")
+                        for t in texts], pa.binary())
+    tokens = pc.split_pattern(low, b" ")
+    tok_blk = np.repeat(np.arange(len(texts)),
+                        np.diff(tokens.offsets.to_numpy()))
+    # member[w, k]: word w is in profile k; each block's profile as k
+    names = list(STOPWORDS)
+    words = sorted(set().union(*STOPWORDS.values()) - {""})
+    member = np.array([[w in STOPWORDS[k] for k in names] for w in words],
+                      dtype=bool).reshape(len(words), len(names))
+    col = {lang: names.index(lang if lang in STOPWORDS else _DEFAULT_PROFILE)
+           for lang in set(langs)}
+    at = pc.index_in(tokens.flatten(), value_set=pa.array(
+        [w.encode("utf-8", "surrogatepass") for w in words], pa.binary()))
+    at = at.fill_null(-1).to_numpy()
+    found = at >= 0
+    tok_blk = tok_blk[found]
+    prof = np.array([col[lang] for lang in langs], dtype=np.int64)
+    hit = member[at[found], prof[tok_blk]]
+    return np.minimum(np.bincount(tok_blk[hit], minlength=len(texts)), 5)
+
+
+def vote_blocks(blocks: list, langs, extractor_names, voter: str,
+                threshold: float) -> tuple[list, list]:
+    """``vote_block`` over many blocks: (accept per block, fused per
+    block), equal to ``[vote_block(b, lang, ...)]`` element for element.
+
+    ``langs`` holds one lang per block.  The features are gathered once
+    per block, the stopword hits once per call (``_stop_hits``).  The
+    scores and the voters run on float64 arrays in the scalar code's
+    operation order, so each IEEE + - * / gives the bits the Python
+    floats give, and each ``round(·, 6)`` is ``round6``.  A block with a
+    value in round6's tie band (or, for the confidence voter, a mean
+    within ``_THRESHOLD_BAND`` of the threshold) is voted again by
+    ``vote_block``, so the result is exact by construction."""
+    n = len(blocks)
+    if n == 0:
+        return [], []
+    texts = [b.raw_text for b in blocks]
+
+    def column(name):
+        return np.fromiter(map(attrgetter(name), blocks), np.float64, n)
+
+    f = {
+        "vis": np.fromiter(map(Block.visible_len, blocks), np.float64, n),
+        "n_tags": column("n_tags"),
+        "n_link": column("n_link_chars"),
+        "depth": column("depth"),
+        "base": np.fromiter(map(_TAG_BASE.get, map(attrgetter("tag"), blocks),
+                                repeat(0.50)), np.float64, n),
+        "n_punct": np.fromiter(map(_n_punct, texts), np.float64, n),
+    }
+    if "readability" in extractor_names:
+        f["hits"] = _stop_hits(texts, langs).astype(np.float64)
+    redo = np.zeros(n, dtype=bool)
+    scores = []
+    for name in extractor_names:
+        s, tie = round6(_BATCHED[name](f))
+        scores.append(s)
+        redo |= tie
+    k = len(scores)
+    if k == 0:
+        return [False] * n, [0.0] * n
+    total = np.zeros(n)
+    if voter == "sequence_voter":
+        ayes = [s >= threshold for s in scores]
+        accept = 2 * np.sum(ayes, axis=0) > k
+        side = np.zeros(n)
+        for s, aye in zip(scores, ayes):
+            on = aye == accept  # the ayes of a majority, else the nays
+            total = np.where(on, total + s, total)
+            side += on
+        fused, tie = round6(total / side)
+    else:
+        for s in scores:
+            total += s
+        mean = total / k
+        accept = mean >= threshold
+        fused, tie = round6(mean)
+        redo |= np.abs(mean - threshold) < _THRESHOLD_BAND
+    redo |= tie
+    accept, fused = accept.tolist(), fused.tolist()
+    for i in np.flatnonzero(redo).tolist():
+        accept[i], fused[i] = vote_block(blocks[i], langs[i], extractor_names,
+                                         voter, threshold)
+    return accept, fused

@@ -10,7 +10,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ocrd_calamari_spark.config import ExtractConfig
-from ocrd_calamari_spark.kernel import columnar, extract
+from ocrd_calamari_spark.kernel import columnar, extract, vote
 from ocrd_calamari_spark.kernel.extract import extract_page
 from ocrd_calamari_spark.schema import FLAT_OUTPUT_SCHEMA
 
@@ -132,8 +132,10 @@ def test_exception_mid_page_becomes_error_row(pages, level):
     """A page whose k-th block raises inside the kernel becomes an error
     row; the blocks, words and glyphs built for its first k-1 blocks are
     rolled back and the other rows are untouched.  The fault is injected
-    into the per-block vote, the last per-block call both paths make (the
-    columnar path computes p1 and the confs once per batch)."""
+    into the batched vote's per-block step (``vote._n_punct``), so the
+    batch's ``vote_blocks`` call raises and the pages are voted one by
+    one, and into ``vote_block``, which that per-page vote and the
+    scalar path call per block."""
     payloads = [
         ("<html><body><article>" + "".join(
             f"<p>{_PARA}{' BOOM' if boom else ''}</p>" for boom in page
@@ -144,14 +146,23 @@ def test_exception_mid_page_becomes_error_row(pages, level):
     clean = run_arrow(payloads, cfg)
 
     real = columnar.vote_block
+    real_punct = vote._n_punct
+    batched = []
 
     def exploding(blk, *args):
         if "BOOM" in blk.raw_text:
             raise RuntimeError("boom")
         return real(blk, *args)
 
+    def exploding_punct(text):
+        batched.append(text)
+        if "BOOM" in text:
+            raise RuntimeError("boom")
+        return real_punct(text)
+
     mp = pytest.MonkeyPatch()
     try:
+        mp.setattr(vote, "_n_punct", exploding_punct)
         mp.setattr(columnar, "vote_block", exploding)
         mp.setattr(extract, "vote_block", exploding)
         rows = run_arrow(payloads, cfg)
@@ -159,6 +170,7 @@ def test_exception_mid_page_becomes_error_row(pages, level):
                   for i, p in enumerate(payloads)]
     finally:
         mp.undo()
+    assert batched  # the batched vote ran
     for page, row, ok, spec in zip(pages, rows, clean, scalar):
         check_arrow_row(row, level)
         if any(page):

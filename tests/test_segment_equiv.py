@@ -10,7 +10,7 @@ import random
 import shutil
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from ocrd_calamari_spark.gen import gen_pages
 from ocrd_calamari_spark.kernel import native
@@ -79,7 +79,8 @@ _TAGS = ["p", "div", "li", "span", "a", "em", "nav", "script", "h2"]
 # tokenizers and a tag to HTMLParser (test_attribute_bound_counts_codepoints).
 #
 # The exotic pieces pin the compiled segmenter's hazards: U+017F, U+0130
-# and U+0131 fold to "s" / "i" in the rawtext close, \x1c, \x85 and
+# and U+0131, which re.I would fold to "s" / "i", do not match those
+# letters in the rawtext close, \x1c, \x85 and
 # U+3000 are \s there but not whitespace to the replace chain, a comment
 # splits "&amp;" into two chunks that never unescape, and "\ud800" is a
 # lone surrogate.
@@ -225,6 +226,15 @@ def test_rawtext_and_misnesting_native_equals_fused(frag):
     assert native_key(html) == blocks_key(_segment_fused(html))
 
 
+# re.I folds U+0130 / U+0131 to "i" and U+017F to "s"; HTMLParser's end
+# tag name is [a-zA-Z], so none of these closes the element
+_RE_I_FOLDS = [
+    '<p>a</p><script>x</scrİpt><p>b</p>',
+    '<p>a</p><script>x</scrıpt><p>b</p>',
+    '<p>a</p><script>x</ſcript><p>b</p>',
+    '<p>a</p><style>x</ſtyle><p>b</p>',
+    '<p>a</p><script>x</SCRİPT ><p>b</p>',
+]
 # Each hazard of _segment.c as one page.  fused == spec on these, so
 # native == fused == spec.
 _HAZARDS = [
@@ -233,6 +243,8 @@ _HAZARDS = [
     '<p>a</p><script>x</\x85script　><p>b</p>',
     '<p>a</p><script>x</scrïpt><p>b</p><script>y</script><p>c</p>',
     '<p>a</p><style>x</stÿle><p>b</p>',
+    # letters that re.I folds to ASCII do not close a script or style
+    *_RE_I_FOLDS,
     # self-closing tags: the fixed "/>" group
     '<div/>hello<p>world</p>',
     '<div>a<p/>bbb more</div>',
@@ -251,21 +263,13 @@ _HAZARDS = [
     '<p>a<!-->b</p><p>c<!--->d</p>',
 ]
 # Hazards where fused and spec part (pathological input, accepted like
-# "<p<"), so only native == fused is pinned.  The tokenizers close a
-# script at "</scrİpt>" because re.I folds U+0130 / U+0131 to "i" and
-# U+017F to "s"; HTMLParser's parse_endtag then compares the lowered name
-# with "script" and keeps the element open.  An unterminated "<![CDATA["
+# "<p<"), so only native == fused is pinned.  An unterminated "<![CDATA["
 # is a declaration up to the next ">" for the tokenizers, and HTMLParser
 # reads it another way.  An unquoted attribute value that ends in "/"
 # keeps the "/" in HTMLParser, so "<p href=a/>" opens a p there, while
 # the tokenizers read "/>" and close it at once (no generated page holds
 # "/>").
 _FUSED_ONLY = [
-    '<p>a</p><script>x</scrİpt><p>b</p>',
-    '<p>a</p><script>x</scrıpt><p>b</p>',
-    '<p>a</p><script>x</ſcript><p>b</p>',
-    '<p>a</p><style>x</ſtyle><p>b</p>',
-    '<p>a</p><script>x</SCRİPT ><p>b</p>',
     '<p>a<![CDATA[b</p><p>c</p>',
     '<div><p href=a/>x</div>',
     '<p><a href=a/>x</p>y</p>',
@@ -284,10 +288,12 @@ def test_hazards_native_equals_fused(html):
 
 
 def test_rawtext_close_folds_like_re():
-    """The fused loop closes a script at "</scrİpt>" (and "</ſcript>"):
-    the C port must follow re's folding, not HTMLParser's."""
-    for html in _FUSED_ONLY[:5]:
-        assert [b[3] for b in blocks_key(_segment_fused(html))] == ["a", "b"]
+    """HTMLParser reads "</scrİpt>" (and "</ſcript>", "</scrıpt>") as data,
+    because its end-tag name is [a-zA-Z]: the script stays open to the
+    end, and so it does in the fused loop and in C."""
+    for html in _RE_I_FOLDS:
+        assert [b[3] for b in blocks_key(segment_spec(html))] == ["a"]
+        assert [b[3] for b in blocks_key(_segment_fused(html))] == ["a"]
 
 
 @pytest.mark.parametrize("n", sorted(_LONG_ATTR))
@@ -343,3 +349,63 @@ def test_capacity_overflow_is_an_error_code():
         assert list(buf[need:]) == [0x5A5A5A5A] * 64
     # a buffer smaller than the stated capacity needs is refused outright
     assert SEG._fn(page, len(html), html.count("<"), buf, 10, counts) < 0
+
+
+# ---------------------------------------------------------------------------
+# The control-char count of the compiled pass ≡ extract._looks_binary
+# ---------------------------------------------------------------------------
+# the edges of [\x00-\x08\x0e-\x1f] and chars that are one codepoint but
+# several UTF-8 or UTF-16 units (astral, lone surrogates)
+_CTRL_EDGES = ["\x00", "\x08", "\x09", "\x0d", "\x0e", "\x1f", "\x20", "a",
+               "<p>", "\x7f", "\x85", "é", "😀", "\ud800", "\udfff"]
+
+
+@st.composite
+def ctrl_texts(draw):
+    pattern = "".join(draw(st.lists(st.sampled_from(_CTRL_EDGES),
+                                    min_size=1, max_size=40)))
+    n = draw(st.sampled_from([None, 4095, 4096, 4097]))
+    if n is None:
+        return pattern
+    text = (pattern * (n // len(pattern) + 1))[:n]
+    # a control char as the last codepoint: inside the head at 4,095 and
+    # 4,096, just past it at 4,097
+    return text[:-1] + draw(st.sampled_from(["\x00", "\x1f", "a"]))
+
+
+@needs_native
+@settings(max_examples=300, deadline=None)
+@given(text=ctrl_texts())
+def test_ctrl_count_matches_regex(text):
+    from ocrd_calamari_spark.kernel.extract import _CTRL_RE
+
+    data = text.encode(native._CODEC, "surrogatepass")
+    head = min(len(text), native.CTRL_HEAD)
+    assert SEG._ctrl(data, head) == len(_CTRL_RE.findall(text[:4096]))
+
+
+@settings(max_examples=200, deadline=None)
+@given(text=ctrl_texts(), native_path=st.booleans())
+# 819 of the 4,096 head codepoints (just under the 0.20 limit), then more
+# past the head; 820 of 4,096 (just over it)
+@example(text="a" * 3277 + "\x00" * 2000, native_path=True)
+@example(text="\x00" * 820 + "a" * 3276, native_path=True)
+def test_reject_binary_matches_looks_binary(text, native_path):
+    """segment(..., reject_binary=True) raises extract_page's error exactly
+    when ``_looks_binary`` holds, on the compiled path and on the Python
+    path, and otherwise returns segment()'s blocks."""
+    from unittest import mock
+
+    from ocrd_calamari_spark.kernel.extract import _looks_binary
+
+    if native_path and SEG is None:
+        return
+    with mock.patch.object(native, "load",
+                           native.load if native_path else lambda: None):
+        if _looks_binary(text):
+            with pytest.raises(ValueError, match=r"^binary payload "
+                               r"\(control-char fraction exceeded\)$"):
+                segment(text, reject_binary=True)
+        else:
+            assert (blocks_key(segment(text, reject_binary=True))
+                    == blocks_key(segment(text)))

@@ -1,0 +1,153 @@
+"""The batched vote (``vote.vote_blocks``) ≡ the scalar specification
+(``vote.vote_block``), block for block and bit for bit: the accept flag
+as a Python bool and the fused confidence as the same float."""
+
+import numpy as np
+import pytest
+from hypothesis import example, given, settings, strategies as st
+
+from ocrd_calamari_spark.config import ACCEPT_THRESHOLD, ENSEMBLE, VOTERS
+from ocrd_calamari_spark.gen import gen_pages
+from ocrd_calamari_spark.kernel import vote
+from ocrd_calamari_spark.kernel.decode import decode_html
+from ocrd_calamari_spark.kernel.segment import Block, segment
+from ocrd_calamari_spark.kernel.vote import round6, vote_block, vote_blocks
+
+LANGS = [None, "en", "de", "fr", "xx"]
+# stopwords in every case, and tokens whose lower() is (or is not) one:
+# Kelvin K lowers to ASCII "k", U+0130 to "i" plus a combining dot (so
+# "İn" is not "in"), and final sigma depends on the letters around it
+_WORDS = ["the", "THE", "The", "and", "of", "a", "der", "DIE", "Für", "FÜR",
+          "für", "le", "LA", "Les", "dans", "İ", "İn", "İS", "K", "Key", "ſ",
+          "ſo", "ΣΑΣ", "σς", "Σ", "x.", "why?", "no!", "...", "", "wörd",
+          "\ud800", "😀"]
+_TAGS = ["p", "li", "td", "div", "h1", "h6", "span", "article",
+         "figcaption", "summary", "a"]
+
+
+def _block(text: str, tag="p", depth=3, n_link=0, n_tags=0) -> Block:
+    return Block(pos=0, tag=tag, depth=depth, chunks=[text],
+                 n_link_chars=n_link, n_tags=n_tags)
+
+
+@st.composite
+def blocks(draw):
+    words = draw(st.lists(st.sampled_from(_WORDS), max_size=40))
+    text = " ".join(words)
+    n_tags = draw(st.integers(0, 3))
+    vis = len(text.replace(" ", ""))
+    pad = draw(st.sampled_from(["none", "some", "cutoff"]))
+    if pad == "some":
+        text += " " + "y" * draw(st.integers(0, 30))
+    elif pad == "cutoff":
+        # density (vis / (1 + n_tags) - 20) / 15 at the sigmoid's +60
+        # cutoff, or one char either side of it
+        target = 920 * (1 + n_tags) + draw(st.integers(-2, 2))
+        text += " " + "y" * max(0, target - vis)
+    vis = len(text.replace(" ", ""))
+    link = draw(st.sampled_from(["none", "all", "some"]))
+    n_link = {"none": 0, "all": vis}.get(link) or draw(st.integers(0, vis))
+    return _block(text, tag=draw(st.sampled_from(_TAGS)),
+                  depth=draw(st.integers(0, 14)), n_link=n_link,
+                  n_tags=n_tags)
+
+
+def _bits(votes):
+    """(accept, fused) pairs with the exact types and float bits."""
+    return [(type(a), a, type(f), f.hex()) for a, f in votes]
+
+
+def _check(blks, langs, names=ENSEMBLE, voter=VOTERS[0],
+           threshold=ACCEPT_THRESHOLD):
+    want = [vote_block(b, lang, names, voter, threshold)
+            for b, lang in zip(blks, langs)]
+    accept, fused = vote_blocks(blks, langs, names, voter, threshold)
+    assert _bits(zip(accept, fused)) == _bits(want)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    items=st.lists(st.tuples(blocks(), st.sampled_from(LANGS)), max_size=25),
+    voter=st.sampled_from(VOTERS),
+    names=st.sampled_from([ENSEMBLE, ENSEMBLE[::-1], ("readability",),
+                           ("density", "density"), ()]),
+    threshold=st.sampled_from([ACCEPT_THRESHOLD, 0.3, 0.7]),
+)
+@example(items=[(_block("die the le"), "de")], voter=VOTERS[0],
+         names=ENSEMBLE, threshold=ACCEPT_THRESHOLD)
+def test_vote_blocks_equals_vote_block(items, voter, names, threshold):
+    _check([b for b, _ in items], [lang for _, lang in items], names, voter,
+           threshold)
+
+
+@pytest.mark.parametrize("voter", VOTERS)
+def test_corpus_blocks(voter):
+    """Every candidate block of 300 generated pages, in one call."""
+    blks, langs = [], []
+    for html, lang in zip(*gen_pages(300, seed=7)[["html", "lang"]].values.T):
+        if html is None:
+            continue
+        try:
+            text, _ = decode_html(bytes(html))
+        except Exception:
+            continue
+        for b in segment(text):
+            blks.append(b)
+            langs.append(lang)
+    assert len(blks) > 1000
+    _check(blks, langs, voter=voter)
+
+
+def test_text_holding_newline():
+    """segment() never leaves "\\n" in a block, but a block that holds one
+    is still voted per token of its own text: "a\\nthe" is one token."""
+    blks = [_block("word a\nthe of and"), _block("the and of a is that"),
+            _block("x\n"), _block("\nthe")]
+    _check(blks, ["en"] * 4)
+    hits = vote._stop_hits([b.raw_text for b in blks], ["en"] * 4)
+    assert hits.tolist() == [2, 5, 0, 0]
+
+
+def test_round6_grid_around_every_tie():
+    """round6 at and around every half tie (k + 0.5)·1e-6 of [0, 1): each
+    element it does not flag equals round(x, 6) bit for bit, and only the
+    elements near a tie are flagged."""
+    ties = (np.arange(1_000_000) + 0.5) * 1e-6
+    near = [ties, np.nextafter(ties, 0.0), np.nextafter(ties, 1.0)]
+    far = [ties - 2e-12, ties + 2e-12, ties - 2.5e-7, ties + 2.5e-7]
+    for x, in_band in [(a, True) for a in near] + [(a, False) for a in far]:
+        r, flag = round6(x)
+        assert flag.all() if in_band else not flag.any()
+        keep = ~flag
+        want = np.array([round(v, 6) for v in x[keep].tolist()])
+        assert np.array_equal(r[keep].view(np.int64), want.view(np.int64))
+
+
+def test_round6_random_values():
+    x = np.random.default_rng(0).random(200_000)
+    r, flag = round6(x)
+    want = np.array([round(v, 6) for v in x.tolist()])
+    assert np.array_equal(r[~flag], want[~flag])
+    assert flag.sum() < 10
+
+
+def test_guard_band_revotes_in_python(monkeypatch):
+    """A score or a mean at a rounding tie, and a mean at the threshold,
+    go back through vote_block; the rest do not."""
+    tie = _block("y" * 256, n_link=1)  # link score 1 - 1.2/256 ≈ 0.9953125
+    # density 60 / 3 = 20 → 0.5, link 1 - 1.2 * 25/60 → 0.5, a div → 0.5
+    at_threshold = _block("y" * 60, tag="div", n_link=25, n_tags=2)
+    plain = _block("the and of a is " + "y" * 40)
+    blks = [plain, tie, plain, at_threshold]
+    real, redone = vote.vote_block, []
+
+    def counting(block, *args):
+        redone.append(block)
+        return real(block, *args)
+
+    monkeypatch.setattr(vote, "vote_block", counting)
+    accept, fused = vote_blocks(blks, ["en"] * 4, ENSEMBLE, VOTERS[0],
+                                ACCEPT_THRESHOLD)
+    assert redone == [tie, at_threshold]
+    monkeypatch.undo()
+    _check(blks, ["en"] * 4)
