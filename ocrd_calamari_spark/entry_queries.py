@@ -873,58 +873,6 @@ ORDER BY url
 """
 
 
-def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic KMV distinct-count sketch per lang, built on the
-    cross-engine md5 hash (2^60 space) so DuckDB reproduces the k-minimum
-    values — and therefore the estimate — exactly."""
-    from ocrd_calamari_spark.functions.dedup import PORTABLE_TOKEN_HASH_SQL
-    from ocrd_calamari_spark.functions.sketch import kmv_distinct_estimate
-
-    d = _t(spark, sf_dir, "documents")
-    est = kmv_distinct_estimate(
-        d, "lang", "text", k=64,
-        hash_expr=PORTABLE_TOKEN_HASH_SQL.replace("{t}", "{v}"),
-        hash_space=float(1 << 60),
-    )
-    return est.select(
-        "lang",
-        F.expr("cast(floor(distinct_est * 1e2 + 5e-1) / 1e2 as double)")
-        .alias("distinct_est"),
-        F.col("observed_k").cast("int").alias("observed_k"),
-    ).orderBy("lang")
-
-
-KMV_SQL = """
-WITH h AS (
-  SELECT DISTINCT lang,
-         ('0x' || substr(md5(text), 1, 15))::BIGINT AS hv
-  FROM documents
-), ranked AS (
-  SELECT lang, hv,
-         ROW_NUMBER() OVER (PARTITION BY lang ORDER BY hv) AS rn,
-         COUNT(*) OVER (PARTITION BY lang) AS cnt
-  FROM h
-)
-SELECT lang,
-       CAST(floor((CASE WHEN max(cnt) < 64 THEN max(cnt) * 1e0
-                        ELSE 63e0 / (max(CASE WHEN rn = 64 THEN hv END)
-                                     / 1152921504606846976e0)
-                   END) * 1e2 + 5e-1) / 1e2 AS DOUBLE) AS distinct_est,
-       CAST(LEAST(max(cnt), 64) AS INTEGER) AS observed_k
-FROM ranked GROUP BY lang ORDER BY lang
-"""
-
-
-def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog++ distinct-count sketch per lang — THE distinct-count
-    answer at 10^12 rows (fixed-size sketch, map-side mergeable).  Estimate
-    is Spark-implementation-specific → rows-only check."""
-    from ocrd_calamari_spark.functions.sketch import hll_distinct
-
-    d = _t(spark, sf_dir, "documents")
-    return hll_distinct(d, "lang", "text", rsd=0.02).orderBy("lang")
-
-
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-window chunking: split each document into 64-token chunks
     with stride 48 (16-token overlap) — sequence + slice + posexplode,
@@ -1498,84 +1446,6 @@ PREPARE_CORPUS_SQL = _prepare_corpus_sql()
 
 
 # ---------------------------------------------------------------------------
-# As-of / range joins (operators Spark lacks natively, composed from
-# built-ins; DuckDB has both natively → full oracles)
-# ---------------------------------------------------------------------------
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """For every click event, the user's most recent purchase at or before
-    the click (backward inclusive as-of; null if none)."""
-    from ocrd_calamari_spark.functions.joins import asof_join
-
-    e = _t(spark, sf_dir, "events")
-    clicks = e.where(F.col("event_type") == "click").select(
-        "user_id", "event_id", "ts"
-    )
-    purchases = e.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    out = asof_join(clicks, purchases, key_col="user_id", left_ts="ts",
-                    right_ts="ts", value_cols=["event_id", "value"])
-    return out.select(
-        "user_id", "event_id", "ts",
-        F.col("matched_ts").alias("purchase_ts"),
-        F.col("matched_event_id").alias("purchase_event_id"),
-        F.col("matched_value").alias("purchase_value"),
-    ).orderBy("user_id", "event_id")
-
-
-ASOF_SQL = """
-WITH clicks AS (
-  SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'
-), purchases AS (
-  SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'purchase'
-)
-SELECT c.user_id, c.event_id, c.ts,
-       p.ts AS purchase_ts,
-       p.event_id AS purchase_event_id,
-       p.value AS purchase_value
-FROM clicks c ASOF LEFT JOIN purchases p
-  ON c.user_id = p.user_id AND c.ts >= p.ts
-ORDER BY c.user_id, c.event_id
-"""
-
-
-def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bin events into [lo, hi) value bands via the bucketized range join
-    (equi-join on covering buckets + residual predicate — no
-    BroadcastNestedLoop)."""
-    from ocrd_calamari_spark.functions.joins import range_bucket_join
-
-    e = _t(spark, sf_dir, "events").select("event_id", "value")
-    bands = spark.range(50).select(
-        F.col("id").alias("band_id"),
-        (F.col("id") * 10.0).alias("lo"),
-        (F.col("id") * 10.0 + 10.0).alias("hi"),
-    )
-    joined = range_bucket_join(e, bands, "value", "lo", "hi",
-                               bucket_width=10.0)
-    return (
-        joined.groupBy("band_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double").alias("sum_value"),
-        )
-        .orderBy("band_id")
-    )
-
-
-RANGE_JOIN_SQL = """
-WITH bands AS (
-  SELECT i AS band_id, i * 1e1 AS lo, i * 1e1 + 1e1 AS hi FROM range(50) t(i)
-)
-SELECT band_id, COUNT(*) AS n,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM events e JOIN bands b ON e.value >= b.lo AND e.value < b.hi
-GROUP BY band_id ORDER BY band_id
-"""
-
-
-# ---------------------------------------------------------------------------
 # More relational shapes (all DuckDB-oracled)
 # ---------------------------------------------------------------------------
 
@@ -1762,45 +1632,6 @@ FROM terms GROUP BY domain ORDER BY domain
 """
 
 
-def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT corpus heavy hitters (bigrams with frequency >= 0.15 % of
-    all bigram occurrences) in two bounded passes: Spark's JVM
-    frequent-items sketch (no false negatives) names <= 1/support
-    candidates, then exact counts for candidates only — the
-    full-cardinality groupBy (10^9+ distinct grams at corpus scale)
-    never runs, and only candidate keys ever shuffle.  N itself is
-    computed from per-doc token counts without exploding."""
-    from ocrd_calamari_spark.functions.sketch import frequent_items_exact
-    from ocrd_calamari_spark.functions.text import word_ngrams
-
-    d = _t(spark, sf_dir, "documents")
-    grams = d.select(
-        F.explode(word_ngrams(F.lower("text"), 2)).alias("gram")
-    )
-    # bounded scalar collect: one row (corpus gram count)
-    total = d.select(
-        F.sum(
-            F.greatest(F.size(F.split(F.lower("text"), " ")) - 1, F.lit(1))
-        ).alias("total")
-    ).collect()[0][0]
-    out = frequent_items_exact(grams, "gram", support=1.5e-3, total=int(total))
-    return out.orderBy(F.desc("n"), "gram")
-
-
-HEAVY_HITTERS_SQL = """
-WITH toks AS (SELECT string_split(lower(text), ' ') AS ts FROM documents),
-g AS (
-  SELECT unnest(list_transform(generate_series(1, greatest(len(ts)-1, 1)),
-                i -> array_to_string(ts[i:i+1], ' '))) AS gram
-  FROM toks
-),
-tot AS (SELECT SUM(greatest(len(ts)-1, 1)) AS total FROM toks),
-counts AS (SELECT gram, COUNT(*) AS n FROM g GROUP BY gram)
-SELECT gram, n FROM counts CROSS JOIN tot
-WHERE n >= CEIL(1.5e-3 * total) ORDER BY n DESC, gram
-"""
-
-
 def q_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-lang exact p50/p90/p99 of n_chars via a value histogram: the
     shuffle ships (lang, n_chars, partial-count) after map-side combine
@@ -1973,70 +1804,6 @@ SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
                  ELSE floor(SUM(mism) * 10000 / SUM(scored))
             END AS BIGINT) AS mismatch_bp
 FROM s GROUP BY source ORDER BY source
-"""
-
-
-def q_corpus_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus overlap estimate (functions/sketch.py:kmv_overlap):
-    bottom-256 content hashes of crawl A (current documents) vs crawl B
-    (the deterministic prior-snapshot derivation snapshot_diff uses:
-    every 11th url not yet crawled, every 5th ≡ 1 an older revision, 40
-    since-deleted synthetic docs) — Jaccard + union-size estimates
-    without ever joining the corpora."""
-    from ocrd_calamari_spark.functions.sketch import kmv_overlap
-
-    d = _t(spark, sf_dir, "documents")
-    cur = d.select("text")
-    prev = (
-        d.where(F.col("doc_id") % 11 != 0)
-        .select(
-            F.when(
-                F.col("doc_id") % 5 == 1,
-                F.concat(F.col("text"), F.lit(" legacy-revision")),
-            ).otherwise(F.col("text")).alias("text")
-        )
-        .unionByName(
-            d.where(F.col("doc_id") < 40).select(
-                F.concat(F.col("text"), F.lit(" since-deleted")).alias(
-                    "text"
-                )
-            )
-        )
-    )
-    return kmv_overlap(cur, prev, "text", k=256)
-
-
-CORPUS_OVERLAP_SQL = """
-WITH a AS (
-  SELECT ('0x' || substr(md5(text), 1, 15))::BIGINT AS h,
-         1 AS in_a, 0 AS in_b
-  FROM documents
-), b_src AS (
-  SELECT CASE WHEN doc_id % 5 = 1 THEN text || ' legacy-revision'
-              ELSE text END AS text
-  FROM documents WHERE doc_id % 11 != 0
-  UNION ALL
-  SELECT text || ' since-deleted' AS text
-  FROM documents WHERE doc_id < 40
-), b AS (
-  SELECT ('0x' || substr(md5(text), 1, 15))::BIGINT AS h,
-         0 AS in_a, 1 AS in_b
-  FROM b_src
-), u AS (
-  SELECT h, MAX(in_a) AS in_a, MAX(in_b) AS in_b
-  FROM (SELECT * FROM a UNION ALL SELECT * FROM b)
-  GROUP BY h ORDER BY h LIMIT 256
-), s AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS k,
-         CAST(SUM(in_a * in_b) AS BIGINT) AS shared,
-         MAX(h) AS hk
-  FROM u
-)
-SELECT k, shared,
-       CAST(floor(shared * 10000 / k) AS BIGINT) AS jaccard_bp,
-       CAST(floor((CAST(k - 1 AS DOUBLE) * 1152921504606846976e0)
-                  / CAST(hk AS DOUBLE)) AS BIGINT) AS union_est
-FROM s
 """
 
 
@@ -2677,104 +2444,6 @@ ORDER BY doc_id
 """
 
 
-def q_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted fact×dim join: hot keys spread over (key, salt) partitions;
-    the join result is salt-invariant, so the plain-join oracle checks it
-    exactly.  Money sums via DECIMAL(18,2) (order-independent)."""
-    from ocrd_calamari_spark.functions.joins import salted_join
-
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    j = salted_join(c, n, "c_nationkey", "n_nationkey", n_salts=8)
-    return (
-        j.groupBy("n_name")
-        .agg(
-            F.count("*").alias("n_customers"),
-            F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_acctbal"),
-        )
-        .orderBy("n_name")
-    )
-
-
-SKEW_JOIN_SQL = """
-SELECT n_name, COUNT(*) AS n_customers,
-       CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_acctbal
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name ORDER BY n_name
-"""
-
-
-def q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Morton (Z-order) clustering keys over (user_id, hour-of-ts) — the
-    layout key that makes BOTH dimensions' min-max stats selective after a
-    range-partitioned write.  Pure integer bit math → hash-exact."""
-    from ocrd_calamari_spark.functions.layout import zorder_key
-
-    e = _t(spark, sf_dir, "events")
-    return e.select(
-        "event_id",
-        zorder_key(F.col("user_id"), F.hour("ts"), bits=8).alias("zkey"),
-    ).orderBy("zkey", "event_id")
-
-
-ZORDER_SQL = """
-SELECT event_id,
-       CAST(list_sum([ ((user_id >> i) & 1) * (1::BIGINT << (2*i+1))
-                       + ((h >> i) & 1) * (1::BIGINT << (2*i))
-                       for i in range(0, 8) ]) AS BIGINT) AS zkey
-FROM (SELECT event_id, user_id,
-             CAST(EXTRACT(hour FROM ts) AS BIGINT) AS h FROM events)
-ORDER BY zkey, event_id
-"""
-
-
-def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equal-token training-shard placement (functions/layout.py:
-    shard_assign): serpentine round-robin over the token-count-descending
-    global rank — per-shard totals come out near-equal without a bin-
-    packing solver.  The rank is the DISTRIBUTED prefix sum, never a
-    single-task global-order window; only (id, n_tokens) pairs move.
-    Output: one row per shard with its doc count and token total."""
-    from ocrd_calamari_spark.functions.layout import shard_assign
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.expr(token_count_sql("text")).cast("long").alias("w"),
-    )
-    s = shard_assign(d, "doc_id", "w", n_shards=8)
-    return (
-        s.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("w").cast("bigint").alias("total_tokens"),
-        )
-        .orderBy("shard")
-    )
-
-
-def _shard_assign_sql() -> str:
-    from ocrd_calamari_spark.functions.text import token_count_sql
-
-    return f"""
-WITH t AS (
-  SELECT doc_id, CAST({token_count_sql('text')} AS BIGINT) AS w
-  FROM documents
-), r AS (
-  SELECT w, row_number() OVER (ORDER BY w DESC, doc_id) - 1 AS r0
-  FROM t
-), s AS (
-  SELECT w,
-         CAST(CASE WHEN (r0 // 8) % 2 = 0 THEN r0 % 8
-              ELSE 7 - (r0 % 8) END AS BIGINT) AS shard
-  FROM r
-)
-SELECT shard, count(*) AS n_docs, CAST(sum(w) AS BIGINT) AS total_tokens
-FROM s GROUP BY shard ORDER BY shard
-"""
-
-
 def q_keep_best_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters keep their HIGHEST-QUALITY member
     (functions/dedup.py:keep_best), not the arbitrary min-id — the
@@ -3124,73 +2793,6 @@ SELECT s.doc_id, s.host, s.q_bp, t.p25
 FROM scored s JOIN thr t USING (host)
 WHERE s.q_bp >= t.p25
 ORDER BY s.doc_id
-"""
-
-
-def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-overlap join (functions/joins.py:interval_overlap_join):
-    per-user daily activity spans x busy event-type hour windows — which
-    users were active during which hot hours.  Bucketized equi join with
-    the first-shared-bucket exactly-once trick; a raw double-BETWEEN
-    theta join would plan as a nested-loop cross product."""
-    from ocrd_calamari_spark.functions.joins import interval_overlap_join
-
-    # TIMESTAMP_NTZ: calendar diff from a fixed literal, not a tz-aware
-    # epoch cast — identical integer in both engines regardless of
-    # session timezone
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", "event_type",
-        F.expr(
-            "timestampdiff(SECOND, timestamp'1970-01-01 00:00:00', ts)"
-        ).cast("long").alias("ep"),
-    )
-    spans = ev.where(F.col("user_id") < 40).groupBy(
-        "user_id", F.floor(F.col("ep") / 86400).alias("day")
-    ).agg(
-        F.min("ep").alias("a_lo"),
-        (F.max("ep") + 1).alias("a_hi"),
-    )
-    hot = (
-        ev.groupBy(
-            "event_type", F.floor(F.col("ep") / 3600).alias("hour")
-        )
-        .agg(F.count("*").alias("n"))
-        .where(F.col("n") >= 3)
-        .select(
-            "event_type",
-            (F.col("hour") * 3600).alias("b_lo"),
-            ((F.col("hour") + 1) * 3600).alias("b_hi"),
-        )
-    )
-    out = interval_overlap_join(
-        spans, hot, "a_lo", "a_hi", "b_lo", "b_hi", bucket_width=3600
-    )
-    return out.select(
-        "user_id", "day", "a_lo", "a_hi", "event_type", "b_lo"
-    ).orderBy("user_id", "day", "event_type", "b_lo")
-
-
-INTERVAL_OVERLAP_SQL = """
-WITH ev AS (
-  SELECT user_id, event_type,
-         CAST(date_diff('second', TIMESTAMP '1970-01-01 00:00:00', ts)
-              AS BIGINT) AS ep
-  FROM events
-), spans AS (
-  SELECT user_id, CAST(floor(ep / 86400) AS BIGINT) AS day,
-         MIN(ep) AS a_lo, MAX(ep) + 1 AS a_hi
-  FROM ev WHERE user_id < 40 GROUP BY 1, 2
-), hot AS (
-  SELECT event_type,
-         CAST(floor(ep / 3600) AS BIGINT) * 3600 AS b_lo,
-         (CAST(floor(ep / 3600) AS BIGINT) + 1) * 3600 AS b_hi
-  FROM ev GROUP BY event_type, floor(ep / 3600)
-  HAVING count(*) >= 3
-)
-SELECT s.user_id, s.day, s.a_lo, s.a_hi, h.event_type, h.b_lo
-FROM spans s JOIN hot h
-  ON s.a_lo < h.b_hi AND h.b_lo < s.a_hi
-ORDER BY s.user_id, s.day, h.event_type, h.b_lo
 """
 
 
@@ -3967,7 +3569,6 @@ QUERIES = {
     "extract_golden_diff": q_extract_golden_diff,
     "bpe_pair_counts": q_bpe_pair_counts,
     "domain_divergence": q_domain_divergence,
-    "heavy_hitters": q_heavy_hitters,
     "bloom_decontaminate": q_bloom_decontaminate,
     "sparse_cosine_join": q_sparse_cosine_join,
     "lm_quality": q_lm_quality,
@@ -3976,28 +3577,22 @@ QUERIES = {
     "containment_join": q_containment_join,
     "oov_rate": q_oov_rate,
     "adaptive_quality_filter": q_adaptive_quality_filter,
-    "interval_overlap": q_interval_overlap,
     "intra_doc_span_dedup": q_intra_doc_span_dedup,
     "bpe_train": q_bpe_train,
     "quality_funnel": q_quality_funnel,
     "histogram_quantiles": q_histogram_quantiles,
     "leakage_safe_split": q_leakage_safe_split,
     "snapshot_diff": q_snapshot_diff,
-    "shard_assign": q_shard_assign,
     "weighted_sample": q_weighted_sample,
     "skew_report": q_skew_report,
     # --- below the driver's ~50-entry sample cut.  Demoted by evidence
     # accounting: chunk_documents…exact_dup_groups are hash-green in
-    # CORRECTNESS_r02; hll_distinct is no-oracle (rows-only is ALL a
-    # driver row can ever certify for it — its correctness contract lives
-    # in pytest and the full check_oracles gate), so it must not displace
-    # hash-checkable round-4 entries that have never had a driver row.
+    # CORRECTNESS_r02.
     # --- round-4 late additions (post-window this round: certified by the
     # judge's full check_oracles gate + the pytest fast-parity subset;
     # promotable into the sample window once the above keys land green).
     "ks_drift": q_ks_drift,
     "char_diversity": q_char_diversity,
-    "corpus_overlap": q_corpus_overlap,
     "winnow_fingerprints": q_winnow_fingerprints,
     "lang_mismatch": q_lang_mismatch,
     "effective_tokens": q_effective_tokens,
@@ -4013,7 +3608,6 @@ QUERIES = {
     "minhash_dedup": q_minhash_dedup,
     "simhash_dedup": q_simhash_dedup,
     "exact_dup_groups": q_exact_dup_groups,
-    "hll_distinct": q_hll_distinct,
     # --- extraction family (rows-only by nature; golden contract above)
     "extract_pages": q_extract_pages,
     "extract_word_spans": q_extract_word_spans,
@@ -4022,18 +3616,13 @@ QUERIES = {
     "compression_signal": q_compression_signal,
     # --- re-confirm set (changed this round or flagship relational)
     "inverted_index": q_inverted_index,
-    "kmv_distinct": q_kmv_distinct,
     "bm25_search": q_bm25_search,
-    "asof_join": q_asof_join,
-    "range_join": q_range_join,
     # --- stable greens (checked green in r03; beyond the 50-sample window)
     "token_stats": q_token_stats,
     "quality_scores": q_quality_scores,
     "lang_id": q_lang_id,
     "profile_columns": q_profile_columns,
     "train_test_split": q_train_test_split,
-    "skew_join": q_skew_join,
-    "zorder_keys": q_zorder_keys,
     "bpe_token_count": q_bpe_token_count,
     "prepare_corpus": q_prepare_corpus,
     "mojibake_detect": q_mojibake_detect,
@@ -4060,28 +3649,24 @@ ORACLES = {
     "bpe_train": BPE_TRAIN_SQL,
     "quality_funnel": QUALITY_FUNNEL_SQL,
     "domain_divergence": DOMAIN_DIVERGENCE_SQL,
-    "heavy_hitters": HEAVY_HITTERS_SQL,
     "bloom_decontaminate": DECONTAMINATE_SQL,
     "histogram_quantiles": HISTOGRAM_QUANTILES_SQL,
     "sparse_cosine_join": SPARSE_COSINE_SQL,
     "lm_quality": LM_QUALITY_SQL,
     "ks_drift": KS_DRIFT_SQL,
     "char_diversity": CHAR_DIVERSITY_SQL,
-    "corpus_overlap": CORPUS_OVERLAP_SQL,
     "winnow_fingerprints": WINNOW_FP_SQL,
     "lang_mismatch": _lang_mismatch_sql(),
     "effective_tokens": EFFECTIVE_TOKENS_SQL,
     "pmi_pairs": PMI_PAIRS_SQL,
     "leakage_safe_split": LEAKAGE_SPLIT_SQL,
     "snapshot_diff": _snapshot_diff_sql(),
-    "shard_assign": _shard_assign_sql(),
     "keep_best_dedup": _keep_best_sql(),
     "weighted_sample": _weighted_sample_sql(),
     "skew_report": SKEW_REPORT_SQL,
     "containment_join": CONTAINMENT_SQL,
     "oov_rate": OOV_RATE_SQL,
     "adaptive_quality_filter": _adaptive_quality_sql(),
-    "interval_overlap": INTERVAL_OVERLAP_SQL,
     "intra_doc_span_dedup": INTRA_SPAN_SQL,
     "token_stats": TOKEN_STATS_SQL,
     "quality_scores": QUALITY_SQL,
@@ -4090,9 +3675,6 @@ ORACLES = {
     "bm25_search": BM25_SQL,
     "profile_columns": PROFILE_SQL,
     "train_test_split": SPLIT_SQL,
-    "skew_join": SKEW_JOIN_SQL,
-    "zorder_keys": ZORDER_SQL,
-    "kmv_distinct": KMV_SQL,
     "rolling_fingerprints": ROLLING_FP_SQL,
     "span_dedup": SPAN_DEDUP_SQL,
     "chunk_documents": CHUNK_SQL,
@@ -4103,8 +3685,6 @@ ORACLES = {
     "jaccard_dedup": JACCARD_DEDUP_SQL,
     "dedup_clusters": DEDUP_CLUSTERS_SQL,
     "simhash_dedup": SIMHASH_SQL,
-    "asof_join": ASOF_SQL,
-    "range_join": RANGE_JOIN_SQL,
     "prepare_corpus": PREPARE_CORPUS_SQL,
     "repetition_quality": REPETITION_SQL,
     "decontaminate": DECONTAMINATE_SQL,

@@ -1,5 +1,5 @@
 """Training-data pipeline functions beyond the reference's own operators:
-text analysis, deduplication, joins, profiling and sketches.
+text analysis, deduplication and profiling.
 
 Everything here stays JVM-side (pyspark.sql.functions / higher-order
 functions) unless genuinely impossible — no row-at-a-time Python in hot

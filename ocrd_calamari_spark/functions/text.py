@@ -799,7 +799,7 @@ def oov_rate(
     residual computed map-side, so the only shuffle carries
     (doc, partial counts) after map-side combine — the corpus text
     never moves.  Tokenization is single-space unigrams of
-    ``lower(text)``, shared with heavy_hitters / the bigram LM.
+    ``lower(text)``, shared with the bigram LM.
     """
     toks = df.select(
         F.col(id_col),

@@ -8,9 +8,10 @@ runs the fused Python loop instead.  The library is cached as
 package is a writable directory, else (inside a ``--py-files`` zip, or a
 read-only install) in a per-user directory under ``tempfile.gettempdir()``.
 The build writes a unique temporary name and ``os.replace``s it, so
-concurrent workers never load a half-written file.  The first run after a
-source change pays one compile; ``pipeline.extract_df`` calls ``load()``
-on the driver so that local workers find a warm cache.
+concurrent workers never load a half-written file, then removes this
+machine's libraries of earlier sources from that directory.  The first
+run after a source change pays one compile; ``pipeline.extract_df`` calls
+``load()`` on the driver so that local workers find a warm cache.
 
 The C side never writes past the buffer this module sizes from the page
 (the count of ``"<"`` bounds tags, blocks, stack depth and chunks); any
@@ -20,6 +21,7 @@ error code from it sends the page to the Python segmenter.
 from __future__ import annotations
 
 import ctypes
+import glob
 import hashlib
 import os
 import pkgutil
@@ -167,6 +169,16 @@ def build() -> str:
         for path in (c_path, so_path):
             if os.path.exists(path):
                 os.remove(path)
+    # drop this machine's libraries of earlier sources: a process that has
+    # one loaded keeps it mapped, and one still on an old source recompiles
+    stale = "_segment-%s-%s.so" % ("[0-9a-f]" * 16,
+                                    glob.escape(platform.machine()))
+    for path in glob.glob(os.path.join(glob.escape(cache), stale)):
+        if path != lib:
+            try:
+                os.remove(path)
+            except OSError:  # a concurrent worker removed it first
+                pass
     return lib
 
 

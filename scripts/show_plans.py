@@ -72,35 +72,6 @@ def main():
         plan_of(q, "simple"),
     ))
 
-    q = QUERIES["asof_join"](spark, sf)
-    sections.append((
-        "asof_join",
-        "NO join node: tagged union + last(ignorenulls) window, one "
-        "Exchange on the key.  A key-matched join formulation would carry "
-        "a key-by-key blowup; this shape is a sort within each key "
-        "partition.",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["range_join"](spark, sf)
-    sections.append((
-        "range_join (bucketized)",
-        "Interval membership as an EQUI join on covering buckets plus a "
-        "residual predicate — no BroadcastNestedLoopJoin (the quadratic "
-        "plan a raw BETWEEN theta join gets).",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["kmv_distinct"](spark, sf)
-    sections.append((
-        "kmv_distinct (memory-bounded sketch)",
-        "NO collect_set anywhere: spillable hash-distinct, a window rank "
-        "truncated to k rows per group, then a ≤k-element collect_list — "
-        "a 10^9-distinct group sorts on disk instead of building an "
-        "O(distinct) array in one executor (the round-2 weak spot).",
-        plan_of(q, "simple"),
-    ))
-
     q = QUERIES["pack_sequences"](spark, sf)
     sections.append((
         "pack_sequences (distributed prefix sum)",
@@ -164,18 +135,6 @@ def main():
         plan_of(q, "simple"),
     ))
 
-    q = QUERIES["shard_assign"](spark, sf)
-    sections.append((
-        "shard_assign (equal-token shard placement)",
-        "The weight-descending global rank is the distributed prefix sum: "
-        "the big-side window is PARTITIONED by the range bucket "
-        "(windowspecdefinition(_bkt...)), the only unpartitioned window "
-        "runs over the bounded subtotal table, and only (id, weight) "
-        "pairs ever shuffle — a global-order row_number would funnel the "
-        "corpus through one task.",
-        plan_of(q, "simple"),
-    ))
-
     q = QUERIES["skew_report"](spark, sf)
     sections.append((
         "skew_report (hot-key diagnostic)",
@@ -205,16 +164,6 @@ def main():
         "is a map-side join residual — the only shuffle carries (doc, "
         "partial counts) after map-side combine; corpus text never "
         "moves.",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["interval_overlap"](spark, sf)
-    sections.append((
-        "interval_overlap (exactly-once bucketized overlap join)",
-        "An equi join on the covering bucket with the first-shared-"
-        "bucket residual — no BroadcastNestedLoop/cartesian node "
-        "anywhere (the plan a raw double-BETWEEN theta join would get), "
-        "and no post-join distinct.",
         plan_of(q, "simple"),
     ))
 
@@ -293,16 +242,6 @@ def main():
         "projection + explode — no join, no aggregation, no Python; "
         "text never shuffles and the index rows are compact "
         "(id, pos, fp).",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["corpus_overlap"](spark, sf)
-    sections.append((
-        "corpus_overlap (bottom-k cross-corpus estimate)",
-        "Each corpus reduces to (hash, flag) rows; the union groupBy "
-        "partial-aggregates two max-bits map-side; the bottom-k cut is "
-        "TakeOrderedAndProject — per-partition top-k, k-row merge, no "
-        "corpus join, no global sort.",
         plan_of(q, "simple"),
     ))
 

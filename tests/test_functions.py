@@ -1,8 +1,5 @@
 """Tests for dedup / similarity / text-analysis / join / profile functions."""
 
-import os
-
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -366,125 +363,6 @@ class TestProfileAndSplit:
             hash_split(spark.range(1), "id", {"train": 50, "test": 49})
 
 
-class TestZorderLayout:
-    def test_zorder_key_matches_reference_morton(self, spark):
-        from ocrd_calamari_spark.functions.layout import zorder_key
-
-        rows = [(a, b) for a in (0, 1, 5, 63) for b in (0, 2, 31, 63)]
-        df = spark.createDataFrame(rows, "a long, b long")
-        got = {(r.a, r.b): r.z
-               for r in df.select("a", "b",
-                                  zorder_key("a", "b", 6).alias("z")).collect()}
-        def morton(a, b, bits=6):
-            z = 0
-            for i in range(bits):
-                z |= ((a >> i) & 1) << (2 * i + 1) | ((b >> i) & 1) << (2 * i)
-            return z
-        assert got == {(a, b): morton(a, b) for a, b in rows}
-
-    def test_zorder_key_rejects_wide_bits(self, spark):
-        from ocrd_calamari_spark.functions.layout import zorder_key
-        with pytest.raises(ValueError):
-            zorder_key("a", "b", 32)
-
-    def test_zorder_layout_narrows_both_dims_file_stats(self, spark, tmp_path):
-        import pyarrow.parquet as pq
-        from ocrd_calamari_spark.functions.layout import zorder_layout
-
-        # 64x64 grid: every (a, b) cell once
-        df = spark.range(0, 4096).select(
-            (F.col("id") % 64).alias("a"),
-            (F.col("id") / F.lit(64)).cast("long").alias("b"),
-        )
-        zdir, sdir = str(tmp_path / "z"), str(tmp_path / "s")
-        zorder_layout(df, "a", "b", bits=6, n_files=16).write.parquet(zdir)
-        (df.repartitionByRange(16, "a").sortWithinPartitions("a")
-         .write.parquet(sdir))
-
-        def spans(d, col):
-            out = []
-            for p in sorted(os.listdir(d)):
-                if not p.endswith(".parquet"):
-                    continue
-                md = pq.ParquetFile(os.path.join(d, p)).metadata
-                lo = min(md.row_group(i).column(
-                    [md.schema.column(j).name
-                     for j in range(md.num_columns)].index(col)).statistics.min
-                    for i in range(md.num_row_groups))
-                hi = max(md.row_group(i).column(
-                    [md.schema.column(j).name
-                     for j in range(md.num_columns)].index(col)).statistics.max
-                    for i in range(md.num_row_groups))
-                out.append(hi - lo)
-            return out
-
-        z_b = spans(zdir, "b")
-        s_b = spans(sdir, "b")
-        # single-column sort leaves b unclustered: every file spans ~all of b
-        assert sum(s_b) / len(s_b) > 55
-        # z-order: each file covers a compact rectangle -> narrow on b too
-        assert sum(z_b) / len(z_b) < sum(s_b) / len(s_b) / 2
-        # and a stays clustered as well (no worse than ~a quadrant per file)
-        z_a = spans(zdir, "a")
-        assert sum(z_a) / len(z_a) < 40
-
-
-class TestSketches:
-    def test_kmv_estimate_accuracy_and_determinism(self, spark):
-        from ocrd_calamari_spark.functions.sketch import (
-            hll_distinct, kmv_distinct_estimate,
-        )
-
-        rows = [(i, "g", f"value-{i % 700}") for i in range(3000)]
-        df = spark.createDataFrame(rows, ["i", "grp", "v"])
-        est = kmv_distinct_estimate(df, "grp", "v", k=64).collect()[0]
-        assert abs(est.distinct_est - 700) / 700 < 0.30  # k=64 → ~12% rsd
-        est2 = kmv_distinct_estimate(df, "grp", "v", k=64).collect()[0]
-        assert est.distinct_est == est2.distinct_est  # deterministic
-        hll = hll_distinct(df, "grp", "v").collect()[0]
-        assert abs(hll.approx_distinct - 700) / 700 < 0.10
-
-    def test_kmv_exact_below_k(self, spark):
-        from ocrd_calamari_spark.functions.sketch import kmv_distinct_estimate
-
-        df = spark.createDataFrame(
-            [(i, "g", f"v{i % 10}") for i in range(100)], ["i", "grp", "v"]
-        )
-        est = kmv_distinct_estimate(df, "grp", "v", k=64).collect()[0]
-        assert est.distinct_est == 10.0  # fewer than k distinct → exact
-
-    def test_kmv_bounded_form_equals_collect_set_form(self, spark):
-        """The memory-bounded plan (distinct → rank ≤ k → ≤k-row collect)
-        and the single-aggregate collect_set reference keep the SAME k
-        minima, so estimates are bit-identical — incl. groups above and
-        below k, and multiple groups in one pass."""
-        from ocrd_calamari_spark.functions.sketch import (
-            _kmv_collect_set_form, kmv_distinct_estimate,
-        )
-
-        rows = (
-            [(i, "big", f"value-{i % 700}") for i in range(3000)]
-            + [(i, "small", f"v{i % 9}") for i in range(50)]
-        )
-        df = spark.createDataFrame(rows, ["i", "grp", "v"])
-        for kwargs in (
-            {},
-            {"hash_expr": "abs(hash({v}))", "hash_space": float(1 << 31)},
-        ):
-            bounded = {
-                r.grp: (r.distinct_est, r.observed_k)
-                for r in kmv_distinct_estimate(df, "grp", "v", k=64,
-                                               **kwargs).collect()
-            }
-            reference = {
-                r.grp: (r.distinct_est, r.observed_k)
-                for r in _kmv_collect_set_form(df, "grp", "v", k=64,
-                                               **kwargs).collect()
-            }
-            assert bounded == reference
-            assert bounded["small"][0] == 9.0  # below-k group stays exact
-
-
 class TestHistogramQuantiles:
     def test_matches_sorted_type1_quantiles(self, spark):
         """Histogram path == sorted-array type-1 quantiles
@@ -507,162 +385,6 @@ class TestHistogramQuantiles:
             n = len(vals)
             want = tuple(vals[math.ceil(q * n) - 1] for q in (0.5, 0.9, 0.99))
             assert got[g] == want, (g, got[g], want)
-
-
-class TestFrequentItemsExact:
-    def test_matches_naive_groupby_and_threshold(self, spark):
-        """Two-pass result == naive full groupBy + HAVING (completeness:
-        the sketch pass must never lose a true heavy hitter), across a
-        skewed stream with items straddling the threshold."""
-        import math
-
-        from ocrd_calamari_spark.functions.sketch import frequent_items_exact
-
-        # 40 hot items (600 each), 400 warm (30 each), 5000 cold singletons
-        rows = (
-            [(f"hot-{i % 40}",) for i in range(24000)]
-            + [(f"warm-{i % 400}",) for i in range(12000)]
-            + [(f"cold-{i}",) for i in range(5000)]
-        )
-        df = spark.createDataFrame(rows, ["v"]).repartition(8)
-        n = len(rows)
-        support = 2e-3  # threshold ceil(82) — hot pass, warm/cold fail
-        got = {
-            (r.v, r.n)
-            for r in frequent_items_exact(df, "v", support, total=n).collect()
-        }
-        thr = math.ceil(support * n)
-        naive = {
-            (r.v, r.n)
-            for r in df.groupBy("v").agg(F.count("*").alias("n"))
-            .where(F.col("n") >= thr).collect()
-        }
-        assert got == naive
-        assert len(got) == 40 and all(c == 600 for _, c in got)
-
-    def test_exact_counts_not_sketch_estimates(self, spark):
-        """Returned counts are pass-2 exact, even when the candidate pass
-        over-returns (false positives must be exact-counted then cut)."""
-        from ocrd_calamari_spark.functions.sketch import frequent_items_exact
-
-        rows = [("a",)] * 100 + [("b",)] * 99 + [("c",)] * 5
-        df = spark.createDataFrame(rows, ["v"]).repartition(4)
-        got = {(r.v, r.n) for r in
-               frequent_items_exact(df, "v", 0.49, total=204).collect()}
-        assert got == {("a", 100)}  # threshold ceil(99.96)=100; b at 99 cut
-
-
-class TestJoins:
-    def test_salted_join_matches_plain_join_and_spreads_key(self, spark):
-        from ocrd_calamari_spark.functions.joins import salted_join
-
-        # 90% of facts share one hot key
-        facts = spark.range(0, 2000).select(
-            F.col("id").alias("fid"),
-            F.when(F.col("id") % 10 < 9, 7).otherwise(F.col("id") % 10)
-            .cast("int").alias("k"),
-        )
-        dim = spark.createDataFrame(
-            [(i, f"name{i}") for i in range(10)], "dk int, name string"
-        )
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            got = salted_join(facts, dim, "k", "dk", n_salts=8)
-            plain = facts.join(dim, facts["k"] == dim["dk"]).select(
-                "fid", "k", "dk", "name"
-            )
-            assert sorted(map(tuple, got.collect())) == sorted(
-                map(tuple, plain.collect())
-            )
-            # the shuffle key includes the salt → hot key spreads
-            plan = got._jdf.queryExecution().executedPlan().toString()
-            assert "_salt" in plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-    def test_salted_left_join_keeps_unmatched_facts(self, spark):
-        from ocrd_calamari_spark.functions.joins import salted_join
-
-        facts = spark.createDataFrame(
-            [(1, 1), (2, 99)], "fid long, k long"  # 99 has no dim row
-        )
-        dim = spark.createDataFrame([(1, "one")], "dk long, name string")
-        rows = {r.fid: r.name
-                for r in salted_join(facts, dim, "k", "dk", 4,
-                                     how="left").collect()}
-        assert rows == {1: "one", 2: None}
-
-    def test_asof_backward_inclusive(self, spark):
-        from ocrd_calamari_spark.functions.joins import asof_join
-
-        left = spark.createDataFrame(
-            [(1, 100, 5), (1, 101, 10), (1, 102, 20), (2, 200, 7)],
-            ["k", "lid", "t"],
-        )
-        right = spark.createDataFrame(
-            [(1, 10, 900), (1, 15, 901), (3, 1, 902)],
-            ["k", "t", "rid"],
-        )
-        out = {
-            r["lid"]: (r["matched_ts"], r["matched_rid"])
-            for r in asof_join(left, right, "k", "t", "t", ["rid"]).collect()
-        }
-        assert out[100] == (None, None)      # before any right row
-        assert out[101] == (10, 900)         # equal ts matches (inclusive)
-        assert out[102] == (15, 901)         # most recent prior
-        assert out[200] == (None, None)      # key with no right rows
-
-    def test_asof_null_value_is_row_atomic(self, spark):
-        """A right row whose value column is NULL must match as that whole
-        row (merge_asof/ASOF JOIN semantics) — not inherit the previous
-        right row's value."""
-        from ocrd_calamari_spark.functions.joins import asof_join
-
-        left = spark.createDataFrame([(1, 100, 30)], ["k", "lid", "t"])
-        right = spark.createDataFrame(
-            [(1, 10, 900), (1, 20, None)], ["k", "t", "rid"]
-        )
-        r = asof_join(left, right, "k", "t", "t", ["rid"]).collect()[0]
-        assert r["matched_ts"] == 20
-        assert r["matched_rid"] is None
-
-    def test_range_bucket_join_spans_and_boundaries(self, spark):
-        from pyspark.sql import functions as F
-
-        from ocrd_calamari_spark.functions.joins import range_bucket_join
-
-        facts = spark.createDataFrame(
-            [(1, 0.0), (2, 9.99), (3, 10.0), (4, 25.0), (5, 39.99), (6, 40.0)],
-            ["fid", "v"],
-        )
-        # ranges spanning multiple buckets (width 10): [0,10), [5,40)
-        ranges = spark.createDataFrame(
-            [("a", 0.0, 10.0), ("b", 5.0, 40.0)], ["rid", "lo", "hi"]
-        )
-        out = range_bucket_join(facts, ranges, "v", "lo", "hi", 10.0)
-        got = {(r["fid"], r["rid"]) for r in out.collect()}
-        assert got == {(1, "a"), (2, "a"), (2, "b"), (3, "b"), (4, "b"),
-                       (5, "b")}  # hi exclusive: 10.0∉a, 40.0∉b
-        # each pair exactly once (no bucket-overlap duplicates)
-        assert out.count() == len(got)
-
-    def test_range_bucket_join_degenerate_intervals_pruned(self, spark):
-        """hi <= lo intervals match nothing ([lo, hi) is empty) and must be
-        dropped BEFORE the bucket explode: a malformed hi << lo row would
-        otherwise make F.sequence default to step -1 and explode a huge
-        descending bucket array per row (OOM vector, not just waste)."""
-        from ocrd_calamari_spark.functions.joins import range_bucket_join
-
-        facts = spark.createDataFrame([(1, 5.0)], ["fid", "v"])
-        ranges = spark.createDataFrame(
-            [("ok", 0.0, 10.0),
-             ("empty", 5.0, 5.0),           # zero-width
-             ("inverted", 1.0e9, -1.0e9)],  # would be ~2e8 buckets at w=10
-            ["rid", "lo", "hi"],
-        )
-        out = range_bucket_join(facts, ranges, "v", "lo", "hi", 10.0)
-        assert [(r["fid"], r["rid"]) for r in out.collect()] == [(1, "ok")]
 
 
 class TestRepetitionStats:
@@ -1093,46 +815,6 @@ class TestApiGuards:
     """Round-3 review findings: invalid inputs must fail loudly at the
     API boundary, not silently corrupt output or die in opaque SQL."""
 
-    def test_salted_join_rejects_outer_and_semi(self, spark):
-        import pytest
-
-        from ocrd_calamari_spark.functions.joins import salted_join
-
-        f = spark.createDataFrame([(1, "a")], ["k", "v"])
-        d = spark.createDataFrame([(1, "x")], ["dk", "w"])
-        for how in ("right", "full", "left_semi", "left_anti"):
-            with pytest.raises(ValueError, match="salted_join supports"):
-                salted_join(f, d, "k", "dk", n_salts=4, how=how)
-        assert salted_join(f, d, "k", "dk", n_salts=4).count() == 1
-
-    def test_range_join_rejects_nonpositive_width(self, spark):
-        import pytest
-
-        from ocrd_calamari_spark.functions.joins import range_bucket_join
-
-        facts = spark.createDataFrame([(1.0,)], ["v"])
-        ranges = spark.createDataFrame([(0.0, 2.0)], ["lo", "hi"])
-        for w in (0.0, -1.0, float("nan")):
-            with pytest.raises(ValueError, match="bucket_width"):
-                range_bucket_join(facts, ranges, "v", "lo", "hi", w)
-
-    def test_asof_join_rejects_column_collisions(self, spark):
-        import pytest
-
-        from ocrd_calamari_spark.functions.joins import asof_join
-
-        right = spark.createDataFrame([(1, 10, 5.0)], ["k", "ts", "px"])
-        bad_working = spark.createDataFrame(
-            [(1, 11, "junk")], ["k", "ts", "_match"]
-        )
-        with pytest.raises(ValueError, match="working columns"):
-            asof_join(bad_working, right, "k", "ts", "ts", ["px"])
-        bad_out = spark.createDataFrame(
-            [(1, 11, 9.9)], ["k", "ts", "matched_px"]
-        )
-        with pytest.raises(ValueError, match="overwrite"):
-            asof_join(bad_out, right, "k", "ts", "ts", ["px"])
-
     def test_profile_columns_validates_names(self, spark):
         import pytest
 
@@ -1154,15 +836,6 @@ class TestApiGuards:
         df = spark.createDataFrame([(1,)], ["doc_id"])
         with pytest.raises(ValueError, match="positive"):
             hash_split(df, weights={"train": 60, "valid": -10, "test": 50})
-
-    def test_zorder_layout_rejects_zero_files(self, spark):
-        import pytest
-
-        from ocrd_calamari_spark.functions.layout import zorder_layout
-
-        df = spark.createDataFrame([(1, 2)], ["a", "b"])
-        with pytest.raises(ValueError, match="n_files"):
-            zorder_layout(df, "a", "b", n_files=0)
 
 
 class TestSimilaritySemantics:
@@ -1415,66 +1088,6 @@ class TestSnapshotDiff:
             got.values())
 
 
-class TestShardAssign:
-    def _reference(self, rows, n_shards):
-        # python reference: serpentine round-robin over (w desc, id asc)
-        order = sorted(rows, key=lambda r: (-r[1], r[0]))
-        out = {}
-        for r0, (i, w) in enumerate(order):
-            pos = r0 % n_shards
-            shard = pos if (r0 // n_shards) % 2 == 0 else n_shards - 1 - pos
-            out[i] = (r0 + 1, shard)
-        return out
-
-    def test_matches_python_reference(self, spark):
-        rows = [(i, (i * 7919) % 97 + 1) for i in range(200)]
-        df = spark.createDataFrame(rows, ["doc_id", "w"])
-        from ocrd_calamari_spark.functions.layout import shard_assign
-
-        got = {
-            r["doc_id"]: (r["rank"], r["shard"])
-            for r in shard_assign(df, "doc_id", "w", n_shards=7).collect()
-        }
-        assert got == self._reference(rows, 7)
-
-    def test_skewed_weights_and_sparse_ids(self, spark):
-        # one hot weight value (half the corpus) + ids far from zero —
-        # the regimes the ord-key bucketing must not funnel or overflow
-        rows = [(10_000_000 + i * 13, 50 if i % 2 else i % 40 + 1)
-                for i in range(300)]
-        df = spark.createDataFrame(rows, ["doc_id", "w"])
-        from ocrd_calamari_spark.functions.layout import shard_assign
-
-        got = {
-            r["doc_id"]: (r["rank"], r["shard"])
-            for r in shard_assign(df, "doc_id", "w", n_shards=8).collect()
-        }
-        assert got == self._reference(rows, 8)
-
-    def test_balance_beats_weight_spread(self, spark):
-        # serpentine guarantee: shard totals differ by at most the
-        # heaviest row (loose LPT-style bound, exact check via totals)
-        rows = [(i, (i * 31) % 200 + 1) for i in range(500)]
-        df = spark.createDataFrame(rows, ["doc_id", "w"])
-        from ocrd_calamari_spark.functions.layout import shard_assign
-
-        totals = (
-            shard_assign(df, "doc_id", "w", n_shards=8)
-            .groupBy("shard").agg(F.sum("w").alias("t")).collect()
-        )
-        ts = [r["t"] for r in totals]
-        assert len(ts) == 8
-        assert max(ts) - min(ts) <= 200  # <= max weight
-
-    def test_empty_input_keeps_schema(self, spark):
-        df = spark.createDataFrame([], "doc_id long, w long")
-        from ocrd_calamari_spark.functions.layout import shard_assign
-
-        out = shard_assign(df, "doc_id", "w", n_shards=4)
-        assert out.count() == 0
-        assert {"rank", "shard"} <= set(out.columns)
-
-
 class TestKeepBest:
     def test_argmax_with_tie_break(self, spark):
         rows = [
@@ -1698,36 +1311,6 @@ class TestOovRate:
         assert "BroadcastHashJoin" in plan  # corpus side never reshuffles
 
 
-class TestPointLookupTable:
-    def test_bloom_filters_written_and_readable(self, spark, tmp_path):
-        """The bloom option must actually reach the parquet writer: the
-        filtered file is measurably larger than the identical write
-        without it (the serialized bitset ~ NDV bytes), and reads back
-        byte-identical.  (pyarrow 16 does not expose bloom_filter_offset,
-        so the size delta + readback is the observable contract here.)"""
-        import glob
-        import os
-
-        from ocrd_calamari_spark.functions.layout import (
-            write_point_lookup_table)
-
-        df = spark.range(20000).selectExpr(
-            "id", "md5(cast(id as string)) AS url").coalesce(1)
-        plain = str(tmp_path / "plain")
-        df.write.mode("overwrite").parquet(plain)
-        bloomed = str(tmp_path / "bloomed")
-        write_point_lookup_table(df, bloomed, {"url": 20000})
-
-        size = lambda d: sum(
-            os.path.getsize(f) for f in glob.glob(os.path.join(d, "*.parquet"))
-        )
-        # a 20k-NDV bloom bitset is ~20-32 KB; require a robust fraction
-        assert size(bloomed) - size(plain) > 10_000
-        back = spark.read.parquet(bloomed)
-        assert back.count() == 20000
-        assert back.where("url = md5('137')").count() == 1
-
-
 class TestCompressionSignal:
     def test_matches_direct_zlib(self, spark):
         import zlib
@@ -1751,49 +1334,6 @@ class TestCompressionSignal:
                 len(raw), comp, comp * 10000 // max(len(raw), 1))
         # signal sanity: repetitive << prose < junk
         assert got[1][2] < got[2][2] < got[3][2]
-
-
-class TestIntervalOverlapJoin:
-    def test_matches_brute_force_exactly_once(self, spark):
-        # wide intervals spanning MANY buckets: the first-shared-bucket
-        # trick must emit each overlapping pair exactly once
-        left = [(i, i * 7, i * 7 + 25) for i in range(30)]
-        right = [(100 + j, j * 11, j * 11 + 40) for j in range(20)]
-        ldf = spark.createDataFrame(left, ["lid", "a_lo", "a_hi"])
-        rdf = spark.createDataFrame(right, ["rid", "b_lo", "b_hi"])
-        from ocrd_calamari_spark.functions.joins import interval_overlap_join
-
-        got = sorted(
-            (r["lid"], r["rid"])
-            for r in interval_overlap_join(
-                ldf, rdf, "a_lo", "a_hi", "b_lo", "b_hi", bucket_width=10
-            ).collect()
-        )
-        exp = sorted(
-            (l[0], r[0])
-            for l in left for r in right
-            if l[1] < r[2] and r[1] < l[2]
-        )
-        assert got == exp  # exact set AND no duplicates
-
-    def test_degenerate_intervals_dropped(self, spark):
-        ldf = spark.createDataFrame(
-            [(1, 10, 10), (2, 10, 5), (3, 0, 100)], ["lid", "a_lo", "a_hi"])
-        rdf = spark.createDataFrame([(9, 0, 100)], ["rid", "b_lo", "b_hi"])
-        from ocrd_calamari_spark.functions.joins import interval_overlap_join
-
-        got = [r["lid"] for r in interval_overlap_join(
-            ldf, rdf, "a_lo", "a_hi", "b_lo", "b_hi", bucket_width=7
-        ).collect()]
-        assert got == [3]  # empty/inverted intervals never match
-
-    def test_rejects_bad_width(self, spark):
-        df = spark.createDataFrame([(1, 0, 1)], ["i", "lo", "hi"])
-        from ocrd_calamari_spark.functions.joins import interval_overlap_join
-
-        import pytest as _pytest
-        with _pytest.raises(ValueError):
-            interval_overlap_join(df, df, "lo", "hi", "lo", "hi", 0)
 
 
 class TestIntraDocSpanDedup:
@@ -2433,44 +1973,6 @@ class TestMinhashRecall:
         rows = {r.bucket: r for r in minhash_recall_audit(df).collect()}
         assert rows[10].n_pairs == 4  # one exact-dup pair per residue
         assert rows[10].recall_bp == 10000
-
-
-class TestKmvOverlap:
-    """Bottom-k cross-corpus overlap estimate (functions/sketch.py)."""
-
-    def test_estimates_track_exact_within_kmv_band(self, spark):
-        """Jaccard and union-size estimates must land within the ~k^-1/2
-        KMV error band of the exact values on a corpus with known
-        overlap (600 shared / 400+300 unique texts)."""
-        from ocrd_calamari_spark.functions.sketch import kmv_overlap
-
-        shared = [(f"shared document text number {i}",) for i in range(600)]
-        only_a = [(f"unique to corpus a text {i}",) for i in range(400)]
-        only_b = [(f"unique to corpus b text {i}",) for i in range(300)]
-        a = spark.createDataFrame(shared + only_a, ["text"])
-        b = spark.createDataFrame(shared + only_b, ["text"])
-        row = kmv_overlap(a, b, "text", k=256).collect()[0]
-        assert row.k == 256
-        exact_j = 600 / 1300
-        got_j = row.jaccard_bp / 10000
-        assert abs(got_j - exact_j) < 2.5 / (256 ** 0.5)  # ~0.16 band
-        assert abs(row.union_est - 1300) / 1300 < 2.5 / (256 ** 0.5)
-
-    def test_identical_corpora_read_as_full_overlap(self, spark):
-        from ocrd_calamari_spark.functions.sketch import kmv_overlap
-
-        a = spark.createDataFrame(
-            [(f"doc {i}",) for i in range(500)], ["text"])
-        row = kmv_overlap(a, a, "text", k=128).collect()[0]
-        assert row.jaccard_bp == 10000 and row.shared == row.k == 128
-
-    def test_disjoint_corpora_read_as_zero(self, spark):
-        from ocrd_calamari_spark.functions.sketch import kmv_overlap
-
-        a = spark.createDataFrame([(f"a {i}",) for i in range(200)], ["text"])
-        b = spark.createDataFrame([(f"b {i}",) for i in range(200)], ["text"])
-        row = kmv_overlap(a, b, "text", k=128).collect()[0]
-        assert row.jaccard_bp == 0 and row.shared == 0
 
 
 class TestWinnowSelections:

@@ -203,28 +203,6 @@ class TestBucketedResumePruning:
         assert len(subset.inputFiles()) == len(src.inputFiles())
 
 
-class TestCustomJoinPlans:
-    def test_asof_join_has_no_join_node(self, spark):
-        """The as-of join is union + window — no join operator at all, so
-        no key×key blowup exists in the plan (one Exchange on the key)."""
-        from ocrd_calamari_spark.entry_queries import q_asof_join
-
-        plan = plan_of(q_asof_join(spark, SF), "simple")
-        assert "Join" not in plan
-        assert "Window" in plan
-
-    def test_range_join_is_equi_not_nested_loop(self, spark):
-        """The bucketized range join must plan as an EQUI join (hash/merge,
-        broadcastable) — never BroadcastNestedLoopJoin, which is the
-        quadratic default for raw BETWEEN theta joins."""
-        from ocrd_calamari_spark.entry_queries import q_range_join
-
-        plan = plan_of(q_range_join(spark, SF), "simple")
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert ("BroadcastHashJoin" in plan or "SortMergeJoin" in plan
-                or "ShuffledHashJoin" in plan)
-
-
 class TestPipelineOperatorPlans:
     def test_pack_sequences_big_window_is_partitioned(self, spark):
         """The corpus-side running offset must be a window PARTITIONED by
@@ -246,22 +224,6 @@ class TestPipelineOperatorPlans:
         assert "BroadcastHashJoin" in plan
 
 
-class TestSketchPlans:
-    def test_kmv_plan_has_no_unbounded_collect(self, spark):
-        """Regression pin for the bounded KMV form: the plan must carry
-        NO collect_set (the O(distinct)-per-group aggregate the round-2
-        verdict flagged) — only spillable operators (hash-distinct,
-        window rank) ahead of the final ≤k-row collect_list."""
-        from ocrd_calamari_spark.functions.sketch import kmv_distinct_estimate
-
-        df = spark.createDataFrame([(1, "a")], ["g", "v"])
-        plan = kmv_distinct_estimate(df, "g", "v", k=8)._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert "collect_set" not in plan
-        assert "collect_list" in plan
-        assert "Window" in plan
-
-
 class TestNewOperatorPlans:
     def test_jaccard_index_is_equi_joins_only(self, spark):
         """The exact Jaccard similarity join must be posting-list equi
@@ -279,12 +241,11 @@ class TestNewOperatorPlans:
         spark.catalog.clearCache()  # release the operator's posting cache
 
     def test_inverted_index_capped_bounds_posting_buffers(self, spark):
-        """Regression pin for the bounded inverted index (mirror of the
-        KMV pin at TestSketchPlans): with a finite max_df the plan must
-        gate collect_list behind the df-count pass — the df aggregation
-        itself is count-only, and the posting aggregation sits after the
-        df<=cap join, so no aggregation buffer exceeds max_df elements
-        regardless of token skew."""
+        """Regression pin for the bounded inverted index: with a finite
+        max_df the plan must gate collect_list behind the df-count pass —
+        the df aggregation itself is count-only, and the posting
+        aggregation sits after the df<=cap join, so no aggregation buffer
+        exceeds max_df elements regardless of token skew."""
         from ocrd_calamari_spark.functions.text import inverted_index
 
         df = spark.createDataFrame([(1, "a b")], ["doc_id", "text"])
@@ -320,20 +281,6 @@ class TestNewOperatorPlans:
         assert "BroadcastNestedLoopJoin" in dplan or "BroadcastExchange" in dplan
         assert "CartesianProduct" not in dplan
 
-    def test_zorder_layout_is_range_partitioned(self, spark):
-        """The layout write must be a RANGE exchange on the Morton key
-        (balanced files even under skew), with the key itself evaluated
-        JVM-side (no BatchEvalPython)."""
-        from ocrd_calamari_spark.functions.layout import zorder_layout
-
-        d = spark.read.parquet(f"{SF}/events.parquet").select(
-            "event_id", "user_id", F.hour("ts").alias("h")
-        )
-        plan = plan_of(zorder_layout(d, "user_id", "h", bits=8, n_files=8),
-                       "simple")
-        assert "rangepartitioning" in plan.lower()
-        assert "BatchEvalPython" not in plan
-
     def test_bm25_broadcasts_stats_not_corpus(self, spark):
         """df/totals are broadcast; the corpus-side tf/dl aggregates have
         map-side partial aggregation (partial_count before the exchange)."""
@@ -345,47 +292,6 @@ class TestNewOperatorPlans:
         plan = plan_of(bm25_scores(d, ["join", "filter"]), "formatted")
         assert "BroadcastHashJoin" in plan
         assert "partial_count" in plan
-
-
-class TestBucketedJoin:
-    def test_bucketed_tables_join_with_zero_exchanges(self, spark, tmp_path):
-        """Two tables written with write_bucketed_table on the same key
-        and bucket count must SortMergeJoin with NO Exchange anywhere —
-        the co-located big-big join layout (at 100 TB this removes the
-        full shuffle of both sides on every repeated key join)."""
-        from pyspark.sql import functions as F
-
-        from ocrd_calamari_spark.functions.joins import write_bucketed_table
-
-        a = spark.range(0, 5000).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("va"))
-        b = spark.range(0, 5000).select(
-            F.col("id").alias("k"), (F.col("id") * 3).alias("vb"))
-        spark.sql("DROP TABLE IF EXISTS bk_a")
-        spark.sql("DROP TABLE IF EXISTS bk_b")
-        write_bucketed_table(a, "bk_a", str(tmp_path / "a"), 8, "k",
-                             sort_by="k")
-        write_bucketed_table(b, "bk_b", str(tmp_path / "b"), 8, "k",
-                             sort_by="k")
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = spark.table("bk_a").join(spark.table("bk_b"), "k")
-            plan = plan_of(j, "simple")
-            assert "Exchange" not in plan
-            assert "SortMergeJoin" in plan
-            assert "Bucketed: true" in plan
-            assert j.count() == 5000
-            # the same data joined WITHOUT bucket metadata (plain parquet
-            # read) shuffles both sides — the negative control
-            pa = spark.read.parquet(str(tmp_path / "a"))
-            pb = spark.read.parquet(str(tmp_path / "b"))
-            nplan = plan_of(pa.join(pb, "k"), "simple")
-            assert "Exchange" in nplan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-            spark.sql("DROP TABLE IF EXISTS bk_a")
-            spark.sql("DROP TABLE IF EXISTS bk_b")
 
 
 class TestRound4NewOpPlans:
@@ -425,18 +331,6 @@ class TestRound4NewOpPlans:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert "partial_sum" in plan_of(tf_cosine_join(d, max_df=100))
-
-
-class TestShardAssignPlan:
-    def test_global_rank_window_is_partitioned(self, spark):
-        """shard_assign's global rank must ride the distributed prefix
-        sum: every big-side window carries the range-bucket partition
-        key; the only unpartitioned window is the subtotal-table prefix
-        (n_buckets rows, bounded by construction)."""
-        from ocrd_calamari_spark.entry_queries import q_shard_assign
-
-        plan = plan_of(q_shard_assign(spark, SF), "simple")
-        assert "windowspecdefinition(_bkt" in plan
 
 
 class TestContainmentJoinPlan:
@@ -568,17 +462,6 @@ class TestRound4LateOpPlans:
 
         plan = plan_of(q_char_diversity(spark, SF), "simple")
         assert "partial_count" in plan
-        assert "Join" not in plan
-        assert "Python" not in plan
-
-    def test_kmv_overlap_bottom_k_is_take_ordered(self, spark):
-        """The bottom-k union cut must plan as TakeOrdered (per-partition
-        top-k + k-row merge) over hash-flag rows — the corpora never
-        join and never globally sort; all-JVM."""
-        from ocrd_calamari_spark.entry_queries import q_corpus_overlap
-
-        plan = plan_of(q_corpus_overlap(spark, SF), "simple")
-        assert "TakeOrdered" in plan
         assert "Join" not in plan
         assert "Python" not in plan
 

@@ -6,6 +6,8 @@ fused == spec except on the pathological inputs documented below.
 ``segment()`` runs the native path whenever it loads, so the tests that
 compare ``segment`` with ``segment_spec`` check native == spec."""
 
+import os
+import platform
 import random
 import shutil
 
@@ -198,6 +200,22 @@ def test_native_loads_when_cc_present():
     if shutil.which("cc") is None:
         pytest.skip("no cc on PATH: the compiled segmenter cannot build")
     assert SEG is not None
+
+
+def test_build_removes_stale_libraries(tmp_path, monkeypatch):
+    """A fresh build deletes this machine's libraries of other source
+    hashes from its cache dir and keeps other machines' libraries."""
+    if shutil.which("cc") is None:
+        pytest.skip("no cc on PATH: the compiled segmenter cannot build")
+    monkeypatch.setattr(native, "_cache_dir", lambda: str(tmp_path))
+    stale = tmp_path / ("_segment-%s-%s.so" % ("0" * 16, platform.machine()))
+    other = tmp_path / ("_segment-%s-other-machine.so" % ("0" * 16))
+    stale.write_bytes(b"")
+    other.write_bytes(b"")
+    lib = native.build()
+    assert os.path.exists(lib)
+    assert not stale.exists()
+    assert other.exists()
 
 
 @needs_native
