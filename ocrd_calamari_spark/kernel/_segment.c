@@ -1,13 +1,24 @@
 /*
  * Compiled segmenter: the state machine of segment.py's _segment_fused in
  * one pass over a page.  Plain C with no Python.h; kernel/native.py
- * compiles it with `cc -O2 -shared -fPIC` and calls it through ctypes, and
- * segment.py builds the Block objects from the flat arrays it returns.
- * _segment_fused stays the specification: test_segment_equiv.py pins
- * native == fused == spec.
+ * compiles it (`cc -O2 -ffp-contract=off -shared -fPIC`) and calls it
+ * through ctypes.  _segment_fused stays the specification:
+ * test_segment_equiv.py pins native == fused == spec.
  *
- * Input is the page as codepoints (str.encode("utf-32-le"/"-be" by host
- * order, "surrogatepass")), so every offset here is a codepoint index that
+ * One state machine (run_machine) behind two entry points:
+ *   - ocs_segment: one page → flat block and chunk records, from which
+ *     segment.py builds Block objects (segment() and the scalar oracle);
+ *   - ocs_segment_batch: every page of an Arrow batch → one row of block
+ *     columns per kept block plus its normalized text in one codepoint
+ *     buffer, with no Python object per block (kernel/columnar.py).
+ *     test_batch_columns.py pins it to segment() plus the text half of
+ *     normalize_block, page for page.
+ * Beside them, the numeric half of normalize_block over a batch
+ * (ocs_gather, ocs_p1, and ocs_sums in numpy's exact summation order) and
+ * ocs_utf8, the batch text's UTF-8 with per-codepoint offsets.
+ *
+ * Input is codepoints (str.encode("utf-32-le"/"-be" by host order,
+ * "surrogatepass")), so every offset here is a codepoint index that
  * Python slices directly, and a lone surrogate is one codepoint like any
  * other.
  *
@@ -30,7 +41,8 @@
  * (`cap`): every token starts with "<", so tags, blocks and stack depth
  * are at most `cap` and chunks at most `cap + 1`.  Every write is checked
  * against those capacities; an overflow or a bad argument returns a
- * negative code and the caller segments the page in Python instead.
+ * negative code (per page in the batch pass) and the caller segments the
+ * page in Python instead.
  */
 #include <stdint.h>
 #include <string.h>
@@ -92,6 +104,7 @@ int ocs_tag_class(int i) { return i >= 0 && i < N_TAGS ? TAGS[i].cls : -1; }
 /* extract.py's _CTRL_RE, [\x00-\x08\x0e-\x1f], counted over the first n
  * codepoints of a page (native.py passes at most the 4,096 that
  * _looks_binary reads). */
+#define CTRL_HEAD 4096
 int32_t ocs_ctrl_count(const uint32_t *p, int32_t n) {
     int32_t k = 0;
     for (int32_t i = 0; i < n; i++)
@@ -326,25 +339,32 @@ static int32_t rawtext_close(const uint32_t *p, int32_t n, int32_t from,
     return -1;
 }
 
-/* Segment one page.  `buf` holds PER_TAG * (cap + 1) int32s, where cap
- * is the page's count of "<".  On success counts[0] is the number of out
- * block records (the blocks with visible text or a "&" chunk, in
- * document order) and counts[1] the number of out chunk records. */
-int ocs_segment(const uint32_t *p, int32_t n, int32_t cap, int32_t *buf,
-                int64_t buf_len, int32_t *counts) {
-    if (!initialized || n < 0 || cap < 0
-        || buf_len < (int64_t)PER_TAG * ((int64_t)cap + 1))
-        return OCS_EARGS;
-    int64_t c1 = (int64_t)cap + 1;
-    int32_t *out = buf;
-    int32_t *stk = out + (OUT_BLK + OUT_CHK) * c1;
-    int32_t *bstk = stk + STK * c1;
-    int32_t *blk = bstk + c1;
-    int32_t *chk = blk + BLK * c1;
+/* The state machine's tables for one page, carved from a caller's int32
+ * buffer of PER_TAG * (cap + 1) ints (cap: the page's count of "<"). */
+typedef struct {
+    int32_t *out, *stk, *bstk, *blk, *chk;
+    int64_t c1, nb, nch;
+} machine_t;
+
+static void carve(machine_t *m, int32_t *buf, int32_t cap) {
+    m->c1 = (int64_t)cap + 1;
+    m->out = buf;
+    m->stk = m->out + (OUT_BLK + OUT_CHK) * m->c1;
+    m->bstk = m->stk + STK * m->c1;
+    m->blk = m->bstk + m->c1;
+    m->chk = m->blk + BLK * m->c1;
+    m->nb = m->nch = 0;
+}
+
+/* The token loop over one page: fills m's blocks and chunks (BLK and CHK
+ * records) in document order.  OCS_ECAP when a table would overflow. */
+static int run_machine(const uint32_t *p, int32_t n, machine_t *m) {
+    int64_t c1 = m->c1;
+    int32_t *stk = m->stk, *bstk = m->bstk, *blk = m->blk, *chk = m->chk;
     int64_t sp = 0, bsp = 0, nb = 0, nch = 0;
     int64_t drop = 0, anchor = 0;
     memos_t M = {{1, 0}, {1, 0}, {1, 0}, {1, 0}, {1, 0}};
-    tok_t t;
+    tok_t t = {0};
     int32_t pos = 0;
 
     while (pos < n) {
@@ -451,38 +471,376 @@ int ocs_segment(const uint32_t *p, int32_t n, int32_t cap, int32_t *buf,
             pos = e;
         }
     }
+    m->nb = nb;
+    m->nch = nch;
+    return OCS_OK;
+}
 
-    /* Keep the blocks with visible text or a "&" chunk (Python decides
-     * those after unescaping); group their chunks by block. */
-    int64_t nb_out = 0, nc_out = 0;
-    for (int64_t b = 0; b < nb; b++) {
-        int32_t *bk = blk + BLK * b;
-        if (bk[3] == 0 && !(bk[5] & F_AMP))
-            continue;
-        int32_t *o = out + OUT_BLK * nb_out++;
-        o[0] = (int32_t)b;
-        o[1] = bk[0];
-        o[2] = bk[1];
-        o[3] = bk[2];
-        o[4] = (int32_t)nc_out;
-        o[5] = (int32_t)(nc_out + bk[6]);
-        o[6] = bk[3];
-        o[7] = bk[4];
-        o[8] = bk[5];
-        bk[7] = (int32_t)nc_out;
-        nc_out += bk[6];
+/* A block is kept when it has visible text or a "&" chunk (Python decides
+ * those after unescaping). */
+static int kept(const int32_t *bk) {
+    return bk[3] != 0 || (bk[5] & F_AMP);
+}
+
+/* Group the kept blocks' chunks by block, in document order, into `gc`
+ * (OUT_CHK ints per chunk).  Afterwards a kept block's chunks are
+ * gc[OUT_CHK * (bk[7] - bk[6]) ...] up to gc[OUT_CHK * bk[7]]. */
+static int64_t group_chunks(machine_t *m, int32_t *gc) {
+    int64_t nc = 0;
+    for (int64_t b = 0; b < m->nb; b++) {
+        int32_t *bk = m->blk + BLK * b;
+        if (kept(bk)) {
+            bk[7] = (int32_t)nc;
+            nc += bk[6];
+        }
     }
-    int32_t *oc = out + OUT_BLK * nb_out;
-    for (int64_t c = 0; c < nch; c++) {
-        int32_t *ck = chk + CHK * c, *bk = blk + BLK * (int64_t)ck[3];
-        if (bk[3] == 0 && !(bk[5] & F_AMP))
+    for (int64_t c = 0; c < m->nch; c++) {
+        int32_t *ck = m->chk + CHK * c, *bk = m->blk + BLK * (int64_t)ck[3];
+        if (!kept(bk))
             continue;
-        int32_t *o = oc + OUT_CHK * (int64_t)bk[7]++;
+        int32_t *o = gc + OUT_CHK * (int64_t)bk[7]++;
         o[0] = ck[0];
         o[1] = ck[1];
         o[2] = ck[2];
     }
+    return nc;
+}
+
+/* Segment one page.  `buf` holds PER_TAG * (cap + 1) int32s, where cap
+ * is the page's count of "<".  On success counts[0] is the number of out
+ * block records (the kept blocks, in document order) and counts[1] the
+ * number of out chunk records. */
+int ocs_segment(const uint32_t *p, int32_t n, int32_t cap, int32_t *buf,
+                int64_t buf_len, int32_t *counts) {
+    if (!initialized || n < 0 || cap < 0
+        || buf_len < (int64_t)PER_TAG * ((int64_t)cap + 1))
+        return OCS_EARGS;
+    machine_t m;
+    carve(&m, buf, cap);
+    int rc = run_machine(p, n, &m);
+    if (rc != OCS_OK)
+        return rc;
+    int64_t nb_out = 0;
+    for (int64_t b = 0; b < m.nb; b++)
+        nb_out += kept(m.blk + BLK * b);
+    int64_t nc_out = group_chunks(&m, m.out + OUT_BLK * nb_out);
+    int32_t *o = m.out;
+    for (int64_t b = 0; b < m.nb; b++) {
+        int32_t *bk = m.blk + BLK * b;
+        if (!kept(bk))
+            continue;
+        o[0] = (int32_t)b;
+        o[1] = bk[0];
+        o[2] = bk[1];
+        o[3] = bk[2];
+        o[4] = bk[7] - bk[6];
+        o[5] = bk[7];
+        o[6] = bk[3];
+        o[7] = bk[4];
+        o[8] = bk[5];
+        o += OUT_BLK;
+    }
     counts[0] = (int32_t)nb_out;
     counts[1] = (int32_t)nc_out;
     return OCS_OK;
+}
+
+/* Segment every page of an Arrow batch and write one row of block columns
+ * per kept block, in page and document order.
+ *
+ * Input: the pages' codepoints back to back in `p`, page i at
+ * [page_off[i], page_off[i + 1]), and each page's count of "<" in caps[i]
+ * (-1: leave the page to Python).  With ctrl_limit >= 0 a page whose head
+ * has more than that fraction of control chars is P_BINARY and never
+ * segmented (extract._looks_binary's test, as in Segmenter.run).  A page
+ * that `scratch` cannot hold, or that overflows a table, is P_PYTHON.
+ *
+ * Output, per kept block r (ROW ints in rows[ROW * r]): page, tag index,
+ * depth, n_tags, visible chars, link chars, ".!?" count, flags.  Its
+ * normalized text -- the chain whitespace mapped to " ", edge spaces
+ * stripped, space runs collapsed: normalize_block's text half -- is
+ * text[toff[r] : toff[r + 1] - 1]; a "\n" follows every block's text, so
+ * the whole buffer is the "\n"-join of the texts plus a final "\n".  F_SURR
+ * flags a text that holds a lone surrogate.  A block with "&" (F_AMP) gets
+ * an empty text and zero counts; its chunks go to `amp`, AMP_REC ints each
+ * (row, start, end, chunk flags; start and end are page offsets), for
+ * Python to unescape.  counts[0..2]: rows, text codepoints, amp records.
+ * An output overflow returns OCS_ECAP (the caller sized them so that none
+ * can happen). */
+enum { R_PAGE, R_TAG, R_DEPTH, R_NTAGS, R_VIS, R_LINK, R_PUNCT, R_FLAGS, ROW };
+enum { AMP_REC = 4 };
+enum { F_SURR = 8 };
+enum { P_OK = 0, P_BINARY = 1, P_PYTHON = 2 };
+
+int ocs_batch_row_ints(void) { return ROW; }
+
+int ocs_segment_batch(const uint32_t *p, const int64_t *page_off,
+                      const int32_t *caps, int32_t n_pages, double ctrl_limit,
+                      int32_t *scratch, int64_t scratch_len, int32_t *rows,
+                      int64_t *toff, int64_t rows_cap, uint32_t *text,
+                      int64_t text_cap, int32_t *amp, int64_t amp_cap,
+                      int8_t *status, int64_t *counts) {
+    if (!initialized || n_pages < 0 || rows_cap < 0)
+        return OCS_EARGS;
+    int64_t nr = 0, w = 0, na = 0;
+    toff[0] = 0;
+    for (int32_t i = 0; i < n_pages; i++) {
+        const uint32_t *pg = p + page_off[i];
+        int64_t len = page_off[i + 1] - page_off[i];
+        int32_t cap = caps[i];
+        status[i] = P_PYTHON;
+        if (len < 0)
+            return OCS_EARGS;
+        if (len > INT32_MAX)
+            continue;
+        int32_t n = (int32_t)len;
+        if (ctrl_limit >= 0 && n > 0) {
+            int32_t head = n < CTRL_HEAD ? n : CTRL_HEAD;
+            if ((double)ocs_ctrl_count(pg, head) / head > ctrl_limit) {
+                status[i] = P_BINARY;
+                continue;
+            }
+        }
+        if (cap < 0 || scratch_len < (int64_t)PER_TAG * ((int64_t)cap + 1))
+            continue;
+        machine_t m;
+        carve(&m, scratch, cap);
+        if (run_machine(pg, n, &m) != OCS_OK)
+            continue;
+        int32_t *gc = m.out;
+        group_chunks(&m, gc);
+        for (int64_t b = 0; b < m.nb; b++) {
+            int32_t *bk = m.blk + BLK * b;
+            if (!kept(bk))
+                continue;
+            if (nr >= rows_cap)
+                return OCS_ECAP;
+            int32_t *row = rows + ROW * nr;
+            int32_t *c = gc + OUT_CHK * (int64_t)(bk[7] - bk[6]);
+            int32_t *ce = gc + OUT_CHK * (int64_t)bk[7];
+            int32_t punct = 0, flags = bk[5] & F_AMP;
+            if (flags) {
+                if (na + bk[6] > amp_cap)
+                    return OCS_ECAP;
+                for (; c < ce; c += OUT_CHK) {
+                    int32_t *a = amp + AMP_REC * na++;
+                    a[0] = (int32_t)nr;
+                    a[1] = c[0];
+                    a[2] = c[1];
+                    a[3] = c[2];
+                }
+            } else {
+                int64_t need = 1;
+                for (int32_t *q = c; q < ce; q += OUT_CHK)
+                    need += q[1] - q[0];
+                if (w + need > text_cap)
+                    return OCS_ECAP;
+                int pending = 0, started = 0;
+                uint32_t surr = 0;
+                for (; c < ce; c += OUT_CHK) {
+                    for (int32_t q = c[0]; q < c[1]; q++) {
+                        uint32_t ch = pg[q];
+                        if (ch == ' ' || is_chain_ws(ch)) {
+                            pending = started;
+                            continue;
+                        }
+                        if (pending) {
+                            text[w++] = ' ';
+                            pending = 0;
+                        }
+                        text[w++] = ch;
+                        started = 1;
+                        punct += ch == '.' || ch == '!' || ch == '?';
+                        surr |= ch - 0xD800 <= 0xDFFF - 0xD800;
+                    }
+                }
+                if (surr)
+                    flags |= F_SURR;
+            }
+            if (w >= text_cap)
+                return OCS_ECAP;
+            text[w++] = '\n';
+            row[R_PAGE] = i;
+            row[R_TAG] = bk[0];
+            row[R_DEPTH] = bk[1];
+            row[R_NTAGS] = bk[2];
+            row[R_VIS] = flags & F_AMP ? 0 : bk[3];
+            row[R_LINK] = flags & F_AMP ? 0 : bk[4];
+            row[R_PUNCT] = punct;
+            row[R_FLAGS] = flags;
+            toff[++nr] = w;
+        }
+        status[i] = P_OK;
+    }
+    counts[0] = nr;
+    counts[1] = w;
+    counts[2] = na;
+    return OCS_OK;
+}
+
+/* numpy's float64 add.reduce of a contiguous array: a pairwise sum with
+ * 8-way unrolled leaves of up to 128 elements (pairwise_sum in numpy's
+ * loops_utils.h), run over blocks of the 8,192-element ufunc buffer that
+ * are added in order from 0.0.  Compiled with -ffp-contract=off, so no
+ * a * b + c becomes an FMA. */
+#define PW_BLOCKSIZE 128
+#define NPY_BUFSIZE 8192
+
+static double pairwise(const double *a, int64_t n) {
+    if (n < 8) {
+        double res = 0.;
+        for (int64_t i = 0; i < n; i++)
+            res += a[i];
+        return res;
+    }
+    if (n <= PW_BLOCKSIZE) {
+        double r[8];
+        int64_t i;
+        for (int j = 0; j < 8; j++)
+            r[j] = a[j];
+        for (i = 8; i < n - (n % 8); i += 8)
+            for (int j = 0; j < 8; j++)
+                r[j] += a[i + j];
+        double res = ((r[0] + r[1]) + (r[2] + r[3]))
+                     + ((r[4] + r[5]) + (r[6] + r[7]));
+        for (; i < n; i++)
+            res += a[i];
+        return res;
+    }
+    int64_t n2 = n / 2;
+    n2 -= n2 % 8;
+    return pairwise(a, n2) + pairwise(a + n2, n - n2);
+}
+
+/* out[k] = the sum of x[off[k]:off[k + 1]] for k < n: numpy's .sum() of
+ * that slice when `numpy_order`, else the sequential sum from 0.0 of a
+ * Python loop (`s = 0.0; for v in ...: s += v`). */
+void ocs_sums(const double *x, const int64_t *off, int64_t n, int numpy_order,
+              double *out) {
+    for (int64_t k = 0; k < n; k++) {
+        const double *a = x + off[k];
+        int64_t len = off[k + 1] - off[k];
+        double res = 0.;
+        if (numpy_order) {
+            for (int64_t i = 0; i < len; i += NPY_BUFSIZE)
+                res += pairwise(a + i, len - i < NPY_BUFSIZE ? len - i
+                                                              : NPY_BUFSIZE);
+        } else {
+            for (int64_t i = 0; i < len; i++)
+                res += a[i];
+        }
+        out[k] = res;
+    }
+}
+
+/* The spans src[lo[b] : lo[b] + len[b]] for b < n, back to back in dst. */
+void ocs_gather(const uint32_t *src, const int64_t *lo, const int64_t *len,
+                int64_t n, uint32_t *dst) {
+    for (int64_t b = 0; b < n; b++) {
+        memcpy(dst, src + lo[b], (size_t)len[b] * sizeof *dst);
+        dst += len[b];
+    }
+}
+
+/* fastpath.char_p1 per block: p1 = quantize6(clip(base[b] - lut[c], 0.5,
+ * 0.999)) for each codepoint c of block b (cps[off[b]:off[b + 1]]), with
+ * lut = fastpath._jitter_lut_05().  quantize6's floor is a truncation:
+ * x * 1e6 + 0.5 is positive and far below 2^53 here. */
+void ocs_p1(const uint32_t *cps, const int64_t *off, int64_t n,
+            const double *base, const double *lut, double *p1) {
+    for (int64_t b = 0; b < n; b++) {
+        for (int64_t i = off[b]; i < off[b + 1]; i++) {
+            double x = base[b] - lut[cps[i]];
+            x = x < 0.5 ? 0.5 : (x > 0.999 ? 0.999 : x);
+            p1[i] = (double)(int64_t)(x * 1e6 + 0.5) / 1e6;
+        }
+    }
+}
+
+/* score_readability's stopword hits of the texts of `s` (n UTF-8 bytes of
+ * the lowered texts, each followed by "\n"): per text i, the tokens
+ * between " " separators that equal a stopword of text i's profile
+ * prof[i], capped at 5.  Stopword w is words[word_off[w] .. word_off[w+1]),
+ * the words sorted by length, at most MAX_WORD bytes each; it is in
+ * profile k when bit k of word_prof[w] is set.  Returns the number of
+ * texts, or OCS_EARGS for bad words, a text past n_texts or a last text
+ * without its "\n". */
+#define MAX_WORD 32
+
+int64_t ocs_stop_hits(const uint8_t *s, int64_t n, const uint8_t *words,
+                      const int32_t *word_off, const int32_t *word_prof,
+                      int32_t n_words, const int8_t *prof, int64_t n_texts,
+                      int32_t *hits) {
+    /* by_len[L] .. by_len[L + 1]: the words of L bytes */
+    int32_t by_len[MAX_WORD + 2];
+    int32_t w = 0;
+    for (int32_t len = 0; len <= MAX_WORD + 1; len++) {
+        by_len[len] = w;
+        while (w < n_words && word_off[w + 1] - word_off[w] == len)
+            w++;
+    }
+    if (w != n_words)
+        return OCS_EARGS;
+    int64_t t = 0, tok = 0;
+    int32_t h = 0;
+    for (int64_t i = 0; i < n; i++) {
+        uint8_t c = s[i];
+        if (c != ' ' && c != '\n')
+            continue;
+        int64_t len = i - tok;
+        if (t >= n_texts)
+            return OCS_EARGS;
+        if (h < 5 && len <= MAX_WORD) {
+            for (int32_t k = by_len[len]; k < by_len[len + 1]; k++) {
+                const uint8_t *a = s + tok, *b = words + word_off[k];
+                int64_t j = 0;
+                while (j < len && a[j] == b[j])
+                    j++;
+                if (j == len && (word_prof[k] >> prof[t] & 1)) {
+                    h++;
+                    break;
+                }
+            }
+        }
+        tok = i + 1;
+        if (c == '\n') {
+            hits[t++] = h;
+            h = 0;
+        }
+    }
+    return tok == n ? t : OCS_EARGS;
+}
+
+/* UTF-8 of n codepoints into `out` (4 * n bytes), with the byte offset of
+ * each codepoint and of the end in byte_off[0..n].  Returns the byte
+ * count, OCS_EARGS for a surrogate (no UTF-8 form) and OCS_ECAP past
+ * 2 GiB (Arrow's int32 string offsets). */
+int64_t ocs_utf8(const uint32_t *cps, int64_t n, uint8_t *out,
+                 int32_t *byte_off) {
+    int64_t b = 0;
+    for (int64_t i = 0; i < n; i++) {
+        uint32_t c = cps[i];
+        if (b > INT32_MAX - 4)
+            return OCS_ECAP;
+        byte_off[i] = (int32_t)b;
+        if (c < 0x80) {
+            out[b++] = (uint8_t)c;
+        } else if (c < 0x800) {
+            out[b++] = (uint8_t)(0xC0 | c >> 6);
+            out[b++] = (uint8_t)(0x80 | (c & 0x3F));
+        } else if (c < 0x10000) {
+            if (c - 0xD800 <= 0xDFFF - 0xD800)
+                return OCS_EARGS;
+            out[b++] = (uint8_t)(0xE0 | c >> 12);
+            out[b++] = (uint8_t)(0x80 | (c >> 6 & 0x3F));
+            out[b++] = (uint8_t)(0x80 | (c & 0x3F));
+        } else {
+            out[b++] = (uint8_t)(0xF0 | c >> 18);
+            out[b++] = (uint8_t)(0x80 | (c >> 12 & 0x3F));
+            out[b++] = (uint8_t)(0x80 | (c >> 6 & 0x3F));
+            out[b++] = (uint8_t)(0x80 | (c & 0x3F));
+        }
+    }
+    byte_off[n] = (int32_t)b;
+    return b;
 }

@@ -1,45 +1,61 @@
 """Columnar span emission: one Arrow batch of pages in → Arrow batches of
 output rows out, for ``DataFrame.mapInArrow``.
 
-It computes what ``extract.extract_page`` computes, in four stages.  Per
-page: decode → segment, with the binary-payload test counted in the
-compiled segmenter's pass (``segment(..., reject_binary=True)``), down to
-the candidate blocks.  Once per input batch: the vote of every candidate
-block in one ``vote.vote_blocks`` call (numpy scores, ≡ ``vote_block``
-per block; if it raises, the pages are voted one by one with
-``vote_block``, so a failing page is one error row).  Per page: the
-accepted blocks through the text half of ``normalize_block`` (strip and
-collapse spaces).  Once per output batch, over the concatenated
-codepoints of every kept block: the numeric half of ``normalize_block``
-(the ``char_p1`` gather and quantize, block confs, then page confs,
-``_block_numbers``) and the span emission.  The scalar path builds one
-dict per span (and a list of alternative dicts per glyph) that pandas
-then converts to Arrow.  Here each level is a set of flat numpy/Arrow
-columns over the whole batch — starts, ends, ids, texts, confidences —
-and the nesting is Arrow list offsets per row, the flat
-record-plus-repetition layout of Dremel:
+It computes what ``extract.extract_page`` computes, over columns of the
+whole batch, with no Python object per block:
 
-  blocks   Python lists per block (a few dozen per page)
+  segment  per page: decode; then one ``ocs_segment_batch`` call
+           (``_segment.c`` through ``native.Segmenter.segment_batch``)
+           segments every page, counts the binary-payload test, and
+           writes one row of block columns per kept block (page, tag,
+           depth, n_tags, visible and link chars, ".!?" count, a
+           lone-surrogate flag) plus its normalized text (the text half of
+           ``normalize_block``) into one batch codepoint buffer.  A block
+           with "&" is rebuilt in Python from C's chunk records (per-chunk
+           ``html.unescape``, as ``segment._segment_native`` does), and so
+           is every page C leaves to Python (``segment.segment_python``),
+           or every page when the library does not load: each builds the
+           same columns, so everything below runs one path.
+  vote     the F4 filter as a mask, then ``vote.vote_features`` on the
+           feature columns; the stopword hits lower the batch text once
+           (``vote.stop_hits_joined``).  If the vote raises, the pages
+           are voted one by one with ``vote_block``, so a failing page is
+           one error row.
+  emit     per output batch, over the gathered codepoints of every
+           accepted block: the numeric half of ``normalize_block``
+           (``_block_numbers``: the ``char_p1`` gather and quantize, block
+           confs from ``ocs_sums`` in numpy's own summation order), page
+           confs (the sequential sum of ``extract_page``), and the spans
+           as flat Arrow columns whose nesting is list offsets per row,
+           the record-plus-repetition layout of Dremel:
+
+  blocks   offsets of the accepted blocks; texts sliced from the batch
+           UTF-8 buffer (``_utf8`` / ``_slices``), the page text their
+           "\\n"-join (``binary_join``)
   words    non-space runs of the concatenated block texts (codepoint masks)
   glyphs   non-space codepoints; ``p2 = quantize6((1-p1)*0.5)`` over the
            whole array; the alternative char looked up once per unique
            codepoint through ``extract._alt_char``
   ids      ``pc.binary_join_element_wise`` + ``utf8_lpad`` for ``%04d``
 
-``extract.extract_page`` / ``extract_batch`` remain the scalar
-specification and the single-process oracle, with ``vote_block`` and
-``normalize_block`` inside them; tests/test_columnar_equiv.py proves the
-two paths equal row for row (and the batched block confs equal
-``normalize_block``'s, test_vote_equiv.py the batched vote equal
-``vote_block``'s), the way test_fastpath_equiv.py pairs
-``textproc`` with ``fastpath``.  A page the batch stage would fail on (a
-lone surrogate in a kept block) is caught per page, so it stays one
-error row.  Like the rest of the kernel this module imports no pyspark:
-the caller passes the Arrow output schema.
+``Block``, ``vote_block``, ``normalize_block`` and ``extract.extract_page``
+/ ``extract_batch`` remain the scalar specification and the
+single-process oracle; tests/test_columnar_equiv.py proves the two paths
+equal row for row (and the batched block confs equal ``normalize_block``'s),
+test_vote_equiv.py the column vote equal ``vote_block``'s, and
+test_batch_columns.py the batch pass's columns equal ``segment()``'s
+blocks plus ``normalize_block``'s text half.  A page with a lone surrogate
+in an accepted block is one error row, with ``extract_page``'s error.
+Like the rest of the kernel this module imports no pyspark: the caller
+passes the Arrow output schema.
 """
 
 from __future__ import annotations
 
+import codecs
+import html as _html
+from itertools import groupby
+from operator import itemgetter
 from typing import Iterable, Iterator, Optional
 
 import numpy as np
@@ -52,16 +68,31 @@ from ocrd_calamari_spark.config import (
     MIN_VISIBLE_CHARS,
     ExtractConfig,
 )
+from ocrd_calamari_spark.kernel import native
 from ocrd_calamari_spark.kernel.decode import decode_html
-from ocrd_calamari_spark.kernel.extract import _alt_char
+from ocrd_calamari_spark.kernel.extract import _CTRL_FRACTION_LIMIT, _alt_char
 from ocrd_calamari_spark.kernel.fastpath import (
     _MULTISPACE_RE,
     _jitter_lut_05,
     codepoints,
     quantize6,
 )
-from ocrd_calamari_spark.kernel.segment import page_counts, segment
-from ocrd_calamari_spark.kernel.vote import vote_block, vote_blocks
+from ocrd_calamari_spark.kernel.segment import (
+    _BINARY_PAYLOAD,
+    _TAG_CLASS,
+    Block,
+    _map_ws,
+    count_pages,
+    page_counts,
+    segment_python,
+)
+from ocrd_calamari_spark.kernel.vote import (
+    profile_index,
+    stop_hits_joined,
+    tag_base,
+    vote_block,
+    vote_features,
+)
 
 # An output batch is cut once the spans (blocks + words + glyphs) emitted
 # since the last cut reach this many, so one input batch of big glyph pages
@@ -72,180 +103,321 @@ MAX_BATCH_SPANS = 1 << 21
 LINEAGE_COLS = ("_src_file", "_src_row", "_part_id")
 # accumulator names of the two entries of segment.page_counts()
 _PATH_COUNTERS = ("segment_native", "segment_fallback")
-
-
-class _Pending:
-    """Rows and spans of the pages extracted since the last cut."""
-
-    def __init__(self):
-        self.text: list = []
-        self.n_blocks: list = []
-        self.overwrote: list = []
-        self.raw_charset: list = []
-        self.error: list = []
-        # one entry per block of the ok rows, in output order
-        self.blk_text: list = []
-        self.blk_fused: list = []
-        self.blk_start: list = []
-        self.blk_no: list = []
-        self.spans = 0
-
-    def add_page(self, blocks, votes, prior_text, raw, error,
-                 cfg: ExtractConfig) -> None:
-        """Add one page from its candidate blocks and their votes (the
-        fused vote of each accepted block, None for a rejected one), or an
-        error row when ``error`` is set.  The numbers (p1 and the confs)
-        follow once per batch in ``_record_batch``.  The blocks are
-        committed only once the whole page succeeded, so an exception part
-        way through leaves an error row and no partial spans."""
-        if error is None:
-            try:
-                texts, fused_confs = [], []
-                for blk, fused in zip(blocks, votes):
-                    if fused is None:
-                        continue
-                    # the text half of normalize_block
-                    text = _MULTISPACE_RE.sub(" ", blk.raw_text.strip(" "))
-                    if text:
-                        texts.append(text)
-                        fused_confs.append(fused)
-                page = "\n".join(texts)
-                try:
-                    page.encode("utf-8")
-                except UnicodeEncodeError:
-                    # A lone surrogate (utf-7 "+2AA-" decodes to one) would
-                    # fail the batch's single codepoints call; it fails this
-                    # page alone, with the error extract_page raises on the
-                    # first such block.
-                    for text in texts:
-                        codepoints(text)
-                    raise
-            except Exception as exc:  # error row, never a task failure
-                error = _error(exc)
-        if error is not None:
-            self._row(None, None, prior_text, raw, error)
-            return
-        pos, starts = 0, []
-        for text in texts:
-            starts.append(pos)
-            pos += len(text) + 1  # "\n" separator
-        n = len(texts)
-        self._row(page, n, prior_text, raw, None)
-        self.blk_text += texts
-        self.blk_fused += fused_confs
-        self.blk_start += starts
-        self.blk_no += range(n)
-        self.spans += n
-        if cfg.textequiv_level != "block":
-            spaces = sum(t.count(" ") for t in texts)
-            chars = pos - n  # every char of every block
-            self.spans += spaces + n  # words
-            if cfg.textequiv_level == "glyph":
-                self.spans += chars - spaces
-
-    def _row(self, text, n_blocks, prior_text, raw, error) -> None:
-        self.text.append(text)
-        self.n_blocks.append(n_blocks)
-        self.overwrote.append(bool(prior_text))
-        self.raw_charset.append(raw)
-        self.error.append(error)
+# the block columns of one input batch: the ``ocs_segment_batch`` row
+# columns, then each text's span [lo, hi) in the batch codepoint buffer and
+# the index of the "\n"-terminated piece of that buffer that holds it
+_COLS = native.ROW_COLS + ("lo", "hi", "piece")
 
 
 def _error(exc: Exception) -> str:
     return f"{type(exc).__name__}: {exc}"
 
 
-def _candidates(html) -> tuple:
-    """Decode and segment one page: (raw_charset, the blocks the vote sees,
-    error), the blocks None on an error row."""
-    raw = False
+def _decode(html) -> tuple:
+    """(decoded page or None, raw_charset, error) of one payload."""
     try:
         if html is None:
             raise ValueError("null html payload")
         decoded, raw = decode_html(bytes(html))
-        blocks = [b for b in segment(decoded, reject_binary=True)
-                  if b.visible_len() >= MIN_VISIBLE_CHARS]  # the F4 filter
     except Exception as exc:  # error row, never a task failure
-        return raw, None, _error(exc)
-    return raw, blocks, None
+        return None, False, _error(exc)
+    return decoded, raw, None
 
 
-def _vote_pages(pages: list, langs: list, voter: str, errors: list) -> list:
-    """The vote of every candidate block of an input batch, in one
-    ``vote_blocks`` call: per page, the fused vote of each block or None
-    for a rejected one.  If that call raises, the pages are voted one by
-    one with ``vote_block``, and a page that raises gets its error in
-    ``errors``."""
-    flat, flat_lang, sizes = [], [], []
-    for blocks, lang in zip(pages, langs):
-        k = len(blocks) if blocks else 0
-        flat += blocks or ()
-        flat_lang += [lang] * k
-        sizes.append(k)
+def _values(column: pa.Array) -> list:
+    """The Python values of a string or binary column (None for null),
+    without a pyarrow Scalar per value as ``to_pylist`` makes."""
+    return column.to_numpy(zero_copy_only=False).tolist()
+
+
+def _as_str(cps: np.ndarray) -> str:
+    return codecs.decode(memoryview(cps), native._CODEC, "surrogatepass")
+
+
+def _has_surrogate(text: str) -> bool:
     try:
-        accept, fused = vote_blocks(flat, flat_lang, ENSEMBLE, voter,
-                                    ACCEPT_THRESHOLD)
-    except Exception:
-        out = []
-        for i, (blocks, lang) in enumerate(zip(pages, langs)):
-            try:
-                votes = [vote_block(b, lang, ENSEMBLE, voter, ACCEPT_THRESHOLD)
-                         for b in blocks or ()]
-            except Exception as exc:
-                errors[i] = _error(exc)
-                votes = []
-            out.append([f if a else None for a, f in votes])
-        return out
-    votes = [f if a else None for a, f in zip(accept, fused)]
-    out, at = [], 0
-    for k in sizes:
-        out.append(votes[at:at + k])
-        at += k
+        text.encode("utf-8")
+    except UnicodeEncodeError:
+        return True
+    return False
+
+
+class _Texts:
+    """Block texts built in Python (blocks with "&", pages left to
+    Python), appended to the batch codepoint buffer as more
+    "\\n"-terminated pieces."""
+
+    def __init__(self, base_len: int, base_pieces: int):
+        self.texts: list = []
+        self.base_pieces = base_pieces
+        self.at = base_len
+
+    def add(self, raw_text: str) -> tuple:
+        """The text half of ``normalize_block`` of ``raw_text``: (lo, hi,
+        piece, ".!?" count, flags) of the normalized text."""
+        text = _MULTISPACE_RE.sub(" ", raw_text.strip(" "))
+        lo = self.at
+        self.at += len(text) + 1
+        self.texts.append(text)
+        piece = self.base_pieces + len(self.texts) - 1
+        punct = text.count(".") + text.count("!") + text.count("?")
+        flags = native.F_SURR if _has_surrogate(text) else 0
+        return lo, lo + len(text), piece, punct, flags
+
+    def pieces(self) -> int:
+        return self.base_pieces + len(self.texts)
+
+    def codepoints(self) -> np.ndarray:
+        if not self.texts:
+            return np.empty(0, np.uint32)
+        data = ("\n".join(self.texts) + "\n").encode(native._CODEC,
+                                                     "surrogatepass")
+        return np.frombuffer(data, np.uint32)
+
+
+def _rebuild_amp(cols: dict, amp: np.ndarray, pages: list, texts: _Texts,
+                 errors: list) -> None:
+    """Fill in the rows of the blocks with "&" from their chunk records:
+    per chunk the ``html.unescape`` and the whitespace replace chain of
+    ``segment._segment_native``, then the visible and link chars of the
+    result.  A block that unescapes to no visible char keeps vis 0, so the
+    F4 mask drops it as ``segment()`` does."""
+    for r, recs in groupby(amp.tolist(), key=itemgetter(0)):
+        i = int(cols["page"][r])
+        if errors[i] is not None:
+            continue
+        page = pages[i]
+        try:
+            chunks, link = [], 0
+            for _, start, end, flags in recs:
+                data = page[start:end]
+                if flags & native.F_AMP:
+                    data = _html.unescape(data)
+                text = _map_ws(data)
+                chunks.append(text)
+                if flags & native.F_ANCHOR:
+                    link += len(text.replace(" ", ""))
+            raw = "".join(chunks)
+            vis = len(raw) - raw.count(" ")
+            (cols["lo"][r], cols["hi"][r], cols["piece"][r],
+             cols["punct"][r], surr) = texts.add(raw)
+        except Exception as exc:  # error row, never a task failure
+            errors[i] = _error(exc)
+            continue
+        cols["vis"][r], cols["link"][r] = vis, link
+        cols["flags"][r] |= surr
+
+
+def _python_rows(pages: list, todo: list, tag_id: dict, texts: _Texts,
+                 errors: list) -> dict:
+    """The block columns of the pages in ``todo``, segmented in Python
+    (``segment_python``, binary test included)."""
+    rows = []
+    for i in todo:
+        try:
+            blocks = segment_python(pages[i], reject_binary=True)
+        except Exception as exc:  # error row, never a task failure
+            errors[i] = _error(exc)
+            continue
+        for b in blocks:
+            lo, hi, piece, punct, flags = texts.add(b.raw_text)
+            rows.append((i, tag_id[b.tag], b.depth, b.n_tags, b.visible_len(),
+                         b.n_link_chars, punct, flags, lo, hi, piece))
+    out = np.array(rows, np.int64).reshape(len(rows), len(_COLS))
+    return dict(zip(_COLS, out.T))
+
+
+def _segment_batch(pages: list, errors: list):
+    """Block columns of every page of a batch: (columns, codepoint buffer,
+    its number of "\\n"-terminated pieces, tag names).  ``pages`` holds
+    the decoded pages, None where ``errors`` has the page's error already;
+    a page whose segmenting fails gets its error there."""
+    n = len(pages)
+    text = np.empty(0, np.uint32)
+    status = np.full(n, native.P_PYTHON, np.int8)
+    cols = {k: np.empty(0, np.int64) for k in _COLS}
+    amp = np.empty((0, native.AMP_REC), np.int32)
+    seg = native.load()
+    tags = seg.tags if seg is not None else tuple(_TAG_CLASS)
+    if seg is not None:
+        try:
+            res = seg.segment_batch([p or "" for p in pages],
+                                    _CTRL_FRACTION_LIMIT)
+        except MemoryError:
+            res = None
+        if res is not None:
+            rows, toff, text, amp, status = res
+            cols = {k: rows[:, j].astype(np.int64)
+                    for j, k in enumerate(native.ROW_COLS)}
+            cols["lo"], cols["hi"] = toff[:-1], toff[1:] - 1
+            cols["piece"] = np.arange(len(rows), dtype=np.int64)
+    texts = _Texts(len(text), len(cols["page"]))
+    if len(amp):
+        _rebuild_amp(cols, amp, pages, texts, errors)
+    native_pages = 0
+    todo = []
+    for i in range(n):
+        if errors[i] is not None:
+            continue
+        if status[i] == native.P_OK:
+            native_pages += 1
+        elif status[i] == native.P_BINARY:
+            errors[i] = _error(ValueError(_BINARY_PAYLOAD))
+        else:
+            todo.append(i)
+    count_pages(native_pages, 0)
+    if todo:
+        more = _python_rows(pages, todo, {t: k for k, t in enumerate(tags)},
+                            texts, errors)
+        cols = {k: np.concatenate([cols[k], more[k]]) for k in _COLS}
+        order = np.argsort(cols["page"], kind="stable")
+        cols = {k: v[order] for k, v in cols.items()}
+    if texts.texts:
+        text = np.concatenate([text, texts.codepoints()])
+    return cols, text, texts.pieces(), tags
+
+
+def _blocks_at(cols: dict, cps: np.ndarray, tags, rows) -> list:
+    """``Block`` objects of some rows, for ``vote_block``: the normalized
+    text stands in for the raw text, which gives the same vote (the scorers
+    read the visible count, the ".!?" count and the " "-split tokens, and
+    only spaces differ)."""
+    out = []
+    for r in rows:
+        text = _as_str(cps[cols["lo"][r]:cols["hi"][r]])
+        out.append(Block(pos=0, tag=tags[cols["tag"][r]],
+                         depth=int(cols["depth"][r]), chunks=[text],
+                         n_link_chars=int(cols["link"][r]),
+                         n_tags=int(cols["n_tags"][r]), _raw=text,
+                         _vis=int(cols["vis"][r])))
     return out
 
 
+def _vote(cols: dict, cps: np.ndarray, n_pieces: int, tags, langs: list,
+          voter: str, errors: list) -> tuple[np.ndarray, np.ndarray]:
+    """The F4 filter and the vote of every candidate block of an input
+    batch in one ``vote_features`` call: (rows of the accepted blocks,
+    their fused votes).  If that call raises, the pages are voted one by
+    one with ``vote_block``, and a page that raises gets its error in
+    ``errors``."""
+    ok_page = np.array([e is None for e in errors], dtype=bool)
+    page = cols["page"]
+    cand = np.flatnonzero((cols["vis"] >= max(MIN_VISIBLE_CHARS, 1))
+                          & ok_page[page])
+
+    def revote(i):
+        blk, = _blocks_at(cols, cps, tags, [cand[i]])
+        return vote_block(blk, langs[page[cand[i]]], ENSEMBLE, voter,
+                          ACCEPT_THRESHOLD)
+
+    try:
+        f = {"vis": cols["vis"][cand], "n_tags": cols["n_tags"][cand],
+             "n_link": cols["link"][cand], "depth": cols["depth"][cand],
+             "base": tag_base(tags)[cols["tag"][cand]],
+             "n_punct": cols["punct"][cand]}
+        f = {k: v.astype(np.float64) for k, v in f.items()}
+        if "readability" in ENSEMBLE:
+            f["hits"] = np.zeros(len(cand))
+            if len(cand):
+                # the whole buffer lowered once; a piece no row holds
+                # (the placeholder of a block with "&") is empty
+                prof = np.zeros(n_pieces, np.int64)
+                prof[cols["piece"]] = profile_index(langs)[page]
+                hits = stop_hits_joined(_as_str(cps), prof)
+                f["hits"] = hits[cols["piece"][cand]].astype(np.float64)
+        accept, fused = vote_features(f, ENSEMBLE, voter, ACCEPT_THRESHOLD,
+                                      revote)
+    except Exception:
+        accept = np.zeros(len(cand), dtype=bool)
+        fused = np.zeros(len(cand))
+        at = 0
+        for p, group in groupby(page[cand].tolist()):
+            k = len(list(group))
+            try:
+                votes = [vote_block(b, langs[p], ENSEMBLE, voter,
+                                    ACCEPT_THRESHOLD)
+                         for b in _blocks_at(cols, cps, tags, cand[at:at + k])]
+            except Exception as exc:
+                errors[p] = _error(exc)
+                votes = [(False, 0.0)] * k
+            accept[at:at + k] = [a for a, _ in votes]
+            fused[at:at + k] = [v for _, v in votes]
+            at += k
+    return cand[accept], fused[accept]
+
+
+def _surrogate_errors(cols: dict, cps: np.ndarray, acc: np.ndarray,
+                      errors: list) -> None:
+    """A lone surrogate (utf-7 "+2AA-" decodes to one) in an accepted
+    block fails its page alone, with the error ``extract_page`` raises on
+    the first such block (``normalize_block``'s ``codepoints``)."""
+    flagged = acc[(cols["flags"][acc] & native.F_SURR) != 0]
+    for p in np.unique(cols["page"][flagged]).tolist():
+        if errors[p] is not None:
+            continue
+        for r in acc[cols["page"][acc] == p].tolist():
+            try:
+                codepoints(_as_str(cps[cols["lo"][r]:cols["hi"][r]]))
+            except Exception as exc:
+                errors[p] = _error(exc)
+                break
+
+
 def _block_numbers(cps: np.ndarray, blk_off: np.ndarray,
-                   blk_fused: list) -> tuple[np.ndarray, list]:
+                   blk_fused) -> tuple[np.ndarray, list]:
     """The numeric half of ``normalize_block`` for every block of a batch.
 
     ``cps``: the codepoints of the block texts back to back; block b is
     ``cps[blk_off[b]:blk_off[b + 1]]`` with fused vote ``blk_fused[b]``.
     Returns p1 per codepoint and each block's conf.
 
-    p1 is ``char_p1``'s gather, clip and quantize, in place, over
-    ``np.repeat`` of each block's Python float ``0.70 + 0.30 * fused``.
-    Each block's conf is ``normalize_block``'s own expression over its
-    slice: the sum is numpy's pairwise ``.sum()``, which no sequential
-    form reproduces at a quantize6 half boundary.
+    p1 is ``char_p1``'s gather, clip and quantize over each block's
+    ``0.70 + 0.30 * fused``.  Each block's conf is ``normalize_block``'s
+    expression over its slice: the sum is numpy's pairwise ``.sum()``,
+    which no sequential form reproduces at a quantize6 half boundary.
+    Both run in C (``ocs_p1``, ``ocs_sums`` in numpy's order), or in numpy
+    when the library does not load.
     """
-    p1 = _jitter_lut_05()[cps]
-    base = np.array([0.70 + 0.30 * f for f in blk_fused], dtype=np.float64)
-    np.subtract(np.repeat(base, np.diff(blk_off)), p1, out=p1)
-    np.clip(p1, 0.5, 0.999, out=p1)
-    np.multiply(p1, 1e6, out=p1)
-    np.add(p1, 0.5, out=p1)
-    np.floor(p1, out=p1)
-    np.divide(p1, 1e6, out=p1)
-    off = blk_off.tolist()
-    conf = [float(quantize6(np.float64(p1[lo:hi].sum()) / (hi - lo)))
-            for lo, hi in zip(off, off[1:])]
-    return p1, conf
+    base = 0.70 + 0.30 * np.asarray(blk_fused, dtype=np.float64)
+    lens = np.diff(blk_off)
+    seg = native.load()
+    if seg is not None:
+        p1 = seg.p1(cps, blk_off, base, _jitter_lut_05())
+        sums = seg.sums(p1, blk_off, True)
+    else:
+        p1 = _jitter_lut_05()[cps]
+        np.subtract(np.repeat(base, lens), p1, out=p1)
+        np.clip(p1, 0.5, 0.999, out=p1)
+        np.multiply(p1, 1e6, out=p1)
+        np.add(p1, 0.5, out=p1)
+        np.floor(p1, out=p1)
+        np.divide(p1, 1e6, out=p1)
+        off = blk_off.tolist()
+        sums = np.array([p1[lo:hi].sum() for lo, hi in zip(off, off[1:])],
+                        dtype=np.float64)
+    return p1, quantize6(sums / lens).tolist()
 
 
 def _page_confs(blk_conf: list, n_blocks: list) -> list:
     """``extract_page``'s row conf: quantize6 of the mean block conf, summed
     block by block in page order (None for an error row)."""
-    out, at = [], 0
-    for n in n_blocks:
-        if not n:
-            out.append(None if n is None else 0.0)
-            continue
-        conf_sum = 0.0
-        for c in blk_conf[at:at + n]:
-            conf_sum += c
-        at += n
-        out.append(quantize6(conf_sum / n))
-    return out
+    n = np.array([k or 0 for k in n_blocks], dtype=np.int64)
+    off = np.zeros(len(n) + 1, dtype=np.int64)
+    np.cumsum(n, out=off[1:])
+    conf = np.asarray(blk_conf, dtype=np.float64)
+    seg = native.load()
+    if seg is not None:
+        sums = seg.sums(conf, off, False)
+    else:
+        sums = np.zeros(len(n))
+        for k, (lo, hi) in enumerate(zip(off.tolist(), off[1:].tolist())):
+            s = 0.0
+            for c in blk_conf[lo:hi]:
+                s += c
+            sums[k] = s
+    mean = quantize6(np.divide(sums, n, out=np.zeros(len(n)), where=n > 0))
+    return [None if k is None else (m if k else 0.0)
+            for k, m in zip(n_blocks, mean.tolist())]
 
 
 def _ids(prefix, sep: str, nums: np.ndarray) -> pa.Array:
@@ -267,22 +439,41 @@ def _lists(per_row: np.ndarray, values: pa.Array, list_type, null) -> pa.Array:
                                     mask=null)
 
 
-def _utf8(big: str, cps: np.ndarray) -> tuple[pa.Buffer, np.ndarray]:
-    """``big`` as utf-8 bytes plus the byte offset of each codepoint (and
-    of the end), for string arrays that slice it without copying."""
+def _utf8(cps: np.ndarray) -> tuple[pa.Buffer, np.ndarray]:
+    """The UTF-8 bytes of ``cps`` plus the byte offset of each codepoint
+    (and of the end), for string arrays that slice it without copying."""
+    seg = native.load()
+    if seg is not None:
+        data, byte_off = seg.utf8(cps)
+        return pa.py_buffer(data), byte_off
     nbytes = (1 + (cps >= 0x80).astype(np.int64) + (cps >= 0x800)
               + (cps >= 0x10000))
     byte_off = np.zeros(len(cps) + 1, dtype=np.int64)
     np.cumsum(nbytes, out=byte_off[1:])
     if byte_off[-1] >= 1 << 31:
         raise OverflowError("span text of one output batch exceeds 2 GiB")
-    return pa.py_buffer(big.encode("utf-8")), byte_off.astype(np.int32)
+    return (pa.py_buffer(_as_str(cps).encode("utf-8")),
+            byte_off.astype(np.int32))
 
 
 def _slices(data: pa.Buffer, offsets: np.ndarray) -> pa.StringArray:
     """String i = data[offsets[i]:offsets[i+1]]."""
     return pa.StringArray.from_buffers(len(offsets) - 1,
                                        pa.py_buffer(offsets), data)
+
+
+def _gather(cps: np.ndarray, lo: np.ndarray,
+            lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The spans ``cps[lo[b]:lo[b] + lens[b]]`` back to back, and their
+    offsets in the result."""
+    off = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    seg = native.load()
+    if seg is not None:
+        return seg.gather(cps, lo, lens), off
+    idx = np.repeat(lo - off[:-1], lens)
+    idx += np.arange(off[-1])
+    return cps[idx], off
 
 
 def _alts(cps: np.ndarray, chars: pa.Array, p1: np.ndarray, cutoff: float,
@@ -317,27 +508,37 @@ def _alts(cps: np.ndarray, chars: pa.Array, p1: np.ndarray, cutoff: float,
     )
 
 
-def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
-                  url: pa.Array, lineage: list) -> pa.RecordBatch:
-    n_rows = len(p.text)
-    null = pa.array([e is not None for e in p.error], pa.bool_())
-    n_blk = np.array([k or 0 for k in p.n_blocks], dtype=np.int64)
-    blk_row = np.repeat(np.arange(n_rows), n_blk)
-    blk_len = np.fromiter(map(len, p.blk_text), np.int64, len(p.blk_text))
-    blk_off = np.zeros(len(blk_len) + 1, dtype=np.int64)
-    np.cumsum(blk_len, out=blk_off[1:])
+def _record_batch(rows: dict, blk_row: np.ndarray, blk_lo: np.ndarray,
+                  blk_len: np.ndarray, blk_fused: np.ndarray,
+                  batch_cps: np.ndarray, level: str, cutoff: float,
+                  schema: pa.Schema, url: pa.Array,
+                  lineage: list) -> pa.RecordBatch:
+    """One output batch: ``rows`` holds per row its error, n_blocks,
+    overwrote and raw_charset; block b (in row order) belongs to row
+    ``blk_row[b]`` and its text is ``batch_cps[blk_lo[b]:][:blk_len[b]]``."""
+    n_rows = len(rows["error"])
+    null = pa.array([e is not None for e in rows["error"]], pa.bool_())
+    n_blk = np.array([k or 0 for k in rows["n_blocks"]], dtype=np.int64)
     # flat codepoints of all block texts, back to back (no separator)
-    big = "".join(p.blk_text)
-    cps = codepoints(big)
-    p1, blk_conf = _block_numbers(cps, blk_off, p.blk_fused)
-    blk_start = np.array(p.blk_start, dtype=np.int32)
-    blk_id = _ids("blk", "", np.array(p.blk_no, dtype=np.int64))
+    cps, blk_off = _gather(batch_cps, blk_lo, blk_len)
+    p1, blk_conf = _block_numbers(cps, blk_off, blk_fused)
+    # a block's doc offset: the chars and "\n" separators of the blocks
+    # before it in its row
+    row_first = np.zeros(n_rows + 1, dtype=np.int64)
+    np.cumsum(n_blk, out=row_first[1:])
+    blk_first = row_first[blk_row]
+    blk_no = np.arange(len(blk_len)) - blk_first
+    blk_start = (blk_off[:-1] - blk_off[blk_first] + blk_no).astype(np.int32)
+    blk_id = _ids("blk", "", blk_no)
+    data, byte_off = _utf8(cps)
+    blk_text = _slices(data, byte_off[blk_off])
     t_blocks = schema.field("blocks").type
     t_words = schema.field("words").type
     t_glyphs = schema.field("glyphs").type
     blocks = _struct(
-        [blk_id, pa.array(blk_start), pa.array(blk_start + blk_len.astype(np.int32)),
-         pa.array(p.blk_text, pa.string()), pa.array(blk_conf, pa.float64())],
+        [blk_id, pa.array(blk_start),
+         pa.array(blk_start + blk_len.astype(np.int32)), blk_text,
+         pa.array(blk_conf, pa.float64())],
         t_blocks,
     )
     n_word = np.zeros(n_rows, dtype=np.int64)
@@ -345,7 +546,7 @@ def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
     words = pa.array([], t_words.value_type)
     glyphs = pa.array([], t_glyphs.value_type)
 
-    if level != "block" and p.blk_text:
+    if level != "block" and len(blk_len):
         # block text is single-space separated with no edge spaces, so a
         # word is a maximal non-space run inside one block
         solid = cps != 32
@@ -357,9 +558,8 @@ def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
         we = np.flatnonzero(solid & (last | np.r_[~solid[1:], True])) + 1
         w_blk = np.searchsorted(blk_off, ws, side="right") - 1
         w_no = np.arange(len(ws)) - np.searchsorted(ws, blk_off[:-1])[w_blk]
-        w_at = blk_start[w_blk] - blk_off[w_blk]  # big index → doc offset
-        data, byte_off = _utf8(big, cps)
-        # words and the gaps between them tile big[ws[0]:we[-1]]; keep
+        w_at = blk_start[w_blk] - blk_off[w_blk]  # cps index → doc offset
+        # words and the gaps between them tile cps[ws[0]:we[-1]]; keep
         # the words (even slots)
         bounds = np.empty(2 * len(ws), dtype=np.int64)
         bounds[0::2], bounds[1::2] = ws, we
@@ -392,15 +592,16 @@ def _record_batch(p: _Pending, level: str, cutoff: float, schema: pa.Schema,
 
     columns = {
         "url": url,
-        "text": pa.array(p.text, pa.string()),
-        "conf": pa.array(_page_confs(blk_conf, p.n_blocks), pa.float64()),
-        "n_blocks": pa.array(p.n_blocks, pa.int32()),
+        "text": pc.binary_join(_lists(n_blk, blk_text, pa.list_(pa.string()),
+                                      null), "\n"),
+        "conf": pa.array(_page_confs(blk_conf, rows["n_blocks"]), pa.float64()),
+        "n_blocks": pa.array(rows["n_blocks"], pa.int32()),
         "blocks": _lists(n_blk, blocks, t_blocks, null),
         "words": _lists(n_word, words, t_words, null),
         "glyphs": _lists(n_glyph, glyphs, t_glyphs, null),
-        "overwrote": pa.array(p.overwrote, pa.bool_()),
-        "raw_charset": pa.array(p.raw_charset, pa.bool_()),
-        "error": pa.array(p.error, pa.string()),
+        "overwrote": pa.array(rows["overwrote"], pa.bool_()),
+        "raw_charset": pa.array(rows["raw_charset"], pa.bool_()),
+        "error": pa.array(rows["error"], pa.string()),
     }
     columns.update(zip(LINEAGE_COLS, lineage))
     arrays = []
@@ -423,28 +624,53 @@ def extract_arrow(batch: pa.RecordBatch, cfg: ExtractConfig,
     n = batch.num_rows
     if n == 0:
         return
-    prior = batch.column("text").to_pylist()
-    lang = batch.column("lang").to_pylist()
-    raw, pages, errors = map(list, zip(*map(_candidates,
-                                            batch.column("html").to_pylist())))
-    votes = _vote_pages(pages, lang, cfg.voter, errors)
+    overwrote = [bool(t) for t in _values(batch.column("text"))]
+    langs = _values(batch.column("lang"))
+    pages, raw, errors = map(list, zip(*map(_decode,
+                                            _values(batch.column("html")))))
+    cols, cps, n_pieces, tags = _segment_batch(pages, errors)
+    pages = None  # the columns and cps hold what is still needed
+    acc, fused = _vote(cols, cps, n_pieces, tags, langs, cfg.voter, errors)
+    _surrogate_errors(cols, cps, acc, errors)
+    ok_page = np.array([e is None for e in errors], dtype=bool)
+    keep = ok_page[cols["page"][acc]]
+    acc, fused = acc[keep], fused[keep]
+    blk_page = cols["page"][acc]
+    blk_lo = cols["lo"][acc]
+    blk_len = cols["hi"][acc] - blk_lo
+    n_blocks = np.bincount(blk_page, minlength=n)
+    # spans per page: blocks, words (one more than the spaces of a block)
+    # and glyphs (its non-space chars, ``vis``)
+    vis = cols["vis"][acc]
+    spans = n_blocks.copy()
+    if cfg.textequiv_level != "block":
+        spans += np.bincount(blk_page, blk_len - vis + 1, n).astype(np.int64)
+        if cfg.textequiv_level == "glyph":
+            spans += np.bincount(blk_page, vis, n).astype(np.int64)
+    n_blocks = [k if ok else None
+                for k, ok in zip(n_blocks.tolist(), ok_page.tolist())]
     lo = 0
-    pending = _Pending()
-    for i in range(n):
-        pending.add_page(pages[i], votes[i], prior[i], raw[i], errors[i], cfg)
-        pages[i] = None  # its blocks are no longer needed
-        if pending.spans >= MAX_BATCH_SPANS or i == n - 1:
+    pending = 0
+    for i, s in enumerate(spans.tolist()):
+        pending += s
+        if pending >= MAX_BATCH_SPANS or i == n - 1:
             rows = i + 1 - lo
+            b0, b1 = np.searchsorted(blk_page, [lo, i + 1]).tolist()
             lineage = [
                 batch.column(c).slice(lo, rows) if c in names
                 else pa.nulls(rows, schema.field(c).type)
                 for c in LINEAGE_COLS
             ]
-            yield _record_batch(pending, cfg.textequiv_level,
-                                cfg.glyph_conf_cutoff, schema,
-                                batch.column("url").slice(lo, rows), lineage)
+            yield _record_batch(
+                {"error": errors[lo:i + 1], "n_blocks": n_blocks[lo:i + 1],
+                 "overwrote": overwrote[lo:i + 1],
+                 "raw_charset": raw[lo:i + 1]},
+                blk_page[b0:b1] - lo, blk_lo[b0:b1], blk_len[b0:b1],
+                fused[b0:b1], cps, cfg.textequiv_level,
+                cfg.glyph_conf_cutoff, schema,
+                batch.column("url").slice(lo, rows), lineage)
             lo = i + 1
-            pending = _Pending()
+            pending = 0
 
 
 def arrow_map_fn(cfg: ExtractConfig, schema: pa.Schema,

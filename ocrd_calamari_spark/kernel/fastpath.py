@@ -11,8 +11,9 @@ for positions *generated by this kernel*:
   2. glyph_conf_cutoff < 0.5 <= p1, so the primary never gets filtered.
 
 Under those invariants X1/X2/X3 (drop leading/trailing/double spaces on
-positions) reduce to index-mask operations over the raw codepoint array,
-and text assembly is a slice — no per-char Python.
+positions) reduce to string operations on the block text (strip the edge
+spaces, collapse space runs), and text assembly is a slice — no per-char
+Python.
 
 tests/test_fastpath_equiv.py proves scalar/vectorized equivalence
 property-style on randomized blocks.
@@ -26,7 +27,6 @@ import numpy as np
 
 _JITTER_MOD = 997
 _JITTER_MULT = 2654435761
-_SPACE = 32  # ord(' ')
 
 
 def codepoints(s: str) -> np.ndarray:
@@ -97,30 +97,6 @@ def char_p1(cps: np.ndarray, fused: float) -> np.ndarray:
     return p1
 
 
-def normalize_indices(cps: np.ndarray) -> np.ndarray:
-    """Indices of positions kept by X1→X2→X3 (reference order,
-    recognize.py:275-279), given that top-1 char == raw char.
-
-    X1/X2: trim leading/trailing spaces.  X3: inside the trimmed range,
-    drop a space whose predecessor (in the trimmed sequence) is a space.
-    """
-    n = len(cps)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    space = cps == _SPACE
-    nonspace_idx = np.nonzero(~space)[0]
-    if len(nonspace_idx) == 0:
-        return np.empty(0, dtype=np.int64)
-    lo, hi = nonspace_idx[0], nonspace_idx[-1] + 1  # X1 + X2
-    sp = space[lo:hi]
-    # X3: drop space preceded by space (within the trimmed run)
-    prev_sp = np.empty_like(sp)
-    prev_sp[0] = False
-    prev_sp[1:] = sp[:-1]
-    keep = ~(sp & prev_sp)
-    return (np.nonzero(keep)[0] + lo).astype(np.int64)
-
-
 import re as _re
 
 _MULTISPACE_RE = _re.compile("  +")
@@ -142,8 +118,7 @@ def normalize_block(raw_text: str, fused: float):
     through utf-32 to get the text back; the round-4 A/B measured the
     string-op form at a 1.31× median kernel-level rate (7 interleaved
     pairs, 1.13-1.42 spread on a bus-noisy box — BENCH.md).
-    normalize_indices above remains the array-level spec, arbitrated by
-    test_fastpath_equiv.py against scalar textproc either way.
+    test_fastpath_equiv.py arbitrates it against scalar textproc.
     """
     text = _MULTISPACE_RE.sub(" ", raw_text.strip(" "))
     if not text:

@@ -1,10 +1,14 @@
 """Loader of the compiled segmenter (``kernel/_segment.c``) through ctypes.
 
-``load()`` compiles ``_segment.c`` once per source hash with
-``cc -O2 -shared -fPIC`` and returns a ``Segmenter``, or None when there
-is no compiler or the build or the load fails; ``segment.segment`` then
-runs the fused Python loop instead.  The library is cached as
-``_segment-<hash>-<machine>.so``: in ``kernel/__pycache__/`` when the
+``load()`` compiles ``_segment.c`` once per hash of its source and of
+the compiler flags (``CFLAGS``: ``cc -O2 -ffp-contract=off -shared
+-fPIC``; ``-ffp-contract=off`` keeps the block-conf sums free of FMA
+contraction on targets that have it, so they stay bit-exact) and returns
+a ``Segmenter``, or None when there is no compiler or the build or the
+load fails; the kernel then runs its Python paths instead
+(``segment._segment_fused``, and numpy for the sums and the UTF-8).  The
+library is cached as ``_segment-<hash>-<machine>.so``: in
+``kernel/__pycache__/`` when the
 package is a writable directory, else (inside a ``--py-files`` zip, or a
 read-only install) in a per-user directory under ``tempfile.gettempdir()``.
 The build writes a unique temporary name and ``os.replace``s it, so
@@ -13,9 +17,9 @@ machine's libraries of earlier sources from that directory.  The first
 run after a source change pays one compile; ``pipeline.extract_df`` calls
 ``load()`` on the driver so that local workers find a warm cache.
 
-The C side never writes past the buffer this module sizes from the page
-(the count of ``"<"`` bounds tags, blocks, stack depth and chunks); any
-error code from it sends the page to the Python segmenter.
+The C side never writes past the buffers this module sizes from the
+pages (the count of ``"<"`` bounds tags, blocks, stack depth and chunks);
+an error code for a page sends that page to the Python segmenter.
 """
 
 from __future__ import annotations
@@ -33,7 +37,11 @@ import tempfile
 import threading
 import warnings
 
+import numpy as np
+
 _SOURCE = "_segment.c"
+# part of the library's cache key: a change here builds a new library
+CFLAGS = ("-O2", "-ffp-contract=off", "-shared", "-fPIC")
 _CODEC = "utf-32-le" if sys.byteorder == "little" else "utf-32-be"
 # pages whose buffer would exceed this many int32s (128 MB; about 1.2 M
 # "<") are left to the Python segmenter
@@ -43,6 +51,14 @@ _KEEP_INTS = 1 << 16
 _MAX_LEN = (1 << 31) - 1
 OUT_BLK, OUT_CHK = 9, 3  # int32s per out block / chunk record (_segment.c)
 F_ANCHOR, F_AMP, F_WS = 1, 2, 4  # chunk and block flags (_segment.c)
+F_SURR = 8  # a batch row whose text holds a lone surrogate (_segment.c)
+# ocs_segment_batch's row columns (its R_* order), amp record width and
+# page statuses
+ROW_COLS = ("page", "tag", "depth", "n_tags", "vis", "link", "punct",
+            "flags")
+ROW = len(ROW_COLS)
+AMP_REC = 4
+P_OK, P_BINARY, P_PYTHON = 0, 1, 2
 # the head of a page whose control chars ocs_ctrl_count counts: the
 # 4,096 codepoints extract._looks_binary reads
 CTRL_HEAD = 4096
@@ -74,6 +90,23 @@ class Segmenter:
         lib.ocs_ctrl_count.argtypes = (ctypes.c_char_p, ctypes.c_int32)
         lib.ocs_ctrl_count.restype = ctypes.c_int32
         self._ctrl = lib.ocs_ctrl_count
+        ptr, i32, i64 = ctypes.c_void_p, ctypes.c_int32, ctypes.c_int64
+        for name, restype, argtypes in (
+                ("ocs_segment_batch", ctypes.c_int,
+                 (ctypes.c_char_p, ptr, ptr, i32, ctypes.c_double, ptr, i64,
+                  ptr, ptr, i64, ptr, i64, ptr, i64, ptr, ptr)),
+                ("ocs_batch_row_ints", ctypes.c_int, ()),
+                ("ocs_gather", None, (ptr, ptr, ptr, i64, ptr)),
+                ("ocs_p1", None, (ptr, ptr, i64, ptr, ptr, ptr)),
+                ("ocs_sums", None, (ptr, ptr, i64, ctypes.c_int, ptr)),
+                ("ocs_stop_hits", i64, (ctypes.c_char_p, i64, ctypes.c_char_p,
+                                        ptr, ptr, i32, ptr, i64, ptr)),
+                ("ocs_utf8", i64, (ptr, i64, ptr, ptr))):
+            getattr(lib, name).restype = restype
+            getattr(lib, name).argtypes = argtypes
+        if lib.ocs_batch_row_ints() != ROW:
+            raise ValueError("_segment.c batch row layout differs")
+        self._lib = lib
         if lib.ocs_init() != 0:
             raise ValueError("_segment.c rejected its own tag table")
         table = [(lib.ocs_tag_name(i).decode(), lib.ocs_tag_class(i))
@@ -120,6 +153,124 @@ class Segmenter:
         nb = OUT_BLK * counts[0]
         return buf[:nb], buf[nb:nb + OUT_CHK * counts[1]]
 
+    def segment_batch(self, pages: list, ctrl_limit: float | None = None):
+        """Segment every page of ``pages`` in one call (``ocs_segment_batch``).
+
+        Returns (rows, toff, text, amp, status) as numpy arrays: ``rows``
+        (k, ROW) int32 block columns, ``toff`` (k + 1) int64 text offsets,
+        ``text`` the "\\n"-terminated normalized texts as uint32
+        codepoints, ``amp`` (m, AMP_REC) int32 chunk records of the blocks
+        with "&", and ``status`` one P_* per page; or None when the call
+        fails as a whole.  ``ctrl_limit`` is ``run``'s binary-payload
+        test.  The buffers are sized from the batch: k is at most the
+        count of "<", the text at most the codepoints plus k."""
+        n = len(pages)
+        lens = np.fromiter(map(len, pages), np.int64, n)
+        caps = np.fromiter((p.count("<") for p in pages), np.int64, n)
+        per_page = self._per_tag * (caps + 1)
+        caps[(per_page > _MAX_INTS) | (lens > _MAX_LEN)] = -1
+        ok = caps >= 0
+        rows_cap = int(caps[ok].sum())
+        page_off = np.zeros(n + 1, np.int64)
+        np.cumsum(lens, out=page_off[1:])
+        data = "".join(pages).encode(_CODEC, "surrogatepass")
+        try:
+            scratch = np.empty(int(per_page[ok].max()) if ok.any() else 0,
+                               np.int32)
+            rows = np.empty((rows_cap, ROW), np.int32)
+            toff = np.empty(rows_cap + 1, np.int64)
+            text = np.empty(int(page_off[-1]) + rows_cap, np.uint32)
+            amp = np.empty((rows_cap + int(ok.sum()), AMP_REC), np.int32)
+        except MemoryError:
+            return None
+        caps32 = caps.astype(np.int32)
+        status = np.empty(n, np.int8)
+        counts = np.zeros(3, np.int64)
+        rc = self._lib.ocs_segment_batch(
+            data, page_off.ctypes.data, caps32.ctypes.data, n,
+            -1.0 if ctrl_limit is None else ctrl_limit,
+            scratch.ctypes.data, len(scratch), rows.ctypes.data,
+            toff.ctypes.data, rows_cap, text.ctypes.data, len(text),
+            amp.ctypes.data, len(amp), status.ctypes.data, counts.ctypes.data)
+        if rc != 0:
+            return None
+        k, used, m = counts.tolist()
+        return rows[:k], toff[:k + 1], text[:used], amp[:m], status
+
+    def sums(self, x: np.ndarray, off: np.ndarray,
+             numpy_order: bool) -> np.ndarray:
+        """``out[k] = sum(x[off[k]:off[k + 1]])`` (``ocs_sums``): numpy's
+        ``.sum()`` of each slice bit for bit when ``numpy_order``, else a
+        Python loop's sequential sum from 0.0."""
+        x = np.ascontiguousarray(x, np.float64)
+        off = np.ascontiguousarray(off, np.int64)
+        out = np.empty(max(len(off) - 1, 0), np.float64)
+        self._lib.ocs_sums(x.ctypes.data, off.ctypes.data, len(out),
+                           numpy_order, out.ctypes.data)
+        return out
+
+    def gather(self, src: np.ndarray, lo: np.ndarray,
+               lens: np.ndarray) -> np.ndarray:
+        """The spans ``src[lo[b]:lo[b] + lens[b]]`` back to back."""
+        lo = np.ascontiguousarray(lo, np.int64)
+        lens = np.ascontiguousarray(lens, np.int64)
+        if len(lo) and (lo.min() < 0 or (lo + lens).max() > len(src)
+                        or lens.min() < 0):
+            raise IndexError("span outside the buffer")
+        src = np.ascontiguousarray(src, np.uint32)
+        out = np.empty(int(lens.sum()), np.uint32)
+        self._lib.ocs_gather(src.ctypes.data, lo.ctypes.data,
+                             lens.ctypes.data, len(lo), out.ctypes.data)
+        return out
+
+    def p1(self, cps: np.ndarray, off: np.ndarray, base: np.ndarray,
+           lut: np.ndarray) -> np.ndarray:
+        """``fastpath.char_p1`` of each block ``cps[off[b]:off[b + 1]]``
+        with ``fused`` given as ``base[b] = 0.70 + 0.30 * fused``, and
+        ``lut = fastpath._jitter_lut_05()``."""
+        cps = np.ascontiguousarray(cps, np.uint32)
+        off = np.ascontiguousarray(off, np.int64)
+        base = np.ascontiguousarray(base, np.float64)
+        if len(cps) and int(cps.max()) >= len(lut):
+            raise IndexError("codepoint outside the jitter table")
+        out = np.empty(len(cps), np.float64)
+        self._lib.ocs_p1(cps.ctypes.data, off.ctypes.data, len(off) - 1,
+                         base.ctypes.data, lut.ctypes.data, out.ctypes.data)
+        return out
+
+    def stop_hits(self, low: bytes, prof: np.ndarray, words: list,
+                  word_prof: list) -> np.ndarray:
+        """``ocs_stop_hits``: the stopword hits (capped at 5) of each text
+        of ``low``, the UTF-8 of the lowered texts each followed by "\\n";
+        ``prof[i]`` is text i's profile, ``words`` the stopwords as bytes
+        and ``word_prof[w]`` the bit mask of the profiles holding word w."""
+        word_off = np.zeros(len(words) + 1, np.int32)
+        np.cumsum([len(w) for w in words], out=word_off[1:])
+        word_prof = np.asarray(word_prof, np.int32)
+        prof = np.ascontiguousarray(prof, np.int8)
+        hits = np.zeros(len(prof), np.int32)
+        got = self._lib.ocs_stop_hits(
+            low, len(low), b"".join(words), word_off.ctypes.data,
+            word_prof.ctypes.data, len(words), prof.ctypes.data, len(prof),
+            hits.ctypes.data)
+        if got != len(prof):
+            raise ValueError("text count differs from the profiles given")
+        return hits
+
+    def utf8(self, cps: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """The UTF-8 bytes of ``cps`` and the byte offset of each codepoint
+        and of the end (int32); OverflowError past 2 GiB."""
+        cps = np.ascontiguousarray(cps, np.uint32)
+        out = np.empty(4 * len(cps), np.uint8)
+        byte_off = np.empty(len(cps) + 1, np.int32)
+        n = self._lib.ocs_utf8(cps.ctypes.data, len(cps), out.ctypes.data,
+                               byte_off.ctypes.data)
+        if n == -2:
+            raise OverflowError("span text of one output batch exceeds 2 GiB")
+        if n < 0:
+            raise ValueError("a lone surrogate has no UTF-8 form")
+        return out[:n], byte_off
+
 
 def _cache_dir() -> str | None:
     here = os.path.dirname(os.path.abspath(__file__))
@@ -146,7 +297,8 @@ def build() -> str:
     src = pkgutil.get_data(__package__, _SOURCE)
     if src is None:
         raise OSError(f"the package loader cannot read {_SOURCE}")
-    digest = hashlib.sha256(src).hexdigest()[:16]
+    digest = hashlib.sha256(src + "\0".join(("",) + CFLAGS).encode()
+                            ).hexdigest()[:16]
     cache = _cache_dir()
     if cache is None:
         raise OSError("no private cache directory for the segmenter")
@@ -162,7 +314,7 @@ def build() -> str:
     fd, so_path = tempfile.mkstemp(suffix=".so", dir=cache)
     os.close(fd)
     try:
-        subprocess.run([cc, "-O2", "-shared", "-fPIC", "-o", so_path, c_path],
+        subprocess.run([cc, *CFLAGS, "-o", so_path, c_path],
                        check=True, capture_output=True, timeout=120)
         os.replace(so_path, lib)
     finally:

@@ -19,7 +19,10 @@ test_segment_equiv.py: ``segment_spec`` on the stdlib ``html.parser``
 (tolerant of malformed markup; poisoned payloads that still defeat it
 surface as error rows upstream), ``_segment_fused``, a regex token loop
 with the spec's handlers inlined, and the compiled ``_segment.c`` (loaded
-by ``native.py``), which ``segment()`` runs whenever it loads.
+by ``native.py``), which ``segment()`` runs whenever it loads.  The same
+state machine also runs once per Arrow batch for ``kernel/columnar.py``
+(``native.Segmenter.segment_batch``), which takes ``segment_python`` for
+the pages C leaves to Python and ``count_pages`` for the page counters.
 """
 
 from __future__ import annotations
@@ -375,36 +378,51 @@ def page_counts() -> tuple[int, int]:
         return _PAGE_COUNTS[0], _PAGE_COUNTS[1]
 
 
+def count_pages(native: int, fallback: int) -> None:
+    """Add pages segmented outside ``segment()`` (the batch pass of
+    ``kernel/columnar.py``) to ``page_counts()``."""
+    with _COUNTS_LOCK:
+        _PAGE_COUNTS[0] += native
+        _PAGE_COUNTS[1] += fallback
+
+
 def segment(html_text: str, reject_binary: bool = False) -> list[Block]:
     """Parse html → candidate blocks in document order (may be empty).
 
     The compiled segmenter when it loads and accepts the page; else (no
     compiler, a failed build or load, or a page C or its buffer cannot
-    take) the fused regex tokenizer+segmenter, with the HTMLParser spec as
-    the fallback on scan errors.
+    take) ``segment_python``.
 
     ``reject_binary``: a binary payload raises extract_page's ValueError
     before it is segmented.  The compiled segmenter counts the control
     chars in the codepoint buffer it segments; the Python path calls
     ``extract._looks_binary``."""
     seg = _native.load()
-    if reject_binary:
-        # the test is extract_page's, and extract imports this module
-        from ocrd_calamari_spark.kernel import extract
     if seg is not None:
+        if reject_binary:
+            # the test is extract_page's, and extract imports this module
+            from ocrd_calamari_spark.kernel import extract
         blocks = _segment_native(
             seg, html_text,
             extract._CTRL_FRACTION_LIMIT if reject_binary else None)
         if blocks is _native.BINARY:
             raise ValueError(_BINARY_PAYLOAD)
         if blocks is not None:
-            with _COUNTS_LOCK:
-                _PAGE_COUNTS[0] += 1
+            count_pages(1, 0)
             return blocks
-    if reject_binary and extract._looks_binary(html_text):
-        raise ValueError(_BINARY_PAYLOAD)
-    with _COUNTS_LOCK:
-        _PAGE_COUNTS[1] += 1
+    return segment_python(html_text, reject_binary)
+
+
+def segment_python(html_text: str, reject_binary: bool = False) -> list[Block]:
+    """``segment()`` without the compiled segmenter: the fused regex
+    tokenizer+segmenter, with the HTMLParser spec as the fallback on scan
+    errors; counted as a fallback page."""
+    if reject_binary:
+        from ocrd_calamari_spark.kernel import extract
+
+        if extract._looks_binary(html_text):
+            raise ValueError(_BINARY_PAYLOAD)
+    count_pages(0, 1)
     try:
         return _segment_fused(html_text)
     except Exception:

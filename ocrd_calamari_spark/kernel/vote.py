@@ -12,9 +12,12 @@ functions of block features — determinism under retries/speculative
 execution is a correctness requirement (SURVEY.md §7.3).
 
 ``vote_block`` is the specification: one block, three scorer calls and
-``fuse_votes``.  ``vote_blocks`` is the same vote over a whole batch of
-blocks, with the scores and the voters on numpy arrays;
-tests/test_vote_equiv.py pins it equal to ``vote_block`` block for block.
+``fuse_votes``.  ``vote_features`` is the same vote over the feature
+columns of a whole batch of blocks, with the scores and the voters on
+numpy arrays (``kernel/columnar.py`` calls it on the batch pass's
+columns); ``vote_blocks`` gathers those features from ``Block`` objects,
+and tests/test_vote_equiv.py pins it equal to ``vote_block`` block for
+block.
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from ocrd_calamari_spark.kernel import native
 from ocrd_calamari_spark.kernel.segment import Block
 
 # Minimal stopword profiles; lang hint selects the profile — the analogue of
@@ -197,42 +201,74 @@ _BATCHED = {"density": _density, "link_density": _link_density,
             "readability": _readability}
 
 
+def profile_index(langs) -> np.ndarray:
+    """The stopword profile of each lang, as an index into ``STOPWORDS``
+    (a lang without a profile reads ``_DEFAULT_PROFILE``'s)."""
+    names = list(STOPWORDS)
+    col = {lang: names.index(lang if lang in STOPWORDS else _DEFAULT_PROFILE)
+           for lang in set(langs)}
+    return np.array([col[lang] for lang in langs], dtype=np.int64)
+
+
 def _stop_hits(texts: list, langs) -> np.ndarray:
     """score_readability's stopword hits per text, capped at 5.
 
     The texts are lowered in one call: "\\n" joins them, never occurs in
     a ``raw_text`` (the whitespace replace chain maps it) and ends the
     final-sigma context of ``str.lower``, so each piece is that text's
-    own ``lower()``.  Arrow then splits the pieces at " " and looks each
-    token up once in the union of the profiles; a token counts when the
-    profile of its block's lang holds it.  Tokens compare as UTF-8 bytes
-    (``surrogatepass``), which is ``str`` equality."""
+    own ``lower()``."""
     joined = "\n".join(texts)
     if joined.count("\n") == len(texts) - 1:
-        data = pa.array([joined.lower().encode("utf-8", "surrogatepass")],
-                        pa.binary())
-        low = pc.split_pattern(data, b"\n").flatten()
-    else:  # a text holds "\n" (segment() never makes one)
-        low = pa.array([t.lower().encode("utf-8", "surrogatepass")
-                        for t in texts], pa.binary())
+        return stop_hits_joined(joined + "\n", profile_index(langs))
+    # a text holds "\n" (segment() never makes one)
+    low = pa.array([t.lower().encode("utf-8", "surrogatepass")
+                    for t in texts], pa.binary())
+    return _lowered_hits(low, profile_index(langs))
+
+
+def stop_hits_joined(joined: str, prof: np.ndarray) -> np.ndarray:
+    """``_stop_hits`` of the texts of ``joined``, each followed by "\\n"
+    and holding none, with ``prof[i]`` the profile index of text i."""
+    low = joined.lower().encode("utf-8", "surrogatepass")
+    seg = native.load()
+    if seg is not None:
+        return seg.stop_hits(low, prof, _WORD_BYTES, _WORD_PROFILES)
+    low = pc.split_pattern(pa.array([low], pa.binary()), b"\n").flatten()
+    return _lowered_hits(low.slice(0, len(low) - 1), prof)
+
+
+def _lowered_hits(low: pa.Array, prof: np.ndarray) -> np.ndarray:
+    """Arrow splits each lowered text at " " and looks each token up once
+    in the union of the profiles; a token counts when the profile of its
+    text holds it.  Tokens compare as UTF-8 bytes (``surrogatepass``),
+    which is ``str`` equality."""
     tokens = pc.split_pattern(low, b" ")
-    tok_blk = np.repeat(np.arange(len(texts)),
+    tok_blk = np.repeat(np.arange(len(low)),
                         np.diff(tokens.offsets.to_numpy()))
-    # member[w, k]: word w is in profile k; each block's profile as k
-    names = list(STOPWORDS)
-    words = sorted(set().union(*STOPWORDS.values()) - {""})
-    member = np.array([[w in STOPWORDS[k] for k in names] for w in words],
-                      dtype=bool).reshape(len(words), len(names))
-    col = {lang: names.index(lang if lang in STOPWORDS else _DEFAULT_PROFILE)
-           for lang in set(langs)}
-    at = pc.index_in(tokens.flatten(), value_set=pa.array(
-        [w.encode("utf-8", "surrogatepass") for w in words], pa.binary()))
+    at = pc.index_in(tokens.flatten(), value_set=_STOP_WORDS)
     at = at.fill_null(-1).to_numpy()
     found = at >= 0
     tok_blk = tok_blk[found]
-    prof = np.array([col[lang] for lang in langs], dtype=np.int64)
-    hit = member[at[found], prof[tok_blk]]
-    return np.minimum(np.bincount(tok_blk[hit], minlength=len(texts)), 5)
+    hit = _STOP_MEMBER[at[found], prof[tok_blk]]
+    return np.minimum(np.bincount(tok_blk[hit], minlength=len(low)), 5)
+
+
+# the union of the profiles as UTF-8, sorted by length as ocs_stop_hits
+# takes them; _STOP_MEMBER[w, k]: word w is in profile k of STOPWORDS, and
+# _WORD_PROFILES[w] the same as a bit mask
+_WORDS = sorted(set().union(*STOPWORDS.values()) - {""},
+                key=lambda w: (len(w.encode("utf-8")), w))
+_WORD_BYTES = [w.encode("utf-8") for w in _WORDS]
+_STOP_WORDS = pa.array(_WORD_BYTES, pa.binary())
+_STOP_MEMBER = np.array([[w in p for p in STOPWORDS.values()]
+                         for w in _WORDS], dtype=bool)
+_WORD_PROFILES = [sum(1 << k for k, on in enumerate(row) if on)
+                  for row in _STOP_MEMBER.tolist()]
+
+
+def tag_base(tags) -> np.ndarray:
+    """score_readability's tag prior of each tag name."""
+    return np.array([_TAG_BASE.get(t, 0.50) for t in tags], dtype=np.float64)
 
 
 def vote_blocks(blocks: list, langs, extractor_names, voter: str,
@@ -241,13 +277,8 @@ def vote_blocks(blocks: list, langs, extractor_names, voter: str,
     block), equal to ``[vote_block(b, lang, ...)]`` element for element.
 
     ``langs`` holds one lang per block.  The features are gathered once
-    per block, the stopword hits once per call (``_stop_hits``).  The
-    scores and the voters run on float64 arrays in the scalar code's
-    operation order, so each IEEE + - * / gives the bits the Python
-    floats give, and each ``round(·, 6)`` is ``round6``.  A block with a
-    value in round6's tie band (or, for the confidence voter, a mean
-    within ``_THRESHOLD_BAND`` of the threshold) is voted again by
-    ``vote_block``, so the result is exact by construction."""
+    per block, the stopword hits once per call (``_stop_hits``), and
+    ``vote_features`` votes on them."""
     n = len(blocks)
     if n == 0:
         return [], []
@@ -267,6 +298,30 @@ def vote_blocks(blocks: list, langs, extractor_names, voter: str,
     }
     if "readability" in extractor_names:
         f["hits"] = _stop_hits(texts, langs).astype(np.float64)
+
+    def revote(i):
+        return vote_block(blocks[i], langs[i], extractor_names, voter,
+                          threshold)
+
+    accept, fused = vote_features(f, extractor_names, voter, threshold, revote)
+    return accept.tolist(), fused.tolist()
+
+
+def vote_features(f: dict, extractor_names, voter: str, threshold: float,
+                  revote) -> tuple[np.ndarray, np.ndarray]:
+    """The vote of n blocks from their feature columns: (accept, fused) as
+    bool and float64 arrays, equal to ``vote_block`` block for block.
+
+    ``f`` holds float64 arrays "vis", "n_tags", "n_link", "depth",
+    "base" (the tag prior), "n_punct" and, when "readability" votes,
+    "hits" (``_stop_hits``).  The scores and the voters run on float64
+    arrays in the scalar code's operation order, so each IEEE + - * /
+    gives the bits the Python floats give, and each ``round(·, 6)`` is
+    ``round6``.  A block with a value in round6's tie band (or, for the
+    confidence voter, a mean within ``_THRESHOLD_BAND`` of the threshold)
+    is voted again by ``revote(i)`` → ``vote_block``'s (accept, fused),
+    so the result is exact by construction."""
+    n = len(f["vis"])
     redo = np.zeros(n, dtype=bool)
     scores = []
     for name in extractor_names:
@@ -275,7 +330,7 @@ def vote_blocks(blocks: list, langs, extractor_names, voter: str,
         redo |= tie
     k = len(scores)
     if k == 0:
-        return [False] * n, [0.0] * n
+        return np.zeros(n, dtype=bool), np.zeros(n)
     total = np.zeros(n)
     if voter == "sequence_voter":
         ayes = [s >= threshold for s in scores]
@@ -294,8 +349,6 @@ def vote_blocks(blocks: list, langs, extractor_names, voter: str,
         fused, tie = round6(mean)
         redo |= np.abs(mean - threshold) < _THRESHOLD_BAND
     redo |= tie
-    accept, fused = accept.tolist(), fused.tolist()
     for i in np.flatnonzero(redo).tolist():
-        accept[i], fused[i] = vote_block(blocks[i], langs[i], extractor_names,
-                                         voter, threshold)
+        accept[i], fused[i] = revote(i)
     return accept, fused

@@ -29,6 +29,8 @@ Scale features (BASELINE.json north_rule):
 
 from __future__ import annotations
 
+import collections
+import dataclasses
 import json
 import os
 import sys
@@ -448,6 +450,7 @@ def run_extraction(
     import shutil
 
     cfg = cfg or ExtractConfig()
+    config = dataclasses.asdict(cfg)
     manifest = Manifest(out_dir)
     done = manifest.completed()
     # resume sanity: a manifest written under a different bucketing would
@@ -495,6 +498,14 @@ def run_extraction(
             raise ValueError(
                 f"resume mismatch: manifest written from source "
                 f"{rec_src!r}, run requested {source!r}"
+            )
+        # the rows of a resume at another level, voter or cutoff would sit
+        # beside the completed chunks' rows with complete=True at the end
+        rec_cfg = rec.get("config")
+        if rec_cfg is not None and rec_cfg != config:
+            raise ValueError(
+                f"resume mismatch: manifest written with config {rec_cfg!r}, "
+                f"run requested {config!r}"
             )
         window = {"since": _w(since), "until": _w(until)}
         for key, want in window.items():
@@ -607,6 +618,7 @@ def run_extraction(
                 "since": _w(since),
                 "until": _w(until),
                 "snapshot_id": snapshot_id,
+                "config": config,
                 "rows": chunk_rows,
                 "failed": sum(r["failed"] or 0 for r in per_file),
                 "overwrote": sum(r["overwrote"] or 0 for r in per_file),
@@ -646,7 +658,13 @@ def validate_output(spark: SparkSession, out_dir: str) -> dict:
     parquet count() is footer metadata, no row data is read).
 
     Returns {"chunks", "rows", "mismatches": {chunk_id: (manifest,
-    actual)}, "missing": [chunk_id...], "orphans": [chunk_id...], "ok"}.
+    actual)}, "missing": [chunk_id...], "orphans": [chunk_id...],
+    "config_mismatches": [chunk_id...], "ok"}.
+
+    ``config_mismatches``: chunks whose recorded ``ExtractConfig`` differs
+    from the one most chunks hold (ties: the lowest chunk id's) — rows made
+    at another level, voter or cutoff.  Records without a config (written
+    before it was recorded) are not compared.
 
     ``orphans``: chunk dirs on disk with NO manifest record — the exact
     artifact a crash between parquet write and manifest commit leaves
@@ -686,13 +704,21 @@ def validate_output(spark: SparkSession, out_dir: str) -> dict:
         total += actual
         if actual != rec["rows"]:
             mismatches[cid] = (rec["rows"], actual)
+    configs = {cid: json.dumps(rec["config"], sort_keys=True)
+               for cid, rec in sorted(recs.items()) if "config" in rec}
+    # Counter keeps first-seen order, so max() breaks a tie by chunk id
+    counts = collections.Counter(configs.values())
+    usual = max(counts, key=counts.get) if counts else None
+    config_mismatches = [cid for cid, c in configs.items() if c != usual]
     return {
         "chunks": len(recs),
         "rows": total,
         "mismatches": mismatches,
         "missing": missing,
         "orphans": orphans,
-        "ok": not mismatches and not missing and not orphans,
+        "config_mismatches": config_mismatches,
+        "ok": (not mismatches and not missing and not orphans
+               and not config_mismatches),
     }
 
 

@@ -10,7 +10,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ocrd_calamari_spark.config import ExtractConfig
-from ocrd_calamari_spark.kernel import columnar, extract, vote
+from ocrd_calamari_spark.kernel import columnar, extract
 from ocrd_calamari_spark.kernel.extract import extract_page
 from ocrd_calamari_spark.schema import FLAT_OUTPUT_SCHEMA
 
@@ -132,10 +132,10 @@ def test_exception_mid_page_becomes_error_row(pages, level):
     """A page whose k-th block raises inside the kernel becomes an error
     row; the blocks, words and glyphs built for its first k-1 blocks are
     rolled back and the other rows are untouched.  The fault is injected
-    into the batched vote's per-block step (``vote._n_punct``), so the
-    batch's ``vote_blocks`` call raises and the pages are voted one by
-    one, and into ``vote_block``, which that per-page vote and the
-    scalar path call per block."""
+    into the column vote (``columnar.vote_features``, which raises when
+    the batch holds a faulty block), so the pages are voted one by one,
+    and into ``vote_block``, which that per-page vote and the scalar path
+    call per block."""
     payloads = [
         ("<html><body><article>" + "".join(
             f"<p>{_PARA}{' BOOM' if boom else ''}</p>" for boom in page
@@ -146,7 +146,7 @@ def test_exception_mid_page_becomes_error_row(pages, level):
     clean = run_arrow(payloads, cfg)
 
     real = columnar.vote_block
-    real_punct = vote._n_punct
+    real_features = columnar.vote_features
     batched = []
 
     def exploding(blk, *args):
@@ -154,15 +154,15 @@ def test_exception_mid_page_becomes_error_row(pages, level):
             raise RuntimeError("boom")
         return real(blk, *args)
 
-    def exploding_punct(text):
-        batched.append(text)
-        if "BOOM" in text:
+    def exploding_features(f, *args):
+        batched.append(len(f["vis"]))
+        if any(map(any, pages)):
             raise RuntimeError("boom")
-        return real_punct(text)
+        return real_features(f, *args)
 
     mp = pytest.MonkeyPatch()
     try:
-        mp.setattr(vote, "_n_punct", exploding_punct)
+        mp.setattr(columnar, "vote_features", exploding_features)
         mp.setattr(columnar, "vote_block", exploding)
         mp.setattr(extract, "vote_block", exploding)
         rows = run_arrow(payloads, cfg)
