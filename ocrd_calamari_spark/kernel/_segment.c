@@ -13,9 +13,8 @@
  *     buffer, with no Python object per block (kernel/columnar.py).
  *     test_batch_columns.py pins it to segment() plus the text half of
  *     normalize_block, page for page.
- * Beside them, the numeric half of normalize_block over a batch
- * (ocs_gather, ocs_p1, and ocs_sums in numpy's exact summation order) and
- * ocs_utf8, the batch text's UTF-8 with per-codepoint offsets.
+ * Beside them, ocs_sums: the block confs of normalize_block over a batch,
+ * summed in numpy's exact summation order.
  *
  * Input is codepoints (str.encode("utf-32-le"/"-be" by host order,
  * "surrogatepass")), so every offset here is a codepoint index that
@@ -550,9 +549,9 @@ int ocs_segment(const uint32_t *p, int32_t n, int32_t cap, int32_t *buf,
  *
  * Input: the pages' codepoints back to back in `p`, page i at
  * [page_off[i], page_off[i + 1]), and each page's count of "<" in caps[i]
- * (-1: leave the page to Python).  With ctrl_limit >= 0 a page whose head
- * has more than that fraction of control chars is P_BINARY and never
- * segmented (extract._looks_binary's test, as in Segmenter.run).  A page
+ * (-1: leave the page to Python).  A page whose head has more than the
+ * fraction ctrl_limit of control chars is P_BINARY and never segmented
+ * (extract._looks_binary's test, as in Segmenter.run).  A page
  * that `scratch` cannot hold, or that overflows a table, is P_PYTHON.
  *
  * Output, per kept block r (ROW ints in rows[ROW * r]): page, tag index,
@@ -594,7 +593,7 @@ int ocs_segment_batch(const uint32_t *p, const int64_t *page_off,
         if (len > INT32_MAX)
             continue;
         int32_t n = (int32_t)len;
-        if (ctrl_limit >= 0 && n > 0) {
+        if (n > 0) {
             int32_t head = n < CTRL_HEAD ? n : CTRL_HEAD;
             if ((double)ocs_ctrl_count(pg, head) / head > ctrl_limit) {
                 status[i] = P_BINARY;
@@ -712,135 +711,15 @@ static double pairwise(const double *a, int64_t n) {
     return pairwise(a, n2) + pairwise(a + n2, n - n2);
 }
 
-/* out[k] = the sum of x[off[k]:off[k + 1]] for k < n: numpy's .sum() of
- * that slice when `numpy_order`, else the sequential sum from 0.0 of a
- * Python loop (`s = 0.0; for v in ...: s += v`). */
-void ocs_sums(const double *x, const int64_t *off, int64_t n, int numpy_order,
-              double *out) {
+/* out[k] = numpy's .sum() of x[off[k]:off[k + 1]] for k < n. */
+void ocs_sums(const double *x, const int64_t *off, int64_t n, double *out) {
     for (int64_t k = 0; k < n; k++) {
         const double *a = x + off[k];
         int64_t len = off[k + 1] - off[k];
         double res = 0.;
-        if (numpy_order) {
-            for (int64_t i = 0; i < len; i += NPY_BUFSIZE)
-                res += pairwise(a + i, len - i < NPY_BUFSIZE ? len - i
-                                                              : NPY_BUFSIZE);
-        } else {
-            for (int64_t i = 0; i < len; i++)
-                res += a[i];
-        }
+        for (int64_t i = 0; i < len; i += NPY_BUFSIZE)
+            res += pairwise(a + i, len - i < NPY_BUFSIZE ? len - i
+                                                          : NPY_BUFSIZE);
         out[k] = res;
     }
-}
-
-/* The spans src[lo[b] : lo[b] + len[b]] for b < n, back to back in dst. */
-void ocs_gather(const uint32_t *src, const int64_t *lo, const int64_t *len,
-                int64_t n, uint32_t *dst) {
-    for (int64_t b = 0; b < n; b++) {
-        memcpy(dst, src + lo[b], (size_t)len[b] * sizeof *dst);
-        dst += len[b];
-    }
-}
-
-/* fastpath.char_p1 per block: p1 = quantize6(clip(base[b] - lut[c], 0.5,
- * 0.999)) for each codepoint c of block b (cps[off[b]:off[b + 1]]), with
- * lut = fastpath._jitter_lut_05().  quantize6's floor is a truncation:
- * x * 1e6 + 0.5 is positive and far below 2^53 here. */
-void ocs_p1(const uint32_t *cps, const int64_t *off, int64_t n,
-            const double *base, const double *lut, double *p1) {
-    for (int64_t b = 0; b < n; b++) {
-        for (int64_t i = off[b]; i < off[b + 1]; i++) {
-            double x = base[b] - lut[cps[i]];
-            x = x < 0.5 ? 0.5 : (x > 0.999 ? 0.999 : x);
-            p1[i] = (double)(int64_t)(x * 1e6 + 0.5) / 1e6;
-        }
-    }
-}
-
-/* score_readability's stopword hits of the texts of `s` (n UTF-8 bytes of
- * the lowered texts, each followed by "\n"): per text i, the tokens
- * between " " separators that equal a stopword of text i's profile
- * prof[i], capped at 5.  Stopword w is words[word_off[w] .. word_off[w+1]),
- * the words sorted by length, at most MAX_WORD bytes each; it is in
- * profile k when bit k of word_prof[w] is set.  Returns the number of
- * texts, or OCS_EARGS for bad words, a text past n_texts or a last text
- * without its "\n". */
-#define MAX_WORD 32
-
-int64_t ocs_stop_hits(const uint8_t *s, int64_t n, const uint8_t *words,
-                      const int32_t *word_off, const int32_t *word_prof,
-                      int32_t n_words, const int8_t *prof, int64_t n_texts,
-                      int32_t *hits) {
-    /* by_len[L] .. by_len[L + 1]: the words of L bytes */
-    int32_t by_len[MAX_WORD + 2];
-    int32_t w = 0;
-    for (int32_t len = 0; len <= MAX_WORD + 1; len++) {
-        by_len[len] = w;
-        while (w < n_words && word_off[w + 1] - word_off[w] == len)
-            w++;
-    }
-    if (w != n_words)
-        return OCS_EARGS;
-    int64_t t = 0, tok = 0;
-    int32_t h = 0;
-    for (int64_t i = 0; i < n; i++) {
-        uint8_t c = s[i];
-        if (c != ' ' && c != '\n')
-            continue;
-        int64_t len = i - tok;
-        if (t >= n_texts)
-            return OCS_EARGS;
-        if (h < 5 && len <= MAX_WORD) {
-            for (int32_t k = by_len[len]; k < by_len[len + 1]; k++) {
-                const uint8_t *a = s + tok, *b = words + word_off[k];
-                int64_t j = 0;
-                while (j < len && a[j] == b[j])
-                    j++;
-                if (j == len && (word_prof[k] >> prof[t] & 1)) {
-                    h++;
-                    break;
-                }
-            }
-        }
-        tok = i + 1;
-        if (c == '\n') {
-            hits[t++] = h;
-            h = 0;
-        }
-    }
-    return tok == n ? t : OCS_EARGS;
-}
-
-/* UTF-8 of n codepoints into `out` (4 * n bytes), with the byte offset of
- * each codepoint and of the end in byte_off[0..n].  Returns the byte
- * count, OCS_EARGS for a surrogate (no UTF-8 form) and OCS_ECAP past
- * 2 GiB (Arrow's int32 string offsets). */
-int64_t ocs_utf8(const uint32_t *cps, int64_t n, uint8_t *out,
-                 int32_t *byte_off) {
-    int64_t b = 0;
-    for (int64_t i = 0; i < n; i++) {
-        uint32_t c = cps[i];
-        if (b > INT32_MAX - 4)
-            return OCS_ECAP;
-        byte_off[i] = (int32_t)b;
-        if (c < 0x80) {
-            out[b++] = (uint8_t)c;
-        } else if (c < 0x800) {
-            out[b++] = (uint8_t)(0xC0 | c >> 6);
-            out[b++] = (uint8_t)(0x80 | (c & 0x3F));
-        } else if (c < 0x10000) {
-            if (c - 0xD800 <= 0xDFFF - 0xD800)
-                return OCS_EARGS;
-            out[b++] = (uint8_t)(0xE0 | c >> 12);
-            out[b++] = (uint8_t)(0x80 | (c >> 6 & 0x3F));
-            out[b++] = (uint8_t)(0x80 | (c & 0x3F));
-        } else {
-            out[b++] = (uint8_t)(0xF0 | c >> 18);
-            out[b++] = (uint8_t)(0x80 | (c >> 12 & 0x3F));
-            out[b++] = (uint8_t)(0x80 | (c >> 6 & 0x3F));
-            out[b++] = (uint8_t)(0x80 | (c & 0x3F));
-        }
-    }
-    byte_off[n] = (int32_t)b;
-    return b;
 }

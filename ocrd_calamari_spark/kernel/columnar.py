@@ -11,8 +11,8 @@ whole batch, with no Python object per block:
            depth, n_tags, visible and link chars, ".!?" count, a
            lone-surrogate flag) plus its normalized text (the text half of
            ``normalize_block``) into one batch codepoint buffer.  A block
-           with "&" is rebuilt in Python from C's chunk records (per-chunk
-           ``html.unescape``, as ``segment._segment_native`` does), and so
+           with "&" is rebuilt in Python from C's chunk records
+           (``segment.amp_block``, which ``segment()`` runs too), and so
            is every page C leaves to Python (``segment.segment_python``),
            or every page when the library does not load: each builds the
            same columns, so everything below runs one path.
@@ -23,8 +23,8 @@ whole batch, with no Python object per block:
            one error row.
   emit     per output batch, over the gathered codepoints of every
            accepted block: the numeric half of ``normalize_block``
-           (``_block_numbers``: the ``char_p1`` gather and quantize, block
-           confs from ``ocs_sums`` in numpy's own summation order), page
+           (``_block_numbers``: ``char_p1``'s ops in numpy, block confs
+           from ``ocs_sums`` in numpy's own summation order), page
            confs (the sequential sum of ``extract_page``), and the spans
            as flat Arrow columns whose nesting is list offsets per row,
            the record-plus-repetition layout of Dremel:
@@ -53,7 +53,6 @@ passes the Arrow output schema.
 from __future__ import annotations
 
 import codecs
-import html as _html
 from itertools import groupby
 from operator import itemgetter
 from typing import Iterable, Iterator, Optional
@@ -72,16 +71,16 @@ from ocrd_calamari_spark.kernel import native
 from ocrd_calamari_spark.kernel.decode import decode_html
 from ocrd_calamari_spark.kernel.extract import _CTRL_FRACTION_LIMIT, _alt_char
 from ocrd_calamari_spark.kernel.fastpath import (
-    _MULTISPACE_RE,
     _jitter_lut_05,
     codepoints,
+    normalize_text,
     quantize6,
 )
 from ocrd_calamari_spark.kernel.segment import (
     _BINARY_PAYLOAD,
     _TAG_CLASS,
     Block,
-    _map_ws,
+    amp_block,
     count_pages,
     page_counts,
     segment_python,
@@ -155,7 +154,7 @@ class _Texts:
     def add(self, raw_text: str) -> tuple:
         """The text half of ``normalize_block`` of ``raw_text``: (lo, hi,
         piece, ".!?" count, flags) of the normalized text."""
-        text = _MULTISPACE_RE.sub(" ", raw_text.strip(" "))
+        text = normalize_text(raw_text)
         lo = self.at
         self.at += len(text) + 1
         self.texts.append(text)
@@ -177,28 +176,16 @@ class _Texts:
 
 def _rebuild_amp(cols: dict, amp: np.ndarray, pages: list, texts: _Texts,
                  errors: list) -> None:
-    """Fill in the rows of the blocks with "&" from their chunk records:
-    per chunk the ``html.unescape`` and the whitespace replace chain of
-    ``segment._segment_native``, then the visible and link chars of the
-    result.  A block that unescapes to no visible char keeps vis 0, so the
-    F4 mask drops it as ``segment()`` does."""
+    """Fill in the rows of the blocks with "&" from their chunk records
+    (``segment.amp_block``, as ``segment()`` rebuilds them).  A block that
+    unescapes to no visible char keeps vis 0, so the F4 mask drops it as
+    ``segment()`` does."""
     for r, recs in groupby(amp.tolist(), key=itemgetter(0)):
         i = int(cols["page"][r])
         if errors[i] is not None:
             continue
-        page = pages[i]
         try:
-            chunks, link = [], 0
-            for _, start, end, flags in recs:
-                data = page[start:end]
-                if flags & native.F_AMP:
-                    data = _html.unescape(data)
-                text = _map_ws(data)
-                chunks.append(text)
-                if flags & native.F_ANCHOR:
-                    link += len(text.replace(" ", ""))
-            raw = "".join(chunks)
-            vis = len(raw) - raw.count(" ")
+            raw, vis, link = amp_block(pages[i], (rec[1:] for rec in recs))
             (cols["lo"][r], cols["hi"][r], cols["piece"][r],
              cols["punct"][r], surr) = texts.add(raw)
         except Exception as exc:  # error row, never a task failure
@@ -371,27 +358,26 @@ def _block_numbers(cps: np.ndarray, blk_off: np.ndarray,
     ``cps[blk_off[b]:blk_off[b + 1]]`` with fused vote ``blk_fused[b]``.
     Returns p1 per codepoint and each block's conf.
 
-    p1 is ``char_p1``'s gather, clip and quantize over each block's
-    ``0.70 + 0.30 * fused``.  Each block's conf is ``normalize_block``'s
-    expression over its slice: the sum is numpy's pairwise ``.sum()``,
-    which no sequential form reproduces at a quantize6 half boundary.
-    Both run in C (``ocs_p1``, ``ocs_sums`` in numpy's order), or in numpy
-    when the library does not load.
+    p1 is ``char_p1``'s gather, clip and quantize, in place, over
+    ``np.repeat`` of each block's ``0.70 + 0.30 * fused``.  Each block's
+    conf is ``normalize_block``'s expression over its slice: the sum is
+    numpy's pairwise ``.sum()``, which no sequential form reproduces at a
+    quantize6 half boundary.  ``ocs_sums`` computes all of them in numpy's
+    own order in one call; without the library, one ``.sum()`` per block.
     """
-    base = 0.70 + 0.30 * np.asarray(blk_fused, dtype=np.float64)
     lens = np.diff(blk_off)
+    p1 = _jitter_lut_05()[cps]
+    base = 0.70 + 0.30 * np.asarray(blk_fused, dtype=np.float64)
+    np.subtract(np.repeat(base, lens), p1, out=p1)
+    np.clip(p1, 0.5, 0.999, out=p1)
+    np.multiply(p1, 1e6, out=p1)
+    np.add(p1, 0.5, out=p1)
+    np.floor(p1, out=p1)
+    np.divide(p1, 1e6, out=p1)
     seg = native.load()
     if seg is not None:
-        p1 = seg.p1(cps, blk_off, base, _jitter_lut_05())
-        sums = seg.sums(p1, blk_off, True)
+        sums = seg.sums(p1, blk_off)
     else:
-        p1 = _jitter_lut_05()[cps]
-        np.subtract(np.repeat(base, lens), p1, out=p1)
-        np.clip(p1, 0.5, 0.999, out=p1)
-        np.multiply(p1, 1e6, out=p1)
-        np.add(p1, 0.5, out=p1)
-        np.floor(p1, out=p1)
-        np.divide(p1, 1e6, out=p1)
         off = blk_off.tolist()
         sums = np.array([p1[lo:hi].sum() for lo, hi in zip(off, off[1:])],
                         dtype=np.float64)
@@ -401,23 +387,17 @@ def _block_numbers(cps: np.ndarray, blk_off: np.ndarray,
 def _page_confs(blk_conf: list, n_blocks: list) -> list:
     """``extract_page``'s row conf: quantize6 of the mean block conf, summed
     block by block in page order (None for an error row)."""
-    n = np.array([k or 0 for k in n_blocks], dtype=np.int64)
-    off = np.zeros(len(n) + 1, dtype=np.int64)
-    np.cumsum(n, out=off[1:])
-    conf = np.asarray(blk_conf, dtype=np.float64)
-    seg = native.load()
-    if seg is not None:
-        sums = seg.sums(conf, off, False)
-    else:
-        sums = np.zeros(len(n))
-        for k, (lo, hi) in enumerate(zip(off.tolist(), off[1:].tolist())):
-            s = 0.0
-            for c in blk_conf[lo:hi]:
-                s += c
-            sums[k] = s
-    mean = quantize6(np.divide(sums, n, out=np.zeros(len(n)), where=n > 0))
-    return [None if k is None else (m if k else 0.0)
-            for k, m in zip(n_blocks, mean.tolist())]
+    out, at = [], 0
+    for n in n_blocks:
+        if not n:
+            out.append(None if n is None else 0.0)
+            continue
+        conf_sum = 0.0
+        for c in blk_conf[at:at + n]:
+            conf_sum += c
+        at += n
+        out.append(quantize6(conf_sum / n))
+    return out
 
 
 def _ids(prefix, sep: str, nums: np.ndarray) -> pa.Array:
@@ -441,19 +421,16 @@ def _lists(per_row: np.ndarray, values: pa.Array, list_type, null) -> pa.Array:
 
 def _utf8(cps: np.ndarray) -> tuple[pa.Buffer, np.ndarray]:
     """The UTF-8 bytes of ``cps`` plus the byte offset of each codepoint
-    (and of the end), for string arrays that slice it without copying."""
-    seg = native.load()
-    if seg is not None:
-        data, byte_off = seg.utf8(cps)
-        return pa.py_buffer(data), byte_off
-    nbytes = (1 + (cps >= 0x80).astype(np.int64) + (cps >= 0x800)
-              + (cps >= 0x10000))
-    byte_off = np.zeros(len(cps) + 1, dtype=np.int64)
-    np.cumsum(nbytes, out=byte_off[1:])
-    if byte_off[-1] >= 1 << 31:
+    (and of the end), for string arrays that slice it without copying: a
+    codepoint starts at every byte that is not a continuation byte."""
+    data = _as_str(cps).encode("utf-8")
+    if len(data) >= 1 << 31:
         raise OverflowError("span text of one output batch exceeds 2 GiB")
-    return (pa.py_buffer(_as_str(cps).encode("utf-8")),
-            byte_off.astype(np.int32))
+    byte_off = np.empty(len(cps) + 1, dtype=np.int32)
+    byte_off[:-1] = np.flatnonzero(
+        (np.frombuffer(data, np.uint8) & 0xC0) != 0x80)
+    byte_off[-1] = len(data)
+    return pa.py_buffer(data), byte_off
 
 
 def _slices(data: pa.Buffer, offsets: np.ndarray) -> pa.StringArray:
@@ -468,9 +445,6 @@ def _gather(cps: np.ndarray, lo: np.ndarray,
     offsets in the result."""
     off = np.zeros(len(lens) + 1, dtype=np.int64)
     np.cumsum(lens, out=off[1:])
-    seg = native.load()
-    if seg is not None:
-        return seg.gather(cps, lo, lens), off
     idx = np.repeat(lo - off[:-1], lens)
     idx += np.arange(off[-1])
     return cps[idx], off

@@ -102,6 +102,12 @@ import re as _re
 _MULTISPACE_RE = _re.compile("  +")
 
 
+def normalize_text(raw_text: str) -> str:
+    """The text half of ``normalize_block``: edge spaces stripped, space
+    runs collapsed to one."""
+    return _MULTISPACE_RE.sub(" ", raw_text.strip(" "))
+
+
 def normalize_block(raw_text: str, fused: float):
     """raw block text → (normalized_text, p1_array, conf).
 
@@ -120,7 +126,7 @@ def normalize_block(raw_text: str, fused: float):
     pairs, 1.13-1.42 spread on a bus-noisy box — BENCH.md).
     test_fastpath_equiv.py arbitrates it against scalar textproc.
     """
-    text = _MULTISPACE_RE.sub(" ", raw_text.strip(" "))
+    text = normalize_text(raw_text)
     if not text:
         return "", None, 0.0
     kept_cps = codepoints(text)

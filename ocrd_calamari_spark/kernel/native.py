@@ -6,11 +6,11 @@ the compiler flags (``CFLAGS``: ``cc -O2 -ffp-contract=off -shared
 contraction on targets that have it, so they stay bit-exact) and returns
 a ``Segmenter``, or None when there is no compiler or the build or the
 load fails; the kernel then runs its Python paths instead
-(``segment._segment_fused``, and numpy for the sums and the UTF-8).  The
+(``segment._segment_fused``, and numpy for the block-conf sums).  The
 library is cached as ``_segment-<hash>-<machine>.so``: in
-``kernel/__pycache__/`` when the
-package is a writable directory, else (inside a ``--py-files`` zip, or a
-read-only install) in a per-user directory under ``tempfile.gettempdir()``.
+``kernel/__pycache__/`` when the package is a writable directory, else
+(inside a ``--py-files`` zip, or a read-only install) in a per-user
+directory under ``tempfile.gettempdir()``.
 The build writes a unique temporary name and ``os.replace``s it, so
 concurrent workers never load a half-written file, then removes this
 machine's libraries of earlier sources from that directory.  The first
@@ -96,12 +96,7 @@ class Segmenter:
                  (ctypes.c_char_p, ptr, ptr, i32, ctypes.c_double, ptr, i64,
                   ptr, ptr, i64, ptr, i64, ptr, i64, ptr, ptr)),
                 ("ocs_batch_row_ints", ctypes.c_int, ()),
-                ("ocs_gather", None, (ptr, ptr, ptr, i64, ptr)),
-                ("ocs_p1", None, (ptr, ptr, i64, ptr, ptr, ptr)),
-                ("ocs_sums", None, (ptr, ptr, i64, ctypes.c_int, ptr)),
-                ("ocs_stop_hits", i64, (ctypes.c_char_p, i64, ctypes.c_char_p,
-                                        ptr, ptr, i32, ptr, i64, ptr)),
-                ("ocs_utf8", i64, (ptr, i64, ptr, ptr))):
+                ("ocs_sums", None, (ptr, ptr, i64, ptr))):
             getattr(lib, name).restype = restype
             getattr(lib, name).argtypes = argtypes
         if lib.ocs_batch_row_ints() != ROW:
@@ -153,7 +148,7 @@ class Segmenter:
         nb = OUT_BLK * counts[0]
         return buf[:nb], buf[nb:nb + OUT_CHK * counts[1]]
 
-    def segment_batch(self, pages: list, ctrl_limit: float | None = None):
+    def segment_batch(self, pages: list, ctrl_limit: float):
         """Segment every page of ``pages`` in one call (``ocs_segment_batch``).
 
         Returns (rows, toff, text, amp, status) as numpy arrays: ``rows``
@@ -161,9 +156,11 @@ class Segmenter:
         ``text`` the "\\n"-terminated normalized texts as uint32
         codepoints, ``amp`` (m, AMP_REC) int32 chunk records of the blocks
         with "&", and ``status`` one P_* per page; or None when the call
-        fails as a whole.  ``ctrl_limit`` is ``run``'s binary-payload
-        test.  The buffers are sized from the batch: k is at most the
-        count of "<", the text at most the codepoints plus k."""
+        fails as a whole.  A page whose head holds more than the fraction
+        ``ctrl_limit`` of control chars is P_BINARY (``run``'s
+        binary-payload test).  The buffers are sized from the batch: k is
+        at most the count of "<", the text at most the codepoints plus
+        k."""
         n = len(pages)
         lens = np.fromiter(map(len, pages), np.int64, n)
         caps = np.fromiter((p.count("<") for p in pages), np.int64, n)
@@ -187,8 +184,7 @@ class Segmenter:
         status = np.empty(n, np.int8)
         counts = np.zeros(3, np.int64)
         rc = self._lib.ocs_segment_batch(
-            data, page_off.ctypes.data, caps32.ctypes.data, n,
-            -1.0 if ctrl_limit is None else ctrl_limit,
+            data, page_off.ctypes.data, caps32.ctypes.data, n, ctrl_limit,
             scratch.ctypes.data, len(scratch), rows.ctypes.data,
             toff.ctypes.data, rows_cap, text.ctypes.data, len(text),
             amp.ctypes.data, len(amp), status.ctypes.data, counts.ctypes.data)
@@ -197,79 +193,15 @@ class Segmenter:
         k, used, m = counts.tolist()
         return rows[:k], toff[:k + 1], text[:used], amp[:m], status
 
-    def sums(self, x: np.ndarray, off: np.ndarray,
-             numpy_order: bool) -> np.ndarray:
-        """``out[k] = sum(x[off[k]:off[k + 1]])`` (``ocs_sums``): numpy's
-        ``.sum()`` of each slice bit for bit when ``numpy_order``, else a
-        Python loop's sequential sum from 0.0."""
+    def sums(self, x: np.ndarray, off: np.ndarray) -> np.ndarray:
+        """``out[k] = np.float64(x[off[k]:off[k + 1]].sum())`` bit for bit
+        (``ocs_sums``, numpy's own summation order)."""
         x = np.ascontiguousarray(x, np.float64)
         off = np.ascontiguousarray(off, np.int64)
         out = np.empty(max(len(off) - 1, 0), np.float64)
         self._lib.ocs_sums(x.ctypes.data, off.ctypes.data, len(out),
-                           numpy_order, out.ctypes.data)
+                           out.ctypes.data)
         return out
-
-    def gather(self, src: np.ndarray, lo: np.ndarray,
-               lens: np.ndarray) -> np.ndarray:
-        """The spans ``src[lo[b]:lo[b] + lens[b]]`` back to back."""
-        lo = np.ascontiguousarray(lo, np.int64)
-        lens = np.ascontiguousarray(lens, np.int64)
-        if len(lo) and (lo.min() < 0 or (lo + lens).max() > len(src)
-                        or lens.min() < 0):
-            raise IndexError("span outside the buffer")
-        src = np.ascontiguousarray(src, np.uint32)
-        out = np.empty(int(lens.sum()), np.uint32)
-        self._lib.ocs_gather(src.ctypes.data, lo.ctypes.data,
-                             lens.ctypes.data, len(lo), out.ctypes.data)
-        return out
-
-    def p1(self, cps: np.ndarray, off: np.ndarray, base: np.ndarray,
-           lut: np.ndarray) -> np.ndarray:
-        """``fastpath.char_p1`` of each block ``cps[off[b]:off[b + 1]]``
-        with ``fused`` given as ``base[b] = 0.70 + 0.30 * fused``, and
-        ``lut = fastpath._jitter_lut_05()``."""
-        cps = np.ascontiguousarray(cps, np.uint32)
-        off = np.ascontiguousarray(off, np.int64)
-        base = np.ascontiguousarray(base, np.float64)
-        if len(cps) and int(cps.max()) >= len(lut):
-            raise IndexError("codepoint outside the jitter table")
-        out = np.empty(len(cps), np.float64)
-        self._lib.ocs_p1(cps.ctypes.data, off.ctypes.data, len(off) - 1,
-                         base.ctypes.data, lut.ctypes.data, out.ctypes.data)
-        return out
-
-    def stop_hits(self, low: bytes, prof: np.ndarray, words: list,
-                  word_prof: list) -> np.ndarray:
-        """``ocs_stop_hits``: the stopword hits (capped at 5) of each text
-        of ``low``, the UTF-8 of the lowered texts each followed by "\\n";
-        ``prof[i]`` is text i's profile, ``words`` the stopwords as bytes
-        and ``word_prof[w]`` the bit mask of the profiles holding word w."""
-        word_off = np.zeros(len(words) + 1, np.int32)
-        np.cumsum([len(w) for w in words], out=word_off[1:])
-        word_prof = np.asarray(word_prof, np.int32)
-        prof = np.ascontiguousarray(prof, np.int8)
-        hits = np.zeros(len(prof), np.int32)
-        got = self._lib.ocs_stop_hits(
-            low, len(low), b"".join(words), word_off.ctypes.data,
-            word_prof.ctypes.data, len(words), prof.ctypes.data, len(prof),
-            hits.ctypes.data)
-        if got != len(prof):
-            raise ValueError("text count differs from the profiles given")
-        return hits
-
-    def utf8(self, cps: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """The UTF-8 bytes of ``cps`` and the byte offset of each codepoint
-        and of the end (int32); OverflowError past 2 GiB."""
-        cps = np.ascontiguousarray(cps, np.uint32)
-        out = np.empty(4 * len(cps), np.uint8)
-        byte_off = np.empty(len(cps) + 1, np.int32)
-        n = self._lib.ocs_utf8(cps.ctypes.data, len(cps), out.ctypes.data,
-                               byte_off.ctypes.data)
-        if n == -2:
-            raise OverflowError("span text of one output batch exceeds 2 GiB")
-        if n < 0:
-            raise ValueError("a lone surrogate has no UTF-8 form")
-        return out[:n], byte_off
 
 
 def _cache_dir() -> str | None:

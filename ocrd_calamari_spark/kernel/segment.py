@@ -308,6 +308,25 @@ def _segment_fused(html_text: str) -> list[Block]:
     return [b for b in blocks if b.visible_len() > 0]
 
 
+def amp_block(html_text: str, chunks) -> tuple[str, int, int]:
+    """A block with "&" rebuilt from its chunk records, (start, end,
+    flags) triples of ``_segment.c``: per chunk the ``html.unescape`` (when
+    it holds "&") and the whitespace replace chain of ``_segment_fused``.
+    Returns (raw text, visible chars, link chars), counted after the
+    unescape."""
+    texts, link = [], 0
+    for start, end, flags in chunks:
+        data = html_text[start:end]
+        if flags & F_AMP:
+            data = _html.unescape(data)
+        text = _map_ws(data)
+        texts.append(text)
+        if flags & F_ANCHOR:
+            link += len(text.replace(" ", ""))
+    raw = "".join(texts)
+    return raw, len(raw) - raw.count(" "), link
+
+
 def _segment_native(seg: _native.Segmenter, html_text: str,
                     ctrl_limit: float | None = None):
     """The compiled segmenter (_segment.c, the state machine of
@@ -319,7 +338,8 @@ def _segment_native(seg: _native.Segmenter, html_text: str,
     joined in one piece, mapped only if C saw a chain char in it (the
     chain maps char by char), and C has counted its visible and link
     chars; a block with "&" is rebuilt chunk by chunk and counted after
-    the unescape."""
+    the unescape (``amp_block``, which the batch pass of
+    ``kernel/columnar.py`` shares)."""
     res = seg.run(html_text, ctrl_limit)
     if res is None or res is _native.BINARY:
         return res
@@ -337,23 +357,12 @@ def _segment_native(seg: _native.Segmenter, html_text: str,
                                for j in range(3 * lo, 3 * hi, 3)])
             if flags & F_WS:
                 raw = _map_ws(raw)
-            chunks = [raw]
         else:
-            chunks = []
-            link = 0
-            for j in range(3 * lo, 3 * hi, 3):
-                data = html_text[crec[j]:crec[j + 1]]
-                if crec[j + 2] & F_AMP:
-                    data = _html.unescape(data)
-                text = _map_ws(data)
-                chunks.append(text)
-                if crec[j + 2] & F_ANCHOR:
-                    link += len(text.replace(" ", ""))
-            raw = "".join(chunks)
-            vis = len(raw) - raw.count(" ")
+            it_c = iter(crec[3 * lo:3 * hi])
+            raw, vis, link = amp_block(html_text, zip(*[it_c] * 3))
             if vis == 0:
                 continue
-        blocks.append(Block(pos, tags[tag], depth, chunks, link, n_tags,
+        blocks.append(Block(pos, tags[tag], depth, [raw], link, n_tags,
                             raw, vis))
     return blocks
 

@@ -30,7 +30,6 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from ocrd_calamari_spark.kernel import native
 from ocrd_calamari_spark.kernel.segment import Block
 
 # Minimal stopword profiles; lang hint selects the profile — the analogue of
@@ -229,11 +228,9 @@ def _stop_hits(texts: list, langs) -> np.ndarray:
 def stop_hits_joined(joined: str, prof: np.ndarray) -> np.ndarray:
     """``_stop_hits`` of the texts of ``joined``, each followed by "\\n"
     and holding none, with ``prof[i]`` the profile index of text i."""
-    low = joined.lower().encode("utf-8", "surrogatepass")
-    seg = native.load()
-    if seg is not None:
-        return seg.stop_hits(low, prof, _WORD_BYTES, _WORD_PROFILES)
-    low = pc.split_pattern(pa.array([low], pa.binary()), b"\n").flatten()
+    low = pa.array([joined.lower().encode("utf-8", "surrogatepass")],
+                   pa.binary())
+    low = pc.split_pattern(low, b"\n").flatten()
     return _lowered_hits(low.slice(0, len(low) - 1), prof)
 
 
@@ -253,17 +250,12 @@ def _lowered_hits(low: pa.Array, prof: np.ndarray) -> np.ndarray:
     return np.minimum(np.bincount(tok_blk[hit], minlength=len(low)), 5)
 
 
-# the union of the profiles as UTF-8, sorted by length as ocs_stop_hits
-# takes them; _STOP_MEMBER[w, k]: word w is in profile k of STOPWORDS, and
-# _WORD_PROFILES[w] the same as a bit mask
-_WORDS = sorted(set().union(*STOPWORDS.values()) - {""},
-                key=lambda w: (len(w.encode("utf-8")), w))
-_WORD_BYTES = [w.encode("utf-8") for w in _WORDS]
-_STOP_WORDS = pa.array(_WORD_BYTES, pa.binary())
+# the union of the profiles as UTF-8; _STOP_MEMBER[w, k]: word w is in
+# profile k of STOPWORDS
+_WORDS = sorted(set().union(*STOPWORDS.values()) - {""})
+_STOP_WORDS = pa.array([w.encode("utf-8") for w in _WORDS], pa.binary())
 _STOP_MEMBER = np.array([[w in p for p in STOPWORDS.values()]
                          for w in _WORDS], dtype=bool)
-_WORD_PROFILES = [sum(1 << k for k, on in enumerate(row) if on)
-                  for row in _STOP_MEMBER.tolist()]
 
 
 def tag_base(tags) -> np.ndarray:

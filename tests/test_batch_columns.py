@@ -4,10 +4,11 @@ every kept block's tag, depth, n_tags, visible and link chars, ".!?"
 count, lone-surrogate flag and normalized text.  Checked on generated
 pages, on hypothesis HTML (rawtext, misnesting, ``<div/>``, entities) and
 on a seeded sample with entities and non-Latin text, which ``gen_pages``
-never emits.  Also here: the C block-conf sums against numpy's ``.sum()``
-bit for bit, the forced-fallback run at glyph level, the native path of a
-batch without "&" building no Python object per block, and the compile
-flags in the library's cache key."""
+never emits.  Also here: the UTF-8 offsets of the emitted text, the C
+block-conf sums against numpy's ``.sum()`` bit for bit, the
+forced-fallback run at glyph level, the native path of a batch without
+"&" building no Python object per block, and the compile flags in the
+library's cache key."""
 
 import os
 import random
@@ -22,6 +23,7 @@ from ocrd_calamari_spark.config import LEVELS, ExtractConfig
 from ocrd_calamari_spark.gen import gen_pages
 from ocrd_calamari_spark.kernel import columnar, native, segment as seg_mod
 from ocrd_calamari_spark.kernel.decode import decode_html
+from ocrd_calamari_spark.kernel.extract import _CTRL_FRACTION_LIMIT
 from ocrd_calamari_spark.kernel.fastpath import _MULTISPACE_RE
 from ocrd_calamari_spark.kernel.segment import segment
 
@@ -82,7 +84,7 @@ def check_pages(pages: list, monkeypatch=None):
     assert batch_rows(pages) == want
     if SEG is not None:
         # the C pass itself took every page that has no "&"
-        status = SEG.segment_batch(pages)[4]
+        status = SEG.segment_batch(pages, _CTRL_FRACTION_LIMIT)[4]
         assert all(s == native.P_OK for s in status.tolist())
     if monkeypatch is not None:  # the same columns without the library
         with monkeypatch.context() as m:
@@ -214,7 +216,7 @@ def test_pages_over_capacity_go_to_python(monkeypatch):
     want = [spec_rows(p) for p in pages]
     needs = sorted({SEG._per_tag * (p.count("<") + 1) for p in pages})
     monkeypatch.setattr(native, "_MAX_INTS", needs[-3])
-    status = SEG.segment_batch(pages)[4]
+    status = SEG.segment_batch(pages, _CTRL_FRACTION_LIMIT)[4]
     left = int(np.count_nonzero(status == native.P_PYTHON))
     assert 2 <= left < len(pages)
     before = seg_mod.page_counts()
@@ -256,6 +258,21 @@ def test_native_batch_without_amp_has_no_per_block_python(level, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
+# UTF-8 offsets of the emitted text
+# ---------------------------------------------------------------------------
+@given(st.text(alphabet=st.characters(blacklist_categories=("Cs",)),
+               max_size=60))
+def test_utf8_offsets_slice_each_codepoint(text):
+    cps = np.frombuffer(text.encode("utf-32-le"), np.uint32)
+    data, off = columnar._utf8(cps)
+    assert data.to_pybytes() == text.encode("utf-8")
+    assert off.dtype == np.int32 and len(off) == len(text) + 1
+    got = [data.to_pybytes()[a:b].decode("utf-8")
+           for a, b in zip(off[:-1].tolist(), off[1:].tolist())]
+    assert got == list(text)
+
+
+# ---------------------------------------------------------------------------
 # Block-conf sums in numpy's order
 # ---------------------------------------------------------------------------
 def p1_like(rng, n):
@@ -270,7 +287,7 @@ def test_sums_equal_numpy_at_every_length_to_1024():
         x = p1_like(rng, int(lens.sum()) + 7)[7:]  # an unaligned start
         off = np.zeros(len(lens) + 1, np.int64)
         np.cumsum(rng.permutation(lens), out=off[1:])
-        got = SEG.sums(x, off, True)
+        got = SEG.sums(x, off)
         want = np.array([x[a:b].sum() for a, b in zip(off[:-1], off[1:])])
         assert got.tobytes() == want.tobytes()
 
@@ -285,21 +302,7 @@ def test_sums_equal_numpy_past_the_ufunc_buffer():
     for n in lens:
         x = p1_like(rng, n)
         off = np.array([0, n], np.int64)
-        assert SEG.sums(x, off, True)[0].hex() == np.float64(x.sum()).hex(), n
-
-
-@needs_native
-def test_sequential_sums_equal_python_loop():
-    rng = np.random.default_rng(2)
-    x = p1_like(rng, 5000)
-    off = np.array([0, 1, 9, 200, 5000], np.int64)
-    want = []
-    for a, b in zip(off[:-1], off[1:]):
-        s = 0.0
-        for v in x[a:b].tolist():
-            s += v
-        want.append(s)
-    assert SEG.sums(x, off, False).tolist() == want
+        assert SEG.sums(x, off)[0].hex() == np.float64(x.sum()).hex(), n
 
 
 # ---------------------------------------------------------------------------
