@@ -1,19 +1,16 @@
 /*
  * Compiled segmenter: the state machine of segment.py's _segment_fused in
- * one pass over a page.  Plain C with no Python.h; kernel/native.py
- * compiles it (`cc -O2 -ffp-contract=off -shared -fPIC`) and calls it
- * through ctypes.  _segment_fused stays the specification:
- * test_segment_equiv.py pins native == fused == spec.
+ * one pass over each page of an Arrow batch.  Plain C with no Python.h;
+ * kernel/native.py compiles it (`cc -O2 -ffp-contract=off -shared -fPIC`)
+ * and calls it through ctypes.  _segment_fused stays the specification.
  *
- * One state machine (run_machine) behind two entry points:
- *   - ocs_segment: one page → flat block and chunk records, from which
- *     segment.py builds Block objects (segment() and the scalar oracle);
- *   - ocs_segment_batch: every page of an Arrow batch → one row of block
- *     columns per kept block plus its normalized text in one codepoint
- *     buffer, with no Python object per block (kernel/columnar.py).
- *     test_batch_columns.py pins it to segment() plus the text half of
- *     normalize_block, page for page.
- * Beside them, ocs_sums: the block confs of normalize_block over a batch,
+ * One state machine (run_machine) behind one entry point,
+ * ocs_segment_batch: every page of an Arrow batch → one row of block
+ * columns per kept block plus its normalized text in one codepoint
+ * buffer, with no Python object per block (kernel/columnar.py).
+ * test_segment_equiv.py and test_batch_columns.py pin it to
+ * _segment_fused plus the text half of normalize_block, page for page.
+ * Beside it, ocs_sums: the block confs of normalize_block over a batch,
  * summed in numpy's exact summation order.
  *
  * Input is codepoints (str.encode("utf-32-le"/"-be" by host order,
@@ -39,9 +36,8 @@
  * Bounds: the caller sizes one int32 buffer from the page's count of "<"
  * (`cap`): every token starts with "<", so tags, blocks and stack depth
  * are at most `cap` and chunks at most `cap + 1`.  Every write is checked
- * against those capacities; an overflow or a bad argument returns a
- * negative code (per page in the batch pass) and the caller segments the
- * page in Python instead.
+ * against those capacities; a page that would overflow one is left to
+ * Python (P_PYTHON), and a bad argument fails the whole call.
  */
 #include <stdint.h>
 #include <string.h>
@@ -77,23 +73,20 @@ static const struct { const char *name; int cls; } TAGS[] = {
 #define MAX_TAG_LEN 10
 
 /* Record layouts of the int32 buffer, in this order:
- *   out blocks  OUT_BLK per block:  pos, tag, depth, n_tags, chunk_lo,
- *               chunk_hi, visible, link chars, flags
  *   out chunks  OUT_CHK per chunk:  start, end, flags
  *   stack       STK per open tag:   name start, name length, class
  *   block stack 1 per open block:   block index
  *   blocks      BLK per block:      tag, depth, n_tags, visible, link,
  *                                   flags, chunk count, output cursor
  *   chunks      CHK per chunk:      start, end, flags, block index
- * Chunk flags: F_ANCHOR (inside <a>), F_AMP (holds "&"), F_WS (holds one
- * of "\n\t\r\f\v"); a block's flags are the union of its chunks' but
- * F_ANCHOR.  Visible and link chars count only the chunks without "&"
- * (Python counts a block with "&" after unescaping).  The out records of
- * the kept blocks are followed directly by their chunks, grouped by block
- * in document order. */
-enum { OUT_BLK = 9, OUT_CHK = 3, STK = 3, BLK = 8, CHK = 4 };
-enum { F_ANCHOR = 1, F_AMP = 2, F_WS = 4 };
-#define PER_TAG (OUT_BLK + OUT_CHK + STK + 1 + BLK + CHK)
+ * Chunk flags: F_ANCHOR (inside <a>), F_AMP (holds "&"); a block's flags
+ * are the union of its chunks' but F_ANCHOR.  Visible and link chars
+ * count only the chunks without "&" (Python counts a block with "&" after
+ * unescaping).  The out chunks are the kept blocks' chunks, grouped by
+ * block in document order. */
+enum { OUT_CHK = 3, STK = 3, BLK = 8, CHK = 4 };
+enum { F_ANCHOR = 1, F_AMP = 2 };
+#define PER_TAG (OUT_CHK + STK + 1 + BLK + CHK)
 
 int ocs_ints_per_tag(void) { return PER_TAG; }
 int ocs_tag_count(void) { return N_TAGS; }
@@ -101,10 +94,10 @@ const char *ocs_tag_name(int i) { return i >= 0 && i < N_TAGS ? TAGS[i].name : 0
 int ocs_tag_class(int i) { return i >= 0 && i < N_TAGS ? TAGS[i].cls : -1; }
 
 /* extract.py's _CTRL_RE, [\x00-\x08\x0e-\x1f], counted over the first n
- * codepoints of a page (native.py passes at most the 4,096 that
+ * codepoints of a page (ocs_segment_batch passes at most the 4,096 that
  * _looks_binary reads). */
 #define CTRL_HEAD 4096
-int32_t ocs_ctrl_count(const uint32_t *p, int32_t n) {
+static int32_t ctrl_count(const uint32_t *p, int32_t n) {
     int32_t k = 0;
     for (int32_t i = 0; i < n; i++)
         k += p[i] <= 0x08 || (p[i] >= 0x0E && p[i] <= 0x1F);
@@ -146,7 +139,7 @@ static int fold_eq(uint32_t c, char want) {
 }
 
 /* TAGS indices by first letter and length, -1 terminated; ocs_init()
- * fills it once, before the first ocs_segment call. */
+ * fills it once, before the first ocs_segment_batch call. */
 #define BUCKET_SLOTS 8
 static int8_t BUCKET[26][MAX_TAG_LEN + 1][BUCKET_SLOTS];
 static int initialized;
@@ -348,7 +341,7 @@ typedef struct {
 static void carve(machine_t *m, int32_t *buf, int32_t cap) {
     m->c1 = (int64_t)cap + 1;
     m->out = buf;
-    m->stk = m->out + (OUT_BLK + OUT_CHK) * m->c1;
+    m->stk = m->out + OUT_CHK * m->c1;
     m->bstk = m->stk + STK * m->c1;
     m->blk = m->bstk + m->c1;
     m->chk = m->blk + BLK * m->c1;
@@ -374,15 +367,13 @@ static int run_machine(const uint32_t *p, int32_t n, machine_t *m) {
                 return OCS_ECAP;
             int32_t b = bstk[bsp - 1], *bk = blk + BLK * (int64_t)b;
             int32_t flags = anchor > 0 ? F_ANCHOR : 0, blank = 0;
-            uint32_t amp = 0, ws = 0;
+            uint32_t amp = 0;
             for (int32_t q = pos; q < end; q++) {
                 uint32_t c = p[q];
-                uint32_t w = c - 0x09 <= 0x0D - 0x09;
                 amp |= c == '&';
-                ws |= w;
-                blank += (int32_t)(w | (c == ' '));
+                blank += (int32_t)(is_chain_ws(c) | (c == ' '));
             }
-            flags |= (amp ? F_AMP : 0) | (ws ? F_WS : 0);
+            flags |= amp ? F_AMP : 0;
             int32_t vis = end - pos - blank;
             int32_t *ck = chk + CHK * nch++;
             ck[0] = pos;
@@ -484,7 +475,7 @@ static int kept(const int32_t *bk) {
 /* Group the kept blocks' chunks by block, in document order, into `gc`
  * (OUT_CHK ints per chunk).  Afterwards a kept block's chunks are
  * gc[OUT_CHK * (bk[7] - bk[6]) ...] up to gc[OUT_CHK * bk[7]]. */
-static int64_t group_chunks(machine_t *m, int32_t *gc) {
+static void group_chunks(machine_t *m, int32_t *gc) {
     int64_t nc = 0;
     for (int64_t b = 0; b < m->nb; b++) {
         int32_t *bk = m->blk + BLK * b;
@@ -502,46 +493,6 @@ static int64_t group_chunks(machine_t *m, int32_t *gc) {
         o[1] = ck[1];
         o[2] = ck[2];
     }
-    return nc;
-}
-
-/* Segment one page.  `buf` holds PER_TAG * (cap + 1) int32s, where cap
- * is the page's count of "<".  On success counts[0] is the number of out
- * block records (the kept blocks, in document order) and counts[1] the
- * number of out chunk records. */
-int ocs_segment(const uint32_t *p, int32_t n, int32_t cap, int32_t *buf,
-                int64_t buf_len, int32_t *counts) {
-    if (!initialized || n < 0 || cap < 0
-        || buf_len < (int64_t)PER_TAG * ((int64_t)cap + 1))
-        return OCS_EARGS;
-    machine_t m;
-    carve(&m, buf, cap);
-    int rc = run_machine(p, n, &m);
-    if (rc != OCS_OK)
-        return rc;
-    int64_t nb_out = 0;
-    for (int64_t b = 0; b < m.nb; b++)
-        nb_out += kept(m.blk + BLK * b);
-    int64_t nc_out = group_chunks(&m, m.out + OUT_BLK * nb_out);
-    int32_t *o = m.out;
-    for (int64_t b = 0; b < m.nb; b++) {
-        int32_t *bk = m.blk + BLK * b;
-        if (!kept(bk))
-            continue;
-        o[0] = (int32_t)b;
-        o[1] = bk[0];
-        o[2] = bk[1];
-        o[3] = bk[2];
-        o[4] = bk[7] - bk[6];
-        o[5] = bk[7];
-        o[6] = bk[3];
-        o[7] = bk[4];
-        o[8] = bk[5];
-        o += OUT_BLK;
-    }
-    counts[0] = (int32_t)nb_out;
-    counts[1] = (int32_t)nc_out;
-    return OCS_OK;
 }
 
 /* Segment every page of an Arrow batch and write one row of block columns
@@ -551,7 +502,7 @@ int ocs_segment(const uint32_t *p, int32_t n, int32_t cap, int32_t *buf,
  * [page_off[i], page_off[i + 1]), and each page's count of "<" in caps[i]
  * (-1: leave the page to Python).  A page whose head has more than the
  * fraction ctrl_limit of control chars is P_BINARY and never segmented
- * (extract._looks_binary's test, as in Segmenter.run).  A page
+ * (extract._looks_binary's test).  A page
  * that `scratch` cannot hold, or that overflows a table, is P_PYTHON.
  *
  * Output, per kept block r (ROW ints in rows[ROW * r]): page, tag index,
@@ -595,7 +546,7 @@ int ocs_segment_batch(const uint32_t *p, const int64_t *page_off,
         int32_t n = (int32_t)len;
         if (n > 0) {
             int32_t head = n < CTRL_HEAD ? n : CTRL_HEAD;
-            if ((double)ocs_ctrl_count(pg, head) / head > ctrl_limit) {
+            if ((double)ctrl_count(pg, head) / head > ctrl_limit) {
                 status[i] = P_BINARY;
                 continue;
             }

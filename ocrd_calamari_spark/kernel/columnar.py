@@ -12,10 +12,11 @@ whole batch, with no Python object per block:
            lone-surrogate flag) plus its normalized text (the text half of
            ``normalize_block``) into one batch codepoint buffer.  A block
            with "&" is rebuilt in Python from C's chunk records
-           (``segment.amp_block``, which ``segment()`` runs too), and so
-           is every page C leaves to Python (``segment.segment_python``),
-           or every page when the library does not load: each builds the
-           same columns, so everything below runs one path.
+           (``segment.amp_block``, the per-chunk unescape of
+           ``_segment_fused``), and every page C leaves to Python, or
+           every page when the library does not load, is segmented by
+           ``segment.segment()``: each builds the same columns, so
+           everything below runs one path.
   vote     the F4 filter as a mask, then ``vote.vote_features`` on the
            feature columns; the stopword hits lower the batch text once
            (``vote.stop_hits_joined``).  If the vote raises, the pages
@@ -44,8 +45,10 @@ single-process oracle; tests/test_columnar_equiv.py proves the two paths
 equal row for row (and the batched block confs equal ``normalize_block``'s),
 test_vote_equiv.py the column vote equal ``vote_block``'s, and
 test_batch_columns.py the batch pass's columns equal ``segment()``'s
-blocks plus ``normalize_block``'s text half.  A page with a lone surrogate
-in an accepted block is one error row, with ``extract_page``'s error.
+blocks plus ``normalize_block``'s text half.  The oracle runs no compiled
+code, so those comparisons check ``_segment.c`` against Python.  A page
+with a lone surrogate in an accepted block is one error row, with
+``extract_page``'s error.
 Like the rest of the kernel this module imports no pyspark: the caller
 passes the Arrow output schema.
 """
@@ -53,6 +56,7 @@ passes the Arrow output schema.
 from __future__ import annotations
 
 import codecs
+import threading
 from itertools import groupby
 from operator import itemgetter
 from typing import Iterable, Iterator, Optional
@@ -69,7 +73,12 @@ from ocrd_calamari_spark.config import (
 )
 from ocrd_calamari_spark.kernel import native
 from ocrd_calamari_spark.kernel.decode import decode_html
-from ocrd_calamari_spark.kernel.extract import _CTRL_FRACTION_LIMIT, _alt_char
+from ocrd_calamari_spark.kernel.extract import (
+    _BINARY_PAYLOAD,
+    _CTRL_FRACTION_LIMIT,
+    _alt_char,
+    _looks_binary,
+)
 from ocrd_calamari_spark.kernel.fastpath import (
     _jitter_lut_05,
     codepoints,
@@ -77,13 +86,10 @@ from ocrd_calamari_spark.kernel.fastpath import (
     quantize6,
 )
 from ocrd_calamari_spark.kernel.segment import (
-    _BINARY_PAYLOAD,
     _TAG_CLASS,
     Block,
     amp_block,
-    count_pages,
-    page_counts,
-    segment_python,
+    segment,
 )
 from ocrd_calamari_spark.kernel.vote import (
     profile_index,
@@ -100,12 +106,29 @@ from ocrd_calamari_spark.kernel.vote import (
 MAX_BATCH_SPANS = 1 << 21
 
 LINEAGE_COLS = ("_src_file", "_src_row", "_part_id")
-# accumulator names of the two entries of segment.page_counts()
+# accumulator names of the two entries of page_counts()
 _PATH_COUNTERS = ("segment_native", "segment_fallback")
+# Pages the batch pass segmented in this process: [by the compiled
+# segmenter, by the Python fallback]; read through page_counts().
+# Process-wide on purpose: the accumulators report per worker process, as
+# deltas over a task.
+_PAGE_COUNTS = [0, 0]
+_COUNTS_LOCK = threading.Lock()
 # the block columns of one input batch: the ``ocs_segment_batch`` row
 # columns, then each text's span [lo, hi) in the batch codepoint buffer and
 # the index of the "\n"-terminated piece of that buffer that holds it
 _COLS = native.ROW_COLS + ("lo", "hi", "piece")
+
+
+def page_counts() -> tuple[int, int]:
+    """Pages the batch pass segmented in this process so far: (native,
+    fallback).
+
+    A function, not the list, is what callers hold: cloudpickle ships a
+    closure's module-level values by copy, but a module function by
+    reference, so a map function on a worker reads the live counts."""
+    with _COUNTS_LOCK:
+        return _PAGE_COUNTS[0], _PAGE_COUNTS[1]
 
 
 def _error(exc: Exception) -> str:
@@ -198,11 +221,11 @@ def _rebuild_amp(cols: dict, amp: np.ndarray, pages: list, texts: _Texts,
 def _python_rows(pages: list, todo: list, tag_id: dict, texts: _Texts,
                  errors: list) -> dict:
     """The block columns of the pages in ``todo``, segmented in Python
-    (``segment_python``, binary test included)."""
+    (``segment()``)."""
     rows = []
     for i in todo:
         try:
-            blocks = segment_python(pages[i], reject_binary=True)
+            blocks = segment(pages[i])
         except Exception as exc:  # error row, never a task failure
             errors[i] = _error(exc)
             continue
@@ -218,7 +241,9 @@ def _segment_batch(pages: list, errors: list):
     """Block columns of every page of a batch: (columns, codepoint buffer,
     its number of "\\n"-terminated pieces, tag names).  ``pages`` holds
     the decoded pages, None where ``errors`` has the page's error already;
-    a page whose segmenting fails gets its error there."""
+    a page whose segmenting fails gets its error there, and so does a
+    binary payload.  Adds the pages segmented by each path to
+    ``page_counts()``."""
     n = len(pages)
     text = np.empty(0, np.uint32)
     status = np.full(n, native.P_PYTHON, np.int8)
@@ -248,11 +273,13 @@ def _segment_batch(pages: list, errors: list):
             continue
         if status[i] == native.P_OK:
             native_pages += 1
-        elif status[i] == native.P_BINARY:
+        elif status[i] == native.P_BINARY or _looks_binary(pages[i]):
             errors[i] = _error(ValueError(_BINARY_PAYLOAD))
         else:
             todo.append(i)
-    count_pages(native_pages, 0)
+    with _COUNTS_LOCK:
+        _PAGE_COUNTS[0] += native_pages
+        _PAGE_COUNTS[1] += len(todo)
     if todo:
         more = _python_rows(pages, todo, {t: k for k, t in enumerate(tags)},
                             texts, errors)
@@ -655,7 +682,7 @@ def arrow_map_fn(cfg: ExtractConfig, schema: pa.Schema,
     optional accumulators (docs, failed, overwrote, raw_charset), added
     per output batch from its Arrow null and true counts, and
     segment_native / segment_fallback when the dict holds them: the pages
-    each segmenter ran on (``segment.page_counts()`` deltas).  Config and
+    each segmenter ran on (``page_counts()`` deltas).  Config and
     schema are captured once per task, before the batch loop.
     """
 

@@ -52,6 +52,7 @@ _CONFUSION = {"l": "1", "1": "l", "o": "0", "0": "o", "ſ": "s", "S": "5", "5": 
 # ``ignore_errors`` pipeline drops (recognize.py:606-609).
 _CTRL_FRACTION_LIMIT = 0.20
 _CTRL_RE = re.compile(r"[\x00-\x08\x0e-\x1f]")
+_BINARY_PAYLOAD = "binary payload (control-char fraction exceeded)"
 
 _WORD_RE = re.compile(r"[^ ]+")  # ≈ _words emission: non-space runs only
                                  # (space runs advance offsets, emit nothing,
@@ -101,7 +102,7 @@ def extract_page(
         decoded, raw = decode_html(bytes(html))
         row["raw_charset"] = raw
         if _looks_binary(decoded):
-            raise ValueError("binary payload (control-char fraction exceeded)")
+            raise ValueError(_BINARY_PAYLOAD)
 
         want_words = cfg.textequiv_level in ("word", "glyph")
         want_glyphs = cfg.textequiv_level == "glyph"

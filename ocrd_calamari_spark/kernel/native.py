@@ -5,9 +5,13 @@ the compiler flags (``CFLAGS``: ``cc -O2 -ffp-contract=off -shared
 -fPIC``; ``-ffp-contract=off`` keeps the block-conf sums free of FMA
 contraction on targets that have it, so they stay bit-exact) and returns
 a ``Segmenter``, or None when there is no compiler or the build or the
-load fails; the kernel then runs its Python paths instead
-(``segment._segment_fused``, and numpy for the block-conf sums).  The
-library is cached as ``_segment-<hash>-<machine>.so``: in
+load fails; the columnar kernel then runs its Python paths instead
+(``segment.segment``, and numpy for the block-conf sums).  Only
+``kernel/columnar.py`` calls the library: one ``segment_batch`` and one
+``sums`` call per Arrow batch.  The scalar oracle (``extract_page``)
+segments in Python, so every oracle comparison checks the C pass against
+an independent implementation.  The library is cached as
+``_segment-<hash>-<machine>.so``: in
 ``kernel/__pycache__/`` when the package is a writable directory, else
 (inside a ``--py-files`` zip, or a read-only install) in a per-user
 directory under ``tempfile.gettempdir()``.
@@ -19,7 +23,7 @@ run after a source change pays one compile; ``pipeline.extract_df`` calls
 
 The C side never writes past the buffers this module sizes from the
 pages (the count of ``"<"`` bounds tags, blocks, stack depth and chunks);
-an error code for a page sends that page to the Python segmenter.
+a page that overflows them is left to the Python segmenter.
 """
 
 from __future__ import annotations
@@ -43,14 +47,11 @@ _SOURCE = "_segment.c"
 # part of the library's cache key: a change here builds a new library
 CFLAGS = ("-O2", "-ffp-contract=off", "-shared", "-fPIC")
 _CODEC = "utf-32-le" if sys.byteorder == "little" else "utf-32-be"
-# pages whose buffer would exceed this many int32s (128 MB; about 1.2 M
+# pages whose buffer would exceed this many int32s (128 MB; about 1.8 M
 # "<") are left to the Python segmenter
 _MAX_INTS = 1 << 25
-# a worker thread keeps its buffer up to this size (256 KB) between pages
-_KEEP_INTS = 1 << 16
 _MAX_LEN = (1 << 31) - 1
-OUT_BLK, OUT_CHK = 9, 3  # int32s per out block / chunk record (_segment.c)
-F_ANCHOR, F_AMP, F_WS = 1, 2, 4  # chunk and block flags (_segment.c)
+F_ANCHOR, F_AMP = 1, 2  # chunk and block flags (_segment.c)
 F_SURR = 8  # a batch row whose text holds a lone surrogate (_segment.c)
 # ocs_segment_batch's row columns (its R_* order), amp record width and
 # page statuses
@@ -59,25 +60,13 @@ ROW_COLS = ("page", "tag", "depth", "n_tags", "vis", "link", "punct",
 ROW = len(ROW_COLS)
 AMP_REC = 4
 P_OK, P_BINARY, P_PYTHON = 0, 1, 2
-# the head of a page whose control chars ocs_ctrl_count counts: the
-# 4,096 codepoints extract._looks_binary reads
-CTRL_HEAD = 4096
-# what run() returns for a page over its control-char limit
-BINARY = "binary"
 
 
 class Segmenter:
-    """The loaded library: ``run(page)`` → (block records, chunk records)
-    as flat int lists in _segment.c's out layout, ``BINARY`` for a page
-    over its control-char limit, or None when the page is left to
-    Python."""
+    """The loaded library: ``segment_batch`` segments the pages of a batch
+    into block columns, ``sums`` adds the block confs."""
 
     def __init__(self, lib: ctypes.CDLL, tag_class: dict):
-        fn = lib.ocs_segment
-        fn.argtypes = (ctypes.c_char_p, ctypes.c_int32, ctypes.c_int32,
-                       ctypes.POINTER(ctypes.c_int32), ctypes.c_int64,
-                       ctypes.POINTER(ctypes.c_int32))
-        fn.restype = ctypes.c_int
         for name, restype in (("ocs_init", ctypes.c_int),
                               ("ocs_ints_per_tag", ctypes.c_int),
                               ("ocs_tag_count", ctypes.c_int),
@@ -87,9 +76,6 @@ class Segmenter:
         lib.ocs_init.argtypes = lib.ocs_ints_per_tag.argtypes = ()
         lib.ocs_tag_count.argtypes = ()
         lib.ocs_tag_name.argtypes = lib.ocs_tag_class.argtypes = (ctypes.c_int,)
-        lib.ocs_ctrl_count.argtypes = (ctypes.c_char_p, ctypes.c_int32)
-        lib.ocs_ctrl_count.restype = ctypes.c_int32
-        self._ctrl = lib.ocs_ctrl_count
         ptr, i32, i64 = ctypes.c_void_p, ctypes.c_int32, ctypes.c_int64
         for name, restype, argtypes in (
                 ("ocs_segment_batch", ctypes.c_int,
@@ -109,44 +95,7 @@ class Segmenter:
         if dict(table) != tag_class or len(table) != len(tag_class):
             raise ValueError("_segment.c tag table differs from _TAG_CLASS")
         self.tags = tuple(name for name, _ in table)
-        self._fn = fn
         self._per_tag = lib.ocs_ints_per_tag()
-        self._local = threading.local()
-
-    def _buffers(self, need: int):
-        local = self._local
-        buf = getattr(local, "buf", None)
-        if buf is None:
-            buf = local.buf = (ctypes.c_int32 * _KEEP_INTS)()
-            local.counts = (ctypes.c_int32 * 2)()
-        if need > _KEEP_INTS:
-            buf = (ctypes.c_int32 * need)()
-        return buf, local.counts
-
-    def run(self, page: str, ctrl_limit: float | None = None):
-        """Segment ``page``.  With ``ctrl_limit``, first count the control
-        chars of its head in the same codepoint buffer: a page where they
-        are more than that fraction of the head is ``BINARY`` and never
-        segmented (``extract._looks_binary``'s test)."""
-        n = len(page)
-        cap = page.count("<")
-        need = self._per_tag * (cap + 1)
-        if need > _MAX_INTS or n > _MAX_LEN:
-            return None
-        data = page.encode(_CODEC, "surrogatepass")
-        if ctrl_limit is not None and n:
-            head = min(n, CTRL_HEAD)
-            if self._ctrl(data, head) / head > ctrl_limit:
-                return BINARY
-        try:
-            buf, counts = self._buffers(need)
-        except MemoryError:
-            return None
-        rc = self._fn(data, n, cap, buf, need, counts)
-        if rc != 0:
-            return None
-        nb = OUT_BLK * counts[0]
-        return buf[:nb], buf[nb:nb + OUT_CHK * counts[1]]
 
     def segment_batch(self, pages: list, ctrl_limit: float):
         """Segment every page of ``pages`` in one call (``ocs_segment_batch``).
@@ -157,10 +106,10 @@ class Segmenter:
         codepoints, ``amp`` (m, AMP_REC) int32 chunk records of the blocks
         with "&", and ``status`` one P_* per page; or None when the call
         fails as a whole.  A page whose head holds more than the fraction
-        ``ctrl_limit`` of control chars is P_BINARY (``run``'s
-        binary-payload test).  The buffers are sized from the batch: k is
-        at most the count of "<", the text at most the codepoints plus
-        k."""
+        ``ctrl_limit`` of control chars is P_BINARY
+        (``extract._looks_binary``'s test).  The buffers are sized from
+        the batch: k is at most the count of "<", the text at most the
+        codepoints plus k."""
         n = len(pages)
         lens = np.fromiter(map(len, pages), np.int64, n)
         caps = np.fromiter((p.count("<") for p in pages), np.int64, n)

@@ -18,11 +18,13 @@ Three implementations of one semantics, pinned equal by
 test_segment_equiv.py: ``segment_spec`` on the stdlib ``html.parser``
 (tolerant of malformed markup; poisoned payloads that still defeat it
 surface as error rows upstream), ``_segment_fused``, a regex token loop
-with the spec's handlers inlined, and the compiled ``_segment.c`` (loaded
-by ``native.py``), which ``segment()`` runs whenever it loads.  The same
-state machine also runs once per Arrow batch for ``kernel/columnar.py``
-(``native.Segmenter.segment_batch``), which takes ``segment_python`` for
-the pages C leaves to Python and ``count_pages`` for the page counters.
+with the spec's handlers inlined, which ``segment()`` runs, and the
+compiled ``_segment.c``, which runs only inside the batch pass of
+``kernel/columnar.py`` (``native.Segmenter.segment_batch``).  The scalar
+oracle (``extract_page``) calls ``segment()``, and so does the batch pass
+for the pages C leaves to Python and for every page without the library;
+``amp_block`` rebuilds the batch pass's blocks with "&" as
+``_segment_fused`` builds them.
 """
 
 from __future__ import annotations
@@ -166,10 +168,8 @@ def segment_spec(html_text: str) -> list[Block]:
 # ---------------------------------------------------------------------------
 import html as _html
 import re as _re
-import threading as _threading
 
-from ocrd_calamari_spark.kernel import native as _native
-from ocrd_calamari_spark.kernel.native import F_AMP, F_ANCHOR, F_WS
+from ocrd_calamari_spark.kernel.native import F_AMP, F_ANCHOR
 
 _TOKEN_RE = _re.compile(
     r"<!--.*?-->"                      # comment
@@ -310,10 +310,10 @@ def _segment_fused(html_text: str) -> list[Block]:
 
 def amp_block(html_text: str, chunks) -> tuple[str, int, int]:
     """A block with "&" rebuilt from its chunk records, (start, end,
-    flags) triples of ``_segment.c``: per chunk the ``html.unescape`` (when
-    it holds "&") and the whitespace replace chain of ``_segment_fused``.
-    Returns (raw text, visible chars, link chars), counted after the
-    unescape."""
+    flags) triples of ``_segment.c``'s batch pass: per chunk the
+    ``html.unescape`` (when it holds "&") and the whitespace replace chain
+    of ``_segment_fused``.  Returns (raw text, visible chars, link chars),
+    counted after the unescape."""
     texts, link = [], 0
     for start, end, flags in chunks:
         data = html_text[start:end]
@@ -327,111 +327,10 @@ def amp_block(html_text: str, chunks) -> tuple[str, int, int]:
     return raw, len(raw) - raw.count(" "), link
 
 
-def _segment_native(seg: _native.Segmenter, html_text: str,
-                    ctrl_limit: float | None = None):
-    """The compiled segmenter (_segment.c, the state machine of
-    ``_segment_fused``) → blocks, ``native.BINARY`` for a page over
-    ``ctrl_limit`` (``Segmenter.run``), or None when it leaves the page to
-    Python.  C reports each kept block's chunk spans; Python slices them,
-    unescapes each chunk that holds "&" and applies the whitespace replace
-    chain, as ``_segment_fused`` does.  A block without "&" is sliced and
-    joined in one piece, mapped only if C saw a chain char in it (the
-    chain maps char by char), and C has counted its visible and link
-    chars; a block with "&" is rebuilt chunk by chunk and counted after
-    the unescape (``amp_block``, which the batch pass of
-    ``kernel/columnar.py`` shares)."""
-    res = seg.run(html_text, ctrl_limit)
-    if res is None or res is _native.BINARY:
-        return res
-    # the out records of _segment.c: 9 ints per block, 3 per chunk
-    brec, crec = res
-    tags = seg.tags
-    blocks = []
-    it = iter(brec)
-    for pos, tag, depth, n_tags, lo, hi, vis, link, flags in zip(*[it] * 9):
-        if not flags & F_AMP:
-            if hi - lo == 1:
-                raw = html_text[crec[3 * lo]:crec[3 * lo + 1]]
-            else:
-                raw = "".join([html_text[crec[j]:crec[j + 1]]
-                               for j in range(3 * lo, 3 * hi, 3)])
-            if flags & F_WS:
-                raw = _map_ws(raw)
-        else:
-            it_c = iter(crec[3 * lo:3 * hi])
-            raw, vis, link = amp_block(html_text, zip(*[it_c] * 3))
-            if vis == 0:
-                continue
-        blocks.append(Block(pos, tags[tag], depth, [raw], link, n_tags,
-                            raw, vis))
-    return blocks
-
-
-# extract_page's error for a binary payload
-_BINARY_PAYLOAD = "binary payload (control-char fraction exceeded)"
-
-# Pages segmented in this process: [by the compiled segmenter, by the
-# Python fallback]; read through page_counts().  Process-wide on purpose:
-# the accumulators report per worker process, as deltas over a task.
-_PAGE_COUNTS = [0, 0]
-_COUNTS_LOCK = _threading.Lock()
-
-
-def page_counts() -> tuple[int, int]:
-    """Pages segmented in this process so far: (native, fallback).
-
-    A function, not the list, is what callers hold: cloudpickle ships a
-    closure's module-level values by copy, but a module function by
-    reference, so a map function on a worker reads the live counts."""
-    with _COUNTS_LOCK:
-        return _PAGE_COUNTS[0], _PAGE_COUNTS[1]
-
-
-def count_pages(native: int, fallback: int) -> None:
-    """Add pages segmented outside ``segment()`` (the batch pass of
-    ``kernel/columnar.py``) to ``page_counts()``."""
-    with _COUNTS_LOCK:
-        _PAGE_COUNTS[0] += native
-        _PAGE_COUNTS[1] += fallback
-
-
-def segment(html_text: str, reject_binary: bool = False) -> list[Block]:
-    """Parse html → candidate blocks in document order (may be empty).
-
-    The compiled segmenter when it loads and accepts the page; else (no
-    compiler, a failed build or load, or a page C or its buffer cannot
-    take) ``segment_python``.
-
-    ``reject_binary``: a binary payload raises extract_page's ValueError
-    before it is segmented.  The compiled segmenter counts the control
-    chars in the codepoint buffer it segments; the Python path calls
-    ``extract._looks_binary``."""
-    seg = _native.load()
-    if seg is not None:
-        if reject_binary:
-            # the test is extract_page's, and extract imports this module
-            from ocrd_calamari_spark.kernel import extract
-        blocks = _segment_native(
-            seg, html_text,
-            extract._CTRL_FRACTION_LIMIT if reject_binary else None)
-        if blocks is _native.BINARY:
-            raise ValueError(_BINARY_PAYLOAD)
-        if blocks is not None:
-            count_pages(1, 0)
-            return blocks
-    return segment_python(html_text, reject_binary)
-
-
-def segment_python(html_text: str, reject_binary: bool = False) -> list[Block]:
-    """``segment()`` without the compiled segmenter: the fused regex
-    tokenizer+segmenter, with the HTMLParser spec as the fallback on scan
-    errors; counted as a fallback page."""
-    if reject_binary:
-        from ocrd_calamari_spark.kernel import extract
-
-        if extract._looks_binary(html_text):
-            raise ValueError(_BINARY_PAYLOAD)
-    count_pages(0, 1)
+def segment(html_text: str) -> list[Block]:
+    """Parse html → candidate blocks in document order (may be empty): the
+    fused regex tokenizer+segmenter, with the HTMLParser spec as the
+    fallback on scan errors."""
     try:
         return _segment_fused(html_text)
     except Exception:

@@ -15,16 +15,14 @@ execution is a correctness requirement (SURVEY.md §7.3).
 ``fuse_votes``.  ``vote_features`` is the same vote over the feature
 columns of a whole batch of blocks, with the scores and the voters on
 numpy arrays (``kernel/columnar.py`` calls it on the batch pass's
-columns); ``vote_blocks`` gathers those features from ``Block`` objects,
-and tests/test_vote_equiv.py pins it equal to ``vote_block`` block for
+columns, with the stopword hits of ``stop_hits_joined``);
+tests/test_vote_equiv.py pins it equal to ``vote_block`` block for
 block.
 """
 
 from __future__ import annotations
 
 import math
-from itertools import repeat
-from operator import attrgetter
 
 import numpy as np
 import pyarrow as pa
@@ -150,7 +148,7 @@ _TAG_BASE = {**_LIST_TAGS, **_CONTENT_TAGS}
 _TIE_BAND = 1e-6
 # a mean score this close to the threshold is voted by vote_block (from
 # 3.12 CPython's sum() of floats compensates, so its last bit may differ
-# from the sequential sum of vote_blocks)
+# from the sequential sum of vote_features)
 _THRESHOLD_BAND = 1e-9
 
 
@@ -190,11 +188,6 @@ def _readability(f: dict) -> np.ndarray:
                    0.0, 1.0)
 
 
-def _n_punct(text: str) -> int:
-    """score_readability's ".!?" count of one block's text."""
-    return text.count(".") + text.count("!") + text.count("?")
-
-
 # the batched form of each scorer of EXTRACTORS
 _BATCHED = {"density": _density, "link_density": _link_density,
             "readability": _readability}
@@ -209,36 +202,21 @@ def profile_index(langs) -> np.ndarray:
     return np.array([col[lang] for lang in langs], dtype=np.int64)
 
 
-def _stop_hits(texts: list, langs) -> np.ndarray:
-    """score_readability's stopword hits per text, capped at 5.
-
-    The texts are lowered in one call: "\\n" joins them, never occurs in
-    a ``raw_text`` (the whitespace replace chain maps it) and ends the
-    final-sigma context of ``str.lower``, so each piece is that text's
-    own ``lower()``."""
-    joined = "\n".join(texts)
-    if joined.count("\n") == len(texts) - 1:
-        return stop_hits_joined(joined + "\n", profile_index(langs))
-    # a text holds "\n" (segment() never makes one)
-    low = pa.array([t.lower().encode("utf-8", "surrogatepass")
-                    for t in texts], pa.binary())
-    return _lowered_hits(low, profile_index(langs))
-
-
 def stop_hits_joined(joined: str, prof: np.ndarray) -> np.ndarray:
-    """``_stop_hits`` of the texts of ``joined``, each followed by "\\n"
-    and holding none, with ``prof[i]`` the profile index of text i."""
+    """score_readability's stopword hits per text, capped at 5, of the
+    texts of ``joined``, each followed by "\\n" and holding none, with
+    ``prof[i]`` the profile index of text i.
+
+    The texts are lowered in one call: "\\n" ends the final-sigma context
+    of ``str.lower``, so each piece is that text's own ``lower()``.  Arrow
+    splits each lowered text at " " and looks each token up once in the
+    union of the profiles; a token counts when the profile of its text
+    holds it.  Tokens compare as UTF-8 bytes (``surrogatepass``), which
+    is ``str`` equality."""
     low = pa.array([joined.lower().encode("utf-8", "surrogatepass")],
                    pa.binary())
     low = pc.split_pattern(low, b"\n").flatten()
-    return _lowered_hits(low.slice(0, len(low) - 1), prof)
-
-
-def _lowered_hits(low: pa.Array, prof: np.ndarray) -> np.ndarray:
-    """Arrow splits each lowered text at " " and looks each token up once
-    in the union of the profiles; a token counts when the profile of its
-    text holds it.  Tokens compare as UTF-8 bytes (``surrogatepass``),
-    which is ``str`` equality."""
+    low = low.slice(0, len(low) - 1)
     tokens = pc.split_pattern(low, b" ")
     tok_blk = np.repeat(np.arange(len(low)),
                         np.diff(tokens.offsets.to_numpy()))
@@ -263,42 +241,6 @@ def tag_base(tags) -> np.ndarray:
     return np.array([_TAG_BASE.get(t, 0.50) for t in tags], dtype=np.float64)
 
 
-def vote_blocks(blocks: list, langs, extractor_names, voter: str,
-                threshold: float) -> tuple[list, list]:
-    """``vote_block`` over many blocks: (accept per block, fused per
-    block), equal to ``[vote_block(b, lang, ...)]`` element for element.
-
-    ``langs`` holds one lang per block.  The features are gathered once
-    per block, the stopword hits once per call (``_stop_hits``), and
-    ``vote_features`` votes on them."""
-    n = len(blocks)
-    if n == 0:
-        return [], []
-    texts = [b.raw_text for b in blocks]
-
-    def column(name):
-        return np.fromiter(map(attrgetter(name), blocks), np.float64, n)
-
-    f = {
-        "vis": np.fromiter(map(Block.visible_len, blocks), np.float64, n),
-        "n_tags": column("n_tags"),
-        "n_link": column("n_link_chars"),
-        "depth": column("depth"),
-        "base": np.fromiter(map(_TAG_BASE.get, map(attrgetter("tag"), blocks),
-                                repeat(0.50)), np.float64, n),
-        "n_punct": np.fromiter(map(_n_punct, texts), np.float64, n),
-    }
-    if "readability" in extractor_names:
-        f["hits"] = _stop_hits(texts, langs).astype(np.float64)
-
-    def revote(i):
-        return vote_block(blocks[i], langs[i], extractor_names, voter,
-                          threshold)
-
-    accept, fused = vote_features(f, extractor_names, voter, threshold, revote)
-    return accept.tolist(), fused.tolist()
-
-
 def vote_features(f: dict, extractor_names, voter: str, threshold: float,
                   revote) -> tuple[np.ndarray, np.ndarray]:
     """The vote of n blocks from their feature columns: (accept, fused) as
@@ -306,7 +248,7 @@ def vote_features(f: dict, extractor_names, voter: str, threshold: float,
 
     ``f`` holds float64 arrays "vis", "n_tags", "n_link", "depth",
     "base" (the tag prior), "n_punct" and, when "readability" votes,
-    "hits" (``_stop_hits``).  The scores and the voters run on float64
+    "hits" (``stop_hits_joined``).  The scores and the voters run on float64
     arrays in the scalar code's operation order, so each IEEE + - * /
     gives the bits the Python floats give, and each ``round(·, 6)`` is
     ``round6``.  A block with a value in round6's tie band (or, for the

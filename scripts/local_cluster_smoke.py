@@ -15,8 +15,10 @@ Checks (all hard asserts):
    one mapInArrow that splits the records and extracts them, no shuffle —
    equals single-process ``extract_batch`` over the same records, split
    by ``records_to_batch`` (the splitter the engine's map runs), per url;
-   the ``segment_native`` accumulator shows that the executors compiled
-   ``kernel/_segment.c`` from the zip and ran it.
+   ``extract_batch`` segments in Python, so this also checks
+   ``kernel/_segment.c`` against an independent implementation, and the
+   ``segment_native`` accumulator shows that the executors compiled it
+   from the zip and ran it.
 
 Usage: python scripts/local_cluster_smoke.py   (~2 min)
 """

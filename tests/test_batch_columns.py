@@ -7,8 +7,8 @@ on a seeded sample with entities and non-Latin text, which ``gen_pages``
 never emits.  Also here: the UTF-8 offsets of the emitted text, the C
 block-conf sums against numpy's ``.sum()`` bit for bit, the
 forced-fallback run at glyph level, the native path of a batch without
-"&" building no Python object per block, and the compile flags in the
-library's cache key."""
+"&" building no Python object per block, the oracle running no compiled
+code, and the compile flags in the library's cache key."""
 
 import os
 import random
@@ -23,7 +23,11 @@ from ocrd_calamari_spark.config import LEVELS, ExtractConfig
 from ocrd_calamari_spark.gen import gen_pages
 from ocrd_calamari_spark.kernel import columnar, native, segment as seg_mod
 from ocrd_calamari_spark.kernel.decode import decode_html
-from ocrd_calamari_spark.kernel.extract import _CTRL_FRACTION_LIMIT
+from ocrd_calamari_spark.kernel.extract import (
+    _BINARY_PAYLOAD,
+    _CTRL_FRACTION_LIMIT,
+    _looks_binary,
+)
 from ocrd_calamari_spark.kernel.fastpath import _MULTISPACE_RE
 from ocrd_calamari_spark.kernel.segment import segment
 
@@ -34,7 +38,9 @@ from test_columnar_equiv import (
     _SURROGATE_PAGE,
     arrow_input,
     assert_equivalent,
+    oracle_rows,
     pages_frame,
+    same,
 )
 
 SEG = native.load()
@@ -45,9 +51,11 @@ needs_native = pytest.mark.skipif(
 
 def spec_rows(page: str):
     """Per kept block of ``segment()``: the batch columns it implies, or the
-    page's error."""
+    page's error (a binary payload's, as ``extract_page`` raises it)."""
     try:
-        blocks = segment(page, reject_binary=True)
+        if _looks_binary(page):
+            raise ValueError(_BINARY_PAYLOAD)
+        blocks = segment(page)
     except Exception as exc:
         return columnar._error(exc)
     rows = []
@@ -219,9 +227,9 @@ def test_pages_over_capacity_go_to_python(monkeypatch):
     status = SEG.segment_batch(pages, _CTRL_FRACTION_LIMIT)[4]
     left = int(np.count_nonzero(status == native.P_PYTHON))
     assert 2 <= left < len(pages)
-    before = seg_mod.page_counts()
+    before = columnar.page_counts()
     assert batch_rows(pages) == want
-    after = seg_mod.page_counts()
+    after = columnar.page_counts()
     assert after[1] - before[1] == left
     assert after[0] - before[0] == len(pages) - left
 
@@ -246,15 +254,38 @@ def test_native_batch_without_amp_has_no_per_block_python(level, monkeypatch):
         return fn
 
     monkeypatch.setattr(seg_mod.Block, "__init__", forbidden("Block"))
-    for name in ("_segment_native", "_segment_fused", "segment_spec"):
+    for name in ("_segment_fused", "segment_spec"):
         monkeypatch.setattr(seg_mod, name, forbidden(name))
-    for name in ("segment_python", "vote_block", "_rebuild_amp",
+    for name in ("segment", "vote_block", "_rebuild_amp",
                  "_python_rows", "_blocks_at"):
         monkeypatch.setattr(columnar, name, forbidden(name))
     got = pa.Table.from_batches(
         list(columnar.arrow_map_fn(cfg, SCHEMA)([arrow_input(pdf)])))
     assert calls == []
     assert got.equals(want)
+
+
+# ---------------------------------------------------------------------------
+# The oracle runs no compiled code
+# ---------------------------------------------------------------------------
+def test_oracle_runs_no_compiled_code(monkeypatch):
+    """``extract_batch`` segments in Python: with ``native.load`` raising,
+    it returns the same rows over generated pages and over the entity
+    sample, and the batch pass's page counters do not move.  So every
+    oracle comparison checks ``_segment.c`` against independent Python."""
+    htmls = [p.encode("utf-8", "surrogatepass") for p in entity_pages(60, 5)]
+    frames = (gen_pages(200, seed=7), pages_frame(htmls))
+    cfg = ExtractConfig(textequiv_level="glyph")
+    want = [oracle_rows(pdf, cfg) for pdf in frames]
+
+    def refuse():
+        raise AssertionError("the oracle loaded the compiled segmenter")
+
+    monkeypatch.setattr(native, "load", refuse)
+    before = columnar.page_counts()
+    for pdf, rows in zip(frames, want):
+        assert same(oracle_rows(pdf, cfg), rows)
+    assert columnar.page_counts() == before
 
 
 # ---------------------------------------------------------------------------

@@ -1,28 +1,36 @@
-"""Differential test: the compiled segmenter (``_segment.c`` through
-``kernel/native.py``), the fused regex tokenizer and the HTMLParser spec
-tokenizer must produce the same blocks on generator output and on
-randomized well-formed-ish HTML: native == fused everywhere, and
+"""Differential test: the compiled segmenter (``_segment.c``'s batch pass
+through ``kernel/native.py``), the fused regex tokenizer and the
+HTMLParser spec tokenizer must produce the same blocks on generator output
+and on randomized well-formed-ish HTML: native == fused everywhere, and
 fused == spec except on the pathological inputs documented below.
-``segment()`` runs the native path whenever it loads, so the tests that
-compare ``segment`` with ``segment_spec`` check native == spec."""
+``segment()`` is the fused loop (the spec only on a scan error), so the
+tests that compare ``segment`` with ``segment_spec`` check fused == spec,
+and the native tests compare the batch pass's block columns with the ones
+``segment()`` implies (``test_batch_columns.batch_rows`` / ``spec_rows``)."""
 
 import os
 import platform
 import random
 import shutil
 
+import numpy as np
 import pytest
 from hypothesis import example, given, settings, strategies as st
 
 from ocrd_calamari_spark.gen import gen_pages
 from ocrd_calamari_spark.kernel import native
 from ocrd_calamari_spark.kernel.decode import decode_html
+from ocrd_calamari_spark.kernel.extract import (
+    _CTRL_FRACTION_LIMIT,
+    _looks_binary,
+)
 from ocrd_calamari_spark.kernel.segment import (
     _segment_fused,
-    _segment_native,
     segment,
     segment_spec,
 )
+
+from test_batch_columns import batch_rows, spec_rows
 
 SEG = native.load()
 needs_native = pytest.mark.skipif(
@@ -39,11 +47,12 @@ def blocks_key(blocks):
     ]
 
 
-def native_key(html):
-    """The native blocks of ``html``; the page must not fall back."""
-    blocks = _segment_native(SEG, html)
-    assert blocks is not None, "the compiled segmenter left the page to Python"
-    return blocks_key(blocks)
+def native_equals_fused(html):
+    """The batch pass takes ``html`` itself (status P_OK) and its block
+    columns equal the ones ``segment()``'s blocks imply."""
+    status = SEG.segment_batch([html], _CTRL_FRACTION_LIMIT)[4]
+    assert status.tolist() == [native.P_OK], "C left the page to Python"
+    return batch_rows([html]) == [spec_rows(html)]
 
 
 def corpus_texts(n, seed):
@@ -223,7 +232,7 @@ def test_build_removes_stale_libraries(tmp_path, monkeypatch):
 def test_corpus_native_equals_fused(seed):
     texts = corpus_texts(1000, seed)
     diffs = [i for i, text in enumerate(texts)
-             if native_key(text) != blocks_key(_segment_fused(text))]
+             if not native_equals_fused(text)]
     assert diffs == []
 
 
@@ -232,7 +241,7 @@ def test_corpus_native_equals_fused(seed):
 @given(frag=html_frag(bound=4097))
 def test_random_html_native_equals_fused(frag):
     html = f"<html><body>{frag}</body></html>"
-    assert native_key(html) == blocks_key(_segment_fused(html))
+    assert native_equals_fused(html)
 
 
 @needs_native
@@ -241,7 +250,7 @@ def test_random_html_native_equals_fused(frag):
 def test_rawtext_and_misnesting_native_equals_fused(frag):
     html = (f"<body><script>var a = '<p>not content</p>';</script>"
             f"<div>{frag}</div><p>tail</p></body>")
-    assert native_key(html) == blocks_key(_segment_fused(html))
+    assert native_equals_fused(html)
 
 
 # re.I folds U+0130 / U+0131 to "i" and U+017F to "s"; HTMLParser's end
@@ -302,7 +311,7 @@ def test_hazards_fused_equals_spec(html):
 @needs_native
 @pytest.mark.parametrize("html", _HAZARDS + _FUSED_ONLY)
 def test_hazards_native_equals_fused(html):
-    assert native_key(html) == blocks_key(_segment_fused(html))
+    assert native_equals_fused(html)
 
 
 def test_rawtext_close_folds_like_re():
@@ -326,7 +335,7 @@ def test_attribute_bound_counts_codepoints(n):
     else:
         assert [b[1] for b in fused] == ["div"]
     if SEG is not None:
-        assert native_key(html) == fused
+        assert native_equals_fused(html)
 
 
 # ---------------------------------------------------------------------------
@@ -344,29 +353,42 @@ _BOUND_PAGES = {
 @pytest.mark.parametrize("name", sorted(_BOUND_PAGES))
 def test_bound_pages_native_equals_fused(name):
     html = _BOUND_PAGES[name]
-    assert native_key(html) == blocks_key(_segment_fused(html))
+    assert native_equals_fused(html)
 
 
 @needs_native
 def test_capacity_overflow_is_an_error_code():
-    """Given less room than the page needs, C returns an error code and
-    writes nothing past the buffer it was given; segment() then runs the
-    fused loop on that page."""
-    import ctypes
-
+    """Given a cap below the page's count of "<", the batch pass leaves the
+    page to Python (P_PYTHON) and writes nothing past the scratch it was
+    given; so does a scratch smaller than the stated cap needs."""
     html = "<div><p>a</p>" * 50 + "</div>"
-    page = html.encode(native._CODEC, "surrogatepass")
-    counts = (ctypes.c_int32 * 2)()
+    data = html.encode(native._CODEC, "surrogatepass")
+    page_off = np.array([0, len(html)], np.int64)
+    n_rows = html.count("<")
+    rows = np.empty((n_rows, native.ROW), np.int32)
+    toff = np.empty(n_rows + 1, np.int64)
+    text = np.empty(len(html) + n_rows, np.uint32)
+    amp = np.empty((n_rows + 1, native.AMP_REC), np.int32)
+    status = np.empty(1, np.int8)
+    counts = np.zeros(3, np.int64)
+
+    def run(cap, scratch_len):
+        scratch = np.full(scratch_len + 64, 0x5A5A5A5A, np.int32)
+        caps = np.array([cap], np.int32)
+        rc = SEG._lib.ocs_segment_batch(
+            data, page_off.ctypes.data, caps.ctypes.data, 1,
+            _CTRL_FRACTION_LIMIT, scratch.ctypes.data, scratch_len,
+            rows.ctypes.data, toff.ctypes.data, len(rows), text.ctypes.data,
+            len(text), amp.ctypes.data, len(amp), status.ctypes.data,
+            counts.ctypes.data)
+        assert rc == 0
+        assert status.tolist() == [native.P_PYTHON]
+        assert counts.tolist() == [0, 0, 0]
+        assert (scratch[scratch_len:] == 0x5A5A5A5A).all()
+
     for cap in (0, 1, 10, 50):
-        need = SEG._per_tag * (cap + 1)
-        buf = (ctypes.c_int32 * (need + 64))()
-        for i in range(need, need + 64):
-            buf[i] = 0x5A5A5A5A
-        rc = SEG._fn(page, len(html), cap, buf, need, counts)
-        assert rc < 0
-        assert list(buf[need:]) == [0x5A5A5A5A] * 64
-    # a buffer smaller than the stated capacity needs is refused outright
-    assert SEG._fn(page, len(html), html.count("<"), buf, 10, counts) < 0
+        run(cap, SEG._per_tag * (cap + 1))
+    run(n_rows, 10)
 
 
 # ---------------------------------------------------------------------------
@@ -395,11 +417,10 @@ def ctrl_texts(draw):
 @settings(max_examples=300, deadline=None)
 @given(text=ctrl_texts())
 def test_ctrl_count_matches_regex(text):
-    from ocrd_calamari_spark.kernel.extract import _CTRL_RE
-
-    data = text.encode(native._CODEC, "surrogatepass")
-    head = min(len(text), native.CTRL_HEAD)
-    assert SEG._ctrl(data, head) == len(_CTRL_RE.findall(text[:4096]))
+    """The batch pass's control-char count of the page head ≡ ``_CTRL_RE``:
+    a page is P_BINARY exactly when ``_looks_binary`` holds."""
+    status = SEG.segment_batch([text], _CTRL_FRACTION_LIMIT)[4]
+    assert (status[0] == native.P_BINARY) == _looks_binary(text)
 
 
 @settings(max_examples=200, deadline=None)
@@ -409,21 +430,16 @@ def test_ctrl_count_matches_regex(text):
 @example(text="a" * 3277 + "\x00" * 2000, native_path=True)
 @example(text="\x00" * 820 + "a" * 3276, native_path=True)
 def test_reject_binary_matches_looks_binary(text, native_path):
-    """segment(..., reject_binary=True) raises extract_page's error exactly
-    when ``_looks_binary`` holds, on the compiled path and on the Python
-    path, and otherwise returns segment()'s blocks."""
+    """The batch pass gives a page extract_page's binary-payload error
+    exactly when ``_looks_binary`` holds, on the compiled path (P_BINARY)
+    and on the Python path, and otherwise ``segment()``'s columns."""
     from unittest import mock
-
-    from ocrd_calamari_spark.kernel.extract import _looks_binary
 
     if native_path and SEG is None:
         return
     with mock.patch.object(native, "load",
                            native.load if native_path else lambda: None):
-        if _looks_binary(text):
-            with pytest.raises(ValueError, match=r"^binary payload "
-                               r"\(control-char fraction exceeded\)$"):
-                segment(text, reject_binary=True)
-        else:
-            assert (blocks_key(segment(text, reject_binary=True))
-                    == blocks_key(segment(text)))
+        assert batch_rows([text]) == [spec_rows(text)]
+    if _looks_binary(text):
+        assert spec_rows(text) == ("ValueError: binary payload "
+                                   "(control-char fraction exceeded)")

@@ -1,6 +1,9 @@
-"""The batched vote (``vote.vote_blocks``) ≡ the scalar specification
+"""The batched vote (``vote.vote_features`` on feature columns, with the
+stopword hits of ``vote.stop_hits_joined``) ≡ the scalar specification
 (``vote.vote_block``), block for block and bit for bit: the accept flag
-as a Python bool and the fused confidence as the same float."""
+as a Python bool and the fused confidence as the same float.  The
+features are gathered from ``Block`` objects here, as ``kernel/columnar.py``
+gathers them from the batch columns."""
 
 import numpy as np
 import pytest
@@ -11,7 +14,14 @@ from ocrd_calamari_spark.gen import gen_pages
 from ocrd_calamari_spark.kernel import vote
 from ocrd_calamari_spark.kernel.decode import decode_html
 from ocrd_calamari_spark.kernel.segment import Block, segment
-from ocrd_calamari_spark.kernel.vote import round6, vote_block, vote_blocks
+from ocrd_calamari_spark.kernel.vote import (
+    profile_index,
+    round6,
+    stop_hits_joined,
+    tag_base,
+    vote_block,
+    vote_features,
+)
 
 LANGS = [None, "en", "de", "fr", "xx"]
 # stopwords in every case, and tokens whose lower() is (or is not) one:
@@ -57,11 +67,40 @@ def _bits(votes):
     return [(type(a), a, type(f), f.hex()) for a, f in votes]
 
 
+def _features(blks, langs) -> dict:
+    """``vote_features``' columns of ``blks``: the stopword hits over the
+    "\\n"-joined texts (none holds "\\n"), one lang per block."""
+    texts = [b.raw_text for b in blks]
+    f = {
+        "vis": [b.visible_len() for b in blks],
+        "n_tags": [b.n_tags for b in blks],
+        "n_link": [b.n_link_chars for b in blks],
+        "depth": [b.depth for b in blks],
+        "base": tag_base([b.tag for b in blks]),
+        "n_punct": [t.count(".") + t.count("!") + t.count("?")
+                    for t in texts],
+        "hits": stop_hits_joined("".join(t + "\n" for t in texts),
+                                 profile_index(langs)),
+    }
+    return {k: np.asarray(v, np.float64) for k, v in f.items()}
+
+
+def _vote(blks, langs, names, voter, threshold):
+    """(accept, fused) lists of ``vote_features`` over ``blks``; the guard
+    band revotes through ``vote.vote_block``."""
+    def revote(i):
+        return vote.vote_block(blks[i], langs[i], names, voter, threshold)
+
+    accept, fused = vote_features(_features(blks, langs), names, voter,
+                                  threshold, revote)
+    return accept.tolist(), fused.tolist()
+
+
 def _check(blks, langs, names=ENSEMBLE, voter=VOTERS[0],
            threshold=ACCEPT_THRESHOLD):
     want = [vote_block(b, lang, names, voter, threshold)
             for b, lang in zip(blks, langs)]
-    accept, fused = vote_blocks(blks, langs, names, voter, threshold)
+    accept, fused = _vote(blks, langs, names, voter, threshold)
     assert _bits(zip(accept, fused)) == _bits(want)
 
 
@@ -75,7 +114,7 @@ def _check(blks, langs, names=ENSEMBLE, voter=VOTERS[0],
 )
 @example(items=[(_block("die the le"), "de")], voter=VOTERS[0],
          names=ENSEMBLE, threshold=ACCEPT_THRESHOLD)
-def test_vote_blocks_equals_vote_block(items, voter, names, threshold):
+def test_vote_features_equals_vote_block(items, voter, names, threshold):
     _check([b for b, _ in items], [lang for _, lang in items], names, voter,
            threshold)
 
@@ -96,16 +135,6 @@ def test_corpus_blocks(voter):
             langs.append(lang)
     assert len(blks) > 1000
     _check(blks, langs, voter=voter)
-
-
-def test_text_holding_newline():
-    """segment() never leaves "\\n" in a block, but a block that holds one
-    is still voted per token of its own text: "a\\nthe" is one token."""
-    blks = [_block("word a\nthe of and"), _block("the and of a is that"),
-            _block("x\n"), _block("\nthe")]
-    _check(blks, ["en"] * 4)
-    hits = vote._stop_hits([b.raw_text for b in blks], ["en"] * 4)
-    assert hits.tolist() == [2, 5, 0, 0]
 
 
 def test_round6_grid_around_every_tie():
@@ -146,8 +175,7 @@ def test_guard_band_revotes_in_python(monkeypatch):
         return real(block, *args)
 
     monkeypatch.setattr(vote, "vote_block", counting)
-    accept, fused = vote_blocks(blks, ["en"] * 4, ENSEMBLE, VOTERS[0],
-                                ACCEPT_THRESHOLD)
+    _vote(blks, ["en"] * 4, ENSEMBLE, VOTERS[0], ACCEPT_THRESHOLD)
     assert redone == [tie, at_threshold]
     monkeypatch.undo()
     _check(blks, ["en"] * 4)
