@@ -1450,46 +1450,6 @@ PREPARE_CORPUS_SQL = _prepare_corpus_sql()
 # ---------------------------------------------------------------------------
 
 
-def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish pre-tokenization token counting (LLM token-budget estimate)."""
-    from ocrd_calamari_spark.functions.text import bpe_ish_token_count
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", bpe_ish_token_count("text").alias("n_bpe_tokens"))
-
-
-BPE_TOKEN_SQL = r"""
-SELECT doc_id,
-       CAST(length(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]'))
-            AS BIGINT) AS n_bpe_tokens
-FROM documents
-"""
-
-
-def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-training support: the first BPE merge iteration — corpus
-    top-50 adjacent character-pair frequencies inside whitespace tokens.
-    Pure map + alphabet-sized aggregation; TakeOrdered top-k."""
-    from ocrd_calamari_spark.functions.text import bpe_pair_counts
-
-    return bpe_pair_counts(_tw(spark, sf_dir, "documents"))
-
-
-BPE_PAIR_SQL = r"""
-WITH toks AS (
-  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-  FROM documents
-), pairs AS (
-  SELECT unnest(list_transform(range(1, strlen(tok)),
-                               i -> substr(tok, CAST(i AS INTEGER), 2)))
-         AS pair
-  FROM toks WHERE strlen(tok) >= 2
-)
-SELECT pair, CAST(count(*) AS BIGINT) AS n
-FROM pairs GROUP BY pair ORDER BY n DESC, pair LIMIT 50
-"""
-
-
 def q_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-filter cascade with exact per-stage drop accounting in
     ONE corpus scan (functions/text.py:quality_funnel): every signal
@@ -1527,75 +1487,6 @@ FROM staged GROUP BY stage_no ORDER BY stage_no
 QUALITY_FUNNEL_SQL = _funnel_sql()
 
 
-def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer training END-TO-END: 12 greedy BPE merge iterations over
-    the documents corpus (functions/text.py:bpe_train_merges) — the
-    corpus collapses to a word-frequency table in ONE scan and the loop
-    never touches it again; each iteration is a vocab-sized pair count
-    + a 1-row TakeOrdered argmax + a pure-map literal replace.  The
-    DuckDB twin unrolls the same 12 iterations as successive CTEs over
-    the identical separator-wrapped string representation, so the merge
-    table is hash-exact: same pairs, same ranks, same counts."""
-    from ocrd_calamari_spark.functions.text import bpe_train_merges
-
-    return bpe_train_merges(
-        _t(spark, sf_dir, "documents"), n_merges=12
-    ).orderBy("merge_rank")
-
-
-def _bpe_sql(n_merges: int = 12) -> str:
-    """Unrolled-CTE DuckDB twin of bpe_train_merges (same pattern as
-    _hits_sql): w0 = separator-wrapped word-frequency table; per round r,
-    p_r = adjacent-pair counts, t_r = deterministic argmax, w_r = the
-    merge applied via the same literal replace.
-
-    The w_r CTEs MUST be ``AS MATERIALIZED``: each is referenced twice
-    (by p_{r+1} and w_{r+1}), and DuckDB inlines non-materialized CTEs,
-    which doubles the recomputation per unroll level — 2^12 copies of
-    the word-table scan for 12 merges (measured: the inlined form never
-    finished at sf0.001; materialized runs in 0.17 s)."""
-    S = "chr(31)"
-    parts = [f"""w0 AS MATERIALIZED (
-  SELECT CAST(count(*) AS BIGINT) AS cnt,
-         {S} || array_to_string(regexp_split_to_array(w, ''), {S}||{S})
-            || {S} AS s
-  FROM (
-    SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-    FROM documents
-  ) WHERE regexp_matches(w, '^[\\x20-\\x7e]+$')
-  GROUP BY w
-)"""]
-    for r in range(1, n_merges + 1):
-        parts.append(f"""p{r} AS (
-  SELECT struct_extract(z, 1) AS lhs, struct_extract(z, 2) AS rhs,
-         CAST(sum(cnt) AS BIGINT) AS pair_count
-  FROM (
-    SELECT cnt, unnest(list_zip(toks, toks[2:])) AS z
-    FROM (SELECT cnt, string_split(trim(s, {S}), {S}||{S}) AS toks
-          FROM w{r - 1})
-  ) WHERE struct_extract(z, 2) IS NOT NULL
-  GROUP BY 1, 2
-)""")
-        parts.append(f"""t{r} AS (
-  SELECT lhs, rhs, pair_count FROM p{r}
-  ORDER BY pair_count DESC, lhs, rhs LIMIT 1
-)""")
-        parts.append(f"""w{r} AS MATERIALIZED (
-  SELECT cnt,
-         replace(s, {S}||lhs||{S}||{S}||rhs||{S}, {S}||lhs||rhs||{S}) AS s
-  FROM w{r - 1} CROSS JOIN t{r}
-)""")
-    sel = "\nUNION ALL\n".join(
-        f"SELECT CAST({r} AS BIGINT) AS merge_rank, lhs, rhs, "
-        f"lhs||rhs AS merged, pair_count FROM t{r}"
-        for r in range(1, n_merges + 1)
-    )
-    return "WITH " + ",\n".join(parts) + "\n" + sel + "\nORDER BY merge_rank"
-
-
-BPE_TRAIN_SQL = _bpe_sql(12)
-
-
 def q_domain_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixture-design support: per-source χ² divergence of unigram
     distributions vs the corpus (closed-form absent-token mass — only
@@ -1629,34 +1520,6 @@ terms AS (
 )
 SELECT domain, CAST(1e0 + CAST(SUM(q) AS DOUBLE) / 1e12 AS DOUBLE) AS chi2
 FROM terms GROUP BY domain ORDER BY domain
-"""
-
-
-def q_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-lang exact p50/p90/p99 of n_chars via a value histogram: the
-    shuffle ships (lang, n_chars, partial-count) after map-side combine
-    — bounded by the value grid, independent of row count — instead of
-    every row the sort-based percentile would move."""
-    from ocrd_calamari_spark.functions.profile import histogram_quantiles
-
-    d = _t(spark, sf_dir, "documents").select("lang", "n_chars")
-    return histogram_quantiles(d, "lang", "n_chars").orderBy("lang")
-
-
-HISTOGRAM_QUANTILES_SQL = """
-WITH h AS (
-  SELECT lang, n_chars, COUNT(*) AS c FROM documents GROUP BY 1, 2
-), cum AS (
-  SELECT lang, n_chars,
-         SUM(c) OVER (PARTITION BY lang ORDER BY n_chars) AS cum,
-         SUM(c) OVER (PARTITION BY lang) AS n
-  FROM h
-)
-SELECT lang,
-       MIN(CASE WHEN cum >= CEIL(5e-1 * n) THEN n_chars END) AS p50,
-       MIN(CASE WHEN cum >= CEIL(9e-1 * n) THEN n_chars END) AS p90,
-       MIN(CASE WHEN cum >= CEIL(9.9e-1 * n) THEN n_chars END) AS p99
-FROM cum GROUP BY lang ORDER BY lang
 """
 
 
@@ -1885,100 +1748,15 @@ ORDER BY pmi_ratio DESC, a, b LIMIT 50
 """
 
 
-def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/test split with a NEAR-DUP LEAKAGE GUARD: the classic silent
-    eval-contamination failure is a near-duplicate pair straddling
-    train/test — a per-doc hash split guarantees it at scale.  Fix by
-    composition: exact-Jaccard pairs (threshold 0.5, trigrams — same
-    operating point as `jaccard_dedup`) → connected components → every
-    member of a component splits by the COMPONENT representative's hash,
-    so a whole dup-cluster lands on one side; singletons hash their own
-    id (identical to plain `train_test_split` for them — incremental
-    stability preserved).  Scale: adds one (doc, component) join on top
-    of the dedup pass the pipeline already runs; the split itself stays a
-    pure hash function.  Output is hash-exact (ints + md5 strings)."""
-    from ocrd_calamari_spark.functions.dedup import (
-        PORTABLE_TOKEN_HASH_SQL, connected_components, jaccard_index_dedup)
-    from ocrd_calamari_spark.functions.profile import hash_split
-
-    corpus = _with_injected_dups(spark, sf_dir)
-    pairs = jaccard_index_dedup(corpus, threshold=0.5, shingle_k=3)
-    comp = connected_components(pairs.select("id_a", "id_b"))
-    assigned = (
-        corpus.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component"), F.col("doc_id")).alias(
-                "component"),
-        )
-    )
-    tmpl = (
-        "pmod(" + PORTABLE_TOKEN_HASH_SQL.format(t="cast({t} as string)")
-        + ", 100)"
-    )
-    return hash_split(
-        assigned, "component", {"train": 98, "valid": 1, "test": 1},
-        hash_sql=tmpl,
-    ).orderBy("doc_id")
-
-
-LEAKAGE_SPLIT_SQL = r"""
-WITH RECURSIVE corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text || ' extra tail token' AS text
-  FROM documents WHERE doc_id < 40
-), sh AS (
-  SELECT doc_id,
-         list_distinct([array_to_string(tokens[i:i+2], ' ')
-                        for i in range(1, greatest(len(tokens)-2, 1)+1)]) AS s
-  FROM (SELECT doc_id,
-               string_split_regex(trim(lower(text)), '\s+') AS tokens
-        FROM corpus)
-), p AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-  WHERE len(list_intersect(a.s, b.s)) * 1e0
-          / len(list_distinct(list_concat(a.s, b.s))) >= 5e-1
-), edges AS (
-  SELECT id_a AS a, id_b AS b FROM p
-  UNION ALL
-  SELECT id_b, id_a FROM p
-), nodes AS (
-  SELECT DISTINCT a AS v FROM edges
-), reach(v, lbl) AS (
-  SELECT v, v FROM nodes
-  UNION
-  SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.v
-), comp AS (
-  SELECT v AS doc_id, CAST(min(lbl) AS BIGINT) AS component
-  FROM reach GROUP BY v
-), assigned AS (
-  SELECT c.doc_id, COALESCE(k.component, c.doc_id) AS component
-  FROM corpus c LEFT JOIN comp k USING (doc_id)
-)
-SELECT doc_id, component,
-       CASE WHEN h < 98 THEN 'train'
-            WHEN h < 99 THEN 'valid'
-            ELSE 'test' END AS split
-FROM (SELECT doc_id, component,
-             ('0x' || substr(md5(CAST(component AS VARCHAR)), 1, 15))::BIGINT
-               % 100 AS h
-      FROM assigned)
-ORDER BY doc_id
-"""
-
-
 def q_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-adjusted corpus token accounting — the number a data-budget
     (scaling-law) plan actually gets to spend: near-dup clusters (exact
-    Jaccard 0.5 / trigrams → connected components, the leakage_safe_split
-    relation) contribute only their representative's tokens.  One row:
-    raw vs effective docs/tokens and the duplicated-token share in basis
-    points.  Scale: one (doc, component) join + a component-cardinality
-    keeper agg on top of the dedup pass the pipeline already runs; token
-    counts ride the shared SQL subset so the row is hash-exact."""
+    Jaccard 0.5 / trigrams → connected components) contribute only their
+    representative's tokens.  One row: raw vs effective docs/tokens and
+    the duplicated-token share in basis points.  Scale: one (doc,
+    component) join + a component-cardinality keeper agg on top of the
+    dedup pass the pipeline already runs; token counts ride the shared
+    SQL subset so the row is hash-exact."""
     from ocrd_calamari_spark.functions.dedup import (
         connected_components, jaccard_index_dedup)
     from ocrd_calamari_spark.functions.text import token_count_sql
@@ -2386,64 +2164,6 @@ SELECT doc_id, score FROM agg ORDER BY score DESC, doc_id LIMIT 20
 """
 
 
-def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass per-column data-quality profile of the events table."""
-    from ocrd_calamari_spark.functions.profile import profile_columns
-
-    e = _t(spark, sf_dir, "events")
-    return profile_columns(
-        e, ["event_id", "event_type", "props", "user_id", "value"]
-    ).orderBy("column_name")
-
-
-PROFILE_SQL = """
-SELECT 'event_id' AS column_name,
-       CAST(count(*) FILTER (event_id IS NULL) AS BIGINT) AS n_nulls,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct FROM events
-UNION ALL
-SELECT 'event_type', CAST(count(*) FILTER (event_type IS NULL) AS BIGINT),
-       CAST(count(DISTINCT event_type) AS BIGINT) FROM events
-UNION ALL
-SELECT 'props', CAST(count(*) FILTER (props IS NULL) AS BIGINT),
-       CAST(count(DISTINCT props) AS BIGINT) FROM events
-UNION ALL
-SELECT 'user_id', CAST(count(*) FILTER (user_id IS NULL) AS BIGINT),
-       CAST(count(DISTINCT user_id) AS BIGINT) FROM events
-UNION ALL
-SELECT 'value', CAST(count(*) FILTER (value IS NULL) AS BIGINT),
-       CAST(count(DISTINCT value) AS BIGINT) FROM events
-ORDER BY column_name
-"""
-
-
-def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 98/1/1 split by portable id hash: membership is a pure
-    function of doc_id — stable under reruns, cluster size, and corpus
-    growth (new docs never reshuffle old assignments)."""
-    from ocrd_calamari_spark.functions.dedup import PORTABLE_TOKEN_HASH_SQL
-    from ocrd_calamari_spark.functions.profile import hash_split
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    tmpl = (
-        "pmod(" + PORTABLE_TOKEN_HASH_SQL.format(t="cast({t} as string)")
-        + ", 100)"
-    )
-    return hash_split(d, "doc_id", hash_sql=tmpl).orderBy("doc_id")
-
-
-SPLIT_SQL = """
-SELECT doc_id,
-       CASE WHEN h < 98 THEN 'train'
-            WHEN h < 99 THEN 'valid'
-            ELSE 'test' END AS split
-FROM (SELECT doc_id,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-               % 100 AS h
-      FROM documents)
-ORDER BY doc_id
-"""
-
-
 def q_keep_best_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters keep their HIGHEST-QUALITY member
     (functions/dedup.py:keep_best), not the arbitrary min-id — the
@@ -2515,130 +2235,6 @@ SELECT doc_id, component, q,
        (row_number() OVER (PARTITION BY component
                            ORDER BY q DESC, doc_id) = 1) AS kept
 FROM members ORDER BY doc_id
-"""
-
-
-def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-weighted deterministic Bernoulli sampling
-    (functions/profile.py:weighted_sample): keep rate per DOCUMENT ∝ its
-    quality score (the importance-resampling step of classifier-pruned
-    corpora).  Pure
-    row-local map+filter — no shuffle; the portable md5 hash makes the
-    kept set reproducible across engines."""
-    from ocrd_calamari_spark.functions.dedup import PORTABLE_TOKEN_HASH_SQL
-    from ocrd_calamari_spark.functions.profile import weighted_sample
-    from ocrd_calamari_spark.functions.text import quality_score_sql
-
-    d = _t(spark, sf_dir, "documents")
-    scored = d.select(
-        "doc_id",
-        F.expr(
-            "cast(least(floor((" + quality_score_sql("text")
-            + ") * 1e3), 1e3) as bigint)"
-        ).alias("w"),
-    )
-    return weighted_sample(
-        scored, "doc_id", "w", den=1000, hash_sql=PORTABLE_TOKEN_HASH_SQL
-    ).orderBy("doc_id")
-
-
-def _weighted_sample_sql() -> str:
-    from ocrd_calamari_spark.functions.text import quality_score_sql
-
-    return f"""
-WITH s AS (
-  SELECT doc_id,
-         CAST(least(floor(({quality_score_sql('text')}) * 1e3), 1e3)
-              AS BIGINT) AS w
-  FROM documents
-)
-SELECT doc_id, w FROM s
-WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-        % 1000 < w
-ORDER BY doc_id
-"""
-
-
-def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hot-key shuffle diagnostic (functions/profile.py:skew_report): the
-    15 heaviest join-key groups with exact integer share (basis points)
-    and mean-multiple — the pre-flight check that decides salting / AQE
-    skew handling before a 100 TB shuffle.  Per-key counts partial-agg
-    map-side; totals are a 1-row broadcast; top-k is TakeOrdered."""
-    from ocrd_calamari_spark.functions.profile import skew_report
-
-    d = _t(spark, sf_dir, "events")
-    return skew_report(d, "user_id", top_k=15).orderBy("rank")
-
-
-SKEW_REPORT_SQL = """
-WITH c AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY user_id
-), t AS (
-  SELECT CAST(sum(n) AS BIGINT) AS tot, count(*) AS nkeys FROM c
-)
-SELECT user_id, n,
-       CAST(floor(n * 10000 / tot) AS BIGINT) AS share_bp,
-       CAST(floor(n * 100 * nkeys / tot) AS BIGINT) AS mult_x100,
-       CAST(row_number() OVER (ORDER BY n DESC, user_id) AS BIGINT) AS rank
-FROM c, t ORDER BY n DESC, user_id LIMIT 15
-"""
-
-
-def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain two-sample KS drift of the doc-length distribution vs
-    the rest of the corpus (functions/profile.py:ks_drift) — the
-    numeric-marginal distribution-shift monitor (domain_divergence is
-    the token-content sibling).  Cross-multiplied integer CDFs, one
-    final IEEE division — hash-exact; shuffle volume is domains x
-    length-grid (width 50), independent of row count."""
-    from ocrd_calamari_spark.functions.profile import ks_drift
-
-    d = _t(spark, sf_dir, "documents")
-    return ks_drift(d, "source", "n_chars", bucket_width=50).orderBy(
-        "domain"
-    )
-
-
-KS_DRIFT_SQL = """
-WITH h AS (
-  SELECT source AS g, CAST(floor(n_chars / 50) * 50 AS BIGINT) AS v,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM documents GROUP BY 1, 2
-), tv AS (
-  SELECT v, CAST(SUM(c) AS BIGINT) AS c_all FROM h GROUP BY v
-), grid AS (
-  SELECT v, CAST(SUM(c_all) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-               AS BIGINT) AS cum_all
-  FROM tv
-), tot AS (
-  SELECT CAST(SUM(c) AS BIGINT) AS n FROM h
-), gs AS (
-  SELECT g, CAST(SUM(c) AS BIGINT) AS n_g FROM h GROUP BY g
-), cums AS (
-  SELECT gs.g, gs.n_g, grid.v, grid.cum_all,
-         CAST(SUM(COALESCE(h.c, 0)) OVER (
-                PARTITION BY gs.g ORDER BY grid.v
-                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_g
-  FROM gs CROSS JOIN grid
-  LEFT JOIN h ON h.g = gs.g AND h.v = grid.v
-), nums AS (
-  SELECT g, n_g, v, n,
-         abs(CAST(cum_g AS DECIMAL(18,0)) * CAST(n - n_g AS DECIMAL(18,0))
-             - CAST(cum_all - cum_g AS DECIMAL(18,0))
-               * CAST(n_g AS DECIMAL(18,0))) AS num
-  FROM cums CROSS JOIN tot
-), m AS (
-  SELECT g, n_g, n, MAX(num) AS num FROM nums GROUP BY 1, 2, 3
-)
-SELECT m.g AS domain, m.n_g AS n_docs,
-       CASE WHEN m.n = m.n_g THEN 0e0
-            ELSE (CAST(m.num AS DOUBLE)
-                  / (CAST(m.n_g AS DOUBLE)
-                     * CAST(m.n - m.n_g AS DOUBLE))) END AS ks,
-       MIN(nums.v) AS at_v
-FROM m JOIN nums ON nums.g = m.g AND nums.num = m.num
-GROUP BY 1, 2, 3 ORDER BY domain
 """
 
 
@@ -2732,68 +2328,6 @@ def q_compression_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     return compression_signal(d).orderBy("doc_id")
-
-
-def q_adaptive_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADAPTIVE quality filtering: keep docs at or above their own
-    domain's p25 quality — per-domain thresholds instead of one global
-    cutoff (a global bar over-prunes terse domains and under-prunes
-    verbose ones; per-stratum quantile thresholds are the standard fix).
-    Composition: integer-quantized quality → `histogram_quantiles`
-    (state bounded by the quality GRID, never rows) → host-cardinality
-    threshold table joins back (AQE-broadcast).  The scored projection
-    (doc_id, host, q_bp) is persisted so the corpus text is scanned
-    once, not once per side; caller owns the cache (cleared by
-    bench/check_oracles between queries)."""
-    from ocrd_calamari_spark.functions.profile import histogram_quantiles
-    from ocrd_calamari_spark.functions.text import quality_score_sql
-
-    d = _t(spark, sf_dir, "documents")
-    host = F.concat(
-        F.lit("host"), F.lpad((F.col("doc_id") % 40).cast("string"), 2, "0")
-    )
-    scored = d.select(
-        host.alias("host"),
-        "doc_id",
-        F.expr(
-            "cast(floor((" + quality_score_sql("text") + ") * 1e4) as bigint)"
-        ).alias("q_bp"),
-    ).persist()
-    thr = histogram_quantiles(scored, "host", "q_bp", qs={"p25": 0.25})
-    return (
-        scored.join(thr.select("host", "p25"), "host")
-        .where(F.col("q_bp") >= F.col("p25"))
-        .select("doc_id", "host", "q_bp", "p25")
-        .orderBy("doc_id")
-    )
-
-
-def _adaptive_quality_sql() -> str:
-    from ocrd_calamari_spark.functions.text import quality_score_sql
-
-    return f"""
-WITH scored AS (
-  SELECT 'host' || lpad(CAST(doc_id % 40 AS VARCHAR), 2, '0') AS host,
-         doc_id,
-         CAST(floor(({quality_score_sql('text')}) * 1e4) AS BIGINT) AS q_bp
-  FROM documents
-), h AS (
-  SELECT host, q_bp, count(*) AS c FROM scored GROUP BY 1, 2
-), cum AS (
-  SELECT host, q_bp,
-         SUM(c) OVER (PARTITION BY host ORDER BY q_bp) AS cum,
-         SUM(c) OVER (PARTITION BY host) AS n
-  FROM h
-), thr AS (
-  SELECT host,
-         MIN(CASE WHEN cum >= CEIL(2.5e-1 * n) THEN q_bp END) AS p25
-  FROM cum GROUP BY host
-)
-SELECT s.doc_id, s.host, s.q_bp, t.p25
-FROM scored s JOIN thr t USING (host)
-WHERE s.q_bp >= t.p25
-ORDER BY s.doc_id
-"""
 
 
 def q_intra_doc_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3281,240 +2815,12 @@ ORDER BY doc_id
 """
 
 
-def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer APPLICATION: encode the corpus with the merge table
-    `bpe_train` learns (8 merges here) and report per-doc subword counts
-    — the token-budget accounting step after training
-    (functions/text.py:bpe_encode_counts).  Scale shape: merges apply to
-    the DISTINCT-word table only (vocab-sized, nested literal replaces —
-    never a per-corpus-token loop); docs then broadcast-join the
-    (word → n_subwords) map and aggregate; the 8-row merge-table collect
-    is the only driver state."""
-    from ocrd_calamari_spark.functions.text import (
-        bpe_encode_counts, bpe_train_merges)
-
-    docs = _tw(spark, sf_dir, "documents")
-    merges = [
-        (r["lhs"], r["rhs"])
-        for r in bpe_train_merges(docs, n_merges=8)
-        .orderBy("merge_rank")
-        .collect()  # bounded: exactly n_merges rows
-    ]
-    return bpe_encode_counts(docs, merges).transform(_psort, "doc_id")
-
-
-def _bpe_encode_sql(n_merges: int = 8) -> str:
-    """Unrolled-CTE DuckDB twin of train-then-encode: the v_r chain is
-    BPE_TRAIN_SQL's w_r chain carrying the word key through every round
-    (same cnt weights, same deterministic argmax, same literal replace),
-    then each doc's words join the final per-word subword counts."""
-    S = "chr(31)"
-    parts = [f"""v0 AS MATERIALIZED (
-  SELECT w, CAST(count(*) AS BIGINT) AS cnt,
-         {S} || array_to_string(regexp_split_to_array(w, ''), {S}||{S})
-            || {S} AS s
-  FROM (
-    SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-    FROM documents
-  ) WHERE regexp_matches(w, '^[\\x20-\\x7e]+$')
-  GROUP BY w
-)"""]
-    for r in range(1, n_merges + 1):
-        parts.append(f"""p{r} AS (
-  SELECT struct_extract(z, 1) AS lhs, struct_extract(z, 2) AS rhs,
-         CAST(sum(cnt) AS BIGINT) AS pair_count
-  FROM (
-    SELECT cnt, unnest(list_zip(toks, toks[2:])) AS z
-    FROM (SELECT cnt, string_split(trim(s, {S}), {S}||{S}) AS toks
-          FROM v{r - 1})
-  ) WHERE struct_extract(z, 2) IS NOT NULL
-  GROUP BY 1, 2
-)""")
-        parts.append(f"""t{r} AS (
-  SELECT lhs, rhs FROM p{r}
-  ORDER BY pair_count DESC, lhs, rhs LIMIT 1
-)""")
-        parts.append(f"""v{r} AS MATERIALIZED (
-  SELECT w, cnt,
-         replace(s, {S}||lhs||{S}||{S}||rhs||{S}, {S}||lhs||rhs||{S}) AS s
-  FROM v{r - 1} CROSS JOIN t{r}
-)""")
-    joined = ",\n".join(parts)
-    return f"""WITH {joined},
-enc AS (
-  SELECT w, CAST(len(string_split(trim(s, {S}), {S}||{S})) AS BIGINT)
-           AS n_sub
-  FROM v{n_merges}
-), docw AS (
-  SELECT doc_id, w FROM (
-    SELECT doc_id,
-           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-    FROM documents
-  ) WHERE regexp_matches(w, '^[\\x20-\\x7e]+$')
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-       CAST(sum(n_sub) AS BIGINT) AS n_subwords
-FROM docw JOIN enc USING (w)
-GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-BPE_ENCODE_SQL = _bpe_encode_sql(8)
-
-
-# An EXTERNAL tokenizer's merge list (order matters — it is the trained
-# artifact).  The production shape SCALE.md prescribes: a frozen
-# tokenizer prices a NEW corpus in one pass, no retraining — this
-# fixture stands in for e.g. a GPT-2/Llama merge table shipped as a
-# file.  Alphabetic ASCII only, matching the encode-side token filter.
-FROZEN_MERGES: list[tuple[str, str]] = [
-    ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"), ("an", "d"),
-    ("e", "r"), ("o", "n"), ("r", "e"), ("e", "n"), ("o", "u"),
-]
-
-
-def q_bpe_encode_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frozen-tokenizer corpus pricing: apply an EXTERNAL merge list
-    (FROZEN_MERGES — no training stage at all) and report per-doc
-    subword counts (functions/text.py:bpe_encode_counts).  Scale shape:
-    identical to bpe_encode minus the train scans — merges are literal
-    replaces over the DISTINCT-word table, the corpus joins the
-    (word → n_subwords) map (broadcast under the size switch, shuffled
-    equi-join above it), ZERO driver-side merge collect."""
-    from ocrd_calamari_spark.functions.text import bpe_encode_counts
-
-    docs = _t(spark, sf_dir, "documents")
-    return bpe_encode_counts(docs, FROZEN_MERGES).orderBy("doc_id")
-
-
-def _bpe_encode_frozen_sql(merges: list[tuple[str, str]]) -> str:
-    """DuckDB twin of the frozen-merge encode: the same nested literal
-    replace chain over the distinct-word table, then the doc join."""
-    S = "chr(31)"
-    expr = "s"
-    for lhs, rhs in merges:
-        pat = f"{S}||'{lhs}'||{S}||{S}||'{rhs}'||{S}"
-        rep = f"{S}||'{lhs}{rhs}'||{S}"
-        expr = f"replace({expr}, {pat}, {rep})"
-    return f"""WITH vocab AS (
-  SELECT DISTINCT w FROM (
-    SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-    FROM documents
-  ) WHERE regexp_matches(w, '^[\\x20-\\x7e]+$')
-), enc AS (
-  SELECT w, CAST(len(string_split(trim({expr}, {S}), {S}||{S}))
-                 AS BIGINT) AS n_sub
-  FROM (
-    SELECT w, {S} || array_to_string(regexp_split_to_array(w, ''),
-                                     {S}||{S}) || {S} AS s
-    FROM vocab
-  )
-), docw AS (
-  SELECT doc_id, w FROM (
-    SELECT doc_id,
-           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-    FROM documents
-  ) WHERE regexp_matches(w, '^[\\x20-\\x7e]+$')
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-       CAST(sum(n_sub) AS BIGINT) AS n_subwords
-FROM docw JOIN enc USING (w)
-GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-BPE_ENCODE_FROZEN_SQL = _bpe_encode_frozen_sql(FROZEN_MERGES)
-
-
-def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language tokenizer fertility (mean subwords per word) under
-    the frozen merge list — the tokenizer-fairness audit: a language
-    whose fertility is far above the corpus mean pays proportionally
-    more of the context window per word, so mixture weights based on
-    raw token counts silently under-sample it.  Composes the frozen
-    encode (functions/text.py:bpe_encode_counts) with a doc→lang join
-    and a language-cardinality agg; fertility is ONE IEEE division of
-    two exact BIGINTs, so the DuckDB twin is hash-exact.  Scale shape:
-    inherits the encode's vocab-sized merge chain + size-switched
-    vocab join; the per-lang rollup shuffles ≤ |langs| rows."""
-    from ocrd_calamari_spark.functions.text import bpe_encode_counts
-
-    docs = _tw(spark, sf_dir, "documents")
-    enc = bpe_encode_counts(docs, FROZEN_MERGES)
-    return (
-        enc.join(docs.select("doc_id", "lang"), "doc_id")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("n_words").cast("bigint").alias("n_words"),
-            F.sum("n_subwords").cast("bigint").alias("n_subwords"),
-        )
-        .select(
-            "lang",
-            "n_docs",
-            "n_words",
-            "n_subwords",
-            (
-                F.col("n_subwords").cast("double")
-                / F.col("n_words").cast("double")
-            ).alias("fertility"),
-        )
-        .transform(_psort, "lang")
-    )
-
-
-def _tokenizer_fertility_sql(merges: list[tuple[str, str]]) -> str:
-    """DuckDB twin: the frozen-encode CTE chain rolled up per language."""
-    S = "chr(31)"
-    expr = "s"
-    for lhs, rhs in merges:
-        pat = f"{S}||'{lhs}'||{S}||{S}||'{rhs}'||{S}"
-        rep = f"{S}||'{lhs}{rhs}'||{S}"
-        expr = f"replace({expr}, {pat}, {rep})"
-    return f"""WITH vocab AS (
-  SELECT DISTINCT w FROM (
-    SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-    FROM documents
-  ) WHERE regexp_matches(w, '^[\\x20-\\x7e]+$')
-), enc AS (
-  SELECT w, CAST(len(string_split(trim({expr}, {S}), {S}||{S}))
-                 AS BIGINT) AS n_sub
-  FROM (
-    SELECT w, {S} || array_to_string(regexp_split_to_array(w, ''),
-                                     {S}||{S}) || {S} AS s
-    FROM vocab
-  )
-), docw AS (
-  SELECT doc_id, w FROM (
-    SELECT doc_id,
-           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-    FROM documents
-  ) WHERE regexp_matches(w, '^[\\x20-\\x7e]+$')
-), per_doc AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         CAST(sum(n_sub) AS BIGINT) AS n_subwords
-  FROM docw JOIN enc USING (w)
-  GROUP BY doc_id
-)
-SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(p.n_words) AS BIGINT) AS n_words,
-       CAST(sum(p.n_subwords) AS BIGINT) AS n_subwords,
-       CAST(sum(p.n_subwords) AS DOUBLE) / CAST(sum(p.n_words) AS DOUBLE)
-         AS fertility
-FROM per_doc p JOIN documents d USING (doc_id)
-GROUP BY d.lang ORDER BY d.lang
-"""
-
-
-TOKENIZER_FERTILITY_SQL = _tokenizer_fertility_sql(FROZEN_MERGES)
-
-
 def q_exact_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic exact-k uniform sample: the 64 docs with the lowest
-    seeded portable hash — the eval-set carve (`weighted_sample` is
-    Bernoulli: expected size only; an eval set needs
-    EXACTLY k, reproducibly).  Scale shape: orderBy+limit plans as
-    TakeOrdered (per-partition top-k, k-row merge — never a global sort);
+    seeded portable hash — the eval-set carve (a Bernoulli sample has
+    an expected size only; an eval set needs EXACTLY k, reproducibly).
+    Scale shape: orderBy+limit plans as TakeOrdered (per-partition
+    top-k, k-row merge — never a global sort);
     membership is a pure function of (seed, doc_id): corpus growth only
     ever swaps items whose hash crosses the k-th order statistic, it
     never reshuffles the rest."""
@@ -3565,9 +2871,8 @@ QUERIES = {
     "jaccard_dedup": q_jaccard_dedup,
     "dedup_clusters": q_dedup_clusters,
     # --- new this round: driver-checkable golden byte-identity certificate
-    # plus two beyond-reference pipeline ops (tokenizer/mixture support)
+    # plus a beyond-reference pipeline op (mixture support)
     "extract_golden_diff": q_extract_golden_diff,
-    "bpe_pair_counts": q_bpe_pair_counts,
     "domain_divergence": q_domain_divergence,
     "bloom_decontaminate": q_bloom_decontaminate,
     "sparse_cosine_join": q_sparse_cosine_join,
@@ -3576,22 +2881,15 @@ QUERIES = {
     "keep_best_dedup": q_keep_best_dedup,
     "containment_join": q_containment_join,
     "oov_rate": q_oov_rate,
-    "adaptive_quality_filter": q_adaptive_quality_filter,
     "intra_doc_span_dedup": q_intra_doc_span_dedup,
-    "bpe_train": q_bpe_train,
     "quality_funnel": q_quality_funnel,
-    "histogram_quantiles": q_histogram_quantiles,
-    "leakage_safe_split": q_leakage_safe_split,
     "snapshot_diff": q_snapshot_diff,
-    "weighted_sample": q_weighted_sample,
-    "skew_report": q_skew_report,
     # --- below the driver's ~50-entry sample cut.  Demoted by evidence
     # accounting: chunk_documents…exact_dup_groups are hash-green in
     # CORRECTNESS_r02.
     # --- round-4 late additions (post-window this round: certified by the
     # judge's full check_oracles gate + the pytest fast-parity subset;
     # promotable into the sample window once the above keys land green).
-    "ks_drift": q_ks_drift,
     "char_diversity": q_char_diversity,
     "winnow_fingerprints": q_winnow_fingerprints,
     "lang_mismatch": q_lang_mismatch,
@@ -3599,8 +2897,6 @@ QUERIES = {
     "normalized_dedup": q_normalized_dedup,
     "global_shuffle": q_global_shuffle,
     "paragraph_dedup": q_paragraph_dedup,
-    "bpe_encode": q_bpe_encode,
-    "bpe_encode_frozen": q_bpe_encode_frozen,
     "exact_sample": q_exact_sample,
     "chunk_documents": q_chunk_documents,
     "rolling_fingerprints": q_rolling_fingerprints,
@@ -3621,12 +2917,8 @@ QUERIES = {
     "token_stats": q_token_stats,
     "quality_scores": q_quality_scores,
     "lang_id": q_lang_id,
-    "profile_columns": q_profile_columns,
-    "train_test_split": q_train_test_split,
-    "bpe_token_count": q_bpe_token_count,
     "prepare_corpus": q_prepare_corpus,
     "mojibake_detect": q_mojibake_detect,
-    "tokenizer_fertility": q_tokenizer_fertility,
     "minhash_recall": q_minhash_recall,
     "clean_pipeline": q_clean_pipeline,
     "lang_mix": q_lang_mix,
@@ -3635,51 +2927,37 @@ QUERIES = {
 ORACLES = {
     "normalized_dedup": NORMALIZED_DEDUP_SQL,
     "mojibake_detect": MOJIBAKE_SQL,
-    "tokenizer_fertility": TOKENIZER_FERTILITY_SQL,
     "minhash_recall": MINHASH_RECALL_SQL,
     "clean_pipeline": CLEAN_PIPELINE_SQL,
     "lang_mix": LANG_MIX_SQL,
     "global_shuffle": GLOBAL_SHUFFLE_SQL,
     "paragraph_dedup": PARAGRAPH_DEDUP_SQL,
-    "bpe_encode": BPE_ENCODE_SQL,
-    "bpe_encode_frozen": BPE_ENCODE_FROZEN_SQL,
     "exact_sample": EXACT_SAMPLE_SQL,
     "extract_golden_diff": GOLDEN_DIFF_SQL,
-    "bpe_pair_counts": BPE_PAIR_SQL,
-    "bpe_train": BPE_TRAIN_SQL,
     "quality_funnel": QUALITY_FUNNEL_SQL,
     "domain_divergence": DOMAIN_DIVERGENCE_SQL,
     "bloom_decontaminate": DECONTAMINATE_SQL,
-    "histogram_quantiles": HISTOGRAM_QUANTILES_SQL,
     "sparse_cosine_join": SPARSE_COSINE_SQL,
     "lm_quality": LM_QUALITY_SQL,
-    "ks_drift": KS_DRIFT_SQL,
     "char_diversity": CHAR_DIVERSITY_SQL,
     "winnow_fingerprints": WINNOW_FP_SQL,
     "lang_mismatch": _lang_mismatch_sql(),
     "effective_tokens": EFFECTIVE_TOKENS_SQL,
     "pmi_pairs": PMI_PAIRS_SQL,
-    "leakage_safe_split": LEAKAGE_SPLIT_SQL,
     "snapshot_diff": _snapshot_diff_sql(),
     "keep_best_dedup": _keep_best_sql(),
-    "weighted_sample": _weighted_sample_sql(),
-    "skew_report": SKEW_REPORT_SQL,
     "containment_join": CONTAINMENT_SQL,
     "oov_rate": OOV_RATE_SQL,
-    "adaptive_quality_filter": _adaptive_quality_sql(),
     "intra_doc_span_dedup": INTRA_SPAN_SQL,
     "token_stats": TOKEN_STATS_SQL,
     "quality_scores": QUALITY_SQL,
     "lang_id": LANG_ID_SQL,
     "inverted_index": INVERTED_INDEX_SQL,
     "bm25_search": BM25_SQL,
-    "profile_columns": PROFILE_SQL,
-    "train_test_split": SPLIT_SQL,
     "rolling_fingerprints": ROLLING_FP_SQL,
     "span_dedup": SPAN_DEDUP_SQL,
     "chunk_documents": CHUNK_SQL,
     "exact_dup_groups": EXACT_DUP_GROUPS_SQL,
-    "bpe_token_count": BPE_TOKEN_SQL,
     "incremental_neardup": INCREMENTAL_NEARDUP_SQL,
     "minhash_dedup": MINHASH_SQL,
     "jaccard_dedup": JACCARD_DEDUP_SQL,

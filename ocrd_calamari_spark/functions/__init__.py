@@ -1,5 +1,5 @@
 """Training-data pipeline functions beyond the reference's own operators:
-text analysis, deduplication and profiling.
+text analysis and deduplication.
 
 Everything here stays JVM-side (pyspark.sql.functions / higher-order
 functions) unless genuinely impossible — no row-at-a-time Python in hot

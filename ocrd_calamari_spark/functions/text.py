@@ -119,20 +119,6 @@ def fingerprint_sql_duckdb(col: str = "text") -> str:
     return f"substr(md5({col}), 1, 16)"
 
 
-BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
-# BPE-ish pre-tokenization: letter runs, single digits, single punctuation
-# marks — the GPT-2-style pre-split shape (letters | digits | symbols),
-# whitespace elided.  A real BPE merge table would refine these further;
-# this is the token-budget estimator variant.
-
-
-def bpe_ish_token_count(col) -> Column:
-    """Approximate LLM-token count via BPE-style pre-tokenization regex
-    (JVM regexp_count — no Python)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_count(c, F.lit(BPE_ISH_PATTERN)).cast("bigint")
-
-
 # ---------------------------------------------------------------------------
 # Repetition signals (Gopher/C4-style quality filters)
 # ---------------------------------------------------------------------------
@@ -538,43 +524,9 @@ def strip_boilerplate_lines(
 
 
 # ---------------------------------------------------------------------------
-# Tokenizer-training + mixture-design support (beyond-reference ops for the
-# 100 TB training-data pipeline; both all-JVM, DuckDB-oracled).
+# Mixture-design support (a beyond-reference op for the 100 TB
+# training-data pipeline; all-JVM, DuckDB-oracled).
 # ---------------------------------------------------------------------------
-def bpe_pair_counts(df, text_col: str = "text", top_k: int = 50):
-    """First BPE-training iteration: corpus-wide frequencies of adjacent
-    character pairs inside whitespace tokens, top-k by count (the pair a
-    BPE trainer would merge first is row one).
-
-    Scale shape: one pure map (token explode → char-bigram explode — no
-    joins, nothing but the bigram strings move), then a groupBy over the
-    pair alphabet: at most |charset|² distinct keys, so map-side partial
-    aggregation collapses the exchange to alphabet size regardless of
-    corpus size.  Top-k via orderBy+limit compiles to TakeOrderedAndProject
-    (per-partition heaps, no global sort).  Deterministic tie-break
-    (count desc, pair asc).
-    """
-    toks = df.select(
-        F.explode(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-        ).alias("tok")
-    )
-    pairs = toks.where(F.length("tok") >= 2).select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, length(tok) - 1),"
-                " i -> substring(tok, i, 2))"
-            )
-        ).alias("pair")
-    )
-    return (
-        pairs.groupBy("pair")
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .orderBy(F.desc("n"), "pair")
-        .limit(top_k)
-    )
-
-
 def domain_divergence(df, domain_col: str = "source",
                       text_col: str = "text"):
     """χ² divergence of each domain's unigram distribution from the
@@ -965,203 +917,6 @@ def dedup_spans_in_doc(
     )
 
 
-_BPE_SEP = "\x1f"
-
-
-def _bpe_local_merges(
-    word_counts: list[tuple[str, int]], n_merges: int
-) -> list[tuple[int, str, str, str, int]]:
-    """Driver-side BPE merge loop over a collected word-frequency table —
-    byte-identical semantics to the distributed loop: weighted adjacent
-    pair counts, argmax with (count DESC, lhs ASC, rhs ASC) tie-break,
-    left-to-right non-overlapping merge application."""
-    from collections import Counter
-
-    words = [(list(w), int(c)) for w, c in word_counts]
-    merges: list[tuple[int, str, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        pc: Counter = Counter()
-        for syms, c in words:
-            for a, b in zip(syms, syms[1:]):
-                pc[(a, b)] += c
-        if not pc:
-            raise ValueError(
-                f"corpus exhausted its adjacent pairs after "
-                f"{rank - 1} merges; reduce n_merges"
-            )
-        (lhs, rhs), cnt = min(
-            pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        merges.append((rank, lhs, rhs, lhs + rhs, cnt))
-        merged = lhs + rhs
-        nxt = []
-        for syms, c in words:
-            out: list[str] = []
-            i = 0
-            while i < len(syms):
-                if (i + 1 < len(syms) and syms[i] == lhs
-                        and syms[i + 1] == rhs):
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            nxt.append((out, c))
-        words = nxt
-    return merges
-
-
-def bpe_train_merges(
-    df,
-    text_col: str = "text",
-    n_merges: int = 12,
-    driver_vocab_max: int | None = 100_000,
-) -> "DataFrame":
-    """Train a BPE tokenizer's merge table DISTRIBUTED: the classic
-    greedy loop (count adjacent symbol pairs -> merge the most frequent
-    pair everywhere -> repeat) re-expressed so the corpus is scanned
-    EXACTLY ONCE.  Reference position: the glyph->word assembly order
-    (`recognize.py:336-360` builds words from ranked glyph alternatives)
-    inverted into vocabulary LEARNING; completes the tokenizer story
-    next to ``bpe_token_count`` (apply) and ``bpe_pair_counts`` (one
-    counting round).
-
-    Scale shape (the 100 TB argument): the corpus collapses to a
-    word-frequency table in one pass — vocab-sized (~10^6-10^7 rows at
-    web scale), orders of magnitude smaller than the corpus — and the
-    merge loop never touches the corpus again.  Each iteration shuffles
-    only (pair, partial count) rows off that table (map-side partial
-    agg), takes the global argmax with a deterministic tie-break
-    (count DESC, lhs ASC, rhs ASC) as a 1-row TakeOrdered collect
-    (a bounded driver scalar), and applies the merge as a pure map.
-    Per-iteration persist + unpersist cuts the lineage chain.
-
-    The merge step needs NO stateful fold: word symbol sequences are
-    carried as separator-wrapped strings (``\\x1f lhs \\x1f\\x1f rhs
-    \\x1f``-style, every token bracketed) and a merge is one literal
-    ``replace`` — left-to-right non-overlapping replacement IS the BPE
-    greedy scan ("aaa" + merge(a,a) -> "aa","a"), and both Spark and
-    DuckDB implement exactly that, which keeps the engine and the
-    oracle byte-identical with zero lambda machinery in the hot path.
-
-    Charset note: symbols start as UTF-16-code-unit characters
-    (``split(w, '')``); the wrapped-string encoding is unambiguous
-    because \\x1f never survives tokenization (non-ASCII-printable
-    words are filtered — a production run on CJK/emoji corpora should
-    split on codepoints instead; documented trade, not a silent one).
-
-    Returns (merge_rank, lhs, rhs, merged, pair_count) with exactly
-    ``n_merges`` rows — callers must size ``n_merges`` below the
-    corpus's distinct-pair count (a tiny corpus that exhausts its pairs
-    raises rather than silently under-returning).
-
-    ``driver_vocab_max``: the merge loop runs over the WORD-FREQUENCY
-    table, not the corpus — and that table can be tiny (a clean 10^6-word
-    vocab is a few MB) while each distributed iteration still pays full
-    job/stage scheduling on it.  The table is persisted and counted
-    (one bounded action — the corpus scan it forces was already paid by
-    the old ``cur.count()``); at or below the threshold it collects to
-    the driver and the loop runs locally with byte-identical semantics
-    (``_bpe_local_merges``: same weighted pair counts, same
-    deterministic argmax, same left-to-right non-overlap merge —
-    size-switch equality pinned in tests).  Above it, the distributed
-    loop runs unchanged: at a raw crawl's 10^8-10^9-row vocab the
-    cluster is the only place the loop fits — the same honest switch as
-    ``bpe_encode_counts``'s ``broadcast_vocab_max``.  ``None`` forces
-    the distributed path.
-    """
-    spark = df.sparkSession
-    sep = _BPE_SEP
-    words = (
-        df.select(
-            F.explode(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-            ).alias("w")
-        )
-        .where(F.col("w").rlike(r"^[\x20-\x7e]+$"))
-        .groupBy("w")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
-    schema = (
-        "merge_rank bigint, lhs string, rhs string, "
-        "merged string, pair_count bigint"
-    )
-    sized = False
-    if driver_vocab_max is not None:
-        # persist carries the word table through either branch: the
-        # local path reads it once more (collect), the distributed path
-        # builds cur off it without a second corpus scan
-        words = words.persist()
-        sized = True
-        if words.count() <= driver_vocab_max:
-            try:
-                wc = [(r["w"], r["cnt"]) for r in words.collect()]
-            finally:
-                words.unpersist()
-            return spark.createDataFrame(
-                _bpe_local_merges(wc, n_merges), schema
-            )
-    cur = words.select(
-        "cnt",
-        F.concat(
-            F.lit(sep),
-            F.array_join(F.split("w", ""), sep + sep),
-            F.lit(sep),
-        ).alias("s"),
-    ).persist()
-    cur.count()
-    if sized:
-        words.unpersist()
-    merges = []
-    try:
-        for rank in range(1, n_merges + 1):
-            toks = F.split(
-                F.expr("trim(BOTH char(31) FROM s)"), sep + sep
-            )
-            top = (
-                cur.select(
-                    "cnt",
-                    F.explode(
-                        F.arrays_zip(
-                            toks.alias("l"),
-                            F.slice(toks, F.lit(2), F.size(toks)).alias("r"),
-                        )
-                    ).alias("pr"),
-                )
-                .where(F.col("pr.r").isNotNull())
-                .groupBy(
-                    F.col("pr.l").alias("lhs"), F.col("pr.r").alias("rhs")
-                )
-                .agg(F.sum("cnt").alias("pair_count"))
-                .orderBy(F.desc("pair_count"), "lhs", "rhs")
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                raise ValueError(
-                    f"corpus exhausted its adjacent pairs after "
-                    f"{rank - 1} merges; reduce n_merges"
-                )
-            lhs, rhs, cnt = (
-                top[0]["lhs"], top[0]["rhs"], top[0]["pair_count"]
-            )
-            merges.append((rank, lhs, rhs, lhs + rhs, cnt))
-            nxt = cur.select(
-                "cnt",
-                F.replace(
-                    F.col("s"),
-                    F.lit(sep + lhs + sep + sep + rhs + sep),
-                    F.lit(sep + lhs + rhs + sep),
-                ).alias("s"),
-            ).persist()
-            nxt.count()
-            cur.unpersist()
-            cur = nxt
-    finally:
-        cur.unpersist()
-    return spark.createDataFrame(merges, schema)
-
-
 def dedup_paragraphs_global(df, id_col: str = "doc_id",
                             text_col: str = "text") -> "DataFrame":
     """Corpus-level exact paragraph dedup, first-occurrence-wins (CCNet's
@@ -1208,78 +963,6 @@ def dedup_paragraphs_global(df, id_col: str = "doc_id",
             "n_removed"
         ),
         F.coalesce("new_text", F.lit("")).alias("new_text"),
-    )
-
-
-def bpe_encode_counts(df, merges, text_col: str = "text",
-                      broadcast_vocab_max: int | None = 1_000_000,
-                      ) -> "DataFrame":
-    """Apply a trained BPE merge table and count per-doc subwords — the
-    token-budget accounting step after ``bpe_train_merges``.
-
-    ``merges`` is the ordered [(lhs, rhs), ...] list from training (or a
-    FROZEN external tokenizer's merge list — the production shape: price
-    a new corpus in one pass without retraining).  The merge chain
-    applies to the DISTINCT-word table only (vocab-sized), as one nested
-    stack of literal ``replace`` expressions — whole-stage codegen, zero
-    per-corpus-token work; each document's words then join the
-    (word → n_subwords) map and aggregate.  Same separator-wrapped
-    representation and left-to-right non-overlap replace semantics as
-    training, so the DuckDB twin is byte-identical.
-
-    The vocab side broadcasts ONLY while it fits: a clean web corpus's
-    distinct-word table is ~10 MB/10^6 words, but a 100 TB crawl's is
-    10^8-10^9 rows of typo/hash junk — broadcasting that OOMs the
-    driver.  The encoded vocab is persisted and counted (one extra
-    vocab-sized action; the cache repays it in the join), and the
-    broadcast hint is dropped above ``broadcast_vocab_max`` rows in
-    favor of a plain shuffled equi-join (both sides hash on ``w``).
-    Pass ``broadcast_vocab_max=None`` to skip the count and always
-    broadcast (small fixed vocab known a priori), or ``0`` to always
-    shuffle.
-
-    Returns (doc_id, n_words, n_subwords); docs with zero ASCII words
-    drop (inner join), mirroring the training-side token filter.
-    """
-    sep = _BPE_SEP
-    docw = (
-        df.select(
-            "doc_id",
-            F.explode(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-            ).alias("w"),
-        )
-        .where(F.col("w").rlike(r"^[\x20-\x7e]+$"))
-    )
-    vocab = docw.select("w").distinct()
-    s = F.concat(
-        F.lit(sep), F.array_join(F.split("w", ""), sep + sep), F.lit(sep)
-    )
-    for lhs, rhs in merges:
-        s = F.replace(
-            s,
-            F.lit(sep + lhs + sep + sep + rhs + sep),
-            F.lit(sep + lhs + rhs + sep),
-        )
-    enc = vocab.select(
-        "w",
-        F.size(F.split(F.btrim(s, F.lit(sep)), sep + sep))
-        .cast("bigint")
-        .alias("n_sub"),
-    )
-    if broadcast_vocab_max is None:
-        enc = F.broadcast(enc)
-    else:
-        enc = enc.persist()
-        if enc.count() <= broadcast_vocab_max:
-            enc = F.broadcast(enc)
-    return (
-        docw.join(enc, "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum("n_sub").cast("bigint").alias("n_subwords"),
-        )
     )
 
 
@@ -1380,7 +1063,7 @@ def char_diversity(
     document's ALPHABET (≤ a few hundred), not its length — and the
     per-doc rollup is a second compact agg; text itself never shuffles.
     Charset note: Spark splits per UTF-16 code unit, so astral-plane
-    characters count as surrogate pairs (same caveat as `bpe_train`);
+    characters count as surrogate pairs;
     empty documents are excluded (split("") is [] in Spark but [''] in
     DuckDB — the length guard keeps both engines aligned).
     """

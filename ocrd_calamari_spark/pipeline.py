@@ -192,7 +192,7 @@ def guard_zip_importers() -> None:
 
 
 def extraction_map_fn(cfg: ExtractConfig, accs: dict | None = None):
-    """The one ``mapInArrow`` function of the engine (batch and streaming):
+    """The one ``mapInArrow`` function of the engine (``extract_df``):
     columnar extraction plus lineage passthrough.  Its input is pages
     batches or binaryFile archive batches, which it splits into records
     first (``_pages_batches``).

@@ -60,10 +60,10 @@ def iter_warc_records(data: bytes):
         if hdr_end == -1:
             return
         headers = _parse_headers(data[start:hdr_end])
-        try:
-            length = int(headers.get(b"content-length", b""))
-        except ValueError:
+        raw = headers.get(b"content-length", b"")
+        if not raw.isdigit():  # int() would take a sign: "-1000" loops
             return  # malformed record: stop rather than misalign
+        length = int(raw)
         body_start = hdr_end + len(_CRLF2)
         yield headers, data[body_start:body_start + length]
         pos = body_start + length
@@ -83,11 +83,12 @@ def _dechunk(data: bytes) -> bytes:
             out += data[pos:]
             break
         size_token = data[pos:eol].split(b";", 1)[0].strip()
-        try:
-            size = int(size_token, 16)
-        except ValueError:
+        # hex digits only: int(x, 16) would also take "-", "+", "0x" and
+        # "_", and a negative size sends pos back to this line forever
+        if not size_token or size_token.strip(b"0123456789abcdefABCDEF"):
             out += data[pos:]
             break
+        size = int(size_token, 16)
         if size == 0:
             break  # terminal chunk; ignore trailers
         start = eol + 2

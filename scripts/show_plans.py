@@ -135,16 +135,6 @@ def main():
         plan_of(q, "simple"),
     ))
 
-    q = QUERIES["skew_report"](spark, sf)
-    sections.append((
-        "skew_report (hot-key diagnostic)",
-        "Per-key counts partial-aggregate map-side (the exchange carries "
-        "key cardinality, not input rows); the totals are a broadcast "
-        "1-row crossJoin; the top-k is TakeOrderedAndProject — O(k) per "
-        "partition, no global sort.",
-        plan_of(q, "simple"),
-    ))
-
     q = QUERIES["containment_join"](spark, sf)
     sections.append((
         "containment_join (directed shingle containment)",
@@ -202,27 +192,6 @@ def main():
         "wire, then the Final group-limit finishes per partition.  "
         "Text shuffles exactly twice (rank + per-doc reassembly), the "
         "CCNet lower bound for a rewrite.  No Python.",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["bpe_encode"](spark, sf)
-    sections.append((
-        "bpe_encode (vocab-sized merge application)",
-        "The trained merges apply to the DISTINCT-word table as one "
-        "nested stack of literal replaces, and the resulting "
-        "(word -> n_subwords) map returns to the corpus over a "
-        "BroadcastHashJoin — the corpus is never re-tokenized per "
-        "merge and never reshuffles for the encode.  No Python.",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["ks_drift"](spark, sf)
-    sections.append((
-        "ks_drift (two-sample KS drift monitor)",
-        "The corpus reduces to a (group, bucket) histogram with partial "
-        "aggregation — shuffle is domains x grid, independent of row "
-        "count; grid cumulative + totals broadcast; per-group KS windows "
-        "run over (group, grid) partitions.  All-JVM.",
         plan_of(q, "simple"),
     ))
 

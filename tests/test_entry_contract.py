@@ -16,11 +16,11 @@ TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
 FAST_ORACLED = ["token_stats", "lang_id", "exact_dup_groups",
                 "repetition_quality", "decontaminate", "domain_quota",
-                "incremental_dedup", "bpe_pair_counts", "domain_divergence",
+                "incremental_dedup", "domain_divergence",
                 "inverted_index", "lm_quality", "snapshot_diff",
                 "normalized_dedup", "mojibake_detect",
                 "clean_pipeline", "lang_mix", "global_shuffle",
-                "paragraph_dedup", "bpe_encode", "exact_sample"]
+                "paragraph_dedup", "exact_sample"]
 SCALAR_COLS = ["url", "text", "conf", "n_blocks", "error"]
 EXTRACTION_COLS = {
     "extract_pages": SCALAR_COLS,

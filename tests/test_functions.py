@@ -1,4 +1,4 @@
-"""Tests for dedup / similarity / text-analysis / join / profile functions."""
+"""Tests for dedup / similarity / text-analysis / join functions."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -204,24 +204,6 @@ class TestRankedRetrieval:
 
 
 class TestTokenizerMixtureOps:
-    def test_bpe_pair_counts_matches_python(self, spark):
-        from collections import Counter
-
-        from ocrd_calamari_spark.functions.text import bpe_pair_counts
-
-        rows = [(0, "Banana band"), (1, "an  anvil a"), (2, "NA na!")]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        got = [(r.pair, r.n) for r in bpe_pair_counts(df, top_k=5).collect()]
-        want = Counter()
-        for _, tx in rows:
-            for tok in tx.strip().lower().split():
-                if len(tok) >= 2:
-                    for i in range(len(tok) - 1):
-                        want[tok[i:i + 2]] += 1
-        top = sorted(want.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-        assert got == top
-        assert got[0] == ("an", 5)  # banana:2 band:1 an:1 anvil:1
-
     def test_domain_divergence_matches_python(self, spark):
         from collections import Counter
 
@@ -255,18 +237,14 @@ class TestTokenizerMixtureRandomized:
     def test_random_corpora_match_python(self, spark):
         """Randomized corpora (Zipf-ish vocab, 1-40 tokens/doc, 1-6
         domains, single-token docs, domains with one doc) — engine vs
-        python closed-form for domain_divergence and exact pair counts
-        for bpe_pair_counts.  Catches what the fixed fixtures can't:
-        singleton domains, tokens unique to one domain, ties in the
-        top-k boundary."""
+        python closed-form for domain_divergence.  Catches what the fixed
+        fixtures can't: singleton domains and tokens unique to one
+        domain."""
         import math
         import random
         from collections import Counter
 
-        from ocrd_calamari_spark.functions.text import (
-            bpe_pair_counts,
-            domain_divergence,
-        )
+        from ocrd_calamari_spark.functions.text import domain_divergence
 
         rng = random.Random(83)
         vocab = [f"w{i}" for i in range(30)]
@@ -297,94 +275,6 @@ class TestTokenizerMixtureRandomized:
                         ((ps - p) * (ps - p) / p - p) * 1e12 + 0.5)
                 want[dom] = 1.0 + qsum / 1e12
             assert got == pytest.approx(want, abs=1e-12), trial
-
-            pair_got = [(r.pair, r.n)
-                        for r in bpe_pair_counts(df, top_k=10).collect()]
-            cnt = Counter()
-            for _, _, tx in rows:
-                for tok in tx.strip().lower().split():
-                    if len(tok) >= 2:
-                        for i in range(len(tok) - 1):
-                            cnt[tok[i:i + 2]] += 1
-            pair_want = sorted(cnt.items(),
-                               key=lambda kv: (-kv[1], kv[0]))[:10]
-            assert pair_got == pair_want, trial
-
-
-class TestProfileAndSplit:
-    def test_profile_counts_nulls_and_distincts(self, spark):
-        from ocrd_calamari_spark.functions.profile import profile_columns
-
-        df = spark.createDataFrame(
-            [(1, "a", 1.0), (2, "a", None), (3, None, None), (3, "b", 2.0)],
-            "id long, s string, v double",
-        )
-        got = {r.column_name: (r.n_nulls, r.n_distinct)
-               for r in profile_columns(df, ["id", "s", "v"]).collect()}
-        assert got == {"id": (0, 3), "s": (1, 2), "v": (2, 2)}
-        # approx path: same shape, HLL estimates exact at this cardinality
-        approx = {r.column_name: r.n_distinct
-                  for r in profile_columns(df, ["id", "s"],
-                                           exact=False).collect()}
-        assert approx == {"id": 3, "s": 2}
-
-    def test_profile_empty_table_is_zero_not_null(self, spark):
-        from ocrd_calamari_spark.functions.profile import profile_columns
-
-        df = spark.createDataFrame([], "id long, s string")
-        got = {r.column_name: (r.n_nulls, r.n_distinct)
-               for r in profile_columns(df, ["id", "s"]).collect()}
-        assert got == {"id": (0, 0), "s": (0, 0)}
-
-    def test_hash_split_deterministic_and_weighted(self, spark):
-        from ocrd_calamari_spark.functions.profile import hash_split
-
-        df = spark.range(0, 5000).withColumnRenamed("id", "doc_id")
-        a = hash_split(df, "doc_id", {"train": 90, "valid": 5, "test": 5})
-        counts = {r.split: r["count"]
-                  for r in a.groupBy("split").count().collect()}
-        assert set(counts) == {"train", "valid", "test"}
-        # hash buckets approximate the weights
-        assert abs(counts["train"] / 5000 - 0.90) < 0.02
-        # pure function of id: same assignment on a re-shuffled superset
-        b = hash_split(
-            df.union(spark.range(5000, 6000).withColumnRenamed("id", "doc_id"))
-            .repartition(7),
-            "doc_id", {"train": 90, "valid": 5, "test": 5},
-        )
-        left = {r.doc_id: r.split for r in a.collect()}
-        right = {r.doc_id: r.split for r in b.collect()}
-        assert all(right[k] == v for k, v in left.items())
-
-    def test_hash_split_rejects_bad_weights(self, spark):
-        from ocrd_calamari_spark.functions.profile import hash_split
-
-        with pytest.raises(ValueError):
-            hash_split(spark.range(1), "id", {"train": 50, "test": 49})
-
-
-class TestHistogramQuantiles:
-    def test_matches_sorted_type1_quantiles(self, spark):
-        """Histogram path == sorted-array type-1 quantiles
-        (sorted[ceil(q*n)-1]) on duplicate-heavy integer data."""
-        import math
-        import random
-
-        from ocrd_calamari_spark.functions.profile import histogram_quantiles
-
-        rng = random.Random(13)
-        rows = [(f"g{i % 3}", rng.randint(0, 40)) for i in range(999)]
-        df = spark.createDataFrame(rows, ["grp", "v"]).repartition(8)
-        got = {r.grp: (r.p50, r.p90, r.p99)
-               for r in histogram_quantiles(df, "grp", "v").collect()}
-        by_g = {}
-        for g, v in rows:
-            by_g.setdefault(g, []).append(v)
-        for g, vals in by_g.items():
-            vals.sort()
-            n = len(vals)
-            want = tuple(vals[math.ceil(q * n) - 1] for q in (0.5, 0.9, 0.99))
-            assert got[g] == want, (g, got[g], want)
 
 
 class TestRepetitionStats:
@@ -811,33 +701,6 @@ class TestBoilerplateRandomized:
             assert r["clean_text"] == expect, i
 
 
-class TestApiGuards:
-    """Round-3 review findings: invalid inputs must fail loudly at the
-    API boundary, not silently corrupt output or die in opaque SQL."""
-
-    def test_profile_columns_validates_names(self, spark):
-        import pytest
-
-        from ocrd_calamari_spark.functions.profile import profile_columns
-
-        df = spark.createDataFrame([(1, "a")], ["x", "y"])
-        with pytest.raises(ValueError, match="at least one"):
-            profile_columns(df, [])
-        with pytest.raises(ValueError, match="duplicate"):
-            profile_columns(df, ["x", "x"])
-        with pytest.raises(ValueError, match="quotes"):
-            profile_columns(df, ["it's"])
-
-    def test_hash_split_rejects_negative_weights(self, spark):
-        import pytest
-
-        from ocrd_calamari_spark.functions.profile import hash_split
-
-        df = spark.createDataFrame([(1,)], ["doc_id"])
-        with pytest.raises(ValueError, match="positive"):
-            hash_split(df, weights={"train": 60, "valid": -10, "test": 50})
-
-
 class TestSimilaritySemantics:
     def test_packed_offsets_buckets_offset_id_range(self, spark):
         """Order values clustered far from zero (epoch-micro ids) must
@@ -1037,38 +900,6 @@ class TestCooccurrencePmi:
         assert ratios == sorted(ratios, key=lambda t: (-t[0], t[1], t[2]))
 
 
-class TestLeakageSafeSplit:
-    def test_no_neardup_pair_straddles_splits(self, spark):
-        """The guarded split's contract: every exact-Jaccard pair (the
-        SAME pair relation the query composes over) lands in ONE split,
-        while singletons keep their plain per-id hash assignment."""
-        from ocrd_calamari_spark.entry_queries import (
-            q_leakage_safe_split, q_train_test_split)
-
-        sf = "/root/testdata/sf0.001"
-        out = q_leakage_safe_split(spark, sf)
-        rows = out.collect()
-        split_of = {r.doc_id: r.split for r in rows}
-        comp_of = {r.doc_id: r.component for r in rows}
-
-        from ocrd_calamari_spark.entry_queries import q_jaccard_dedup
-        pairs = [(r.id_a, r.id_b)
-                 for r in q_jaccard_dedup(spark, sf).collect()]
-        assert pairs, "fixture must contain near-dup pairs"
-        for a, b in pairs:
-            assert split_of[a] == split_of[b], (a, b)
-            assert comp_of[a] == comp_of[b], (a, b)
-
-        # singletons (not in any pair) must match the unguarded split
-        plain = {r.doc_id: r.split
-                 for r in q_train_test_split(spark, sf).collect()}
-        in_pair = {x for p in pairs for x in p}
-        for d, s in split_of.items():
-            if d not in in_pair and d in plain:
-                assert s == plain[d], d
-        spark.catalog.clearCache()
-
-
 class TestSnapshotDiff:
     def test_change_classes_follow_the_derivation_rules(self, spark):
         from ocrd_calamari_spark.entry_queries import q_snapshot_diff
@@ -1129,80 +960,6 @@ class TestKeepBest:
             .executedPlan().toString()
         assert "Window" not in plan
         assert "max_by" in plan or "Aggregate" in plan
-
-
-class TestWeightedSample:
-    def test_boundary_weights(self, spark):
-        rows = [(i, 0) for i in range(50)] + [(50 + i, 1000) for i in range(50)]
-        df = spark.createDataFrame(rows, ["doc_id", "w"])
-        from ocrd_calamari_spark.functions.profile import weighted_sample
-
-        kept = weighted_sample(df, "doc_id", "w", den=1000)
-        ids = sorted(r["doc_id"] for r in kept.collect())
-        assert ids == list(range(50, 100))  # w=0 drops all, w=den keeps all
-
-    def test_matches_md5_reference(self, spark):
-        import hashlib
-
-        rows = [(i, (i * 131) % 1001) for i in range(400)]
-        df = spark.createDataFrame(rows, ["doc_id", "w"])
-        from ocrd_calamari_spark.functions.dedup import PORTABLE_TOKEN_HASH_SQL
-        from ocrd_calamari_spark.functions.profile import weighted_sample
-
-        kept = weighted_sample(
-            df, "doc_id", "w", den=1000, hash_sql=PORTABLE_TOKEN_HASH_SQL
-        )
-        got = sorted(r["doc_id"] for r in kept.collect())
-        exp = [
-            i for i, w in rows
-            if int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16)
-            % 1000 < w
-        ]
-        assert got == exp
-
-    def test_deterministic_across_runs(self, spark):
-        rows = [(i, 500) for i in range(300)]
-        df = spark.createDataFrame(rows, ["doc_id", "w"])
-        from ocrd_calamari_spark.functions.profile import weighted_sample
-
-        a = sorted(r["doc_id"] for r in weighted_sample(df, "doc_id", "w").collect())
-        b = sorted(r["doc_id"] for r in weighted_sample(df, "doc_id", "w").collect())
-        assert a == b
-        # rate sanity: ~50% at w=500
-        assert 100 < len(a) < 200
-
-
-class TestSkewReport:
-    def test_exact_shares_and_tie_break(self, spark):
-        # key 7 holds 6 of 12 rows: share 5000 bp, 2.00x the mean group
-        # size (12 rows / 4 keys = 3)
-        rows = [(7,)] * 6 + [(1,)] * 2 + [(2,)] * 2 + [(3,)] * 2
-        df = spark.createDataFrame(rows, ["k"])
-        from ocrd_calamari_spark.functions.profile import skew_report
-
-        got = {r["k"]: r for r in skew_report(df, "k", top_k=4).collect()}
-        assert got[7]["n"] == 6 and got[7]["rank"] == 1
-        assert got[7]["share_bp"] == 5000
-        assert got[7]["mult_x100"] == 200  # 6 / (12/4 mean) = 2.00x
-        # equal-count keys rank by key value
-        assert [got[k]["rank"] for k in (1, 2, 3)] == [2, 3, 4]
-
-    def test_topk_bounds_output(self, spark):
-        rows = [(i % 50,) for i in range(500)]
-        df = spark.createDataFrame(rows, ["k"])
-        from ocrd_calamari_spark.functions.profile import skew_report
-
-        assert skew_report(df, "k", top_k=7).count() == 7
-
-    def test_plan_broadcasts_totals_and_takes_ordered(self, spark):
-        rows = [(i % 5,) for i in range(100)]
-        df = spark.createDataFrame(rows, ["k"])
-        from ocrd_calamari_spark.functions.profile import skew_report
-
-        plan = skew_report(df, "k", top_k=3)._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-        assert "TakeOrderedAndProject" in plan
 
 
 class TestContainmentJoin:
@@ -1385,131 +1142,6 @@ class TestIntraDocSpanDedup:
         assert got == {1: 0, 2: 0}
 
 
-class TestBpeTrainMerges:
-    """Distributed BPE merge training vs a pure-Python reference
-    implementation of the classic greedy algorithm (count pairs ->
-    merge argmax everywhere -> repeat, left-to-right non-overlapping)."""
-
-    @staticmethod
-    def _reference(texts, n_merges):
-        from collections import Counter
-        words = Counter()
-        for t in texts:
-            for w in t.strip().lower().split():
-                if w and all(0x20 <= ord(c) <= 0x7E for c in w):
-                    words[w] += 1
-        seqs = {w: list(w) for w in words}
-        merges = []
-        for rank in range(1, n_merges + 1):
-            pc = Counter()
-            for w, cnt in words.items():
-                s = seqs[w]
-                for i in range(len(s) - 1):
-                    pc[(s[i], s[i + 1])] += cnt
-            if not pc:
-                break
-            (l, r), c = min(
-                pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-            )
-            merges.append((rank, l, r, l + r, c))
-            for w in seqs:
-                s = seqs[w]
-                out, i = [], 0
-                while i < len(s):
-                    if i + 1 < len(s) and s[i] == l and s[i + 1] == r:
-                        out.append(l + r)
-                        i += 2
-                    else:
-                        out.append(s[i])
-                        i += 1
-                seqs[w] = out
-        return merges
-
-    def test_matches_python_reference(self, spark):
-        from ocrd_calamari_spark.functions.text import bpe_train_merges
-
-        texts = [
-            "the cat sat on the mat",
-            "the hat that the cat wore",
-            "a rat and a cat chat",
-            "hello hello world",
-            "low lower lowest slow slowly",
-            "aaa aaaa aa",          # overlap greediness: "aaa" -> "aa","a"
-        ]
-        exp = self._reference(texts, 10)
-        df = spark.createDataFrame([(t,) for t in texts], ["text"])
-        got = [
-            (r.merge_rank, r.lhs, r.rhs, r.merged, r.pair_count)
-            for r in bpe_train_merges(df, n_merges=10)
-            .orderBy("merge_rank").collect()
-        ]
-        assert got == exp
-
-    def test_size_switch_paths_are_identical(self, spark):
-        """driver_vocab_max=0 forces the DISTRIBUTED merge loop; the
-        default collects and runs in-driver — both must produce the
-        exact same merge table (and match the reference): the size
-        switch is an execution strategy, never a semantics change."""
-        from ocrd_calamari_spark.functions.text import bpe_train_merges
-
-        texts = [
-            "pair pear peat peak repeat repair",
-            "aaa aaaa aa a",
-            "mix mixed mixing remix",
-        ]
-        df = spark.createDataFrame([(t,) for t in texts], ["text"])
-
-        def run(**kw):
-            return [
-                (r.merge_rank, r.lhs, r.rhs, r.merged, r.pair_count)
-                for r in bpe_train_merges(df, n_merges=6, **kw)
-                .orderBy("merge_rank").collect()
-            ]
-
-        local = run()                        # vocab << default threshold
-        dist = run(driver_vocab_max=0)       # forced distributed loop
-        assert local == dist == self._reference(texts, 6)
-
-    def test_multichar_merges_compose(self, spark):
-        # merges of already-merged symbols must use the WHOLE symbols,
-        # never re-split them ("th"+"e" -> "the", not "t"+"he")
-        from ocrd_calamari_spark.functions.text import bpe_train_merges
-
-        texts = ["thethethe thethe the"] * 3
-        exp = self._reference(texts, 4)
-        df = spark.createDataFrame([(t,) for t in texts], ["text"])
-        got = [
-            (r.merge_rank, r.lhs, r.rhs, r.merged, r.pair_count)
-            for r in bpe_train_merges(df, n_merges=4)
-            .orderBy("merge_rank").collect()
-        ]
-        assert got == exp
-
-    def test_pair_exhaustion_raises(self, spark):
-        from ocrd_calamari_spark.functions.text import bpe_train_merges
-
-        df = spark.createDataFrame([("ab ab",)], ["text"])
-        with pytest.raises(ValueError, match="exhausted"):
-            bpe_train_merges(df, n_merges=5)
-
-    def test_non_ascii_words_excluded(self, spark):
-        # charset contract: non-printable-ASCII words never contribute
-        # pairs (they would need codepoint-safe splitting — documented)
-        from ocrd_calamari_spark.functions.text import bpe_train_merges
-
-        texts = ["naïve café naïve", "cat cat cat hat"]
-        exp = self._reference(texts, 2)
-        df = spark.createDataFrame([(t,) for t in texts], ["text"])
-        got = [
-            (r.merge_rank, r.lhs, r.rhs, r.merged, r.pair_count)
-            for r in bpe_train_merges(df, n_merges=2)
-            .orderBy("merge_rank").collect()
-        ]
-        assert got == exp
-        assert all("é" not in m[3] and "ï" not in m[3]
-                   for m in got)
-
-
 class TestQualityFunnel:
     def test_stage_accounting_exact(self, spark):
         from ocrd_calamari_spark.functions.text import quality_funnel
@@ -1607,195 +1239,6 @@ class TestParagraphDedup:
         # a fully-duplicated doc must still get a row, rebuilt to ''
         assert got[3].new_text == ""
         assert (got[3].n_paras, got[3].n_removed) == (3, 3)
-
-
-class TestBpeEncodeCounts:
-    def test_matches_python_reference(self, spark):
-        """Subword counts after 2 merges == a direct python BPE apply."""
-        from ocrd_calamari_spark.functions.text import (
-            bpe_encode_counts, bpe_train_merges)
-
-        rows = [(1, "aaab aaab banana"), (2, "aaab banana banana aa")]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        merges = [
-            (r.lhs, r.rhs)
-            for r in bpe_train_merges(df, n_merges=2)
-            .orderBy("merge_rank").collect()
-        ]
-
-        def py_encode(word):
-            syms = list(word)
-            for lhs, rhs in merges:
-                out, i = [], 0
-                while i < len(syms):
-                    if (i + 1 < len(syms) and syms[i] == lhs
-                            and syms[i + 1] == rhs):
-                        out.append(lhs + rhs)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
-            return len(syms)
-
-        want = {
-            d: (len(t.split()), sum(py_encode(w) for w in t.split()))
-            for d, t in rows
-        }
-        got = {
-            r.doc_id: (r.n_words, r.n_subwords)
-            for r in bpe_encode_counts(df, merges).collect()
-        }
-        assert got == want
-
-    def test_vocab_size_switch_drops_broadcast(self, spark):
-        """Above broadcast_vocab_max the vocab map must join as a plain
-        shuffled equi-join (a 100 TB crawl's distinct-word table OOMs
-        the driver as a broadcast) — with identical results."""
-        from ocrd_calamari_spark.functions.text import bpe_encode_counts
-
-        rows = [(1, "the other brother"), (2, "another the and era")]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        merges = [("t", "h"), ("th", "e"), ("e", "r")]
-
-        import contextlib
-        import io
-
-        def plan_of(d):
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                d.explain("simple")
-            return buf.getvalue()
-
-        small = bpe_encode_counts(df, merges)  # vocab << default max
-        assert "BroadcastHashJoin" in plan_of(small)
-        # with the hint dropped, Catalyst's size-based threshold decides
-        # (the correct scale behavior: a 100 TB vocab's stats exceed it);
-        # simulate "too big" by disabling the threshold for this plan
-        thresholds = ("spark.sql.autoBroadcastJoinThreshold",
-                      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-        saved = {k: spark.conf.get(k, None) for k in thresholds}
-        try:
-            for k in thresholds:
-                spark.conf.set(k, "-1")
-            big = bpe_encode_counts(df, merges, broadcast_vocab_max=0)
-            assert "BroadcastHashJoin" not in plan_of(big)
-            as_dict = lambda d: {r.doc_id: (r.n_words, r.n_subwords)  # noqa: E731
-                                 for r in d.collect()}
-            assert as_dict(small) == as_dict(big)
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-
-    def test_frozen_external_merge_list(self, spark):
-        """A frozen tokenizer (external merge list, no training) prices
-        a corpus in one pass — counts match a direct python apply."""
-        from ocrd_calamari_spark.entry_queries import FROZEN_MERGES
-        from ocrd_calamari_spark.functions.text import bpe_encode_counts
-
-        rows = [(1, "the then and another"), (2, "in on ou er re en")]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-
-        def py_encode(word):
-            syms = list(word)
-            for lhs, rhs in FROZEN_MERGES:
-                out, i = [], 0
-                while i < len(syms):
-                    if (i + 1 < len(syms) and syms[i] == lhs
-                            and syms[i + 1] == rhs):
-                        out.append(lhs + rhs)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
-            return len(syms)
-
-        want = {
-            d: (len(t.split()), sum(py_encode(w) for w in t.split()))
-            for d, t in rows
-        }
-        got = {
-            r.doc_id: (r.n_words, r.n_subwords)
-            for r in bpe_encode_counts(df, FROZEN_MERGES).collect()
-        }
-        assert got == want
-
-
-class TestKsDrift:
-    """Two-sample KS drift monitor (functions/profile.py:ks_drift)."""
-
-    @staticmethod
-    def _ref(rows, width):
-        """Pure-python mirror of the cross-multiplied-CDF arithmetic."""
-        from collections import Counter
-
-        h = Counter(((g, (val // width) * width) for g, val in rows))
-        grid = sorted({v for _, v in h})
-        groups = sorted({g for g, _ in h})
-        n = sum(h.values())
-        out = {}
-        for g in groups:
-            n_g = sum(c for (gg, _), c in h.items() if gg == g)
-            cum_g = cum_all = 0
-            best = (-1, None)
-            for v in grid:
-                cum_g += h.get((g, v), 0)
-                cum_all += sum(c for (gg, vv), c in h.items() if vv == v)
-                num = abs(cum_g * (n - n_g) - (cum_all - cum_g) * n_g)
-                if num > best[0]:
-                    best = (num, v)
-            out[g] = (n_g, float(best[0]) / (float(n_g) * float(n - n_g)),
-                      best[1])
-        return out
-
-    def test_matches_python_reference_exactly(self, spark):
-        from ocrd_calamari_spark.functions.profile import ks_drift
-
-        rows = [("a", x) for x in [3, 7, 12, 18, 25, 31, 44, 52]] + \
-               [("b", x) for x in [4, 8, 11, 19, 26, 33, 41, 55]] + \
-               [("c", x) for x in [103, 117, 128, 144, 152, 161]]
-        df = spark.createDataFrame(rows, ["src", "val"])
-        got = {r.domain: (r.n_docs, r.ks, r.at_v)
-               for r in ks_drift(df, "src", "val", bucket_width=10).collect()}
-        assert got == self._ref(rows, 10)
-
-    def test_shifted_group_reads_as_drift(self, spark):
-        """The group whose distribution is displaced must carry the
-        largest KS; statistically-identical groups stay near zero."""
-        from ocrd_calamari_spark.functions.profile import ks_drift
-
-        # the moved group must be SMALL relative to the corpus: each
-        # group's complement is "the rest", so a large displaced group
-        # legitimately raises every other group's KS too
-        same = [(f"s{k}", 100 + (i * 37) % 200)
-                for k in range(4) for i in range(200)]
-        moved = [("mv", 900 + (i * 37) % 200) for i in range(50)]
-        df = spark.createDataFrame(same + moved, ["src", "val"])
-        got = {r.domain: r.ks
-               for r in ks_drift(df, "src", "val", bucket_width=10).collect()}
-        assert got["mv"] > 0.9
-        for k in range(4):
-            assert got["mv"] > got[f"s{k}"]
-            assert got[f"s{k}"] < 0.1
-
-    def test_single_group_corpus_is_guarded(self, spark):
-        """A group covering the WHOLE corpus has an empty complement —
-        the n_g*(n-n_g) denominator is 0; the guard must emit ks=0,
-        never NaN/Inf (an all-one-domain slice is a legal input)."""
-        import math
-
-        from ocrd_calamari_spark.functions.profile import ks_drift
-
-        df = spark.createDataFrame(
-            [("only", v) for v in (3, 17, 42, 99)], ["src", "val"])
-        rows = ks_drift(df, "src", "val", bucket_width=10).collect()
-        assert len(rows) == 1
-        assert rows[0].domain == "only" and rows[0].n_docs == 4
-        assert rows[0].ks == 0.0 and math.isfinite(rows[0].ks)
 
 
 class TestCharDiversity:

@@ -264,19 +264,12 @@ class TestNewOperatorPlans:
         qplan = plan_of(q_inverted_index(spark, SF), "simple")
         assert f"<= {_INDEX_MAX_DF}" in qplan
 
-    def test_bpe_pairs_take_ordered_and_divergence_broadcasts(self, spark):
-        """bpe_pair_counts' top-k must compile to TakeOrderedAndProject
-        (per-partition heaps — no global sort of the pair table);
-        domain_divergence's corpus totals must ride a broadcast (the
+    def test_divergence_totals_broadcast(self, spark):
+        """domain_divergence's corpus totals must ride a broadcast (the
         1-row cross join must never shuffle the present-pairs side)."""
-        from ocrd_calamari_spark.functions.text import (
-            bpe_pair_counts,
-            domain_divergence,
-        )
+        from ocrd_calamari_spark.functions.text import domain_divergence
 
         d = spark.read.parquet(f"{SF}/documents.parquet")
-        bplan = plan_of(bpe_pair_counts(d), "simple")
-        assert "TakeOrderedAndProject" in bplan
         dplan = plan_of(domain_divergence(d), "simple")
         assert "BroadcastNestedLoopJoin" in dplan or "BroadcastExchange" in dplan
         assert "CartesianProduct" not in dplan
@@ -377,17 +370,6 @@ class TestRound4LateOpPlans:
         assert "rangepartitioning" not in plan
         assert "Python" not in plan
 
-    def test_tokenizer_fertility_aggs_are_partial(self, spark):
-        """The per-lang fertility rollup must partial-aggregate map-side
-        (per-doc and per-lang HashAggregates) and keep the small sides
-        broadcast — never a corpus-side shuffle of text."""
-        from ocrd_calamari_spark.entry_queries import q_tokenizer_fertility
-
-        plan = plan_of(q_tokenizer_fertility(spark, SF), "simple")
-        assert "HashAggregate" in plan
-        assert "BroadcastExchange" in plan
-        assert "Python" not in plan
-
     def test_clean_pipeline_stays_jvm_and_windows_on_fingerprint(
             self, spark):
         """The composed cleaning pipeline must run entirely in codegen
@@ -422,17 +404,6 @@ class TestRound4LateOpPlans:
         assert "WindowGroupLimit" in plan and ", Partial" in plan
         assert "Python" not in plan
 
-    def test_bpe_encode_vocab_map_broadcasts(self, spark):
-        """The (word -> n_subwords) map is vocab-sized and must broadcast;
-        the merge chain itself is literal replaces — no Python."""
-        from ocrd_calamari_spark.functions.text import bpe_encode_counts
-
-        d = spark.read.parquet(f"{SF}/documents.parquet")
-        plan = plan_of(bpe_encode_counts(d, [("t", "h"), ("th", "e")]),
-                       "simple")
-        assert "BroadcastHashJoin" in plan
-        assert "Python" not in plan
-
     def test_exact_sample_is_take_ordered(self, spark):
         """The exact-k carve must plan as TakeOrdered (per-partition
         top-k, k-row merge), never a global sort."""
@@ -440,18 +411,6 @@ class TestRound4LateOpPlans:
 
         plan = plan_of(q_exact_sample(spark, SF), "simple")
         assert "TakeOrdered" in plan
-        assert "Python" not in plan
-
-    def test_ks_drift_histogram_partial_aggs_and_broadcasts(self, spark):
-        """The corpus must reduce to a (group, bucket) histogram with
-        map-side combine (shuffle = domains x grid, not rows); grid and
-        totals ride broadcasts; all-JVM."""
-        from ocrd_calamari_spark.entry_queries import q_ks_drift
-
-        plan = plan_of(q_ks_drift(spark, SF), "simple")
-        assert "partial_count" in plan
-        assert "BroadcastExchange" in plan
-        assert "windowspecdefinition(g" in plan  # per-group cumulative
         assert "Python" not in plan
 
     def test_char_diversity_partial_aggs_before_exchange(self, spark):

@@ -126,9 +126,18 @@ class TestWarcRoundTrip:
         assert sorted(got) == sorted(pages_pdf.head(5)["url"])
 
     def test_malformed_tail_stops_cleanly(self):
-        bad = (b"WARC/1.0\r\nWARC-Type: response\r\n"
-               b"Content-Length: notanumber\r\n\r\nbody")
-        assert list(iter_warc_records(bad)) == []
+        from itertools import islice
+
+        good = _response(b"http://a/", b"HTTP/1.1 200 OK", b"<p>a</p>")
+        # Content-Length is ASCII digits only: a negative length would
+        # move the reader back before the record and repeat it forever,
+        # so islice bounds the signed cases
+        for length in (b"notanumber", b"-1000", b"-1", b"+8", b"1_0"):
+            bad = (b"WARC/1.0\r\nWARC-Type: response\r\n"
+                   b"Content-Length: " + length + b"\r\n\r\nbody")
+            assert list(islice(iter_warc_records(bad), 50)) == [], length
+            got = list(islice(iter_warc_records(good + bad), 50))
+            assert [h[b"warc-target-uri"] for h, _ in got] == [b"http://a/"]
         truncated = b"WARC/1.0\r\nWARC-Type: response"  # no header end
         assert list(iter_warc_records(truncated)) == []
         assert records_to_batch("x.warc", b"").num_rows == 0
@@ -282,7 +291,7 @@ class TestHttpBodyDecoding:
                        "http://c/": html, "http://d/": html}
 
     def test_malformed_encoding_falls_back_to_raw(self):
-        from ocrd_calamari_spark.sources.warc import _http_payload
+        from ocrd_calamari_spark.sources.warc import _dechunk, _http_payload
 
         # declared gzip but not gzip → raw bytes back (kernel will flag)
         body = (b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\n\r\n"
@@ -292,6 +301,12 @@ class TestHttpBodyDecoding:
         body2 = (b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
                  b"5\r\nhello")
         assert _http_payload(body2) == b"hello"
+        # a chunk size is hex digits only: a sign, "0x" or "_" is
+        # malformed framing (a negative size would send the decoder back
+        # to the same line forever) → prefix + the rest raw
+        for tok in (b"-0x9", b"-9", b"+9", b"0x9", b"1_0"):
+            rest = tok + b"\r\nzz\r\n0\r\n\r\n"
+            assert _dechunk(b"5\r\nhello\r\n" + rest) == b"hello" + rest
 
 
 def _odd_records() -> list[tuple[bytes, str | None, bytes | None]]:
