@@ -835,106 +835,6 @@ def jaccard_index_dedup(
     return out
 
 
-def tf_cosine_join(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold_pct: int = 60,
-    max_df: int | None = None,
-    max_df_frac: float | None = None,
-) -> DataFrame:
-    """EXACT thresholded cosine-similarity join over TF term vectors via
-    an inverted index — the sparse-vector (bag-of-words) weighted sibling of
-    ``jaccard_index_dedup`` (Jaccard sees sets; cosine sees counts, so
-    repeated-term structure matters).  Reference position: the voter's
-    agreement scoring (`recognize.py:305-311` fuses per-model outputs)
-    generalized to corpus-level pairwise document agreement.
-
-    Algorithm: tokenize → per-doc term frequencies (one groupBy, map-side
-    combined); self-join the TF postings on the term so every shared term
-    yields one ``tf_a*tf_b`` product row; ``groupBy(id_a,id_b).sum()`` IS
-    the dot product.  Squared-norm table joins in and the threshold is an
-    INTEGER predicate — ``10^4·dot² ≥ pct²·‖a‖²·‖b‖²`` — no sqrt, no
-    float compare; the reported ``sim_sq = dot²/(‖a‖²‖b‖²)`` is one
-    bigint-ratio double division (IEEE-exact, bit-identical across
-    engines, same trick as jaccard's single division).
-
-    Scale design: pair-row volume is Σ_t C(df_t, 2) — proportional to
-    term sharing, never all-pairs; only (term, id, tf) and (id_a, id_b)
-    tuples shuffle.  ``max_df`` drops stop-terms from the VECTOR (both
-    dot and norms — CCNet-style df capping): at corpus scale a df=10^8
-    stop-term alone contributes ~10^16 pair rows, so the cap is REQUIRED
-    there (same Zipf argument as jaccard_index_dedup's max_df, bench'd in
-    BENCH.md); it also sharpens semantics — stop-term mass dominates
-    uncapped TF cosine.  Docs whose every term is capped drop out of the
-    join entirely (no vector left), identically in both engines.
-
-    ``max_df_frac`` is the scale-robust form of the cap: term df scales
-    linearly with corpus size (a term in 2 % of documents is in 2 % at
-    any SF), so a FIXED max_df that keeps dup pairs at one scale empties
-    every vector at 10× — measured: max_df=100 finds 300 pairs at 500
-    docs and ZERO at 5000.  The fractional cap ``df ≤ ceil(frac·n_docs)``
-    is one extra 1-row broadcast and stays meaningful at any corpus size.
-    """
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-        ).alias("term"),
-    )
-    tf = toks.groupBy("id", "term").agg(F.count("*").alias("tf"))
-    if max_df is not None or max_df_frac is not None:
-        dfc = tf.groupBy("term").agg(F.count("*").alias("df"))
-        if max_df is not None:
-            keep = dfc.where(F.col("df") <= max_df)
-        else:
-            n_docs = df.agg(F.count("*").alias("n_docs"))
-            keep = dfc.crossJoin(F.broadcast(n_docs)).where(
-                F.col("df")
-                <= F.ceil(F.lit(max_df_frac) * F.col("n_docs"))
-            )
-        tf = tf.join(keep.select("term"), "term", "left_semi")
-    norms = tf.groupBy("id").agg(
-        F.sum(F.col("tf") * F.col("tf")).alias("nrm")
-    )
-    a, b = tf.alias("a"), tf.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.term") == F.col("b.term"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        )
-        .agg(F.sum(F.col("a.tf") * F.col("b.tf")).alias("dot"))
-    )
-    t2 = int(threshold_pct) * int(threshold_pct)
-    return (
-        pairs.join(
-            norms.select(F.col("id").alias("id_a"), F.col("nrm").alias("na")),
-            "id_a",
-        )
-        .join(
-            norms.select(F.col("id").alias("id_b"), F.col("nrm").alias("nb")),
-            "id_b",
-        )
-        .where(
-            F.lit(10000) * F.col("dot") * F.col("dot")
-            >= F.lit(t2) * F.col("na") * F.col("nb")
-        )
-        .select(
-            "id_a",
-            "id_b",
-            "dot",
-            (
-                (F.col("dot") * F.col("dot")).cast("double")
-                / (F.col("na") * F.col("nb")).cast("double")
-            ).alias("sim_sq"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Near-dup clustering: connected components over the pair graph — the step
 # after pair generation that production dedup actually needs (keep ONE

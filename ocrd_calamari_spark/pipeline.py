@@ -453,68 +453,41 @@ def run_extraction(
     config = dataclasses.asdict(cfg)
     manifest = Manifest(out_dir)
     done = manifest.completed()
-    # resume sanity: a manifest written under a different bucketing would
-    # silently skip/duplicate buckets reinterpreted under the new hashing.
-    # The scheme TAG matters as much as the count: physical bucket_col
-    # values (e.g. Iceberg murmur3 bucket(N, url)) and the computed
-    # pmod(xxhash64(url)) fallback assign the same url to DIFFERENT part
-    # ids, so a resume that switches scheme would reinterpret completed
-    # part ids under the other hashing.
+    # Resume guard: every completed chunk must have been written by a run
+    # with the same identity, or the output silently mixes two jobs.
+    # A different bucket count or scheme reinterprets completed part ids
+    # (Iceberg's murmur3 bucket(N, url) and the computed
+    # pmod(xxhash64(url)) put the same url in different buckets); a
+    # different source, time window or snapshot mixes corpora; a
+    # different config mixes levels, voters or cutoffs.  Each would pass
+    # to complete=True.  A key missing from an older record, or a run
+    # without a pinned snapshot, is not compared.  since/until compare in
+    # _w's canonical form on both sides (older manifests hold raw values),
+    # so equivalent bounds of different types match.
     if bucket_col is not None:
         bucket_scheme = bucket_col
     elif source.startswith("warc:"):
         bucket_scheme = "_warc_file"
     else:
         bucket_scheme = "_computed"
+    identity = {
+        "n_buckets": n_buckets,
+        "bucket_scheme": bucket_scheme,
+        "source": source,
+        "since": _w(since),
+        "until": _w(until),
+        "snapshot_id": snapshot_id,
+        "config": config,
+    }
     for rec in done.values():
-        rec_n = rec.get("n_buckets")
-        if rec_n is not None and rec_n != n_buckets:
-            raise ValueError(
-                f"resume mismatch: manifest written with n_buckets={rec_n}, "
-                f"run requested n_buckets={n_buckets}"
-            )
-        rec_scheme = rec.get("bucket_scheme")
-        if rec_scheme is not None and rec_scheme != bucket_scheme:
-            raise ValueError(
-                f"resume mismatch: manifest written with bucket_scheme="
-                f"{rec_scheme!r}, run requested {bucket_scheme!r} — part "
-                f"ids are not comparable across partitioning schemes"
-            )
-        rec_snap = rec.get("snapshot_id")
-        if (rec_snap is not None and snapshot_id is not None
-                and rec_snap != snapshot_id):
-            raise ValueError(
-                f"resume mismatch: manifest pinned snapshot {rec_snap}, "
-                f"run requested {snapshot_id}"
-            )
-        # same-corpus guard: a resume against a different source path or
-        # time window would pass every bucketing check yet MIX corpora —
-        # half the buckets from the old input, half from the new, with
-        # complete=True at the end.  (since/until compare through _w's
-        # canonical timestamp form, so equivalent bounds of different
-        # types match and only a genuinely different window raises.)
-        rec_src = rec.get("source")
-        if rec_src is not None and rec_src != source:
-            raise ValueError(
-                f"resume mismatch: manifest written from source "
-                f"{rec_src!r}, run requested {source!r}"
-            )
-        # the rows of a resume at another level, voter or cutoff would sit
-        # beside the completed chunks' rows with complete=True at the end
-        rec_cfg = rec.get("config")
-        if rec_cfg is not None and rec_cfg != config:
-            raise ValueError(
-                f"resume mismatch: manifest written with config {rec_cfg!r}, "
-                f"run requested {config!r}"
-            )
-        window = {"since": _w(since), "until": _w(until)}
-        for key, want in window.items():
+        for key, want in identity.items():
             got = rec.get(key)
-            if got is not None and _w(got) != want:
+            if got is not None and key in ("since", "until"):
+                got = _w(got)
+            if got is not None and want is not None and got != want:
                 raise ValueError(
                     f"resume mismatch: manifest written with {key}={got!r}, "
-                    f"run requested {want!r} — completed buckets would "
-                    f"cover a different time window"
+                    f"run requested {key}={want!r}"
                 )
     done_parts = {p for rec in done.values() for p in rec["part_ids"]}
 
@@ -612,13 +585,7 @@ def run_extraction(
             {
                 "chunk_id": chunk_id,
                 "part_ids": group,
-                "n_buckets": n_buckets,
-                "bucket_scheme": bucket_scheme,
-                "source": source,
-                "since": _w(since),
-                "until": _w(until),
-                "snapshot_id": snapshot_id,
-                "config": config,
+                **identity,
                 "rows": chunk_rows,
                 "failed": sum(r["failed"] or 0 for r in per_file),
                 "overwrote": sum(r["overwrote"] or 0 for r in per_file),

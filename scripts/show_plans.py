@@ -113,28 +113,6 @@ def main():
         plan_of(q, "simple"),
     ))
 
-    q = QUERIES["inverted_index"](spark, sf)
-    sections.append((
-        "inverted_index (bounded two-phase build)",
-        "The df pass is a count-only aggregate (no ids in any buffer); "
-        "collect_list of postings sits BEHIND the df<=max_df join, so a "
-        "stop word at web scale yields a df-only row instead of a "
-        "corpus-sized array in one executor (the round-3 weak spot).  The "
-        "posting join reuses the token hash partitioning of the groupBy.",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["domain_divergence"](spark, sf)
-    sections.append((
-        "domain_divergence (mixture-design χ²)",
-        "Corpus totals ride a broadcast 1-row table; only PRESENT "
-        "(domain, token) pairs shuffle (the absent-token mass is folded "
-        "in closed form — no dense vocab×domain outer join).  Per-term "
-        "work is JVM codegen; the quantized DECIMAL(38,0) sum keeps the "
-        "result order-independent.",
-        plan_of(q, "simple"),
-    ))
-
     q = QUERIES["containment_join"](spark, sf)
     sections.append((
         "containment_join (directed shingle containment)",
@@ -144,16 +122,6 @@ def main():
         "and appears ONCE — both containment directions fan out of it "
         "via an explode (a self-union re-evaluated the posting join + "
         "pair aggregation twice; plan-verified before the fix).",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["oov_rate"](spark, sf)
-    sections.append((
-        "oov_rate (closed-vocab coverage)",
-        "The vocabulary broadcasts (BroadcastHashJoin) and the OOV flag "
-        "is a map-side join residual — the only shuffle carries (doc, "
-        "partial counts) after map-side combine; corpus text never "
-        "moves.",
         plan_of(q, "simple"),
     ))
 
@@ -192,15 +160,6 @@ def main():
         "wire, then the Final group-limit finishes per partition.  "
         "Text shuffles exactly twice (rank + per-doc reassembly), the "
         "CCNet lower bound for a rewrite.  No Python.",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["char_diversity"](spark, sf)
-    sections.append((
-        "char_diversity (Simpson char concentration)",
-        "The per-char explode collapses map-side into (doc, char, count) "
-        "partials — fan-in bounded by each doc's alphabet, not length; "
-        "no join, no Python.",
         plan_of(q, "simple"),
     ))
 

@@ -16,8 +16,7 @@ TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
 FAST_ORACLED = ["token_stats", "lang_id", "exact_dup_groups",
                 "repetition_quality", "decontaminate", "domain_quota",
-                "incremental_dedup", "domain_divergence",
-                "inverted_index", "lm_quality", "snapshot_diff",
+                "incremental_dedup", "snapshot_diff",
                 "normalized_dedup", "mojibake_detect",
                 "clean_pipeline", "lang_mix", "global_shuffle",
                 "paragraph_dedup", "exact_sample"]

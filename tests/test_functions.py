@@ -134,149 +134,6 @@ class TestTextAnalysis:
         assert 0.0 < r.q <= 1.5
 
 
-class TestRankedRetrieval:
-    @pytest.fixture(scope="class")
-    def corpus(self, spark):
-        rows = [
-            (0, "spark join shuffle join join"),        # tf(join)=3, dl=5
-            (1, "spark join shuffle scan filter scan"),  # tf(join)=1, dl=6
-            (2, "rare gem appears here once"),           # no query terms
-            (3, "join"),                                 # tf=1, shortest doc
-        ]
-        return spark.createDataFrame(rows, ["doc_id", "text"])
-
-    def test_inverted_index_postings(self, corpus):
-        from ocrd_calamari_spark.functions.text import inverted_index
-
-        idx = {r.token: (r.df, r.postings)
-               for r in inverted_index(corpus).collect()}
-        assert idx["join"] == (3, "0,1,3")
-        assert idx["spark"] == (2, "0,1")
-        assert idx["rare"] == (1, "2")
-
-    def test_inverted_index_capped_equivalence(self, corpus):
-        """Bounded form == single-pass form below the cap (the round-3
-        verdict's pin); above the cap df stays exact and postings null."""
-        from ocrd_calamari_spark.functions.text import inverted_index
-
-        base = {r.token: (r.df, r.postings)
-                for r in inverted_index(corpus).collect()}
-        # cap above every df → identical output
-        wide = {r.token: (r.df, r.postings)
-                for r in inverted_index(corpus, max_df=100).collect()}
-        assert wide == base
-        # cap at 2 → df>2 tokens keep exact df, lose postings
-        capped = {r.token: (r.df, r.postings)
-                  for r in inverted_index(corpus, max_df=2).collect()}
-        assert set(capped) == set(base)
-        for tok, (df, postings) in base.items():
-            if df <= 2:
-                assert capped[tok] == (df, postings)
-            else:
-                assert capped[tok] == (df, None)
-        assert capped["join"] == (3, None)
-
-    def test_bm25_ranking_and_exact_values(self, corpus):
-        from ocrd_calamari_spark.functions.text import bm25_scores
-
-        got = {r.doc_id: r.score
-               for r in bm25_scores(corpus, ["join", "filter"]).collect()}
-        assert set(got) == {0, 1, 3}  # doc 2 has no query term
-        # python ground truth, same rational idf / tf normalization
-        def bm25(tfs, dl, n, dfs, avgdl, k1=1.2, b=0.75):
-            s = 0.0
-            for t, tf in tfs.items():
-                idf = (n - dfs[t] + 0.5) / (dfs[t] + 0.5)
-                s += idf * (tf * (k1 + 1.0)
-                            / (tf + k1 * (1.0 - b + b * dl / avgdl)))
-            return s
-        n, avgdl = 4, (5 + 6 + 5 + 1) / 4
-        dfs = {"join": 3, "filter": 1}
-        assert got[0] == pytest.approx(
-            bm25({"join": 3}, 5, n, dfs, avgdl), abs=1e-12)
-        assert got[1] == pytest.approx(
-            bm25({"join": 1, "filter": 1}, 6, n, dfs, avgdl), abs=1e-12)
-        assert got[3] == pytest.approx(
-            bm25({"join": 1}, 1, n, dfs, avgdl), abs=1e-12)
-        # tf saturation + rare-term boost: doc1's rare 'filter' hit outranks
-        # doc0's repeated common 'join'
-        assert got[1] > got[0]
-
-
-class TestTokenizerMixtureOps:
-    def test_domain_divergence_matches_python(self, spark):
-        from collections import Counter
-
-        from ocrd_calamari_spark.functions.text import domain_divergence
-
-        rows = [("a", 1, "x x y"), ("a", 2, "x z"),
-                ("b", 3, "y y y z"), ("c", 4, "w w w w")]
-        df = spark.createDataFrame(rows, ["source", "doc_id", "text"])
-        got = {r.domain: r.chi2 for r in domain_divergence(df).collect()}
-        toks = [(s, t) for s, _, tx in rows for t in tx.split()]
-        n = len(toks)
-        corpus = Counter(t for _, t in toks)
-        import math
-        want = {}
-        for dom in {s for s, _ in toks}:
-            mine = Counter(t for s, t in toks if s == dom)
-            n_s = sum(mine.values())
-            # same closed form + quantized sum as the engine
-            qsum = 0
-            for t, c_s in mine.items():
-                p, ps = corpus[t] / n, c_s / n_s
-                qsum += math.floor(((ps - p) * (ps - p) / p - p) * 1e12 + 0.5)
-            want[dom] = 1.0 + qsum / 1e12
-        assert got == pytest.approx(want, abs=1e-12)
-        # a domain identical to the corpus distribution scores ~the
-        # residual only; the disjoint-vocab domain ('c') scores highest
-        assert got["c"] == max(got.values())
-
-
-class TestTokenizerMixtureRandomized:
-    def test_random_corpora_match_python(self, spark):
-        """Randomized corpora (Zipf-ish vocab, 1-40 tokens/doc, 1-6
-        domains, single-token docs, domains with one doc) — engine vs
-        python closed-form for domain_divergence.  Catches what the fixed
-        fixtures can't: singleton domains and tokens unique to one
-        domain."""
-        import math
-        import random
-        from collections import Counter
-
-        from ocrd_calamari_spark.functions.text import domain_divergence
-
-        rng = random.Random(83)
-        vocab = [f"w{i}" for i in range(30)]
-        weights = [1.0 / (i + 1) for i in range(30)]
-        for trial in range(3):
-            rows = []
-            n_dom = rng.randint(1, 6)
-            for d in range(n_dom):
-                for i in range(rng.randint(1, 8)):
-                    toks = rng.choices(vocab, weights=weights,
-                                       k=rng.randint(1, 40))
-                    rows.append((f"d{d}", len(rows), " ".join(toks)))
-            df = spark.createDataFrame(rows, ["source", "doc_id", "text"])
-
-            got = {r.domain: r.chi2
-                   for r in domain_divergence(df).collect()}
-            toks = [(s, t) for s, _, tx in rows for t in tx.split()]
-            n = len(toks)
-            corpus = Counter(t for _, t in toks)
-            want = {}
-            for dom in {s for s, _ in toks}:
-                mine = Counter(t for s, t in toks if s == dom)
-                n_s = sum(mine.values())
-                qsum = 0
-                for t, c_s in mine.items():
-                    p, ps = corpus[t] / n, c_s / n_s
-                    qsum += math.floor(
-                        ((ps - p) * (ps - p) / p - p) * 1e12 + 0.5)
-                want[dom] = 1.0 + qsum / 1e12
-            assert got == pytest.approx(want, abs=1e-12), trial
-
-
 class TestRepetitionStats:
     def test_handcrafted_signals(self, spark):
         from ocrd_calamari_spark.functions.text import repetition_stats
@@ -715,22 +572,6 @@ class TestSimilaritySemantics:
         got = {r["oid"]: r["_start_offset"] for r in out.collect()}
         assert got == {base + i: 10 * i for i in range(100)}
 
-    def test_bm25_rejects_empty_and_dedupes_terms(self, spark):
-        import pytest
-
-        from ocrd_calamari_spark.functions.text import bm25_scores
-
-        corpus = spark.createDataFrame(
-            [(0, "join scan"), (1, "scan scan")], ["doc_id", "text"]
-        )
-        with pytest.raises(ValueError, match="at least one"):
-            bm25_scores(corpus, [])
-        once = {r.doc_id: r.score
-                for r in bm25_scores(corpus, ["join"]).collect()}
-        twice = {r.doc_id: r.score
-                 for r in bm25_scores(corpus, ["join", "join"]).collect()}
-        assert once == twice  # duplicate terms don't double-count
-
     def test_token_count_empty_is_zero(self, spark):
         from ocrd_calamari_spark.functions.text import token_count
 
@@ -740,164 +581,6 @@ class TestSimilaritySemantics:
         got = {r.i: r.n for r in
                df.select("i", token_count("text").alias("n")).collect()}
         assert got == {0: 0, 1: 0, 2: 2}
-
-
-class TestTfCosineJoin:
-    @staticmethod
-    def _ref_pairs(docs, threshold, max_df=None):
-        """Plain-python TF cosine over the same tokenization."""
-        from collections import Counter
-
-        tf = {i: Counter(t.strip().lower().split()) for i, t in docs}
-        if max_df is not None:
-            df_ct = Counter(term for c in tf.values() for term in c)
-            tf = {
-                i: Counter({t: n for t, n in c.items()
-                            if df_ct[t] <= max_df})
-                for i, c in tf.items()
-            }
-        out = {}
-        ids = sorted(tf)
-        for ai in range(len(ids)):
-            for bi in range(ai + 1, len(ids)):
-                a, b = ids[ai], ids[bi]
-                dot = sum(tf[a][t] * tf[b][t] for t in tf[a] if t in tf[b])
-                na = sum(v * v for v in tf[a].values())
-                nb = sum(v * v for v in tf[b].values())
-                if dot and 10000 * dot * dot >= threshold ** 2 * na * nb:
-                    out[(a, b)] = (dot, dot * dot / (na * nb))
-        return out
-
-    def test_matches_python_reference(self, spark):
-        from ocrd_calamari_spark.functions.dedup import tf_cosine_join
-
-        docs = [
-            (0, "the cat sat on the mat"),
-            (1, "the cat sat on the mat"),          # exact dup of 0
-            (2, "the cat sat on the red mat"),      # near dup
-            (3, "quantum flux capacitors hum"),     # unrelated
-            (4, "the the the the"),                 # degenerate repeat
-            (5, "cat cat mat mat sat sat"),         # same terms, diff tf
-        ]
-        df = spark.createDataFrame(docs, ["doc_id", "text"]).repartition(5)
-        got = {
-            (r.id_a, r.id_b): (r.dot, r.sim_sq)
-            for r in tf_cosine_join(df, threshold_pct=60).collect()
-        }
-        ref = self._ref_pairs(docs, 60)
-        assert got == ref  # bit-exact: integer dot + one IEEE division
-        assert (0, 1) in got and got[(0, 1)][1] == 1.0
-
-    def test_max_df_caps_vector_and_drops_all_capped_docs(self, spark):
-        from ocrd_calamari_spark.functions.dedup import tf_cosine_join
-
-        # 'the' appears in all 4 docs → df=4 > max_df=3 → capped out;
-        # doc 3 is ONLY stop-terms → drops out of the join entirely
-        docs = [
-            (0, "the apple pie recipe"),
-            (1, "the apple pie recipe"),
-            (2, "the apple tart recipe"),
-            (3, "the the the"),
-        ]
-        df = spark.createDataFrame(docs, ["doc_id", "text"])
-        got = {
-            (r.id_a, r.id_b): (r.dot, r.sim_sq)
-            for r in tf_cosine_join(df, threshold_pct=60,
-                                    max_df=3).collect()
-        }
-        ref = self._ref_pairs(docs, 60, max_df=3)
-        assert got == ref
-        assert all(3 not in p for p in got)
-        # fractional cap: ceil(0.75 * 4 docs) = 3 → identical result
-        frac = {
-            (r.id_a, r.id_b): (r.dot, r.sim_sq)
-            for r in tf_cosine_join(df, threshold_pct=60,
-                                    max_df_frac=0.75).collect()
-        }
-        assert frac == got
-
-
-class TestBigramLmScores:
-    def test_matches_python_mle_reference(self, spark):
-        """Spark quantized bigram-LM score == plain python on the same
-        corpus-trained MLE counts, including the <2-token NULL rule."""
-        import math
-        from collections import Counter
-
-        from ocrd_calamari_spark.functions.text import bigram_lm_scores
-
-        docs = [
-            (0, "the cat sat on the mat"),
-            (1, "the cat sat on the mat"),
-            (2, "the dog sat on a log"),
-            (3, "one"),                      # no bigram → NULL score
-            (4, "zz yy zz yy zz"),           # unseen-elsewhere grams
-        ]
-        toks = {i: t.lower().split(" ") for i, t in docs}
-        c1 = Counter(w for ts in toks.values() for w in ts)
-        c2 = Counter(
-            (ts[j], ts[j + 1])
-            for ts in toks.values() for j in range(len(ts) - 1)
-        )
-        ref = {}
-        for i, ts in toks.items():
-            qs = [
-                math.floor(1e12 * (c2[(ts[j], ts[j + 1])] / c1[ts[j]]))
-                for j in range(len(ts) - 1)
-            ]
-            ref[i] = (len(qs),
-                      math.floor(sum(qs) / len(qs)) if qs else None)
-
-        df = spark.createDataFrame(docs, ["doc_id", "text"]).repartition(3)
-        got = {r.id: (r.n_bigrams, r.lm_score)
-               for r in bigram_lm_scores(df).collect()}
-        assert got == ref
-        assert got[3] == (0, None)  # <2 tokens: nothing to condition on
-        # NOTE: unsmoothed MLE scores singleton continuations at 1.0
-        # (c2 == c1 == 1), so "rare text scores low" does NOT hold in
-        # general — only the exact parity above is the contract here
-        assert all(s is None or 0 <= s <= 10 ** 12
-                   for _, s in got.values())
-
-
-class TestCooccurrencePmi:
-    def test_matches_python_reference(self, spark):
-        """Spark ±2-window PMI ratios == plain python (same canonical
-        pair rule: least/greatest, self-pairs dropped, min_count)."""
-        from collections import Counter
-
-        from ocrd_calamari_spark.functions.text import cooccurrence_pmi
-
-        docs = [(i, "new york city hosts new york events") for i in range(4)]
-        docs += [(10 + i, "red fish blue fish") for i in range(4)]
-        toks = [t.lower().split(" ") for _, t in docs]
-        pairs = Counter()
-        for ts in toks:
-            for d in (1, 2):
-                for j in range(len(ts) - d):
-                    a, b = sorted((ts[j], ts[j + d]))
-                    if a != b:
-                        pairs[(a, b)] += 1
-        n_pair = sum(
-            1
-            for ts in toks for d in (1, 2)
-            for j in range(len(ts) - d)
-            if ts[j] != ts[j + d]
-        )
-        c_tok = Counter(w for ts in toks for w in ts)
-        n_tok = sum(c_tok.values())
-        ref = {
-            p: (c, (c * n_tok * n_tok) / (n_pair * c_tok[p[0]] * c_tok[p[1]]))
-            for p, c in pairs.items() if c >= 5
-        }
-
-        df = spark.createDataFrame(docs, ["doc_id", "text"])
-        rows = cooccurrence_pmi(df, min_count=5, top_k=50).collect()
-        got = {(r.a, r.b): (r.c_ab, r.pmi_ratio) for r in rows}
-        assert got == ref
-        # ranking is by ratio desc with (a, b) tie-break
-        ratios = [(r.pmi_ratio, r.a, r.b) for r in rows]
-        assert ratios == sorted(ratios, key=lambda t: (-t[0], t[1], t[2]))
 
 
 class TestSnapshotDiff:
@@ -1024,73 +707,6 @@ class TestContainmentJoin:
         capped = containment_join(df, threshold=0.1, shingle_k=3, max_df=3)
         assert uncapped.count() == 30  # all pairs share "common boiler plate"
         assert capped.count() == 0     # the only shared shingle is capped out
-
-
-class TestOovRate:
-    def test_counts_match_python(self, spark):
-        rows = [
-            (1, "the cat sat on the mat"),
-            (2, "the dog zzz qqq"),
-            (3, "xyzzy plugh"),
-        ]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        from ocrd_calamari_spark.functions.text import oov_rate
-
-        # vocab_size=4 over token counts (ties by token asc):
-        # the(3) cat,dog,mat,on,plugh,qqq,sat,xyzzy,zzz(1 each)
-        # -> vocab = {the, cat, dog, mat}
-        got = {r["doc_id"]: (r["n_tokens"], r["n_oov"], r["oov_bp"])
-               for r in oov_rate(df, vocab_size=4).collect()}
-        assert got == {
-            1: (6, 2, 3333),    # sat, on OOV
-            2: (4, 2, 5000),    # zzz, qqq OOV
-            3: (2, 2, 10000),   # fully OOV
-        }
-
-    def test_vocab_boundary_tie_breaks_on_token(self, spark):
-        # four count-1 tokens compete for 2 vocab slots after "top":
-        # lexicographic tie-break -> {aa, bb} in, {cc, dd} out
-        rows = [(1, "top aa bb"), (2, "top cc dd")]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        from ocrd_calamari_spark.functions.text import oov_rate
-
-        got = {r["doc_id"]: r["n_oov"]
-               for r in oov_rate(df, vocab_size=3).collect()}
-        assert got == {1: 0, 2: 2}
-
-    def test_plan_broadcasts_vocab(self, spark):
-        rows = [(i, f"w{i % 7} common tokens here") for i in range(50)]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        from ocrd_calamari_spark.functions.text import oov_rate
-
-        plan = oov_rate(df, vocab_size=5)._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert "BroadcastHashJoin" in plan  # corpus side never reshuffles
-
-
-class TestCompressionSignal:
-    def test_matches_direct_zlib(self, spark):
-        import zlib
-
-        rows = [
-            (1, "word " * 200),                      # repetitive -> low ratio
-            (2, "the quick brown fox jumps over the lazy dog and keeps "
-                "running through fields of varied natural prose text"),
-            (3, "kjq8x!mz94@pw7#vn2$hс5%tr3^yu1&io0*as6(df4)gh8-jk2+lz9"),
-            (4, ""),                                  # empty sentinel
-        ]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        from ocrd_calamari_spark.functions.text import compression_signal
-
-        got = {r["doc_id"]: (r["n_bytes"], r["n_comp"], r["ratio_bp"])
-               for r in compression_signal(df).collect()}
-        for i, t in rows:
-            raw = t.encode("utf-8")
-            comp = len(zlib.compress(raw, 6))
-            assert got[i] == (
-                len(raw), comp, comp * 10000 // max(len(raw), 1))
-        # signal sanity: repetitive << prose < junk
-        assert got[1][2] < got[2][2] < got[3][2]
 
 
 class TestIntraDocSpanDedup:
@@ -1239,48 +855,6 @@ class TestParagraphDedup:
         # a fully-duplicated doc must still get a row, rebuilt to ''
         assert got[3].new_text == ""
         assert (got[3].n_paras, got[3].n_removed) == (3, 3)
-
-
-class TestCharDiversity:
-    """Simpson character-concentration (functions/text.py:char_diversity)."""
-
-    def test_matches_python_reference_exactly(self, spark):
-        from collections import Counter
-
-        from ocrd_calamari_spark.functions.text import char_diversity
-
-        docs = [(0, "hello world"), (1, "aaaaaaaa"), (2, "abcdefgh"),
-                (3, "mixé çhars döc"), (4, "x")]
-        df = spark.createDataFrame(docs, ["doc_id", "text"])
-        got = {r.doc_id: (r.n_chars, r.n_distinct, r.simpson)
-               for r in char_diversity(df).collect()}
-        want = {}
-        for i, t in docs:
-            c = Counter(t)
-            n = sum(c.values())
-            c2 = sum(v * v for v in c.values())
-            want[i] = (n, len(c), float(c2) / (float(n) * float(n)))
-        assert got == want
-
-    def test_empty_docs_are_excluded(self, spark):
-        from ocrd_calamari_spark.functions.text import char_diversity
-
-        df = spark.createDataFrame([(0, ""), (1, "ok")], ["doc_id", "text"])
-        got = char_diversity(df).collect()
-        assert [r.doc_id for r in got] == [1]
-
-    def test_spam_reads_concentrated_prose_reads_diverse(self, spark):
-        """Repeated-char spam must sit near 1; normal prose well below."""
-        from ocrd_calamari_spark.functions.text import char_diversity
-
-        df = spark.createDataFrame(
-            [(0, "a" * 400),
-             (1, "The quick brown fox jumps over the lazy dog near banks "
-                 "of rivers while autumn leaves drift quietly downstream.")],
-            ["doc_id", "text"])
-        got = {r.doc_id: r.simpson for r in char_diversity(df).collect()}
-        assert got[0] == 1.0
-        assert got[1] < 0.12
 
 
 class TestMojibake:
@@ -1478,66 +1052,6 @@ class TestWinnowSelections:
         # density: at window=4 expected ~2/5 of hashes; assert < 0.75
         n_toks = len(a.split())
         assert len(sel[0]) < 0.75 * (n_toks - 4)
-
-
-class TestLangMismatch:
-    """Declared-vs-detected language QA (entry_queries.q_lang_mismatch)."""
-
-    def test_controlled_fixture_counts(self, spark, tmp_path):
-        from ocrd_calamari_spark.entry_queries import q_lang_mismatch
-
-        en = "the cat and the dog is in the house of the king and it is"
-        fr = "le chat est dans le jardin et les fleurs des champs est le roi"
-        rows = (
-            [(i, en, "en", "clean", len(en)) for i in range(10)]
-            + [(100 + i, fr, "en", "noisy", len(fr)) for i in range(5)]
-            + [(200 + i, en, "zh", "unscored", len(en)) for i in range(3)]
-        )
-        df = spark.createDataFrame(
-            rows, ["doc_id", "text", "lang", "source", "n_chars"])
-        df.write.parquet(str(tmp_path / "documents.parquet"))
-        got = {r.source: (r.n_docs, r.n_scored, r.n_mismatch, r.mismatch_bp)
-               for r in q_lang_mismatch(spark, str(tmp_path)).collect()}
-        assert got["clean"] == (10, 10, 0, 0)
-        assert got["noisy"] == (5, 5, 5, 10000)
-        # zh is outside the heuristic's scope: counted, never scored
-        assert got["unscored"] == (3, 0, 0, 0)
-
-    def test_arithmetic_invariants_on_fixture(self, spark):
-        from ocrd_calamari_spark.entry_queries import q_lang_mismatch
-
-        for r in q_lang_mismatch(spark, "/root/testdata/sf0.001").collect():
-            assert 0 <= r.n_mismatch <= r.n_scored <= r.n_docs
-            assert r.mismatch_bp == (r.n_mismatch * 10000) // r.n_scored
-
-
-class TestEffectiveTokens:
-    """Dedup-adjusted token accounting (entry_queries.q_effective_tokens)."""
-
-    def test_injected_dups_are_discounted_exactly(self, spark):
-        from ocrd_calamari_spark.entry_queries import q_effective_tokens
-
-        r = q_effective_tokens(spark, "/root/testdata/sf0.001").collect()[0]
-        import duckdb
-        base = duckdb.sql(
-            "SELECT CAST(COUNT(*) AS BIGINT),"
-            " CAST(SUM(length(text) - length(replace(text,' ','')) + 1)"
-            " AS BIGINT)"
-            " FROM read_parquet('/root/testdata/sf0.001/documents.parquet')"
-        ).fetchone()
-        n_docs, n_tokens = base
-        # corpus = documents + 40 injected tail-extended dups; the base
-        # corpus ALSO carries organic near-dups at this threshold, so the
-        # injected 40 are an upper bound on kept docs, not an identity
-        # (exactness itself is certified by the hash-exact recursive-CTE
-        # oracle)
-        assert r.raw_docs == n_docs + 40
-        assert r.kept_docs <= n_docs  # every injected dup joins its original
-        assert r.kept_docs >= n_docs - 100  # organic dups stay a minority
-        assert r.effective_tokens <= n_tokens
-        assert r.raw_tokens > r.effective_tokens
-        assert r.dup_token_bp == ((r.raw_tokens - r.effective_tokens)
-                                  * 10000) // r.raw_tokens
 
 
 class TestIncrementalNearDup:

@@ -240,52 +240,6 @@ class TestNewOperatorPlans:
         assert "BroadcastNestedLoopJoin" not in plan
         spark.catalog.clearCache()  # release the operator's posting cache
 
-    def test_inverted_index_capped_bounds_posting_buffers(self, spark):
-        """Regression pin for the bounded inverted index: with a finite
-        max_df the plan must gate collect_list behind the df-count pass —
-        the df aggregation itself is count-only, and the posting
-        aggregation sits after the df<=cap join, so no aggregation buffer
-        exceeds max_df elements regardless of token skew."""
-        from ocrd_calamari_spark.functions.text import inverted_index
-
-        df = spark.createDataFrame([(1, "a b")], ["doc_id", "text"])
-        plan = inverted_index(df, max_df=7)._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert "collect_list" in plan
-        assert "<= 7" in plan          # the df gate exists
-        assert "Join" in plan          # postings gated through the join
-        assert "collect_set" not in plan
-        # and the registry query runs the capped form, not the exact one
-        from ocrd_calamari_spark.entry_queries import (
-            _INDEX_MAX_DF,
-            q_inverted_index,
-        )
-
-        qplan = plan_of(q_inverted_index(spark, SF), "simple")
-        assert f"<= {_INDEX_MAX_DF}" in qplan
-
-    def test_divergence_totals_broadcast(self, spark):
-        """domain_divergence's corpus totals must ride a broadcast (the
-        1-row cross join must never shuffle the present-pairs side)."""
-        from ocrd_calamari_spark.functions.text import domain_divergence
-
-        d = spark.read.parquet(f"{SF}/documents.parquet")
-        dplan = plan_of(domain_divergence(d), "simple")
-        assert "BroadcastNestedLoopJoin" in dplan or "BroadcastExchange" in dplan
-        assert "CartesianProduct" not in dplan
-
-    def test_bm25_broadcasts_stats_not_corpus(self, spark):
-        """df/totals are broadcast; the corpus-side tf/dl aggregates have
-        map-side partial aggregation (partial_count before the exchange)."""
-        from ocrd_calamari_spark.functions.text import bm25_scores
-
-        d = spark.read.parquet(f"{SF}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        plan = plan_of(bm25_scores(d, ["join", "filter"]), "formatted")
-        assert "BroadcastHashJoin" in plan
-        assert "partial_count" in plan
-
 
 class TestRound4NewOpPlans:
     def test_quality_funnel_is_one_scan_one_exchange(self, spark):
@@ -312,18 +266,6 @@ class TestRound4NewOpPlans:
         plan = plan_of(dedup_spans_in_doc(d), "simple")
         assert "Exchange" not in plan
         assert "Python" not in plan
-
-    def test_tf_cosine_join_is_equi_joins_only(self, spark):
-        """The cosine pair join must stay an equi-join on the term (the
-        a.id < b.id predicate is a residual, not a join strategy change)
-        with map-side partial aggregation of the dot products."""
-        from ocrd_calamari_spark.functions.dedup import tf_cosine_join
-
-        d = spark.read.parquet(f"{SF}/documents.parquet")
-        plan = plan_of(tf_cosine_join(d, max_df=100), "simple")
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "partial_sum" in plan_of(tf_cosine_join(d, max_df=100))
 
 
 class TestContainmentJoinPlan:
@@ -411,17 +353,6 @@ class TestRound4LateOpPlans:
 
         plan = plan_of(q_exact_sample(spark, SF), "simple")
         assert "TakeOrdered" in plan
-        assert "Python" not in plan
-
-    def test_char_diversity_partial_aggs_before_exchange(self, spark):
-        """The char explode must collapse map-side into (doc, char, count)
-        partials (fan-in bounded by per-doc alphabet, not length); no
-        join, all-JVM."""
-        from ocrd_calamari_spark.entry_queries import q_char_diversity
-
-        plan = plan_of(q_char_diversity(spark, SF), "simple")
-        assert "partial_count" in plan
-        assert "Join" not in plan
         assert "Python" not in plan
 
     def test_winnow_selection_is_pure_map(self, spark):
