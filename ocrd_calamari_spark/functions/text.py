@@ -125,15 +125,14 @@ def fingerprint_sql_duckdb(col: str = "text") -> str:
 def word_ngrams(col, n: int = 2) -> Column:
     """Array of space-joined word n-grams (single-space tokenization — the
     oracle-parity variant; DuckDB mirrors it with generate_series + list
-    slicing).  A document shorter than n yields one truncated gram, same
-    as the shingle helpers."""
+    slicing).  A document shorter than n yields one truncated gram."""
     c = F.col(col) if isinstance(col, str) else col
     tokens = F.split(c, " ")
 
     # bind the token array as a lambda variable (single-element outer
     # transform): inlining `tokens` in the per-gram lambda re-splits the
-    # document once PER GRAM — O(len²) per row (same fix as
-    # dedup.word_shingles, r06)
+    # document once PER GRAM — O(len²) per row (r06 measured 120
+    # core-seconds of trigram shingling at sf1.0 in that form)
     def _grams(t):
         idx = F.sequence(F.lit(1), F.greatest(F.size(t) - n + 1, F.lit(1)))
         return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i, n)))
@@ -253,52 +252,6 @@ def packed_offsets(df, order_col: str, weight_col: str,
     )
 
 
-def rolling_fingerprints(col, window: int = 8,
-                         token_hash: str | None = None) -> Column:
-    """Rolling-hash shingle fingerprints of each ``window``-token shingle —
-    the content-defined-chunking primitive, all JVM-side.
-
-    ``token_hash``: SQL template ({t} = shingle string); default xxhash64
-    (fastest), or the md5-based portable hash for DuckDB oracle parity.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    tokens = F.split(F.trim(c), r"\s+")
-    if token_hash is None:
-        # token array bound as a lambda variable — inlining `tokens` in
-        # the per-shingle lambda re-splits the text once per shingle
-        # (see word_shingles, r06)
-        def _fp(t):
-            idx = F.sequence(
-                F.lit(1), F.greatest(F.size(t) - window + 1, F.lit(1))
-            )
-            return F.transform(
-                idx,
-                lambda i: F.xxhash64(
-                    F.concat_ws(" ", F.slice(t, i, window))
-                ),
-            )
-
-        return F.element_at(F.transform(F.array(tokens), _fp), 1)
-    # portable path: whole pipeline as one SQL expression so the hash
-    # template can wrap the shingle string ('\\s+' in SQL source = \s+).
-    # The column must be a NAME here (it is spliced into SQL text).
-    if not isinstance(col, str):
-        raise TypeError(
-            "rolling_fingerprints(token_hash=...) requires a column NAME; "
-            "got a Column object"
-        )
-    # token array bound as a lambda variable (single-element outer
-    # transform) — inlining the split() text per element re-splits the
-    # document once per window (same fix as the xxhash64 path above)
-    toks = f"split(trim(`{col}`), '\\\\s+')"
-    shingle = f"concat_ws(' ', slice(t, i, {window}))"
-    return F.expr(
-        f"element_at(transform(array({toks}), t -> "
-        f"transform(sequence(1, greatest(size(t) - {window} + 1, 1)), "
-        f"i -> {token_hash.format(t=shingle)})), 1)"
-    )
-
-
 def strip_boilerplate_lines(
     df: "DataFrame",
     id_col: str = "doc_id",
@@ -364,99 +317,6 @@ def strip_boilerplate_lines(
                 "\n",
             ).alias("clean_text"),
         )
-    )
-
-
-def dedup_spans_in_doc(
-    df,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-    token_hash: str | None = None,
-) -> "DataFrame":
-    """Remove REPEATED spans WITHIN each document (the intra-document
-    half of suffix-array-style substring dedup; `span_dedup` is the
-    cross-document half): any token covered by a ``window``-token
-    rolling fingerprint that already occurred EARLIER in the same
-    document is dropped, and the text is reassembled from the surviving
-    tokens — so a page whose template repeats its own header/footer
-    block loses the second copy wholesale (every token of a repeated
-    window is covered by some repeat-window, not just its first token).
-
-    Plan shape: a PURE MAP — zero shuffles of any kind.  The repeat
-    detection is per-document array algebra inside one projection:
-    sort the (fingerprint, window-index) pairs (O(n log n) per doc,
-    JVM-side), mark every pair whose sorted predecessor shares its
-    hash (= not the earliest occurrence), expand the marked windows to
-    their covered positions, and filter the token array against that
-    drop set.  The earlier formulation posexploded windows AND tokens
-    through a window function, a distinct, and a left-anti join — three
-    doc_id-keyed shuffles that moved every token of the corpus;
-    measured 7.9 s -> sub-second at sf0.1 (BENCH.md).  Worst-case
-    compute is O(n·d) for the final containment filter (d = dropped
-    positions), the usual rewrite-op bound, with JVM-array constants.
-
-    Output: (id, n_tokens, n_removed, new_text), byte-exact across
-    engines with the portable ``token_hash``.
-    """
-    toks_arr = F.split(F.trim(F.col(text_col)), r"\s+")
-    base = df.select(
-        F.col(id_col),
-        toks_arr.alias("_toks"),
-        rolling_fingerprints(text_col, window=window,
-                             token_hash=token_hash).alias("_fps"),
-    ).withColumn("_n", F.size("_toks"))
-    # (hash, 1-based window idx) sorted by hash then idx: within a
-    # same-hash run every element but the first is a repeat
-    srt = base.withColumn(
-        "_srt",
-        F.array_sort(
-            F.transform(
-                "_fps",
-                lambda h, i: F.struct(h.alias("h"),
-                                      (i + 1).alias("idx")),
-            )
-        ),
-    )
-    rep_idx = F.filter(
-        F.transform(
-            "_srt",
-            # F.get is 0-based and null-safe: at i=0 the predecessor
-            # lookup yields NULL (never an ANSI index error), the
-            # equality is NULL, and the when() falls through to NULL
-            lambda s, i: F.when(
-                F.get(F.col("_srt"), i - 1)["h"] == s["h"], s["idx"]
-            ),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    drops = srt.withColumn(
-        "_drops",
-        F.array_distinct(
-            F.flatten(
-                F.transform(
-                    rep_idx,
-                    lambda idx: F.sequence(
-                        idx, F.least(idx + window - 1, F.col("_n"))
-                    ),
-                )
-            )
-        ),
-    )
-    kept = F.filter(
-        F.transform(
-            "_toks",
-            lambda t, p: F.struct(t.alias("t"), (p + 1).alias("p")),
-        ),
-        lambda s: ~F.array_contains(F.col("_drops"), s["p"]),
-    )
-    return drops.select(
-        id_col,
-        F.col("_n").cast("bigint").alias("n_tokens"),
-        F.size("_drops").cast("bigint").alias("n_removed"),
-        F.array_join(
-            F.transform(kept, lambda s: s["t"]), " "
-        ).alias("new_text"),
     )
 
 
@@ -629,60 +489,4 @@ def mojibake_scores(
         n_punct.alias("n_punct"),
         n_latin.alias("n_latin"),
         ((n_repl > 0) | (n_punct > 0) | (n_latin > 0)).alias("is_mojibake"),
-    )
-
-
-def winnow_selections(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    kgram: int = 5,
-    window: int = 4,
-    token_hash: str | None = None,
-) -> DataFrame:
-    """(id, pos, fp) — winnowing fingerprint selection (Schleimer et al.,
-    SIGMOD 2003 — the MOSS algorithm; public method) over the rolling
-    k-gram hashes `rolling_fingerprints` emits.
-
-    Winnowing picks, from every window of ``window`` consecutive k-gram
-    hashes, the RIGHTMOST minimum, then drops duplicate picks — giving
-    the two guarantees raw rolling hashes lack: any shared run of at
-    least kgram + window - 1 tokens is always detected (at least one
-    shared fingerprint survives selection on both sides), and expected
-    density is 2/(window+1) — the fingerprint INDEX is ~3x smaller than
-    the full hash stream at window=4, bounded by construction.  This is
-    the standard index layout for cross-corpus near-match lookup where
-    `span_dedup`'s every-window hashing would over-index.
-
-    All per-document work is one JVM projection (array HOFs: the
-    rightmost-min scan is a fold per window, O(window) each); the output
-    explodes to compact (id, pos, fp) rows — text never shuffles, and
-    the selection is a pure function of the text (deterministic under
-    retries / resume / growth, SURVEY.md §7.3).
-    """
-    from ocrd_calamari_spark.functions.dedup import PORTABLE_TOKEN_HASH_SQL
-
-    th = token_hash or PORTABLE_TOKEN_HASH_SQL
-    w = int(window)
-    fps = rolling_fingerprints(text_col, window=int(kgram), token_hash=th)
-    out = df.select(F.col(id_col), fps.alias("_fps"))
-    sel = F.expr(
-        f"array_distinct(transform("
-        f"  sequence(1, greatest(size(_fps) - {w} + 1, 1)),"
-        f"  i -> aggregate("
-        f"    sequence(i, least(i + {w} - 1, size(_fps))),"
-        f"    named_struct('fp', cast(null as bigint),"
-        f"                 'pos', cast(null as int)),"
-        f"    (acc, p) -> if(acc.fp is null or element_at(_fps, p) <= acc.fp,"
-        f"                   named_struct('fp', element_at(_fps, p),"
-        f"                                'pos', cast(p as int)),"
-        f"                   acc))))"
-    )
-    return (
-        out.select(F.col(id_col), F.explode(sel).alias("_s"))
-        .select(
-            id_col,
-            F.col("_s.pos").cast("bigint").alias("pos"),
-            F.col("_s.fp").alias("fp"),
-        )
     )

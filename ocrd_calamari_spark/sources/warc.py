@@ -49,7 +49,15 @@ def _parse_headers(block: bytes) -> dict:
 
 def iter_warc_records(data: bytes):
     """Yield (headers, body) per WARC record.  Content-Length-driven —
-    never scans body bytes for delimiters (bodies may contain CRLFCRLF)."""
+    never scans body bytes for delimiters (bodies may contain CRLFCRLF).
+
+    A record whose Content-Length is not ASCII digits is skipped: its
+    body length is unknown, so the reader resumes at the next line after
+    its header block that starts with ``WARC/1.``, and stops when there
+    is none.  A skipped record is not yielded, so it takes no index in
+    ``records_to_rows`` / ``records_to_batch``: a later record's
+    ``_src_row`` is its position among the yielded records (one lower
+    for each skipped record before it)."""
     pos = 0
     n = len(data)
     while pos < n:
@@ -62,7 +70,11 @@ def iter_warc_records(data: bytes):
         headers = _parse_headers(data[start:hdr_end])
         raw = headers.get(b"content-length", b"")
         if not raw.isdigit():  # int() would take a sign: "-1000" loops
-            return  # malformed record: stop rather than misalign
+            nxt = data.find(b"\nWARC/1.", hdr_end)
+            if nxt == -1:
+                return
+            pos = nxt + 1
+            continue
         length = int(raw)
         body_start = hdr_end + len(_CRLF2)
         yield headers, data[body_start:body_start + length]

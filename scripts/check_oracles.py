@@ -63,9 +63,8 @@ def main():
         if only and name not in only:
             continue
         try:
-            # the dedup queries persist compact intermediates for the
-            # duration of their plan — drop them between queries so a full
-            # gate run doesn't accumulate session-lifetime cache entries
+            # drop anything a query persisted so a full gate run doesn't
+            # accumulate session-lifetime cache entries
             spark.catalog.clearCache()
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as exc:

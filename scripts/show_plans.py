@@ -61,17 +61,6 @@ def main():
         plan_of(ext_url, "simple"),
     ))
 
-    q = QUERIES["minhash_dedup"](spark, sf)
-    sections.append((
-        "minhash_dedup (verify stage pruned to candidates)",
-        "The exact-Jaccard verify re-shingles ONLY ids surviving the LSH "
-        "candidate semi-join (left_semi below the shingle projection); the "
-        "banded-key table is cached so the signature fold runs once. "
-        "Without the prune every document's shingle array shuffles through "
-        "both verify joins — the round-1 scale flaw.",
-        plan_of(q, "simple"),
-    ))
-
     q = QUERIES["pack_sequences"](spark, sf)
     sections.append((
         "pack_sequences (distributed prefix sum)",
@@ -93,16 +82,6 @@ def main():
         plan_of(q, "simple"),
     ))
 
-    q = QUERIES["span_dedup"](spark, sf)
-    sections.append((
-        "span_dedup (cross-doc duplicated windows)",
-        "ONE md5-window pass: n_windows derives arithmetically (no "
-        "re-hash under size()), and the first-claimer is a window-min "
-        "over the exploded hashes — the groupBy+self-join formulation "
-        "carried the hash transform 3× (plan-verified before the fix).",
-        plan_of(q, "simple"),
-    ))
-
     q = QUERIES["boilerplate_lines"](spark, sf)
     sections.append((
         "boilerplate_lines (per-domain line-df removal)",
@@ -110,31 +89,6 @@ def main():
         "map-side partial aggregation; the per-domain doc-count side "
         "broadcasts; full text crosses the wire exactly twice (df join + "
         "per-doc reassembly) — the CCNet lower bound for a rewrite.",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["containment_join"](spark, sf)
-    sections.append((
-        "containment_join (directed shingle containment)",
-        "Equi-joins only (posting self-join on the shingle hash + size "
-        "joins): no BroadcastNestedLoop/cartesian anywhere; the pair "
-        "aggregation counts intersections directly from the posting join "
-        "and appears ONCE — both containment directions fan out of it "
-        "via an explode (a self-union re-evaluated the posting join + "
-        "pair aggregation twice; plan-verified before the fix).",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["intra_doc_span_dedup"](spark, sf)
-    sections.append((
-        "intra_doc_span_dedup (zero-shuffle rewrite)",
-        "A PURE MAP: scan -> one projection of per-document array "
-        "algebra (sorted (hash, idx) structs, predecessor compare, "
-        "range expansion, containment filter) -> sort only for the "
-        "display orderBy.  No Exchange below the top-level sort, no "
-        "Python.  The first formulation shuffled every token three "
-        "times (window + distinct + anti-join); 7.9 s -> 0.4 s at "
-        "sf0.1.",
         plan_of(q, "simple"),
     ))
 
@@ -160,28 +114,6 @@ def main():
         "wire, then the Final group-limit finishes per partition.  "
         "Text shuffles exactly twice (rank + per-doc reassembly), the "
         "CCNet lower bound for a rewrite.  No Python.",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["winnow_fingerprints"](spark, sf)
-    sections.append((
-        "winnow_fingerprints (MOSS selection)",
-        "Hashing and the per-window rightmost-min folds are one JVM "
-        "projection + explode — no join, no aggregation, no Python; "
-        "text never shuffles and the index rows are compact "
-        "(id, pos, fp).",
-        plan_of(q, "simple"),
-    ))
-
-    q = QUERIES["incremental_neardup"](spark, sf)
-    sections.append((
-        "incremental_neardup (new batch vs persisted band index)",
-        "The new batch's banded keys probe the stored index with ONE "
-        "(band, key) equi-join — the minhash signature fold appears on "
-        "the NEW side only in the stored-index deployment (here the "
-        "index is built in-plan from the sf fixture); verify re-shingles "
-        "only the semi-join-pruned candidate ids, so per-batch work is "
-        "proportional to the batch, never the indexed corpus.",
         plan_of(q, "simple"),
     ))
 

@@ -3,13 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from ocrd_calamari_spark.functions.dedup import (
-    distinct_by_text,
-    exact_duplicates,
-    minhash_dedup,
-    simhash,
-    simhash_near_dupes,
-)
+from ocrd_calamari_spark.functions.dedup import distinct_by_text, exact_duplicates
 from ocrd_calamari_spark.functions.text import lang_id, quality_score, token_count
 
 
@@ -51,66 +45,6 @@ class TestDedup:
         kept = distinct_by_text(docs)
         assert kept.count() == 5
         assert kept.where("doc_id = 1").count() == 0  # min-id wins
-
-    def test_minhash_finds_near_dup(self, docs):
-        pairs = minhash_dedup(docs, threshold=0.5).collect()
-        found = {(p.id_a, p.id_b) for p in pairs}
-        assert (0, 1) in found and (0, 2) in found
-        # unrelated docs never pair
-        assert not any(5 in p for p in found)
-
-    def test_jaccard_index_exact_values(self, docs):
-        from ocrd_calamari_spark.functions.dedup import jaccard_index_dedup
-
-        got = {
-            (p.id_a, p.id_b): (p.inter, p.union_n, p.jaccard)
-            for p in jaccard_index_dedup(
-                docs, threshold=0.3, shingle_k=2
-            ).collect()
-        }
-        # python ground truth over distinct bigram sets
-        rows = {r.doc_id: r.text for r in docs.collect()}
-        def bigrams(t):
-            toks = t.strip().lower().split()
-            return {" ".join(toks[i:i + 2]) for i in range(max(len(toks) - 1, 1))}
-        expect = {}
-        ids = sorted(rows)
-        for i in ids:
-            for j in ids:
-                if i >= j:
-                    continue
-                a, b = bigrams(rows[i]), bigrams(rows[j])
-                inter, uni = len(a & b), len(a | b)
-                if inter / uni >= 0.3:
-                    expect[(i, j)] = (inter, uni, inter / uni)
-        assert got == expect
-        assert (0, 1) in got and got[(0, 1)][2] == 1.0  # exact dup
-
-    def test_jaccard_index_max_df_drops_stop_shingles(self, spark):
-        from ocrd_calamari_spark.functions.dedup import jaccard_index_dedup
-
-        # every doc shares the boilerplate bigram chain; only 0/1 share rare
-        # content.  With the cap, boilerplate-only pairs vanish but the true
-        # pair survives on its rare shingles.
-        rows = [(i, f"copyright footer terms unique{i} token{i}") for i in range(6)]
-        rows += [(10, "copyright footer terms rare gem alpha"),
-                 (11, "copyright footer terms rare gem alpha")]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        capped = jaccard_index_dedup(df, threshold=0.5, shingle_k=2, max_df=4)
-        got = {(p.id_a, p.id_b) for p in capped.collect()}
-        assert got == {(10, 11)}
-        # uncapped: the boilerplate prefix alone can't reach 0.5 for the
-        # unique{i} docs, but 10/11 still match exactly
-        full = jaccard_index_dedup(df, threshold=0.99, shingle_k=2)
-        assert {(p.id_a, p.id_b) for p in full.collect()} == {(10, 11)}
-
-    def test_simhash_deterministic_and_discriminative(self, spark, docs):
-        sigs = {r.doc_id: r.sig for r in
-                docs.select("doc_id", simhash("text").alias("sig")).collect()}
-        assert sigs[0] == sigs[1]  # identical text → identical signature
-        assert sigs[0] != sigs[5]
-        pairs = simhash_near_dupes(docs, max_hamming=10).collect()
-        assert any({p.id_a, p.id_b} == {0, 1} for p in pairs)
 
 
 class TestTextAnalysis:
@@ -295,29 +229,6 @@ class TestPackedOffsets:
         assert empty.collect() == [] and "_start_offset" in empty.columns
 
 
-class TestConnectedComponents:
-    def test_path_triangle_and_pair(self, spark):
-        """Path graphs are the worst case for plain neighbor propagation
-        (O(diameter) rounds) — pointer jumping must still converge fast
-        and label every node with its component minimum."""
-        from ocrd_calamari_spark.functions.dedup import connected_components
-
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7),  # 7-node path
-             (10, 11), (11, 12), (10, 12),                    # triangle
-             (20, 21)],                                       # lone pair
-            ["id_a", "id_b"],
-        )
-        got = {r.doc_id: r.component
-               for r in connected_components(pairs).collect()}
-        assert {k: v for k, v in got.items() if k < 10} == {
-            i: 1 for i in range(1, 8)
-        }
-        assert got[10] == got[11] == got[12] == 10
-        assert got[20] == got[21] == 20
-        assert len(got) == 12
-
-
 class TestIncrementalDedup:
     def test_catalog_and_within_delta_paths(self, spark):
         from ocrd_calamari_spark.functions.dedup import dedup_against_catalog
@@ -341,43 +252,6 @@ class TestIncrementalDedup:
             for r in dedup_against_catalog(delta, catalog).collect()
         )
         assert kept == [11, 13]
-
-
-class TestDedupSkew:
-    def test_identical_cluster_survives_blocking(self, spark):
-        """A 1,000-document identical-text cluster is the worst-case LSH
-        bucket: every pair is a true near-dup, so the pair output is
-        O(K²) by definition — the engine must distribute that quadratic
-        work across the self-join (no single-row array blowup) and finish.
-        (The standard pipeline removes exact dups FIRST — prepare_corpus —
-        precisely so near-dup only sees the survivors.)"""
-        from pyspark.sql import functions as F
-
-        from ocrd_calamari_spark.functions.dedup import (
-            distinct_by_text, simhash_near_dupes,
-        )
-
-        n = 1000
-        base = spark.range(n).select(
-            F.col("id").alias("doc_id"),
-            F.lit("the exact same document text repeated verbatim "
-                  "across the whole cluster of recrawls").alias("text"),
-        )
-        extra = spark.range(n, n + 50).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("unique filler document number "),
-                     F.col("id").cast("string"),
-                     F.lit(" with distinct words entirely")).alias("text"),
-        )
-        corpus = base.unionByName(extra).repartition(16, "doc_id")
-        pairs = simhash_near_dupes(corpus, max_hamming=3)
-        n_cluster_pairs = pairs.where(
-            (F.col("id_a") < n) & (F.col("id_b") < n)
-        ).count()
-        assert n_cluster_pairs == n * (n - 1) // 2  # all pairs, exactly once
-        # and the exact-dedup pre-pass collapses the cluster to one row
-        assert distinct_by_text(corpus).count() == 1 + 50
-        spark.catalog.clearCache()
 
 
 class TestBoilerplateLines:
@@ -405,104 +279,6 @@ class TestBoilerplateLines:
         assert joined.where(
             F.col("clean_text") != F.col("_body")
         ).count() == 0
-
-
-class TestJaccardPrefixFilter:
-    def test_prefix_filter_is_lossless(self, spark):
-        """PPJoin prefix filtering must return the IDENTICAL exact result
-        as the direct postings join (it is an algebraic candidate prune,
-        not an approximation) — on a fixture with pairs both above and
-        below the threshold."""
-        from pyspark.sql import functions as F
-
-        from ocrd_calamari_spark.functions.dedup import jaccard_index_dedup
-
-        docs = spark.read.parquet(
-            "/root/testdata/sf0.001/documents.parquet"
-        ).select("doc_id", "text")
-        dups = docs.where(F.col("doc_id") < 20).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
-            F.concat("text", F.lit(" tail")).alias("text"),
-        )
-        corpus = docs.unionByName(dups).repartition(8, "doc_id")
-        cols = ["id_a", "id_b", "inter", "union_n", "jaccard"]
-        # 0.5 is exact in binary; 0.07 is the float-ceil trap: for a doc
-        # with n=100 distinct shingles, ceil(100*0.07) in doubles gives 8
-        # (true t·n = 7 exactly), which would shrink the prefix below the
-        # lossless bound without the epsilon guard in the prefix length
-        for t in (0.5, 0.07):
-            on = jaccard_index_dedup(
-                corpus, threshold=t, shingle_k=3, prefix_filter=True
-            ).select(*cols)
-            off = jaccard_index_dedup(
-                corpus, threshold=t, shingle_k=3, prefix_filter=False
-            ).select(*cols)
-            assert on.count() > 0, t
-            assert on.exceptAll(off).count() == 0, t
-            assert off.exceptAll(on).count() == 0, t
-            spark.catalog.clearCache()
-
-
-class TestJaccardZipfCap:
-    def test_max_df_semantics_on_zipf_fixture(self, spark):
-        """Heavy-tailed (Zipf) shingle-df fixture — the regime where the
-        stop-shingle cap matters (round-3 verdict #2): every document
-        shares one boilerplate sentence, so its shingles have df == n and
-        contribute C(n,2) pair rows each when uncapped.  With ``max_df``
-        the result must be the exact Jaccard over the REDUCED shingle
-        space (stop-shingles dropped from both intersection and union),
-        pinned against a pure-python reference."""
-        import random
-
-        from ocrd_calamari_spark.functions.dedup import jaccard_index_dedup
-
-        boiler = "all rights reserved terms of service apply to this site"
-        rng = random.Random(11)
-        vocab = [f"w{i:03d}" for i in range(400)]
-        n = 60
-        rows = []
-        for i in range(n):
-            body = " ".join(rng.choice(vocab) for _ in range(30))
-            rows.append((i, f"{boiler} {body}"))
-        # a true near-dup of doc 0 (body shared, one-token tail differs)
-        rows.append((1000, rows[0][1] + " zzztail"))
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-
-        cap, t, k = 10, 0.2, 2
-        got = {(r.id_a, r.id_b): (r.inter, r.union_n, r.jaccard)
-               for r in jaccard_index_dedup(
-                   df, threshold=t, shingle_k=k, max_df=cap
-               ).collect()}
-
-        # python ground truth over string shingles with the same df cap
-        def shingles(text):
-            toks = text.strip().lower().split()
-            return {" ".join(toks[i:i + k])
-                    for i in range(max(len(toks) - k + 1, 1))}
-        sets = {i: shingles(tx) for i, tx in rows}
-        dfreq = {}
-        for s in sets.values():
-            for g in s:
-                dfreq[g] = dfreq.get(g, 0) + 1
-        red = {i: {g for g in s if dfreq[g] <= cap}
-               for i, s in sets.items()}
-        want = {}
-        ids = sorted(red)
-        for x in range(len(ids)):
-            for y in range(x + 1, len(ids)):
-                a, b = ids[x], ids[y]
-                inter = len(red[a] & red[b])
-                union = len(red[a] | red[b])
-                if union and inter / union >= t:
-                    want[(a, b)] = (inter, union, inter / union)
-        assert got == want
-        # the boilerplate-only overlap must NOT pair anything: without the
-        # cap every doc pair shares the df=n stop-shingles
-        assert (0, 1000) in got          # the real near-dup survives
-        assert all(p == (0, 1000) for p in got)
-        # sanity: uncapped, boilerplate shingles exist with df == n+1
-        assert max(dfreq.values()) == n + 1
-        spark.catalog.clearCache()
 
 
 class TestBoilerplateRandomized:
@@ -600,162 +376,6 @@ class TestSnapshotDiff:
                 assert c == "unchanged", d
         assert {"added", "removed", "changed", "unchanged"} == set(
             got.values())
-
-
-class TestKeepBest:
-    def test_argmax_with_tie_break(self, spark):
-        rows = [
-            (1, 100, 0.5), (2, 100, 0.9), (3, 100, 0.9),  # tie: keep id 2
-            (7, 7, 0.1),                                   # singleton
-            (8, 200, 0.3), (9, 200, 0.2),
-        ]
-        df = spark.createDataFrame(rows, ["doc_id", "component", "score"])
-        from ocrd_calamari_spark.functions.dedup import keep_best
-
-        kept = {
-            r["doc_id"]
-            for r in keep_best(df, score_col="score").collect()
-            if r["kept"]
-        }
-        assert kept == {2, 7, 8}
-
-    def test_exactly_one_kept_per_component(self, spark):
-        rows = [(i, i % 9, float((i * 37) % 11) / 11) for i in range(120)]
-        df = spark.createDataFrame(rows, ["doc_id", "component", "score"])
-        from ocrd_calamari_spark.functions.dedup import keep_best
-
-        out = keep_best(df, score_col="score")
-        per_comp = (
-            out.where("kept").groupBy("component").count().collect()
-        )
-        assert len(per_comp) == 9
-        assert all(r["count"] == 1 for r in per_comp)
-        assert out.count() == 120  # all members returned, flag only
-
-    def test_plan_has_no_per_component_window(self, spark):
-        """The mega-cluster safety property: argmax must be a (partial)
-        aggregation, never a per-component sort window."""
-        rows = [(1, 100, 0.5), (2, 100, 0.9)]
-        df = spark.createDataFrame(rows, ["doc_id", "component", "score"])
-        from ocrd_calamari_spark.functions.dedup import keep_best
-
-        plan = keep_best(df, score_col="score")._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert "Window" not in plan
-        assert "max_by" in plan or "Aggregate" in plan
-
-
-class TestContainmentJoin:
-    def test_wrapped_copy_caught_jaccard_blind(self, spark):
-        """A short article quoted inside a much larger page: containment
-        of the article is 1.0 while symmetric Jaccard is far below any
-        useful threshold — the case this operator exists for."""
-        article = "breaking news item the quick summary of events today"
-        frame = ("site header navigation menu links " + article
-                 + " footer copyright terms privacy contact about "
-                   "subscribe newsletter social media follow us "
-                   "related stories more coverage archive search")
-        other = "totally unrelated page about cooking recipes and food"
-        df = spark.createDataFrame(
-            [(1, article), (2, frame), (3, other)], ["doc_id", "text"])
-        from ocrd_calamari_spark.functions.dedup import (
-            containment_join, jaccard_index_dedup)
-
-        got = {(r["id_sub"], r["id_sup"]): r["containment"]
-               for r in containment_join(
-                   df, threshold=0.9, shingle_k=3).collect()}
-        assert got == {(1, 2): 1.0}  # article ⊂ frame, one direction only
-        jac = jaccard_index_dedup(df, threshold=0.5, shingle_k=3).collect()
-        assert jac == []  # symmetric jaccard misses it entirely
-
-    def test_ratio_matches_python_sets(self, spark):
-        rows = [
-            (1, "a b c d e f g h"),
-            (2, "a b c d e f x y"),
-            (3, "a b c z z z q r"),
-        ]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        from ocrd_calamari_spark.functions.dedup import containment_join
-
-        def shingles(t):
-            toks = t.split()
-            n = max(len(toks) - 2, 1)
-            return {" ".join(toks[i:i + 3]) for i in range(n)}
-
-        sets = {i: shingles(t) for i, t in rows}
-        exp = {}
-        for a in sets:
-            for b in sets:
-                if a != b and sets[a] & sets[b]:
-                    c = len(sets[a] & sets[b]) / len(sets[a])
-                    if c >= 0.5:
-                        exp[(a, b)] = c
-        got = {(r["id_sub"], r["id_sup"]): r["containment"]
-               for r in containment_join(
-                   df, threshold=0.5, shingle_k=3).collect()}
-        assert got == exp
-
-    def test_max_df_caps_stop_shingles(self, spark):
-        # a shingle present in EVERY doc is dropped by the cap; the
-        # remaining ratio is containment over the reduced space
-        rows = [(i, f"common boiler plate unique{i} tail{i} end{i}")
-                for i in range(6)]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        from ocrd_calamari_spark.functions.dedup import containment_join
-
-        uncapped = containment_join(df, threshold=0.1, shingle_k=3)
-        capped = containment_join(df, threshold=0.1, shingle_k=3, max_df=3)
-        assert uncapped.count() == 30  # all pairs share "common boiler plate"
-        assert capped.count() == 0     # the only shared shingle is capped out
-
-
-class TestIntraDocSpanDedup:
-    def _reference(self, text, window=8):
-        toks = text.strip().split()
-        n = len(toks)
-        n_win = max(n - window + 1, 1)
-        wins = [" ".join(toks[i:i + window]) for i in range(n_win)]
-        first = {}
-        drops = set()
-        for i, w in enumerate(wins):
-            if w in first:
-                for p in range(i, min(i + window, n)):
-                    drops.add(p)
-            else:
-                first[w] = i
-        kept = [t for p, t in enumerate(toks) if p not in drops]
-        return n, len(drops), " ".join(kept)
-
-    def test_matches_python_reference(self, spark):
-        rows = [
-            (1, "a b c d e f g h x y a b c d e f g h z"),   # full repeat
-            (2, "p q r s t u v w p q r s t u v w"),         # back-to-back
-            (3, "one two three four five six seven eight nine"),  # clean
-            (4, "tiny doc"),                                 # < window
-            (5, ("alpha beta gamma delta epsilon zeta eta theta " * 3)
-                .strip()),                                   # triple repeat
-        ]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        from ocrd_calamari_spark.functions.text import dedup_spans_in_doc
-
-        got = {r["doc_id"]: (r["n_tokens"], r["n_removed"], r["new_text"])
-               for r in dedup_spans_in_doc(df).collect()}
-        for i, t in rows:
-            assert got[i] == self._reference(t), f"doc {i}"
-        # sanity: the repeats really were removed
-        assert got[2][2] == "p q r s t u v w"
-        assert got[5][1] == 16  # two of the three copies dropped
-
-    def test_no_cross_document_interference(self, spark):
-        # identical docs must NOT dedup against each other (that is
-        # span_dedup's job) — within-doc only
-        rows = [(1, "m n o p q r s t"), (2, "m n o p q r s t")]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        from ocrd_calamari_spark.functions.text import dedup_spans_in_doc
-
-        got = {r["doc_id"]: r["n_removed"]
-               for r in dedup_spans_in_doc(df).collect()}
-        assert got == {1: 0, 2: 0}
 
 
 class TestQualityFunnel:
@@ -909,233 +529,3 @@ class TestMojibake:
         for i, s in docs:
             assert got[i] == (s.count("�"), s.count("â€"), s.count("Ã")), \
                 (i, s)
-
-
-class TestMinhashRecall:
-    """LSH recall audit (functions/dedup.py:minhash_recall_audit)."""
-
-    @staticmethod
-    def _reference(docs, n_hashes=16, bands=8, k=3, min_bucket=4):
-        import hashlib
-        import re
-        from collections import defaultdict
-
-        def ph(s: str) -> int:
-            return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-        sh = {}
-        for i, t in docs:
-            toks = re.split(r"\s+", t.strip().lower())
-            n = len(toks)
-            sh[i] = {ph(" ".join(toks[j:j + k]))
-                     for j in range(max(n - k + 1, 1))}
-        rows = n_hashes // bands
-        buckets = defaultdict(set)
-        for i, hs in sh.items():
-            sig = [min(ph(f"{h}:{j}") for h in hs)
-                   for j in range(n_hashes)]
-            for b in range(bands):
-                key = ",".join(str(v)
-                               for v in sig[b * rows:(b + 1) * rows])
-                buckets[(b, key)].add(i)
-        cand = set()
-        for members in buckets.values():
-            ms = sorted(members)
-            for x in range(len(ms)):
-                for y in range(x + 1, len(ms)):
-                    cand.add((ms[x], ms[y]))
-        agg = defaultdict(lambda: [0, 0])
-        ids = sorted(sh)
-        for x in range(len(ids)):
-            for y in range(x + 1, len(ids)):
-                a, b = ids[x], ids[y]
-                inter = len(sh[a] & sh[b])
-                uni = len(sh[a] | sh[b])
-                if inter * 10 < min_bucket * uni:
-                    continue
-                bkt = (inter * 10) // uni
-                agg[bkt][0] += 1
-                agg[bkt][1] += int((a, b) in cand)
-        return {bkt: (n, h, h * 10000 // n)
-                for bkt, (n, h) in sorted(agg.items())}
-
-    def test_matches_python_reference_exactly(self, spark):
-        """Signatures, band keys, candidates, buckets, and recall must
-        all agree with an independent hashlib.md5 reimplementation —
-        the audit's portability claim, proven in-process."""
-        from ocrd_calamari_spark.functions.dedup import minhash_recall_audit
-
-        docs = []
-        for i in range(15):
-            base = " ".join(f"w{i}_{t} common{t % 7}" for t in range(25))
-            toks = base.split(" ")
-            keep = 22 + (i * 11) % 26  # 44%-94% of 50 tokens
-            docs.append((2 * i, base))
-            docs.append((2 * i + 1, " ".join(toks[:keep])))
-        df = spark.createDataFrame(docs, ["doc_id", "text"])
-        got = {r.bucket: (r.n_pairs, r.n_hit, r.recall_bp)
-               for r in minhash_recall_audit(df).collect()}
-        want = self._reference(docs)
-        assert got == want
-        assert sum(n for n, _, _ in want.values()) >= 10  # fixture is live
-
-    def test_identical_docs_always_recalled(self, spark):
-        """J=1 pairs have identical signatures — bucket 10 recall must
-        be exactly 10000, structurally."""
-        from ocrd_calamari_spark.functions.dedup import minhash_recall_audit
-
-        docs = [(i, f"alpha beta gamma delta epsilon zeta doc{i % 4}")
-                for i in range(8)]
-        df = spark.createDataFrame(docs, ["doc_id", "text"])
-        rows = {r.bucket: r for r in minhash_recall_audit(df).collect()}
-        assert rows[10].n_pairs == 4  # one exact-dup pair per residue
-        assert rows[10].recall_bp == 10000
-
-
-class TestWinnowSelections:
-    """Winnowing fingerprint selection (functions/text.py)."""
-
-    @staticmethod
-    def _ref(text, kgram=5, window=4):
-        """Pure-python winnowing over the same portable hashes."""
-        import hashlib, re
-
-        toks = re.split(r"\s+", text.strip())
-        m = max(len(toks) - kgram + 1, 1)
-        fps = [
-            int(hashlib.md5(" ".join(toks[i:i + kgram]).encode())
-                .hexdigest()[:15], 16)
-            for i in range(m)
-        ]
-        picks = set()
-        for i in range(max(len(fps) - window + 1, 1)):
-            win = fps[i:i + window]
-            mv = min(win)
-            pos = i + max(j for j, v in enumerate(win) if v == mv)
-            picks.add((pos + 1, mv))  # 1-based positions
-        return picks
-
-    def test_matches_python_reference_exactly(self, spark):
-        from ocrd_calamari_spark.functions.text import winnow_selections
-
-        docs = [
-            (0, "the quick brown fox jumps over the lazy dog again and "
-                "again until the quick brown fox tires out completely"),
-            (1, "short doc"),
-            (2, "uno dos tres cuatro cinco seis siete ocho nueve diez"),
-        ]
-        df = spark.createDataFrame(docs, ["doc_id", "text"])
-        rows = winnow_selections(df, "doc_id", "text", kgram=5,
-                                 window=4).collect()
-        got = {}
-        for r in rows:
-            got.setdefault(r.doc_id, set()).add((r.pos, r.fp))
-        for i, t in docs:
-            assert got[i] == self._ref(t), i
-
-    def test_shared_run_guarantee_and_density(self, spark):
-        """Any shared token run >= kgram+window-1 must leave at least one
-        COMMON fingerprint in both docs' selections (the winnowing
-        guarantee), and selections stay well under the full hash count."""
-        from ocrd_calamari_spark.functions.text import winnow_selections
-
-        shared = "alpha beta gamma delta epsilon zeta eta theta"  # 8 tokens
-        a = "one two three " + shared + " four five six seven eight nine"
-        b = "red green blue yellow " + shared + " purple orange pink cyan"
-        df = spark.createDataFrame([(0, a), (1, b)], ["doc_id", "text"])
-        rows = winnow_selections(df, "doc_id", "text", kgram=5,
-                                 window=4).collect()
-        sel = {0: set(), 1: set()}
-        for r in rows:
-            sel[r.doc_id].add(r.fp)
-        assert sel[0] & sel[1], "shared 8-token run left no common fp"
-        # density: at window=4 expected ~2/5 of hashes; assert < 0.75
-        n_toks = len(a.split())
-        assert len(sel[0]) < 0.75 * (n_toks - 4)
-
-
-class TestIncrementalNearDup:
-    """Incremental near-dup vs a persisted band index
-    (functions/dedup.py:incremental_minhash_dedup)."""
-
-    K, T = 3, 0.7
-
-    @staticmethod
-    def _brute(old_rows, new_rows, k, t):
-        """Ground truth: all pairs involving a new doc with exact
-        shingle Jaccard >= t."""
-        def sh(text):
-            toks = text.strip().lower().split()
-            return {" ".join(toks[i:i + k])
-                    for i in range(max(len(toks) - k + 1, 1))}
-        all_rows = dict(old_rows + new_rows)
-        new_ids = {i for i, _ in new_rows}
-        sets = {i: sh(tx) for i, tx in all_rows.items()}
-        out = {}
-        ids = sorted(all_rows)
-        for x in range(len(ids)):
-            for y in range(x + 1, len(ids)):
-                a, b = ids[x], ids[y]
-                if a not in new_ids and b not in new_ids:
-                    continue
-                j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
-                if j >= t:
-                    out[(a, b)] = j
-        return out
-
-    def _fixture(self, rng_seed=7):
-        import random
-        rng = random.Random(rng_seed)
-        vocab = [f"tok{i:03d}" for i in range(300)]
-        old = [(i, " ".join(rng.choice(vocab) for _ in range(40)))
-               for i in range(20)]
-        new = [
-            (1000, old[3][1] + " freshtail"),       # near-dup of old #3
-            (1001, old[7][1]),                       # exact re-crawl of #7
-            (1002, " ".join(rng.choice(vocab) for _ in range(40))),  # novel
-        ]
-        new.append((1003, new[2][1] + " zz"))        # new-vs-new near-dup
-        return old, new
-
-    def test_matches_bruteforce_over_new_pairs(self, spark):
-        from ocrd_calamari_spark.functions.dedup import (
-            incremental_minhash_dedup)
-
-        old, new = self._fixture()
-        got = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in incremental_minhash_dedup(
-                spark.createDataFrame(new, ["doc_id", "text"]),
-                spark.createDataFrame(old, ["doc_id", "text"]),
-                threshold=self.T, n_hashes=64, bands=32,
-                shingle_k=self.K, min_band_matches=2,
-            ).collect()
-        }
-        want = self._brute(old, new, self.K, self.T)
-        assert set(got) == set(want)
-        for p, j in want.items():
-            assert abs(got[p] - j) < 1e-12
-        # old-vs-old pairs must never appear, even if present in the corpus
-        assert all(a >= 1000 or b >= 1000 for a, b in got)
-
-    def test_prebuilt_index_equals_inline(self, spark):
-        """Passing the PERSISTED artifact must give identical pairs to
-        building the index inline — the contract that lets the indexed
-        corpus go un-re-signatured forever."""
-        from ocrd_calamari_spark.functions.dedup import (
-            incremental_minhash_dedup, minhash_band_index)
-
-        old, new = self._fixture()
-        old_df = spark.createDataFrame(old, ["doc_id", "text"])
-        new_df = spark.createDataFrame(new, ["doc_id", "text"])
-        idx = minhash_band_index(old_df, n_hashes=64, bands=32,
-                                 shingle_k=self.K)
-        kw = dict(threshold=self.T, n_hashes=64, bands=32,
-                  shingle_k=self.K, min_band_matches=2)
-        inline = {(r.id_a, r.id_b): r.jaccard
-                  for r in incremental_minhash_dedup(
-                      new_df, old_df, **kw).collect()}
-        stored = {(r.id_a, r.id_b): r.jaccard
-                  for r in incremental_minhash_dedup(
-                      new_df, old_df, index_df=idx, **kw).collect()}
-        assert inline == stored and len(inline) > 0

@@ -224,23 +224,6 @@ class TestPipelineOperatorPlans:
         assert "BroadcastHashJoin" in plan
 
 
-class TestNewOperatorPlans:
-    def test_jaccard_index_is_equi_joins_only(self, spark):
-        """The exact Jaccard similarity join must be posting-list equi
-        joins + hash aggregates — never a cartesian/nested-loop pair
-        enumeration over documents."""
-        from ocrd_calamari_spark.functions.dedup import jaccard_index_dedup
-
-        d = spark.read.parquet(f"{SF}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        out = jaccard_index_dedup(d, threshold=0.5, shingle_k=3)
-        plan = plan_of(out, "simple")
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        spark.catalog.clearCache()  # release the operator's posting cache
-
-
 class TestRound4NewOpPlans:
     def test_quality_funnel_is_one_scan_one_exchange(self, spark):
         """The fused filter cascade reads the corpus once and exchanges
@@ -253,36 +236,6 @@ class TestRound4NewOpPlans:
         assert plan.count("Exchange") == 1
         assert plan.count("HashAggregate") == 2
         assert "Python" not in plan
-
-    def test_intra_doc_span_dedup_is_zero_shuffle_map(self, spark):
-        """Within-document repeated-span removal is per-doc array algebra
-        inside one projection: scan → project, no Exchange of any kind,
-        no Python evaluator (the round-4 rewrite dropped the window +
-        distinct + anti-join form's three doc_id shuffles; measured
-        7.9 s -> 0.4 s at sf0.1)."""
-        from ocrd_calamari_spark.functions.text import dedup_spans_in_doc
-
-        d = spark.read.parquet(f"{SF}/documents.parquet")
-        plan = plan_of(dedup_spans_in_doc(d), "simple")
-        assert "Exchange" not in plan
-        assert "Python" not in plan
-
-
-class TestContainmentJoinPlan:
-    def test_pair_aggregation_appears_once(self, spark):
-        """Both containment directions must fan out of ONE pair
-        aggregation via explode — the self-union formulation re-evaluated
-        the posting join + pair count twice (the most expensive stage)."""
-        import re
-
-        from ocrd_calamari_spark.entry_queries import q_containment_join
-
-        plan = plan_of(q_containment_join(spark, SF), "simple")
-        pair_aggs = re.findall(
-            r"HashAggregate\(keys=\[id_a#\d+L, id_b#\d+L\], "
-            r"functions=\[partial_count", plan)
-        assert len(pair_aggs) == 1
-        assert "CartesianProduct" not in plan
 
 
 class TestRound4LateOpPlans:
@@ -353,15 +306,4 @@ class TestRound4LateOpPlans:
 
         plan = plan_of(q_exact_sample(spark, SF), "simple")
         assert "TakeOrdered" in plan
-        assert "Python" not in plan
-
-    def test_winnow_selection_is_pure_map(self, spark):
-        """Hashing, per-window rightmost-min folds, and dedup are one JVM
-        projection + explode — no join, no aggregation, no Python; the
-        only exchange is the presentation orderBy."""
-        from ocrd_calamari_spark.entry_queries import q_winnow_fingerprints
-
-        plan = plan_of(q_winnow_fingerprints(spark, SF), "simple")
-        assert "HashAggregate" not in plan
-        assert "Join" not in plan
         assert "Python" not in plan

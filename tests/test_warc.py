@@ -142,6 +142,19 @@ class TestWarcRoundTrip:
         assert list(iter_warc_records(truncated)) == []
         assert records_to_batch("x.warc", b"").num_rows == 0
 
+    def test_malformed_length_skips_only_that_record(self):
+        bad = (b"WARC/1.0\r\nWARC-Type: response\r\n"
+               b"WARC-Target-URI: http://bad/\r\n"
+               b"Content-Length: 12x\r\n\r\n<p>bad</p>\r\n\r\n")
+        data = (_response(b"http://a/", b"HTTP/1.1 200 OK", b"<p>a</p>") + bad
+                + _response(b"http://b/", b"HTTP/1.1 200 OK", b"<p>b</p>")
+                + _response(b"http://c/", b"HTTP/1.1 200 OK", b"<p>c</p>"))
+        batch = records_to_batch("x.warc", data)
+        assert batch.column("url").to_pylist() == [
+            "http://a/", "http://b/", "http://c/"]
+        # the skipped record takes no index
+        assert batch.column("_src_row").to_pylist() == [0, 1, 2]
+
 
 class TestFileLevelBombCap:
     def test_bounded_gunzip_equals_stdlib_on_wellformed(self, pages_pdf,
