@@ -29,6 +29,14 @@ ACCEPT_THRESHOLD = 0.5
 # ensemble (ocrd-tool.json:65).
 ENSEMBLE = ("density", "link_density", "readability")
 
+# Id of what the kernel computes from a page.  It changes exactly when the
+# golden pin (tests/golden/pages_golden.parquet) is regenerated:
+# scripts/make_golden.py writes it into the pin's metadata and
+# tests/test_golden_pin.py checks the two agree.  Every manifest record
+# stores it, and a resume over rows of another id raises.  0 is the kernel
+# of the manifests written before records carried an id.
+KERNEL_SEMANTICS = 0
+
 
 @dataclass(frozen=True)
 class ExtractConfig:

@@ -40,7 +40,7 @@ import zipimport
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ocrd_calamari_spark.config import ExtractConfig
+from ocrd_calamari_spark.config import KERNEL_SEMANTICS, ExtractConfig
 from ocrd_calamari_spark.kernel import native
 from ocrd_calamari_spark.kernel.columnar import LINEAGE_COLS, arrow_map_fn
 from ocrd_calamari_spark.schema import (
@@ -478,8 +478,14 @@ def run_extraction(
         "until": _w(until),
         "snapshot_id": snapshot_id,
         "config": config,
+        "kernel_semantics": KERNEL_SEMANTICS,
     }
     for rec in done.values():
+        # Unlike the keys above, a missing kernel id is not skipped: such a
+        # record was written by the kernel before records carried an id
+        # (id 0), so its rows were made by that kernel, whatever this run
+        # asks for.  Skipping it would complete a job over mixed output.
+        rec = {"kernel_semantics": 0, **rec}
         for key, want in identity.items():
             got = rec.get(key)
             if got is not None and key in ("since", "until"):
@@ -626,12 +632,17 @@ def validate_output(spark: SparkSession, out_dir: str) -> dict:
 
     Returns {"chunks", "rows", "mismatches": {chunk_id: (manifest,
     actual)}, "missing": [chunk_id...], "orphans": [chunk_id...],
-    "config_mismatches": [chunk_id...], "ok"}.
+    "config_mismatches": [chunk_id...], "semantics_mismatches":
+    [chunk_id...], "ok"}.
 
     ``config_mismatches``: chunks whose recorded ``ExtractConfig`` differs
     from the one most chunks hold (ties: the lowest chunk id's) — rows made
     at another level, voter or cutoff.  Records without a config (written
     before it was recorded) are not compared.
+
+    ``semantics_mismatches``: chunks whose rows another kernel made — the
+    record's ``kernel_semantics`` is not ``KERNEL_SEMANTICS`` (a record
+    without one holds id 0, see ``run_extraction``).
 
     ``orphans``: chunk dirs on disk with NO manifest record — the exact
     artifact a crash between parquet write and manifest commit leaves
@@ -677,6 +688,9 @@ def validate_output(spark: SparkSession, out_dir: str) -> dict:
     counts = collections.Counter(configs.values())
     usual = max(counts, key=counts.get) if counts else None
     config_mismatches = [cid for cid, c in configs.items() if c != usual]
+    semantics_mismatches = [
+        cid for cid, rec in sorted(recs.items())
+        if rec.get("kernel_semantics", 0) != KERNEL_SEMANTICS]
     return {
         "chunks": len(recs),
         "rows": total,
@@ -684,8 +698,9 @@ def validate_output(spark: SparkSession, out_dir: str) -> dict:
         "missing": missing,
         "orphans": orphans,
         "config_mismatches": config_mismatches,
+        "semantics_mismatches": semantics_mismatches,
         "ok": (not mismatches and not missing and not orphans
-               and not config_mismatches),
+               and not config_mismatches and not semantics_mismatches),
     }
 
 

@@ -3,7 +3,10 @@ from the frozen single-process oracle — FIXTURES.md table 2.
 
 Never regenerated silently: tests/test_golden_pin.py compares the live
 kernel against this file; a semantic change to the kernel must consciously
-re-run this script and commit the diff (the byte-identity ledger).
+re-run this script and commit the diff (the byte-identity ledger).  The
+file's schema metadata holds ``config.KERNEL_SEMANTICS`` under
+``kernel_semantics``, and the pin test checks it against the constant, so
+a regeneration goes with a bump of the id.
 """
 
 import os
@@ -14,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from ocrd_calamari_spark.config import ExtractConfig
+from ocrd_calamari_spark.config import KERNEL_SEMANTICS, ExtractConfig
 from ocrd_calamari_spark.gen import gen_pages
 from ocrd_calamari_spark.kernel.extract import extract_batch
 
@@ -32,6 +35,10 @@ def main():
                 "overwrote", "raw_charset", "error", "case"]]
     os.makedirs(os.path.dirname(OUT), exist_ok=True)
     table = pa.Table.from_pandas(keep, preserve_index=False)
+    table = table.replace_schema_metadata({
+        **table.schema.metadata,
+        b"kernel_semantics": str(KERNEL_SEMANTICS).encode(),
+    })
     pq.write_table(table, OUT)
     print(f"wrote {len(keep)} golden rows → {OUT}")
 
