@@ -34,8 +34,9 @@ ENSEMBLE = ("density", "link_density", "readability")
 # scripts/make_golden.py writes it into the pin's metadata and
 # tests/test_golden_pin.py checks the two agree.  Every manifest record
 # stores it, and a resume over rows of another id raises.  0 is the kernel
-# of the manifests written before records carried an id.
-KERNEL_SEMANTICS = 0
+# of the manifests written before records carried an id; 1 takes block
+# conf, page conf and the fused vote as exact integer means of micro-units.
+KERNEL_SEMANTICS = 1
 
 
 @dataclass(frozen=True)

@@ -1,7 +1,7 @@
 /*
  * Compiled segmenter: the state machine of segment.py's _segment_fused in
  * one pass over each page of an Arrow batch.  Plain C with no Python.h;
- * kernel/native.py compiles it (`cc -O2 -ffp-contract=off -shared -fPIC`)
+ * kernel/native.py compiles it (`cc -O2 -shared -fPIC`)
  * and calls it through ctypes.  _segment_fused stays the specification.
  *
  * One state machine (run_machine) behind one entry point,
@@ -10,8 +10,6 @@
  * buffer, with no Python object per block (kernel/columnar.py).
  * test_segment_equiv.py and test_batch_columns.py pin it to
  * _segment_fused plus the text half of normalize_block, page for page.
- * Beside it, ocs_sums: the block confs of normalize_block over a batch,
- * summed in numpy's exact summation order.
  *
  * Input is codepoints (str.encode("utf-32-le"/"-be" by host order,
  * "surrogatepass")), so every offset here is a codepoint index that
@@ -626,51 +624,4 @@ int ocs_segment_batch(const uint32_t *p, const int64_t *page_off,
     counts[1] = w;
     counts[2] = na;
     return OCS_OK;
-}
-
-/* numpy's float64 add.reduce of a contiguous array: a pairwise sum with
- * 8-way unrolled leaves of up to 128 elements (pairwise_sum in numpy's
- * loops_utils.h), run over blocks of the 8,192-element ufunc buffer that
- * are added in order from 0.0.  Compiled with -ffp-contract=off, so no
- * a * b + c becomes an FMA. */
-#define PW_BLOCKSIZE 128
-#define NPY_BUFSIZE 8192
-
-static double pairwise(const double *a, int64_t n) {
-    if (n < 8) {
-        double res = 0.;
-        for (int64_t i = 0; i < n; i++)
-            res += a[i];
-        return res;
-    }
-    if (n <= PW_BLOCKSIZE) {
-        double r[8];
-        int64_t i;
-        for (int j = 0; j < 8; j++)
-            r[j] = a[j];
-        for (i = 8; i < n - (n % 8); i += 8)
-            for (int j = 0; j < 8; j++)
-                r[j] += a[i + j];
-        double res = ((r[0] + r[1]) + (r[2] + r[3]))
-                     + ((r[4] + r[5]) + (r[6] + r[7]));
-        for (; i < n; i++)
-            res += a[i];
-        return res;
-    }
-    int64_t n2 = n / 2;
-    n2 -= n2 % 8;
-    return pairwise(a, n2) + pairwise(a + n2, n - n2);
-}
-
-/* out[k] = numpy's .sum() of x[off[k]:off[k + 1]] for k < n. */
-void ocs_sums(const double *x, const int64_t *off, int64_t n, double *out) {
-    for (int64_t k = 0; k < n; k++) {
-        const double *a = x + off[k];
-        int64_t len = off[k + 1] - off[k];
-        double res = 0.;
-        for (int64_t i = 0; i < len; i += NPY_BUFSIZE)
-            res += pairwise(a + i, len - i < NPY_BUFSIZE ? len - i
-                                                          : NPY_BUFSIZE);
-        out[k] = res;
-    }
 }

@@ -24,11 +24,11 @@ whole batch, with no Python object per block:
            one error row.
   emit     per output batch, over the gathered codepoints of every
            accepted block: the numeric half of ``normalize_block``
-           (``_block_numbers``: ``char_p1``'s ops in numpy, block confs
-           from ``ocs_sums`` in numpy's own summation order), page
-           confs (the sequential sum of ``extract_page``), and the spans
-           as flat Arrow columns whose nesting is list offsets per row,
-           the record-plus-repetition layout of Dremel:
+           (``_block_numbers``: ``char_micros`` over the batch, block and
+           page confs as exact integer means of micro-units, so the
+           order of no sum matters), and the spans as flat Arrow columns
+           whose nesting is list offsets per row, the
+           record-plus-repetition layout of Dremel:
 
   blocks   offsets of the accepted blocks; texts sliced from the batch
            UTF-8 buffer (``_utf8`` / ``_slices``), the page text their
@@ -80,8 +80,9 @@ from ocrd_calamari_spark.kernel.extract import (
     _looks_binary,
 )
 from ocrd_calamari_spark.kernel.fastpath import (
-    _jitter_lut_05,
+    char_micros,
     codepoints,
+    mean6,
     normalize_text,
     quantize6,
 )
@@ -318,12 +319,6 @@ def _vote(cols: dict, cps: np.ndarray, n_pieces: int, tags, langs: list,
     page = cols["page"]
     cand = np.flatnonzero((cols["vis"] >= max(MIN_VISIBLE_CHARS, 1))
                           & ok_page[page])
-
-    def revote(i):
-        blk, = _blocks_at(cols, cps, tags, [cand[i]])
-        return vote_block(blk, langs[page[cand[i]]], ENSEMBLE, voter,
-                          ACCEPT_THRESHOLD)
-
     try:
         f = {"vis": cols["vis"][cand], "n_tags": cols["n_tags"][cand],
              "n_link": cols["link"][cand], "depth": cols["depth"][cand],
@@ -339,8 +334,7 @@ def _vote(cols: dict, cps: np.ndarray, n_pieces: int, tags, langs: list,
                 prof[cols["piece"]] = profile_index(langs)[page]
                 hits = stop_hits_joined(_as_str(cps), prof)
                 f["hits"] = hits[cols["piece"][cand]].astype(np.float64)
-        accept, fused = vote_features(f, ENSEMBLE, voter, ACCEPT_THRESHOLD,
-                                      revote)
+        accept, fused = vote_features(f, ENSEMBLE, voter, ACCEPT_THRESHOLD)
     except Exception:
         accept = np.zeros(len(cand), dtype=bool)
         fused = np.zeros(len(cand))
@@ -378,53 +372,25 @@ def _surrogate_errors(cols: dict, cps: np.ndarray, acc: np.ndarray,
 
 
 def _block_numbers(cps: np.ndarray, blk_off: np.ndarray,
-                   blk_fused) -> tuple[np.ndarray, list]:
+                   blk_fused) -> tuple[np.ndarray, np.ndarray]:
     """The numeric half of ``normalize_block`` for every block of a batch.
 
     ``cps``: the codepoints of the block texts back to back; block b is
     ``cps[blk_off[b]:blk_off[b + 1]]`` with fused vote ``blk_fused[b]``.
-    Returns p1 per codepoint and each block's conf.
+    Returns p1 per codepoint and each block's conf, both in micro-units
+    (int64).
 
-    p1 is ``char_p1``'s gather, clip and quantize, in place, over
-    ``np.repeat`` of each block's ``0.70 + 0.30 * fused``.  Each block's
-    conf is ``normalize_block``'s expression over its slice: the sum is
-    numpy's pairwise ``.sum()``, which no sequential form reproduces at a
-    quantize6 half boundary.  ``ocs_sums`` computes all of them in numpy's
-    own order in one call; without the library, one ``.sum()`` per block.
+    p1 is ``char_micros`` over ``np.repeat`` of each block's ``0.70 +
+    0.30 * fused``.  A block's conf is ``mean6`` of its p1 sum, taken as
+    one difference of the int64 running sum: integers, so the result is
+    ``normalize_block``'s whatever order the sum runs in.
     """
     lens = np.diff(blk_off)
-    p1 = _jitter_lut_05()[cps]
     base = 0.70 + 0.30 * np.asarray(blk_fused, dtype=np.float64)
-    np.subtract(np.repeat(base, lens), p1, out=p1)
-    np.clip(p1, 0.5, 0.999, out=p1)
-    np.multiply(p1, 1e6, out=p1)
-    np.add(p1, 0.5, out=p1)
-    np.floor(p1, out=p1)
-    np.divide(p1, 1e6, out=p1)
-    seg = native.load()
-    if seg is not None:
-        sums = seg.sums(p1, blk_off)
-    else:
-        off = blk_off.tolist()
-        sums = np.array([p1[lo:hi].sum() for lo, hi in zip(off, off[1:])],
-                        dtype=np.float64)
-    return p1, quantize6(sums / lens).tolist()
-
-
-def _page_confs(blk_conf: list, n_blocks: list) -> list:
-    """``extract_page``'s row conf: quantize6 of the mean block conf, summed
-    block by block in page order (None for an error row)."""
-    out, at = [], 0
-    for n in n_blocks:
-        if not n:
-            out.append(None if n is None else 0.0)
-            continue
-        conf_sum = 0.0
-        for c in blk_conf[at:at + n]:
-            conf_sum += c
-        at += n
-        out.append(quantize6(conf_sum / n))
-    return out
+    k = char_micros(cps, np.repeat(base, lens))
+    csum = np.zeros(len(k) + 1, np.int64)
+    np.cumsum(k, out=csum[1:])
+    return k, mean6(csum[blk_off[1:]] - csum[blk_off[:-1]], lens)
 
 
 def _ids(prefix, sep: str, nums: np.ndarray) -> pa.Array:
@@ -479,9 +445,11 @@ def _gather(cps: np.ndarray, lo: np.ndarray,
 
 def _alts(cps: np.ndarray, chars: pa.Array, p1: np.ndarray, cutoff: float,
           list_type: pa.ListType) -> pa.ListArray:
-    """Ranked alternatives per glyph: the char itself with ``p1``, then its
-    confusion/case alternative with ``p2 = quantize6((1-p1)*0.5)`` where
-    one exists and ``p2 >= cutoff`` (``extract_page``'s per-glyph rule)."""
+    """Ranked alternatives per glyph: the char itself with ``p1`` (in
+    micro-units here), then its confusion/case alternative with ``p2 =
+    quantize6((1-p1)*0.5)`` where one exists and ``p2 >= cutoff``
+    (``extract_page``'s per-glyph rule)."""
+    p1 = p1 / 1e6
     p2 = quantize6((1.0 - p1) * 0.5)
     uniq, inv = np.unique(cps, return_inverse=True)
     alt_u = [_alt_char(chr(c)) for c in uniq.tolist()]
@@ -518,15 +486,22 @@ def _record_batch(rows: dict, blk_row: np.ndarray, blk_lo: np.ndarray,
     overwrote and raw_charset; block b (in row order) belongs to row
     ``blk_row[b]`` and its text is ``batch_cps[blk_lo[b]:][:blk_len[b]]``."""
     n_rows = len(rows["error"])
-    null = pa.array([e is not None for e in rows["error"]], pa.bool_())
+    failed = np.array([e is not None for e in rows["error"]], dtype=bool)
+    null = pa.array(failed)
     n_blk = np.array([k or 0 for k in rows["n_blocks"]], dtype=np.int64)
     # flat codepoints of all block texts, back to back (no separator)
     cps, blk_off = _gather(batch_cps, blk_lo, blk_len)
     p1, blk_conf = _block_numbers(cps, blk_off, blk_fused)
-    # a block's doc offset: the chars and "\n" separators of the blocks
-    # before it in its row
     row_first = np.zeros(n_rows + 1, dtype=np.int64)
     np.cumsum(n_blk, out=row_first[1:])
+    # a row's conf: mean6 of its block confs, the same running-sum
+    # difference as the block confs (0 without blocks, null on error)
+    conf_sum = np.zeros(len(blk_conf) + 1, np.int64)
+    np.cumsum(blk_conf, out=conf_sum[1:])
+    page_conf = mean6(conf_sum[row_first[1:]] - conf_sum[row_first[:-1]],
+                      np.maximum(n_blk, 1))
+    # a block's doc offset: the chars and "\n" separators of the blocks
+    # before it in its row
     blk_first = row_first[blk_row]
     blk_no = np.arange(len(blk_len)) - blk_first
     blk_start = (blk_off[:-1] - blk_off[blk_first] + blk_no).astype(np.int32)
@@ -539,7 +514,7 @@ def _record_batch(rows: dict, blk_row: np.ndarray, blk_lo: np.ndarray,
     blocks = _struct(
         [blk_id, pa.array(blk_start),
          pa.array(blk_start + blk_len.astype(np.int32)), blk_text,
-         pa.array(blk_conf, pa.float64())],
+         pa.array(blk_conf / 1e6)],
         t_blocks,
     )
     n_word = np.zeros(n_rows, dtype=np.int64)
@@ -595,7 +570,7 @@ def _record_batch(rows: dict, blk_row: np.ndarray, blk_lo: np.ndarray,
         "url": url,
         "text": pc.binary_join(_lists(n_blk, blk_text, pa.list_(pa.string()),
                                       null), "\n"),
-        "conf": pa.array(_page_confs(blk_conf, rows["n_blocks"]), pa.float64()),
+        "conf": pa.array(page_conf / 1e6, mask=failed),
         "n_blocks": pa.array(rows["n_blocks"], pa.int32()),
         "blocks": _lists(n_blk, blocks, t_blocks, null),
         "words": _lists(n_word, words, t_words, null),

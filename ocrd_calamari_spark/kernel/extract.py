@@ -37,7 +37,12 @@ from ocrd_calamari_spark.config import (
     ExtractConfig,
 )
 from ocrd_calamari_spark.kernel.decode import decode_html
-from ocrd_calamari_spark.kernel.fastpath import normalize_block, quantize6
+from ocrd_calamari_spark.kernel.fastpath import (
+    mean6,
+    micros,
+    normalize_block,
+    quantize6,
+)
 from ocrd_calamari_spark.kernel.segment import segment
 from ocrd_calamari_spark.kernel.vote import vote_block
 
@@ -110,7 +115,7 @@ def extract_page(
         doc_parts = []
         doc_pos = 0
         blk_no = 0
-        conf_sum = 0.0
+        conf_total = 0  # the block confs in micro-units
         for blk in segment(decoded):
             # F4 tiny-segment filter (recognize.py:166-179)
             if blk.visible_len() < MIN_VISIBLE_CHARS:
@@ -130,7 +135,7 @@ def extract_page(
                 doc_pos += 1  # "\n" separator (A3, recognize.py:743-747)
             start = doc_pos
             end = start + len(text)
-            conf_sum += conf
+            conf_total += micros(conf)
             blocks_out.append(
                 {"block_id": block_id, "start": start, "end": end,
                  "text": text, "conf": conf}
@@ -177,9 +182,8 @@ def extract_page(
 
         row["text"] = "\n".join(doc_parts)
         row["n_blocks"] = len(blocks_out)
-        row["conf"] = (
-            float(quantize6(conf_sum / len(blocks_out))) if blocks_out else 0.0
-        )
+        row["conf"] = (mean6(conf_total, len(blocks_out)) / 1e6
+                       if blocks_out else 0.0)
         row["blocks"] = blocks_out
         row["words"] = words_out
         row["glyphs"] = glyphs_out

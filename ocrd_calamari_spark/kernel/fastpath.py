@@ -49,6 +49,23 @@ def quantize6(x):
     return math.floor(x * 1e6 + 0.5) / 1e6
 
 
+def micros(x):
+    """``quantize6(x)`` as an integer count of micro-units (int64 for an
+    array).  A value already quantized gives its own count back: k / 1e6
+    times 1e6 is within 3e-10 of k for k up to 1e6."""
+    if isinstance(x, np.ndarray):
+        return np.floor(x * 1e6 + 0.5).astype(np.int64)
+    return math.floor(x * 1e6 + 0.5)
+
+
+def mean6(total, n):
+    """The half-up mean, in micro-units, of ``n`` values in micro-units
+    that sum to ``total``: ⌊(2·total + n) / 2n⌋.  Integer arithmetic, so
+    exact and independent of the order of the sum; elementwise on int64
+    arrays."""
+    return (2 * total + n) // (2 * n)
+
+
 _JITTER_LUT: np.ndarray | None = None
 _JITTER_LUT_05: np.ndarray | None = None
 
@@ -79,22 +96,22 @@ def _jitter_lut_05() -> np.ndarray:
     return _JITTER_LUT_05
 
 
-def char_p1(cps: np.ndarray, fused: float) -> np.ndarray:
-    """Vectorized primary-hypothesis probability (extract._char_probs).
+def char_micros(cps: np.ndarray, base) -> np.ndarray:
+    """Vectorized primary-hypothesis probability (extract._char_probs) in
+    micro-units: p1 = char_micros / 1e6, as int64.  ``base`` is the
+    block's ``0.70 + 0.30 * fused``, one float or one per codepoint.
 
-    One gather + one subtract, then clip/quantize IN PLACE on the single
-    temp — the earlier form allocated a fresh array per arithmetic step
-    (gather, 0.05*, subtract, clip copy, three quantize passes).  Ops and
-    order are unchanged per element, so results stay bit-identical to
-    quantize6(clip(...)) (grid-verified in the round-4 A/B; median 1.033×
-    kernel-level over 9 interleaved pairs — BENCH.md)."""
-    p1 = (0.70 + 0.30 * fused) - _jitter_lut_05()[cps]
+    One gather + one subtract, then clip and the half-up scale IN PLACE
+    on the single temp (ops and order per element unchanged since the
+    round-4 A/B, median 1.033× kernel-level over 9 interleaved pairs —
+    BENCH.md).  The cast to int64 truncates, which is the floor of these
+    values (all ≥ 500000.5)."""
+    p1 = _jitter_lut_05()[cps]
+    np.subtract(base, p1, out=p1)
     np.clip(p1, 0.5, 0.999, out=p1)
     np.multiply(p1, 1e6, out=p1)
     np.add(p1, 0.5, out=p1)
-    np.floor(p1, out=p1)
-    np.divide(p1, 1e6, out=p1)
-    return p1
+    return p1.astype(np.int64)
 
 
 import re as _re
@@ -111,8 +128,9 @@ def normalize_text(raw_text: str) -> str:
 def normalize_block(raw_text: str, fused: float):
     """raw block text → (normalized_text, p1_array, conf).
 
-    conf = quantize6(mean of kept-position primary probabilities) —
-    the avg_char_probability analogue (recognize.py:299).
+    conf = the half-up mean of the kept positions' primary probabilities
+    (``mean6`` over their micro-units, in Python ints) — the
+    avg_char_probability analogue (recognize.py:299).
 
     X1→X2→X3 on the TEXT reduce to C string ops: X1/X2 trim only
     ASCII spaces (``strip(' ')`` — other whitespace was mapped to ' '
@@ -129,7 +147,5 @@ def normalize_block(raw_text: str, fused: float):
     text = normalize_text(raw_text)
     if not text:
         return "", None, 0.0
-    kept_cps = codepoints(text)
-    p1 = char_p1(kept_cps, fused)
-    conf = float(quantize6(np.float64(p1.sum()) / len(p1)))
-    return text, p1, conf
+    k = char_micros(codepoints(text), 0.70 + 0.30 * fused)
+    return text, k / 1e6, mean6(int(k.sum()), len(k)) / 1e6

@@ -1,14 +1,11 @@
 """Loader of the compiled segmenter (``kernel/_segment.c``) through ctypes.
 
 ``load()`` compiles ``_segment.c`` once per hash of its source and of
-the compiler flags (``CFLAGS``: ``cc -O2 -ffp-contract=off -shared
--fPIC``; ``-ffp-contract=off`` keeps the block-conf sums free of FMA
-contraction on targets that have it, so they stay bit-exact) and returns
-a ``Segmenter``, or None when there is no compiler or the build or the
-load fails; the columnar kernel then runs its Python paths instead
-(``segment.segment``, and numpy for the block-conf sums).  Only
-``kernel/columnar.py`` calls the library: one ``segment_batch`` and one
-``sums`` call per Arrow batch.  The scalar oracle (``extract_page``)
+the compiler flags (``CFLAGS``: ``cc -O2 -shared -fPIC``) and returns a
+``Segmenter``, or None when there is no compiler or the build or the
+load fails; the columnar kernel then segments in Python instead
+(``segment.segment``).  Only ``kernel/columnar.py`` calls the library:
+one ``segment_batch`` call per Arrow batch.  The scalar oracle (``extract_page``)
 segments in Python, so every oracle comparison checks the C pass against
 an independent implementation.  The library is cached as
 ``_segment-<hash>-<machine>.so``: in
@@ -45,7 +42,7 @@ import numpy as np
 
 _SOURCE = "_segment.c"
 # part of the library's cache key: a change here builds a new library
-CFLAGS = ("-O2", "-ffp-contract=off", "-shared", "-fPIC")
+CFLAGS = ("-O2", "-shared", "-fPIC")
 _CODEC = "utf-32-le" if sys.byteorder == "little" else "utf-32-be"
 # pages whose buffer would exceed this many int32s (128 MB; about 1.8 M
 # "<") are left to the Python segmenter
@@ -64,7 +61,7 @@ P_OK, P_BINARY, P_PYTHON = 0, 1, 2
 
 class Segmenter:
     """The loaded library: ``segment_batch`` segments the pages of a batch
-    into block columns, ``sums`` adds the block confs."""
+    into block columns."""
 
     def __init__(self, lib: ctypes.CDLL, tag_class: dict):
         for name, restype in (("ocs_init", ctypes.c_int),
@@ -81,8 +78,7 @@ class Segmenter:
                 ("ocs_segment_batch", ctypes.c_int,
                  (ctypes.c_char_p, ptr, ptr, i32, ctypes.c_double, ptr, i64,
                   ptr, ptr, i64, ptr, i64, ptr, i64, ptr, ptr)),
-                ("ocs_batch_row_ints", ctypes.c_int, ()),
-                ("ocs_sums", None, (ptr, ptr, i64, ptr))):
+                ("ocs_batch_row_ints", ctypes.c_int, ())):
             getattr(lib, name).restype = restype
             getattr(lib, name).argtypes = argtypes
         if lib.ocs_batch_row_ints() != ROW:
@@ -141,16 +137,6 @@ class Segmenter:
             return None
         k, used, m = counts.tolist()
         return rows[:k], toff[:k + 1], text[:used], amp[:m], status
-
-    def sums(self, x: np.ndarray, off: np.ndarray) -> np.ndarray:
-        """``out[k] = np.float64(x[off[k]:off[k + 1]].sum())`` bit for bit
-        (``ocs_sums``, numpy's own summation order)."""
-        x = np.ascontiguousarray(x, np.float64)
-        off = np.ascontiguousarray(off, np.int64)
-        out = np.empty(max(len(off) - 1, 0), np.float64)
-        self._lib.ocs_sums(x.ctypes.data, off.ctypes.data, len(out),
-                           out.ctypes.data)
-        return out
 
 
 def _cache_dir() -> str | None:

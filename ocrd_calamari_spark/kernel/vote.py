@@ -28,6 +28,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from ocrd_calamari_spark.kernel.fastpath import mean6, micros, quantize6
 from ocrd_calamari_spark.kernel.segment import Block
 
 # Minimal stopword profiles; lang hint selects the profile — the analogue of
@@ -64,7 +65,7 @@ def score_density(block: Block, lang: str) -> float:
     """Text-density sequential classifier: chars per descendant tag."""
     visible = block.visible_len()
     density = visible / (1.0 + block.n_tags)
-    return round(_sigmoid((density - 20.0) / 15.0), 6)
+    return quantize6(_sigmoid((density - 20.0) / 15.0))
 
 
 def score_link_density(block: Block, lang: str) -> float:
@@ -73,7 +74,7 @@ def score_link_density(block: Block, lang: str) -> float:
     if visible == 0:
         return 0.0
     ratio = block.n_link_chars / visible
-    return round(_clamp01(1.0 - 1.2 * ratio), 6)
+    return quantize6(_clamp01(1.0 - 1.2 * ratio))
 
 
 def score_readability(block: Block, lang: str) -> float:
@@ -95,7 +96,7 @@ def score_readability(block: Block, lang: str) -> float:
                 break
     stop_bonus = 0.10 * min(1.0, hits / 5.0)
     depth_penalty = 0.02 * max(0, block.depth - 8)
-    return round(_clamp01(base + punct_bonus + stop_bonus - depth_penalty), 6)
+    return quantize6(_clamp01(base + punct_bonus + stop_bonus - depth_penalty))
 
 
 # Registry ≈ glob("%s/*.ckpt.json" % checkpoint_dir), recognize.py:510-511.
@@ -116,18 +117,22 @@ def fuse_votes(scores: list[float], voter: str, threshold: float) -> tuple[bool,
     accept iff mean ≥ threshold.
     sequence_voter ≈ majority vote → accept iff most scores pass the bar;
     confidence is the mean of the majority side.
+
+    Scores and threshold count in micro-units (``micros``; the scores are
+    ``quantize6``d already), so the comparisons and the half-up means
+    (``mean6``) are exact integer arithmetic.
     """
     if not scores:
         return False, 0.0
+    ks = [micros(s) for s in scores]
+    t = micros(threshold)
     if voter == "sequence_voter":
-        ayes = [s for s in scores if s >= threshold]
-        nays = [s for s in scores if s < threshold]
-        if len(ayes) * 2 > len(scores):
-            return True, round(sum(ayes) / len(ayes), 6)
-        side = nays if nays else ayes
-        return False, round(sum(side) / len(side), 6)
-    fused = sum(scores) / len(scores)
-    return fused >= threshold, round(fused, 6)
+        ayes = [k for k in ks if k >= t]
+        accept = 2 * len(ayes) > len(ks)
+        side = ayes if accept else [k for k in ks if k < t]
+        return accept, mean6(sum(side), len(side)) / 1e6
+    total = sum(ks)
+    return total >= t * len(ks), mean6(total, len(ks)) / 1e6
 
 
 def vote_block(block: Block, lang: str, extractor_names, voter: str,
@@ -142,45 +147,25 @@ def vote_block(block: Block, lang: str, extractor_names, voter: str,
 
 # readability's tag prior in one lookup (the two tables are disjoint)
 _TAG_BASE = {**_LIST_TAGS, **_CONTENT_TAGS}
-# round6's guard band around a half tie of x * 1e6: far wider than the
-# float error of that product (below 2e-10 for x <= 1) and than an ulp of
-# difference between np.exp and math.exp in the sigmoid
-_TIE_BAND = 1e-6
-# a mean score this close to the threshold is voted by vote_block (from
-# 3.12 CPython's sum() of floats compensates, so its last bit may differ
-# from the sequential sum of vote_features)
-_THRESHOLD_BAND = 1e-9
-
-
-def round6(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """``round(x, 6)`` elementwise, and a mask of the elements to redo in
-    Python.
-
-    ``rint(x * 1e6) / 1e6`` is Python's correctly rounded result wherever
-    ``x * 1e6`` is not at a half tie: the integer is exact and one IEEE
-    division gives the double nearest it over 1e6.  Elements within
-    ``_TIE_BAND`` of a tie are flagged instead of trusted."""
-    d = x * 1e6
-    r = np.rint(d)
-    return r / 1e6, np.abs(np.abs(d - r) - 0.5) < _TIE_BAND
 
 
 def _density(f: dict) -> np.ndarray:
-    """score_density before its round."""
+    """score_density before its quantize6.  The sigmoid runs per block
+    through ``_sigmoid`` itself: ``np.exp`` can differ from ``math.exp``
+    in the last bit, and no other step of the vote can."""
     x = (f["vis"] / (1.0 + f["n_tags"]) - 20.0) / 15.0
-    s = 1.0 / (1.0 + np.exp(-np.clip(x, -60.0, 60.0)))
-    return np.where(x < -60.0, 0.0, np.where(x > 60.0, 1.0, s))
+    return np.array([_sigmoid(v) for v in x.tolist()], dtype=np.float64)
 
 
 def _link_density(f: dict) -> np.ndarray:
-    """score_link_density before its round (0.0 where nothing is visible)."""
+    """score_link_density before its quantize6 (0.0 where nothing is visible)."""
     vis = f["vis"]
     ratio = np.divide(f["n_link"], vis, out=np.zeros_like(vis), where=vis > 0)
     return np.where(vis > 0, np.clip(1.0 - 1.2 * ratio, 0.0, 1.0), 0.0)
 
 
 def _readability(f: dict) -> np.ndarray:
-    """score_readability before its round."""
+    """score_readability before its quantize6."""
     punct_bonus = 0.20 * np.minimum(1.0, f["n_punct"] / 3.0)
     stop_bonus = 0.10 * np.minimum(1.0, f["hits"] / 5.0)
     depth_penalty = 0.02 * np.maximum(0.0, f["depth"] - 8.0)
@@ -241,48 +226,34 @@ def tag_base(tags) -> np.ndarray:
     return np.array([_TAG_BASE.get(t, 0.50) for t in tags], dtype=np.float64)
 
 
-def vote_features(f: dict, extractor_names, voter: str, threshold: float,
-                  revote) -> tuple[np.ndarray, np.ndarray]:
+def vote_features(f: dict, extractor_names, voter: str,
+                  threshold: float) -> tuple[np.ndarray, np.ndarray]:
     """The vote of n blocks from their feature columns: (accept, fused) as
     bool and float64 arrays, equal to ``vote_block`` block for block.
 
     ``f`` holds float64 arrays "vis", "n_tags", "n_link", "depth",
     "base" (the tag prior), "n_punct" and, when "readability" votes,
-    "hits" (``stop_hits_joined``).  The scores and the voters run on float64
-    arrays in the scalar code's operation order, so each IEEE + - * /
-    gives the bits the Python floats give, and each ``round(·, 6)`` is
-    ``round6``.  A block with a value in round6's tie band (or, for the
-    confidence voter, a mean within ``_THRESHOLD_BAND`` of the threshold)
-    is voted again by ``revote(i)`` → ``vote_block``'s (accept, fused),
-    so the result is exact by construction."""
+    "hits" (``stop_hits_joined``).  The scores run on float64 arrays in
+    the scalar code's operation order, so each IEEE + - * / gives the bits
+    the Python floats give (the sigmoid's exp is ``math.exp``, see
+    ``_density``); from their ``micros`` on, ``fuse_votes``' integer
+    arithmetic runs on int64 arrays."""
     n = len(f["vis"])
-    redo = np.zeros(n, dtype=bool)
-    scores = []
-    for name in extractor_names:
-        s, tie = round6(_BATCHED[name](f))
-        scores.append(s)
-        redo |= tie
-    k = len(scores)
-    if k == 0:
+    ks = [micros(_BATCHED[name](f)) for name in extractor_names]
+    if not ks:
         return np.zeros(n, dtype=bool), np.zeros(n)
-    total = np.zeros(n)
+    t = micros(threshold)
     if voter == "sequence_voter":
-        ayes = [s >= threshold for s in scores]
-        accept = 2 * np.sum(ayes, axis=0) > k
-        side = np.zeros(n)
-        for s, aye in zip(scores, ayes):
+        ayes = [k >= t for k in ks]
+        accept = 2 * np.sum(ayes, axis=0) > len(ks)
+        total = np.zeros(n, np.int64)
+        side = np.zeros(n, np.int64)
+        for k, aye in zip(ks, ayes):
             on = aye == accept  # the ayes of a majority, else the nays
-            total = np.where(on, total + s, total)
+            total += np.where(on, k, 0)
             side += on
-        fused, tie = round6(total / side)
     else:
-        for s in scores:
-            total += s
-        mean = total / k
-        accept = mean >= threshold
-        fused, tie = round6(mean)
-        redo |= np.abs(mean - threshold) < _THRESHOLD_BAND
-    redo |= tie
-    for i in np.flatnonzero(redo).tolist():
-        accept[i], fused[i] = revote(i)
-    return accept, fused
+        total = sum(ks)
+        side = len(ks)
+        accept = total >= t * side
+    return accept, mean6(total, side) / 1e6

@@ -4,12 +4,13 @@ block text — the proof obligation for SURVEY.md §7.3 hard-part #1 after
 vectorization."""
 
 import math
+from fractions import Fraction
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from ocrd_calamari_spark.kernel.extract import _alt_char
-from ocrd_calamari_spark.kernel.fastpath import normalize_block, quantize6
+from ocrd_calamari_spark.kernel.fastpath import normalize_block
 from ocrd_calamari_spark.kernel.textproc import (
     Position,
     assemble_text,
@@ -56,13 +57,12 @@ def test_text_assembly_equivalent(text, fused):
     if p1 is not None:
         # p1 and conf are part of the byte-identity contract (the golden
         # pin and test_columnar_equiv compare conf bit for bit), so both
-        # are exact.  conf is the quantized mean taken with numpy's
-        # pairwise sum: a sequential sum lands on the other side of a
-        # quantize6 half boundary on some blocks, and blocks up to 400
-        # chars pass numpy's 128-element pairwise leaves.
+        # are exact.  conf is the exact mean of the p1 micro-units,
+        # rounded half up: floor(sum / n + 1/2) micro-units.
         probs = np.array([p.chars[0][1] for p in ps])
         assert np.array_equal(p1, probs)
-        assert conf == float(quantize6(np.float64(probs.sum()) / len(probs)))
+        mean = Fraction(sum(round(q * 1e6) for q in probs.tolist()), len(probs))
+        assert conf == math.floor(mean + Fraction(1, 2)) / 1e6
 
 
 @settings(max_examples=300, deadline=None)

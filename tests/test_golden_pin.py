@@ -2,14 +2,18 @@
 parquet byte-for-byte.  Because the e2e tests compare Spark against the
 same kernel code (oracle == kernel), an accidental semantic change would be
 invisible to them; this file is the independent ledger.  A deliberate
-semantics change re-runs scripts/make_golden.py and commits the diff."""
+semantics change bumps ``config.KERNEL_SEMANTICS``, re-runs
+scripts/make_golden.py and commits the diff: the pin's metadata holds the
+id it was made under, so a regeneration without a bump, or a bump without
+a regeneration, fails here."""
 
 import os
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
-from ocrd_calamari_spark.config import ExtractConfig
+from ocrd_calamari_spark.config import KERNEL_SEMANTICS, ExtractConfig
 from ocrd_calamari_spark.gen import gen_pages
 from ocrd_calamari_spark.kernel.extract import extract_batch
 
@@ -26,6 +30,11 @@ def live(golden):
     pages = gen_pages(400, seed=42)
     out = extract_batch(pages, ExtractConfig(textequiv_level="word"))
     return out.set_index("url")
+
+
+def test_pin_was_made_by_this_kernel():
+    metadata = pq.read_schema(GOLDEN).metadata
+    assert metadata[b"kernel_semantics"] == str(KERNEL_SEMANTICS).encode()
 
 
 def test_text_byte_identical(golden, live):

@@ -59,6 +59,19 @@ def test_resume_under_another_kernel_raises(spark, pages_parquet, tmp_path):
     assert m["complete"]
 
 
+def test_resume_over_a_record_without_an_id_raises(spark, pages_parquet,
+                                                    tmp_path):
+    """A record without the key was written by kernel 0, which is not
+    this one: the resume raises and the audit reports the chunk."""
+    assert KERNEL_SEMANTICS != 0
+    out = str(tmp_path / "out")
+    path = _first_chunk(spark, pages_parquet, out)
+    _edit(path, kernel_semantics=None)
+    _assert_resume_refused(spark, pages_parquet, out, 0)
+    report = validate_output(spark, out)
+    assert report["semantics_mismatches"] == [0] and not report["ok"]
+
+
 def test_audit_reports_chunks_of_another_kernel(spark, pages_parquet,
                                                 tmp_path):
     out = str(tmp_path / "out")

@@ -11,12 +11,10 @@ from hypothesis import example, given, settings, strategies as st
 
 from ocrd_calamari_spark.config import ACCEPT_THRESHOLD, ENSEMBLE, VOTERS
 from ocrd_calamari_spark.gen import gen_pages
-from ocrd_calamari_spark.kernel import vote
 from ocrd_calamari_spark.kernel.decode import decode_html
 from ocrd_calamari_spark.kernel.segment import Block, segment
 from ocrd_calamari_spark.kernel.vote import (
     profile_index,
-    round6,
     stop_hits_joined,
     tag_base,
     vote_block,
@@ -86,13 +84,9 @@ def _features(blks, langs) -> dict:
 
 
 def _vote(blks, langs, names, voter, threshold):
-    """(accept, fused) lists of ``vote_features`` over ``blks``; the guard
-    band revotes through ``vote.vote_block``."""
-    def revote(i):
-        return vote.vote_block(blks[i], langs[i], names, voter, threshold)
-
+    """(accept, fused) lists of ``vote_features`` over ``blks``."""
     accept, fused = vote_features(_features(blks, langs), names, voter,
-                                  threshold, revote)
+                                  threshold)
     return accept.tolist(), fused.tolist()
 
 
@@ -137,45 +131,15 @@ def test_corpus_blocks(voter):
     _check(blks, langs, voter=voter)
 
 
-def test_round6_grid_around_every_tie():
-    """round6 at and around every half tie (k + 0.5)·1e-6 of [0, 1): each
-    element it does not flag equals round(x, 6) bit for bit, and only the
-    elements near a tie are flagged."""
-    ties = (np.arange(1_000_000) + 0.5) * 1e-6
-    near = [ties, np.nextafter(ties, 0.0), np.nextafter(ties, 1.0)]
-    far = [ties - 2e-12, ties + 2e-12, ties - 2.5e-7, ties + 2.5e-7]
-    for x, in_band in [(a, True) for a in near] + [(a, False) for a in far]:
-        r, flag = round6(x)
-        assert flag.all() if in_band else not flag.any()
-        keep = ~flag
-        want = np.array([round(v, 6) for v in x[keep].tolist()])
-        assert np.array_equal(r[keep].view(np.int64), want.view(np.int64))
-
-
-def test_round6_random_values():
-    x = np.random.default_rng(0).random(200_000)
-    r, flag = round6(x)
-    want = np.array([round(v, 6) for v in x.tolist()])
-    assert np.array_equal(r[~flag], want[~flag])
-    assert flag.sum() < 10
-
-
-def test_guard_band_revotes_in_python(monkeypatch):
-    """A score or a mean at a rounding tie, and a mean at the threshold,
-    go back through vote_block; the rest do not."""
-    tie = _block("y" * 256, n_link=1)  # link score 1 - 1.2/256 ≈ 0.9953125
+@pytest.mark.parametrize("voter", VOTERS)
+def test_tie_and_threshold_blocks(voter):
+    """A score at a half-micro tie, and a mean exactly at the threshold,
+    beside plain blocks: the batched vote equals ``vote_block``."""
+    tie = _block("y" * 256, n_link=1)  # link score 1 - 1.2/256 = 0.9953125
     # density 60 / 3 = 20 → 0.5, link 1 - 1.2 * 25/60 → 0.5, a div → 0.5
     at_threshold = _block("y" * 60, tag="div", n_link=25, n_tags=2)
     plain = _block("the and of a is " + "y" * 40)
     blks = [plain, tie, plain, at_threshold]
-    real, redone = vote.vote_block, []
-
-    def counting(block, *args):
-        redone.append(block)
-        return real(block, *args)
-
-    monkeypatch.setattr(vote, "vote_block", counting)
-    _vote(blks, ["en"] * 4, ENSEMBLE, VOTERS[0], ACCEPT_THRESHOLD)
-    assert redone == [tie, at_threshold]
-    monkeypatch.undo()
-    _check(blks, ["en"] * 4)
+    _check(blks, ["en"] * 4, voter=voter)
+    assert vote_block(at_threshold, "en", ENSEMBLE, voter,
+                      ACCEPT_THRESHOLD) == (True, 0.5)
