@@ -381,16 +381,18 @@ def _block_numbers(cps: np.ndarray, blk_off: np.ndarray,
     (int64).
 
     p1 is ``char_micros`` over ``np.repeat`` of each block's ``0.70 +
-    0.30 * fused``.  A block's conf is ``mean6`` of its p1 sum, taken as
-    one difference of the int64 running sum: integers, so the result is
-    ``normalize_block``'s whatever order the sum runs in.
+    0.30 * fused``.  A block's conf is ``mean6`` of its p1 sum, one
+    ``np.add.reduceat`` over the block offsets: integers, so the result is
+    ``normalize_block``'s whatever order the sum runs in.  Every block
+    holds at least one codepoint (the F4 filter keeps blocks with visible
+    chars), so no offset repeats, where reduceat would not give 0.  The
+    sums stay below 2^52: an output batch holds fewer than 2^31 codepoints
+    (``_utf8``'s bound) of at most 999,000 each.
     """
     lens = np.diff(blk_off)
     base = 0.70 + 0.30 * np.asarray(blk_fused, dtype=np.float64)
     k = char_micros(cps, np.repeat(base, lens))
-    csum = np.zeros(len(k) + 1, np.int64)
-    np.cumsum(k, out=csum[1:])
-    return k, mean6(csum[blk_off[1:]] - csum[blk_off[:-1]], lens)
+    return k, mean6(np.add.reduceat(k, blk_off[:-1]), lens)
 
 
 def _ids(prefix, sep: str, nums: np.ndarray) -> pa.Array:
@@ -445,11 +447,9 @@ def _gather(cps: np.ndarray, lo: np.ndarray,
 
 def _alts(cps: np.ndarray, chars: pa.Array, p1: np.ndarray, cutoff: float,
           list_type: pa.ListType) -> pa.ListArray:
-    """Ranked alternatives per glyph: the char itself with ``p1`` (in
-    micro-units here), then its confusion/case alternative with ``p2 =
-    quantize6((1-p1)*0.5)`` where one exists and ``p2 >= cutoff``
-    (``extract_page``'s per-glyph rule)."""
-    p1 = p1 / 1e6
+    """Ranked alternatives per glyph: the char itself with ``p1``, then its
+    confusion/case alternative with ``p2 = quantize6((1-p1)*0.5)`` where
+    one exists and ``p2 >= cutoff`` (``extract_page``'s per-glyph rule)."""
     p2 = quantize6((1.0 - p1) * 0.5)
     uniq, inv = np.unique(cps, return_inverse=True)
     alt_u = [_alt_char(chr(c)) for c in uniq.tolist()]
@@ -491,11 +491,11 @@ def _record_batch(rows: dict, blk_row: np.ndarray, blk_lo: np.ndarray,
     n_blk = np.array([k or 0 for k in rows["n_blocks"]], dtype=np.int64)
     # flat codepoints of all block texts, back to back (no separator)
     cps, blk_off = _gather(batch_cps, blk_lo, blk_len)
-    p1, blk_conf = _block_numbers(cps, blk_off, blk_fused)
+    p1_k, blk_conf = _block_numbers(cps, blk_off, blk_fused)
     row_first = np.zeros(n_rows + 1, dtype=np.int64)
     np.cumsum(n_blk, out=row_first[1:])
-    # a row's conf: mean6 of its block confs, the same running-sum
-    # difference as the block confs (0 without blocks, null on error)
+    # a row's conf: mean6 of its block confs, as a difference of their
+    # running sum (a row may have no block: 0, or null on error)
     conf_sum = np.zeros(len(blk_conf) + 1, np.int64)
     np.cumsum(blk_conf, out=conf_sum[1:])
     page_conf = mean6(conf_sum[row_first[1:]] - conf_sum[row_first[:-1]],
@@ -556,7 +556,7 @@ def _record_batch(rows: dict, blk_row: np.ndarray, blk_lo: np.ndarray,
             g_blk = w_blk[g_word]
             g_start = (gp + w_at[g_word]).astype(np.int32)
             alts = _alts(cps[gp], _slices(data, byte_off).take(gp),
-                         p1[gp], cutoff,
+                         p1_k[gp] / 1e6, cutoff,
                          t_glyphs.value_type.field("alts").type)
             glyphs = _struct(
                 [_ids(word_id.take(g_word), "_glyph", gp - ws[g_word]),

@@ -158,7 +158,8 @@ def _density(f: dict) -> np.ndarray:
 
 
 def _link_density(f: dict) -> np.ndarray:
-    """score_link_density before its quantize6 (0.0 where nothing is visible)."""
+    """score_link_density before its quantize6 (0.0 where nothing is
+    visible)."""
     vis = f["vis"]
     ratio = np.divide(f["n_link"], vis, out=np.zeros_like(vis), where=vis > 0)
     return np.where(vis > 0, np.clip(1.0 - 1.2 * ratio, 0.0, 1.0), 0.0)

@@ -12,11 +12,19 @@ import numpy as np
 import pytest
 from hypothesis import example, given, settings, strategies as st
 
-from ocrd_calamari_spark.config import ACCEPT_THRESHOLD, ENSEMBLE, VOTERS
-from ocrd_calamari_spark.config import ExtractConfig
+from ocrd_calamari_spark.config import (
+    ACCEPT_THRESHOLD,
+    ENSEMBLE,
+    VOTERS,
+    ExtractConfig,
+)
 from ocrd_calamari_spark.kernel import columnar
 from ocrd_calamari_spark.kernel.fastpath import codepoints, normalize_block
-from ocrd_calamari_spark.kernel.vote import EXTRACTORS, fuse_votes, vote_features
+from ocrd_calamari_spark.kernel.vote import (
+    EXTRACTORS,
+    fuse_votes,
+    vote_features,
+)
 
 from test_columnar_equiv import _PARA, assert_equivalent, html_page, pages_frame
 from test_vote_equiv import LANGS, _features, blocks
@@ -46,8 +54,9 @@ def shuffled(seq, rnd):
 
 @pytest.mark.parametrize("reps", (65, 300, 4100, 5000))
 def test_tie_blocks_round_half_up(reps):
-    """"ac" repeated at fused 0.5 has a mean p1 exactly on a half micro,
-    also at 8,200 and 10,000 chars; the conf is the upper neighbour."""
+    """A block of "ac" repeated, at fused 0.5, has a mean p1 exactly on a
+    half micro, also at 8,200 and 10,000 chars; its conf is the upper
+    neighbour."""
     _, p1, conf = normalize_block("ac" * reps, 0.5)
     mean = Fraction(sum(micro(q) for q in p1.tolist()), len(p1))
     assert mean - math.floor(mean) == Fraction(1, 2)
