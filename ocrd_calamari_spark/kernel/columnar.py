@@ -377,8 +377,8 @@ def _block_numbers(cps: np.ndarray, blk_off: np.ndarray,
 
     ``cps``: the codepoints of the block texts back to back; block b is
     ``cps[blk_off[b]:blk_off[b + 1]]`` with fused vote ``blk_fused[b]``.
-    Returns p1 per codepoint and each block's conf, both in micro-units
-    (int64).
+    Returns p1 per codepoint (int32) and each block's conf (int64), both
+    in micro-units.
 
     p1 is ``char_micros`` over ``np.repeat`` of each block's ``0.70 +
     0.30 * fused``.  A block's conf is ``mean6`` of its p1 sum, one
@@ -386,13 +386,14 @@ def _block_numbers(cps: np.ndarray, blk_off: np.ndarray,
     ``normalize_block``'s whatever order the sum runs in.  Every block
     holds at least one codepoint (the F4 filter keeps blocks with visible
     chars), so no offset repeats, where reduceat would not give 0.  The
-    sums stay below 2^52: an output batch holds fewer than 2^31 codepoints
-    (``_utf8``'s bound) of at most 999,000 each.
+    int64 sums stay below 2^51: an output batch holds fewer than 2^31
+    codepoints (``_utf8``'s bound) of at most 999,000 each.
     """
     lens = np.diff(blk_off)
     base = 0.70 + 0.30 * np.asarray(blk_fused, dtype=np.float64)
     k = char_micros(cps, np.repeat(base, lens))
-    return k, mean6(np.add.reduceat(k, blk_off[:-1]), lens)
+    sums = np.add.reduceat(k, blk_off[:-1], dtype=np.int64)
+    return k, mean6(sums, lens)
 
 
 def _ids(prefix, sep: str, nums: np.ndarray) -> pa.Array:

@@ -389,12 +389,15 @@ class Manifest:
         os.makedirs(self.dir, exist_ok=True)
 
     def completed(self) -> dict:
-        """chunk_id → manifest record."""
+        """chunk_id → manifest record.  A record written before records
+        carried ``kernel_semantics`` reads as id 0, the kernel of that
+        time."""
         out = {}
         for name in sorted(os.listdir(self.dir)):
             if name.startswith("chunk_") and name.endswith(".json"):
                 with open(os.path.join(self.dir, name)) as f:
                     rec = json.load(f)
+                rec.setdefault("kernel_semantics", 0)
                 out[rec["chunk_id"]] = rec
         return out
 
@@ -459,8 +462,8 @@ def run_extraction(
     # (Iceberg's murmur3 bucket(N, url) and the computed
     # pmod(xxhash64(url)) put the same url in different buckets); a
     # different source, time window or snapshot mixes corpora; a
-    # different config mixes levels, voters or cutoffs.  Each would pass
-    # to complete=True.  A key missing from an older record, or a run
+    # different config mixes levels, voters or cutoffs, and a different
+    # kernel id the rows of two kernels.  Each would pass to complete=True.  A key missing from an older record, or a run
     # without a pinned snapshot, is not compared.  since/until compare in
     # _w's canonical form on both sides (older manifests hold raw values),
     # so equivalent bounds of different types match.
@@ -480,12 +483,11 @@ def run_extraction(
         "config": config,
         "kernel_semantics": KERNEL_SEMANTICS,
     }
+    # Unlike the other keys, a missing kernel id is not skipped (completed()
+    # reads it as 0): such a record was written by the kernel before
+    # records carried an id, so its rows came from that kernel whatever
+    # this run asks for, and skipping it would complete over mixed output.
     for rec in done.values():
-        # Unlike the keys above, a missing kernel id is not skipped: such a
-        # record was written by the kernel before records carried an id
-        # (id 0), so its rows were made by that kernel, whatever this run
-        # asks for.  Skipping it would complete a job over mixed output.
-        rec = {"kernel_semantics": 0, **rec}
         for key, want in identity.items():
             got = rec.get(key)
             if got is not None and key in ("since", "until"):
@@ -642,7 +644,7 @@ def validate_output(spark: SparkSession, out_dir: str) -> dict:
 
     ``semantics_mismatches``: chunks whose rows another kernel made — the
     record's ``kernel_semantics`` is not ``KERNEL_SEMANTICS`` (a record
-    without one holds id 0, see ``run_extraction``).
+    without one reads as id 0, see ``Manifest.completed``).
 
     ``orphans``: chunk dirs on disk with NO manifest record — the exact
     artifact a crash between parquet write and manifest commit leaves
@@ -688,9 +690,8 @@ def validate_output(spark: SparkSession, out_dir: str) -> dict:
     counts = collections.Counter(configs.values())
     usual = max(counts, key=counts.get) if counts else None
     config_mismatches = [cid for cid, c in configs.items() if c != usual]
-    semantics_mismatches = [
-        cid for cid, rec in sorted(recs.items())
-        if rec.get("kernel_semantics", 0) != KERNEL_SEMANTICS]
+    semantics_mismatches = [cid for cid, rec in sorted(recs.items())
+                            if rec["kernel_semantics"] != KERNEL_SEMANTICS]
     return {
         "chunks": len(recs),
         "rows": total,
