@@ -2,10 +2,10 @@
 
 entry(spark)   — flagship extraction over pages synthesized from
                  /root/testdata/sf0.001/documents.parquet
-queries()      — the five extraction entries plus the remaining
-                 training-data-pipeline operators, in registry order
-oracle_sql()   — DuckDB twins for the SQL-expressible subset; extraction
-                 and hash-algorithm-specific ops are rows-only by design.
+queries()      — the five extraction entries, in registry order
+oracle_sql()   — the DuckDB twin of extract_golden_diff (reads the
+                 committed golden parquet); the other four extraction
+                 entries are rows-only by design.
 """
 
 from __future__ import annotations

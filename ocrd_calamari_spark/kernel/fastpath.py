@@ -43,7 +43,7 @@ def quantize6(x):
     the division matches np.floor's to the last bit — grid-verified
     over 200k points) while skipping numpy's per-call scalar overhead;
     measured median 1.04× kernel-level over 9 interleaved pairs
-    (BENCH.md)."""
+    (round-4 benchmark record, in git history)."""
     if isinstance(x, np.ndarray):
         return np.floor(x * 1e6 + 0.5) / 1e6
     return math.floor(x * 1e6 + 0.5) / 1e6
@@ -75,7 +75,7 @@ def _jitter_lut() -> np.ndarray:
     the full Unicode range): jitter depends only on the codepoint, so a
     gather replaces the per-block astype/mul/mod/div chain — measured
     1.146× kernel-level (median of 9 interleaved pairs, round 4;
-    BENCH.md).  Values are bit-identical to the inline form (same uint64
+    CLAUDE.md Performance history).  Values are bit-identical to the inline form (same uint64
     math, precomputed)."""
     global _JITTER_LUT
     if _JITTER_LUT is None:
@@ -105,7 +105,7 @@ def char_micros(cps: np.ndarray, base) -> np.ndarray:
     One gather + one subtract, then clip and the half-up scale IN PLACE
     on the single temp (ops and order per element unchanged since the
     round-4 A/B, median 1.033× kernel-level over 9 interleaved pairs —
-    BENCH.md).  The cast truncates, which is the floor of these values
+    round-4 benchmark record, in git history).  The cast truncates, which is the floor of these values
     (all ≥ 500000.5); numpy casts float64 to int32 in half the time it
     takes for int64."""
     p1 = _jitter_lut_05()[cps]
@@ -143,7 +143,8 @@ def normalize_block(raw_text: str, fused: float):
     (two nonzero passes + boolean ops + fancy index) and re-encoded
     through utf-32 to get the text back; the round-4 A/B measured the
     string-op form at a 1.31× median kernel-level rate (7 interleaved
-    pairs, 1.13-1.42 spread on a bus-noisy box — BENCH.md).
+    pairs, 1.13-1.42 spread on a bus-noisy box — CLAUDE.md Performance
+    history).
     test_fastpath_equiv.py arbitrates it against scalar textproc.
     """
     text = normalize_text(raw_text)

