@@ -1,7 +1,8 @@
-"""Training-data pipeline functions beyond the reference's own operators:
-text analysis and deduplication.
+"""Training-data analytics kept outside the extraction engine: document
+text scoring and exact / normalized-text deduplication.
 
-Everything here stays JVM-side (pyspark.sql.functions / higher-order
-functions) unless genuinely impossible — no row-at-a-time Python in hot
-paths (BASELINE.json input_hint).
+Nothing in the query registry or the extraction engine calls these;
+``tests/test_worker_imports.py`` pins that the engine never imports them.
+Everything stays JVM-side (pyspark.sql.functions / higher-order
+functions) — no row-at-a-time Python.
 """

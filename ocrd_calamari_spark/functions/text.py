@@ -1,11 +1,11 @@
 """Text analysis over document tables — language ID, quality scoring,
-token counting, fingerprinting.
+token counting, fingerprinting, repetition signals, the quality-filter
+funnel and the mojibake screen.
 
-All functions return JVM-side Column expressions (whole-stage codegen, no
-Python in the loop).  Where a function is used in a driver-harness query
-with a DuckDB oracle, the expression is written in the shared
-ANSI-SQL subset both engines evaluate identically (length/replace/
-greatest/case — no regexp, whose dialects differ).
+All functions return JVM-side Column expressions or DataFrames
+(whole-stage codegen, no Python in the loop).  The scoring expressions
+are written with length/replace/greatest/case arithmetic only — no
+regexp — so every count is an exact integer.
 """
 
 from __future__ import annotations
@@ -13,12 +13,12 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 # ---------------------------------------------------------------------------
-# Token counting.  The oracle-parity variant assumes single-space-separated
-# text (true for the synthetic documents table); the robust variant handles
+# Token counting.  The SQL variant assumes single-space-separated text
+# (true for the synthetic documents table); the robust variant handles
 # arbitrary whitespace.
 # ---------------------------------------------------------------------------
 def token_count_sql(col: str = "text") -> str:
-    """Shared Spark/DuckDB SQL: token count for single-space-separated text."""
+    """Spark SQL: token count for single-space-separated text."""
     return f"length({col}) - length(replace({col}, ' ', '')) + 1"
 
 
@@ -44,15 +44,13 @@ def _count_char_sql(col: str, ch: str) -> str:
 
 
 def quality_score_sql(col: str = "text") -> str:
-    """Shared SQL: crude quality in [0,~1.5]: sentence-punct density +
+    """Spark SQL: crude quality in [0,~1.5]: sentence-punct density +
     capped mean token length signal + length signal."""
     n_tok = token_count_sql(col)
     n_punct = f"({_count_char_sql(col, '.')} + {_count_char_sql(col, '!')} + {_count_char_sql(col, '?')})"
-    # Cross-engine float parity: (1) e-notation literals (4e-1, not 0.4) —
-    # Spark parses plain decimal literals as DECIMAL and would compute this
-    # exactly while DuckDB computes in doubles; e-notation forces DOUBLE in
-    # both, making every op IEEE-identical.  (2) floor(x*1e4+5e-1)/1e4
-    # instead of round(): round() half-boundary modes differ across engines.
+    # e-notation literals (4e-1, not 0.4): Spark parses plain decimal
+    # literals as DECIMAL; e-notation keeps every op in IEEE doubles.
+    # floor(x*1e4+5e-1)/1e4 rounds half up at 4 decimals.
     score = (
         f"  least(1e0, length({col}) / 5e2) * 4e-1"
         f"+ least(1e0, {n_punct} * 1e1 / ({n_tok})) * 3e-1"
@@ -113,9 +111,6 @@ def fingerprint(col) -> Column:
     """Stable 64-bit hex fingerprint (md5 prefix) — exact-dup key."""
     c = F.col(col) if isinstance(col, str) else col
     return F.substring(F.md5(c.cast("binary")), 1, 16)
-
-
-def fingerprint_sql_duckdb(col: str = "text") -> str:
     return f"substr(md5({col}), 1, 16)"
 
 
@@ -123,16 +118,14 @@ def fingerprint_sql_duckdb(col: str = "text") -> str:
 # Repetition signals (Gopher/C4-style quality filters)
 # ---------------------------------------------------------------------------
 def word_ngrams(col, n: int = 2) -> Column:
-    """Array of space-joined word n-grams (single-space tokenization — the
-    oracle-parity variant; DuckDB mirrors it with generate_series + list
-    slicing).  A document shorter than n yields one truncated gram."""
+    """Array of space-joined word n-grams (single-space tokenization, as
+    ``token_count_sql``).  A document shorter than n yields one truncated gram."""
     c = F.col(col) if isinstance(col, str) else col
     tokens = F.split(c, " ")
 
     # bind the token array as a lambda variable (single-element outer
     # transform): inlining `tokens` in the per-gram lambda re-splits the
-    # document once PER GRAM — O(len²) per row (r06 measured 120
-    # core-seconds of trigram shingling at sf1.0 in that form)
+    # document once PER GRAM — O(len²) per row
     def _grams(t):
         idx = F.sequence(F.lit(1), F.greatest(F.size(t) - n + 1, F.lit(1)))
         return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i, n)))
@@ -252,133 +245,16 @@ def packed_offsets(df, order_col: str, weight_col: str,
     )
 
 
-def strip_boilerplate_lines(
-    df: "DataFrame",
-    id_col: str = "doc_id",
-    domain_col: str = "domain",
-    text_col: str = "text",
-    thresh_num: int = 1,
-    thresh_den: int = 2,
-) -> "DataFrame":
-    """Per-domain boilerplate-LINE removal (CCNet-style paragraph dedup):
-    a line occurring in ≥ thresh_num/thresh_den of its domain's documents
-    is boilerplate; each document is rebuilt from its surviving lines in
-    original order.  Returns (id, n_lines, n_boiler, clean_text).
-
-    The threshold is an exact integer comparison
-    (df · thresh_den ≥ docs · thresh_num — no float cutoff), line
-    identity is the md5 of the line bytes, and line-frequency counts are
-    per-document-distinct — all reproducible bit-for-bit by the SQL twin
-    and the randomized python reference (test_functions.py).
-
-    Corner the definition implies: a single-document domain strips EVERY
-    line (each occurs in 100 % of that domain's docs) — callers wanting
-    different behavior raise the threshold or pre-group tiny domains.
-
-    100 TB shape: the df pass ships only (domain, line-hash, doc)
-    triples with map-side partial aggregation; the per-domain doc-count
-    side is domain-cardinality and broadcast; full text crosses the wire
-    exactly twice (df join + per-doc reassembly)."""
-    lines = df.select(
-        F.col(id_col),
-        F.col(domain_col).alias("_dom"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias(
-            "_line_no", "_line"
-        ),
-    )
-    per_dom = lines.groupBy("_dom").agg(
-        F.countDistinct(id_col).alias("_docs")
-    )
-    df_line = lines.groupBy(
-        "_dom", F.md5(F.col("_line").cast("binary")).alias("_h")
-    ).agg(F.countDistinct(id_col).alias("_df"))
-    flagged = (
-        lines.withColumn("_h", F.md5(F.col("_line").cast("binary")))
-        .join(df_line, ["_dom", "_h"])
-        .join(F.broadcast(per_dom), "_dom")
-        .withColumn(
-            "_boiler",
-            F.col("_df") * F.lit(int(thresh_den))
-            >= F.col("_docs") * F.lit(int(thresh_num)),
-        )
-    )
-    kept = F.when(~F.col("_boiler"), F.struct("_line_no", "_line"))
-    return (
-        flagged.groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_lines"),
-            F.sum(F.col("_boiler").cast("int")).cast("bigint")
-            .alias("n_boiler"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(kept)),
-                    lambda s: s["_line"],
-                ),
-                "\n",
-            ).alias("clean_text"),
-        )
-    )
-
-
-def dedup_paragraphs_global(df, id_col: str = "doc_id",
-                            text_col: str = "text") -> "DataFrame":
-    """Corpus-level exact paragraph dedup, first-occurrence-wins (CCNet's
-    cross-shard paragraph pass): every repeat of a '\\n'-delimited
-    paragraph anywhere in the corpus is removed; documents are rebuilt
-    byte-exact from survivors (a doc whose every paragraph was seen
-    earlier rebuilds to '').
-
-    Scale shape: paragraphs shuffle once into md5-hash partitions for the
-    streaming row_number rank (partition size = dup multiplicity),
-    survivors shuffle once more keyed by doc for reassembly — text
-    crosses the wire exactly twice (the CCNet lower bound); the rank
-    never buffers a group.
-
-    Returns (id, n_paras, n_removed, new_text).
-    """
-    from pyspark.sql import Window
-
-    paras = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(text_col, "\n")).alias("idx", "para"),
-    )
-    w = Window.partitionBy(F.md5(F.col("para").cast("binary"))).orderBy(
-        id_col, "idx"
-    )
-    kept = paras.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") == 1
-    )
-    totals = paras.groupBy(id_col).agg(F.count("*").alias("n_paras"))
-    rebuilt = kept.groupBy(id_col).agg(
-        F.count("*").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("idx", "para"))),
-                lambda s: s.para,
-            ),
-            "\n",
-        ).alias("new_text"),
-    )
-    return totals.join(rebuilt, id_col, "left").select(
-        id_col,
-        "n_paras",
-        (F.col("n_paras") - F.coalesce("n_kept", F.lit(0))).alias(
-            "n_removed"
-        ),
-        F.coalesce("new_text", F.lit("")).alias("new_text"),
-    )
-
-
 def funnel_stage_sql(
     text_col: str = "text",
     min_tokens: int = 10,
     max_chars: int = 20000,
     min_quality: str = "5e-1",
 ) -> str:
-    """Shared Spark/DuckDB SQL: FIRST-FAILING-stage number for the
+    """Spark SQL: FIRST-FAILING-stage number for the
     standard quality funnel (1 too_short, 2 too_long, 3 lang_unknown,
     4 low_quality, 5 kept).  ``min_quality`` is an e-notation string
-    literal on purpose (cross-engine float parity — CLAUDE.md)."""
+    literal on purpose (a DOUBLE, not a DECIMAL, comparison)."""
     toks = token_count_sql(text_col)
     return (
         f"case"
@@ -410,9 +286,8 @@ def quality_funnel(
     bookkeeping; here every signal (token count, length, language ID,
     quality score) is computed once in a single projection, the CASE
     cascade assigns the stage, and a 5-row aggregation yields exact doc
-    and token counts per stage.  All signals live in the shared
-    Spark/DuckDB SQL subset (length/replace/case arithmetic), so the
-    funnel is hash-exact vs the oracle.
+    and token counts per stage.  All signals are length/replace/case
+    arithmetic, so the stage counts are exact integers.
 
     Scale shape: one scan, map-side partial agg onto ≤ 5 groups, a
     5-row exchange.  n_tokens per stage is the number pipeline owners
@@ -470,9 +345,8 @@ def mojibake_scores(
 
     Scale shape: a pure row-local map — three replace/length pairs in
     whole-stage codegen, zero shuffles beyond the scan; exact integer
-    counts, so the DuckDB twin is hash-exact.  Counting by
-    length-delta (len(s) - len(replace(s, marker, ''))) keeps both
-    engines on identical codepoint semantics.
+    counts by length-delta (len(s) - len(replace(s, marker, ''))),
+    in codepoints.
     """
     t = F.col(text_col)
 

@@ -1,4 +1,4 @@
-"""Tests for dedup / similarity / text-analysis / join functions."""
+"""Tests for the text-analysis and dedup functions."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -94,79 +94,6 @@ class TestRepetitionStats:
         assert (r4.n_tokens, r4.n_grams, r4.top_gram_count) == (1, 1, 1)
 
 
-class TestDecontaminate:
-    def test_flags_only_leaked_docs(self, spark):
-        from ocrd_calamari_spark.functions.dedup import decontaminate
-
-        bench = spark.createDataFrame(
-            [(100, "q w e r t y u i o p")], ["doc_id", "text"]
-        )
-        corpus = spark.createDataFrame(
-            [
-                (1, "a b c d e f g h i j"),              # clean
-                (2, "x x q w e r t y u i o p y y"),      # full 8-gram leak ×3 windows
-                (3, "q w e r t y u z z z z z z z"),      # only a 7-gram prefix → clean at n=8
-            ],
-            ["doc_id", "text"],
-        )
-        got = {r.doc_id: r for r in
-               decontaminate(corpus, bench, n=8).collect()}
-        assert not got[1].contaminated and got[1].n_leaked_ngrams == 0
-        # doc 2 contains benchmark 8-grams "qwertyui","wertyuio","ertyuiop"
-        assert got[2].contaminated and got[2].n_leaked_ngrams == 3
-        assert not got[3].contaminated
-
-
-class TestBloomDecontaminate:
-    def test_equals_exact_even_with_forced_false_positives(self, spark):
-        """At m_bits=256 the bitset saturates (fp rate near 1), so nearly
-        every corpus gram survives the pre-filter — the verify join must
-        still cut the result to the exact intersection."""
-        import random
-
-        from ocrd_calamari_spark.functions.dedup import (
-            bloom_decontaminate, decontaminate,
-        )
-
-        rng = random.Random(7)
-        vocab = [f"w{i}" for i in range(50)]
-        mk = lambda: " ".join(rng.choice(vocab) for _ in range(30))
-        bench_rows = [(1000 + i, mk()) for i in range(5)]
-        corpus_rows = [(i, mk()) for i in range(40)]
-        # plant a literal leak: corpus doc 0 embeds bench doc 0's lead 8-gram
-        leak = " ".join(bench_rows[0][1].split()[:8])
-        corpus_rows[0] = (0, corpus_rows[0][1] + " " + leak)
-        bench = spark.createDataFrame(bench_rows, ["doc_id", "text"])
-        corpus = spark.createDataFrame(corpus_rows, ["doc_id", "text"])
-        for m_bits in (256, 1 << 16):
-            got = {r.doc_id: (r.n_leaked_ngrams, r.contaminated)
-                   for r in bloom_decontaminate(
-                       corpus, bench, n=8, m_bits=m_bits).collect()}
-            exact = {r.doc_id: (r.n_leaked_ngrams, r.contaminated)
-                     for r in decontaminate(corpus, bench, n=8).collect()}
-            assert got == exact
-            assert got[0][1]  # the planted leak is flagged
-
-    def test_build_is_partition_invariant_and_membership_complete(self, spark):
-        from ocrd_calamari_spark.functions.dedup import (
-            bloom_member_filter, build_bloom,
-        )
-
-        rows = [(i,) for i in range(2000)]
-        hashes = (
-            spark.createDataFrame(rows, ["v"])
-            .select(F.xxhash64("v").alias("h1"))
-            .withColumn("h2", F.xxhash64("h1"))
-        )
-        m = 1 << 15
-        b1 = build_bloom(hashes.repartition(16), m)
-        b2 = build_bloom(hashes.coalesce(1), m)
-        assert b1 == b2 and len(b1) == m // 8
-        # every true member must survive the probe (no false negatives)
-        kept = bloom_member_filter(hashes, b1, m).count()
-        assert kept == hashes.count()
-
-
 class TestRepetitionStatsRandomized:
     def test_matches_python_reference(self, spark):
         """150 random token sequences (skewed vocab so repeats are common)
@@ -254,86 +181,6 @@ class TestIncrementalDedup:
         assert kept == [11, 13]
 
 
-class TestBoilerplateLines:
-    def test_strips_all_injected_boilerplate_byte_exact(self, spark):
-        """The fixture wraps every document in 3 domain-repeated lines
-        (header / nav / copyright); the op must flag exactly those and
-        return the body BYTE-identical to documents.text — same
-        per-document identity bar as the extraction kernel's golden pin."""
-        from pyspark.sql import functions as F
-
-        from ocrd_calamari_spark.entry_queries import (
-            _t, q_boilerplate_lines,
-        )
-
-        sf = "/root/testdata/sf0.001"
-        out = q_boilerplate_lines(spark, sf)
-        body = _t(spark, sf, "documents").select(
-            "doc_id", F.col("text").alias("_body")
-        )
-        joined = out.join(body, "doc_id")
-        n = joined.count()
-        assert n == body.count()
-        assert joined.where(F.col("n_lines") != 4).count() == 0
-        assert joined.where(F.col("n_boiler") != 3).count() == 0
-        assert joined.where(
-            F.col("clean_text") != F.col("_body")
-        ).count() == 0
-
-
-class TestBoilerplateRandomized:
-    def test_matches_python_reference(self, spark):
-        """120 random multi-line docs over 7 domains — per-domain line-df
-        thresholding vs a pure-python reference.  Stresses what the fixed
-        fixture can't: body lines that DO repeat domain-wide (stripped),
-        empty lines, duplicate lines within one doc (df counts documents,
-        not occurrences), and a single-document domain (every line at
-        100 % df → fully stripped)."""
-        import random
-        from collections import defaultdict
-
-        from ocrd_calamari_spark.functions.text import (
-            strip_boilerplate_lines,
-        )
-
-        rng = random.Random(29)
-        pool = [f"line {j} text" for j in range(12)] + ["", "shared footer"]
-        rows = []
-        for i in range(120):
-            dom = f"d{rng.randint(0, 5)}" if i < 119 else "solo"
-            n = rng.randint(1, 6)
-            body = [rng.choice(pool) for _ in range(n)]
-            rows.append((i, dom, "\n".join(body)))
-
-        got = {
-            r["doc_id"]: r
-            for r in strip_boilerplate_lines(
-                spark.createDataFrame(rows, ["doc_id", "domain", "text"])
-            ).collect()
-        }
-
-        docs_per_dom = defaultdict(set)
-        df_line = defaultdict(set)  # (dom, line) -> set of doc ids
-        for i, dom, text in rows:
-            docs_per_dom[dom].add(i)
-            for line in text.split("\n"):
-                df_line[(dom, line)].add(i)
-        assert len(got) == len(rows)
-        for i, dom, text in rows:
-            lines = text.split("\n")
-            boiler = [
-                2 * len(df_line[(dom, ln)]) >= len(docs_per_dom[dom])
-                for ln in lines
-            ]
-            r = got[i]
-            assert r["n_lines"] == len(lines), i
-            assert r["n_boiler"] == sum(boiler), i
-            expect = "\n".join(
-                ln for ln, b in zip(lines, boiler) if not b
-            )
-            assert r["clean_text"] == expect, i
-
-
 class TestSimilaritySemantics:
     def test_packed_offsets_buckets_offset_id_range(self, spark):
         """Order values clustered far from zero (epoch-micro ids) must
@@ -357,25 +204,6 @@ class TestSimilaritySemantics:
         got = {r.i: r.n for r in
                df.select("i", token_count("text").alias("n")).collect()}
         assert got == {0: 0, 1: 0, 2: 2}
-
-
-class TestSnapshotDiff:
-    def test_change_classes_follow_the_derivation_rules(self, spark):
-        from ocrd_calamari_spark.entry_queries import q_snapshot_diff
-
-        rows = q_snapshot_diff(spark, "/root/testdata/sf0.001").collect()
-        got = {r.doc_id: r.change_type for r in rows}
-        for d, c in got.items():
-            if d >= 2000000:
-                assert c == "removed", d
-            elif d % 11 == 0:
-                assert c == "added", d
-            elif d % 5 == 1:
-                assert c == "changed", d
-            else:
-                assert c == "unchanged", d
-        assert {"added", "removed", "changed", "unchanged"} == set(
-            got.values())
 
 
 class TestQualityFunnel:
@@ -436,45 +264,6 @@ class TestNormalizedDedup:
         rows = [(1, "Hello, World!"), (2, "hello   world")]
         df = spark.createDataFrame(rows, ["doc_id", "text"])
         assert distinct_by_text(df).count() == 2  # raw: both survive
-
-
-class TestGlobalShuffle:
-    def test_permutation_is_valid_and_deterministic(self, spark):
-        from ocrd_calamari_spark.entry_queries import q_global_shuffle
-
-        sf = "/root/testdata/sf0.001"
-        a = q_global_shuffle(spark, sf).collect()
-        b = q_global_shuffle(spark, sf).collect()
-        assert a == b  # pure function of (seed, doc_id)
-        # every doc appears exactly once
-        assert sorted(r.doc_id for r in a) == list(range(500))
-        # positions are dense 0..n_s-1 within every shard
-        by_shard = {}
-        for r in a:
-            by_shard.setdefault(r.shard, []).append(r.pos)
-        assert set(by_shard) <= set(range(16))
-        for shard, poss in by_shard.items():
-            assert sorted(poss) == list(range(len(poss)))
-
-
-class TestParagraphDedup:
-    def test_first_occurrence_wins_and_byte_exact_rebuild(self, spark):
-        from ocrd_calamari_spark.functions.text import dedup_paragraphs_global
-
-        rows = [
-            (1, "intro\nbody one\nfooter"),
-            (2, "intro\nbody two\nfooter"),   # loses intro+footer
-            (3, "intro\nbody one\nfooter"),   # loses EVERYTHING
-        ]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        got = {r.doc_id: r for r in dedup_paragraphs_global(df).collect()}
-        assert got[1].new_text == "intro\nbody one\nfooter"
-        assert (got[1].n_paras, got[1].n_removed) == (3, 0)
-        assert got[2].new_text == "body two"
-        assert (got[2].n_paras, got[2].n_removed) == (3, 2)
-        # a fully-duplicated doc must still get a row, rebuilt to ''
-        assert got[3].new_text == ""
-        assert (got[3].n_paras, got[3].n_removed) == (3, 3)
 
 
 class TestMojibake:

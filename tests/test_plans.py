@@ -1,7 +1,7 @@
 """Physical-plan assertions: the optimizations SURVEY.md §4 promises must
 actually appear in the plans — filter pushdown to the scan, column pruning
-to exactly the kernel inputs, and no spurious exchanges in the map-only
-pipeline."""
+to exactly the kernel inputs, map-side partial aggregation in the
+quality funnel, and no spurious exchanges in the map-only pipeline."""
 
 import contextlib
 import io
@@ -15,6 +15,8 @@ from ocrd_calamari_spark.pipeline import (
     _scan_splits, extract_df, read_pages, with_part_id, write_bucketed_staging,
 )
 
+SF = "/root/testdata/sf0.01"
+
 
 def plan_of(df, mode="formatted") -> str:
     buf = io.StringIO()
@@ -24,6 +26,21 @@ def plan_of(df, mode="formatted") -> str:
 
 
 class TestScanPushdown:
+    def test_filter_pushed_to_parquet(self, spark):
+        d = spark.read.parquet(f"{SF}/documents.parquet")
+        q = d.where((F.col("lang") == "en") & F.col("n_chars").between(100, 400)) \
+             .select("doc_id", "n_chars")
+        plan = plan_of(q)
+        assert "PushedFilters" in plan
+        assert "lang" in plan.split("PushedFilters")[1].split("\n")[0]
+
+    def test_column_pruning_on_documents(self, spark):
+        d = spark.read.parquet(f"{SF}/documents.parquet")
+        q = d.select("doc_id")
+        plan = plan_of(q)
+        rs = plan.split("ReadSchema:")[1].split("\n")[0]
+        assert "doc_id" in rs and "text" not in rs
+
     def test_extraction_scan_prunes_to_kernel_columns(self, spark, pages_parquet):
         df = read_pages(spark, pages_parquet)
         out = extract_df(df, ExtractConfig(), with_lineage=False)
@@ -178,3 +195,30 @@ class TestBucketedResumePruning:
         pages = with_part_id(src, 8)
         subset = pages.where(F.col("_part_id").isin([0, 1]))
         assert len(subset.inputFiles()) == len(src.inputFiles())
+
+
+class TestRound4NewOpPlans:
+    def test_quality_funnel_is_one_scan_one_exchange(self, spark):
+        """The fused filter cascade reads the corpus once and exchanges
+        only the <= 5 stage groups: exactly one Exchange (the partial ->
+        final agg boundary), two HashAggregates, no Python."""
+        from ocrd_calamari_spark.functions.text import quality_funnel
+
+        d = spark.read.parquet(f"{SF}/documents.parquet")
+        plan = plan_of(quality_funnel(d), "simple")
+        assert plan.count("Exchange") == 1
+        assert plan.count("HashAggregate") == 2
+        assert "Python" not in plan
+
+
+class TestRound4LateOpPlans:
+    def test_normalized_dedup_ships_fingerprints_not_text(self, spark):
+        """Canonical-text dedup must reduce rows to (id, 16-byte fp)
+        BEFORE its one exchange: exactly one Exchange (the fp window's
+        hash partitioning), and no Python evaluator."""
+        from ocrd_calamari_spark.functions.dedup import normalized_duplicates
+
+        d = spark.read.parquet(f"{SF}/documents.parquet")
+        plan = plan_of(normalized_duplicates(d), "simple")
+        assert plan.count("Exchange") == 1
+        assert "Python" not in plan

@@ -4,9 +4,9 @@ process has everything loaded already).
 The code that runs inside a Python worker's map, the kernel and the WARC
 record splitter, imports no Spark: it needs only pandas, numpy and
 pyarrow, and the single-process oracle runs it without a JVM.  The
-extraction engine (``pipeline`` and the ``job`` CLI) does not import the
-driver's query registry (``entry_queries``), so changing the registry
-cannot change what the engine runs."""
+extraction engine (``pipeline`` and the ``job`` CLI) imports neither the
+driver's query registry (``entry_queries``) nor the text analytics
+(``functions``), so changing either cannot change what the engine runs."""
 
 import os
 import subprocess
@@ -47,6 +47,8 @@ def test_kernel_and_splitter_load_no_pyspark():
     assert _loaded(WORKER_MODULES, ["pyspark"]) == "[]"
 
 
-def test_engine_loads_no_registry():
-    assert _loaded(ENGINE_MODULES,
-                   ["ocrd_calamari_spark.entry_queries"]) == "[]"
+def test_engine_loads_no_analytics():
+    assert _loaded(ENGINE_MODULES, [
+        "ocrd_calamari_spark.entry_queries",
+        "ocrd_calamari_spark.functions",
+    ]) == "[]"
